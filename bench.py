@@ -63,40 +63,9 @@ def main() -> None:
     # real regression moves both. Publishing both per run makes every
     # wall-time delta explainable in-artifact.
     from pure_python_geospatial_export_spark.session import (
-        ui_completed_stages,
+        ui_stage_delta,
+        ui_stage_snapshot,
     )
-
-    def _stage_snapshot():
-        try:
-            _ui, _app, stages = ui_completed_stages(spark)
-        except Exception:
-            return None
-        return {(s["stageId"], s["attemptId"]): s for s in stages}
-
-    def _stage_delta(before):
-        """(task_time_s, shuffle_write_mb) of stages completed since
-        `before` — polled until the listing stops growing so the last
-        stage's async status flip is not missed."""
-        if before is None:
-            return None, None
-        after = _stage_snapshot()
-        if after is None:
-            return None, None
-        stable = 0
-        for _ in range(20):
-            time.sleep(0.05)
-            nxt = _stage_snapshot() or after
-            if len(nxt) == len(after):
-                stable += 1
-                if stable >= 2 and len(after) > len(before):
-                    break
-            else:
-                stable = 0
-            after = nxt
-        new = [s for k, s in after.items() if k not in before]
-        task_ms = sum(int(s.get("executorRunTime", 0)) for s in new)
-        shuffle_b = sum(int(s.get("shuffleWriteBytes", 0)) for s in new)
-        return round(task_ms / 1000.0, 3), round(shuffle_b / 2**20, 2)
 
     # --- flagship: pages spatial-join + tile-assign throughput ----------
     pages = with_point(synth_pages(spark, pages_n, partitions=cpus * 2))
@@ -188,13 +157,13 @@ def main() -> None:
     raw_shuffle: dict[str, list] = {name: [] for name, _ in runners}
     for _ in range(repeats):
         for name, run in runners:
-            before = _stage_snapshot()
+            before = ui_stage_snapshot(spark)
             t0 = time.time()
             run()
             raw_runs[name].append(round(time.time() - t0, 3))
-            task_s, shuf_mb = _stage_delta(before)
-            raw_task[name].append(task_s)
-            raw_shuffle[name].append(shuf_mb)
+            d = ui_stage_delta(spark, before) or {}
+            raw_task[name].append(d.get("task_time_s"))
+            raw_shuffle[name].append(d.get("shuffle_write_mb"))
 
     timings = {name: min(ts) for name, ts in raw_runs.items()}
     task_time = {

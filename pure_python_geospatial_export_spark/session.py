@@ -140,26 +140,37 @@ def ui_stage_snapshot(spark):
     return {(s["stageId"], s["attemptId"]): s for s in stages}
 
 
-def ui_stage_delta(spark, before, settle_seconds: float = 0.3):
+def ui_stage_delta(spark, before):
     """Metrics of stages completed since ``before`` (a
     :func:`ui_stage_snapshot`): dict with ``task_time_s`` (executor
-    run time) and ``shuffle_write_mb``, or None when either snapshot
-    is unavailable. Waits ``settle_seconds`` first — the UI publishes
-    stage completion slightly after the job returns."""
+    run time) and ``shuffle_write_mb`` (MiB, 2**20 bytes), or None when
+    either snapshot is unavailable. The UI publishes stage completion
+    slightly after the job returns, so the listing is polled until it
+    stops growing — the last stage's async status flip is not missed."""
     import time as _time
 
     if before is None:
         return None
-    _time.sleep(settle_seconds)
     after = ui_stage_snapshot(spark)
     if after is None:
         return None
+    stable = 0
+    for _ in range(20):
+        _time.sleep(0.05)
+        nxt = ui_stage_snapshot(spark) or after
+        if len(nxt) == len(after):
+            stable += 1
+            if stable >= 2 and len(after) > len(before):
+                break
+        else:
+            stable = 0
+        after = nxt
     new = [s for k, s in after.items() if k not in before]
     return {
         "task_time_s": round(sum(
             int(s.get("executorRunTime", 0)) for s in new
-        ) / 1000.0, 2),
+        ) / 1000.0, 3),
         "shuffle_write_mb": round(sum(
             int(s.get("shuffleWriteBytes", 0)) for s in new
-        ) / 1e6, 2),
+        ) / 2**20, 2),
     }

@@ -1,15 +1,33 @@
-"""Iceberg-style spatial table layout: cell-partitioned, Morton-clustered.
+"""Iceberg-style spatial table layout: one writer, one reader pair and
+one set of compactors over a pluggable spatial key.
 
 The scan-level spatial pushdown the reference hand-rolls (seek past
 non-matching record bodies via bbox headers, ref
 ppge/pyshp/__init__.py:1381-1388) becomes PHYSICAL LAYOUT here:
 
-* the table is written partitioned by a coarse cell (``part_cell``, low
-  resolution) — spatial predicates on cells turn into partition pruning
+* the table is written partitioned by a coarse key (``part_*``, low
+  resolution) — spatial predicates on keys turn into partition pruning
   the Catalyst optimizer applies for free;
-* within each partition, rows are sorted by the fine-resolution Morton
-  code — neighbors cluster into the same parquet row groups, so
-  row-group min/max stats prune fine-grained cell ranges too.
+* within each partition, rows are sorted by the fine-resolution key —
+  neighbors cluster into the same files and parquet row groups. No
+  read predicate uses the sort key, so this only clusters rows; the
+  pruning is the partition pruning above.
+
+The key (:data:`KEYS`) decides the two columns:
+
+* ``cell`` (default): engine cell id partitions (``part_cell``),
+  Morton-code sort (``morton``);
+* ``geohash``: geohash-prefix partitions (``part_gh``, human-readable
+  strings Hive, Trino or a plain directory listing key on directly),
+  fine-geohash sort (``gh`` — a geohash IS a base32 Morton code, and
+  prefixes nest, so pruning is prefix arithmetic);
+* ``hilbert``: Hilbert index of the coarse cell (``part_hd``), fine
+  Hilbert index sort (``hilbert`` — the ordering never jumps, and the
+  index is hierarchical, so pruning is the cell layout's shift
+  arithmetic).
+
+Readers take the key from the table's ``part_*=`` partition
+directories, so they never need to be told which key a table uses.
 
 At 100 TB this is the difference between scanning the world and scanning
 one state's worth of files for a regional query.
@@ -17,6 +35,9 @@ one state's worth of files for a regional query.
 
 from __future__ import annotations
 
+import contextlib
+import os
+import shutil
 from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,6 +48,8 @@ from ..geo import cells as cellmod
 
 PART_RES = 3   # 8x8 world partitions by default
 SORT_RES = 12  # fine Morton clustering
+
+_STAGING = "_compact_tmp"  # underscore prefix: invisible to Spark listing
 
 
 def morton_col(lon, lat, res: int):
@@ -49,65 +72,230 @@ def morton_col(lon, lat, res: int):
     return spread(x).bitwiseOR(F.shiftleft(spread(y), 1))
 
 
+# ---------------------------------------------------------------------------
+# spatial keys
+# ---------------------------------------------------------------------------
+
+class SpatialKey:
+    """How a spatial table keys its rows: the coarse partition column
+    ``part`` and the fine in-partition sort column ``sort``, written at
+    ``part_res``/``sort_res`` (resolution for grid keys, precision for
+    geohash) unless the caller overrides them. A key implements
+    ``_columns`` (attach both columns), ``_parent`` (query key ->
+    partition value) and ``_bbox_parents``."""
+
+    name: str
+    part: str
+    sort: str
+    part_res: int
+    sort_res: int
+    # partition values that may look numeric but must stay strings
+    string_partitions = False
+
+    def with_columns(self, df: DataFrame, lon: str, lat: str,
+                     part_res: int | None = None,
+                     sort_res: int | None = None) -> DataFrame:
+        """``df`` with the ``part`` and ``sort`` columns attached."""
+        return self._columns(
+            df, F.col(lon), F.col(lat),
+            self.part_res if part_res is None else part_res,
+            self.sort_res if sort_res is None else sort_res,
+        )
+
+    def parents(self, keys: Iterable, part_res: int | None = None) -> list:
+        """Sorted partition values covering the query keys (any
+        resolution at or finer than ``part_res``)."""
+        res = self.part_res if part_res is None else part_res
+        return sorted({self._parent(k, res) for k in keys})
+
+    def bbox_parents(self, bbox, part_res: int | None = None) -> list:
+        """Sorted partition values whose extent overlaps a lon/lat bbox."""
+        res = self.part_res if part_res is None else part_res
+        return sorted(self._bbox_parents(tuple(bbox), res))
+
+    @staticmethod
+    def _too_coarse(part_res: int) -> ValueError:
+        return ValueError(
+            "query keys must be at a resolution (geohash: precision) >= "
+            "the table's partition level %d" % part_res
+        )
+
+
+class _GridKey(SpatialKey):
+    """Keys over the engine's cell grid: a query key is an engine cell
+    id, and its parent partition is the index of its ancestor grid
+    cell at ``part_res``."""
+
+    part_res = PART_RES
+    sort_res = SORT_RES
+
+    def _parent(self, cell, part_res):
+        x, y, res = cellmod.decode(int(cell))
+        if int(res) < part_res:
+            raise self._too_coarse(part_res)
+        shift = int(res) - part_res
+        return self._index(int(x) >> shift, int(y) >> shift, part_res)
+
+    def _bbox_parents(self, bbox, part_res):
+        for c in cellmod.bbox_cover(bbox, part_res):
+            x, y, _res = cellmod.decode(int(c))
+            yield self._index(int(x), int(y), part_res)
+
+
+class _CellKey(_GridKey):
+    name, part, sort = "cell", "part_cell", "morton"
+
+    def _index(self, x, y, res):
+        return int(cellmod.encode(x, y, res))
+
+    def _columns(self, df, lon, lat, part_res, sort_res):
+        return df.withColumn(
+            self.part, cell_id_col(lon, lat, part_res)
+        ).withColumn(self.sort, morton_col(lon, lat, sort_res))
+
+
+class _HilbertKey(_GridKey):
+    name, part, sort = "hilbert", "part_hd", "hilbert"
+
+    def _index(self, x, y, res):
+        from ..geo.hilbert import hilbert_d_np
+
+        return int(hilbert_d_np([x], [y], res)[0])
+
+    def _columns(self, df, lon, lat, part_res, sort_res):
+        from ..geo.hilbert import with_hilbert
+
+        gx, gy = grid_xy_cols(lon, lat, part_res)
+        out = df.withColumn("_pgx", gx).withColumn("_pgy", gy)
+        out = with_hilbert(out, part_res, "_pgx", "_pgy", out=self.part)
+        gx2, gy2 = grid_xy_cols(lon, lat, sort_res)
+        out = out.withColumn("_sgx", gx2).withColumn("_sgy", gy2)
+        out = with_hilbert(out, sort_res, "_sgx", "_sgy", out=self.sort)
+        return out.drop("_pgx", "_pgy", "_sgx", "_sgy")
+
+
+class _GeohashKey(SpatialKey):
+    """A query key is a geohash string; prefixes nest, so its parent
+    partition is its ``part_res``-character prefix."""
+
+    name, part, sort = "geohash", "part_gh", "gh"
+    part_res, sort_res = 2, 9
+    # base32 geohashes can be ALL DIGITS ('00'..'99' are real cells near
+    # the south-west corner of the grid): a table whose every partition
+    # happens to be numeric would otherwise read part_gh back as int
+    string_partitions = True
+
+    def _columns(self, df, lon, lat, part_res, sort_res):
+        from ..geo.geohash import geohash_col
+
+        return df.withColumn(
+            self.part, geohash_col(lon, lat, part_res)
+        ).withColumn(self.sort, geohash_col(lon, lat, sort_res))
+
+    def _parent(self, geohash, part_res):
+        g = str(geohash)
+        if len(g) < part_res:
+            raise self._too_coarse(part_res)
+        return g[:part_res]
+
+    def _bbox_parents(self, bbox, part_res):
+        from ..geo.geohash import geohash_bbox_cover
+
+        return geohash_bbox_cover(bbox, part_res)
+
+
+KEYS = {k.name: k for k in (_CellKey(), _GeohashKey(), _HilbertKey())}
+
+
+def _table_key(path: str) -> SpatialKey:
+    """The key a spatial table was written with, from its ``part_*=``
+    partition directories (manifest tables keep their files there
+    too)."""
+    names = os.listdir(path)
+    for key in KEYS.values():
+        if any(n.startswith(key.part + "=") for n in names):
+            return key
+    raise ValueError(
+        "no %s partition directories under %r"
+        % ("/".join(k.part for k in KEYS.values()), path)
+    )
+
+
+@contextlib.contextmanager
+def _conf(spark: SparkSession, name: str, value: str):
+    """Set a session conf for the duration of the block, then restore
+    it."""
+    prev = spark.conf.get(name, None)
+    spark.conf.set(name, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(name)
+        else:
+            spark.conf.set(name, prev)
+
+
+def _sorted(df: DataFrame, key: SpatialKey) -> DataFrame:
+    # sort by the partition column FIRST: the partitioned-write path
+    # re-sorts rows by partition key when its required ordering is not
+    # already satisfied, and that sort need not be stable — sorting by
+    # (part, sort) satisfies the writer and keeps the sort-key order
+    return df.repartition(key.part).sortWithinPartitions(key.part, key.sort)
+
+
+# ---------------------------------------------------------------------------
+# writer and readers
+# ---------------------------------------------------------------------------
+
 def write_spatial_table(
     df: DataFrame,
     path: str,
     lon: str = "lon",
     lat: str = "lat",
-    part_res: int = PART_RES,
-    sort_res: int = SORT_RES,
+    part_res: int | None = None,
+    sort_res: int | None = None,
     mode: str = "overwrite",
+    key: str = "cell",
 ) -> None:
-    """Write a points table cell-partitioned + Morton-sorted."""
-    out = (
-        df.withColumn(
-            "part_cell", cell_id_col(F.col(lon), F.col(lat), part_res)
-        )
-        .withColumn("morton", morton_col(F.col(lon), F.col(lat), sort_res))
-        .repartition("part_cell")
-        # sort by the partition column FIRST: the partitioned-write path
-        # re-sorts rows by partition key when its required ordering is not
-        # already satisfied, and that sort need not be stable — sorting by
-        # (part_cell, morton) satisfies the writer and keeps morton order
-        .sortWithinPartitions("part_cell", "morton")
-    )
-    out.write.mode(mode).partitionBy("part_cell").parquet(path)
+    """Write a points table partitioned by ``key``'s coarse column and
+    sorted within each partition by its fine one. ``part_res`` and
+    ``sort_res`` default to the key's levels (cell and Hilbert: 3/12,
+    geohash: 2/9)."""
+    k = KEYS[key]
+    out = _sorted(k.with_columns(df, lon, lat, part_res, sort_res), k)
+    out.write.mode(mode).partitionBy(k.part).parquet(path)
 
 
 def read_cells(
     spark: SparkSession,
     path: str,
-    cell_ids: Iterable[int],
-    part_res: int = PART_RES,
+    keys: Iterable,
+    part_res: int | None = None,
 ) -> DataFrame:
-    """Read only the partitions covering the requested (any-resolution)
-    cells — spatial predicate -> partition pruning."""
-    parents = set()
-    for c in cell_ids:
-        x, y, res = cellmod.decode(int(c))
-        r = int(res)
-        if r < part_res:
-            raise ValueError("query cells must be at res >= part_res")
-        shift = r - part_res
-        parents.add(int(cellmod.encode(int(x) >> shift, int(y) >> shift,
-                                       part_res)))
-    df = read_snapshot(spark, path)
-    return df.where(F.col("part_cell").isin(sorted(parents)))
+    """Read only the partitions covering the requested query keys —
+    engine cell ids (cell and Hilbert tables) or geohash strings
+    (geohash tables), at any resolution at or finer than the table's
+    ``part_res``: spatial predicate -> partition pruning."""
+    key = _table_key(path)
+    return read_snapshot(spark, path).where(
+        F.col(key.part).isin(key.parents(keys, part_res))
+    )
 
 
 def read_bbox(
     spark: SparkSession,
     path: str,
     bbox,
-    part_res: int = PART_RES,
+    part_res: int | None = None,
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
     """Read rows intersecting a bbox: partition pruning on the coarse
-    cells covering the bbox + exact bbox filter (P3) on the survivors."""
-    cover = cellmod.bbox_cover(tuple(bbox), part_res)
+    keys covering the bbox + exact bbox filter (P3) on the survivors."""
+    key = _table_key(path)
     df = read_snapshot(spark, path).where(
-        F.col("part_cell").isin([int(c) for c in cover])
+        F.col(key.part).isin(key.bbox_parents(bbox, part_res))
     )
     return df.where(
         (F.col(lon) >= F.lit(bbox[0])) & (F.col(lon) <= F.lit(bbox[2]))
@@ -115,100 +303,24 @@ def read_bbox(
     )
 
 
-def write_spatial_table_geohash(
-    df: DataFrame,
-    path: str,
-    lon: str = "lon",
-    lat: str = "lat",
-    part_precision: int = 2,
-    sort_precision: int = 9,
-    mode: str = "overwrite",
-) -> None:
-    """Geohash-keyed layout twin of :func:`write_spatial_table`:
-    partition dirs are ``part_gh=<geohash>`` (human-readable strings
-    external consumers — Hive, Trino, plain directory listings — key
-    on directly), rows within a partition sort by the fine-precision
-    geohash. A geohash IS a base32 Morton code (geo/geohash.py
-    interleave), so the string sort yields the same row-group
-    clustering the cell layout gets from ``morton``; prefixes nest, so
-    partition pruning is prefix arithmetic. Same snapshot/manifest
-    machinery applies (the manifest tracks files, not key semantics);
-    the cell-keyed layout remains the default."""
-    from ..geo.geohash import geohash_col
+# ---------------------------------------------------------------------------
+# compaction
+# ---------------------------------------------------------------------------
 
-    out = (
-        df.withColumn(
-            "part_gh", geohash_col(F.col(lon), F.col(lat),
-                                   part_precision)
-        )
-        .withColumn("gh", geohash_col(F.col(lon), F.col(lat),
-                                      sort_precision))
-        .repartition("part_gh")
-        .sortWithinPartitions("part_gh", "gh")
-    )
-    out.write.mode(mode).partitionBy("part_gh").parquet(path)
-
-
-def _read_snapshot_string_partitions(
-    spark: SparkSession, path: str
-) -> DataFrame:
-    """read_snapshot with partition-column TYPE INFERENCE disabled for
-    the duration of plan resolution: geohash strings over the base32
-    alphabet can be ALL DIGITS ('00'..'99' are real cells near the
-    south-west corner of the grid), and a table whose every partition
-    happens to be numeric would otherwise read part_gh back as int —
-    '00' becoming 0 corrupts both the values and the pruning
-    predicate. The conf is consulted when the relation is resolved
-    (DataFrame creation), so a set/restore window is sufficient."""
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    old = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        return read_snapshot(spark, path)
-    finally:
-        spark.conf.set(key, old)
-
-
-def read_geohashes(
-    spark: SparkSession,
-    path: str,
-    geohashes: Iterable[str],
-    part_precision: int = 2,
-) -> DataFrame:
-    """Read only the partitions covering the requested geohashes (any
-    precision >= the table's) — prefix nesting makes the parent set a
-    ``substr``: the geohash twin of :func:`read_cells`."""
-    parents = set()
-    for g in geohashes:
-        g = str(g)
-        if len(g) < part_precision:
-            raise ValueError(
-                "query geohashes must be at precision >= part_precision"
-            )
-        parents.add(g[:part_precision])
-    df = _read_snapshot_string_partitions(spark, path)
-    return df.where(F.col("part_gh").isin(sorted(parents)))
-
-
-def read_bbox_geohash(
-    spark: SparkSession,
-    path: str,
-    bbox,
-    part_precision: int = 2,
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """bbox read over the geohash-keyed layout: partition pruning on
-    ``geohash_bbox_cover`` + the exact bbox filter (P3) on survivors."""
-    from ..geo.geohash import geohash_bbox_cover
-
-    cover = geohash_bbox_cover(tuple(bbox), part_precision)
-    df = _read_snapshot_string_partitions(spark, path).where(
-        F.col("part_gh").isin(cover)
-    )
-    return df.where(
-        (F.col(lon) >= F.lit(bbox[0])) & (F.col(lon) <= F.lit(bbox[2]))
-        & (F.col(lat) >= F.lit(bbox[1])) & (F.col(lat) <= F.lit(bbox[3]))
+def _stage_sorted(spark: SparkSession, path: str, staged: str) -> list:
+    """The step both compactors share: rewrite the table's current
+    snapshot into ``staged`` as one (part, sort)-sorted file per
+    partition. Dynamic partition overwrite replaces only the partitions
+    present in the table, so compacting into an existing directory
+    leaves its other partitions alone. Returns the staged partition
+    directory names."""
+    key = _table_key(path)
+    df = _sorted(read_snapshot(spark, path), key)
+    with _conf(spark, "spark.sql.sources.partitionOverwriteMode",
+               "dynamic"):
+        df.write.mode("overwrite").partitionBy(key.part).parquet(staged)
+    return sorted(
+        n for n in os.listdir(staged) if n.startswith(key.part + "=")
     )
 
 
@@ -219,11 +331,11 @@ def compact_spatial_table(
 ) -> None:
     """Compact a spatial table in place (or to ``out_path``): streaming
     ingest (stream_to_spatial_table) lands one small file per
-    micro-batch per partition, and small files erode both scan
-    throughput and row-group pruning. Rewrites each ``part_cell``
-    partition as one Morton-sorted file via dynamic partition overwrite
-    — only partitions present in the input are replaced, so compaction
-    composes with ongoing ingest of OTHER regions.
+    micro-batch per partition, and small files erode scan throughput
+    and row clustering. Rewrites each partition as one sorted file via
+    dynamic partition overwrite — only partitions present in the input
+    are replaced, so compaction composes with ongoing ingest of OTHER
+    regions.
 
     In-place mode stages through ``<path>/_compact_tmp`` (underscore
     prefix: invisible to Spark's file listing) because Spark cannot
@@ -244,52 +356,92 @@ def compact_spatial_table(
     a scan). For all-old-or-all-new reads WITHOUT that retry — and for
     multi-partition compactions as one transactional snapshot — use
     :func:`compact_spatial_table_snapshot`, which keeps old files
-    alive until :func:`expire_snapshots`.
+    alive until :func:`expire_snapshots`. This compactor's output, by
+    contrast, reads without duplicate rows through manifest-unaware
+    readers (``spark.read.parquet``, Hive).
     """
-    import shutil
-    import os as _os
-
     if out_path is None and read_manifest(path) is not None:
         raise ValueError(
             "table at %r uses manifest commits — use "
             "compact_spatial_table_snapshot (the per-partition dir swap "
             "would invalidate the manifest's file list)" % (path,)
         )
-    df = read_snapshot(spark, path)
-    staged = out_path or _os.path.join(path, "_compact_tmp")
-    out = df.repartition("part_cell").sortWithinPartitions(
-        "part_cell", "morton"
-    )
-    conf = spark.conf
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = conf.get(key, None)
-    conf.set(key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("part_cell").parquet(
-            staged
-        )
-    finally:
-        if prev is None:
-            conf.unset(key)
+    staged = out_path or os.path.join(path, _STAGING)
+    names = _stage_sorted(spark, path, staged)
+    if out_path is not None:
+        return
+    for name in names:
+        dst = os.path.join(path, name)
+        src = os.path.join(staged, name)
+        if not os.path.exists(dst):
+            shutil.move(src, dst)
+        elif _exchange_dirs(src, dst):
+            pass  # atomic swap; src now holds the pre-compact files
         else:
-            conf.set(key, prev)
-    if out_path is None:
-        for name in _os.listdir(staged):
-            if not name.startswith("part_cell="):
+            bak = dst + ".__bak__"
+            shutil.rmtree(bak, ignore_errors=True)
+            os.rename(dst, bak)
+            os.rename(src, dst)
+            shutil.rmtree(bak)
+    shutil.rmtree(staged, ignore_errors=True)
+
+
+def compact_spatial_table_snapshot(
+    spark: SparkSession, path: str
+) -> dict:
+    """Compact ALL partitions as one transactional snapshot:
+
+    1. read the current snapshot (manifest-resolved);
+    2. write the compacted copy to a staging dir;
+    3. move each staged file into its live partition dir under a
+       snapshot-unique name (live files are never touched);
+    4. publish with ONE atomic manifest replace.
+
+    A concurrent reader resolves either the old manifest (all old
+    files, still on disk) or the new one (all new files) — never a
+    partition-mixed state. Returns the new manifest. Old-snapshot
+    files remain until :func:`expire_snapshots`."""
+    m = init_manifest(path)
+    snap = int(m["snapshot"]) + 1
+    staged = os.path.join(path, _STAGING)
+    shutil.rmtree(staged, ignore_errors=True)
+    new_files = []
+    for name in _stage_sorted(spark, path, staged):
+        live = os.path.join(path, name)
+        os.makedirs(live, exist_ok=True)
+        sdir = os.path.join(staged, name)
+        for f in sorted(os.listdir(sdir)):
+            if not f.endswith(".parquet"):
                 continue
-            dst = _os.path.join(path, name)
-            src = _os.path.join(staged, name)
-            if not _os.path.exists(dst):
-                shutil.move(src, dst)
-            elif _exchange_dirs(src, dst):
-                pass  # atomic swap; src now holds the pre-compact files
-            else:
-                bak = dst + ".__bak__"
-                shutil.rmtree(bak, ignore_errors=True)
-                _os.rename(dst, bak)
-                _os.rename(src, dst)
-                shutil.rmtree(bak)
-        shutil.rmtree(staged, ignore_errors=True)
+            newname = "snap%06d-%s" % (snap, f)
+            os.rename(os.path.join(sdir, f), os.path.join(live, newname))
+            new_files.append(os.path.join(name, newname))
+    _commit_manifest(path, snap, new_files)
+    shutil.rmtree(staged, ignore_errors=True)
+    return {"snapshot": snap, "files": sorted(new_files)}
+
+
+def _exchange_dirs(a: str, b: str) -> bool:
+    """Atomically swap two paths with Linux ``renameat2(RENAME_EXCHANGE)``
+    (no instant at which either path is absent). Returns False when the
+    syscall/libc wrapper is unavailable or fails (caller falls back)."""
+    import ctypes
+    import ctypes.util
+
+    try:
+        libc = ctypes.CDLL(ctypes.util.find_library("c") or "libc.so.6",
+                           use_errno=True)
+        fn = libc.renameat2
+    except (OSError, AttributeError):
+        return False
+    fn.argtypes = [ctypes.c_int, ctypes.c_char_p, ctypes.c_int,
+                   ctypes.c_char_p, ctypes.c_uint]
+    fn.restype = ctypes.c_int
+    at_fdcwd = -100
+    rename_exchange = 2
+    ret = fn(at_fdcwd, os.fsencode(a), at_fdcwd, os.fsencode(b),
+             rename_exchange)
+    return ret == 0
 
 
 # ---------------------------------------------------------------------------
@@ -305,7 +457,7 @@ def compact_spatial_table(
 # ones), and a single atomic `os.replace` of the manifest publishes the
 # complete new file set. Readers resolve the manifest and read exactly
 # those files (partition pruning still applies — the files keep their
-# `part_cell=` directories via basePath). Old files stay on disk until
+# `part_*=` directories via basePath). Old files stay on disk until
 # `expire_snapshots` — the Iceberg snapshot-expiry contract — so a
 # reader that resolved the previous manifest keeps a complete,
 # consistent view.
@@ -314,9 +466,7 @@ MANIFEST_NAME = "_MANIFEST"
 
 
 def _manifest_file(path: str) -> str:
-    import os as _os
-
-    return _os.path.join(path, MANIFEST_NAME)
+    return os.path.join(path, MANIFEST_NAME)
 
 
 def read_manifest(path: str) -> dict | None:
@@ -338,48 +488,45 @@ def atomic_write_text(path: str, text: str) -> None:
     parent-directory fsync is what makes the new name durable). The
     shared commit primitive under the layout manifest and the
     streaming-cluster pointer."""
-    import os as _os
     import tempfile
 
-    parent = _os.path.dirname(_os.path.abspath(path))
+    parent = os.path.dirname(os.path.abspath(path))
     fd, tmp = tempfile.mkstemp(dir=parent, prefix="._commit")
     try:
-        with _os.fdopen(fd, "w") as f:
+        with os.fdopen(fd, "w") as f:
             f.write(text)
             f.flush()
-            _os.fsync(f.fileno())
-        _os.replace(tmp, path)
-        dfd = _os.open(parent, _os.O_RDONLY)
+            os.fsync(f.fileno())
+        os.replace(tmp, path)
+        dfd = os.open(parent, os.O_RDONLY)
         try:
-            _os.fsync(dfd)
+            os.fsync(dfd)
         finally:
-            _os.close(dfd)
+            os.close(dfd)
     except BaseException:
-        if _os.path.exists(tmp):
-            _os.unlink(tmp)
+        if os.path.exists(tmp):
+            os.unlink(tmp)
         raise
 
 
 def _commit_manifest(path: str, snapshot: int, files: list[str]) -> None:
     import json
-    import os as _os
 
     body = json.dumps({"snapshot": snapshot, "files": sorted(files)})
     # history manifest first (time travel), THEN the current pointer —
     # a reader resolving snapshot N always finds manifest-v N complete
     atomic_write_text(
-        _os.path.join(path, "_manifest-v%06d.json" % snapshot), body
+        os.path.join(path, "_manifest-v%06d.json" % snapshot), body
     )
     atomic_write_text(_manifest_file(path), body)
 
 
 def list_snapshots(path: str) -> list[int]:
     """Snapshot ids with a retained history manifest, ascending."""
-    import os as _os
     import re as _re
 
     out = []
-    for name in _os.listdir(path):
+    for name in os.listdir(path):
         m = _re.match(r"^_manifest-v(\d+)\.json$", name)
         if m:
             out.append(int(m.group(1)))
@@ -390,9 +537,8 @@ def read_manifest_at(path: str, snapshot: int) -> dict:
     """A specific snapshot's manifest (requires its history file;
     raises if it was never written or has been cleaned up)."""
     import json
-    import os as _os
 
-    p = _os.path.join(path, "_manifest-v%06d.json" % int(snapshot))
+    p = os.path.join(path, "_manifest-v%06d.json" % int(snapshot))
     try:
         with open(p) as f:
             return json.load(f)
@@ -417,16 +563,15 @@ def snapshot_diff(path: str, a: int, b: int) -> dict:
 
 
 def _list_data_files(path: str) -> list[str]:
-    import os as _os
-
+    prefix = _table_key(path).part + "="
     out = []
-    for name in sorted(_os.listdir(path)):
-        if not name.startswith("part_cell="):
+    for name in sorted(os.listdir(path)):
+        if not name.startswith(prefix):
             continue
-        pdir = _os.path.join(path, name)
-        for f in sorted(_os.listdir(pdir)):
+        pdir = os.path.join(path, name)
+        for f in sorted(os.listdir(pdir)):
             if f.endswith(".parquet"):
-                out.append(_os.path.join(name, f))
+                out.append(os.path.join(name, f))
     return out
 
 
@@ -449,67 +594,25 @@ def read_snapshot(
     :func:`expire_snapshots` removes its files; the manifest history
     outlives the data so attempts past expiry fail with a clear
     missing-file error rather than silently reading the wrong data).
-    Reads exactly the manifest's files (basePath keeps the
-    ``part_cell`` partition column and its pruning); falls back to a
-    plain directory read when the table has no manifest."""
-    import os as _os
-
-    if snapshot is not None:
-        m = read_manifest_at(path, snapshot)
-    else:
-        m = read_manifest(path)
+    Reads exactly the manifest's files (basePath keeps the ``part_*``
+    partition column and its pruning); falls back to a plain directory
+    read when the table has no manifest. Keys with string partitions
+    read with partition-type inference off: the conf is consulted when
+    the relation is resolved (DataFrame creation), so a set/restore
+    window around the read is enough."""
+    window = (
+        _conf(spark, "spark.sql.sources.partitionColumnTypeInference"
+                     ".enabled", "false")
+        if _table_key(path).string_partitions
+        else contextlib.nullcontext()
+    )
+    m = (read_manifest(path) if snapshot is None
+         else read_manifest_at(path, snapshot))
+    with window:
         if m is None:
             return spark.read.parquet(path)
-    files = [_os.path.join(path, f) for f in m["files"]]
-    return spark.read.option("basePath", path).parquet(*files)
-
-
-def compact_spatial_table_snapshot(
-    spark: SparkSession, path: str
-) -> dict:
-    """Compact ALL partitions as one transactional snapshot:
-
-    1. read the current snapshot (manifest-resolved);
-    2. write the compacted copy to a staging dir;
-    3. move each staged file into its live partition dir under a
-       snapshot-unique name (live files are never touched);
-    4. publish with ONE atomic manifest replace.
-
-    A concurrent reader resolves either the old manifest (all old
-    files, still on disk) or the new one (all new files) — never a
-    partition-mixed state. Returns the new manifest. Old-snapshot
-    files remain until :func:`expire_snapshots`."""
-    import os as _os
-    import shutil
-
-    m = init_manifest(path)
-    snap = int(m["snapshot"]) + 1
-    df = read_snapshot(spark, path)
-    staged = _os.path.join(path, "_compact_tmp")
-    (
-        df.repartition("part_cell")
-        .sortWithinPartitions("part_cell", "morton")
-        .write.mode("overwrite")
-        .partitionBy("part_cell")
-        .parquet(staged)
-    )
-    new_files = []
-    for name in sorted(_os.listdir(staged)):
-        if not name.startswith("part_cell="):
-            continue
-        live = _os.path.join(path, name)
-        _os.makedirs(live, exist_ok=True)
-        sdir = _os.path.join(staged, name)
-        for f in sorted(_os.listdir(sdir)):
-            if not f.endswith(".parquet"):
-                continue
-            newname = "snap%06d-%s" % (snap, f)
-            _os.rename(_os.path.join(sdir, f),
-                       _os.path.join(live, newname))
-            new_files.append(_os.path.join(name, newname))
-    _commit_manifest(path, snap, new_files)
-    shutil.rmtree(staged, ignore_errors=True)
-    return {"snapshot": snap, "files": sorted(new_files)}
+        files = [os.path.join(path, f) for f in m["files"]]
+        return spark.read.option("basePath", path).parquet(*files)
 
 
 def expire_snapshots(path: str) -> int:
@@ -517,8 +620,6 @@ def expire_snapshots(path: str) -> int:
     previous snapshots' files kept for in-flight readers). Run once
     older readers are done — Iceberg's snapshot-expiry contract.
     Returns the number of files removed."""
-    import os as _os
-
     m = read_manifest(path)
     if m is None:
         raise ValueError("expire_snapshots requires a manifest table")
@@ -526,30 +627,9 @@ def expire_snapshots(path: str) -> int:
     removed = 0
     for rel in _list_data_files(path):
         if rel not in keep:
-            _os.unlink(_os.path.join(path, rel))
+            os.unlink(os.path.join(path, rel))
             removed += 1
     return removed
-
-
-def _exchange_dirs(a: str, b: str) -> bool:
-    """Atomically swap two paths with Linux ``renameat2(RENAME_EXCHANGE)``
-    (no instant at which either path is absent). Returns False when the
-    syscall/libc wrapper is unavailable or fails (caller falls back)."""
-    import ctypes
-    import ctypes.util
-    import os as _os
-
-    try:
-        libc = ctypes.CDLL(ctypes.util.find_library("c") or "libc.so.6",
-                           use_errno=True)
-        fn = libc.renameat2
-    except (OSError, AttributeError):
-        return False
-    at_fdcwd = -100
-    rename_exchange = 2
-    ret = fn(at_fdcwd, _os.fsencode(a), at_fdcwd, _os.fsencode(b),
-             rename_exchange)
-    return ret == 0
 
 
 def read_polygon(
@@ -561,9 +641,9 @@ def read_polygon(
     lon: str = "lon",
     lat: str = "lat",
 ) -> DataFrame:
-    """Read rows CONTAINED in a polygon from the spatial table: the
-    polygon's cell cover at ``part_res`` prunes partitions (full cells
-    skip the exact test entirely, boundary cells run the ray-cast
+    """Read rows CONTAINED in a polygon from a cell-keyed spatial table:
+    the polygon's cell cover at ``part_res`` prunes partitions (full
+    cells skip the exact test entirely, boundary cells run the ray-cast
     kernel) — the read-path composition of the flagship join's
     full/boundary split with the physical layout's pruning."""
     import pandas as pd
@@ -571,13 +651,12 @@ def read_polygon(
     from ..geo import kernels
     from ..geo.geodesic import points_in_polygon_geodesic
 
+    df = read_snapshot(spark, path)
     cover = cellmod.polygon_cover(rings, part_res, edges=edges)
     if not cover:
-        df = read_snapshot(spark, path)
         return df.where(F.lit(False))
     full_cells = [c for c, f in cover if f]
     boundary_cells = [c for c, f in cover if not f]
-    df = read_snapshot(spark, path)
     full_rows = df.where(F.col("part_cell").isin(full_cells))
 
     pip = (points_in_polygon_geodesic if edges == "geodesic"
@@ -592,89 +671,3 @@ def read_polygon(
     boundary = df.where(F.col("part_cell").isin(boundary_cells))
     refined = boundary.mapInPandas(refine, df.schema)
     return full_rows.unionByName(refined)
-
-
-def write_spatial_table_hilbert(
-    df: DataFrame,
-    path: str,
-    lon: str = "lon",
-    lat: str = "lat",
-    part_res: int = PART_RES,
-    sort_res: int = SORT_RES,
-    mode: str = "overwrite",
-) -> None:
-    """Hilbert-keyed layout twin of :func:`write_spatial_table`:
-    partition dirs are ``part_hd=<index>`` (the Hilbert index of the
-    coarse cell) and rows sort by the fine-resolution Hilbert index.
-    Hilbert ordering never jumps (consecutive indices are grid
-    neighbors), so range scans over the sort key touch strictly more
-    LOCAL data than Morton's Z-jumps; the index is hierarchical
-    (geo/hilbert.py), so pruning is the same shift arithmetic the
-    cell layout uses. Same snapshot/manifest machinery applies."""
-    from ..functions.geom_udfs import grid_xy_cols
-    from ..geo.hilbert import with_hilbert
-
-    gx, gy = grid_xy_cols(F.col(lon), F.col(lat), part_res)
-    out = df.withColumn("_pgx", gx).withColumn("_pgy", gy)
-    out = with_hilbert(out, part_res, "_pgx", "_pgy", out="part_hd")
-    gx2, gy2 = grid_xy_cols(F.col(lon), F.col(lat), sort_res)
-    out = out.withColumn("_sgx", gx2).withColumn("_sgy", gy2)
-    out = with_hilbert(out, sort_res, "_sgx", "_sgy", out="hilbert")
-    out = (
-        out.drop("_pgx", "_pgy", "_sgx", "_sgy")
-        .repartition("part_hd")
-        .sortWithinPartitions("part_hd", "hilbert")
-    )
-    out.write.mode(mode).partitionBy("part_hd").parquet(path)
-
-
-def read_hilbert_cells(
-    spark: SparkSession,
-    path: str,
-    cell_ids: Iterable[int],
-    part_res: int = PART_RES,
-) -> DataFrame:
-    """Read only the partitions covering the requested (any-resolution)
-    engine cells — the Hilbert twin of :func:`read_cells`: the parent
-    partition of a res-r cell is the Hilbert index of its ancestor
-    grid cell at ``part_res`` (hierarchy property)."""
-    from ..geo.hilbert import hilbert_d_np
-
-    parents = set()
-    for c in cell_ids:
-        x, y, res = cellmod.decode(int(c))
-        r = int(res)
-        if r < part_res:
-            raise ValueError("query cells must be at res >= part_res")
-        shift = r - part_res
-        parents.add(int(hilbert_d_np(
-            [int(x) >> shift], [int(y) >> shift], part_res)[0]))
-    df = read_snapshot(spark, path)
-    return df.where(F.col("part_hd").isin(sorted(parents)))
-
-
-def read_bbox_hilbert(
-    spark: SparkSession,
-    path: str,
-    bbox,
-    part_res: int = PART_RES,
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """bbox read over the Hilbert-keyed layout: prune to the Hilbert
-    indices of the coarse cells covering the bbox + the exact bbox
-    filter (P3) on survivors."""
-    from ..geo.hilbert import hilbert_d_np
-
-    cover = cellmod.bbox_cover(tuple(bbox), part_res)
-    hds = set()
-    for c in cover:
-        x, y, _res = cellmod.decode(int(c))
-        hds.add(int(hilbert_d_np([int(x)], [int(y)], part_res)[0]))
-    df = read_snapshot(spark, path).where(
-        F.col("part_hd").isin(sorted(hds))
-    )
-    return df.where(
-        (F.col(lon) >= F.lit(bbox[0])) & (F.col(lon) <= F.lit(bbox[2]))
-        & (F.col(lat) >= F.lit(bbox[1])) & (F.col(lat) <= F.lit(bbox[3]))
-    )

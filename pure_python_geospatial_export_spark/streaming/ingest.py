@@ -150,34 +150,30 @@ def stream_to_spatial_table(
     pages_stream: DataFrame,
     path: str,
     checkpoint_dir: str,
-    part_res: int = 3,
-    sort_res: int = 12,
+    part_res: int | None = None,
+    sort_res: int | None = None,
 ):
-    """Continuously ingest a pages stream into the cell-partitioned
-    spatial table layout (sources/layout.py): each micro-batch lands
+    """Continuously ingest a pages stream into the cell-keyed spatial
+    table layout (sources/layout.py): each micro-batch lands
     partitioned by coarse cell with the Morton locality column attached,
     so downstream cell/bbox readers prune partitions on live data too.
+    ``part_res``/``sort_res`` default to the cell key's levels.
 
     Returns the started StreamingQuery; drain with
     ``trigger(availableNow=True)`` semantics by awaiting termination.
     """
-    from ..sources.layout import morton_col
+    from ..sources.layout import KEYS
 
+    key = KEYS["cell"]
     pts = pages_stream.withColumn(
         "lon", lon_col(F.col("url"))
     ).withColumn("lat", lat_col(F.col("url")))
-    out = (
-        pts.withColumn(
-            "part_cell", cell_id_col(F.col("lon"), F.col("lat"), part_res)
-        )
-        .withColumn("morton", morton_col(F.col("lon"), F.col("lat"),
-                                         sort_res))
-    )
     return (
-        out.writeStream.format("parquet")
+        key.with_columns(pts, "lon", "lat", part_res, sort_res)
+        .writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("part_cell")
+        .partitionBy(key.part)
         .trigger(availableNow=True)
         .start()
     )

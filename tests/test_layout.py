@@ -2,11 +2,14 @@
 Morton clustering sorts within partitions, bbox reads are exact."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from pure_python_geospatial_export_spark.functions.points import with_point
 from pure_python_geospatial_export_spark.geo import cells as cellmod
+from pure_python_geospatial_export_spark.geo.geohash import encode_geohash
 from pure_python_geospatial_export_spark.sources.layout import (
+    KEYS,
     morton_col,
     read_bbox,
     read_cells,
@@ -15,11 +18,22 @@ from pure_python_geospatial_export_spark.sources.layout import (
 from pure_python_geospatial_export_spark.sources.pages import synth_pages
 
 
-def _table(spark, tmp_path, n=3000):
+ALL_KEYS = sorted(KEYS)
+
+
+def _table(spark, tmp_path, n=3000, key="cell"):
+    """A seeded points table at the key's default levels (cell: 3/12)."""
     path = str(tmp_path / "spatial_table")
     pages = with_point(synth_pages(spark, n))
-    write_spatial_table(pages, path, part_res=3, sort_res=12)
+    write_spatial_table(pages, path, key=key)
     return path, pages
+
+
+def _query_key(key):
+    """A fine query key near Cheyenne in the key's own vocabulary."""
+    if key == "geohash":
+        return str(encode_geohash([-104.786], [41.14], 6)[0])
+    return int(cellmod.cell_id_scalar(-104.786, 41.14, 8))
 
 
 def test_partition_pruning_reaches_files(spark, tmp_path):
@@ -88,15 +102,19 @@ def test_sorted_within_partitions(spark, tmp_path):
         assert (np.diff(col) >= 0).all(), f
 
 
-def test_compact_spatial_table(spark, tmp_path):
+@pytest.mark.parametrize("key", ALL_KEYS)
+def test_compact_spatial_table(spark, tmp_path, key):
     """Fragmented partitions (multi-batch appends) collapse to one file
-    each; row multiset and Morton order preserved; pruning still works."""
+    each; row multiset and sort-key order preserved; pruning still
+    works."""
     import os
     from pyspark.sql import functions as F  # noqa: F811
 
     from pure_python_geospatial_export_spark.sources.layout import (
         compact_spatial_table,
     )
+
+    part, sort = KEYS[key].part, KEYS[key].sort
 
     path = str(tmp_path / "frag_table")
     # fragment: three separate appends of the same layout (distinct id
@@ -106,12 +124,12 @@ def test_compact_spatial_table(spark, tmp_path):
             "page_id", F.col("page_id") + F.lit(i * 10000)
         )
         write_spatial_table(pages, path, part_res=2, sort_res=10,
-                            mode="append")
+                            mode="append", key=key)
     before = spark.read.parquet(path)
     rows_before = sorted(
-        tuple(r) for r in before.select("page_id", "part_cell").collect()
+        tuple(r) for r in before.select("page_id", part).collect()
     )
-    part_dirs = [d for d in os.listdir(path) if d.startswith("part_cell=")]
+    part_dirs = [d for d in os.listdir(path) if d.startswith(part + "=")]
     assert any(
         len([f for f in os.listdir(os.path.join(path, d))
              if f.endswith(".parquet")]) > 1
@@ -121,21 +139,21 @@ def test_compact_spatial_table(spark, tmp_path):
     compact_spatial_table(spark, path)
 
     for d in os.listdir(path):
-        if d.startswith("part_cell="):
+        if d.startswith(part + "="):
             files = [f for f in os.listdir(os.path.join(path, d))
                      if f.endswith(".parquet")]
             assert len(files) == 1, (d, files)
     after = spark.read.parquet(path)
     rows_after = sorted(
-        tuple(r) for r in after.select("page_id", "part_cell").collect()
+        tuple(r) for r in after.select("page_id", part).collect()
     )
     assert rows_after == rows_before
-    # morton order within each compacted file
+    # sort-key order within each compacted file
     one = after.where(
-        F.col("part_cell") == int(rows_after[0][1])
-    ).select("morton").toPandas()["morton"].to_numpy()
+        F.col(part) == rows_after[0][1]
+    ).select(sort).toPandas()[sort].to_numpy()
     # file order is read order for a single parquet file per partition
-    assert (np.diff(one) >= 0).all()
+    assert (one[1:] >= one[:-1]).all()
 
 
 def test_read_polygon_prunes_and_matches_kernel(spark, tmp_path):
@@ -270,7 +288,8 @@ def test_reader_never_sees_missing_partition(spark, tmp_path):
 # snapshot manifests (round-4 verdict item 8)
 # ---------------------------------------------------------------------------
 
-def test_snapshot_compaction_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("key", ALL_KEYS)
+def test_snapshot_compaction_roundtrip(spark, tmp_path, key):
     """Manifest adoption + snapshot compaction preserve rows exactly;
     pruning reads still work through the manifest."""
     from pure_python_geospatial_export_spark.sources.layout import (
@@ -281,7 +300,7 @@ def test_snapshot_compaction_roundtrip(spark, tmp_path):
         read_snapshot,
     )
 
-    path, pages = _table(spark, tmp_path)
+    path, pages = _table(spark, tmp_path, key=key)
     m0 = init_manifest(path)
     assert m0["snapshot"] == 0 and m0["files"]
     before = {
@@ -306,8 +325,7 @@ def test_snapshot_compaction_roundtrip(spark, tmp_path):
         read_snapshot(spark, path).select("page_id").collect()
     } == before
     # pruned read goes through the manifest too
-    qcell = int(cellmod.cell_id_scalar(-104.786, 41.14, 8))
-    sub = read_cells(spark, path, [qcell], part_res=3)
+    sub = read_cells(spark, path, [_query_key(key)])
     assert sub.count() > 0
 
 
@@ -373,8 +391,6 @@ def test_snapshot_reader_never_sees_mixed_generations(spark, tmp_path):
 
 
 def test_dir_swap_compaction_refuses_manifest_tables(spark, tmp_path):
-    import pytest
-
     from pure_python_geospatial_export_spark.sources.layout import (
         compact_spatial_table,
         init_manifest,
@@ -389,8 +405,6 @@ def test_dir_swap_compaction_refuses_manifest_tables(spark, tmp_path):
 def test_snapshot_time_travel_and_diff(spark, tmp_path):
     """Manifest history gives time travel (until expiry) and file-level
     snapshot diffs — the Iceberg read contract."""
-    import pytest
-
     from pure_python_geospatial_export_spark.sources.layout import (
         compact_spatial_table_snapshot,
         expire_snapshots,
@@ -449,19 +463,10 @@ def test_geohash_layout_pruning_parity(spark, tmp_path):
     """Round 7: geohash-keyed layout — pruning reaches the file level
     exactly like the Morton/cell layout, partition dirs carry the
     geohash string, and bbox reads stay exact."""
-    from pure_python_geospatial_export_spark.geo.geohash import (
-        encode_geohash,
-    )
-    from pure_python_geospatial_export_spark.sources.layout import (
-        read_bbox_geohash,
-        read_geohashes,
-        write_spatial_table_geohash,
-    )
-
     path = str(tmp_path / "gh_table")
     pages = with_point(synth_pages(spark, 3000))
-    write_spatial_table_geohash(
-        pages, path, part_precision=2, sort_precision=9
+    write_spatial_table(
+        pages, path, part_res=2, sort_res=9, key="geohash"
     )
 
     # partition dirs are interop-friendly geohash strings
@@ -476,7 +481,7 @@ def test_geohash_layout_pruning_parity(spark, tmp_path):
 
     # files-touched pruning parity with the cell layout test
     qgh = str(encode_geohash([-104.786], [41.14], 6)[0])
-    df = read_geohashes(spark, path, [qgh], part_precision=2)
+    df = read_cells(spark, path, [qgh], part_res=2)
     touched = {
         r["f"] for r in df.select(
             F.input_file_name().alias("f")).distinct().collect()
@@ -487,16 +492,14 @@ def test_geohash_layout_pruning_parity(spark, tmp_path):
     assert "PartitionFilters" in plan or "part_gh" in plan
 
     # precision below the table's raises
-    import pytest
-
     with pytest.raises(ValueError, match="precision"):
-        read_geohashes(spark, path, ["9"], part_precision=2)
+        read_cells(spark, path, ["9"], part_res=2)
 
     # bbox read: pruned AND exact
     bbox = (-111.0, 41.0, -104.0, 45.0)
     got = sorted(
         int(r["page_id"])
-        for r in read_bbox_geohash(spark, path, bbox).collect()
+        for r in read_bbox(spark, path, bbox).collect()
     )
     pdf = pages.select("page_id", "lon", "lat").toPandas()
     m = (
@@ -506,7 +509,7 @@ def test_geohash_layout_pruning_parity(spark, tmp_path):
     assert got == sorted(int(v) for v in pdf["page_id"][m])
     assert got
     btouched = {
-        r["f"] for r in read_bbox_geohash(spark, path, bbox).select(
+        r["f"] for r in read_bbox(spark, path, bbox).select(
             F.input_file_name().alias("f")).distinct().collect()
     }
     assert len(btouched) < len(all_files)
@@ -529,14 +532,6 @@ def test_geohash_layout_all_digit_partitions(spark, tmp_path):
     (-170, -85)): a table containing only such partitions must still
     read part_gh as STRING (partition type inference would turn '00'
     into int 0, corrupting values and pruning)."""
-    from pure_python_geospatial_export_spark.geo.geohash import (
-        encode_geohash,
-    )
-    from pure_python_geospatial_export_spark.sources.layout import (
-        read_bbox_geohash,
-        read_geohashes,
-        write_spatial_table_geohash,
-    )
 
     rows = [
         (i, -170.0 + (i % 5) * 0.5, -85.0 + (i // 5) * 3.0)
@@ -544,7 +539,7 @@ def test_geohash_layout_all_digit_partitions(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, "page_id long, lon double, lat double")
     path = str(tmp_path / "gh_digits")
-    write_spatial_table_geohash(df, path, part_precision=2)
+    write_spatial_table(df, path, part_res=2, key="geohash")
 
     ghs = {
         str(g) for g in encode_geohash(
@@ -553,7 +548,7 @@ def test_geohash_layout_all_digit_partitions(spark, tmp_path):
     }
     assert all(g.isdigit() for g in ghs), ghs
 
-    got = read_geohashes(spark, path, sorted(ghs), part_precision=2)
+    got = read_cells(spark, path, sorted(ghs), part_res=2)
     assert dict(got.dtypes)["part_gh"] == "string"
     assert got.count() == 20
     back = {
@@ -561,7 +556,7 @@ def test_geohash_layout_all_digit_partitions(spark, tmp_path):
     }
     assert {g for _, g in back} == ghs
 
-    bb = read_bbox_geohash(spark, path, (-170.5, -86.0, -167.0, -70.0))
+    bb = read_bbox(spark, path, (-170.5, -86.0, -167.0, -70.0))
     assert bb.count() == 20
 
 
@@ -575,17 +570,13 @@ def test_hilbert_layout_pruning_parity(spark, tmp_path):
     from pure_python_geospatial_export_spark.geo.hilbert import (
         hilbert_d_np,
     )
-    from pure_python_geospatial_export_spark.sources.layout import (
-        read_bbox_hilbert,
-        read_hilbert_cells,
-        write_spatial_table_hilbert,
-    )
 
     import os
 
     path = str(tmp_path / "hil_table")
     pages = with_point(synth_pages(spark, 3000))
-    write_spatial_table_hilbert(pages, path, part_res=3, sort_res=10)
+    write_spatial_table(pages, path, part_res=3, sort_res=10,
+                        key="hilbert")
 
     parts = [d for d in os.listdir(path) if d.startswith("part_hd=")]
     assert parts and all(
@@ -594,7 +585,7 @@ def test_hilbert_layout_pruning_parity(spark, tmp_path):
 
     # cell read prunes to files of one partition
     qcell = int(cellmod.encode(37, 22, 6))  # res-6 cell
-    df = read_hilbert_cells(spark, path, [qcell], part_res=3)
+    df = read_cells(spark, path, [qcell], part_res=3)
     touched = {
         r["f"] for r in df.select(
             F.input_file_name().alias("f")).distinct().collect()
@@ -611,7 +602,7 @@ def test_hilbert_layout_pruning_parity(spark, tmp_path):
 
     # bbox read: pruned AND exact vs a full-scan filter
     bbox = (-60.0, -30.0, -20.0, 10.0)
-    got = read_bbox_hilbert(spark, path, bbox, part_res=3)
+    got = read_bbox(spark, path, bbox, part_res=3)
     full = spark.read.parquet(path).where(
         (F.col("lon") >= bbox[0]) & (F.col("lon") <= bbox[2])
         & (F.col("lat") >= bbox[1]) & (F.col("lat") <= bbox[3])
@@ -627,9 +618,7 @@ def test_hilbert_layout_pruning_parity(spark, tmp_path):
     assert vals == sorted(vals)
 
     # res below the table's partition res raises
-    import pytest
-
     with pytest.raises(ValueError, match="res"):
-        read_hilbert_cells(
+        read_cells(
             spark, path, [int(cellmod.encode(1, 1, 2))], part_res=3
         )

@@ -22,6 +22,10 @@ from pure_python_geospatial_export_spark.sources.export import (
 
 HERE = os.path.dirname(__file__)
 SHPDIR = "/root/reference/ppge-tests/shapefiles"
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(SHPDIR),
+    reason="reference checkout missing: %s not found" % SHPDIR,
+)
 with open(os.path.join(HERE, "fixtures", "golden_shapefiles.json")) as f:
     GOLDEN = json.load(f)
 
@@ -42,6 +46,7 @@ def _norm_geojson(g):
     return out
 
 
+@needs_reference
 @pytest.mark.parametrize("case", sorted(GOLDEN["read"]))
 def test_reader_matches_reference(case):
     exp = GOLDEN["read"][case]
@@ -172,6 +177,7 @@ def test_roundtrip_write_then_read(spark):
     assert gj == {"type": "MultiPoint", "coordinates": [[-104.8, 41.1]]}
 
 
+@needs_reference
 def test_read_shapefile_dataframe(spark):
     df = shp.read_shapefile(spark, os.path.join(SHPDIR, "test/polygon.shp"))
     rows = df.collect()

@@ -5,11 +5,18 @@ import io
 import os
 import zipfile
 
+import pytest
+
 from pure_python_geospatial_export_spark.sources import shapefile as shp
 
 SHPDIR = "/root/reference/ppge-tests/shapefiles"
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(SHPDIR),
+    reason="reference checkout missing: %s not found" % SHPDIR,
+)
 
 
+@needs_reference
 def test_shx_offsets_match_shp():
     with open(os.path.join(SHPDIR, "test/polygon.shx"), "rb") as f:
         idx = shp.decode_shx_bytes(f.read())
@@ -25,6 +32,7 @@ def test_shx_offsets_match_shp():
         assert recnum == i + 1
 
 
+@needs_reference
 def test_read_shapefile_zip(spark, tmp_path):
     zpath = str(tmp_path / "bundle.zip")
     with zipfile.ZipFile(zpath, "w") as z:
@@ -38,6 +46,7 @@ def test_read_shapefile_zip(spark, tmp_path):
         map(tuple, direct.collect()))
 
 
+@needs_reference
 def test_read_shapefile_url_http(spark):
     """URL source against a local HTTP server (the sandbox has no
     network): result equals the direct file read, and a missing .dbf is
@@ -74,6 +83,7 @@ def test_read_shapefile_url_http(spark):
         srv.server_close()
 
 
+@needs_reference
 def test_read_shapefile_url_dbf_only(spark, tmp_path):
     """A URL where only the .dbf resolves (reference tolerates it):
     records come back with null geometry."""
@@ -89,6 +99,7 @@ def test_read_shapefile_url_dbf_only(spark, tmp_path):
     assert len(df.columns) > 2  # oid, wkt + dbf attribute columns
 
 
+@needs_reference
 def test_read_shapefile_url_file_scheme(spark):
     df = shp.read_shapefile_url(
         spark, "file://" + os.path.join(SHPDIR, "test/point.shp"))
@@ -98,6 +109,7 @@ def test_read_shapefile_url_file_scheme(spark):
         map(tuple, direct.collect()))
 
 
+@needs_reference
 def test_bundle_shapefile_zip():
     parts = {}
     for ext in ("shp", "shx", "dbf"):
@@ -125,6 +137,7 @@ def _load_multipatch_golden():
         return json.load(f)
 
 
+@needs_reference
 def test_multipatch_read_matches_reference():
     g = _load_multipatch_golden()
     with open(os.path.join(SHPDIR, "test/multipatch.shp"), "rb") as f:
