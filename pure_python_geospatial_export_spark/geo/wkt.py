@@ -40,14 +40,16 @@ class InvalidGeoJSONException(Exception):
 
 INVALID_WKT_FMT = "Invalid WKT: `%s`"
 
+_NUM_PAT = r"-?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?"
+
 _TOKEN_RE = re.compile(
     r"""
     (?P<word>[A-Za-z]+)
-  | (?P<num>-?(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?)
+  | (?P<num>%s)
   | (?P<punct>[(),;=])
   | (?P<ws>\s+)
   | (?P<bad>.)
-    """,
+    """ % _NUM_PAT,
     re.VERBOSE,
 )
 
@@ -312,4 +314,104 @@ def loads_batch(strings):
             out.append(loads(s))
         except Exception:
             out.append(None)
+    return out
+
+
+def vertex_parts(geom: dict) -> list:
+    """The vertex sequences of a linear or areal geometry: a LineString
+    is one part, a MultiLineString one per line, a (Multi)Polygon one
+    per ring. Any other type -> ValueError."""
+    t, coords = geom["type"], geom["coordinates"]
+    if t == "LineString":
+        return [coords]
+    if t in ("MultiLineString", "Polygon"):
+        return list(coords)
+    if t == "MultiPolygon":
+        return [r for p in coords for r in p]
+    raise ValueError("not a linear or areal geometry: %s" % t)
+
+
+def _vertex_bounds(string: str):
+    """Per-row twin of ``bounds_batch``: (xmin, ymin, xmax, ymax) of the
+    first two ordinates of every vertex (raises on anything else)."""
+    import numpy as np
+
+    arr = np.concatenate([
+        np.asarray(p, dtype=np.float64)[:, :2]
+        for p in vertex_parts(loads(string))
+    ])
+    return (arr[:, 0].min(), arr[:, 1].min(),
+            arr[:, 0].max(), arr[:, 1].max())
+
+
+# The fast sub-grammar of ``bounds_batch``: 2-D linear/areal WKT with one
+# whitespace-separated x/y pair per vertex. ``_NUM_PAT`` under RE2, whose
+# ``\d`` and ``\s`` are ASCII-only, so every row it matches tokenizes and
+# parses through ``loads`` to the same ordinates (no SRID, Z/M, EMPTY,
+# lower-case tag or trailing tokens — those rows take the per-row path).
+def _seq(item: str) -> str:
+    return r"\(\s*%s(?:\s*,\s*%s)*\s*\)" % (item, item)
+
+
+_LINE_2D = _seq(r"%s\s+%s" % (_NUM_PAT, _NUM_PAT))
+_FAST_2D = (
+    r"^\s*(?:LINESTRING\s*%s|(?:POLYGON|MULTILINESTRING)\s*%s"
+    r"|MULTIPOLYGON\s*%s)\s*$"
+    % (_LINE_2D, _seq(_LINE_2D), _seq(_seq(_LINE_2D)))
+)
+
+
+def bounds_batch(strings):
+    """Vertex bboxes of a batch of linear/areal WKT strings -> float64
+    array of shape (n, 4): xmin, ymin, xmax, ymax; an all-NaN row marks
+    a null, malformed or non-linear/areal string (the P8 drop).
+
+    Rows in the strict 2-D sub-grammar (``_FAST_2D``) are parsed with
+    whole-batch Arrow compute: punctuation stripped, ordinates split and
+    cast to float64, then min/max reduced per row — no per-row Python.
+    Every other row (Z/M ordinates, SRID, EMPTY, malformed, rows with a
+    negative-zero ordinate, whose min/max sign is order-dependent) goes
+    through ``_vertex_bounds``. Both paths give bit-identical bounds.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    arr = pa.array(strings, type=pa.string())
+    out = np.full((len(arr), 4), np.nan)
+    fast = pc.fill_null(pc.match_substring_regex(arr, _FAST_2D), False)
+    fast_idx = np.flatnonzero(fast.to_numpy(zero_copy_only=False))
+    if len(fast_idx):
+        body = pc.replace_substring_regex(
+            pc.filter(arr, fast), r"^\s*[A-Z]+", ""
+        )
+        ords = pc.split_pattern(
+            pc.utf8_trim_whitespace(
+                pc.replace_substring_regex(body, r"[\s(),]+", " ")
+            ),
+            " ",
+        )
+        flat = pc.cast(ords.flatten(), pa.float64()).to_numpy()
+        offsets = np.asarray(ords.offsets)
+        starts = offsets[:-1] - offsets[0]
+        negzero = np.logical_or.reduceat(
+            (flat == 0) & np.signbit(flat), starts
+        )
+        xs, ys, vstarts = flat[0::2], flat[1::2], starts // 2
+        bounds = np.stack([
+            np.minimum.reduceat(xs, vstarts),
+            np.minimum.reduceat(ys, vstarts),
+            np.maximum.reduceat(xs, vstarts),
+            np.maximum.reduceat(ys, vstarts),
+        ], axis=1)
+        out[fast_idx[~negzero]] = bounds[~negzero]
+        fast_idx = fast_idx[~negzero]
+    slow = np.ones(len(arr), dtype=bool)
+    slow[fast_idx] = False
+    slow_idx = np.flatnonzero(slow)
+    for i, s in zip(slow_idx, arr.take(slow_idx).to_pylist()):
+        try:
+            out[i] = _vertex_bounds(s)
+        except Exception:
+            pass
     return out

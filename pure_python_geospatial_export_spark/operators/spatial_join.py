@@ -252,25 +252,49 @@ def spatial_join_big_layer(
     return full_rows.unionByName(refined, allowMissingColumns=False)
 
 
-def _flatten_polygon_rings(geom: dict):
-    if geom["type"] == "Polygon":
-        return geom["coordinates"]
-    if geom["type"] == "MultiPolygon":
-        return [r for poly in geom["coordinates"] for r in poly]
-    raise ValueError("non-polygon geometry %s" % geom["type"])
-
-
 def _probe_parts(geom: dict):
     """(kind, parts): areal probes flatten to rings, linear probes to
     polylines — the overlap join accepts both."""
-    t = geom["type"]
-    if t in ("Polygon", "MultiPolygon"):
-        return "area", _flatten_polygon_rings(geom)
-    if t == "LineString":
-        return "line", [geom["coordinates"]]
-    if t == "MultiLineString":
-        return "line", list(geom["coordinates"])
-    raise ValueError("unsupported probe geometry %s" % t)
+    from ..geo.wkt import vertex_parts
+
+    kind = "area" if geom["type"] in ("Polygon", "MultiPolygon") else "line"
+    return kind, vertex_parts(geom)
+
+
+def _geodesic_bounds(s):
+    """Per-row (padded bbox, vertex bbox) of one probe WKT under
+    geodesic edges, 8 floats; all-NaN for a malformed row."""
+    import numpy as np
+
+    from ..geo import wkt as wktmod
+    from ..geo.geodesic import unit_vectors
+
+    try:
+        _kind, rings = _probe_parts(wktmod.loads(s))
+        arr = np.concatenate([
+            np.asarray(r, dtype=np.float64)[:, :2] for r in rings
+        ])
+        # a great-circle edge bows off its chord by at most theta^2/8
+        # rad — pad the vertex bbox so arc bulges can't escape the
+        # candidate cells. The pad is an ANGULAR distance: one degree of
+        # it spans 1/cos(lat) degrees of longitude, so the x-pad scales
+        # by the worst cos in reach
+        pad = 0.0
+        for r in rings:
+            ra = np.asarray(r, dtype=np.float64)
+            v = unit_vectors(ra[:, 0], ra[:, 1])
+            d = np.clip(np.sum(v[:-1] * v[1:], axis=1), -1, 1)
+            theta = float(np.arccos(d).max(initial=0.0))
+            pad = max(pad, np.degrees(theta * theta / 8.0))
+        pad += 1e-9
+        lat_reach = min(89.9, float(np.abs(arr[:, 1]).max()) + pad)
+        pad_lon = pad / float(np.cos(np.radians(lat_reach)))
+        xmin, ymin = float(arr[:, 0].min()), float(arr[:, 1].min())
+        xmax, ymax = float(arr[:, 0].max()), float(arr[:, 1].max())
+    except Exception:
+        return (math.nan,) * 8
+    return (xmin - pad_lon, ymin - pad, xmax + pad_lon, ymax + pad,
+            xmin, ymin, xmax, ymax)
 
 
 def attach_probe_bboxes(src: DataFrame, geodesic: bool,
@@ -282,8 +306,17 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     candidate cells derived from it; ``include_raw`` additionally emits
     the UNpadded vertex bbox as ``_rxmin/_rymin/_rxmax/_rymax`` (the
     reporting extent — same kernel pass, no extra parse). Shared by the
-    probe-vs-layer overlap join and the self-overlap dissolve."""
-    import pandas as pd
+    probe-vs-layer overlap join and the self-overlap dissolve.
+
+    Planar bboxes come from ``wkt.bounds_batch``: rows in its strict
+    2-D POLYGON / MULTIPOLYGON / LINESTRING / MULTILINESTRING grammar
+    are parsed a whole Arrow batch at a time with no per-row Python;
+    every other row (Z/M ordinates, SRID, EMPTY, malformed, null) falls
+    back to the per-row ``loads`` path, with bit-identical bounds. Under
+    ``geodesic`` every row takes the per-row path (the pad needs each
+    ring's edge angles). The pass stays a ``mapInPandas`` so the plan
+    keeps one named node for it."""
+    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     cols = ["_xmin", "_ymin", "_xmax", "_ymax"]
@@ -299,61 +332,16 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     )
 
     def bbox_kernel(batches):
-        import numpy as np
-
         for pdf in batches:
-            vals = {k: [] for k in cols}
-            for s in pdf["_wkt"]:
-                try:
-                    _kind, rings = _probe_parts(wktmod.loads(s))
-                    arr = np.concatenate([
-                        np.asarray(r, dtype=np.float64)[:, :2]
-                        for r in rings
-                    ])
-                    pad = pad_lon = 0.0
-                    if geodesic:
-                        # a great-circle edge bows off its chord by at
-                        # most theta^2/8 rad — pad the vertex bbox so
-                        # arc bulges can't escape the candidate cells.
-                        # The pad is an ANGULAR distance: one degree of
-                        # it spans 1/cos(lat) degrees of longitude, so
-                        # the x-pad scales by the worst cos in reach
-                        from ..geo.geodesic import unit_vectors
-                        for r in rings:
-                            ra = np.asarray(r, dtype=np.float64)
-                            v = unit_vectors(ra[:, 0], ra[:, 1])
-                            d = np.clip(
-                                np.sum(v[:-1] * v[1:], axis=1), -1, 1
-                            )
-                            theta = float(np.arccos(d).max(initial=0.0))
-                            pad = max(pad,
-                                      np.degrees(theta * theta / 8.0))
-                        pad += 1e-9
-                        lat_reach = min(
-                            89.9,
-                            float(np.abs(arr[:, 1]).max()) + pad,
-                        )
-                        pad_lon = pad / float(
-                            np.cos(np.radians(lat_reach))
-                        )
-                    vals["_xmin"].append(float(arr[:, 0].min())
-                                         - pad_lon)
-                    vals["_ymin"].append(float(arr[:, 1].min()) - pad)
-                    vals["_xmax"].append(float(arr[:, 0].max())
-                                         + pad_lon)
-                    vals["_ymax"].append(float(arr[:, 1].max()) + pad)
-                    if include_raw:
-                        vals["_rxmin"].append(float(arr[:, 0].min()))
-                        vals["_rymin"].append(float(arr[:, 1].min()))
-                        vals["_rxmax"].append(float(arr[:, 0].max()))
-                        vals["_rymax"].append(float(arr[:, 1].max()))
-                except Exception:
-                    for k in vals:
-                        vals[k].append(None)
-            yield pdf.assign(**{
-                k: pd.Series(v, dtype="float64", index=pdf.index)
-                for k, v in vals.items()
-            })
+            if geodesic:
+                b = np.array(
+                    [_geodesic_bounds(s) for s in pdf["_wkt"]],
+                    dtype=np.float64,
+                ).reshape(-1, 8)
+            else:
+                raw = wktmod.bounds_batch(pdf["_wkt"])
+                b = np.hstack([raw, raw])
+            yield pdf.assign(**{k: b[:, i] for i, k in enumerate(cols)})
 
     return src.mapInPandas(bbox_kernel, bbox_schema).where(
         F.col("_xmin").isNotNull()
