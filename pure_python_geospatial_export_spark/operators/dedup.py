@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
 from ..functions.text import tokens_col
+from .fixpoint import checkpoint, fixpoint, unchanged
 
 #: Mersenne prime 2^31-1: (a*h'+b) stays within int64 under ANSI mode
 MINHASH_P = 2_147_483_647
@@ -819,8 +820,8 @@ def duplicate_clusters(
         .distinct()
         .withColumn("label", F.col("node"))
     )
-    converged = False
-    for _ in range(max_iters):
+
+    def step(labels):
         neighbor_labels = (
             edges.join(labels, edges["dst"] == labels["node"])
             .select(F.col("src").alias("node"), "label")
@@ -836,7 +837,7 @@ def duplicate_clusters(
             F.col("node").alias("label"),
             F.col("label").alias("_parent"),
         )
-        new_labels = (
+        return checkpoint(
             propagated.join(parents, "label", "left")
             .select(
                 "node",
@@ -845,28 +846,15 @@ def duplicate_clusters(
                     F.coalesce(F.col("_parent"), F.col("label")),
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .where(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # returning partially-propagated labels would silently split
-        # clusters (callers like deduplicate_clustered would keep
-        # non-representative rows) — fail loudly instead
-        raise RuntimeError(
-            "duplicate_clusters did not converge in %d passes; a "
-            "component's diameter exceeds max_iters — raise max_iters"
-            % max_iters
-        )
-    return labels.select(
+
+    # returning partially-propagated labels would silently split
+    # clusters (callers like deduplicate_clustered would keep
+    # non-representative rows) — fail loudly instead
+    return fixpoint(
+        step, labels, max_iters, unchanged("label"), "duplicate_clusters",
+        bound="max_iters",
+        hint="a component's diameter exceeds max_iters — raise max_iters",
+    ).select(
         F.col("node").alias(id_col), F.col("label").alias("cluster_id")
     )

@@ -32,12 +32,14 @@ honest).
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Dict, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.polygons import load_rings, polygon_cells
+from .fixpoint import checkpoint, fixpoint, frontier_empty
 from .spatial_join import DEFAULT_RES, _probe_parts, attach_probe_bboxes
 
 __all__ = ["polygon_distance_join", "nearest_polygon_join"]
@@ -192,8 +194,9 @@ def nearest_polygon_join(
     matchless probes advance to the doubled radius. Probes certify in
     the first round whose radius reaches their true nearest distance,
     so cost concentrates where density is low; a probe farther than
-    start_dist * 2^max_rounds from every polygon raises (bound the
-    domain deliberately rather than silently dropping rows).
+    start_dist * 2^max_rounds from every polygon raises
+    ``NonConvergenceError`` (bound the domain deliberately rather than
+    silently dropping rows).
 
     Probes with malformed or non-areal/non-line WKT drop up front
     (the family's P8 semantics) — they can never match in ANY round,
@@ -213,36 +216,30 @@ def nearest_polygon_join(
     # round (the distance join AND the isEmpty check), and without
     # this the parse pass above would re-run every time on top of
     # each round's own attach_probe_bboxes parse
-    pending = pending.join(parseable, id_col, "left_semi") \
-        .localCheckpoint(eager=True)
-    parts = []
-    d = float(start_dist)
-    for _ in range(int(max_rounds)):
+    pending = checkpoint(pending.join(parseable, id_col, "left_semi"))
+    w = Window.partitionBy(id_col).orderBy(
+        F.col("dist2").asc(), F.col("polygon_id").asc()
+    )
+
+    def round_(state):
+        parts, pending, d = state
         found = polygon_distance_join(
             pending, polygons, max_dist=d, res=res, id_col=id_col,
             wkt_col=wkt_col, rings_by_id=rings_by_id,
         )
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("dist2").asc(), F.col("polygon_id").asc()
-        )
-        best = (
+        best = checkpoint(
             found.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
-        ).localCheckpoint(eager=True)
-        parts.append(best)
+        )
         pending = pending.join(
             best.select(id_col), id_col, "left_anti"
         )
-        if pending.isEmpty():
-            break
-        d *= 2.0
-    else:
-        raise ValueError(
-            "nearest_polygon_join did not converge within "
-            "start_dist * 2^max_rounds — raise max_rounds/start_dist"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return parts + [best], pending, d * 2.0
+
+    parts = fixpoint(
+        round_, ([], pending, float(start_dist)), max_rounds,
+        frontier_empty, "nearest_polygon_join",
+        hint="raise max_rounds/start_dist",
+    )[0]
+    return reduce(DataFrame.unionByName, parts)

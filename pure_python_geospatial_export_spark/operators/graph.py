@@ -15,10 +15,11 @@ candidates into the distance table with one groupBy min, and the new
 frontier is the improved rows — per-round work is proportional to
 the wavefront, not the graph. Rounds are bounded by the hop diameter
 (min-relaxation with non-negative weights converges in <= V rounds);
-non-convergence within ``max_rounds`` raises (bound the domain
-deliberately). Each round localCheckpoints the distance relation —
-iterative lineage otherwise re-executes every prior round per action
-(the CC pointer-jumping lesson).
+non-convergence within ``max_rounds`` raises ``NonConvergenceError``
+(bound the domain deliberately). Every iterative operator here runs
+its rounds through ``operators.fixpoint``, which localCheckpoints each
+round's relations — iterative lineage otherwise re-executes every
+prior round per action (the CC pointer-jumping lesson).
 
 Cross-engine exactness: with INTEGER weights every distance is an
 integer and min-folds are order-free, so a DuckDB twin running FIXED
@@ -31,10 +32,12 @@ The reference has no graph surface; engine extension.
 
 from __future__ import annotations
 
-from typing import Sequence
+from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import checkpoint, fixpoint, frontier_empty, unchanged
 
 __all__ = [
     "core_numbers",
@@ -49,7 +52,7 @@ __all__ = [
 
 def shortest_paths(
     edges: DataFrame,
-    sources: Sequence[int],
+    sources: Iterable[int],
     src_col: str = "src",
     dst_col: str = "dst",
     weight_col: str = "w",
@@ -75,43 +78,73 @@ def shortest_paths(
             )
         )
     spark = edges.sparkSession
-    if not list(sources):
+    # materialise once: a one-shot iterable would be drained by the
+    # emptiness check below
+    sources = set(sources)
+    if not sources:
         raise ValueError("sources must be non-empty")
     from ..session import local_df
 
-    dist = local_df(
-        spark, [(int(s), 0) for s in set(sources)], ["node", "dist"]
-    ).localCheckpoint(eager=True)
-    frontier = dist
-
-    for _ in range(int(max_rounds)):
-        cand = (
-            frontier.join(e, frontier["node"] == e["_s"])
-            .select(
-                F.col("_d").alias("node"),
-                (F.col("dist") + F.col("_w")).alias("dist"),
-            )
-        )
-        new = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        # improved rows: new nodes, or strictly smaller distances
-        frontier = new.join(
-            dist.withColumnRenamed("dist", "_old"), "node", "left"
-        ).where(
-            F.col("_old").isNull() | (F.col("dist") < F.col("_old"))
-        ).select("node", "dist").localCheckpoint(eager=True)
-        dist = new
-        if frontier.isEmpty():
-            return dist
-    raise ValueError(
-        "shortest_paths did not converge within max_rounds=%d — "
-        "raise it (hop diameter bound) or check for negative "
-        "weights" % int(max_rounds)
+    seed = checkpoint(local_df(
+        spark, [(int(s), 0) for s in sources], ["node", "dist"]
+    ))
+    return _relax_min(
+        seed, e, "dist", max_rounds, "shortest_paths",
+        "raise it (hop diameter bound) or check for negative weights",
+        add="_w",
     )
+
+
+def _relax_min(seed, e, col, max_rounds, op, hint, add=None):
+    """Frontier-relaxed min propagation of ``col`` along the edges
+    ``e`` (``_s`` -> ``_d``) from the checkpointed ``(node, col)``
+    seed to its fixpoint: ``shortest_paths`` (``add`` = the weight
+    column) and the SCC forward coloring (labels, no addend). Each
+    round joins only the frontier against the edges, folds the
+    candidates in with one groupBy min, and the improved rows are the
+    next frontier."""
+    val = F.col(col) + F.col(add) if add else F.col(col)
+
+    def step(state):
+        best, frontier = state
+        cand = frontier.join(e, frontier["node"] == e["_s"]).select(
+            F.col("_d").alias("node"), val.alias(col)
+        )
+        new = checkpoint(
+            best.unionByName(cand).groupBy("node").agg(F.min(col).alias(col))
+        )
+        # improved rows: new nodes, or strictly smaller values
+        improved = new.join(
+            best.withColumnRenamed(col, "_old"), "node", "left"
+        ).where(
+            F.col("_old").isNull() | (F.col(col) < F.col("_old"))
+        ).select("node", col)
+        return new, checkpoint(improved)
+
+    return fixpoint(
+        step, (seed, seed), max_rounds, frontier_empty, op, hint=hint
+    )[0]
+
+
+def _weighted_edges(edges, src_col, dst_col, weight_col):
+    """Checkpointed ``(_s, _d, _w)`` edges repartitioned on ``_s``
+    (``_w`` = the BIGINT weight, 1 without ``weight_col``) and their
+    distinct endpoint set ``(node)`` — the shared front end of
+    pagerank and hits. Keys keep their input type: integer page ids
+    and string hosts (operators/web.host_rank) both work — only
+    equality is used."""
+    w = F.col(weight_col) if weight_col is not None else F.lit(1)
+    e = edges.select(
+        F.col(src_col).alias("_s"),
+        F.col(dst_col).alias("_d"),
+        w.cast("long").alias("_w"),
+    ).repartition("_s").localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("_s").alias("node"))
+        .unionByName(e.select(F.col("_d").alias("node")))
+        .distinct()
+    )
+    return e, nodes
 
 
 def pagerank(
@@ -177,24 +210,7 @@ def pagerank(
     if not (0 < num < den):
         raise ValueError("damping must satisfy 0 < num < den")
     exact = scale is not None
-    # keys keep their input type: integer page ids and string hosts
-    # (operators/web.host_rank) both work — only equality is used
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    e = edges.select(
-        F.col(src_col).alias("_s"),
-        F.col(dst_col).alias("_d"),
-        w.alias("_w"),
-    ).repartition("_s").localCheckpoint(eager=True)
-
-    nodes = (
-        e.select(F.col("_s").alias("node"))
-        .unionByName(e.select(F.col("_d").alias("node")))
-        .distinct()
-    )
+    e, nodes = _weighted_edges(edges, src_col, dst_col, weight_col)
     outdeg = e.groupBy(F.col("_s").alias("node")).agg(
         F.sum("_w").alias("_deg")
     )
@@ -234,27 +250,28 @@ def pagerank(
         r0 = F.when(is_seed, F.lit(k // n_base)).otherwise(
             F.lit(0)
         ).cast("long")
+        vote = F.expr("rank DIV _deg") * F.col("_w")
+        newrank = (
+            teleport
+            + F.expr("(%d * _sv2) DIV %d" % (num, den))
+        ).cast("long")
     else:
         d = float(num) / float(den)
         teleport = F.when(
             is_seed, F.lit((1.0 - d) / n_base)
         ).otherwise(F.lit(0.0))
         r0 = F.when(is_seed, F.lit(1.0 / n_base)).otherwise(F.lit(0.0))
-    ranks = nodes.select(
+        vote = F.col("rank") / F.col("_deg") * F.col("_w")
+        newrank = teleport + F.lit(d) * F.col("_sv2")
+    ranks = checkpoint(nodes.select(
         "node", "_deg", is_seed.alias("_seed"), r0.alias("rank")
-    ).localCheckpoint(eager=True)
+    ))
 
-    for _ in range(int(iterations)):
+    def step(ranks):
         dangling = ranks.where(F.col("_deg") == 0).agg(
             F.sum("rank").alias("_m")
         ).collect()[0]["_m"]
         dangling = dangling or (0 if exact else 0.0)
-        if exact:
-            dgl = dangling // n_base
-            vote = F.expr("rank DIV _deg") * F.col("_w")
-        else:
-            dgl = dangling / n_base
-            vote = F.col("rank") / F.col("_deg") * F.col("_w")
         contrib = (
             ranks.where(F.col("_deg") > 0)
             .join(e, ranks["node"] == e["_s"])
@@ -265,19 +282,14 @@ def pagerank(
         # dangling mass lands on the teleport support only (for
         # plain PageRank that is every node — dgl_col == dgl)
         if exact:
-            dgl_col = F.when(F.col("_seed"), F.lit(dgl)).otherwise(
-                F.lit(0)
-            ).cast("long")
-            newrank = (
-                teleport
-                + F.expr("(%d * _sv2) DIV %d" % (num, den))
-            ).cast("long")
+            dgl_col = F.when(
+                F.col("_seed"), F.lit(dangling // n_base)
+            ).otherwise(F.lit(0)).cast("long")
         else:
-            dgl_col = F.when(F.col("_seed"), F.lit(dgl)).otherwise(
-                F.lit(0.0)
-            )
-            newrank = teleport + F.lit(d) * F.col("_sv2")
-        ranks = (
+            dgl_col = F.when(
+                F.col("_seed"), F.lit(dangling / n_base)
+            ).otherwise(F.lit(0.0))
+        return checkpoint(
             nodes.withColumn("_seed", is_seed)
             .join(contrib, "node", "left")
             .withColumn(
@@ -291,9 +303,9 @@ def pagerank(
             .select(
                 "node", "_deg", "_seed", newrank.alias("rank")
             )
-            .localCheckpoint(eager=True)
         )
-    return ranks.select("node", "rank")
+
+    return fixpoint(step, ranks, iterations).select("node", "rank")
 
 
 def hits(
@@ -351,26 +363,12 @@ def hits(
     collects, the dangling-mass class). Scores localCheckpoint per
     round (iterative-lineage rule).
     """
+    if int(iterations) < 1:
+        raise ValueError("iterations must be >= 1")
     exact = scale is not None
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    e_src = edges.select(
-        F.col(src_col).alias("_s"),
-        F.col(dst_col).alias("_d"),
-        w.alias("_w"),
-    ).repartition("_s").localCheckpoint(eager=True)
+    e_src, nodes = _weighted_edges(edges, src_col, dst_col, weight_col)
     e_dst = e_src.repartition("_d").localCheckpoint(eager=True)
-
-    nodes = (
-        e_src.select(F.col("_s").alias("node"))
-        .unionByName(e_src.select(F.col("_d").alias("node")))
-        .distinct()
-        .repartition("node")
-        .localCheckpoint(eager=True)
-    )
+    nodes = nodes.repartition("node").localCheckpoint(eager=True)
     n = nodes.count()
     if n == 0:
         raise ValueError("edge relation is empty")
@@ -387,9 +385,7 @@ def hits(
     else:
         h0 = F.lit(1.0 / n)
         zero = F.lit(0.0)
-    hubs = nodes.select("node", h0.alias("hub")) \
-        .localCheckpoint(eager=True)
-    auths = None
+    hubs = checkpoint(nodes.select("node", h0.alias("hub")))
 
     def _step(score_df, score_col, e, join_key, out_key, out_col):
         """One half-round: push score along edges, renormalize L1."""
@@ -414,7 +410,7 @@ def hits(
             ).cast("long")
         else:
             norm = F.col("_raw") / F.lit(float(total))
-        return (
+        return checkpoint(
             nodes.join(raw, "node", "left")
             .select(
                 "node",
@@ -422,14 +418,13 @@ def hits(
                 .otherwise(norm)
                 .alias(out_col),
             )
-            .localCheckpoint(eager=True)
         )
 
-    for _ in range(int(iterations)):
-        auths = _step(hubs, "hub", e_src, "_s", "_d", "auth")
-        hubs = _step(auths, "auth", e_dst, "_d", "_s", "hub")
-    if auths is None:
-        raise ValueError("iterations must be >= 1")
+    def round_(state):
+        auths = _step(state[0], "hub", e_src, "_s", "_d", "auth")
+        return _step(auths, "auth", e_dst, "_d", "_s", "hub"), auths
+
+    hubs, auths = fixpoint(round_, (hubs, None), iterations)
     return hubs.join(auths, "node").select("node", "hub", "auth")
 
 
@@ -563,8 +558,8 @@ def strongly_connected_components(
        current color root's SCC (the source SCCs of the remaining
        condensation), so ``max_peels`` bounds the condensation-DAG
        depth, not the component count; real link graphs peel in a
-       handful of rounds. Non-convergence raises (the
-       shortest_paths contract).
+       handful of rounds. Non-convergence raises
+       ``NonConvergenceError`` (the shortest_paths contract).
 
     Per round everything is equi joins + groupBy min + frontier
     checks; labels only need a total order, so integer ids and
@@ -590,108 +585,63 @@ def strongly_connected_components(
     empty = nodes_all.select(
         "node", F.col("node").alias("scc")
     ).where(F.lit(False))
-    out = empty
-    remaining, e = nodes_all, e_all
-    for _ in range(int(max_peels)):
-        if remaining.isEmpty():
-            return out
-        # -- 1. forward min-color propagation (frontier-relaxed)
-        colors = remaining.select(
-            "node", F.col("node").alias("c")
-        ).localCheckpoint(eager=True)
-        frontier = colors
-        for _r in range(int(max_rounds)):
-            cand = (
-                frontier.join(e, frontier["node"] == e["_s"])
-                .select(F.col("_d").alias("node"), F.col("c"))
-            )
-            new = (
-                colors.unionByName(cand)
-                .groupBy("node")
-                .agg(F.min("c").alias("c"))
-                .localCheckpoint(eager=True)
-            )
-            frontier = (
-                new.join(
-                    colors.withColumnRenamed("c", "_old"), "node"
-                )
-                .where(F.col("c") < F.col("_old"))
-                .select("node", "c")
-                .localCheckpoint(eager=True)
-            )
-            colors = new
-            if frontier.isEmpty():
-                break
-        else:
-            raise ValueError(
-                "SCC color propagation did not converge within "
-                "max_rounds=%d — raise it (graph diameter bound)"
-                % int(max_rounds)
-            )
+
+    def peel(state):
+        out, remaining, e = state
+        # -- 1. forward min-color propagation (frontier-relaxed; every
+        # edge of e joins two remaining nodes, so no candidate is new)
+        colors = _relax_min(
+            checkpoint(remaining.select("node", F.col("node").alias("c"))),
+            e, "c", max_rounds, "SCC color propagation",
+            "raise it (graph diameter bound)",
+        )
         # -- 2. backward flag propagation within color classes
-        ec = (
-            e.join(
-                colors.select(
-                    F.col("node").alias("_s"), F.col("c").alias("_cs")
-                ),
-                "_s",
-            )
-            .join(
-                colors.select(
-                    F.col("node").alias("_d"), F.col("c").alias("_cd")
-                ),
-                "_d",
-            )
+        ec = checkpoint(
+            e.join(colors.toDF("_s", "_cs"), "_s")
+            .join(colors.toDF("_d", "_cd"), "_d")
             .where(F.col("_cs") == F.col("_cd"))
             .select("_s", "_d")
-            .localCheckpoint(eager=True)
         )
-        hit = colors.where(F.col("node") == F.col("c")) \
-            .localCheckpoint(eager=True)
-        frontier = hit
-        for _r in range(int(max_rounds)):
+
+        def sweep(state):
+            hit, frontier = state
+            if frontier is not hit:  # absorb last round's new members
+                hit = checkpoint(hit.unionByName(frontier))
             cand = (
                 frontier.join(ec, frontier["node"] == ec["_d"])
                 .select(F.col("_s").alias("node"))
                 .distinct()
                 .join(colors, "node")
             )
-            new_members = frontier = (
+            return hit, checkpoint(
                 cand.join(hit.select("node"), "node", "left_anti")
-                .localCheckpoint(eager=True)
             )
-            if frontier.isEmpty():
-                break
-            hit = hit.unionByName(new_members) \
-                .localCheckpoint(eager=True)
-        else:
-            raise ValueError(
-                "SCC backward sweep did not converge within "
-                "max_rounds=%d" % int(max_rounds)
-            )
-        labeled = hit.select("node", F.col("c").alias("scc"))
-        out = out.unionByName(labeled).localCheckpoint(eager=True)
+
+        roots = checkpoint(colors.where(F.col("node") == F.col("c")))
+        hit = fixpoint(
+            sweep, (roots, roots), max_rounds, frontier_empty,
+            "SCC backward sweep",
+        )[0]
+        labeled = hit.toDF("node", "scc")
         # -- 3. peel
-        remaining = (
-            remaining.join(hit.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
+        gone = hit.select("node")
+        return (
+            checkpoint(out.unionByName(labeled)),
+            checkpoint(remaining.join(gone, "node", "left_anti")),
+            checkpoint(
+                e.join(gone.toDF("_s"), "_s", "left_anti")
+                .join(gone.toDF("_d"), "_d", "left_anti")
+            ),
         )
-        e = (
-            e.join(
-                hit.select(F.col("node").alias("_s")), "_s", "left_anti"
-            )
-            .join(
-                hit.select(F.col("node").alias("_d")), "_d", "left_anti"
-            )
-            .localCheckpoint(eager=True)
-        )
-    if remaining.isEmpty():
-        return out
-    raise ValueError(
-        "SCC peeling did not converge within max_peels=%d — the "
-        "condensation DAG is deeper than expected; raise max_peels"
-        % int(max_peels)
-    )
+
+    if nodes_all.isEmpty():
+        return empty
+    return fixpoint(
+        peel, (empty, nodes_all, e_all), max_peels, frontier_empty,
+        "SCC peeling", bound="max_peels",
+        hint="the condensation DAG is deeper than expected; raise "
+        "max_peels",
+    )[0]
 
 
 def _undirected_adj(
@@ -751,13 +701,13 @@ def label_propagation(
     label))`` — no window, so no single-partition risk on hub nodes.
     """
     adj = _undirected_adj(edges, src_col, dst_col)
-    labels = (
+    labels = checkpoint(
         adj.select("node")
         .distinct()
         .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=True)
     )
-    for _ in range(int(iterations)):
+
+    def step(labels):
         # rename the label side's key: labels derives from adj, so the
         # shared exprId would make a bare "node" ambiguous
         counts = (
@@ -779,15 +729,15 @@ def label_propagation(
                 )
             ).alias("m")
         ).select("node", F.col("m.label").alias("_new"))
-        labels = (
+        return checkpoint(
             labels.join(best, "node", "left")
             .select(
                 "node",
                 F.coalesce("_new", "label").alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
-    return labels
+
+    return fixpoint(step, labels, iterations)
 
 
 def core_numbers(
@@ -817,9 +767,10 @@ def core_numbers(
     Per round: one join (values x adjacency on nbr), one per-node
     rank window (keyed by the join's grouping column), one max
     aggregate; per-round localCheckpoint + driver convergence check
-    (bounded 1-row collect). Raises after ``max_rounds`` without a
-    fixpoint (cannot happen on a finite graph with max_rounds >=
-    rounds-to-converge; the guard catches caller misuse).
+    (bounded 1-row collect). Raises ``NonConvergenceError`` after
+    ``max_rounds`` without a fixpoint (cannot happen on a finite
+    graph with max_rounds >= rounds-to-converge; the guard catches
+    caller misuse).
 
     Scale contract: the rank window concentrates each node's
     neighbor rows in one task, so per-task work is O(max degree) —
@@ -832,15 +783,14 @@ def core_numbers(
     from pyspark.sql import Window
 
     adj = _undirected_adj(edges, src_col, dst_col)
-    core = (
-        adj.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("core"))
-        .localCheckpoint(eager=True)
+    core = checkpoint(
+        adj.groupBy("node").agg(F.count(F.lit(1)).alias("core"))
     )
     w = Window.partitionBy("node").orderBy(
         F.desc("val"), F.col("nbr")
     )
-    for _ in range(int(max_rounds)):
+
+    def step(core):
         nv = adj.join(
             core.select(F.col("node").alias("_cn"), "core"),
             F.col("nbr") == F.col("_cn"),
@@ -858,23 +808,13 @@ def core_numbers(
                 ).alias("h")
             )
         )
-        new_core = (
+        return checkpoint(
             core.join(h, "node")
             .select("node", F.least("core", "h").alias("core"))
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            new_core.alias("n")
-            .join(core.alias("o"), "node")
-            .where(F.col("n.core") != F.col("o.core"))
-            .limit(1)
-            .count()
-        )
-        core = new_core
-        if changed == 0:
-            return core
-    raise RuntimeError(
-        "core_numbers did not converge within max_rounds=%d — "
-        "raise it (bounded by the graph's degeneracy ordering depth)"
-        % int(max_rounds)
+
+    return fixpoint(
+        step, core, max_rounds, unchanged("core"), "core_numbers",
+        hint="raise it (bounded by the graph's degeneracy ordering "
+        "depth)",
     )

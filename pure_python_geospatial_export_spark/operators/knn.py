@@ -19,10 +19,13 @@ brute-force oracle for validation and small dims.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.geom_udfs import grid_xy_cols
+from .fixpoint import fixpoint, frontier_empty
 
 
 def _with_xy(df: DataFrame, res: int, lon: str, lat: str) -> DataFrame:
@@ -202,11 +205,8 @@ def knn_join_complete(
         # loop would exhaust its rounds instead of converging
         raise ValueError("ring must be >= 1, got %d" % int(ring))
 
-    pending = left
-    parts = []
-    r = int(ring)
-    # doubling reaches full cover in <= log2(n)+2 rounds from ring>=1
-    for _ in range(res + 3):
+    def round_(state):
+        parts, pending, r = state
         knn = knn_join(pending, right, id_left, id_right, k=k,
                        res=res, ring=r, lon=lon, lat=lat,
                        metric="euclidean_sq")
@@ -253,17 +253,19 @@ def knn_join_complete(
             ).alias("_ok"),
         )
         ok_ids = decided.where("_ok").select(id_left)
-        parts.append(knn.join(ok_ids, id_left, "left_semi"))
-        pending = pending.join(ok_ids, id_left, "left_anti")
-        if pending.isEmpty():
-            break
-        r *= 2
-    else:  # pragma: no cover - full cover certifies every left
-        raise AssertionError("ring doubling failed to converge")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        return (
+            parts + [knn.join(ok_ids, id_left, "left_semi")],
+            pending.join(ok_ids, id_left, "left_anti"),
+            r * 2,
+        )
+
+    # doubling reaches full cover in <= log2(n)+2 rounds from ring>=1,
+    # which certifies every left, so the bound never trips
+    parts = fixpoint(
+        round_, ([], left, int(ring)), res + 3, frontier_empty,
+        "knn_join_complete", bound="res+3",
+    )[0]
+    return reduce(DataFrame.unionByName, parts)
 
 
 def radius_join(

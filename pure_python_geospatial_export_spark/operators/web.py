@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions import html as H
 from ..functions import urls as U
+from .fixpoint import checkpoint, fixpoint
 from .graph import hits, pagerank
 
 __all__ = [
@@ -284,7 +285,8 @@ def resolve_redirects(
         .localCheckpoint(eager=True)
     )
     rounds = max(1, (int(max_hops) - 1).bit_length())
-    for _ in range(rounds):
+
+    def step(p):
         a = p.select(
             F.col("node"), F.col("ptr").alias("_mid"), F.col("h")
         )
@@ -293,15 +295,16 @@ def resolve_redirects(
             F.col("ptr").alias("_p2"),
             F.col("h").alias("_h2"),
         )
-        p = (
+        return checkpoint(
             a.join(b, "_mid")
             .select(
                 "node",
                 F.col("_p2").alias("ptr"),
                 (F.col("h") + F.col("_h2")).alias("h"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    p = fixpoint(step, p, rounds)
     # only redirect SOURCES get a row; resolved iff the final pointer
     # has no outgoing redirect AND the chain fit in max_hops
     out = (
