@@ -5,7 +5,8 @@
 SURVEY.md §2 (+ the corpus-curation operators); ``oracle_sql()`` gives the
 DuckDB-equivalent ANSI SQL for every SQL-expressible query. Column names
 and arithmetic are mirrored exactly so the driver's value-hash compare is
-bit-level.
+bit-level. Each query is declared once, by ``@query`` on its body with its
+oracle defined just above; the contract functions filter that registry.
 
 Doc points derive from the pinned sha256 formula
 (pure_python_geospatial_export_spark/functions/points.py) applied to a
@@ -17,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -165,486 +167,125 @@ def _golden_wkts():
 
 
 # ---------------------------------------------------------------------------
-# queries
+# query registry: each query is declared once, by @query at its body
 # ---------------------------------------------------------------------------
 
 
-def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _docs_points(spark, sf_dir)
-    return (
-        spatial_join(pts, _layer_df(spark), res=7)
-        .select("doc_id", "name")
-    )
+@dataclass(frozen=True)
+class Query:
+    """One registered query: its Spark body and its DuckDB twin.
+
+    ``oracle`` is the twin's SQL text, or a zero-arg callable that builds
+    it: executors import this module from the --py-files zip, so no oracle
+    that needs code (or a fixture file) is built at import time.
+    ``exchanges`` is the exact number of shuffle exchanges in the query's
+    executed plan under the default conf, locked by
+    tests/test_plan_regressions.py (None: no budget declared).
+    """
+
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str | Callable[[], str]
+    folded: bool
+    headline: bool
+    exchanges: int | None
+
+    def oracle_sql(self) -> str:
+        return self.oracle() if callable(self.oracle) else self.oracle
 
 
-# Geodesic layer: great-circle-edge polygons (one strongly bulging
-# triangle, one holed square). Single source of truth for the Spark
-# layer (WKT) and the generated SQL oracle.
-GEODESIC_LAYER = [
-    (1, "bulge_north", [
-        [[-60.0, 45.0], [60.0, 45.0], [0.0, 80.0], [-60.0, 45.0]],
-    ]),
-    (2, "holed_south", [
-        [[-30.0, -40.0], [10.0, -40.0], [10.0, -10.0], [-30.0, -10.0],
-         [-30.0, -40.0]],
-        [[-20.0, -30.0], [-5.0, -30.0], [-5.0, -20.0], [-20.0, -20.0],
-         [-20.0, -30.0]],
-    ]),
-]
+# Filled in definition order, which is the driver-facing order: the
+# never-/least-recently-driver-verified entries lead, so a row cap or
+# timeout in the driver's checker can't starve them again.
+REGISTRY: dict[str, Query] = {}
 
 
-def _geodesic_layer_df(spark: SparkSession) -> DataFrame:
-    from pure_python_geospatial_export_spark.session import local_df
-    rows = [
-        (pid, name,
-         wktmod.dumps(dict(type="Polygon", coordinates=rings)))
-        for pid, name, rings in GEODESIC_LAYER
-    ]
-    return local_df(spark, rows, ["polygon_id", "name", "wkt"])
+def query(name: str, *, oracle: str | Callable[[], str],
+          folded: bool = False, headline: bool = False,
+          exchanges: int | None = None):
+    """Register the decorated ``(spark, sf_dir) -> DataFrame`` body.
+
+    ``folded`` queries have a driver output derivable from (or equal to)
+    another registered query's, or are genuinely new operators added after
+    the driver-facing registry reached the driver's observed ~50-row
+    artifact ceiling (VERDICT r3 #1). They stay first-class:
+    extra_queries()/extra_oracle_sql() feed the local bit-level parity
+    gate in tests/test_oracle_parity.py. ``headline`` queries are timed by
+    bench.py.
+    """
+    if not (isinstance(oracle, str) or callable(oracle)):
+        raise TypeError("query %r: oracle must be SQL text or a zero-arg "
+                        "callable, got %r" % (name, oracle))
+
+    def register(fn):
+        if name in REGISTRY:
+            raise ValueError("query %r is already registered" % name)
+        REGISTRY[name] = Query(name, fn, oracle, folded, headline, exchanges)
+        return fn
+
+    return register
 
 
-def _q_pip_join_geodesic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _docs_points(spark, sf_dir)
-    return (
-        spatial_join(pts, _geodesic_layer_df(spark), res=6,
-                     edges="geodesic")
-        .select("doc_id", "name")
-    )
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {n: q.fn for n, q in REGISTRY.items() if not q.folded}
 
 
-def _geodesic_oracle_sql() -> str:
-    """Generate the DuckDB twin of the geodesic join: per polygon, the
-    gnomonic projection constants (center + tangent basis + projected
-    ring vertices) are computed here in numpy and EMBEDDED as literals;
-    the SQL projects each point and counts edge crossings (even-odd).
-    Straight lines in the projected plane ARE the great-circle edges, so
-    this is exact; engine/DuckDB trig may differ by ulps, which can only
-    flip measure-zero boundary points (none in the derived-point
-    fixture)."""
-    from pure_python_geospatial_export_spark.geo import geodesic as geod
+def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Folded (driver-redundant) queries, still bit-verified locally."""
+    return {n: q.fn for n, q in REGISTRY.items() if q.folded}
 
-    parts = []
-    for _pid, name, rings in GEODESIC_LAYER:
-        # plain python floats: %r of a numpy scalar is not a SQL literal
-        # under numpy >= 2.0 ("np.float64(...)")
-        c = [float(v) for v in geod.gnomonic_center(rings)]
-        e1, e2 = geod._tangent_basis(
-            __import__("numpy").asarray(c, dtype="float64")
+
+def oracle_sql() -> dict[str, str]:
+    return {n: q.oracle_sql() for n, q in REGISTRY.items() if not q.folded}
+
+
+def extra_oracle_sql() -> dict[str, str]:
+    """Oracle twins for the folded queries (local parity gate only)."""
+    return {n: q.oracle_sql() for n, q in REGISTRY.items() if q.folded}
+
+
+# ---------------------------------------------------------------------------
+# queries, in registry order
+# ---------------------------------------------------------------------------
+
+
+# LSH internals (blake2b minhash bands / random-plane sign buckets)
+# are not SQL-expressible, but on these fixtures the candidate stage
+# has recall 1 (deterministic — fixed seeds, fixed data, planted
+# near-dups far above the threshold), so the OUTPUT equals the exact
+# all-pairs threshold set, which DuckDB can compute directly. The
+# shingling (strip/split/3-gram/distinct) mirrors the Arrow kernel.
+# exact all-pairs n-gram Jaccard on a bounded subset (the no-LSH
+# small-data path gets its own driver-level evidence)
+_JACCARD_PAIRS_SQL = """
+        WITH alldocs AS (
+          SELECT doc_id, text FROM documents WHERE doc_id < 120
+          UNION ALL
+          SELECT doc_id + 100000 AS doc_id, text || ' zzzz' AS text
+          FROM documents WHERE doc_id < 120
+        ), toks AS (
+          SELECT doc_id, text,
+                 regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM alldocs
+        ), sh AS (
+          SELECT doc_id,
+            CASE WHEN len(t) >= 3 THEN
+              list_distinct(list_transform(range(1, len(t) - 1),
+                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+            ELSE [text] END AS shingles
+          FROM toks
         )
-        e1 = [float(v) for v in e1]
-        e2 = [float(v) for v in e2]
-        proj_rings = []
-        for r in rings:
-            arr = __import__("numpy").asarray(r, dtype="float64")[:, :2]
-            rx, ry, front = geod.gnomonic_project(
-                geod.unit_vectors(arr[:, 0], arr[:, 1]),
-                __import__("numpy").asarray(c, dtype="float64"),
-            )
-            proj_rings.append(list(zip(rx.tolist(), ry.tolist())))
-
-        terms = []
-        for pr in proj_rings:
-            for (x1, y1), (x2, y2) in zip(pr[:-1], pr[1:]):
-                if y1 == y2:
-                    continue  # horizontal edge: never crosses the ray
-                terms.append(
-                    "CASE WHEN ((%(y1)r <= py AND %(y2)r > py) OR "
-                    "(%(y2)r <= py AND %(y1)r > py)) AND "
-                    "px < %(x1)r + (py - %(y1)r) * %(dx)r / %(dy)r "
-                    "THEN 1 ELSE 0 END"
-                    % {"x1": x1, "y1": y1, "y2": y2,
-                       "dx": x2 - x1, "dy": y2 - y1}
-                )
-        proj = (
-            "SELECT doc_id, "
-            "(vx*%(e1x)r + vy*%(e1y)r + vz*%(e1z)r) / d AS px, "
-            "(vx*%(e2x)r + vy*%(e2y)r + vz*%(e2z)r) / d AS py, "
-            "d > 1e-12 AS front FROM ("
-            "SELECT doc_id, vx, vy, vz, "
-            "vx*%(cx)r + vy*%(cy)r + vz*%(cz)r AS d FROM ("
-            "SELECT doc_id, "
-            "cos(radians(lat)) * cos(radians(lon)) AS vx, "
-            "cos(radians(lat)) * sin(radians(lon)) AS vy, "
-            "sin(radians(lat)) AS vz FROM pts))"
-            % {"e1x": e1[0], "e1y": e1[1], "e1z": e1[2],
-               "e2x": e2[0], "e2y": e2[1], "e2z": e2[2],
-               "cx": c[0], "cy": c[1], "cz": c[2]}
-        )
-        parts.append(
-            "SELECT doc_id, '%s' AS name FROM (%s) "
-            "WHERE front AND ((%s) %% 2 = 1)"
-            % (name, proj, " + ".join(terms))
-        )
-    return PTS_CTE + " " + " UNION ALL ".join(parts)
-
-
-def _geojson_lines_sql() -> str:
-    """DuckDB twin of the GeoJSON feature lines: both engines print
-    doubles shortest-round-trip (python repr == DuckDB VARCHAR cast), so
-    the feature string can be assembled with plain concatenation —
-    verified byte-identical on the fixture."""
-    return PTS_CTE + (
-        ", langd AS (SELECT doc_id, lang FROM documents) "
-        "SELECT '{\"type\": \"Feature\", \"geometry\": "
-        "{\"type\": \"Point\", \"coordinates\": [' "
-        "|| CAST(p.lon AS VARCHAR) || ', ' || CAST(p.lat AS VARCHAR) || "
-        "']}, \"properties\": {\"doc_id\": ' || "
-        "CAST(p.doc_id AS VARCHAR) || ', \"lang\": \"' || l.lang || "
-        "'\"}}' AS line "
-        "FROM pts p JOIN langd l USING (doc_id) WHERE p.doc_id < 100"
-    )
-
-
-def _q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # same semantics and same oracle as pip_join — runs the hot-cell
-    # SALTED SHUFFLE strategy instead of the broadcast cover, so the
-    # driver gate proves the skew path end to end (threshold forced low
-    # enough that salting actually engages on the fixture)
-    pts = _docs_points(spark, sf_dir)
-    return (
-        spatial_join(pts, _layer_df(spark), res=7,
-                     strategy="shuffle_salted", hot_cell_threshold=20)
-        .select("doc_id", "name")
-    )
-
-
-def _q_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE pass over the points: the 18 bbox predicates become a broadcast
-    # nested-loop join against an inline bbox dimension (18 rows), instead
-    # of the former 18-branch union (18 scans of the same table). The
-    # predicate is the same P3 bbox-contains column expression per pair.
-    from pure_python_geospatial_export_spark.session import local_df
-
-    pts = _docs_points(spark, sf_dir)
-    boxes = local_df(
-        spark,
-        [(name, x0, y0, x1, y1)
-         for _pid, name, (x0, y0, x1, y1), _hole in _rects()],
-        ["name", "_x0", "_y0", "_x1", "_y1"],
-    )
-    hits = pts.join(
-        F.broadcast(boxes),
-        (F.col("lon") >= F.col("_x0")) & (F.col("lon") <= F.col("_x1"))
-        & (F.col("lat") >= F.col("_y0")) & (F.col("lat") <= F.col("_y1")),
-    )
-    return hits.groupBy("name").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
-# Seam-crossing polygon (RFC 7946 short-way edges: 150E..150W band with a
-# 170E..170W hole) — single source of truth for the Spark layer and the
-# SQL oracle. Exercises the planar antimeridian lobe split end to end
-# (cover seeding + kernel refine on both sides of +-180).
-ANTIMERIDIAN_WKT = (
-    "POLYGON ((150 20, 150 70, -150 70, -150 20, 150 20), "
-    "(170 40, 170 55, -170 55, -170 40, 170 40))"
-)
-
-
-def _q_pip_join_antimeridian(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.session import local_df
-
-    pts = _docs_points(spark, sf_dir)
-    layer = local_df(spark, [(1, "seam_band", ANTIMERIDIAN_WKT)],
-                     ["polygon_id", "name", "wkt"])
-    return (
-        spatial_join(pts, layer, res=6)
-        .select("doc_id", "name")
-    )
-
-
-def _q_polygon_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # areal probes: a square of doc-dependent size around each doc
-    # point, joined to the rectangle layer by the exact "intersects"
-    # predicate. Rectangle-vs-rectangle(-with-hole) intersects is pure
-    # interval arithmetic, so the oracle mirrors it in SQL: overlap the
-    # outer box, minus probes STRICTLY inside a hole's open interior
-    # (boundary contact counts as intersecting on both sides). Probe
-    # coords round to 6 decimals before the WKT text so the parsed
-    # doubles equal the oracle's round(x, 6).
-    from pure_python_geospatial_export_spark.operators.spatial_join import (
-        polygon_overlap_join,
-    )
-
-    pts = _docs_points(spark, sf_dir)
-    half = F.lit(0.2) + (F.col("doc_id") % 4).cast("double") * F.lit(0.15)
-    x0 = F.round(F.col("lon") - half, 6)
-    x1 = F.round(F.col("lon") + half, 6)
-    y0 = F.round(F.col("lat") - half, 6)
-    y1 = F.round(F.col("lat") + half, 6)
-    probe_wkt = F.format_string(
-        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-        "%.6f %.6f))",
-        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
-    )
-    probes = pts.select("doc_id", probe_wkt.alias("wkt"))
-    return polygon_overlap_join(
-        probes, _layer_df(spark), res=6, id_col="doc_id"
-    ).select("doc_id", "name")
-
-
-# Pole-encircling rings (planar polar-cap convention): a ring winding
-# once around in longitude bounds the cap on the side of its mean
-# latitude. The Antarctic ring winds eastward, the Arctic ring westward —
-# both directions must behave identically under even-odd parity.
-POLAR_CAP_WKTS = [
-    (1, "antarctic", "POLYGON ((" + ", ".join(
-        "%d -70" % x for x in list(range(0, 181, 30))
-        + list(range(-150, 1, 30))
-    ) + "))"),
-    (2, "arctic", "POLYGON ((" + ", ".join(
-        "%d 75" % x for x in list(range(0, -181, -30))
-        + list(range(150, -1, -30))
-    ) + "))"),
-]
-
-
-def _q_pip_join_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.session import local_df
-
-    pts = _docs_points(spark, sf_dir)
-    layer = local_df(spark, POLAR_CAP_WKTS,
-                     ["polygon_id", "name", "wkt"])
-    return (
-        spatial_join(pts, layer, res=6)
-        .select("doc_id", "name")
-    )
-
-
-def _q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _docs_points(spark, sf_dir)
-    return pts.select(
-        "doc_id",
-        cell_id_col(F.col("lon"), F.col("lat"), 6).alias("tile_id"),
-    )
-
-
-def _q_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _docs_points(spark, sf_dir)
-    return tile_stats(pts, 5).select(
-        "tile_id", "n_points", "xmin", "ymin", "xmax", "ymax"
-    )
-
-
-def _q_mercator_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.tiles import (
-        mercator_tile_cols,
-        quadkey_col,
-    )
-    pts = _docs_points(spark, sf_dir)
-    tx, ty = mercator_tile_cols(F.col("lon"), F.col("lat"), 6)
-    return pts.select(
-        "doc_id", tx.alias("tx"), ty.alias("ty")
-    ).withColumn("quadkey", quadkey_col(F.col("tx"), F.col("ty"), 6))
-
-
-def _q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.tiles import (
-        tile_pyramid,
-    )
-    pts = _docs_points(spark, sf_dir)
-    base = tile_stats(pts, 4)
-    return tile_pyramid(base, 4, 2).select(
-        "level", "tile_id", F.col("n_points").cast("long").alias(
-            "n_points"),
-        "xmin", "ymin", "xmax", "ymax",
-    )
-
-
-def _q_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _docs_points(spark, sf_dir)
-    nbrs = pts.select(F.col("doc_id").alias("nbr_id"), "lon", "lat")
-    return knn_join(pts, nbrs, "doc_id", "nbr_id", k=3, res=3, ring=1)
-
-
-def _q_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    pts = _docs_points(spark, sf_dir)
-    nbrs = pts.select(F.col("doc_id").alias("nbr_id"), "lon", "lat")
-    return knn_exact(pts, nbrs, "doc_id", "nbr_id", k=2)
-
-
-def _q_knn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-completion grid kNN (operators/knn.knn_join_complete):
-    certificate + ring doubling. res=2 is deliberately coarse so
-    ring-1 certificates FAIL for many lefts and the expansion path is
-    what the oracle verifies — the result must equal brute-force kNN
-    bit for bit."""
-    pts = _docs_points(spark, sf_dir)
-    nbrs = pts.select(F.col("doc_id").alias("nbr_id"), "lon", "lat")
-    return knn_join_complete(pts, nbrs, "doc_id", "nbr_id", k=3,
-                             res=2, ring=1)
-
-
-def _both_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "text")
-    return docs.unionByName(
-        docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
-    )
-
-
-def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.exact_duplicates(_both_docs(spark, sf_dir), "doc_id",
-                                  "text")
-
-
-def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return docs.select(
-        "doc_id", T.fingerprint(F.col("text")).alias("fp")
-    )
-
-
-def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return docs.select(
-        "doc_id",
-        T.token_count(F.col("text")).alias("n_tokens"),
-        T.stopword_ratio(F.col("text")).alias("stop_ratio"),
-        T.punct_ratio(F.col("text")).alias("punct_ratio"),
-        T.quality_score(F.col("text")).alias("quality"),
-    )
-
-
-def _q_lang_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return docs.select(
-        "doc_id", T.lang_id(F.col("text")).alias("lang_pred")
-    )
-
-
-def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-    )
-    return similarity.cosine_topk(
-        emb, queries, "vec_id", "embedding", "query_id", "qvec", k=5
-    )
-
-
-def _q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # IVF-PQ end to end (build -> probe -> ADC shortlist -> int8-SQ
-    # intermediate rerank -> exact rerank): with every inverted list
-    # probed, rerank >= corpus size, AND sq_keep >= corpus size, the
-    # served top-k is EXACTLY the brute-force cosine top-k BY
-    # CONSTRUCTION — every approximate stage runs but keeps its whole
-    # candidate set, so no ADC/int8 quantization error can evict a
-    # true neighbor (the LSH recall-1 fixture pattern). A small
-    # sq_keep would instead rest on the fixture's kth-vs-sq_keep-th
-    # cosine gap exceeding the int8 error — empirical, and silently
-    # breakable by a fixture regeneration. The selective-sq_keep
-    # accuracy trade is pinned by scripts/ann_recall_bench.py and the
-    # unit recall tests, not the bit oracle. Exercises the whole index
-    # lifecycle including the sq.parquet relation.
-    from pure_python_geospatial_export_spark.operators.similarity import (
-        build_ivfpq_index,
-        ivfpq_topk_indexed,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    queries = emb.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qvec"),
-    )
-    base = _scratch_dir("ivfpq", sf_dir)
-    build_ivfpq_index(
-        emb, "vec_id", "embedding", base, n_centroids=8,
-        m_subspaces=8, lloyd_iters=2,
-    )
-    return ivfpq_topk_indexed(
-        spark, base, queries, emb, "vec_id", "embedding",
-        "query_id", "qvec", k=5, n_probe=8, rerank=10000,
-        sq_keep=10000,
-    )
-
-
-def _q_events_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window-function coverage (SURVEY §2.5): per-user running event
-    count and cumulative value, plus previous event type (lag)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.row_number().over(w).cast("int").alias("seq"),
-        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
-        .over(w).alias("running_cents"),
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-
-
-def _q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON column extraction: sum of props.k per event_type."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.withColumn(
-            "k", F.get_json_object(F.col("props"), "$.k").cast("long")
-        )
-        .groupBy("event_type")
-        .agg(
-            F.sum("k").alias("sum_k"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
-def _q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return docs.select(
-        "doc_id",
-        T.bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
-    )
-
-
-def _q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join: each 'error' event picks up the latest prior (or
-    simultaneous) 'click' by the same user."""
-    from pure_python_geospatial_export_spark.operators.asof import asof_join
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    errors = ev.where(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_id"),
-        F.floor(F.col("value") * 100.0 + 0.5).cast("long")
-        .alias("click_cents"),
-    )
-    out = asof_join(errors, clicks, key="user_id",
-                    right_cols=["click_id", "click_cents"])
-    return out.select(
-        "event_id", "user_id",
-        F.col("asof_click_id").alias("prev_click_id"),
-        F.col("asof_click_cents").alias("prev_click_cents"),
-    )
-
-
-def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.withColumn("window_start", F.date_trunc("hour", F.col("ts")))
-        .groupBy("window_start", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                F.floor(F.col("value") * 100.0 + 0.5).cast("long")
-            ).alias("sum_cents"),
-        )
-    )
-
-
-def _q_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.session import local_df
-    df = local_df(spark, _golden_wkts(), ["case_id", "wkt"])
-    return df.select(
-        "case_id", wkt_roundtrip(F.col("wkt")).alias("wkt_out")
-    )
-
-
+        SELECT id_a, id_b, jaccard FROM (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+              / CAST(len(list_distinct(
+                    list_concat(a.shingles, b.shingles))) AS DOUBLE)
+              AS jaccard
+          FROM sh a, sh b WHERE a.doc_id < b.doc_id
+        ) WHERE jaccard >= 0.5"""
+
+
+@query("jaccard_pairs", oracle=_JACCARD_PAIRS_SQL)
 def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same planted-twin fixture as minhash_pairs (suffix-appended copies
     # are true near-dups); natural word-salad 3-gram overlap tops out
@@ -665,6 +306,39 @@ def _q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_MINHASH_PAIRS_SQL = """
+        WITH alldocs AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 100000 AS doc_id, text || ' zzzz' AS text
+          FROM documents
+        ), toks AS (
+          SELECT doc_id, text,
+                 regexp_split_to_array(trim(text), '\\s+') AS t
+          FROM alldocs
+        ), sh AS (
+          -- mirrors the Spark kernel's short-doc fallback: fewer than 3
+          -- tokens -> the whole text is the single shingle (previously
+          -- range(1, len-1) silently dropped such docs, making the gate
+          -- depend on the fixture containing none)
+          SELECT doc_id,
+            CASE WHEN len(t) >= 3 THEN
+              list_distinct(list_transform(range(1, len(t) - 1),
+                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
+            ELSE [text] END AS shingles
+          FROM toks
+        )
+        SELECT id_a, id_b, jaccard FROM (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+            CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+              / CAST(len(list_distinct(
+                    list_concat(a.shingles, b.shingles))) AS DOUBLE)
+              AS jaccard
+          FROM sh a, sh b WHERE a.doc_id < b.doc_id
+        ) WHERE jaccard >= 0.5"""
+
+
+@query("minhash_pairs", oracle=_MINHASH_PAIRS_SQL, headline=True)
 def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dup fixture: every doc + a one-token-appended mutation
     docs = spark.read.parquet(
@@ -679,6 +353,44 @@ def _q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# SimHash mirrors across engines because the token hash is md5:
+# DuckDB's md5_number_upper reads the same 8 bytes little-endian — a
+# fixed bit permutation of Spark's conv() big-endian read, and
+# xor/bit_count are permutation-invariant, so hamming distances and
+# the <=3 pair set agree exactly. The 4x16-bit chunk candidate join
+# is COMPLETE for hamming<=3 (pigeonhole), so Spark's output equals
+# this all-pairs filter.
+_SIMHASH_PAIRS_SQL = """
+        WITH alldocs AS (
+          SELECT doc_id, text FROM documents
+          UNION ALL
+          SELECT doc_id + 100000 AS doc_id, text || ' zzzz' AS text
+          FROM documents
+        ), tok AS (
+          SELECT doc_id,
+            unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
+          FROM alldocs
+        ), votes AS (
+          SELECT doc_id, r.b,
+            SUM(CASE WHEN (md5_number_upper(t) >> r.b) & 1 = 1
+                THEN 1 ELSE -1 END) AS v
+          FROM tok CROSS JOIN range(0, 64) r(b)
+          GROUP BY doc_id, r.b
+        ), sim AS (
+          SELECT doc_id,
+            CAST(SUM(CASE WHEN v >= 0
+                 THEN (CAST(1 AS UBIGINT) << b)
+                 ELSE CAST(0 AS UBIGINT) END) AS UBIGINT) AS s
+          FROM votes GROUP BY doc_id
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+          CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
+        FROM sim a, sim b
+        WHERE a.doc_id < b.doc_id
+          AND bit_count(xor(a.s, b.s)) <= 3"""
+
+
+@query("simhash_pairs", oracle=_SIMHASH_PAIRS_SQL)
 def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(
         os.path.join(sf_dir, "documents.parquet")
@@ -691,6 +403,29 @@ def _q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_near_pairs(sim, "doc_id", max_hamming=3)
 
 
+_EMBEDDING_NEAR_DUP_SQL = """
+        WITH base AS (
+          SELECT vec_id,
+            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+          FROM embeddings
+        ), planted AS (
+          SELECT vec_id + 100000 AS vec_id,
+            list_transform(embedding,
+                           x -> CAST(x AS DOUBLE) + 0.01) AS vec
+          FROM embeddings WHERE vec_id < 150
+        ), u AS (
+          SELECT * FROM base UNION ALL SELECT * FROM planted
+        )
+        SELECT id_a, id_b, score FROM (
+          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+            list_dot_product(a.vec, b.vec)
+              / (sqrt(list_dot_product(a.vec, a.vec))
+                 * sqrt(list_dot_product(b.vec, b.vec))) AS score
+          FROM u a, u b WHERE a.vec_id < b.vec_id
+        ) WHERE score >= 0.99"""
+
+
+@query("embedding_near_dup", oracle=_EMBEDDING_NEAR_DUP_SQL)
 def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-dup fixture: every base vector + 150 perturbed copies
     # (component +0.01 -> cosine ~0.995-0.997 vs the base). The banded
@@ -714,831 +449,24 @@ def _q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.tiles import (
-        zonal_stats,
-    )
-    pts = _docs_points(spark, sf_dir).withColumn(
-        "v", (F.col("doc_id") % 100).cast("long")
-    )
-    return zonal_stats(pts, _layer_df(spark), "v", res=7)
-
-
-def _q_zonal_geotiff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Real-raster zonal statistics (round-5): a deterministic world
-    # raster (288x144, 1.25-degree pixels, v = (px*7 + py*13) % 1000)
-    # is encoded as an actual GeoTIFF — tiled + deflate + horizontal
-    # predictor, the full codec surface — written to scratch, read
-    # back through the binaryFile Spark source, and joined to the
-    # polygon layer. The oracle recomputes the closed form with
-    # generate_series, so the whole encode -> decode -> pixel-center
-    # georeference -> PIP join -> aggregate pipeline is bit-checked.
-    # Pixel centers land on *.625/*.375 degree offsets; every rect
-    # boundary sits on a different residue mod 1.25, so no center is
-    # ON a boundary and ray-cast vs closed-rect semantics agree.
-    import atexit
-    import shutil
-    import tempfile
-
-    import numpy as np
-
-    from pure_python_geospatial_export_spark.operators.tiles import (
-        zonal_stats,
-    )
-    from pure_python_geospatial_export_spark.sources.geotiff import (
-        encode_geotiff,
-        read_geotiff,
-    )
-
-    w, h = 288, 144
-    px = np.arange(w, dtype=np.int64)[None, :]
-    py = np.arange(h, dtype=np.int64)[:, None]
-    band = ((px * 7 + py * 13) % 1000).astype(np.int32)
-    buf = encode_geotiff(
-        band, (-180.0, -90.0, 180.0, 90.0),
-        compression="deflate", tiled=True, tile_size=48, predictor=2,
-    )
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "ppge_geotiff-uid%d-pid%d" % (os.getuid(), os.getpid()),
-    )
-    os.makedirs(base, exist_ok=True)
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    path = os.path.join(base, "world.tif")
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(buf)
-    os.replace(tmp, path)
-
-    pixels = read_geotiff(spark, path).withColumn(
-        "v", F.col("value").cast("long")
-    )
-    return zonal_stats(pixels, _layer_df(spark), "v", res=7)
-
-
-def _q_top_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        top_keys_per_group,
-    )
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
-    df = pts.join(docs.select("doc_id", "source"), "doc_id").withColumn(
-        "cell_id", cell_id_col(F.col("lon"), F.col("lat"), 1)
-    )
-    return top_keys_per_group(df, ["cell_id"], "source", k=3).select(
-        "cell_id", "source", "n", "rank"
-    )
-
-
-def _q_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.curate import (
-        stratified_hash_sample,
-    )
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "lang")
-    return stratified_hash_sample(
-        docs, "doc_id", "lang",
-        {"en": 0.5, "de": 0.25}, default_fraction=0.1,
-    )
-
-
-# synthetic URL per document — ONE expression string valid in BOTH Spark
-# SQL and DuckDB (concat/CASE/%), so the Spark query (via F.expr) and the
-# oracle share it verbatim; exercises www-stripping, ccTLD second-level
-# domains, ports, userinfo, path depth, extensions, and query strings
-# Deterministic PII planting (the corpus itself is PII-free word salad):
-# valid in BOTH Spark SQL and DuckDB — one string, two engines, so the
-# synthesized column is identical on each side of the oracle compare.
-_PII_SYNTH_SQL = (
-    "concat(text, "
-    "CASE WHEN doc_id % 3 = 0 THEN concat(' contact user', "
-    "CAST(doc_id AS STRING), '@example.org now') ELSE '' END, "
-    "CASE WHEN doc_id % 4 = 0 THEN concat(' from 10.', "
-    "CAST(doc_id % 200 AS STRING), '.0.', "
-    "CAST(doc_id % 250 AS STRING), ' logged') ELSE '' END, "
-    "CASE WHEN doc_id % 5 = 0 THEN concat(' call 555-010', "
-    "CAST(doc_id % 1000 AS STRING), ' today') ELSE '' END)"
-)
-
-
-def _q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.functions import pii as P
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    aug = docs.select("doc_id", F.expr(_PII_SYNTH_SQL).alias("text2"))
-    t = F.col("text2")
-    return aug.select(
-        "doc_id",
-        P.email_count(t).alias("n_emails"),
-        P.phone_count(t).alias("n_phones"),
-        P.ipv4_count(t).alias("n_ips"),
-        P.pii_hit(t).alias("has_pii"),
-        P.redact_pii(t).alias("redacted"),
-    )
-
-
-def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.curate import (
-        repetition_stats,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return repetition_stats(docs)
-
-
-def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.curate import (
-        weighted_sample,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return weighted_sample(
-        docs, "doc_id", "n_chars", k=5, group_cols=["source"]
-    ).select("doc_id", "source", "n_chars")
-
-
-def _q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.curate import (
-        tfidf_top_terms,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return tfidf_top_terms(docs, k=5)
-
-
-def _q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.pack import (
-        pack_sequences,
-        packing_efficiency,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return packing_efficiency(pack_sequences(docs, 96), 96)
-
-
-def _q_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.events import (
-        funnel_counts,
-        funnel_stages,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return funnel_counts(
-        funnel_stages(ev, ["view", "click", "purchase"])
-    )
-
-
-def _q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # END-TO-END curation preset, fully oracled: plant a near-dup twin
-    # (suffix — the proven recall-1 LSH fixture), an exact duplicate,
-    # and sub-token-floor junk per base doc, then run the whole
-    # cost-ordered pipeline (quality/lang filters -> exact dedup ->
-    # MinHash near-dup). The oracle recomputes every stage in SQL; the
-    # near-dup stage's LSH recall is deterministically 1 here (only the
-    # planted twins sit above the threshold, jaccard ~0.96 vs a ~0.03
-    # natural ceiling), so the exact all-pairs SQL is the twin.
-    from pure_python_geospatial_export_spark.operators.curate import (
-        curate_corpus,
-    )
-
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).where(F.col("doc_id") < 150).select("doc_id", "text")
-    near = docs.select(
-        (F.col("doc_id") + F.lit(100000)).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzzz")).alias("text"),
-    )
-    exact = docs.select(
-        (F.col("doc_id") + F.lit(200000)).alias("doc_id"), "text"
-    )
-    junk = docs.select(
-        (F.col("doc_id") + F.lit(300000)).alias("doc_id"),
-        F.lit("x").alias("text"),
-    )
-    corpus = docs.unionAll(near).unionAll(exact).unionAll(junk)
-    out = curate_corpus(
-        corpus,
-        min_quality=0.3,
-        keep_langs=["en"],
-        near_dup_threshold=0.5,
-        min_tokens=5,
-    )
-    return out.select("doc_id")
-
-
-def _q_pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.pack import (
-        pack_sequences,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return pack_sequences(docs, 96).select(
-        "source", "doc_id", "n_tokens", "pack_id", "pack_offset",
-        "overflow",
-    )
-
-
-_URL_SYNTH_SQL = (
-    "concat('https://', "
-    "CASE WHEN doc_id % 3 = 0 THEN 'user@www.' ELSE '' END, "
-    "source, "
-    "CASE WHEN doc_id % 4 = 0 THEN '.co.uk' "
-    "WHEN doc_id % 4 = 1 THEN '.com:8080' "
-    "WHEN doc_id % 4 = 2 THEN '.org' ELSE '.io' END, "
-    "CASE WHEN doc_id % 5 = 0 THEN '' "
-    "WHEN doc_id % 5 = 1 THEN '/a' "
-    "WHEN doc_id % 5 = 2 THEN '/a/b/c' "
-    "WHEN doc_id % 5 = 3 THEN '/img/photo.JPG?w=1' "
-    "ELSE '/docs/paper.pdf' END)"
-)
-
-
-def _q_url_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.functions import urls as U
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    with_url = docs.select(
-        "doc_id", F.expr(_URL_SYNTH_SQL).alias("url")
-    )
-    host = U.url_host(F.col("url"))
-    return with_url.select(
-        "doc_id",
-        host.alias("host"),
-        U.registered_domain(host).alias("domain"),
-        U.url_path_depth(F.col("url")).alias("depth"),
-        U.url_extension(F.col("url")).alias("ext"),
-        U.url_is_media(F.col("url")).alias("is_media"),
-    )
-
-
-def _q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-domain quota sampling (curate.quota_sample):
-    at most 20 docs per source, picked by the md5-hash order — a pure
-    function of (source, doc_id), so the DuckDB twin selects the
-    identical rows."""
-    from pure_python_geospatial_export_spark.operators.curate import (
-        quota_sample,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return quota_sample(docs, "source", "doc_id", quota=20).select(
-        "doc_id", "source"
-    )
-
-
-def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark-overlap scan (curate.ngram_contamination, n=8 token
-    shingles): benchmark = every 10th doc, scanned corpus = all docs.
-    The 'benchmark' docs flag themselves at contamination 1.0; any
-    organic 8-gram overlap flags other docs too — the oracle recomputes
-    the full overlap exactly."""
-    from pure_python_geospatial_export_spark.operators.curate import (
-        ngram_contamination,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    bench = docs.where(F.col("doc_id") % 10 == 0)
-    return ngram_contamination(docs, bench, "doc_id", "text", "text",
-                               n=8)
-
-
-def _q_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact within-300km haversine pairs among the derived doc points
-    (operators/knn.radius_join, latitude-adaptive candidate fan-out).
-    The oracle recomputes every pair with the identical clamped
-    haversine arithmetic — sin/cos/asin agree bitwise between the JVM
-    and DuckDB's libm on this fixture (hash-checked)."""
-    from pure_python_geospatial_export_spark.operators.knn import (
-        radius_join,
-    )
-
-    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
-    pairs = radius_join(
-        pts.select(F.col("doc_id").alias("id_a"), "lon", "lat"),
-        pts.select(F.col("doc_id").alias("id_b"), "lon", "lat"),
-        "id_a", "id_b", radius_km=300.0, res=6,
-    )
-    # distances rounded to 6 decimals (~1mm): JVM and DuckDB libm trig
-    # drift by 1 ulp on a couple of fixture pairs — the PAIR SET is
-    # bit-stable, the 15th decimal of the distance is not
-    return pairs.where(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b", F.round("dist_km", 6).alias("dist_km")
-    )
-
-
-def _q_hh_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable SpaceSaving heavy hitters (operators/sketch.py): top-5
-    sources per language. Fixture has ~20 distinct sources per lang,
-    far below m=64, so EVERY per-partition summary is exact (no
-    eviction: err = 0, pmin = 0) and the merged output equals the exact
-    top-k bit-for-bit with lo = est = hi — deterministically oracled
-    regardless of partitioning, the same fixture-pins-the-sketch trick
-    as the LSH queries."""
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        heavy_hitters_sketch,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    return heavy_hitters_sketch(docs, ["lang"], "source", k=5, m=64)
-
-
-def _q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.streaming.sessions import (
-        sessionize_batch,
-    )
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    s = sessionize_batch(ev, gap_seconds=1800)
-    return s.groupBy("user_id", "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min("ts").alias("session_start"),
-        F.max("ts").alias("session_end"),
-    )
-
-
-def _q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    cents = "CAST(floor(value * 100.0 + 0.5) AS BIGINT)"
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.expr("percentile(%s, 0.5)" % cents).alias("p50_cents"),
-        F.expr("percentile(%s, 0.9)" % cents).alias("p90_cents"),
-    )
-
-
-def _q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fixture chosen so the sketch is EXACT (k = 4096 >= every group's
-    # row count at the gate SF — same trick as the LSH recall-1
-    # oracles), so the bounded-state path equals the full type-1
-    # quantile the DuckDB twin computes; the ~1/sqrt(k) sampling regime
-    # is property-tested in tests/test_sketch.py instead.
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        quantile_estimate,
-        quantile_sample,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    sample = quantile_sample(
-        ev, ["event_type"], "value", "event_id", k=4096
-    )
-    return quantile_estimate(
-        sample, ["event_type"], [0.1, 0.5, 0.9, 0.99]
-    )
-
-
-def _q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.events import (
-        funnel_stages,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return funnel_stages(ev, ["view", "click", "purchase"])
-
-
-def _q_events_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.events import (
-        cohort_retention,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return cohort_retention(ev, period="week")
-
-
-def _scratch_dir(kind: str, sf_dir: str) -> str:
-    """uid + pid + sf-scoped /tmp scratch for queries that must write
-    an on-disk artifact before serving (mirrors session.py's warehouse
-    fix): a fixed world-shared /tmp name collides across users
-    (permission errors) and across concurrent runs of the same sf_dir
-    (mixed results). pid scoping means each process leaks a scratch
-    copy unless cleaned: register atexit removal (the query's
-    DataFrame must be consumed before interpreter exit anyway) and
-    purge siblings of THIS uid whose owning process is gone."""
-    import atexit
-    import hashlib
-    import re as _re
-    import shutil
-    import tempfile
-
-    tmp_root = tempfile.gettempdir()
-    mine = _re.compile(
-        r"^ppge_%s-uid%d-pid(\d+)_" % (_re.escape(kind), os.getuid())
-    )
-    for name in os.listdir(tmp_root):
-        m = mine.match(name)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        try:
-            os.kill(int(m.group(1)), 0)
-        except ProcessLookupError:
-            shutil.rmtree(os.path.join(tmp_root, name),
-                          ignore_errors=True)
-        except PermissionError:
-            pass  # pid reused by another user: leave it alone
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    base = os.path.join(
-        tmp_root,
-        "ppge_%s-uid%d-pid%d_%s" % (kind, os.getuid(), os.getpid(),
-                                    tag),
-    )
-    atexit.register(shutil.rmtree, base, ignore_errors=True)
-    return base
-
-
-def _q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hypertable continuous aggregate: build the day-chunked layout +
-    # precomputed rollup in a scratch dir, then serve precomputed-days
-    # UNION fresh-tail — the result must equal a flat recompute over the
-    # raw events (the DuckDB oracle), proving the chunk/tail seam.
-    from pure_python_geospatial_export_spark.sources.timeseries import (
-        serve_rollup,
-        write_events_table,
-        write_rollup,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = _scratch_dir("tsroll", sf_dir)
-    write_events_table(ev, os.path.join(base, "events"))
-    write_rollup(
-        spark, os.path.join(base, "events"), os.path.join(base, "rollup")
-    )
-    return serve_rollup(
-        spark,
-        os.path.join(base, "events"),
-        os.path.join(base, "rollup"),
-        "2024-01-21",
-    )
-
-
-def _q_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # full GeoPackage CONTAINER lifecycle: derive document points ->
-    # vectorized POINT WKB -> write a REAL .gpkg (SQLite file with
-    # spec metadata tables, GP blob wrapping JVM-side) -> distributed
-    # rowid-range read back -> strip GP headers -> decode coordinate
-    # doubles. The lon/lat bits ride through IEEE-754 bytes unchanged
-    # end to end, so the output equals the pts derivation EXACTLY —
-    # the oracle recomputes it straight from the documents table.
-    from pure_python_geospatial_export_spark.functions.geom_udfs import (
-        lonlat_to_wkb_point,
-        wkb_point_lat,
-        wkb_point_lon,
-    )
-    from pure_python_geospatial_export_spark.sources.gpkg import (
-        read_gpkg,
-        write_gpkg,
-    )
-
-    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
-    wkb = pts.select(
-        "doc_id",
-        lonlat_to_wkb_point("lon", "lat").alias("geom"),
-    )
-    base = _scratch_dir("gpkg", sf_dir)
-    os.makedirs(base, exist_ok=True)  # sqlite won't mkdir, Spark would
-    path = os.path.join(base, "docs.gpkg")
-    write_gpkg(wkb, path, "docs", geometry_type="POINT")
-    back = read_gpkg(spark, path, num_partitions=4)
-    return back.select(
-        F.col("doc_id"),
-        wkb_point_lon("geom").alias("lon"),
-        wkb_point_lat("geom").alias("lat"),
-    )
-
-
-def _q_dissolve_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # polygon dissolve: doc-derived rectangles merged into
-    # overlap-connected groups (exact self-overlap pairs -> label
-    # propagation CC -> group rollup). Rect-vs-rect intersect is pure
-    # interval arithmetic so the oracle mirrors the pair graph in SQL
-    # and computes the same components with a recursive closure CTE;
-    # coords round to 6 decimals before the WKT text so the parsed
-    # doubles equal the oracle's round(x, 6) (the polygon_overlap
-    # recipe).
-    from pure_python_geospatial_export_spark.operators.dissolve import (
-        dissolve_groups,
-    )
-
-    # 21 is coprime to 4 so the surviving doc_ids exercise all four
-    # rect sizes (a % 20 filter would pin doc_id % 4 == 0)
-    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
-    half = F.lit(0.5) + (F.col("doc_id") % 4).cast("double") * F.lit(0.3)
-    x0 = F.round(F.col("lon") - half, 6)
-    x1 = F.round(F.col("lon") + half, 6)
-    y0 = F.round(F.col("lat") - half, 6)
-    y1 = F.round(F.col("lat") + half, 6)
-    probe_wkt = F.format_string(
-        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-        "%.6f %.6f))",
-        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
-    )
-    probes = pts.select(F.col("doc_id").alias("id"),
-                        probe_wkt.alias("wkt"))
-    return dissolve_groups(probes, res=6).select(
-        "group_id", "n_members", "xmin", "ymin", "xmax", "ymax"
-    )
-
-
-def _q_dissolve_rects_grouped(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    # the single-exchange grouped pair strategy against the SAME
-    # recursive-closure oracle — bit-level proof the group-walk
-    # variant computes identical components
-    from pure_python_geospatial_export_spark.operators.dissolve import (
-        dissolve_groups,
-    )
-
-    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
-    half = F.lit(0.5) + (F.col("doc_id") % 4).cast("double") * F.lit(0.3)
-    x0 = F.round(F.col("lon") - half, 6)
-    x1 = F.round(F.col("lon") + half, 6)
-    y0 = F.round(F.col("lat") - half, 6)
-    y1 = F.round(F.col("lat") + half, 6)
-    probe_wkt = F.format_string(
-        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-        "%.6f %.6f))",
-        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
-    )
-    probes = pts.select(F.col("doc_id").alias("id"),
-                        probe_wkt.alias("wkt"))
-    return dissolve_groups(probes, res=6, strategy="grouped").select(
-        "group_id", "n_members", "xmin", "ymin", "xmax", "ymax"
-    )
-
-
-def _q_dissolve_union_rects(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    # dissolved-BOUNDARY output: integer-lattice rectangles (floors of
-    # the doc point, half-width 1 + doc_id % 3) merged into
-    # overlap-connected groups whose union polygon the overlay kernel
-    # emits; the reported area is the net shoelace of the emitted
-    # rings. On the integer lattice every overlay coordinate is exact,
-    # so the area matches a SQL coordinate-grid decomposition (a
-    # minimal grid cell is covered iff fully inside some member rect)
-    # BIT-FOR-BIT — union geometry verified through pure arithmetic.
-    from pure_python_geospatial_export_spark.operators.dissolve import (
-        dissolve_geometry,
-    )
-
-    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
-    w = (F.lit(1) + F.col("doc_id") % 3).cast("long")
-    fx = F.floor("lon").cast("long")
-    fy = F.floor("lat").cast("long")
-    x0, x1 = fx - w, fx + w
-    y0, y1 = fy - w, fy + w
-    probe_wkt = F.format_string(
-        "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
-    )
-    probes = pts.select(F.col("doc_id").alias("id"),
-                        probe_wkt.alias("wkt"))
-    return dissolve_geometry(probes, res=6).select(
-        "group_id", "n_members", "area"
-    )
-
-
-def _q_geom_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # validity QA gate: five geometry classes built per doc_id residue
-    # (valid rect / bowtie / open ring / repeated vertex / degenerate
-    # triangle), classified geometrically by validate_geometries. The
-    # oracle knows each row's truth BY CONSTRUCTION (the residue), so
-    # the rollup proves the classifier end to end.
-    from pure_python_geospatial_export_spark.operators.validate import (
-        validate_geometries,
-    )
-
-    pts = _docs_points(spark, sf_dir)
-    x0, y0 = F.col("lon"), F.col("lat")
-    x1, y1 = F.col("lon") + F.lit(0.5), F.col("lat") + F.lit(0.5)
-    cls = F.col("doc_id") % 5
-    wkt = (
-        F.when(cls == 1, F.format_string(
-            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-            "%.6f %.6f))",
-            x0, y0, x1, y0, x0, y1, x1, y1, x0, y0))  # bowtie
-        .when(cls == 2, F.format_string(
-            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f))",
-            x0, y0, x1, y0, x1, y1, x0, y1))          # open ring
-        .when(cls == 3, F.format_string(
-            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-            "%.6f %.6f, %.6f %.6f))",
-            x0, y0, x1, y0, x1, y0, x1, y1, x0, y1, x0, y0))  # repeat
-        .when(cls == 4, F.format_string(
-            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f))",
-            x0, y0, x1, y1, x0, y0))                  # 3 points
-        .otherwise(F.format_string(
-            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-            "%.6f %.6f))",
-            x0, y0, x1, y0, x1, y1, x0, y1, x0, y0))  # valid rect
-    )
-    probes = pts.select("doc_id", wkt.alias("wkt"))
-    return (
-        validate_geometries(probes)
-        .groupBy("reason")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-            F.max("doc_id").alias("max_doc"),
-            F.max(F.col("is_valid").cast("int")).alias("any_valid"),
-        )
-    )
-
-
-def _q_geohash_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # geohash cell rollup: derived document points bucketed by a coarse
-    # precision-2 geohash (pure column arithmetic, JVM-side), with the
-    # lexicographic min/max of each cell's full-precision (9-char)
-    # geohash — exercising both ends of the codec. Geohash strings are
-    # exact integer interleave + base32 after one IEEE quantization per
-    # axis, so both engines produce identical strings.
-    from pure_python_geospatial_export_spark.geo.geohash import (
-        geohash_col,
-    )
-
-    pts = _docs_points(spark, sf_dir)
-    return (
-        pts.select(
-            geohash_col(F.col("lon"), F.col("lat"), 2).alias("gh2"),
-            geohash_col(F.col("lon"), F.col("lat"), 9).alias("gh9"),
-        )
-        .groupBy("gh2")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("gh9").alias("gh9_min"),
-            F.max("gh9").alias("gh9_max"),
-        )
-    )
-
-
-def _q_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # hypertable continuous aggregate for the NON-additive aggregate:
-    # per-(day, event_type) HLL register relations precomputed into
-    # day chunks, served as precomputed-before-cutoff UNION
-    # tail-recompute, merged across days by register max. The oracle
-    # computes registers FLAT from raw events — equality proves the
-    # chunk/tail seam loses nothing (register max is lossless), the
-    # distinct-rollup twin of time_rollup's additive-seam proof. The
-    # corrected estimate is bit-oracled via the precomputed
-    # linear-counting table (see hll_cells / hll_estimate).
-    from pure_python_geospatial_export_spark.sources.timeseries import (
-        serve_distinct_rollup,
-        write_distinct_rollup,
-        write_events_table,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    base = _scratch_dir("hllroll", sf_dir)
-    write_events_table(ev, os.path.join(base, "events"))
-    write_distinct_rollup(
-        spark, os.path.join(base, "events"),
-        os.path.join(base, "droll"), p=10,
-    )
-    return serve_distinct_rollup(
-        spark,
-        os.path.join(base, "events"),
-        os.path.join(base, "droll"),
-        "2024-01-21",
-        p=10,
-    )
-
-
-def _q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fixed-width integer bins: pure arithmetic (no ln/boundary-ulp
-    # risk), min/max are order-independent — fully deterministic
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.withColumn(
-            "bin", F.floor(F.col("value") / F.lit(25.0)).cast("int")
-        )
-        .groupBy("event_type", "bin")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"),
-        )
-    )
-
-
-def _q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return (
-        ev.withColumn("hr", F.hour("ts"))
-        .rollup("event_type", "hr")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-    )
-
-
-def _q_kmv_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # distinct-url estimates per coarse cell via MERGED fine-cell
-    # sketches — equality with the oracle (which computes each coarse
-    # cell directly from raw rows) proves the merge property
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        kmv_estimate,
-        kmv_merge,
-        kmv_sketch,
-    )
-    pts = _docs_points(spark, sf_dir).withColumn(
-        "url", F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-    )
-    fine = pts.withColumn(
-        "cell_id", cell_id_col(F.col("lon"), F.col("lat"), 1)
-    ).withColumn(
-        "cell_fine", cell_id_col(F.col("lon"), F.col("lat"), 3)
-    )
-    sk = kmv_sketch(fine, ["cell_id", "cell_fine"], "url", k=16)
-    merged = kmv_merge(sk, ["cell_id"], k=16)
-    return merged.select(
-        "cell_id", kmv_estimate("sketch", 16).alias("est_distinct")
-    )
-
-
-def _q_hll_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # HyperLogLog distinct-url state per coarse cell via MERGED
-    # fine-cell register relations — equality with the oracle (which
-    # computes each coarse cell's registers directly from raw rows)
-    # proves the register-wise-max merge is lossless. Output pins the
-    # full integer sketch state (zeros + scaled harmonic sum — exact
-    # BIGINTs, order-free) plus the CORRECTED estimate: the raw branch
-    # is one double division of exact operands, and the linear-counting
-    # branch reads a Python-precomputed m*ln(m/zeros) lookup table
-    # embedded as literals on BOTH engine sides — in-engine ln is
-    # measurably 1-ulp divergent (JVM vs DuckDB libm), table literals
-    # are data.
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        hll_estimate,
-        hll_merge,
-        hll_sketch,
-    )
-    pts = _docs_points(spark, sf_dir).withColumn(
-        "url", F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
-    )
-    fine = pts.withColumn(
-        "cell_id", cell_id_col(F.col("lon"), F.col("lat"), 1)
-    ).withColumn(
-        "cell_fine", cell_id_col(F.col("lon"), F.col("lat"), 3)
-    )
-    sk = hll_sketch(fine, ["cell_id", "cell_fine"], "url", p=8)
-    merged = hll_merge(sk, ["cell_id"])
-    return hll_estimate(merged, ["cell_id"], p=8)
-
-
-def _q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # KMV set-operation estimates (the capability HLL lacks): per-source
-    # vocabulary sketches, then union / Jaccard / intersection estimates
-    # for every source pair from the SKETCHES alone — the oracle
-    # recomputes the same estimator from raw rows, pinning the whole
-    # pipeline (tokenize -> hash -> per-source bottom-k -> pairwise
-    # union-sample arithmetic) bit-for-bit. 20 sources -> 190 pairs;
-    # the pair join is broadcast-sized by construction (one row per
-    # source).
-    from pure_python_geospatial_export_spark.functions.text import (
-        tokens_col,
-    )
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        kmv_overlap_cols,
-        kmv_sketch,
-    )
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    )
-    toks = docs.select(
-        "source", F.explode(tokens_col(F.col("text"))).alias("tok")
-    )
-    sk = kmv_sketch(toks, ["source"], "tok", k=32)
-    a = sk.select(F.col("source").alias("source_a"),
-                  F.col("sketch").alias("_sa"))
-    b = sk.select(F.col("source").alias("source_b"),
-                  F.col("sketch").alias("_sb"))
-    pairs = a.join(F.broadcast(b),
-                   F.col("source_a") < F.col("source_b"))
-    est_u, jac, est_i = kmv_overlap_cols("_sa", "_sb", k=32)
-    return pairs.select(
-        "source_a", "source_b",
-        est_u.alias("est_union"),
-        jac.alias("jaccard"),
-        est_i.alias("est_intersection"),
-    )
-
-
-def _q_events_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pure_python_geospatial_export_spark.operators.asof import (
-        range_join,
-    )
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    errors = ev.where(F.col("event_type") == "error").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = ev.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        "user_id",
-        F.col("ts").alias("start_ts"),
-        (F.col("ts") + F.expr("INTERVAL 15 MINUTES")).alias("end_ts"),
-    )
-    j = range_join(errors, clicks, key="user_id", left_ts="ts",
-                   bucket_seconds=900)
-    return j.groupBy("click_id").agg(
-        F.count(F.lit(1)).alias("n_errors")
-    )
-
-
+def _geojson_lines_sql() -> str:
+    """DuckDB twin of the GeoJSON feature lines: both engines print
+    doubles shortest-round-trip (python repr == DuckDB VARCHAR cast), so
+    the feature string can be assembled with plain concatenation —
+    verified byte-identical on the fixture."""
+    return PTS_CTE + (
+        ", langd AS (SELECT doc_id, lang FROM documents) "
+        "SELECT '{\"type\": \"Feature\", \"geometry\": "
+        "{\"type\": \"Point\", \"coordinates\": [' "
+        "|| CAST(p.lon AS VARCHAR) || ', ' || CAST(p.lat AS VARCHAR) || "
+        "']}, \"properties\": {\"doc_id\": ' || "
+        "CAST(p.doc_id AS VARCHAR) || ', \"lang\": \"' || l.lang || "
+        "'\"}}' AS line "
+        "FROM pts p JOIN langd l USING (doc_id) WHERE p.doc_id < 100"
+    )
+
+
+@query("geojson_lines", oracle=_geojson_lines_sql)
 def _q_geojson_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     # doc_id < 100 (not .limit) so the row set is order-independent and
     # the DuckDB twin selects the identical rows
@@ -1560,6 +488,39 @@ def _q_geojson_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
                      None)
 
 
+# tile_mvt: closed-form MVT quantization. Scale constants are
+# written as the same float expressions the kernel evaluates
+# (res-5 cell extents 11.25 / 5.625 are exact binary fractions,
+# so x1-x0 == 11.25 exactly and the division+multiply order
+# matches encode_mvt_points bit for bit).
+_TILE_MVT_SQL = (
+    PTS_CTE + ", "
+    "q AS (SELECT doc_id, lon, lat, "
+    "least(greatest(CAST(floor((lon + 180.0) / 360.0 * 32) "
+    "AS BIGINT), 0), 31) AS tx, "
+    "least(greatest(CAST(floor((lat + 90.0) / 180.0 * 32) "
+    "AS BIGINT), 0), 31) AS ty FROM pts), "
+    "px AS (SELECT doc_id, "
+    "(5 * 288230376151711744 + tx * 536870912 + ty) AS tile_id, "
+    "least(greatest(CAST(floor("
+    "(lon - (-180.0 + tx * 11.25)) / 11.25 * 4096.0"
+    ") AS BIGINT), 0), 4096) AS u, "
+    "least(greatest(CAST(floor("
+    "((-90.0 + (ty + 1) * 5.625) - lat) / 5.625 * 4096.0"
+    ") AS BIGINT), 0), 4096) AS v FROM q) "
+    "SELECT tile_id, CAST(COUNT(*) AS INTEGER) AS n_features, "
+    "CAST(SUM(u) AS BIGINT) AS sum_px, "
+    "CAST(SUM(v) AS BIGINT) AS sum_py, "
+    "CAST(SUM(doc_id) AS BIGINT) AS sum_ids "
+    "FROM px GROUP BY tile_id"
+)
+
+
+# Plan: tile assignment is column math in the scan stage; the only
+# exchange is the groupBy(tile_id) feeding the per-tile applyInPandas
+# encoder, and the decode pass is a chained mapInPandas (no second
+# exchange).
+@query("tile_mvt", oracle=_TILE_MVT_SQL, headline=True, exchanges=1)
 def _q_tile_mvt(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Mapbox Vector Tile encode -> independent wire decode, per res-5
     # tile: the output columns are computed FROM THE DECODED BYTES, so
@@ -1615,2577 +576,29 @@ def _q_tile_mvt(spark: SparkSession, sf_dir: str) -> DataFrame:
     return enc.mapInPandas(_decode, out_schema)
 
 
-def _q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # CCNet-style boilerplate-line removal. Multi-line docs are built
-    # deterministically from the documents table (footer on even ids,
-    # a unique tail per id) with the SAME concat mirrored in the
-    # oracle; output is the reassembled clean text + line stats, so
-    # explode/census/anti-join/reassembly are all bit-checked.
-    from pure_python_geospatial_export_spark.operators.curate import (
-        remove_boilerplate_lines,
-    )
-
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 300)
-        .select(
-            "doc_id",
-            F.concat(
-                F.col("text"),
-                F.lit("\n"),
-                F.when(F.col("doc_id") % 2 == 0,
-                       F.lit("standard footer boilerplate"))
-                .otherwise(
-                    F.concat(F.lit("tail-"),
-                             F.col("doc_id").cast("string"))
-                ),
-            ).alias("text"),
-        )
-    )
-    return remove_boilerplate_lines(docs, min_docs=3)
-
-
-def _q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Lee-et-al-style exact duplicate-SPAN removal (round 5): docs get
-    # a deterministically planted shared passage (every third doc) and
-    # a unique tail; any 8-token window shared by >= 3 docs is cut from
-    # every doc. The oracle recomputes the gram census (same md5 keys),
-    # coverage, and reassembly in SQL, so explode/census/semi/anti/
-    # rebuild are all bit-checked.
-    from pure_python_geospatial_export_spark.operators.curate import (
-        remove_duplicate_spans,
-    )
-
-    passage = ("all rights reserved this document is provided as is "
-               "without warranty of any kind either express or implied")
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 300)
-        .select(
-            "doc_id",
-            F.concat(
-                F.col("text"),
-                F.lit(" "),
-                F.when(F.col("doc_id") % 3 == 0, F.lit(passage))
-                .otherwise(
-                    F.concat(F.lit("tail marker "),
-                             F.col("doc_id").cast("string"))
-                ),
-            ).alias("text"),
-        )
-    )
-    return remove_duplicate_spans(docs, ngram=8, min_docs=3)
-
-
-# clip_rects layer: integer-lattice rects (one with a hole) so every
-# intersection area is an exact integer-valued double on both engines
-_CLIP_LAYER = (
-    (1, "big", "POLYGON ((-20 -20, 20 -20, 20 20, -20 20, -20 -20))"),
-    (2, "donut",
-     "POLYGON ((0 -30, 36 -30, 36 6, 0 6, 0 -30), "
-     "(8 -22, 8 -2, 28 -2, 28 -22, 8 -22))"),
-    (3, "east", "POLYGON ((24 -6, 48 -6, 48 18, 24 18, 24 -6))"),
+# image_phash: closed-form recompute of the planted 63-bit
+# hash (exact small product, no wrap on either engine) and the
+# exact all-pairs Hamming filter
+_IMAGE_PHASH_SQL = (
+    "WITH d AS (SELECT doc_id, "
+    "(doc_id // 4) * 81205437596873861 AS base, "
+    "CAST(CASE WHEN doc_id % 4 = 3 THEN 4 ELSE doc_id % 4 END "
+    "AS BIGINT) AS noise "
+    "FROM documents WHERE doc_id < 400), "
+    "h AS (SELECT doc_id, xor(base, noise) AS h FROM d) "
+    "SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
+    "CAST(bit_count(xor(a.h, b.h)) AS INTEGER) AS hamming, "
+    "a.h AS ph_a "
+    "FROM h a, h b WHERE a.doc_id < b.doc_id "
+    "AND bit_count(xor(a.h, b.h)) <= 3"
 )
 
 
-def _q_clip_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # boolean-overlay clip (round 7): per (probe, layer polygon) pair
-    # the INTERSECTION GEOMETRY's shoelace area. Probes are integer-
-    # lattice rects derived from doc_id; the layer is integer too, so
-    # overlay areas are exact integers in doubles and the oracle's
-    # closed-form interval products match bit-for-bit — including the
-    # donut (outer minus hole) and the full-cell containment shortcut
-    # (probes deep inside 'big' skip the overlay entirely).
-    from pure_python_geospatial_export_spark.operators.clip import (
-        clip_join,
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    layer = local_df(
-        spark, list(_CLIP_LAYER), ["polygon_id", "name", "wkt"]
-    )
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 400)
-    )
-    px0 = (F.col("doc_id") % 18) * 4 - 36
-    py0 = (F.col("doc_id") % 13) * 4 - 26
-    px1 = px0 + 2 + F.col("doc_id") % 5
-    py1 = py0 + 2 + F.col("doc_id") % 7
-    probes = docs.select(
-        F.col("doc_id").alias("probe_id"),
-        F.format_string(
-            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
-        ).alias("wkt"),
-    )
-    out = clip_join(probes, layer, res=5, id_col="probe_id")
-    return out.select(
-        F.col("probe_id").alias("doc_id"), "name", "area"
-    )
-
-
-def _clip_rects_sql() -> str:
-    import re as _re
-
-    def nums(w):
-        return [float(v) for v in _re.findall(r"-?\d+", w)]
-
-    def inter(rx0, ry0, rx1, ry1):
-        return (
-            "greatest(0.0, least(px1, %s) - greatest(px0, %s)) * "
-            "greatest(0.0, least(py1, %s) - greatest(py0, %s))"
-            % (rx1, rx0, ry1, ry0)
-        )
-
-    parts = []
-    for _pid, name, w in _CLIP_LAYER:
-        c = nums(w)
-        outer = inter(c[0], c[1], c[4], c[5])
-        if len(c) > 10:
-            h = c[10:]
-            hole = inter(h[0], h[1], h[4], h[5])
-            area = "(%s) - (%s)" % (outer, hole)
-        else:
-            area = outer
-        parts.append(
-            "SELECT doc_id, '%s' AS name, %s AS area FROM p"
-            % (name, area)
-        )
-    return (
-        "WITH p AS (SELECT doc_id, "
-        "CAST((doc_id %% 18) * 4 - 36 AS DOUBLE) AS px0, "
-        "CAST((doc_id %% 13) * 4 - 26 AS DOUBLE) AS py0, "
-        "CAST((doc_id %% 18) * 4 - 36 + 2 + doc_id %% 5 AS DOUBLE) "
-        "AS px1, "
-        "CAST((doc_id %% 13) * 4 - 26 + 2 + doc_id %% 7 AS DOUBLE) "
-        "AS py1 "
-        "FROM documents WHERE doc_id < 400), "
-        "i AS (%s) SELECT doc_id, name, area FROM i WHERE area > 0"
-        % " UNION ALL ".join(parts)
-    )
-
-
-def _q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # area-weighted areal interpolation (round 7): probe rect AREAS
-    # are powers of two (w in {1,2,4}, h in {1,2}), so every term
-    # value * inter / src_area is an exact dyadic double and the SUM
-    # is addition-order-free — bit-stable against the oracle's
-    # closed-form recompute without integerizing the weights.
-    from pure_python_geospatial_export_spark.operators.clip import (
-        areal_interpolate,
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    layer = local_df(
-        spark, list(_CLIP_LAYER), ["polygon_id", "name", "wkt"]
-    )
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 400)
-    )
-    px0 = (F.col("doc_id") % 18) * 4 - 36
-    py0 = (F.col("doc_id") % 13) * 4 - 26
-    px1 = px0 + F.expr("shiftleft(1, CAST(doc_id % 3 AS INT))")
-    py1 = py0 + F.expr("shiftleft(1, CAST(doc_id % 2 AS INT))")
-    probes = docs.select(
-        F.col("doc_id").alias("probe_id"),
-        ((F.col("doc_id") % 9) + 1).cast("double").alias("v"),
-        F.format_string(
-            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
-        ).alias("wkt"),
-    )
-    return areal_interpolate(probes, layer, "v", res=5)
-
-
-def _areal_interp_sql() -> str:
-    import re as _re
-
-    def nums(w):
-        return [float(v) for v in _re.findall(r"-?\d+", w)]
-
-    def inter(rx0, ry0, rx1, ry1):
-        return (
-            "greatest(0.0, least(px1, %s) - greatest(px0, %s)) * "
-            "greatest(0.0, least(py1, %s) - greatest(py0, %s))"
-            % (rx1, rx0, ry1, ry0)
-        )
-
-    parts = []
-    for pid, name, w in _CLIP_LAYER:
-        c = nums(w)
-        outer = inter(c[0], c[1], c[4], c[5])
-        if len(c) > 10:
-            h = c[10:]
-            area = "(%s) - (%s)" % (outer, inter(h[0], h[1], h[4], h[5]))
-        else:
-            area = outer
-        parts.append(
-            "SELECT doc_id, CAST(%d AS BIGINT) AS polygon_id, "
-            "'%s' AS name, %s AS area, v, sa FROM p"
-            % (pid, name, area)
-        )
-    return (
-        "WITH p AS (SELECT doc_id, "
-        "CAST((doc_id %% 9) + 1 AS DOUBLE) AS v, "
-        "CAST((doc_id %% 18) * 4 - 36 AS DOUBLE) AS px0, "
-        "CAST((doc_id %% 13) * 4 - 26 AS DOUBLE) AS py0, "
-        "CAST((doc_id %% 18) * 4 - 36 + (1 << (doc_id %% 3)) "
-        "AS DOUBLE) AS px1, "
-        "CAST((doc_id %% 13) * 4 - 26 + (1 << (doc_id %% 2)) "
-        "AS DOUBLE) AS py1, "
-        "CAST((1 << (doc_id %% 3)) * (1 << (doc_id %% 2)) AS DOUBLE) "
-        "AS sa "
-        "FROM documents WHERE doc_id < 400), "
-        "i AS (%s) "
-        "SELECT polygon_id, name, SUM(v * area / sa) AS est "
-        "FROM i WHERE area > 0 GROUP BY polygon_id, name"
-        % " UNION ALL ".join(parts)
-    )
-
-
-def _q_group_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # distributed convex hull (round 7): 16 doc groups, first four
-    # members pinned to the corners of a per-group integer rectangle,
-    # the rest scattered STRICTLY inside — strict-turn hulls are
-    # exactly the 4 corners, so every output column is closed-form:
-    # the bit-level oracle for the two-stage (partial-hull shuffle ->
-    # per-group final) mergeable-aggregate plan.
-    from pure_python_geospatial_export_spark.operators.hull import (
-        convex_hulls,
-    )
-
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 400)
-    )
-    g = F.col("doc_id") % 16
-    x0 = (g % 4) * 20 - 40
-    y0 = (g - g % 4) / 4 * 15 - 30  # exact: g - g%4 is a multiple of 4
-    w = 8 + g % 5
-    h = 6 + g % 4
-    mi = ((F.col("doc_id") - g) / 16).cast("long")
-    lon = (
-        F.when(mi == 0, x0)
-        .when(mi == 1, x0 + w)
-        .when(mi == 2, x0 + w)
-        .when(mi == 3, x0)
-        .otherwise(x0 + 1 + (F.col("doc_id") * 7) % (w - 1))
-    ).cast("double")
-    lat = (
-        F.when(mi == 0, y0)
-        .when(mi == 1, y0)
-        .when(mi == 2, y0 + h)
-        .when(mi == 3, y0 + h)
-        .otherwise(y0 + 1 + (F.col("doc_id") * 11) % (h - 1))
-    ).cast("double")
-    pts = docs.select(
-        g.cast("long").alias("group_id"), lon.alias("lon"),
-        lat.alias("lat"),
-    )
-    return convex_hulls(pts).select(
-        "group_id", "n_points", "n_vertices", "area",
-        "xmin", "ymin", "xmax", "ymax",
-        # rotating-calipers metrics: the min-area OBB of a rectangle
-        # is itself and the diameter is its diagonal, so both are
-        # closed-form too (division-late arithmetic keeps them exact)
-        "diameter_sq", "obb_area", "obb_width", "obb_height",
-    )
-
-
-_GROUP_HULL_SQL = (
-    "WITH p AS (SELECT doc_id % 16 AS g FROM documents "
-    "WHERE doc_id < 400) "
-    "SELECT g AS group_id, COUNT(*) AS n_points, "
-    "CAST(4 AS INT) AS n_vertices, "
-    "CAST((8 + g % 5) * (6 + g % 4) AS DOUBLE) AS area, "
-    "CAST((g % 4) * 20 - 40 AS DOUBLE) AS xmin, "
-    "CAST((g // 4) * 15 - 30 AS DOUBLE) AS ymin, "
-    "CAST((g % 4) * 20 - 40 + 8 + g % 5 AS DOUBLE) AS xmax, "
-    "CAST((g // 4) * 15 - 30 + 6 + g % 4 AS DOUBLE) AS ymax, "
-    "CAST((8 + g % 5) * (8 + g % 5) + (6 + g % 4) * (6 + g % 4) "
-    "AS DOUBLE) AS diameter_sq, "
-    "CAST((8 + g % 5) * (6 + g % 4) AS DOUBLE) AS obb_area, "
-    "CAST(GREATEST(8 + g % 5, 6 + g % 4) AS DOUBLE) AS obb_width, "
-    "CAST(LEAST(8 + g % 5, 6 + g % 4) AS DOUBLE) AS obb_height "
-    "FROM p GROUP BY g"
-)
-
-
-def _traj_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Events with deterministic trajectory-like positions: each user
-    orbits a home cell ((event_id % 4, % 5) * 0.02 jitter) and hops
-    +4 degrees east whenever event_id % 13 >= 9 — so segmentation at
-    eps=1 alternates home-cluster and away-cluster segments. Pure
-    integer-derived double arithmetic, mirrored verbatim in SQL."""
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    u, e = F.col("user_id"), F.col("event_id")
-    lon = (
-        F.lit(-40.0) + (u % 8).cast("double") * F.lit(10.0)
-        + (e % 4).cast("double") * F.lit(0.02)
-        + F.when(e % 13 >= 9, F.lit(4.0)).otherwise(F.lit(0.0))
-    )
-    lat = (
-        F.lit(-20.0) + (u - u % 8) / F.lit(8) * F.lit(10.0)
-        + (e % 5).cast("double") * F.lit(0.02)
-    )
-    return ev.select(
-        "user_id", "event_id", "ts",
-        lon.alias("lon"), lat.alias("lat"),
-    )
-
-
-_TRAJ_PTS_CTE = (
-    "p AS (SELECT user_id, event_id, ts, "
-    "-40.0 + CAST(user_id % 8 AS DOUBLE) * 10.0 "
-    "+ CAST(event_id % 4 AS DOUBLE) * 0.02 "
-    "+ CASE WHEN event_id % 13 >= 9 THEN 4.0 ELSE 0.0 END AS lon, "
-    "-20.0 + (user_id - user_id % 8) / 8 * 10.0 "
-    "+ CAST(event_id % 5 AS DOUBLE) * 0.02 AS lat "
-    "FROM events)"
-)
-
-_TRAJ_SEG_CTES = _TRAJ_PTS_CTE + (
-    ", l AS (SELECT *, epoch_us(ts) AS us, "
-    "lon - lag(lon) OVER w AS dlon, lat - lag(lat) OVER w AS dlat, "
-    "epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us FROM p "
-    "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
-    "f AS (SELECT *, CASE WHEN dlon IS NULL "
-    "OR dlon * dlon + dlat * dlat > 1.0 "
-    "OR gap_us > 7200000000 THEN 1 ELSE 0 END AS new_seg FROM l), "
-    "s AS (SELECT *, CASE WHEN new_seg = 1 THEN CAST(0 AS BIGINT) "
-    "ELSE CAST(floor(sqrt(dlon * dlon + dlat * dlat) * 1000.0 + 0.5) "
-    "AS BIGINT) END AS step_mm, "
-    "CAST(SUM(new_seg) OVER (PARTITION BY user_id ORDER BY ts, "
-    "event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seg_id FROM f), "
-    "segs AS (SELECT user_id, seg_id, COUNT(*) AS n_points, "
-    "MIN(ts) AS t_start, MAX(ts) AS t_end, "
-    "MAX(us) - MIN(us) AS dur_us, "
-    "CAST(SUM(step_mm) AS BIGINT) AS path_mm, "
-    "MIN(lon) AS xmin, MIN(lat) AS ymin, "
-    "MAX(lon) AS xmax, MAX(lat) AS ymax, "
-    "(MAX(us) - MIN(us)) >= 1800000000 AS is_stay "
-    "FROM s GROUP BY 1, 2)"
-)
-
-
-def _q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stop/move segmentation (operators/trajectory.py) over the
-    deterministic trajectory fixture: eps=1 step cut, 2h gap cut,
-    30min stay floor. Integer-milli path sums + epoch-micros spans
-    keep every column order-free, so the window+groupBy recompute in
-    DuckDB matches bit-for-bit."""
-    from pure_python_geospatial_export_spark.operators.trajectory import (
-        trajectory_segments,
-    )
-
-    return trajectory_segments(
-        _traj_points(spark, sf_dir),
-        eps=1.0, max_gap_s=7200, min_stay_s=1800,
-        order_cols=("event_id",),
-    )
-
-
-_STAY_POINTS_SQL = (
-    "WITH " + _TRAJ_SEG_CTES + " SELECT * FROM segs"
-)
-
-
-def _q_travel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user travel rollup (trajectory.travel_stats) composed on
-    the segments — rides the same user partitioning."""
-    from pure_python_geospatial_export_spark.operators.trajectory import (
-        trajectory_segments,
-        travel_stats,
-    )
-
-    segs = trajectory_segments(
-        _traj_points(spark, sf_dir),
-        eps=1.0, max_gap_s=7200, min_stay_s=1800,
-        order_cols=("event_id",),
-    )
-    return travel_stats(segs)
-
-
-_TRAVEL_ROLLUP_SQL = (
-    "WITH " + _TRAJ_SEG_CTES +
-    " SELECT user_id, COUNT(*) AS n_segments, "
-    "CAST(SUM(CASE WHEN is_stay THEN 1 ELSE 0 END) AS BIGINT) "
-    "AS n_stays, "
-    "CAST(SUM(CASE WHEN is_stay THEN dur_us ELSE 0 END) AS BIGINT) "
-    "AS stay_us, "
-    "CAST(SUM(path_mm) AS BIGINT) AS total_path_mm, "
-    "MIN(t_start) AS first_seen, MAX(t_end) AS last_seen "
-    "FROM segs GROUP BY 1"
-)
-
-
-def _q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Origin-destination matrix (trajectory.od_flows) over the stay
-    segments: consecutive stays per user form directed trips keyed by
-    the stay-center grid cells. Integer epoch-microsecond transit
-    sums keep the rollup order-free; cell ids and counts are integer
-    arithmetic — bit-oracled against the same window+lead recompute
-    in DuckDB."""
-    from pure_python_geospatial_export_spark.operators.trajectory import (
-        od_flows,
-        trajectory_segments,
-    )
-
-    segs = trajectory_segments(
-        _traj_points(spark, sf_dir),
-        eps=1.0, max_gap_s=7200, min_stay_s=1800,
-        order_cols=("event_id",),
-    )
-    return od_flows(segs, res=6)
-
-
-def _od_matrix_sql() -> str:
-    cell = _tile_sql(6, "(xmin + xmax) / 2.0", "(ymin + ymax) / 2.0")
-    return (
-        "WITH " + _TRAJ_SEG_CTES +
-        ", stays AS (SELECT user_id, seg_id, t_start, "
-        "epoch_us(t_start) AS start_us, epoch_us(t_end) AS end_us, "
-        "CAST(%s AS BIGINT) AS o_cell FROM segs WHERE is_stay), "
-        "t AS (SELECT user_id, o_cell, lead(o_cell) OVER w AS d_cell, "
-        "lead(start_us) OVER w - end_us AS transit FROM stays "
-        "WINDOW w AS (PARTITION BY user_id ORDER BY t_start, seg_id)) "
-        "SELECT o_cell, d_cell, COUNT(*) AS n_trips, "
-        "COUNT(DISTINCT user_id) AS n_users, "
-        "CAST(SUM(transit) AS BIGINT) AS transit_us_sum "
-        "FROM t WHERE d_cell IS NOT NULL GROUP BY 1, 2"
-        % cell
-    )
-
-
-def _q_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Getis-Ord Gi* hot spots (operators/hotspot.py) over the
-    derived doc points at res 5, full-world domain. Counts, W, k, n
-    are integers and the statistic is a fixed expression tree over
-    them mirrored term for term in SQL — deterministic IEEE doubles,
-    no float aggregation, so the compare is bit-level."""
-    from pure_python_geospatial_export_spark.operators.hotspot import (
-        hotspots,
-    )
-
-    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
-    return hotspots(pts, res=5)
-
-
-def _hotspots_sql() -> str:
-    res, n_grid = 5, 32
-    n = n_grid * n_grid
-    gx = ("least(greatest(CAST(floor((lon + 180.0) / 360.0 * %d) "
-          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
-    gy = ("least(greatest(CAST(floor((lat + 90.0) / 180.0 * %d) "
-          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
-    return PTS_CTE + (
-        ", c AS (SELECT %(gx)s AS gx, %(gy)s AS gy, "
-        "COUNT(*) AS cnt FROM pts GROUP BY 1, 2), "
-        "st AS (SELECT CAST(SUM(cnt) AS BIGINT) AS sx, "
-        "CAST(SUM(cnt * cnt) AS BIGINT) AS sx2 FROM c), "
-        "offs(d) AS (VALUES (-1), (0), (1)), "
-        "sc AS (SELECT c.gx + ox.d AS tgx, c.gy + oy.d AS tgy, "
-        "CAST(SUM(cnt) AS BIGINT) AS w_sum, "
-        "CAST(SUM(CASE WHEN ox.d = 0 AND oy.d = 0 THEN cnt ELSE 0 "
-        "END) AS BIGINT) AS cnt "
-        "FROM c, offs ox, offs oy "
-        "WHERE c.gx + ox.d BETWEEN 0 AND %(mx)d "
-        "AND c.gy + oy.d BETWEEN 0 AND %(mx)d GROUP BY 1, 2), "
-        "j AS (SELECT sc.tgx, sc.tgy, sc.w_sum, sc.cnt, "
-        "(least(sc.tgx + 1, %(mx)d) - greatest(sc.tgx - 1, 0) + 1) "
-        "* (least(sc.tgy + 1, %(mx)d) - greatest(sc.tgy - 1, 0) + 1) "
-        "AS k, sx, sx2 FROM sc, st) "
-        "SELECT (%(base)d + tgx * %(shift)d + tgy) AS cell_id, "
-        "tgx AS gx, tgy AS gy, cnt, w_sum, CAST(k AS BIGINT) AS k, "
-        "(CAST(w_sum AS DOUBLE) - (CAST(sx AS DOUBLE) / %(n)s) "
-        "* CAST(k AS DOUBLE)) / "
-        "(sqrt(CAST(sx2 AS DOUBLE) / %(n)s "
-        "- (CAST(sx AS DOUBLE) / %(n)s) * (CAST(sx AS DOUBLE) / %(n)s)"
-        ") * sqrt((%(n)s * CAST(k AS DOUBLE) "
-        "- CAST(k AS DOUBLE) * CAST(k AS DOUBLE)) / %(nm1)s)) "
-        "AS gi_star FROM j"
-        % {
-            "gx": gx, "gy": gy, "mx": n_grid - 1,
-            "base": res * (2 ** 58), "shift": 2 ** 29,
-            "n": repr(float(n)), "nm1": repr(float(n - 1)),
-        }
-    )
-
-
-def _q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Emerging hot spot analysis (operators/hotspot.py): per-day Gi*
-    over the trajectory fixture's derived points, then the
-    Mann-Kendall trend per cell. mk_s is an INTEGER sign sum over
-    deterministic doubles and the per-bin statistic is the fixed
-    expression tree — bit-oracled end to end."""
-    from pure_python_geospatial_export_spark.operators.hotspot import (
-        emerging_hotspots,
-    )
-
-    return emerging_hotspots(
-        _traj_points(spark, sf_dir), res=5, ts_col="ts",
-        bin_seconds=86_400,
-    )
-
-
-def _emerging_hotspots_sql() -> str:
-    res, n_grid = 5, 32
-    n = n_grid * n_grid
-    gx = ("least(greatest(CAST(floor((lon + 180.0) / 360.0 * %d) "
-          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
-    gy = ("least(greatest(CAST(floor((lat + 90.0) / 180.0 * %d) "
-          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
-    return (
-        "WITH " + _TRAJ_PTS_CTE +
-        ", c AS (SELECT CAST(floor(epoch_us(ts) / 86400000000) "
-        "AS BIGINT) AS bin, %(gx)s AS gx, %(gy)s AS gy, "
-        "COUNT(*) AS cnt FROM p "
-        # the operator DROPS out-of-bbox points (the traj fixture
-        # derives lat > 90 for high user ids); without this the
-        # quantizer would CLAMP them into edge cells instead
-        "WHERE lon >= -180.0 AND lon <= 180.0 "
-        "AND lat >= -90.0 AND lat <= 90.0 GROUP BY 1, 2, 3), "
-        "st AS (SELECT bin, CAST(SUM(cnt) AS BIGINT) AS sx, "
-        "CAST(SUM(cnt * cnt) AS BIGINT) AS sx2 FROM c GROUP BY 1), "
-        "offs(d) AS (VALUES (-1), (0), (1)), "
-        "sc AS (SELECT c.bin, c.gx + ox.d AS tgx, c.gy + oy.d AS tgy, "
-        "CAST(SUM(cnt) AS BIGINT) AS w_sum "
-        "FROM c, offs ox, offs oy "
-        "WHERE c.gx + ox.d BETWEEN 0 AND %(mx)d "
-        "AND c.gy + oy.d BETWEEN 0 AND %(mx)d GROUP BY 1, 2, 3), "
-        "g AS (SELECT sc.bin, sc.tgx AS gx, sc.tgy AS gy, "
-        "(CAST(w_sum AS DOUBLE) - (CAST(sx AS DOUBLE) / %(n)s) * "
-        "CAST((least(sc.tgx + 1, %(mx)d) - greatest(sc.tgx - 1, 0) "
-        "+ 1) * (least(sc.tgy + 1, %(mx)d) - greatest(sc.tgy - 1, 0) "
-        "+ 1) AS DOUBLE)) / (sqrt(CAST(sx2 AS DOUBLE) / %(n)s "
-        "- (CAST(sx AS DOUBLE) / %(n)s) * (CAST(sx AS DOUBLE) / "
-        "%(n)s)) * sqrt((%(n)s * CAST((least(sc.tgx + 1, %(mx)d) - "
-        "greatest(sc.tgx - 1, 0) + 1) * (least(sc.tgy + 1, %(mx)d) - "
-        "greatest(sc.tgy - 1, 0) + 1) AS DOUBLE) - CAST((least("
-        "sc.tgx + 1, %(mx)d) - greatest(sc.tgx - 1, 0) + 1) * "
-        "(least(sc.tgy + 1, %(mx)d) - greatest(sc.tgy - 1, 0) + 1) "
-        "AS DOUBLE) * CAST((least(sc.tgx + 1, %(mx)d) - greatest("
-        "sc.tgx - 1, 0) + 1) * (least(sc.tgy + 1, %(mx)d) - "
-        "greatest(sc.tgy - 1, 0) + 1) AS DOUBLE)) / %(nm1)s)) "
-        "AS gi_star FROM sc JOIN st ON sc.bin = st.bin), "
-        "mk AS (SELECT a.gx, a.gy, CAST(SUM(CAST(sign(b.gi_star - "
-        "a.gi_star) AS BIGINT)) AS BIGINT) AS mk_s "
-        "FROM g a JOIN g b ON a.gx = b.gx AND a.gy = b.gy "
-        "AND a.bin < b.bin GROUP BY 1, 2), "
-        "nb AS (SELECT gx, gy, COUNT(*) AS n_bins FROM g "
-        "GROUP BY 1, 2) "
-        "SELECT (%(base)d + nb.gx * %(shift)d + nb.gy) AS cell_id, "
-        "nb.gx, nb.gy, nb.n_bins, "
-        "COALESCE(mk.mk_s, CAST(0 AS BIGINT)) AS mk_s, "
-        "CASE WHEN nb.n_bins >= 2 THEN (CASE "
-        "WHEN COALESCE(mk.mk_s, 0) > 1 THEN "
-        "(CAST(COALESCE(mk.mk_s, 0) AS DOUBLE) - 1.0) / "
-        "sqrt(CAST(nb.n_bins AS DOUBLE) * (CAST(nb.n_bins AS DOUBLE) "
-        "- 1.0) * (2.0 * CAST(nb.n_bins AS DOUBLE) + 5.0) / 18.0) "
-        "WHEN COALESCE(mk.mk_s, 0) < -1 THEN "
-        "(CAST(COALESCE(mk.mk_s, 0) AS DOUBLE) + 1.0) / "
-        "sqrt(CAST(nb.n_bins AS DOUBLE) * (CAST(nb.n_bins AS DOUBLE) "
-        "- 1.0) * (2.0 * CAST(nb.n_bins AS DOUBLE) + 5.0) / 18.0) "
-        "ELSE 0.0 END) ELSE 0.0 END AS mk_z "
-        "FROM nb LEFT JOIN mk ON nb.gx = mk.gx AND nb.gy = mk.gy"
-        % {
-            "gx": gx, "gy": gy, "mx": n_grid - 1,
-            "base": res * (2 ** 58), "shift": 2 ** 29,
-            "n": repr(float(n)), "nm1": repr(float(n - 1)),
-        }
-    )
-
-
-def _q_grid_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source shortest paths (operators/graph.py) over a
-    deterministic 12x12 weighted grid, sources at opposite corners.
-    Integer weights make every distance an integer and min-folds
-    order-free, so the DuckDB twin — FIXED 24 chained relax CTEs
-    (>= the 22-hop diameter; extra rounds are no-ops, min is
-    idempotent) — reaches the same fixpoint bit-for-bit (the hilbert
-    chained-CTE discipline)."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        shortest_paths,
-    )
-
-    n = spark.range(144).select(
-        F.col("id"),
-        (F.col("id") / 12).cast("long").alias("i"),
-        (F.col("id") % 12).alias("j"),
-    )
-    right = n.where(F.col("j") < 11).select(
-        F.col("id").alias("src"),
-        (F.col("id") + 1).alias("dst"),
-        (F.lit(1) + (F.col("i") * 7 + F.col("j") * 13) % 5).alias("w"),
-    )
-    down = n.where(F.col("i") < 11).select(
-        F.col("id").alias("src"),
-        (F.col("id") + 12).alias("dst"),
-        (F.lit(1) + (F.col("i") * 11 + F.col("j") * 3) % 7).alias("w"),
-    )
-    edges = right.unionByName(down)
-    return shortest_paths(
-        edges, [0, 143], directed=False, max_rounds=30
-    )
-
-
-def _grid_paths_sql() -> str:
-    rounds = []
-    prev = "d0"
-    for r in range(1, 25):
-        # MATERIALIZED: each round references the previous one
-        # TWICE (carry + relax); inlined CTEs would double the
-        # expression tree per round — 2^24 blowup (the hilbert
-        # single-reference lesson, solved here by materialization)
-        rounds.append(
-            "d{r} AS MATERIALIZED (SELECT node, MIN(dist) AS dist "
-            "FROM (SELECT node, dist FROM {p} "
-            "UNION ALL "
-            "SELECT e.dst AS node, {p}.dist + e.w AS dist "
-            "FROM {p} JOIN e ON {p}.node = e.src) GROUP BY 1)".format(
-                r=r, p=prev,
-            )
-        )
-        prev = "d%d" % r
-    return (
-        "WITH n AS (SELECT CAST(range AS BIGINT) AS id "
-        "FROM range(144)), "
-        "e0 AS (SELECT id AS src, id + 1 AS dst, "
-        "1 + ((id // 12) * 7 + (id % 12) * 13) % 5 AS w "
-        "FROM n WHERE id % 12 < 11 "
-        "UNION ALL SELECT id, id + 12, "
-        "1 + ((id // 12) * 11 + (id % 12) * 3) % 7 "
-        "FROM n WHERE id // 12 < 11), "
-        "e AS (SELECT src, dst, w FROM e0 "
-        "UNION ALL SELECT dst, src, w FROM e0), "
-        "d0 AS (SELECT CAST(0 AS BIGINT) AS node, "
-        "CAST(0 AS BIGINT) AS dist "
-        "UNION ALL SELECT CAST(143 AS BIGINT), CAST(0 AS BIGINT)), "
-        + ", ".join(rounds) +
-        " SELECT node, dist FROM %s" % prev
-    )
-
-
-def _q_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-integer PageRank (operators/graph.py:pagerank) over a
-    deterministic 50-node directed web graph with dangling nodes
-    (every id % 7 == 0 never links out). scale=2**40 BIGINT ranks
-    with truncating DIV at every division make all arithmetic
-    order-free integers, so the DuckDB twin — 10 chained MATERIALIZED
-    rank CTEs mirroring the update formula — lands on the same
-    integers bit-for-bit."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        pagerank,
-    )
-
-    ids = spark.range(50).where(F.col("id") % 7 != 0)
-    e1 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * 3 + 1) % 50).alias("dst"),
-    )
-    e2 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * F.col("id") + 2) % 50).alias("dst"),
-    )
-    pr = pagerank(
-        e1.unionByName(e2), iterations=10, scale=2 ** 40
-    )
-    return pr.select("node", F.col("rank").alias("pr"))
-
-
-def _page_rank_sql() -> str:
-    scale, num, den, iters = 2 ** 40, 85, 100, 10
-    srcs = [i for i in range(50) if i % 7 != 0]
-    nodes = sorted(
-        set(srcs)
-        | {(3 * i + 1) % 50 for i in srcs}
-        | {(i * i + 2) % 50 for i in srcs}
-    )
-    n = len(nodes)
-    teleport = ((den - num) * scale) // (den * n)
-    rounds = []
-    prev = "r0"
-    for r in range(1, iters + 1):
-        # MATERIALIZED: each round reads the previous one TWICE
-        # (votes + dangling mass) — the grid_paths CTE discipline
-        rounds.append(
-            "r{r} AS MATERIALIZED (SELECT nd.node, nd.deg, "
-            "CAST({tp} + ({num} * (COALESCE(sv.sv, 0) + dg.dgl)) "
-            "// {den} AS BIGINT) AS pr FROM nd "
-            "LEFT JOIN (SELECT e.dst AS node, SUM(p.pr // p.deg) "
-            "AS sv FROM {p} p JOIN e ON p.node = e.src "
-            "WHERE p.deg > 0 GROUP BY 1) sv USING (node) "
-            "CROSS JOIN (SELECT COALESCE(SUM(pr), 0) // {n} AS dgl "
-            "FROM {p} WHERE deg = 0) dg)".format(
-                r=r, p=prev, tp=teleport, num=num, den=den, n=n,
-            )
-        )
-        prev = "r%d" % r
-    return (
-        "WITH e AS MATERIALIZED ("
-        "SELECT CAST(range AS BIGINT) AS src, "
-        "(range * 3 + 1) % 50 AS dst FROM range(50) "
-        "WHERE range % 7 <> 0 "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range * range + 2) % 50 FROM range(50) "
-        "WHERE range % 7 <> 0), "
-        "nd AS MATERIALIZED (SELECT n.node, "
-        "COALESCE(d.deg, 0) AS deg FROM "
-        "(SELECT DISTINCT node FROM (SELECT src AS node FROM e "
-        "UNION ALL SELECT dst FROM e)) n "
-        "LEFT JOIN (SELECT src AS node, COUNT(*) AS deg FROM e "
-        "GROUP BY 1) d USING (node)), "
-        "r0 AS MATERIALIZED (SELECT node, deg, "
-        "CAST(" + str(scale // n) + " AS BIGINT) AS pr FROM nd), "
-        + ", ".join(rounds)
-        + " SELECT node, pr FROM " + prev
-    )
-
-
-def _q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERSONALIZED PageRank (operators/graph.pagerank with seeds):
-    teleport + dangling mass concentrate on seeds {1, 8, 15} of the
-    same 50-node web graph as page_rank. Same exact-integer
-    discipline — the DuckDB twin adds a seed CASE to the teleport
-    and dangling terms and lands on the same BIGINTs."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        pagerank,
-    )
-
-    ids = spark.range(50).where(F.col("id") % 7 != 0)
-    e1 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * 3 + 1) % 50).alias("dst"),
-    )
-    e2 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * F.col("id") + 2) % 50).alias("dst"),
-    )
-    pr = pagerank(
-        e1.unionByName(e2),
-        iterations=10,
-        scale=2 ** 40,
-        seeds=[1, 8, 15],
-    )
-    return pr.select("node", F.col("rank").alias("ppr"))
-
-
-def _ppr_sql() -> str:
-    scale, num, den, iters = 2 ** 40, 85, 100, 10
-    seeds = (1, 8, 15)
-    sn = len(seeds)
-    seed_pred = "node IN (1, 8, 15)"
-    tp = ((den - num) * scale) // (den * sn)
-    rounds = []
-    prev = "r0"
-    for r in range(1, iters + 1):
-        rounds.append(
-            "r{r} AS MATERIALIZED (SELECT nd.node, nd.deg, "
-            "CAST(CASE WHEN nd.{sp} THEN {tp} ELSE 0 END "
-            "+ ({num} * (COALESCE(sv.sv, 0) "
-            "+ CASE WHEN nd.{sp} THEN dg.dgl ELSE 0 END)) "
-            "// {den} AS BIGINT) AS pr FROM nd "
-            "LEFT JOIN (SELECT e.dst AS node, SUM(p.pr // p.deg) "
-            "AS sv FROM {p} p JOIN e ON p.node = e.src "
-            "WHERE p.deg > 0 GROUP BY 1) sv USING (node) "
-            "CROSS JOIN (SELECT COALESCE(SUM(pr), 0) // {sn} AS dgl "
-            "FROM {p} WHERE deg = 0) dg)".format(
-                r=r, p=prev, tp=tp, num=num, den=den,
-                sn=sn, sp=seed_pred,
-            )
-        )
-        prev = "r%d" % r
-    return (
-        "WITH e AS MATERIALIZED ("
-        "SELECT CAST(range AS BIGINT) AS src, "
-        "(range * 3 + 1) % 50 AS dst FROM range(50) "
-        "WHERE range % 7 <> 0 "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range * range + 2) % 50 FROM range(50) "
-        "WHERE range % 7 <> 0), "
-        "nd AS MATERIALIZED (SELECT n.node, "
-        "COALESCE(d.deg, 0) AS deg FROM "
-        "(SELECT DISTINCT node FROM (SELECT src AS node FROM e "
-        "UNION ALL SELECT dst FROM e)) n "
-        "LEFT JOIN (SELECT src AS node, COUNT(*) AS deg FROM e "
-        "GROUP BY 1) d USING (node)), "
-        "r0 AS MATERIALIZED (SELECT node, deg, "
-        "CAST(CASE WHEN " + seed_pred + " THEN "
-        + str(scale // sn) + " ELSE 0 END AS BIGINT) AS pr FROM nd), "
-        + ", ".join(rounds)
-        + " SELECT node, pr AS ppr FROM " + prev
-    )
-
-
-def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS hubs & authorities (operators/graph.py:hits) over the
-    same 50-node web graph as page_rank, exact-integer mode:
-    scale=2**20 BIGINT scores with the L1 renormalization done as
-    ``(K * raw) DIV SUM(raw)`` — integer multiply/sum/DIV only, so
-    the DuckDB twin (8 chained auth/hub CTE rounds mirroring the
-    push + renormalize) lands on the same integers bit-for-bit.
-    K is 2**20, not page_rank's 2**40: the renormalization product
-    needs scale**2 * total_edge_weight < 2**63 (see hits())."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        hits,
-    )
-
-    ids = spark.range(50).where(F.col("id") % 7 != 0)
-    e1 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * 3 + 1) % 50).alias("dst"),
-    )
-    e2 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * F.col("id") + 2) % 50).alias("dst"),
-    )
-    return hits(
-        e1.unionByName(e2), iterations=8, scale=2 ** 20
-    ).select("node", "hub", "auth")
-
-
-def _hits_sql() -> str:
-    scale, iters = 2 ** 20, 8
-    srcs = [i for i in range(50) if i % 7 != 0]
-    nodes = sorted(
-        set(srcs)
-        | {(3 * i + 1) % 50 for i in srcs}
-        | {(i * i + 2) % 50 for i in srcs}
-    )
-    n = len(nodes)
-    rounds = []
-    prev_h = "h0"
-    for r in range(1, iters + 1):
-        # push hub mass along edges -> raw auth; L1-renormalize to
-        # total ~ K with truncating //; then the mirror for hubs.
-        # MATERIALIZED: s{r}/u{r} are each read twice (norm + total)
-        rounds.append(
-            "s{r} AS MATERIALIZED (SELECT e.dst AS node, "
-            "SUM(p.hub) AS raw FROM {ph} p JOIN e ON p.node = e.src "
-            "GROUP BY 1), "
-            "a{r} AS MATERIALIZED (SELECT nd.node, "
-            "CAST(({k} * COALESCE(s.raw, 0)) // t.m AS BIGINT) "
-            "AS auth FROM nd LEFT JOIN s{r} s USING (node) "
-            "CROSS JOIN (SELECT SUM(raw) AS m FROM s{r}) t), "
-            "u{r} AS MATERIALIZED (SELECT e.src AS node, "
-            "SUM(a.auth) AS raw FROM a{r} a JOIN e ON a.node = e.dst "
-            "GROUP BY 1), "
-            "h{r} AS MATERIALIZED (SELECT nd.node, "
-            "CAST(({k} * COALESCE(u.raw, 0)) // t.m AS BIGINT) "
-            "AS hub FROM nd LEFT JOIN u{r} u USING (node) "
-            "CROSS JOIN (SELECT SUM(raw) AS m FROM u{r}) t)".format(
-                r=r, ph=prev_h, k=scale,
-            )
-        )
-        prev_h = "h%d" % r
-    return (
-        "WITH e AS MATERIALIZED ("
-        "SELECT CAST(range AS BIGINT) AS src, "
-        "(range * 3 + 1) % 50 AS dst FROM range(50) "
-        "WHERE range % 7 <> 0 "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range * range + 2) % 50 FROM range(50) "
-        "WHERE range % 7 <> 0), "
-        "nd AS MATERIALIZED (SELECT DISTINCT node FROM "
-        "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e)), "
-        "h0 AS MATERIALIZED (SELECT node, "
-        "CAST(" + str(scale // n) + " AS BIGINT) AS hub FROM nd), "
-        + ", ".join(rounds)
-        + " SELECT h.node, h.hub, a.auth FROM h{i} h "
-        "JOIN a{i} a USING (node)".format(i=iters)
-    )
-
-
-def _q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly connected components (operators/graph.py:
-    strongly_connected_components) over a deterministic 60-node
-    directed graph: 10-cycles on even decades, chain links between
-    decades, and a side pair pulling node 13 into the 20s cycle.
-    SCC labels are min-member — a pure function of the graph — so
-    the DuckDB twin derives them INDEPENDENTLY of the algorithm via
-    a doubled transitive closure (6 rounds cover paths <= 64) and
-    mutual-reachability min."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        strongly_connected_components,
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    i = F.col("id")
-    cyc = (
-        spark.range(60)
-        .where((i / 10).cast("long") % 2 == 0)
-        .select(
-            i.alias("src"),
-            ((i / 10).cast("long") * 10 + (i + 1) % 10).alias("dst"),
-        )
-    )
-    chain = (
-        spark.range(50)
-        .where(i % 10 == 3)
-        .select(i.alias("src"), (i + 10).alias("dst"))
-    )
-    extra = local_df(spark, [(13, 27), (25, 13)], ["src", "dst"])
-    return strongly_connected_components(
-        cyc.unionByName(chain).unionByName(extra)
-    )
-
-
-def _scc_sql() -> str:
-    rounds = 6
-    body, prev = [], "r0"
-    for r in range(1, rounds + 1):
-        body.append(
-            "r{r} AS MATERIALIZED (SELECT DISTINCT a.u, b.v "
-            "FROM {p} a JOIN {p} b ON a.v = b.u)".format(r=r, p=prev)
-        )
-        prev = "r%d" % r
-    return (
-        "WITH e AS MATERIALIZED ("
-        "SELECT range AS src, (range // 10) * 10 + (range + 1) % 10 "
-        "AS dst FROM range(60) WHERE (range // 10) % 2 = 0 "
-        "UNION ALL SELECT range, range + 10 FROM range(50) "
-        "WHERE range % 10 = 3 "
-        "UNION ALL SELECT * FROM (VALUES (13, 27), (25, 13)) "
-        "v(src, dst)), "
-        "nd AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e "
-        "UNION ALL SELECT dst FROM e)), "
-        # identity rows make the closure reflexive, so doubling
-        # accumulates all path lengths (not just powers of two)
-        "r0 AS MATERIALIZED (SELECT src AS u, dst AS v FROM e "
-        "UNION SELECT node, node FROM nd), "
-        + ", ".join(body)
-        + " SELECT CAST(f.u AS BIGINT) AS node, "
-        "CAST(MIN(f.v) AS BIGINT) AS scc FROM " + prev + " f "
-        "JOIN " + prev + " b ON f.u = b.v AND f.v = b.u "
-        "GROUP BY f.u"
-    )
-
-
-def _q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact triangle counts + clustering coefficients
-    (operators/graph.py:triangle_counts) over a deterministic
-    48-node circulant graph (ring + 2-chords + 7x+3 chords, plus
-    duplicate/reversed inputs the canonicalization must absorb).
-    Counts are integers and the coefficient is ONE division of
-    exact integers, so the DuckDB twin (same orient/wedge/close
-    joins) matches bit-for-bit."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        triangle_counts,
-    )
-
-    ids = spark.range(48)
-    ring = ids.select(
-        F.col("id").alias("src"), ((F.col("id") + 1) % 48).alias("dst")
-    )
-    chord2 = ids.select(
-        F.col("id").alias("src"), ((F.col("id") + 2) % 48).alias("dst")
-    )
-    chord7 = ids.select(
-        F.col("id").alias("src"),
-        ((F.col("id") * 7 + 3) % 48).alias("dst"),
-    )
-    return triangle_counts(
-        ring.unionByName(chord2).unionByName(chord7)
-    )
-
-
-def _triangles_sql() -> str:
-    return (
-        "WITH e0 AS ("
-        "SELECT CAST(range AS BIGINT) AS src, "
-        "(range + 1) % 48 AS dst FROM range(48) "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range + 2) % 48 FROM range(48) "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range * 7 + 3) % 48 FROM range(48)), "
-        "canon AS MATERIALIZED (SELECT DISTINCT "
-        "LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
-        "FROM e0 WHERE src <> dst), "
-        "deg AS MATERIALIZED (SELECT node, COUNT(*) AS degree "
-        "FROM (SELECT a AS node FROM canon "
-        "UNION ALL SELECT b FROM canon) GROUP BY 1), "
-        "orient AS MATERIALIZED (SELECT "
-        "CASE WHEN da.degree < db.degree OR (da.degree = db.degree "
-        "AND a < b) THEN a ELSE b END AS u, "
-        "CASE WHEN da.degree < db.degree OR (da.degree = db.degree "
-        "AND a < b) THEN b ELSE a END AS v "
-        "FROM canon JOIN deg da ON da.node = canon.a "
-        "JOIN deg db ON db.node = canon.b), "
-        "tri AS MATERIALIZED (SELECT o1.u AS u, o1.v AS v, o2.v AS w "
-        "FROM orient o1 JOIN orient o2 ON o1.u = o2.u "
-        "AND o1.v < o2.v "
-        "JOIN canon c ON c.a = o1.v AND c.b = o2.v), "
-        "tc AS (SELECT node, COUNT(*) AS triangles FROM "
-        "(SELECT u AS node FROM tri UNION ALL SELECT v FROM tri "
-        "UNION ALL SELECT w FROM tri) GROUP BY 1) "
-        "SELECT deg.node, deg.degree, "
-        "CAST(COALESCE(tc.triangles, 0) AS BIGINT) AS triangles, "
-        "CASE WHEN deg.degree >= 2 THEN "
-        "2.0 * COALESCE(tc.triangles, 0) / "
-        "(CAST(deg.degree AS DOUBLE) * "
-        "(CAST(deg.degree AS DOUBLE) - 1.0)) "
-        "ELSE 0.0 END AS clustering "
-        "FROM deg LEFT JOIN tc USING (node)"
-    )
-
-
-def _q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Synchronous deterministic label propagation
-    (operators/graph.label_propagation) over two 20-node circulant
-    blobs joined by one bridge edge. All-integer update with a
-    smallest-label tie-break makes the result a pure function of
-    (graph, rounds), so the DuckDB twin — 4 chained MATERIALIZED
-    label CTEs (GROUP BY counts + ROW_NUMBER cnt DESC, label) —
-    matches bit-for-bit."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        label_propagation,
-    )
-
-    ids = spark.range(20)
-    i = F.col("id")
-    blob_a = ids.select(
-        i.alias("src"), ((i + 1) % 20).alias("dst")
-    ).unionByName(
-        ids.select(i.alias("src"), ((i + 3) % 20).alias("dst"))
-    )
-    blob_b = ids.select(
-        (i + 20).alias("src"), ((i + 1) % 20 + 20).alias("dst")
-    ).unionByName(
-        ids.select((i + 20).alias("src"), ((i + 4) % 20 + 20).alias("dst"))
-    )
-    bridge = spark.range(1).select(
-        F.lit(5).cast("long").alias("src"),
-        F.lit(25).cast("long").alias("dst"),
-    )
-    edges = blob_a.unionByName(blob_b).unionByName(bridge)
-    return label_propagation(edges, iterations=4)
-
-
-def _lpa_round_sql(r: int, prev: str) -> str:
-    return (
-        "l{r} AS MATERIALIZED (SELECT l.node, "
-        "COALESCE(b.label, l.label) AS label "
-        "FROM {p} l LEFT JOIN ("
-        "SELECT node, label FROM ("
-        "SELECT node, label, ROW_NUMBER() OVER ("
-        "PARTITION BY node ORDER BY cnt DESC, label) AS rn "
-        "FROM (SELECT a.node AS node, l2.label AS label, "
-        "COUNT(*) AS cnt FROM adj a JOIN {p} l2 ON a.nbr = l2.node "
-        "GROUP BY 1, 2)) WHERE rn = 1) b USING (node))"
-    ).format(r=r, p=prev)
-
-
-def _communities_sql() -> str:
-    rounds, prev = [], "l0"
-    for r in range(1, 5):
-        rounds.append(_lpa_round_sql(r, prev))
-        prev = "l%d" % r
-    return (
-        "WITH e0 AS ("
-        "SELECT CAST(range AS BIGINT) AS src, "
-        "(range + 1) % 20 AS dst FROM range(20) "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range + 3) % 20 FROM range(20) "
-        "UNION ALL SELECT CAST(range + 20 AS BIGINT), "
-        "(range + 1) % 20 + 20 FROM range(20) "
-        "UNION ALL SELECT CAST(range + 20 AS BIGINT), "
-        "(range + 4) % 20 + 20 FROM range(20) "
-        "UNION ALL SELECT CAST(5 AS BIGINT), CAST(25 AS BIGINT)), "
-        "canon AS MATERIALIZED (SELECT DISTINCT "
-        "LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
-        "FROM e0 WHERE src <> dst), "
-        "adj AS MATERIALIZED (SELECT a AS node, b AS nbr FROM canon "
-        "UNION ALL SELECT b, a FROM canon), "
-        "l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label "
-        "FROM adj), "
-        + ", ".join(rounds)
-        + " SELECT node, label FROM " + prev
-    )
-
-
-def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (operators/graph.core_numbers, the
-    h-index iteration) over a 24-node chorded ring with a planted
-    6-clique and a 3-node pendant path — coreness spans 1..5. The
-    h-index is tie-order invariant and integer, and h(coreness) =
-    coreness makes extra rounds no-ops, so the operator's
-    run-to-fixpoint output equals a FIXED 12-round chained-CTE DuckDB
-    twin bit-for-bit (the grid_paths idempotence discipline)."""
-    from pure_python_geospatial_export_spark.operators.graph import (
-        core_numbers,
-    )
-
-    ids = spark.range(24)
-    i = F.col("id")
-    ring = ids.select(i.alias("src"), ((i + 1) % 24).alias("dst"))
-    chords = ids.where(i % 2 == 0).select(
-        i.alias("src"), ((i + 6) % 24).alias("dst")
-    )
-    six = spark.range(6)
-    clique = (
-        six.select(F.col("id").alias("src"))
-        .crossJoin(six.select(F.col("id").alias("dst")))
-        .where(F.col("src") < F.col("dst"))
-    )
-    path = spark.range(2).select(
-        (F.col("id") + 40).alias("src"),
-        (F.col("id") + 41).alias("dst"),
-    )
-    tether = spark.range(1).select(
-        F.lit(40).cast("long").alias("src"),
-        F.lit(0).cast("long").alias("dst"),
-    )
-    edges = (
-        ring.unionByName(chords)
-        .unionByName(clique)
-        .unionByName(path)
-        .unionByName(tether)
-    )
-    return core_numbers(edges)
-
-
-def _kcore_round_sql(r: int, prev: str) -> str:
-    return (
-        "c{r} AS MATERIALIZED (SELECT c.node, "
-        "LEAST(c.core, h.h) AS core FROM {p} c JOIN ("
-        "SELECT node, MAX(LEAST(val, rn)) AS h FROM ("
-        "SELECT a.node AS node, c2.core AS val, "
-        "ROW_NUMBER() OVER (PARTITION BY a.node "
-        "ORDER BY c2.core DESC, a.nbr) AS rn "
-        "FROM adj a JOIN {p} c2 ON a.nbr = c2.node) "
-        "GROUP BY 1) h USING (node))"
-    ).format(r=r, p=prev)
-
-
-def _kcore_sql() -> str:
-    rounds, prev = [], "c0"
-    for r in range(1, 13):
-        rounds.append(_kcore_round_sql(r, prev))
-        prev = "c%d" % r
-    return (
-        "WITH e0 AS ("
-        "SELECT CAST(range AS BIGINT) AS src, "
-        "(range + 1) % 24 AS dst FROM range(24) "
-        "UNION ALL SELECT CAST(range AS BIGINT), "
-        "(range + 6) % 24 FROM range(24) WHERE range % 2 = 0 "
-        "UNION ALL SELECT s.s, d.d FROM "
-        "(SELECT CAST(range AS BIGINT) AS s FROM range(6)) s, "
-        "(SELECT CAST(range AS BIGINT) AS d FROM range(6)) d "
-        "WHERE s.s < d.d "
-        "UNION ALL SELECT CAST(range + 40 AS BIGINT), "
-        "range + 41 FROM range(2) "
-        "UNION ALL SELECT CAST(40 AS BIGINT), CAST(0 AS BIGINT)), "
-        "canon AS MATERIALIZED (SELECT DISTINCT "
-        "LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
-        "FROM e0 WHERE src <> dst), "
-        "adj AS MATERIALIZED (SELECT a AS node, b AS nbr FROM canon "
-        "UNION ALL SELECT b, a FROM canon), "
-        "c0 AS MATERIALIZED (SELECT node, COUNT(*) AS core FROM adj "
-        "GROUP BY 1), "
-        + ", ".join(rounds)
-        + " SELECT node, core FROM " + prev
-    )
-
-
-def _synth_html_col() -> "F.Column":
-    """Deterministic html per id — the Spark half of the shared
-    fixture; _synth_html_sql is the character-identical DuckDB half
-    (long->string casts print identically on both engines, the
-    functions/points.py discipline)."""
-    i = F.col("id")
-    return F.concat(
-        F.lit("<html><head><title>Page "),
-        i.cast("string"),
-        F.lit(
-            " &amp; co</title><style>h1{x:y}</style></head>"
-            "<body><!-- c --><script>var a=1;</script><h1>Doc "
-        ),
-        i.cast("string"),
-        F.lit("</h1>\n<p>alpha &lt;b&gt; "),
-        (i * i % 97).cast("string"),
-        F.lit('</p><a href="https://example-'),
-        (i % 7).cast("string"),
-        F.lit(".test/page/"),
-        (i % 50).cast("string"),
-        F.lit('">l</a><a href="/rel">r</a>'),
-        F.when(
-            i % 3 == 0,
-            F.lit('<a href="https://hub.test/h">hub</a>'),
-        ).otherwise(F.lit("")),
-        F.lit("</body></html>"),
-    )
-
-
-def _synth_html_sql() -> str:
-    return (
-        "'<html><head><title>Page ' || id::VARCHAR || "
-        "' &amp; co</title><style>h1{x:y}</style></head>"
-        "<body><!-- c --><script>var a=1;</script><h1>Doc ' || "
-        "id::VARCHAR || '</h1>\n<p>alpha &lt;b&gt; ' || "
-        "(id * id % 97)::VARCHAR || "
-        "'</p><a href=\"https://example-' || (id % 7)::VARCHAR || "
-        "'.test/page/' || (id % 50)::VARCHAR || "
-        "'\">l</a><a href=\"/rel\">r</a>' || "
-        "CASE WHEN id % 3 = 0 THEN "
-        "'<a href=\"https://hub.test/h\">hub</a>' ELSE '' END || "
-        "'</body></html>'"
-    )
-
-
-def _q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HTML text/title/link extraction (functions/html.py): visible
-    text, entity decode (&amp; last), script/style/comment removal,
-    whitespace squeeze, double-quoted href harvest — all JVM regexp
-    columns restricted to the Java∩RE2 regex subset, so the DuckDB
-    twin running the SAME patterns is character-identical."""
-    from pure_python_geospatial_export_spark.functions import (
-        html as H,
-    )
-
-    pages = spark.range(240).select(
-        "id", _synth_html_col().alias("html")
-    )
-    h = F.col("html")
-    return pages.select(
-        "id",
-        H.html_title(h).alias("title"),
-        H.html_text(h).alias("text"),
-        F.size(H.html_links(h)).cast("long").alias("n_links"),
-    )
-
-
-def _html_extract_sql() -> str:
-    from pure_python_geospatial_export_spark.functions import html as H
-
-    return (
-        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
-        "FROM range(240)), "
-        "pages AS (SELECT id, "
-        + _synth_html_sql()
-        + " AS html FROM ids) "
-        "SELECT id, %s AS title, %s AS text, "
-        "CAST(len(%s) AS BIGINT) AS n_links FROM pages"
-        % (
-            H.html_title_sql("html"),
-            H.html_text_sql("html"),
-            H.html_links_sql("html"),
-        )
-    )
-
-
-def _q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Host-level link graph (operators/web.host_link_edges): per-page
-    hrefs -> absolute-only filter -> (src_host, dst_host) edges ->
-    count per pair. The stage PageRank consumes (page_rank oracles the
-    iteration itself); relative hrefs must drop, multi-links count."""
-    from pure_python_geospatial_export_spark.operators.web import (
-        host_link_edges,
-    )
-
-    pages = spark.range(240).select(
-        F.concat(
-            F.lit("https://site-"),
-            (F.col("id") % 9).cast("string"),
-            F.lit(".test/p/"),
-            F.col("id").cast("string"),
-        ).alias("url"),
-        _synth_html_col().alias("html"),
-    )
-    return (
-        host_link_edges(pages)
-        .groupBy(
-            F.col("src").alias("src_host"),
-            F.col("dst").alias("dst_host"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_links"))
-    )
-
-
-def _link_graph_sql() -> str:
-    from pure_python_geospatial_export_spark.functions import html as H
-    from pure_python_geospatial_export_spark.functions import urls as U
-
-    return (
-        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
-        "FROM range(240)), "
-        "pages AS (SELECT 'https://site-' || "
-        "(id % 9)::VARCHAR || '.test/p/' || "
-        "id::VARCHAR AS url, "
-        + _synth_html_sql()
-        + " AS html FROM ids), "
-        "hrefs AS (SELECT url, unnest(%s) AS href FROM pages), "
-        "edges AS (SELECT %s AS src_host, %s AS dst_host FROM hrefs "
-        "WHERE regexp_matches(href, '^https?://')) "
-        "SELECT src_host, dst_host, COUNT(*) AS n_links FROM edges "
-        "WHERE src_host <> '' AND dst_host <> '' "
-        "GROUP BY 1, 2"
-        % (
-            H.html_links_sql("html"),
-            U.url_host_sql("url"),
-            U.url_host_sql("href"),
-        )
-    )
-
-
-def _q_anchor_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-target-host anchor-term index (operators/web.anchor_terms):
-    whole <a> elements -> (src_host, dst_host, anchor text) ->
-    lowercased whitespace terms counted per target, pruned below
-    min_count. The DuckDB twin unnests the same Java∩RE2 anchor
-    regexes and recomputes the split/count — integer counts, so the
-    compare is exact."""
-    from pure_python_geospatial_export_spark.operators.web import (
-        anchor_terms,
-    )
-
-    i = F.col("id")
-    pages = spark.range(240).select(
-        F.concat(
-            F.lit("https://site-"),
-            (i % 9).cast("string"),
-            F.lit(".test/p/"),
-            i.cast("string"),
-        ).alias("url"),
-        F.concat(
-            F.lit('<a href="https://t-'),
-            (i % 5).cast("string"),
-            F.lit('.test/a">Buy <b>cheap</b> widget '),
-            (i % 4).cast("string"),
-            F.lit('</a><a href="/local">home page</a>'),
-            F.when(
-                i % 2 == 0,
-                F.concat(
-                    F.lit('<a href="https://t-'),
-                    ((i + 1) % 5).cast("string"),
-                    F.lit('.test/b">widgets &amp; gadgets now</a>'),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                i % 6 == 1,
-                F.lit('<a href="https://img.test/i">'
-                      '<img src="x.png"></a>'),
-            ).otherwise(F.lit("")),
-        ).alias("html"),
-    )
-    return anchor_terms(pages, min_count=20)
-
-
-def _anchor_index_sql() -> str:
-    from pure_python_geospatial_export_spark.functions import html as H
-    from pure_python_geospatial_export_spark.functions import urls as U
-
-    # plain concatenation: the fixture literals are full of SQL '%'
-    return (
-        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
-        "FROM range(240)), "
-        "pages AS (SELECT 'https://site-' || (id % 9)::VARCHAR || "
-        "'.test/p/' || id::VARCHAR AS url, "
-        "'<a href=\"https://t-' || (id % 5)::VARCHAR || "
-        "'.test/a\">Buy <b>cheap</b> widget ' || (id % 4)::VARCHAR || "
-        "'</a><a href=\"/local\">home page</a>' || "
-        "CASE WHEN id % 2 = 0 THEN '<a href=\"https://t-' || "
-        "((id + 1) % 5)::VARCHAR || "
-        "'.test/b\">widgets &amp; gadgets now</a>' ELSE '' END || "
-        "CASE WHEN id % 6 = 1 THEN "
-        "'<a href=\"https://img.test/i\"><img src=\"x.png\"></a>' "
-        "ELSE '' END AS html FROM ids), "
-        "an AS (SELECT url, unnest(" + H.html_anchors_sql("html")
-        + ") AS a FROM pages), "
-        "hr AS (SELECT url, a, " + H.anchor_href_sql("a")
-        + " AS href FROM an), "
-        "ed AS (SELECT " + U.url_host_sql("url") + " AS src, "
-        + U.url_host_sql("href") + " AS dst, "
-        + H.anchor_text_sql("a") + " AS anchor FROM hr "
-        "WHERE regexp_matches(href, '^https?://')), "
-        "tm AS (SELECT dst, lower(t) AS term FROM "
-        "(SELECT dst, unnest(string_split(anchor, ' ')) AS t "
-        "FROM ed WHERE src <> '' AND dst <> '') WHERE t <> '') "
-        "SELECT dst, term, COUNT(*) AS n FROM tm GROUP BY 1, 2 "
-        "HAVING COUNT(*) >= 20"
-    )
-
-
-def _q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Redirect-chain resolution (operators/web.resolve_redirects):
-    pointer DOUBLING with exact hop counts over a deterministic url
-    redirect table — chains up to 6 hops, a 3-cycle, a self-redirect,
-    a chain feeding the cycle, and a conflicting src (min-dst rule).
-    Equality joins + integer adds only, so the DuckDB twin running
-    the same 5 doubling rounds lands on identical rows."""
-    from pure_python_geospatial_export_spark.operators.web import (
-        resolve_redirects,
-    )
-
-    i = F.col("id")
-    u = lambda c: F.concat(F.lit("u"), c.cast("string"))  # noqa: E731
-    chains = (
-        spark.range(100)
-        .where(i % 10 < 6)
-        .select(u(i).alias("src"), u(i + 1).alias("dst"))
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    extras = local_df(
-        spark,
-        [
-            ("c200", "c201"), ("c201", "c202"), ("c202", "c200"),
-            ("s300", "s300"),
-            ("into", "c200"),
-            ("m400", "u2"), ("m400", "u1"),
-        ],
-        ["src", "dst"],
-    )
-    return resolve_redirects(chains.unionByName(extras), max_hops=32)
-
-
-def _redirect_resolve_sql() -> str:
-    rounds = 5  # ceil(log2(32)) — mirrors resolve_redirects
-    body = []
-    prev = "p0"
-    for r in range(1, rounds + 1):
-        body.append(
-            "p{r} AS MATERIALIZED (SELECT a.node, b.ptr, "
-            "a.h + b.h AS h FROM {p} a JOIN {p} b "
-            "ON a.ptr = b.node)".format(r=r, p=prev)
-        )
-        prev = "p%d" % r
-    return (
-        "WITH e AS MATERIALIZED ("
-        "SELECT 'u' || range::VARCHAR AS src, "
-        "'u' || (range + 1)::VARCHAR AS dst FROM range(100) "
-        "WHERE range % 10 < 6 "
-        "UNION ALL SELECT * FROM (VALUES "
-        "('c200','c201'), ('c201','c202'), ('c202','c200'), "
-        "('s300','s300'), ('into','c200'), "
-        "('m400','u2'), ('m400','u1')) v(src, dst)), "
-        "m AS MATERIALIZED (SELECT src AS node, MIN(dst) AS ptr "
-        "FROM e GROUP BY 1), "
-        "p0 AS MATERIALIZED (SELECT node, ptr, CAST(1 AS BIGINT) "
-        "AS h FROM m UNION ALL "
-        "SELECT t.node, t.node, 0 FROM (SELECT DISTINCT ptr AS node "
-        "FROM m WHERE ptr NOT IN (SELECT node FROM m)) t), "
-        + ", ".join(body)
-        + " SELECT p.node AS src, "
-        "CASE WHEN ok THEN p.ptr END AS final, "
-        "CASE WHEN ok THEN p.h END AS n_hops, ok AS resolved FROM "
-        "(SELECT p.*, c.node IS NULL AND p.h <= 32 AS ok FROM "
-        + prev + " p LEFT JOIN (SELECT DISTINCT node FROM m) c "
-        "ON p.ptr = c.node WHERE p.node IN (SELECT node FROM m)) p"
-    )
-
-
-def _q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Robots-exclusion crawl gate (operators/robots.py): per-host
-    robots.txt parse (records, agent groups, empty-Disallow
-    sentinel) + longest-prefix-match frontier gating for agent
-    'corpusbot'. Even-k hosts name the agent exactly (their record
-    shields it from '*'); odd hosts fall back to '*'. The DuckDB
-    twin recomputes the WHOLE parse->select->match pipeline with the
-    same windows and struct-max tie-break."""
-    from pure_python_geospatial_export_spark.operators.robots import (
-        crawl_allowed,
-        parse_robots,
-    )
-
-    nl = F.lit("\n")
-    k = F.col("id").cast("string")
-    robots = spark.range(5).select(
-        F.concat(F.lit("h"), k, F.lit(".test")).alias("host"),
-        F.concat(
-            F.lit("# policy "), k, nl,
-            F.lit("User-agent: *"), nl,
-            F.lit("Disallow: /p"), k, F.lit("/"), nl,
-            F.lit("Allow: /p"), k, F.lit("/ok"), nl,
-            F.lit("Disallow: /tmp"), nl,
-            F.when(
-                F.col("id") % 2 == 0,
-                F.concat(
-                    nl, F.lit("User-agent: corpusbot"), nl,
-                    F.when(F.col("id") % 4 == 0,
-                           F.lit("Disallow: /")).otherwise(
-                        F.lit("Disallow:")
-                    ), nl,
-                ),
-            ).otherwise(F.lit("")),
-            F.lit("Crawl-delay: 7"), nl,
-        ).alias("robots"),
-    )
-    i = F.col("id")
-    h = (i % 6).cast("string")  # h5 has NO robots -> default allow
-    frontier = spark.range(240).select(
-        F.concat(
-            F.lit("https://h"), h, F.lit(".test"),
-            F.when(i % 5 == 0, F.concat(F.lit("/p"), h, F.lit("/x")))
-            .when(i % 5 == 1,
-                  F.concat(F.lit("/p"), h, F.lit("/ok/y")))
-            .when(i % 5 == 2, F.lit("/tmpfile"))
-            .when(i % 5 == 3, F.lit(""))
-            .otherwise(F.concat(F.lit("/q/"), i.cast("string"))),
-        ).alias("url")
-    )
-    return crawl_allowed(frontier, parse_robots(robots), "corpusbot")
-
-
-def _robots_gate_sql() -> str:
-    from pure_python_geospatial_export_spark.functions import urls as U
-
-    return (
-        "WITH rb AS (SELECT 'h' || range::VARCHAR || '.test' AS host, "
-        "'# policy ' || range::VARCHAR || chr(10) || "
-        "'User-agent: *' || chr(10) || "
-        "'Disallow: /p' || range::VARCHAR || '/' || chr(10) || "
-        "'Allow: /p' || range::VARCHAR || '/ok' || chr(10) || "
-        "'Disallow: /tmp' || chr(10) || "
-        "CASE WHEN range % 2 = 0 THEN chr(10) || "
-        "'User-agent: corpusbot' || chr(10) || "
-        "CASE WHEN range % 4 = 0 THEN 'Disallow: /' "
-        "ELSE 'Disallow:' END || chr(10) ELSE '' END || "
-        "'Crawl-delay: 7' || chr(10) AS robots FROM range(5)), "
-        "ls AS (SELECT host, generate_subscripts(l, 1) AS ln, "
-        "unnest(l) AS raw FROM (SELECT host, "
-        "string_split(robots, chr(10)) AS l FROM rb)), "
-        "fl AS (SELECT host, ln, "
-        "lower(regexp_extract(line, '^[ \\t]*([A-Za-z-]+)[ \\t]*:(.*)$', 1)) "
-        "AS field, "
-        "trim(regexp_extract(line, '^[ \\t]*([A-Za-z-]+)[ \\t]*:(.*)$', 2)) "
-        "AS value FROM (SELECT host, ln, "
-        "regexp_replace(raw, '#.*$', '') AS line FROM ls)), "
-        # EVERY field line joins record numbering (a directive ends
-        # a User-agent run); rule filtering happens after, in rl
-        "kept AS (SELECT * FROM fl WHERE field <> ''), "
-        "st AS (SELECT host, ln, field, value, "
-        "CASE WHEN field = 'user-agent' AND COALESCE("
-        "lag(field = 'user-agent') OVER "
-        "(PARTITION BY host ORDER BY ln) = false, true) "
-        "THEN 1 ELSE 0 END AS strt FROM kept), "
-        "recs AS (SELECT host, ln, field, value, "
-        "SUM(strt) OVER (PARTITION BY host ORDER BY ln "
-        "ROWS UNBOUNDED PRECEDING) AS rec FROM st), "
-        "agents AS (SELECT DISTINCT host, rec, lower(value) AS agent "
-        "FROM recs WHERE field = 'user-agent'), "
-        "rl AS (SELECT host, rec, "
-        "(field = 'allow' OR value = '') AS allow, value AS path "
-        "FROM recs WHERE field IN ('allow', 'disallow')), "
-        "rules AS (SELECT a.host, a.agent, r.allow, r.path "
-        "FROM agents a JOIN rl r USING (host, rec) "
-        "UNION ALL SELECT host, agent, true, '' FROM agents), "
-        "ex AS (SELECT DISTINCT host FROM rules "
-        "WHERE agent = 'corpusbot'), "
-        "app AS (SELECT r.host, r.allow, r.path FROM rules r "
-        "LEFT JOIN (SELECT host, true AS e FROM ex) x USING (host) "
-        "WHERE CASE WHEN x.e IS NOT NULL "
-        "THEN r.agent = 'corpusbot' ELSE r.agent = '*' END), "
-        "fr AS (SELECT 'https://h' || (range % 6)::VARCHAR || "
-        "'.test' || CASE range % 5 "
-        "WHEN 0 THEN '/p' || (range % 6)::VARCHAR || '/x' "
-        "WHEN 1 THEN '/p' || (range % 6)::VARCHAR || '/ok/y' "
-        "WHEN 2 THEN '/tmpfile' WHEN 3 THEN '' "
-        "ELSE '/q/' || range::VARCHAR END AS url FROM range(240)), "
-        "u AS (SELECT url, " + U.url_host_sql("url") + " AS host, "
-        + U.url_path_sql("url") + " AS p FROM fr), "
-        "hits AS (SELECT url, max(struct_pack(l := length(path), "
-        "a := allow)) AS win FROM u JOIN app USING (host) "
-        "WHERE starts_with(p, path) GROUP BY url) "
-        "SELECT u.url, u.host, "
-        "COALESCE(h.win.a, true) AS allowed FROM u "
-        "LEFT JOIN hits h USING (url)"
-    )
-
-
-def _q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Crawl snapshot diff (operators/crawl.snapshot_diff): two
-    deterministic snapshots of one URL space — disjoint membership
-    (added/removed) plus fingerprint drift on id % 4 == 0
-    (changed). The DuckDB twin is the same presence-flag full-outer
-    join with IS NOT DISTINCT FROM."""
-    from pure_python_geospatial_export_spark.operators.crawl import (
-        snapshot_diff,
-    )
-
-    i = F.col("id")
-    u = F.concat(F.lit("u"), i.cast("string"))
-    old = (
-        spark.range(300)
-        .where(i % 7 != 0)
-        .select(
-            u.alias("url"),
-            F.concat(F.lit("f"), (i * i % 31).cast("string")).alias(
-                "fp"
-            ),
-        )
-    )
-    new = (
-        spark.range(300)
-        .where(i % 5 != 0)
-        .select(
-            u.alias("url"),
-            F.concat(
-                F.lit("f"),
-                ((i * i + (i % 4 == 0).cast("long")) % 31).cast(
-                    "string"
-                ),
-            ).alias("fp"),
-        )
-    )
-    return snapshot_diff(old, new)
-
-
-def _crawl_diff_sql() -> str:
-    return (
-        "WITH o AS (SELECT 'u' || range::VARCHAR AS url, "
-        "'f' || (range * range % 31)::VARCHAR AS fp_old "
-        "FROM range(300) WHERE range % 7 <> 0), "
-        "n AS (SELECT 'u' || range::VARCHAR AS url, "
-        "'f' || ((range * range + CASE WHEN range % 4 = 0 THEN 1 "
-        "ELSE 0 END) % 31)::VARCHAR AS fp_new "
-        "FROM range(300) WHERE range % 5 <> 0) "
-        "SELECT COALESCE(o.url, n.url) AS url, "
-        "CASE WHEN o.url IS NULL THEN 'added' "
-        "WHEN n.url IS NULL THEN 'removed' "
-        "WHEN fp_old IS NOT DISTINCT FROM fp_new THEN 'unchanged' "
-        "ELSE 'changed' END AS status, fp_old, fp_new "
-        "FROM o FULL OUTER JOIN n USING (url)"
-    )
-
-
-def _q_frontier_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Politeness frontier batching (operators/crawl.
-    frontier_batches): per-host fetch waves of 8, deterministic by
-    url order. Window rides the host exchange; the DuckDB twin is
-    the same row_number arithmetic."""
-    from pure_python_geospatial_export_spark.operators.crawl import (
-        frontier_batches,
-    )
-
-    i = F.col("id")
-    fr = spark.range(300).select(
-        F.concat(
-            F.lit("https://h"),
-            (i % 7).cast("string"),
-            F.lit(".test/p"),
-            (i * 13 % 300).cast("string"),
-        ).alias("url")
-    )
-    return frontier_batches(fr, per_host=8)
-
-
-def _frontier_batches_sql() -> str:
-    from pure_python_geospatial_export_spark.functions import urls as U
-
-    return (
-        "WITH fr AS (SELECT 'https://h' || (range % 7)::VARCHAR || "
-        "'.test/p' || (range * 13 % 300)::VARCHAR AS url "
-        "FROM range(300)), "
-        "u AS (SELECT url, " + U.url_host_sql("url")
-        + " AS host FROM fr) "
-        "SELECT url, host, CAST((row_number() OVER "
-        "(PARTITION BY host ORDER BY url) - 1) // 8 AS BIGINT) "
-        "AS batch FROM u"
-    )
-
-
-def _q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sitemap/sitemap-index parsing (operators/crawl.
-    sitemap_entries): per-host XML blobs -> (host, kind, loc,
-    lastmod) entries — entity-decoded locs, NULL lastmod when
-    absent, loc-less entries dropped. The DuckDB twin unnests the
-    same Java∩RE2 block patterns."""
-    from pure_python_geospatial_export_spark.operators.crawl import (
-        sitemap_entries,
-    )
-
-    i = F.col("id")
-    k = i.cast("string")
-    blobs = spark.range(12).select(
-        F.concat(F.lit("h"), k, F.lit(".test")).alias("host"),
-        F.concat(
-            F.lit("<urlset>"),
-            F.lit("<url><loc>https://h"), k,
-            F.lit(".test/a?x=1&amp;y="), k, F.lit("</loc>"),
-            F.lit("<lastmod>2026-01-"),
-            F.lpad((i % 28 + 1).cast("string"), 2, "0"),
-            F.lit("</lastmod></url>"),
-            F.lit("<url><loc> https://h"), k,
-            F.lit(".test/b </loc></url>"),
-            F.when(i % 3 == 0,
-                   F.lit("<url><lastmod>2025-12-31</lastmod></url>"))
-            .otherwise(F.lit("")),
-            F.lit("</urlset>"),
-            F.when(
-                i % 4 == 0,
-                F.concat(
-                    F.lit("<sitemapindex><sitemap><loc>https://h"),
-                    k,
-                    F.lit(".test/maps/child.xml</loc></sitemap>"
-                          "</sitemapindex>"),
-                ),
-            ).otherwise(F.lit("")),
-        ).alias("xml"),
-    )
-    return sitemap_entries(blobs)
-
-
-def _sitemap_urls_sql() -> str:
-    from pure_python_geospatial_export_spark.functions.html import (
-        _decode_entities_sql,
-    )
-
-    loc = (
-        "nullif(" + _decode_entities_sql(
-            "trim(regexp_extract(b, '(?is)<loc>(.*?)</loc>', 1))"
-        ) + ", '')"
-    )
-    lastmod = (
-        "nullif(trim(regexp_extract(b, "
-        "'(?is)<lastmod>(.*?)</lastmod>', 1)), '')"
-    )
-    return (
-        "WITH blobs AS (SELECT 'h' || range::VARCHAR || '.test' "
-        "AS host, '<urlset>' || "
-        "'<url><loc>https://h' || range::VARCHAR || "
-        "'.test/a?x=1&amp;y=' || range::VARCHAR || '</loc>' || "
-        "'<lastmod>2026-01-' || "
-        "lpad((range % 28 + 1)::VARCHAR, 2, '0') || "
-        "'</lastmod></url>' || "
-        "'<url><loc> https://h' || range::VARCHAR || "
-        "'.test/b </loc></url>' || "
-        "CASE WHEN range % 3 = 0 THEN "
-        "'<url><lastmod>2025-12-31</lastmod></url>' ELSE '' END || "
-        "'</urlset>' || "
-        "CASE WHEN range % 4 = 0 THEN "
-        "'<sitemapindex><sitemap><loc>https://h' || range::VARCHAR "
-        "|| '.test/maps/child.xml</loc></sitemap></sitemapindex>' "
-        "ELSE '' END AS xml FROM range(12)), "
-        "ub AS (SELECT host, 'url' AS kind, unnest("
-        "regexp_extract_all(xml, '(?is)<url>.*?</url>', 0)) AS b "
-        "FROM blobs), "
-        "mb AS (SELECT host, 'sitemap' AS kind, unnest("
-        "regexp_extract_all(xml, '(?is)<sitemap>.*?</sitemap>', 0)) "
-        "AS b FROM blobs), "
-        "allb AS (SELECT * FROM ub UNION ALL SELECT * FROM mb) "
-        "SELECT host, kind, " + loc + " AS loc, " + lastmod
-        + " AS lastmod FROM allb WHERE " + loc + " IS NOT NULL"
-    )
-
-
-def _q_page_links(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page-level link graph (operators/web.page_link_edges): every
-    href RESOLVED against its page URL — relative paths, ../
-    segments, //host, ?query, fragment-only and mailto: drops (RFC
-    3986 via functions/urls.resolve_href, incl. the higher-order
-    dot-segment fold). The DuckDB twin runs resolve_href_sql —
-    expression-for-expression the same CASE + reduce."""
-    from pure_python_geospatial_export_spark.operators.web import (
-        page_link_edges,
-    )
-
-    i = F.col("id")
-    pages = spark.range(240).select(
-        F.concat(
-            F.lit("https://site-"),
-            (i % 9).cast("string"),
-            F.lit(".test/d"),
-            (i % 5).cast("string"),
-            F.lit("/cur.html"),
-        ).alias("url"),
-        F.concat(
-            F.lit('<a href="p'), (i % 7).cast("string"),
-            F.lit('.html">n</a>'),
-            F.lit('<a href="../up/'), (i % 3).cast("string"),
-            F.lit('">u</a>'),
-            F.lit('<a href="#frag">f</a>'),
-            F.lit('<a href="mailto:a@b.test">m</a>'),
-            F.lit('<a href="?page='), i.cast("string"),
-            F.lit('">q</a>'),
-            F.when(
-                i % 4 == 0,
-                F.concat(
-                    F.lit('<a href="https://ext-'),
-                    (i % 4).cast("string"),
-                    F.lit('.test/z#sec">e</a>'),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                i % 6 == 1,
-                F.lit('<a href="//cdn.test/lib.js">c</a>'),
-            ).otherwise(F.lit("")),
-        ).alias("html"),
-    )
-    return page_link_edges(pages)
-
-
-def _page_links_sql() -> str:
-    from pure_python_geospatial_export_spark.functions import html as H
-    from pure_python_geospatial_export_spark.functions import urls as U
-
-    return (
-        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
-        "FROM range(240)), "
-        "pages AS (SELECT 'https://site-' || (id % 9)::VARCHAR || "
-        "'.test/d' || (id % 5)::VARCHAR || '/cur.html' AS url, "
-        "'<a href=\"p' || (id % 7)::VARCHAR || '.html\">n</a>' || "
-        "'<a href=\"../up/' || (id % 3)::VARCHAR || '\">u</a>' || "
-        "'<a href=\"#frag\">f</a>' || "
-        "'<a href=\"mailto:a@b.test\">m</a>' || "
-        "'<a href=\"?page=' || id::VARCHAR || '\">q</a>' || "
-        "CASE WHEN id % 4 = 0 THEN '<a href=\"https://ext-' || "
-        "(id % 4)::VARCHAR || '.test/z#sec\">e</a>' ELSE '' END || "
-        "CASE WHEN id % 6 = 1 THEN "
-        "'<a href=\"//cdn.test/lib.js\">c</a>' ELSE '' END "
-        "AS html FROM ids), "
-        "hrefs AS (SELECT url AS src, unnest("
-        + H.html_links_sql("html") + ") AS href FROM pages) "
-        "SELECT src, dst FROM (SELECT src, "
-        + U.resolve_href_sql("src", "href")
-        + " AS dst FROM hrefs) WHERE dst IS NOT NULL"
-    )
-
-
-def _q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass per-column profile (operators/profile.py) of the
-    events table: counts, nulls, exact distincts, min/max normalized
-    to strings (timestamps through epoch micros — integer strings
-    never disagree across engines). All statistics order-free."""
-    from pure_python_geospatial_export_spark.operators.profile import (
-        profile_table,
-    )
-
-    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    return profile_table(ev)
-
-
-def _table_profile_sql() -> str:
-    parts = []
-    for c, v in (
-        ("event_id", "event_id"),
-        ("ts", "epoch_us(ts)"),
-        ("user_id", "user_id"),
-        ("event_type", "event_type"),
-        ("value", "value"),
-        ("props", "props"),
-    ):
-        parts.append(
-            "SELECT '%s' AS column, COUNT(*) AS n_rows, "
-            "COUNT(*) - COUNT(%s) AS n_nulls, "
-            "COUNT(DISTINCT %s) AS n_distinct, "
-            "CAST(MIN(%s) AS VARCHAR) AS min_value, "
-            "CAST(MAX(%s) AS VARCHAR) AS max_value FROM events"
-            % (c, v, v, v, v)
-        )
-    return " UNION ALL ".join(parts)
-
-
-def _q_tpch_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q1-style pricing summary over the provided lineitem
-    table: the relational-engine face of the driver contract. Money
-    sums in integer cents (floor(x*100+0.5) BIGINT — order-free), so
-    DuckDB matches bit-for-bit; averages divide the exact sums."""
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    f = li.where(
-        F.expr("l_shipdate <= TIMESTAMP_NTZ'1999-12-31 00:00:00'")
-    )
-    disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-    out = f.groupBy("l_returnflag", "l_linestatus").agg(
-        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
-        F.sum(
-            F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
-            .cast("long")
-        ).alias("sum_base_cents"),
-        F.sum(
-            F.floor(disc * 100.0 + 0.5).cast("long")
-        ).alias("sum_disc_cents"),
-        F.sum(
-            F.floor(
-                disc * (F.lit(1.0) + F.col("l_tax")) * 100.0 + 0.5
-            ).cast("long")
-        ).alias("sum_charge_cents"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-    return out.withColumn(
-        "avg_qty",
-        F.col("sum_qty").cast("double") / F.col("n_rows").cast("double"),
-    )
-
-
-_TPCH_PRICING_SQL = (
-    "SELECT l_returnflag, l_linestatus, "
-    "CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty, "
-    "CAST(SUM(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)) "
-    "AS BIGINT) AS sum_base_cents, "
-    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
-    "* 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS sum_disc_cents, "
-    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
-    "* (1.0 + l_tax) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) "
-    "AS sum_charge_cents, "
-    "COUNT(*) AS n_rows, "
-    "CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) "
-    "/ CAST(COUNT(*) AS DOUBLE) AS avg_qty "
-    "FROM lineitem "
-    "WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00' "
-    "GROUP BY 1, 2"
-)
-
-
-def _q_tpch_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3-style shipping priority: segment-filtered customer ⋈
-    orders ⋈ lineitem, top 10 orders by revenue (cents; ties broken by
-    orderkey so the LIMIT is deterministic)."""
-    cust = spark.read.parquet(
-        os.path.join(sf_dir, "customer.parquet")
-    ).where(F.col("c_mktsegment") == "BUILDING")
-    orders = spark.read.parquet(
-        os.path.join(sf_dir, "orders.parquet")
-    ).where(F.expr("o_orderdate < TIMESTAMP_NTZ'1998-01-01 00:00:00'"))
-    li = spark.read.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ).where(F.expr("l_shipdate > TIMESTAMP_NTZ'1998-01-01 00:00:00'"))
-    rev = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        * 100.0 + 0.5
-    ).cast("long")
-    out = (
-        cust.join(orders, cust["c_custkey"] == orders["o_custkey"])
-        .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.sum(rev).alias("revenue_cents"))
-        .orderBy(F.col("revenue_cents").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
-    return out
-
-
-_TPCH_TOP_ORDERS_SQL = (
-    "SELECT o_orderkey, o_orderdate, o_orderpriority, "
-    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
-    "* 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents "
-    "FROM customer, orders, lineitem "
-    "WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey "
-    "AND o_orderkey = l_orderkey "
-    "AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00' "
-    "AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00' "
-    "GROUP BY 1, 2, 3 "
-    "ORDER BY revenue_cents DESC, o_orderkey LIMIT 10"
-)
-
-
-def _q_tpch_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5-style local-supplier volume: the 6-table star join
-    (region ⋈ nation ⋈ {customer, supplier} ⋈ orders ⋈ lineitem with
-    the local-supplier constraint), revenue in integer cents per
-    (region, nation). Dims broadcast; lineitem never re-shuffles."""
-    sf = lambda t: spark.read.parquet(os.path.join(sf_dir, t))
-    orders = sf("orders.parquet").where(F.expr(
-        "o_orderdate >= TIMESTAMP_NTZ'1996-01-01 00:00:00' AND "
-        "o_orderdate < TIMESTAMP_NTZ'1997-01-01 00:00:00'"
-    ))
-    rev = F.floor(
-        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
-        * 100.0 + 0.5
-    ).cast("long")
-    return (
-        sf("lineitem.parquet")
-        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(sf("customer.parquet"),
-              F.col("o_custkey") == F.col("c_custkey"))
-        .join(sf("supplier.parquet"),
-              (F.col("l_suppkey") == F.col("s_suppkey"))
-              & (F.col("c_nationkey") == F.col("s_nationkey")))
-        .join(sf("nation.parquet"),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(sf("region.parquet"),
-              F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("r_name", "n_name")
-        .agg(F.sum(rev).alias("revenue_cents"))
-    )
-
-
-_TPCH_REGION_VOLUME_SQL = (
-    "SELECT r_name, n_name, "
-    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
-    "* 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents "
-    "FROM lineitem, orders, customer, supplier, nation, region "
-    "WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey "
-    "AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey "
-    "AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey "
-    "AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' "
-    "AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00' "
-    "GROUP BY 1, 2"
-)
-
-
-_DIST_LAYER = (
-    # every side length a power of two at integer coords: projection
-    # parameters t = gap/2^k are exact doubles, so the boundary kernel
-    # reproduces the closed-form rect-gap distance bit-for-bit
-    (1, "west", "POLYGON ((-64 -16, -32 -16, -32 16, -64 16, -64 -16))"),
-    (2, "mid", "POLYGON ((-16 -8, 16 -8, 16 8, -16 8, -16 -8))"),
-    (3, "east", "POLYGON ((32 -32, 64 -32, 64 0, 32 0, 32 -32))"),
-)
-
-
-def _q_rect_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-distance polygon join (operators/distance.py) on dyadic
-    rect fixtures: probes are power-of-two rects derived from doc_id,
-    the layer is power-of-two rects, so every surviving pair's region
-    distance is EXACTLY the closed-form axis gap dx^2 + dy^2 the
-    oracle computes (overlap/containment -> 0 on both sides)."""
-    from pure_python_geospatial_export_spark.operators.distance import (
-        polygon_distance_join,
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    layer = local_df(
-        spark, list(_DIST_LAYER), ["polygon_id", "name", "wkt"]
-    )
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 400)
-    )
-    px0 = (F.col("doc_id") % 24) * 8 - 96
-    py0 = (F.col("doc_id") % 15) * 8 - 56
-    px1 = px0 + F.expr("CAST(shiftleft(2, CAST(doc_id % 3 AS INT)) AS BIGINT)")
-    py1 = py0 + F.expr("CAST(shiftleft(2, CAST(doc_id % 2 AS INT)) AS BIGINT)")
-    probes = docs.select(
-        F.col("doc_id").alias("probe_id"),
-        F.format_string(
-            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
-        ).alias("wkt"),
-    )
-    out = polygon_distance_join(probes, layer, max_dist=6.0, res=5)
-    return out.select(
-        F.col("probe_id").alias("doc_id"), "name", "dist2", "dist"
-    )
-
-
-def _rect_distance_sql() -> str:
-    import re as _re
-
-    parts = []
-    for _pid, name, w in _DIST_LAYER:
-        v = [int(x) for x in _re.findall(r"-?\d+", w)]
-        lx0, ly0, lx1, ly1 = v[0], v[1], v[2], v[5]
-        parts.append(
-            "SELECT doc_id, '%s' AS name, "
-            "greatest(0.0, CAST(%d - px1 AS DOUBLE), "
-            "CAST(px0 - %d AS DOUBLE)) AS dx, "
-            "greatest(0.0, CAST(%d - py1 AS DOUBLE), "
-            "CAST(py0 - %d AS DOUBLE)) AS dy FROM p"
-            % (name, lx0, lx1, ly0, ly1)
-        )
-    return (
-        "WITH p AS (SELECT doc_id, "
-        "(doc_id %% 24) * 8 - 96 AS px0, "
-        "(doc_id %% 15) * 8 - 56 AS py0, "
-        "(doc_id %% 24) * 8 - 96 + (2 << (doc_id %% 3)) AS px1, "
-        "(doc_id %% 15) * 8 - 56 + (2 << (doc_id %% 2)) AS py1 "
-        "FROM documents WHERE doc_id < 400), "
-        "g AS (%s) "
-        "SELECT doc_id, name, dx * dx + dy * dy AS dist2, "
-        "sqrt(dx * dx + dy * dy) AS dist FROM g "
-        "WHERE dx * dx + dy * dy <= 36.0"
-        % " UNION ALL ".join(parts)
-    )
-
-
-def _q_nearest_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-polygon join (ring doubling over the distance join) on
-    the dyadic fixture: start radius 2 forces several doubling rounds,
-    every certified distance is the closed-form rect gap, and the
-    min/tie-break (dist2, polygon_id) is exact arithmetic on both
-    engines."""
-    from pure_python_geospatial_export_spark.operators.distance import (
-        nearest_polygon_join,
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    layer = local_df(
-        spark, list(_DIST_LAYER), ["polygon_id", "name", "wkt"]
-    )
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 400)
-    )
-    px0 = (F.col("doc_id") % 24) * 8 - 96
-    py0 = (F.col("doc_id") % 15) * 8 - 56
-    px1 = px0 + F.expr(
-        "CAST(shiftleft(2, CAST(doc_id % 3 AS INT)) AS BIGINT)")
-    py1 = py0 + F.expr(
-        "CAST(shiftleft(2, CAST(doc_id % 2 AS INT)) AS BIGINT)")
-    probes = docs.select(
-        F.col("doc_id").alias("probe_id"),
-        F.format_string(
-            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
-            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
-        ).alias("wkt"),
-    )
-    out = nearest_polygon_join(probes, layer, start_dist=2.0, res=5)
-    return out.select(
-        F.col("probe_id").alias("doc_id"), "polygon_id", "name",
-        "dist2", "dist",
-    )
-
-
-def _nearest_rect_sql() -> str:
-    import re as _re
-
-    parts = []
-    for pid, name, w in _DIST_LAYER:
-        v = [int(x) for x in _re.findall(r"-?\d+", w)]
-        lx0, ly0, lx1, ly1 = v[0], v[1], v[2], v[5]
-        parts.append(
-            "SELECT doc_id, CAST(%d AS BIGINT) AS polygon_id, "
-            "'%s' AS name, "
-            "greatest(0.0, CAST(%d - px1 AS DOUBLE), "
-            "CAST(px0 - %d AS DOUBLE)) AS dx, "
-            "greatest(0.0, CAST(%d - py1 AS DOUBLE), "
-            "CAST(py0 - %d AS DOUBLE)) AS dy FROM p"
-            % (pid, name, lx0, lx1, ly0, ly1)
-        )
-    return (
-        "WITH p AS (SELECT doc_id, "
-        "(doc_id %% 24) * 8 - 96 AS px0, "
-        "(doc_id %% 15) * 8 - 56 AS py0, "
-        "(doc_id %% 24) * 8 - 96 + (2 << (doc_id %% 3)) AS px1, "
-        "(doc_id %% 15) * 8 - 56 + (2 << (doc_id %% 2)) AS py1 "
-        "FROM documents WHERE doc_id < 400), "
-        "g AS (%s), "
-        "r AS (SELECT doc_id, polygon_id, name, "
-        "dx * dx + dy * dy AS dist2, "
-        "row_number() OVER (PARTITION BY doc_id "
-        "ORDER BY dx * dx + dy * dy, polygon_id) AS rn FROM g) "
-        "SELECT doc_id, polygon_id, name, dist2, sqrt(dist2) AS dist "
-        "FROM r WHERE rn = 1"
-        % " UNION ALL ".join(parts)
-    )
-
-
-# snap-to-line layer: single source of truth for the Spark layer and
-# the SQL segment table (parsed into segments by _snap_segments)
-_SNAP_LINES = (
-    (3, "transam",
-     "LINESTRING (-150 -60, -90 -20, -30 10, 30 40, 90 60)"),
-    (7, "equator", "LINESTRING (-170 0, 170 0)"),
-    (11, "twin",
-     "MULTILINESTRING ((-60 60, 60 60), (-60 -60, 60 -60))"),
-)
-
-
-def _snap_segments():
-    from pure_python_geospatial_export_spark.geo import wkt as wktmod
-
-    rows = []
-    for lid, _name, w in _SNAP_LINES:
-        geom = wktmod.loads(w)
-        parts = (
-            [geom["coordinates"]] if geom["type"] == "LineString"
-            else list(geom["coordinates"])
-        )
-        seg = 0
-        for chain in parts:
-            for (ax, ay), (bx, by) in zip(chain[:-1], chain[1:]):
-                rows.append((lid, seg, float(ax), float(ay),
-                             float(bx), float(by)))
-                seg += 1
-    return rows
-
-
-def _q_snap_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snap-to-nearest-line / map matching (operators/snap.py): each
-    derived doc point's nearest polyline within 15 units, with the
-    exact snapped position. Bit-oracled WITHOUT a dyadic fixture:
-    the kernel mirrors the SQL expressions term for term (dot,
-    t = clip(dot/ab2), residual, snap = A + t*AB) and nothing
-    float-aggregates — the argmin tie-break (dist2, line_id, seg_idx)
-    is exact, so every double matches the DuckDB cross-join
-    recompute."""
-    from pure_python_geospatial_export_spark.operators.snap import (
-        snap_points_to_lines,
-    )
-    from pure_python_geospatial_export_spark.session import local_df
-
-    lines = local_df(
-        spark, list(_SNAP_LINES), ["line_id", "name", "wkt"]
-    )
-    pts = _docs_points(spark, sf_dir).where(
-        F.col("doc_id") < 2000
-    ).select(F.col("doc_id").alias("point_id"), "lon", "lat")
-    out = snap_points_to_lines(pts, lines, max_dist=15.0, res=5)
-    return out.select(
-        F.col("point_id").alias("doc_id"), "line_id", "seg_idx",
-        "dist2", "dist", "t", "snap_x", "snap_y", "measure_mm",
-    )
-
-
-def _snap_lines_sql() -> str:
-    vals = ", ".join(
-        "(CAST(%d AS BIGINT), %d, %r, %r, %r, %r)"
-        % (lid, seg, ax, ay, bx, by)
-        for lid, seg, ax, ay, bx, by in _snap_segments()
-    )
-    return PTS_CTE[:-1] + (
-        " WHERE doc_id < 2000), "
-        "segs(line_id, seg_idx, ax, ay, bx, by) AS (VALUES %s), "
-        "sg AS (SELECT *, bx - ax AS abx, by - ay AS aby FROM segs), "
-        "sg2 AS (SELECT *, abx * abx + aby * aby AS ab2 FROM sg), "
-        "sg3 AS (SELECT *, CAST(COALESCE(SUM(CAST(floor(sqrt(ab2) "
-        "* 1000.0 + 0.5) AS BIGINT)) OVER (PARTITION BY line_id "
-        "ORDER BY seg_idx ROWS BETWEEN UNBOUNDED PRECEDING AND "
-        "1 PRECEDING), 0) AS BIGINT) AS prefix_mm FROM sg2), "
-        "c2 AS (SELECT doc_id, lon, lat, line_id, seg_idx, ax, ay, "
-        "abx, aby, ab2, prefix_mm, "
-        "lon - ax AS apx, lat - ay AS apy FROM pts, sg3), "
-        "c3 AS (SELECT *, least(greatest("
-        "(apx * abx + apy * aby) / ab2, 0.0), 1.0) AS t FROM c2), "
-        "c4 AS (SELECT doc_id, line_id, seg_idx, t, "
-        "(apx - t * abx) * (apx - t * abx) "
-        "+ (apy - t * aby) * (apy - t * aby) AS dist2, "
-        "ax + t * abx AS snap_x, ay + t * aby AS snap_y, "
-        "prefix_mm + CAST(floor(t * sqrt(ab2) * 1000.0 + 0.5) "
-        "AS BIGINT) AS measure_mm FROM c3), "
-        "r AS (SELECT *, row_number() OVER (PARTITION BY doc_id "
-        "ORDER BY dist2, line_id, seg_idx) AS rn FROM c4) "
-        "SELECT doc_id, line_id, CAST(seg_idx AS INTEGER) AS seg_idx, "
-        "dist2, sqrt(dist2) AS dist, t, snap_x, snap_y, measure_mm "
-        "FROM r WHERE rn = 1 AND dist2 <= 225.0"
-        % vals
-    )
-
-
-def _q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Focal (moving-window) raster statistics (operators/raster.py)
-    over the synthetic 48x32 integer raster — scatter + one groupBy.
-    Integer-valued doubles keep every aggregate (and sum/n) exact, so
-    the DuckDB cross-join recompute matches bit-for-bit, edge partial
-    windows included."""
-    from pure_python_geospatial_export_spark.operators.raster import (
-        focal_aggregate,
-    )
-
-    r = spark.range(48 * 32).select(
-        (F.col("id") % 48).alias("px"),
-        (F.col("id") / 48).cast("long").alias("py"),
-    )
-    rast = r.withColumn(
-        "value",
-        ((F.col("px") * 7 + F.col("py") * 13) % 1000).cast("double"),
-    )
-    return focal_aggregate(rast, radius=1)
-
-
-_FOCAL_STATS_SQL = (
-    "WITH r AS (SELECT px, py, "
-    "CAST((px * 7 + py * 13) % 1000 AS DOUBLE) AS v "
-    "FROM generate_series(0, 47) t(px), "
-    "generate_series(0, 31) s(py)), "
-    "c AS (SELECT px + dx AS tx, py + dy AS ty, v FROM r "
-    "CROSS JOIN generate_series(-1, 1) a(dx) "
-    "CROSS JOIN generate_series(-1, 1) b(dy)), "
-    "g AS (SELECT tx, ty, COUNT(*) AS n, SUM(v) AS sum, "
-    "MIN(v) AS min, MAX(v) AS max FROM c GROUP BY 1, 2) "
-    "SELECT g.tx AS px, g.ty AS py, n, sum, min, max, "
-    "sum / n AS mean FROM g "
-    "JOIN (SELECT px, py FROM r) p ON p.px = g.tx AND p.py = g.ty"
-)
-
-
-def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup (similarity.semantic_duplicates) with FIXED one-hot
-    centroids (dims 0-3) and assign='expr': the cluster assignment is
-    pure column arithmetic (cosine vs a one-hot = component/norm, the
-    sequential fold collapses exactly), so DuckDB recomputes
-    assignment AND within-cluster pair scores bit-for-bit. Same
-    planted +0.01 near-dup fixture as embedding_near_dup."""
-    from pure_python_geospatial_export_spark.operators.similarity import (
-        semantic_duplicates,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-    base = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
-    )
-    planted = emb.where(F.col("vec_id") < 150).select(
-        (F.col("vec_id") + 100000).alias("vec_id"),
-        F.transform(
-            "embedding", lambda x: x.cast("double") + F.lit(0.01)
-        ).alias("vec"),
-    )
-    cents = [
-        [1.0 if j == i else 0.0 for j in range(64)] for i in range(4)
-    ]
-    return semantic_duplicates(
-        base.unionByName(planted), "vec_id", "vec",
-        centroids=cents, threshold=0.99, assign="expr",
-    )
-
-
-_SEMANTIC_DEDUP_SQL = """
-    WITH base AS (
-      SELECT vec_id,
-        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-      FROM embeddings
-    ), planted AS (
-      SELECT vec_id + 100000 AS vec_id,
-        list_transform(embedding,
-                       x -> CAST(x AS DOUBLE) + 0.01) AS vec
-      FROM embeddings WHERE vec_id < 150
-    ), u AS (
-      SELECT * FROM base UNION ALL SELECT * FROM planted
-    ), sc AS (
-      -- cosine vs one-hot centroid i == vec[i+1]/||vec|| exactly
-      -- (the sequential fold's zero terms vanish; ||one-hot|| == 1)
-      SELECT vec_id, vec,
-        vec[1] / sqrt(list_dot_product(vec, vec)) AS s0,
-        vec[2] / sqrt(list_dot_product(vec, vec)) AS s1,
-        vec[3] / sqrt(list_dot_product(vec, vec)) AS s2,
-        vec[4] / sqrt(list_dot_product(vec, vec)) AS s3
-      FROM u
-    ), asg AS (
-      SELECT vec_id, vec, CAST(
-        CASE WHEN s0 >= s1 AND s0 >= s2 AND s0 >= s3 THEN 0
-             WHEN s1 >= s2 AND s1 >= s3 THEN 1
-             WHEN s2 >= s3 THEN 2 ELSE 3 END AS INTEGER) AS cluster
-      FROM sc
-    )
-    SELECT id_a, id_b, cluster, score FROM (
-      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        a.cluster AS cluster,
-        list_dot_product(a.vec, b.vec)
-          / (sqrt(list_dot_product(a.vec, a.vec))
-             * sqrt(list_dot_product(b.vec, b.vec))) AS score
-      FROM asg a JOIN asg b
-        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-    ) WHERE score >= 0.99"""
-
-
-def _q_hex_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hexagonal density binning (geo/hex.py) over the derived doc
-    points: axial (q, r) via cube rounding, one groupBy — pure JVM
-    column arithmetic end to end. The oracle runs the IDENTICAL
-    formula (decimal-literal constants, floor(v+0.5) rounding, strict
-    tie-fix branches), so ids, counts, and center doubles all match
-    bit-for-bit."""
-    from pure_python_geospatial_export_spark.geo.hex import (
-        hex_center_cols,
-        with_hex,
-    )
-
-    pts = _docs_points(spark, sf_dir)
-    binned = (
-        with_hex(pts, 2.5)
-        .groupBy("hex_q", "hex_r")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("min_doc"),
-        )
-    )
-    cx, cy = hex_center_cols(F.col("hex_q"), F.col("hex_r"), 2.5)
-    return binned.withColumn("hex_cx", cx).withColumn("hex_cy", cy)
-
-
-def _hex_bins_sql() -> str:
-    from pure_python_geospatial_export_spark.geo.hex import (
-        hex_center_sql,
-        hex_qr_sql,
-    )
-
-    cx, cy = hex_center_sql("hq", "hr", 2.5)
-    return (
-        "WITH pt AS (SELECT doc_id, %s AS x, %s AS y FROM documents), "
-        "%s "
-        "SELECT hq AS hex_q, hr AS hex_r, COUNT(*) AS n_docs, "
-        "MIN(doc_id) AS min_doc, %s AS hex_cx, %s AS hex_cy "
-        "FROM hexed GROUP BY hq, hr"
-        % (_LON_SQL, _LAT_SQL, hex_qr_sql("x", "y", 2.5), cx, cy)
-    )
-
-
-def _q_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus MinHash near-dup join (dedup.
-    cross_near_duplicates_minhash): benchmark = every 10th doc with a
-    one-token suffix mutation (id +700000), train = all docs. Planted
-    pairs sit at jaccard ~0.9 (and exact-twin docs match the mutation
-    of their twin at the same level) — far above the 0.5 threshold,
-    so the banded candidate stage has recall 1 deterministically and
-    the output equals the exact all-cross-pairs threshold set the
-    oracle computes."""
-    from pure_python_geospatial_export_spark.operators.dedup import (
-        cross_near_duplicates_minhash,
-    )
-
-    train = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "text")
-    bench = train.where(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 700000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzzz")).alias("text"),
-    )
-    return cross_near_duplicates_minhash(
-        train, bench, "doc_id", "text", threshold=0.5
-    )
-
-
-_FUZZY_DECONTAM_SQL = """
-    WITH train AS (
-      SELECT doc_id, text FROM documents
-    ), bench AS (
-      SELECT doc_id + 700000 AS doc_id, text || ' zzzz' AS text
-      FROM documents WHERE doc_id % 10 = 0
-    ), sh_t AS (
-      SELECT doc_id, CASE
-        WHEN len(regexp_split_to_array(trim(text), '\\s+')) >= 3 THEN
-          list_distinct(list_transform(
-            range(1, len(regexp_split_to_array(trim(text), '\\s+')) - 1),
-            i -> regexp_split_to_array(trim(text), '\\s+')[i] || ' ' ||
-                 regexp_split_to_array(trim(text), '\\s+')[i+1] || ' ' ||
-                 regexp_split_to_array(trim(text), '\\s+')[i+2]))
-        ELSE [text] END AS shingles
-      FROM train
-    ), sh_b AS (
-      SELECT doc_id, CASE
-        WHEN len(regexp_split_to_array(trim(text), '\\s+')) >= 3 THEN
-          list_distinct(list_transform(
-            range(1, len(regexp_split_to_array(trim(text), '\\s+')) - 1),
-            i -> regexp_split_to_array(trim(text), '\\s+')[i] || ' ' ||
-                 regexp_split_to_array(trim(text), '\\s+')[i+1] || ' ' ||
-                 regexp_split_to_array(trim(text), '\\s+')[i+2]))
-        ELSE [text] END AS shingles
-      FROM bench
-    )
-    SELECT id_left, id_right, jaccard FROM (
-      SELECT a.doc_id AS id_left, b.doc_id AS id_right,
-        CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-          / CAST(len(list_distinct(
-                list_concat(a.shingles, b.shingles))) AS DOUBLE)
-          AS jaccard
-      FROM sh_t a, sh_b b
-    ) WHERE jaccard >= 0.5"""
-
-
-# Trained-BPE demo vocabulary: a FIXED corpus over the synthetic
-# documents' word stock, so the learned merges engage heavily on the
-# real table while staying a compile-time constant both engines share
-# (the oracle SQL embeds the same merges as nested replace calls).
-_BPE_TRAIN_CORPUS = (
-    "key agg row scan slow fast table value part hash merge batch",
-    "spark window order data column join small line customer query",
-    "table scan table scan fast hash join merge batch window value",
-    "customer order data line query column row key part small slow",
-    "value value table fast spark agg hash scan batch merge row a",
-)
-
-
-def _bpe_demo_merges() -> list:
-    import re as _re
-    from collections import Counter as _Counter
-
-    from pure_python_geospatial_export_spark.functions.text import (
-        BPE_TOKEN_RE,
-    )
-    from pure_python_geospatial_export_spark.operators.bpe import (
-        learn_merges,
-    )
-
-    wf = _Counter()
-    for line in _BPE_TRAIN_CORPUS:
-        wf.update(_re.findall(BPE_TOKEN_RE, line))
-    return learn_merges(sorted(wf.items()), 48)
-
-
-def _bpe_trained_sql() -> str:
-    from pure_python_geospatial_export_spark.operators.bpe import (
-        bpe_tokens_sql as _trained_sql,
-    )
-
-    toks = _trained_sql(_bpe_demo_merges(), col="text")
-    return (
-        "WITH t AS (SELECT doc_id, %s AS ts FROM documents "
-        "WHERE doc_id < 300) "
-        "SELECT doc_id, CAST(len(ts) AS INT) AS n_tokens, "
-        "array_to_string(ts, ' ') AS toks FROM t" % toks
-    )
-
-
-def _q_bpe_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # learned-vocab BPE tokenization (round 7): merges trained by the
-    # deterministic driver loop (distributed training itself is
-    # partition-invariance-tested in tests/test_bpe.py); the Arrow
-    # merge walk is the SAME left-to-right replace algorithm the
-    # oracle's nested SQL replace chain runs, so the full token
-    # string of every document compares bit-for-bit.
-    from pure_python_geospatial_export_spark.operators.bpe import (
-        bpe_tokens,
-    )
-
-    merges = _bpe_demo_merges()
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 300)
-        .select(
-            "doc_id", bpe_tokens(F.col("text"), merges).alias("ts")
-        )
-    )
-    return docs.select(
-        "doc_id",
-        F.size("ts").alias("n_tokens"),
-        F.array_join("ts", " ").alias("toks"),
-    )
-
-
-def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fixed-budget document chunking with overlap: pure column math
-    # (tokenize + slice), mirrored token-for-token in the oracle
-    from pure_python_geospatial_export_spark.operators.pack import (
-        chunk_documents,
-    )
-
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .where(F.col("doc_id") < 300)
-        .select("doc_id", "text")
-    )
-    return chunk_documents(docs, chunk_tokens=40, overlap=8)
-
-
-def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # data-mixing sampler: per-language quotas from target fractions,
-    # hash-rank selection (the quota_sample family invariance)
-    from pure_python_geospatial_export_spark.operators.curate import (
-        mixture_sample,
-    )
-
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "lang")
-    return mixture_sample(
-        docs, "lang", "doc_id",
-        {"en": 0.5, "de": 0.2}, total=200, default_frac=0.1,
-    )
-
-
-def _q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # CCNet-style char-trigram LM quality scoring: train on docs with
-    # id >= 300, score docs with id < 200. Costs are integer
-    # milli-nats (round(-ln(p)*1e6) per DISTINCT gram x integer
-    # occurrence count) so the BIGINT sums compare bit-level — a float
-    # log-prob sum would be addition-order sensitive.
-    from pure_python_geospatial_export_spark.operators.curate import (
-        char_lm_counts,
-        perplexity_score,
-    )
-
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, "documents.parquet")
-    ).select("doc_id", "text")
-    model = char_lm_counts(docs.where(F.col("doc_id") >= 300))
-    return perplexity_score(
-        docs.where(F.col("doc_id") < 200), model
-    )
-
-
+# Plan: render -> hash are chained mapInPandas in the scan stage (no
+# exchange); the banded pair join + pair dedupe + ph_a attach spend at
+# most four hash exchanges. A fifth means a stage stopped reusing its
+# child's partitioning.
+@query("image_phash", oracle=_IMAGE_PHASH_SQL, headline=True)
 def _q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Perceptual image near-dup, end to end: a 63-bit target hash h is
     # derived from doc_id in COLUMN MATH (Fibonacci-mix of doc_id//4,
@@ -4262,264 +675,221 @@ def _q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("id_a", "id_b", "hamming", "ph_a")
 
 
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: spatial join + tile assignment on sf0.001 documents."""
-    sf_dir = "/root/testdata/sf0.001"
-    pts = _docs_points(spark, sf_dir)
-    joined = spatial_join(pts, _layer_df(spark), res=7)
-    return joined.select(
-        "doc_id",
-        "name",
-        cell_id_col(F.col("lon"), F.col("lat"), 6).alias("cell_id"),
-    )
-
-
-# Queries whose driver output is derivable from (or equal to) another
-# registered query's, folded out of the driver-facing registry to stay
-# under the driver's observed ~50-row artifact ceiling (VERDICT r3 #1).
-# They remain first-class: extra_queries()/extra_oracle_sql() feed the
-# local bit-level parity gate in tests/test_oracle_parity.py.
-#   pip_join_salted   == pip_join output (salted-vs-broadcast equality)
-#   knn_exact         == brute-force verify twin of knn_grid
-#   funnel_counts     ⊂ events_funnel
-#   pack_efficiency   ⊂ pack_docs
-#   doc_sample        ⊂ weighted_sample/domain_quota (hash-threshold family)
-#   top_sources       == exact twin of hh_sketch's top-k question
-#   value_histogram   ⊂ events-family fixed-bin aggregations
-# plus OVER-CEILING entries: genuinely new operators added after the
-# driver registry reached the 50-row ceiling — same local bit-level
-# gate, just not competing for driver artifact rows:
-#   line_dedup        (round-4 boilerplate-line removal)
-#   lm_perplexity     (round-4 char-trigram LM quality scoring)
-#   doc_chunks        (round-4 fixed-budget chunking with overlap)
-#   mixture_sample    (round-4 data-mixing sampler)
-#   zonal_geotiff     (round-5 real-raster GeoTIFF ingest)
-_FOLDED_QUERIES = (
-    "pip_join_salted",
-    "knn_exact",
-    "knn_complete",
-    "funnel_counts",
-    "pack_efficiency",
-    "doc_sample",
-    "top_sources",
-    "value_histogram",
-    "line_dedup",
-    "lm_perplexity",
-    "doc_chunks",
-    "mixture_sample",
-    "zonal_geotiff",
-    "span_dedup",
-    "ann_ivfpq",
-    "hll_cells",
-    "kmv_overlap",
-    "distinct_rollup",
-    "gpkg_roundtrip",
-    "geohash_cells",
-    "dissolve_rects",
-    "dissolve_rects_grouped",
-    "dissolve_union_rects",
-    "geom_validate",
-    "bpe_trained",
-    "clip_rects",
-    "areal_interp",
-    "group_hull",
-    "fuzzy_decontam",
-    "hex_bins",
-    "stay_points",
-    "travel_rollup",
-    "semantic_dedup",
-    "focal_stats",
-    "rect_distance",
-    "tpch_pricing",
-    "tpch_top_orders",
-    "tpch_region_volume",
-    "table_profile",
-    "nearest_rect",
-    "snap_lines",
-    "od_matrix",
-    "hotspots",
-    "emerging_hotspots",
-    "grid_paths",
-    "page_rank",
-    "ppr",
-    "hits_scores",
-    "scc_labels",
-    "triangles",
-    "html_extract",
-    "link_graph",
-    "anchor_index",
-    "redirect_resolve",
-    "robots_gate",
-    "crawl_diff",
-    "frontier_batches",
-    "sitemap_urls",
-    "page_links",
-    "communities",
-    "kcore",
-)
-
-
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Never-/least-recently-driver-verified entries lead the dict so a
-    # row cap or timeout in the driver's checker can't starve them again.
-    return {
-        "jaccard_pairs": _q_jaccard_pairs,
-        "minhash_pairs": _q_minhash_pairs,
-        "simhash_pairs": _q_simhash_pairs,
-        "embedding_near_dup": _q_embedding_near_dup,
-        "geojson_lines": _q_geojson_lines,
-        "tile_mvt": _q_tile_mvt,
-        "image_phash": _q_image_phash,
-        "pip_join": _q_pip_join,
-        "pip_join_geodesic": _q_pip_join_geodesic,
-        "pip_join_salted": _q_pip_join_salted,
-        "pip_join_antimeridian": _q_pip_join_antimeridian,
-        "pip_join_polar": _q_pip_join_polar,
-        "polygon_overlap": _q_polygon_overlap,
-        "bbox_filter": _q_bbox_filter,
-        "tile_assign": _q_tile_assign,
-        "zonal_stats": _q_zonal_stats,
-        "tile_stats": _q_tile_stats,
-        "tile_pyramid": _q_tile_pyramid,
-        "mercator_tiles": _q_mercator_tiles,
-        "knn_grid": _q_knn_grid,
-        "knn_exact": _q_knn_exact,
-        "knn_complete": _q_knn_complete,
-        "dedup_exact": _q_dedup_exact,
-        "fingerprint": _q_fingerprint,
-        "text_quality": _q_text_quality,
-        "lang_pred": _q_lang_pred,
-        "similarity_topk": _q_similarity_topk,
-        "ann_ivfpq": _q_ann_ivfpq,
-        "events_window": _q_events_window,
-        "events_running": _q_events_running,
-        "events_asof": _q_events_asof,
-        "events_range": _q_events_range,
-        "kmv_cells": _q_kmv_cells,
-        "hll_cells": _q_hll_cells,
-        "kmv_overlap": _q_kmv_overlap,
-        "distinct_rollup": _q_distinct_rollup,
-        "gpkg_roundtrip": _q_gpkg_roundtrip,
-        "geohash_cells": _q_geohash_cells,
-        "dissolve_rects": _q_dissolve_rects,
-        "dissolve_rects_grouped": _q_dissolve_rects_grouped,
-        "dissolve_union_rects": _q_dissolve_union_rects,
-        "geom_validate": _q_geom_validate,
-        "hh_sketch": _q_hh_sketch,
-        "radius_pairs": _q_radius_pairs,
-        "url_features": _q_url_features,
-        "pii_scan": _q_pii_scan,
-        "repetition": _q_repetition,
-        "pack_docs": _q_pack_docs,
-        "curate_pipeline": _q_curate_pipeline,
-        "pack_efficiency": _q_pack_efficiency,
-        "funnel_counts": _q_funnel_counts,
-        "tfidf_terms": _q_tfidf,
-        "weighted_sample": _q_weighted_sample,
-        "domain_quota": _q_domain_quota,
-        "decontaminate": _q_decontaminate,
-        "doc_sample": _q_doc_sample,
-        "top_sources": _q_top_sources,
-        "events_quantiles": _q_events_quantiles,
-        "quantile_sketch": _q_quantile_sketch,
-        "events_funnel": _q_events_funnel,
-        "events_cohort": _q_events_cohort,
-        "time_rollup": _q_time_rollup,
-        "value_histogram": _q_value_histogram,
-        "events_sessions": _q_events_sessions,
-        "events_rollup": _q_events_rollup,
-        "events_json": _q_events_json,
-        "bpe_tokens": _q_bpe_tokens,
-        "wkt_roundtrip": _q_wkt_roundtrip,
-        "line_dedup": _q_line_dedup,
-        "lm_perplexity": _q_lm_perplexity,
-        "doc_chunks": _q_doc_chunks,
-        "mixture_sample": _q_mixture_sample,
-        "zonal_geotiff": _q_zonal_geotiff,
-        "span_dedup": _q_span_dedup,
-        "bpe_trained": _q_bpe_trained,
-        "clip_rects": _q_clip_rects,
-        "areal_interp": _q_areal_interp,
-        "group_hull": _q_group_hull,
-        "fuzzy_decontam": _q_fuzzy_decontam,
-        "hex_bins": _q_hex_bins,
-        "stay_points": _q_stay_points,
-        "travel_rollup": _q_travel_rollup,
-        "semantic_dedup": _q_semantic_dedup,
-        "focal_stats": _q_focal_stats,
-        "rect_distance": _q_rect_distance,
-        "tpch_pricing": _q_tpch_pricing,
-        "tpch_top_orders": _q_tpch_top_orders,
-        "tpch_region_volume": _q_tpch_region_volume,
-        "table_profile": _q_table_profile,
-        "nearest_rect": _q_nearest_rect,
-        "snap_lines": _q_snap_lines,
-        "od_matrix": _q_od_matrix,
-        "hotspots": _q_hotspots,
-        "emerging_hotspots": _q_emerging_hotspots,
-        "grid_paths": _q_grid_paths,
-        "page_rank": _q_page_rank,
-        "ppr": _q_ppr,
-        "hits_scores": _q_hits,
-        "scc_labels": _q_scc,
-        "triangles": _q_triangles,
-        "html_extract": _q_html_extract,
-        "link_graph": _q_link_graph,
-        "anchor_index": _q_anchor_index,
-        "redirect_resolve": _q_redirect_resolve,
-        "robots_gate": _q_robots_gate,
-        "crawl_diff": _q_crawl_diff,
-        "frontier_batches": _q_frontier_batches,
-        "sitemap_urls": _q_sitemap_urls,
-        "page_links": _q_page_links,
-        "communities": _q_communities,
-        "kcore": _q_kcore,
-    }
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {
-        k: v for k, v in _all_queries().items() if k not in _FOLDED_QUERIES
-    }
-
-
-def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Folded (driver-redundant) queries, still bit-verified locally."""
-    return {
-        k: v for k, v in _all_queries().items() if k in _FOLDED_QUERIES
-    }
-
-
-def _all_oracle_sql() -> dict[str, str]:
-    # pip_join: per-polygon containment predicates (rectangles +-holes)
+# pip_join: per-polygon containment predicates (rectangles +-holes)
+def _pip_join_sql() -> str:
     pip_parts = [
         "SELECT doc_id, '%s' AS name FROM pts WHERE %s"
         % (name, _rect_pred_sql(outer, hole))
         for _pid, name, outer, hole in _rects()
     ]
-    pip_sql = PTS_CTE + " " + " UNION ALL ".join(pip_parts)
+    return PTS_CTE + " " + " UNION ALL ".join(pip_parts)
 
-    # seam-crossing band: containment on the circle = OR of the two
-    # lobes' lon ranges; the hole (also crossing) is excluded with the
-    # strict-interior convention the rectangular oracles use
-    pip_antimeridian_sql = PTS_CTE + (
-        " SELECT doc_id, 'seam_band' AS name FROM pts"
-        " WHERE lat >= 20.0 AND lat <= 70.0"
-        " AND (lon >= 150.0 OR lon <= -150.0)"
-        " AND NOT (lat > 40.0 AND lat < 55.0"
-        " AND (lon > 170.0 OR lon < -170.0))"
+
+# Plan: the r2 win. Broadcast cell-cover join, interior cells resolved in
+# codegen, boundary refined inside the scan stage: ZERO shuffle exchanges
+# anywhere (broadcasts are fine and expected).
+@query("pip_join", oracle=_pip_join_sql, headline=True, exchanges=0)
+def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pts = _docs_points(spark, sf_dir)
+    return (
+        spatial_join(pts, _layer_df(spark), res=7)
+        .select("doc_id", "name")
     )
 
-    # polar caps are constant-latitude boundaries, so the planar cap
-    # interior is a pure latitude predicate — trivially SQL-expressible
-    pip_polar_sql = PTS_CTE + (
-        " SELECT doc_id, 'antarctic' AS name FROM pts WHERE lat < -70.0"
-        " UNION ALL"
-        " SELECT doc_id, 'arctic' AS name FROM pts WHERE lat > 75.0"
+
+# Geodesic layer: great-circle-edge polygons (one strongly bulging
+# triangle, one holed square). Single source of truth for the Spark
+# layer (WKT) and the generated SQL oracle.
+GEODESIC_LAYER = [
+    (1, "bulge_north", [
+        [[-60.0, 45.0], [60.0, 45.0], [0.0, 80.0], [-60.0, 45.0]],
+    ]),
+    (2, "holed_south", [
+        [[-30.0, -40.0], [10.0, -40.0], [10.0, -10.0], [-30.0, -10.0],
+         [-30.0, -40.0]],
+        [[-20.0, -30.0], [-5.0, -30.0], [-5.0, -20.0], [-20.0, -20.0],
+         [-20.0, -30.0]],
+    ]),
+]
+
+
+def _geodesic_layer_df(spark: SparkSession) -> DataFrame:
+    from pure_python_geospatial_export_spark.session import local_df
+    rows = [
+        (pid, name,
+         wktmod.dumps(dict(type="Polygon", coordinates=rings)))
+        for pid, name, rings in GEODESIC_LAYER
+    ]
+    return local_df(spark, rows, ["polygon_id", "name", "wkt"])
+
+
+def _geodesic_oracle_sql() -> str:
+    """Generate the DuckDB twin of the geodesic join: per polygon, the
+    gnomonic projection constants (center + tangent basis + projected
+    ring vertices) are computed here in numpy and EMBEDDED as literals;
+    the SQL projects each point and counts edge crossings (even-odd).
+    Straight lines in the projected plane ARE the great-circle edges, so
+    this is exact; engine/DuckDB trig may differ by ulps, which can only
+    flip measure-zero boundary points (none in the derived-point
+    fixture)."""
+    from pure_python_geospatial_export_spark.geo import geodesic as geod
+
+    parts = []
+    for _pid, name, rings in GEODESIC_LAYER:
+        # plain python floats: %r of a numpy scalar is not a SQL literal
+        # under numpy >= 2.0 ("np.float64(...)")
+        c = [float(v) for v in geod.gnomonic_center(rings)]
+        e1, e2 = geod._tangent_basis(
+            __import__("numpy").asarray(c, dtype="float64")
+        )
+        e1 = [float(v) for v in e1]
+        e2 = [float(v) for v in e2]
+        proj_rings = []
+        for r in rings:
+            arr = __import__("numpy").asarray(r, dtype="float64")[:, :2]
+            rx, ry, front = geod.gnomonic_project(
+                geod.unit_vectors(arr[:, 0], arr[:, 1]),
+                __import__("numpy").asarray(c, dtype="float64"),
+            )
+            proj_rings.append(list(zip(rx.tolist(), ry.tolist())))
+
+        terms = []
+        for pr in proj_rings:
+            for (x1, y1), (x2, y2) in zip(pr[:-1], pr[1:]):
+                if y1 == y2:
+                    continue  # horizontal edge: never crosses the ray
+                terms.append(
+                    "CASE WHEN ((%(y1)r <= py AND %(y2)r > py) OR "
+                    "(%(y2)r <= py AND %(y1)r > py)) AND "
+                    "px < %(x1)r + (py - %(y1)r) * %(dx)r / %(dy)r "
+                    "THEN 1 ELSE 0 END"
+                    % {"x1": x1, "y1": y1, "y2": y2,
+                       "dx": x2 - x1, "dy": y2 - y1}
+                )
+        proj = (
+            "SELECT doc_id, "
+            "(vx*%(e1x)r + vy*%(e1y)r + vz*%(e1z)r) / d AS px, "
+            "(vx*%(e2x)r + vy*%(e2y)r + vz*%(e2z)r) / d AS py, "
+            "d > 1e-12 AS front FROM ("
+            "SELECT doc_id, vx, vy, vz, "
+            "vx*%(cx)r + vy*%(cy)r + vz*%(cz)r AS d FROM ("
+            "SELECT doc_id, "
+            "cos(radians(lat)) * cos(radians(lon)) AS vx, "
+            "cos(radians(lat)) * sin(radians(lon)) AS vy, "
+            "sin(radians(lat)) AS vz FROM pts))"
+            % {"e1x": e1[0], "e1y": e1[1], "e1z": e1[2],
+               "e2x": e2[0], "e2y": e2[1], "e2z": e2[2],
+               "cx": c[0], "cy": c[1], "cz": c[2]}
+        )
+        parts.append(
+            "SELECT doc_id, '%s' AS name FROM (%s) "
+            "WHERE front AND ((%s) %% 2 = 1)"
+            % (name, proj, " + ".join(terms))
+        )
+    return PTS_CTE + " " + " UNION ALL ".join(parts)
+
+
+@query("pip_join_geodesic", oracle=_geodesic_oracle_sql)
+def _q_pip_join_geodesic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pts = _docs_points(spark, sf_dir)
+    return (
+        spatial_join(pts, _geodesic_layer_df(spark), res=6,
+                     edges="geodesic")
+        .select("doc_id", "name")
     )
 
-    # rectangle-probe "intersects": interval overlap on the outer box,
-    # minus probes strictly inside a hole's open interior
+
+# folded: == pip_join output (salted-vs-broadcast equality)
+@query("pip_join_salted", oracle=_pip_join_sql, folded=True)
+def _q_pip_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # same semantics and same oracle as pip_join — runs the hot-cell
+    # SALTED SHUFFLE strategy instead of the broadcast cover, so the
+    # driver gate proves the skew path end to end (threshold forced low
+    # enough that salting actually engages on the fixture)
+    pts = _docs_points(spark, sf_dir)
+    return (
+        spatial_join(pts, _layer_df(spark), res=7,
+                     strategy="shuffle_salted", hot_cell_threshold=20)
+        .select("doc_id", "name")
+    )
+
+
+# Seam-crossing polygon (RFC 7946 short-way edges: 150E..150W band with a
+# 170E..170W hole) — single source of truth for the Spark layer and the
+# SQL oracle. Exercises the planar antimeridian lobe split end to end
+# (cover seeding + kernel refine on both sides of +-180).
+ANTIMERIDIAN_WKT = (
+    "POLYGON ((150 20, 150 70, -150 70, -150 20, 150 20), "
+    "(170 40, 170 55, -170 55, -170 40, 170 40))"
+)
+
+
+# seam-crossing band: containment on the circle = OR of the two
+# lobes' lon ranges; the hole (also crossing) is excluded with the
+# strict-interior convention the rectangular oracles use
+_PIP_JOIN_ANTIMERIDIAN_SQL = PTS_CTE + (
+    " SELECT doc_id, 'seam_band' AS name FROM pts"
+    " WHERE lat >= 20.0 AND lat <= 70.0"
+    " AND (lon >= 150.0 OR lon <= -150.0)"
+    " AND NOT (lat > 40.0 AND lat < 55.0"
+    " AND (lon > 170.0 OR lon < -170.0))"
+)
+
+
+@query("pip_join_antimeridian", oracle=_PIP_JOIN_ANTIMERIDIAN_SQL)
+def _q_pip_join_antimeridian(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.session import local_df
+
+    pts = _docs_points(spark, sf_dir)
+    layer = local_df(spark, [(1, "seam_band", ANTIMERIDIAN_WKT)],
+                     ["polygon_id", "name", "wkt"])
+    return (
+        spatial_join(pts, layer, res=6)
+        .select("doc_id", "name")
+    )
+
+
+# Pole-encircling rings (planar polar-cap convention): a ring winding
+# once around in longitude bounds the cap on the side of its mean
+# latitude. The Antarctic ring winds eastward, the Arctic ring westward —
+# both directions must behave identically under even-odd parity.
+POLAR_CAP_WKTS = [
+    (1, "antarctic", "POLYGON ((" + ", ".join(
+        "%d -70" % x for x in list(range(0, 181, 30))
+        + list(range(-150, 1, 30))
+    ) + "))"),
+    (2, "arctic", "POLYGON ((" + ", ".join(
+        "%d 75" % x for x in list(range(0, -181, -30))
+        + list(range(150, -1, -30))
+    ) + "))"),
+]
+
+
+# polar caps are constant-latitude boundaries, so the planar cap
+# interior is a pure latitude predicate — trivially SQL-expressible
+_PIP_JOIN_POLAR_SQL = PTS_CTE + (
+    " SELECT doc_id, 'antarctic' AS name FROM pts WHERE lat < -70.0"
+    " UNION ALL"
+    " SELECT doc_id, 'arctic' AS name FROM pts WHERE lat > 75.0"
+)
+
+
+@query("pip_join_polar", oracle=_PIP_JOIN_POLAR_SQL)
+def _q_pip_join_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.session import local_df
+
+    pts = _docs_points(spark, sf_dir)
+    layer = local_df(spark, POLAR_CAP_WKTS,
+                     ["polygon_id", "name", "wkt"])
+    return (
+        spatial_join(pts, layer, res=6)
+        .select("doc_id", "name")
+    )
+
+
+# rectangle-probe "intersects": interval overlap on the outer box,
+# minus probes strictly inside a hole's open interior
+def _polygon_overlap_sql() -> str:
     _pb_cte = (
         ", pb AS (SELECT doc_id, "
         "round(lon - (0.2 + CAST(doc_id % 4 AS DOUBLE) * 0.15), 6) "
@@ -4548,26 +918,128 @@ def _all_oracle_sql() -> dict[str, str]:
             "SELECT doc_id, '%s' AS name FROM pb WHERE %s"
             % (rname, pred)
         )
-    polygon_overlap_sql = (
+    return (
         PTS_CTE + _pb_cte + " " + " UNION ALL ".join(overlap_parts)
     )
 
+
+# Plan: one candidate pipeline. The pair-dedupe groupBy is the only
+# shuffle; splitting into sure/maybe branches used to re-run the whole
+# candidate subtree (2 shuffles, 2 broadcasts).
+@query("polygon_overlap", oracle=_polygon_overlap_sql, headline=True,
+       exchanges=1)
+def _q_polygon_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # areal probes: a square of doc-dependent size around each doc
+    # point, joined to the rectangle layer by the exact "intersects"
+    # predicate. Rectangle-vs-rectangle(-with-hole) intersects is pure
+    # interval arithmetic, so the oracle mirrors it in SQL: overlap the
+    # outer box, minus probes STRICTLY inside a hole's open interior
+    # (boundary contact counts as intersecting on both sides). Probe
+    # coords round to 6 decimals before the WKT text so the parsed
+    # doubles equal the oracle's round(x, 6).
+    from pure_python_geospatial_export_spark.operators.spatial_join import (
+        polygon_overlap_join,
+    )
+
+    pts = _docs_points(spark, sf_dir)
+    half = F.lit(0.2) + (F.col("doc_id") % 4).cast("double") * F.lit(0.15)
+    x0 = F.round(F.col("lon") - half, 6)
+    x1 = F.round(F.col("lon") + half, 6)
+    y0 = F.round(F.col("lat") - half, 6)
+    y1 = F.round(F.col("lat") + half, 6)
+    probe_wkt = F.format_string(
+        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
+        "%.6f %.6f))",
+        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
+    )
+    probes = pts.select("doc_id", probe_wkt.alias("wkt"))
+    return polygon_overlap_join(
+        probes, _layer_df(spark), res=6, id_col="doc_id"
+    ).select("doc_id", "name")
+
+
+def _bbox_filter_sql() -> str:
     bbox_parts = [
         "SELECT doc_id, '%s' AS name FROM pts WHERE %s"
         % (name, _rect_pred_sql(outer, None))
         for _pid, name, outer, _h in _rects()
     ]
-    bbox_sql = (
+    return (
         PTS_CTE
         + ", hits AS (" + " UNION ALL ".join(bbox_parts) + ") "
         + "SELECT name, COUNT(*) AS n_docs FROM hits GROUP BY name"
     )
 
-    tile_assign_sql = (
+
+@query("bbox_filter", oracle=_bbox_filter_sql)
+def _q_bbox_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # ONE pass over the points: the 18 bbox predicates become a broadcast
+    # nested-loop join against an inline bbox dimension (18 rows), instead
+    # of the former 18-branch union (18 scans of the same table). The
+    # predicate is the same P3 bbox-contains column expression per pair.
+    from pure_python_geospatial_export_spark.session import local_df
+
+    pts = _docs_points(spark, sf_dir)
+    boxes = local_df(
+        spark,
+        [(name, x0, y0, x1, y1)
+         for _pid, name, (x0, y0, x1, y1), _hole in _rects()],
+        ["name", "_x0", "_y0", "_x1", "_y1"],
+    )
+    hits = pts.join(
+        F.broadcast(boxes),
+        (F.col("lon") >= F.col("_x0")) & (F.col("lon") <= F.col("_x1"))
+        & (F.col("lat") >= F.col("_y0")) & (F.col("lat") <= F.col("_y1")),
+    )
+    return hits.groupBy("name").agg(F.count(F.lit(1)).alias("n_docs"))
+
+
+def _tile_assign_sql() -> str:
+    return (
         PTS_CTE + " SELECT doc_id, %s AS tile_id FROM pts" % _tile_sql(6)
     )
 
-    tile_stats_sql = (
+
+@query("tile_assign", oracle=_tile_assign_sql)
+def _q_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pts = _docs_points(spark, sf_dir)
+    return pts.select(
+        "doc_id",
+        cell_id_col(F.col("lon"), F.col("lat"), 6).alias("tile_id"),
+    )
+
+
+def _zonal_stats_sql() -> str:
+    zonal_parts = [
+        "SELECT CAST(%d AS BIGINT) AS polygon_id, '%s' AS name, "
+        "CAST(COUNT(*) AS BIGINT) AS n, "
+        "CAST(SUM(v) AS BIGINT) AS sum_val, AVG(v) AS mean_val, "
+        "MIN(v) AS min_val, MAX(v) AS max_val "
+        "FROM vpts WHERE %s HAVING COUNT(*) > 0"
+        % (pid, name, _rect_pred_sql(outer, hole))
+        for pid, name, outer, hole in _rects()
+    ]
+    return (
+        PTS_CTE
+        + ", vpts AS (SELECT doc_id, lon, lat, "
+        "CAST(doc_id % 100 AS BIGINT) AS v FROM pts) "
+        + " UNION ALL ".join(zonal_parts)
+    )
+
+
+@query("zonal_stats", oracle=_zonal_stats_sql)
+def _q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.tiles import (
+        zonal_stats,
+    )
+    pts = _docs_points(spark, sf_dir).withColumn(
+        "v", (F.col("doc_id") % 100).cast("long")
+    )
+    return zonal_stats(pts, _layer_df(spark), "v", res=7)
+
+
+def _tile_stats_sql() -> str:
+    return (
         PTS_CTE
         + " SELECT %s AS tile_id, COUNT(*) AS n_points, "
           "min(lon) AS xmin, min(lat) AS ymin, "
@@ -4575,15 +1047,51 @@ def _all_oracle_sql() -> dict[str, str]:
           "FROM pts GROUP BY 1" % _tile_sql(5)
     )
 
-    # web-mercator: same ln/tan/cos formulas in DuckDB; a floor-boundary
-    # flip would need a point within ~1 ulp of a tile edge (none in the
-    # derived-point fixture; verified bit-equal)
+
+@query("tile_stats", oracle=_tile_stats_sql, headline=True)
+def _q_tile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pts = _docs_points(spark, sf_dir)
+    return tile_stats(pts, 5).select(
+        "tile_id", "n_points", "xmin", "ymin", "xmax", "ymax"
+    )
+
+
+# each pyramid level recomputed directly at its own resolution —
+# equality proves the hierarchical rollup cascade
+def _tile_pyramid_sql() -> str:
+    return PTS_CTE + " " + " UNION ALL ".join(
+        "SELECT CAST(%d AS INTEGER) AS level, %s AS tile_id, "
+        "COUNT(*) AS n_points, min(lon) AS xmin, min(lat) AS ymin, "
+        "max(lon) AS xmax, max(lat) AS ymax FROM pts GROUP BY 2"
+        % (r, _tile_sql(r))
+        for r in (4, 3, 2)
+    )
+
+
+@query("tile_pyramid", oracle=_tile_pyramid_sql)
+def _q_tile_pyramid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.tiles import (
+        tile_pyramid,
+    )
+    pts = _docs_points(spark, sf_dir)
+    base = tile_stats(pts, 4)
+    return tile_pyramid(base, 4, 2).select(
+        "level", "tile_id", F.col("n_points").cast("long").alias(
+            "n_points"),
+        "xmin", "ymin", "xmax", "ymax",
+    )
+
+
+# web-mercator: same ln/tan/cos formulas in DuckDB; a floor-boundary
+# flip would need a point within ~1 ulp of a tile edge (none in the
+# derived-point fixture; verified bit-equal)
+def _mercator_tiles_sql() -> str:
     _qk_digits = " || ".join(
         "CAST(((tx >> %d) & 1) + ((ty >> %d) & 1) * 2 AS VARCHAR)"
         % (5 - i, 5 - i)
         for i in range(6)
     )
-    mercator_sql = (
+    return (
         PTS_CTE
         + ", m AS (SELECT doc_id, "
         "greatest(least(CAST(floor((lon + 180.0) / 360.0 * 64.0) "
@@ -4595,18 +1103,23 @@ def _all_oracle_sql() -> dict[str, str]:
         "SELECT doc_id, tx, ty, " + _qk_digits + " AS quadkey FROM m"
     )
 
-    # each pyramid level recomputed directly at its own resolution —
-    # equality proves the hierarchical rollup cascade
-    tile_pyramid_sql = PTS_CTE + " " + " UNION ALL ".join(
-        "SELECT CAST(%d AS INTEGER) AS level, %s AS tile_id, "
-        "COUNT(*) AS n_points, min(lon) AS xmin, min(lat) AS ymin, "
-        "max(lon) AS xmax, max(lat) AS ymax FROM pts GROUP BY 2"
-        % (r, _tile_sql(r))
-        for r in (4, 3, 2)
-    )
 
+@query("mercator_tiles", oracle=_mercator_tiles_sql)
+def _q_mercator_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.tiles import (
+        mercator_tile_cols,
+        quadkey_col,
+    )
+    pts = _docs_points(spark, sf_dir)
+    tx, ty = mercator_tile_cols(F.col("lon"), F.col("lat"), 6)
+    return pts.select(
+        "doc_id", tx.alias("tx"), ty.alias("ty")
+    ).withColumn("quadkey", quadkey_col(F.col("tx"), F.col("ty"), 6))
+
+
+def _knn_grid_sql() -> str:
     n3 = 1 << 3
-    knn_grid_sql = (
+    return (
         PTS_CTE
         + """, g AS (
             SELECT doc_id, lon, lat,
@@ -4630,23 +1143,20 @@ def _all_oracle_sql() -> dict[str, str]:
           ) WHERE rank <= 3""".format(n=n3, n1=n3 - 1)
     )
 
-    knn_complete_sql = (
-        PTS_CTE
-        + """ SELECT doc_id, nbr_id, dist_sq, rank FROM (
-            SELECT a.doc_id AS doc_id, b.doc_id AS nbr_id,
-              (a.lon - b.lon) * (a.lon - b.lon)
-              + (a.lat - b.lat) * (a.lat - b.lat) AS dist_sq,
-              CAST(row_number() OVER (PARTITION BY a.doc_id
-                   ORDER BY (a.lon - b.lon) * (a.lon - b.lon)
-                          + (a.lat - b.lat) * (a.lat - b.lat) ASC,
-                          b.doc_id ASC) AS INTEGER) AS rank
-            FROM pts a JOIN pts b ON a.doc_id <> b.doc_id
-          ) WHERE rank <= 3"""
-    )
 
-    knn_exact_sql = (
-        PTS_CTE
-        + """ SELECT doc_id, nbr_id, dist_sq, rank FROM (
+# Plan: the top-k window keys on a superset of the join's partitioning
+# keys, so the replicated candidate relation is NOT re-shuffled: one hash
+# exchange total.
+@query("knn_grid", oracle=_knn_grid_sql, headline=True, exchanges=1)
+def _q_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pts = _docs_points(spark, sf_dir)
+    nbrs = pts.select(F.col("doc_id").alias("nbr_id"), "lon", "lat")
+    return knn_join(pts, nbrs, "doc_id", "nbr_id", k=3, res=3, ring=1)
+
+
+_KNN_EXACT_SQL = (
+    PTS_CTE
+    + """ SELECT doc_id, nbr_id, dist_sq, rank FROM (
             SELECT a.doc_id AS doc_id, b.doc_id AS nbr_id,
               (a.lon - b.lon) * (a.lon - b.lon)
               + (a.lat - b.lat) * (a.lat - b.lat) AS dist_sq,
@@ -4656,20 +1166,84 @@ def _all_oracle_sql() -> dict[str, str]:
                           b.doc_id ASC) AS INTEGER) AS rank
             FROM pts a JOIN pts b ON a.doc_id <> b.doc_id
           ) WHERE rank <= 2"""
+)
+
+
+# folded: == brute-force verify twin of knn_grid
+@query("knn_exact", oracle=_KNN_EXACT_SQL, folded=True)
+def _q_knn_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pts = _docs_points(spark, sf_dir)
+    nbrs = pts.select(F.col("doc_id").alias("nbr_id"), "lon", "lat")
+    return knn_exact(pts, nbrs, "doc_id", "nbr_id", k=2)
+
+
+_KNN_COMPLETE_SQL = (
+    PTS_CTE
+    + """ SELECT doc_id, nbr_id, dist_sq, rank FROM (
+            SELECT a.doc_id AS doc_id, b.doc_id AS nbr_id,
+              (a.lon - b.lon) * (a.lon - b.lon)
+              + (a.lat - b.lat) * (a.lat - b.lat) AS dist_sq,
+              CAST(row_number() OVER (PARTITION BY a.doc_id
+                   ORDER BY (a.lon - b.lon) * (a.lon - b.lon)
+                          + (a.lat - b.lat) * (a.lat - b.lat) ASC,
+                          b.doc_id ASC) AS INTEGER) AS rank
+            FROM pts a JOIN pts b ON a.doc_id <> b.doc_id
+          ) WHERE rank <= 3"""
+)
+
+
+@query("knn_complete", oracle=_KNN_COMPLETE_SQL, folded=True)
+def _q_knn_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-completion grid kNN (operators/knn.knn_join_complete):
+    certificate + ring doubling. res=2 is deliberately coarse so
+    ring-1 certificates FAIL for many lefts and the expansion path is
+    what the oracle verifies — the result must equal brute-force kNN
+    bit for bit."""
+    pts = _docs_points(spark, sf_dir)
+    nbrs = pts.select(F.col("doc_id").alias("nbr_id"), "lon", "lat")
+    return knn_join_complete(pts, nbrs, "doc_id", "nbr_id", k=3,
+                             res=2, ring=1)
+
+
+def _both_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "text")
+    return docs.unionByName(
+        docs.select((F.col("doc_id") + 100000).alias("doc_id"), "text")
     )
 
-    dedup_exact_sql = (
-        "WITH both_docs AS (SELECT doc_id, text FROM documents "
-        "UNION ALL SELECT doc_id + 100000, text FROM documents) "
-        "SELECT md5(text) AS text_hash, min(doc_id) AS rep_id, "
-        "COUNT(*) AS n_dups FROM both_docs GROUP BY 1"
-    )
 
-    fingerprint_sql = (
+_DEDUP_EXACT_SQL = (
+    "WITH both_docs AS (SELECT doc_id, text FROM documents "
+    "UNION ALL SELECT doc_id + 100000, text FROM documents) "
+    "SELECT md5(text) AS text_hash, min(doc_id) AS rep_id, "
+    "COUNT(*) AS n_dups FROM both_docs GROUP BY 1"
+)
+
+
+@query("dedup_exact", oracle=_DEDUP_EXACT_SQL, headline=True)
+def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return dedup.exact_duplicates(_both_docs(spark, sf_dir), "doc_id",
+                                  "text")
+
+
+def _fingerprint_sql() -> str:
+    return (
         "SELECT doc_id, %s AS fp FROM documents" % T.fingerprint_sql("text")
     )
 
-    text_quality_sql = (
+
+@query("fingerprint", oracle=_fingerprint_sql)
+def _q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return docs.select(
+        "doc_id", T.fingerprint(F.col("text")).alias("fp")
+    )
+
+
+def _text_quality_sql() -> str:
+    return (
         "SELECT doc_id, CAST(%s AS INTEGER) AS n_tokens, %s AS stop_ratio, "
         "%s AS punct_ratio, %s AS quality FROM documents"
         % (
@@ -4680,12 +1254,35 @@ def _all_oracle_sql() -> dict[str, str]:
         )
     )
 
-    lang_pred_sql = (
+
+@query("text_quality", oracle=_text_quality_sql, headline=True)
+def _q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return docs.select(
+        "doc_id",
+        T.token_count(F.col("text")).alias("n_tokens"),
+        T.stopword_ratio(F.col("text")).alias("stop_ratio"),
+        T.punct_ratio(F.col("text")).alias("punct_ratio"),
+        T.quality_score(F.col("text")).alias("quality"),
+    )
+
+
+def _lang_pred_sql() -> str:
+    return (
         "SELECT doc_id, %s AS lang_pred FROM documents"
         % T.lang_id_sql("text")
     )
 
-    similarity_sql = """
+
+@query("lang_pred", oracle=_lang_pred_sql)
+def _q_lang_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return docs.select(
+        "doc_id", T.lang_id(F.col("text")).alias("lang_pred")
+    )
+
+
+_SIMILARITY_SQL = """
         WITH q AS (
           SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
           FROM embeddings WHERE vec_id < 5
@@ -4705,132 +1302,233 @@ def _all_oracle_sql() -> dict[str, str]:
           FROM scored
         ) WHERE rank <= 5"""
 
-    events_sql = (
-        "SELECT date_trunc('hour', ts) AS window_start, event_type, "
-        "COUNT(*) AS n_events, "
-        "CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) "
-        "AS sum_cents "
-        "FROM events GROUP BY 1, 2"
+
+# Plan: the query set broadcasts, candidates shuffle ONCE on query id, and
+# WindowGroupLimit prunes to k map-side (partial) before the final window.
+# The r3/r4 bench deltas on this query were host noise, not a plan
+# change; the shape is locked.
+@query("similarity_topk", oracle=_SIMILARITY_SQL, headline=True, exchanges=1)
+def _q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    queries = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+    )
+    return similarity.cosine_topk(
+        emb, queries, "vec_id", "embedding", "query_id", "qvec", k=5
     )
 
-    events_running_sql = (
-        "SELECT event_id, user_id, "
-        "CAST(row_number() OVER w AS INTEGER) AS seq, "
-        "CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) OVER w "
-        "AS BIGINT) AS running_cents, "
-        "lag(event_type) OVER w AS prev_type "
-        "FROM events "
-        "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
+
+def _scratch_dir(kind: str, sf_dir: str) -> str:
+    """uid + pid + sf-scoped /tmp scratch for queries that must write
+    an on-disk artifact before serving (mirrors session.py's warehouse
+    fix): a fixed world-shared /tmp name collides across users
+    (permission errors) and across concurrent runs of the same sf_dir
+    (mixed results). pid scoping means each process leaks a scratch
+    copy unless cleaned: register atexit removal (the query's
+    DataFrame must be consumed before interpreter exit anyway) and
+    purge siblings of THIS uid whose owning process is gone."""
+    import atexit
+    import hashlib
+    import re as _re
+    import shutil
+    import tempfile
+
+    tmp_root = tempfile.gettempdir()
+    mine = _re.compile(
+        r"^ppge_%s-uid%d-pid(\d+)_" % (_re.escape(kind), os.getuid())
+    )
+    for name in os.listdir(tmp_root):
+        m = mine.match(name)
+        if not m or int(m.group(1)) == os.getpid():
+            continue
+        try:
+            os.kill(int(m.group(1)), 0)
+        except ProcessLookupError:
+            shutil.rmtree(os.path.join(tmp_root, name),
+                          ignore_errors=True)
+        except PermissionError:
+            pass  # pid reused by another user: leave it alone
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    base = os.path.join(
+        tmp_root,
+        "ppge_%s-uid%d-pid%d_%s" % (kind, os.getuid(), os.getpid(),
+                                    tag),
+    )
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    return base
+
+
+# generous-parameter IVF-PQ == brute force, same output shape
+@query("ann_ivfpq", oracle=_SIMILARITY_SQL, folded=True)
+def _q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # IVF-PQ end to end (build -> probe -> ADC shortlist -> int8-SQ
+    # intermediate rerank -> exact rerank): with every inverted list
+    # probed, rerank >= corpus size, AND sq_keep >= corpus size, the
+    # served top-k is EXACTLY the brute-force cosine top-k BY
+    # CONSTRUCTION — every approximate stage runs but keeps its whole
+    # candidate set, so no ADC/int8 quantization error can evict a
+    # true neighbor (the LSH recall-1 fixture pattern). A small
+    # sq_keep would instead rest on the fixture's kth-vs-sq_keep-th
+    # cosine gap exceeding the int8 error — empirical, and silently
+    # breakable by a fixture regeneration. The selective-sq_keep
+    # accuracy trade is pinned by scripts/ann_recall_bench.py and the
+    # unit recall tests, not the bit oracle. Exercises the whole index
+    # lifecycle including the sq.parquet relation.
+    from pure_python_geospatial_export_spark.operators.similarity import (
+        build_ivfpq_index,
+        ivfpq_topk_indexed,
     )
 
-    events_asof_sql = (
-        "WITH errors AS (SELECT event_id, user_id, ts FROM events "
-        "WHERE event_type = 'error'), "
-        "clicks AS (SELECT user_id, ts, event_id AS click_id, "
-        "CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS click_cents "
-        "FROM events WHERE event_type = 'click') "
-        "SELECT e.event_id, e.user_id, c.click_id AS prev_click_id, "
-        "c.click_cents AS prev_click_cents "
-        "FROM errors e ASOF LEFT JOIN clicks c "
-        "ON e.user_id = c.user_id AND e.ts >= c.ts"
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    queries = emb.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+    )
+    base = _scratch_dir("ivfpq", sf_dir)
+    build_ivfpq_index(
+        emb, "vec_id", "embedding", base, n_centroids=8,
+        m_subspaces=8, lloyd_iters=2,
+    )
+    return ivfpq_topk_indexed(
+        spark, base, queries, emb, "vec_id", "embedding",
+        "query_id", "qvec", k=5, n_probe=8, rerank=10000,
+        sq_keep=10000,
     )
 
-    zonal_parts = [
-        "SELECT CAST(%d AS BIGINT) AS polygon_id, '%s' AS name, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(v) AS BIGINT) AS sum_val, AVG(v) AS mean_val, "
-        "MIN(v) AS min_val, MAX(v) AS max_val "
-        "FROM vpts WHERE %s HAVING COUNT(*) > 0"
-        % (pid, name, _rect_pred_sql(outer, hole))
-        for pid, name, outer, hole in _rects()
-    ]
-    zonal_sql = (
-        PTS_CTE
-        + ", vpts AS (SELECT doc_id, lon, lat, "
-        "CAST(doc_id % 100 AS BIGINT) AS v FROM pts) "
-        + " UNION ALL ".join(zonal_parts)
+
+_EVENTS_WINDOW_SQL = (
+    "SELECT date_trunc('hour', ts) AS window_start, event_type, "
+    "COUNT(*) AS n_events, "
+    "CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) AS BIGINT) "
+    "AS sum_cents "
+    "FROM events GROUP BY 1, 2"
+)
+
+
+# Plan: map-side partial aggregation in the scan stage, one exchange on
+# (window, type), final agg: no window function, no second exchange.
+@query("events_window", oracle=_EVENTS_WINDOW_SQL, headline=True, exchanges=1)
+def _q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return (
+        ev.withColumn("window_start", F.date_trunc("hour", F.col("ts")))
+        .groupBy("window_start", "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(
+                F.floor(F.col("value") * 100.0 + 0.5).cast("long")
+            ).alias("sum_cents"),
+        )
     )
 
-    # zonal_geotiff: the Spark side decodes pixel values and centers
-    # from REAL GeoTIFF bytes; the oracle recomputes the closed form.
-    # lon/lat mirror the reader's arithmetic order exactly —
-    # origin + (p + 0.5) * scale with scale 1.25 (exact binary), so
-    # the doubles agree bit-for-bit.
-    zonal_geotiff_parts = [
-        "SELECT CAST(%d AS BIGINT) AS polygon_id, '%s' AS name, "
-        "CAST(COUNT(*) AS BIGINT) AS n, "
-        "CAST(SUM(v) AS BIGINT) AS sum_val, AVG(v) AS mean_val, "
-        "MIN(v) AS min_val, MAX(v) AS max_val "
-        "FROM rast WHERE %s HAVING COUNT(*) > 0"
-        % (pid, name, _rect_pred_sql(outer, hole))
-        for pid, name, outer, hole in _rects()
-    ]
-    zonal_geotiff_sql = (
-        "WITH rast AS (SELECT "
-        "-180.0 + (CAST(px AS DOUBLE) + 0.5) * 1.25 AS lon, "
-        "90.0 - (CAST(py AS DOUBLE) + 0.5) * 1.25 AS lat, "
-        "CAST((px * 7 + py * 13) % 1000 AS BIGINT) AS v "
-        "FROM generate_series(0, 287) t(px), "
-        "generate_series(0, 143) s(py)) "
-        + " UNION ALL ".join(zonal_geotiff_parts)
+
+_EVENTS_RUNNING_SQL = (
+    "SELECT event_id, user_id, "
+    "CAST(row_number() OVER w AS INTEGER) AS seq, "
+    "CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) OVER w "
+    "AS BIGINT) AS running_cents, "
+    "lag(event_type) OVER w AS prev_type "
+    "FROM events "
+    "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)"
+)
+
+
+@query("events_running", oracle=_EVENTS_RUNNING_SQL)
+def _q_events_running(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Window-function coverage (SURVEY §2.5): per-user running event
+    count and cumulative value, plus previous event type (lag)."""
+    from pyspark.sql import Window
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return ev.select(
+        "event_id",
+        "user_id",
+        F.row_number().over(w).cast("int").alias("seq"),
+        F.sum(F.floor(F.col("value") * 100.0 + 0.5).cast("long"))
+        .over(w).alias("running_cents"),
+        F.lag("event_type").over(w).alias("prev_type"),
     )
 
+
+_EVENTS_ASOF_SQL = (
+    "WITH errors AS (SELECT event_id, user_id, ts FROM events "
+    "WHERE event_type = 'error'), "
+    "clicks AS (SELECT user_id, ts, event_id AS click_id, "
+    "CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS click_cents "
+    "FROM events WHERE event_type = 'click') "
+    "SELECT e.event_id, e.user_id, c.click_id AS prev_click_id, "
+    "c.click_cents AS prev_click_cents "
+    "FROM errors e ASOF LEFT JOIN clicks c "
+    "ON e.user_id = c.user_id AND e.ts >= c.ts"
+)
+
+
+@query("events_asof", oracle=_EVENTS_ASOF_SQL)
+def _q_events_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """As-of join: each 'error' event picks up the latest prior (or
+    simultaneous) 'click' by the same user."""
+    from pure_python_geospatial_export_spark.operators.asof import asof_join
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    errors = ev.where(F.col("event_type") == "error").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = ev.where(F.col("event_type") == "click").select(
+        "user_id", "ts", F.col("event_id").alias("click_id"),
+        F.floor(F.col("value") * 100.0 + 0.5).cast("long")
+        .alias("click_cents"),
+    )
+    out = asof_join(errors, clicks, key="user_id",
+                    right_cols=["click_id", "click_cents"])
+    return out.select(
+        "event_id", "user_id",
+        F.col("asof_click_id").alias("prev_click_id"),
+        F.col("asof_click_cents").alias("prev_click_cents"),
+    )
+
+
+_EVENTS_RANGE_SQL = (
+    "WITH errors AS (SELECT event_id, user_id, ts FROM events "
+    "WHERE event_type = 'error'), "
+    "clicks AS (SELECT event_id AS click_id, user_id, "
+    "ts AS start_ts, ts + INTERVAL 15 MINUTE AS end_ts "
+    "FROM events WHERE event_type = 'click') "
+    "SELECT c.click_id, COUNT(*) AS n_errors "
+    "FROM errors e JOIN clicks c ON e.user_id = c.user_id "
+    "AND e.ts >= c.start_ts AND e.ts <= c.end_ts "
+    "GROUP BY 1"
+)
+
+
+@query("events_range", oracle=_EVENTS_RANGE_SQL)
+def _q_events_range(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.asof import (
+        range_join,
+    )
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    errors = ev.where(F.col("event_type") == "error").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = ev.where(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_id"),
+        "user_id",
+        F.col("ts").alias("start_ts"),
+        (F.col("ts") + F.expr("INTERVAL 15 MINUTES")).alias("end_ts"),
+    )
+    j = range_join(errors, clicks, key="user_id", left_ts="ts",
+                   bucket_seconds=900)
+    return j.groupBy("click_id").agg(
+        F.count(F.lit(1)).alias("n_errors")
+    )
+
+
+def _kmv_cells_sql() -> str:
     from pure_python_geospatial_export_spark.operators.sketch import (
         kmv_hash_sql,
     )
-    # Spark's exact `percentile` and DuckDB's `quantile_cont` share the
-    # (1-f)*lo + f*hi interpolation — verified bit-equal on this fixture
-    events_quantiles_sql = (
-        "SELECT event_type, COUNT(*) AS n_events, "
-        "quantile_cont(CAST(floor(value * 100.0 + 0.5) AS BIGINT), 0.5) "
-        "AS p50_cents, "
-        "quantile_cont(CAST(floor(value * 100.0 + 0.5) AS BIGINT), 0.9) "
-        "AS p90_cents "
-        "FROM events GROUP BY 1"
-    )
-
-    events_sessions_sql = (
-        "WITH e AS (SELECT user_id, event_id, ts, "
-        "CASE WHEN lag(ts) OVER w IS NULL "
-        "OR CAST(epoch(ts) AS BIGINT) "
-        "- lag(CAST(epoch(ts) AS BIGINT)) OVER w > 1800 "
-        "THEN 1 ELSE 0 END AS new_s FROM events "
-        "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
-        "s AS (SELECT user_id, ts, CAST(SUM(new_s) OVER ("
-        "PARTITION BY user_id ORDER BY ts, event_id "
-        "ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM e) "
-        "SELECT user_id, session_seq, COUNT(*) AS n_events, "
-        "MIN(ts) AS session_start, MAX(ts) AS session_end "
-        "FROM s GROUP BY 1, 2"
-    )
-
-    events_rollup_sql = (
-        "SELECT event_type, CAST(hour(ts) AS INTEGER) AS hr, "
-        "COUNT(*) AS n_events FROM events "
-        "GROUP BY ROLLUP(event_type, CAST(hour(ts) AS INTEGER))"
-    )
-
-    top_sources_sql = (
-        PTS_CTE
-        + ", src AS (SELECT %s AS cell_id, d.source AS source "
-        "FROM pts p JOIN documents d USING (doc_id)), "
-        "counts AS (SELECT cell_id, source, "
-        "CAST(COUNT(*) AS BIGINT) AS n FROM src GROUP BY 1, 2) "
-        "SELECT cell_id, source, n, rank FROM ("
-        "SELECT cell_id, source, n, CAST(row_number() OVER ("
-        "PARTITION BY cell_id ORDER BY n DESC, source ASC) AS INTEGER) "
-        "AS rank FROM counts) WHERE rank <= 3"
-        % _tile_sql(1, "p.lon", "p.lat")
-    )
-
-    doc_sample_sql = (
-        "SELECT doc_id, lang FROM documents "
-        "WHERE %s < (CASE lang WHEN 'de' THEN 1073741824.0 "
-        "WHEN 'en' THEN 2147483648.0 ELSE 429496729.6 END)"
-        % kmv_hash_sql("CAST(doc_id AS VARCHAR) || ''")
-    )
-
-    kmv_sql = (
+    return (
         PTS_CTE
         + ", hv AS (SELECT DISTINCT %s AS cell_id, %s AS h FROM pts), "
         "ranked AS (SELECT cell_id, h, row_number() OVER "
@@ -4847,46 +1545,81 @@ def _all_oracle_sql() -> dict[str, str]:
         )
     )
 
-    # hll_cells: registers from the same md5-prefix hash (bucket = low
-    # 8 bits, rank via length(bin(rest)) — identical semantics in both
-    # engines), harmonic sum as the exact scaled BIGINT. The estimate
-    # numerator AND the linear-counting correction table are computed
-    # in Python here (same arithmetic / libm as hll_estimate) and
-    # embedded as literals — both engines parse identical
-    # shortest-repr doubles, so even the corrected branch bit-matches.
+
+@query("kmv_cells", oracle=_kmv_cells_sql)
+def _q_kmv_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # distinct-url estimates per coarse cell via MERGED fine-cell
+    # sketches — equality with the oracle (which computes each coarse
+    # cell directly from raw rows) proves the merge property
     from pure_python_geospatial_export_spark.operators.sketch import (
-        hll_correction_table,
-        hll_numerator,
+        kmv_estimate,
+        kmv_merge,
+        kmv_sketch,
+    )
+    pts = _docs_points(spark, sf_dir).withColumn(
+        "url", F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
+    )
+    fine = pts.withColumn(
+        "cell_id", cell_id_col(F.col("lon"), F.col("lat"), 1)
+    ).withColumn(
+        "cell_fine", cell_id_col(F.col("lon"), F.col("lat"), 3)
+    )
+    sk = kmv_sketch(fine, ["cell_id", "cell_fine"], "url", k=16)
+    merged = kmv_merge(sk, ["cell_id"], k=16)
+    return merged.select(
+        "cell_id", kmv_estimate("sketch", 16).alias("est_distinct")
     )
 
-    def _dlit(x: float) -> str:
-        # DuckDB lexes a plain decimal literal as DECIMAL (here up to
-        # DECIMAL(17,15)) and its DECIMAL->DOUBLE cast can land 1 ulp
-        # off the correct double parse of the same digits; an exponent
-        # forces the DOUBLE lexer path, which round-trips repr exactly.
-        r = repr(float(x))
-        return r if ("e" in r or "E" in r) else r + "e0"
 
-    def _hll_tbl_sql(p: int) -> str:
-        return "[" + ", ".join(
-            _dlit(x) for x in hll_correction_table(p)
-        ) + "]"
+# hll_cells: registers from the same md5-prefix hash (bucket = low
+# 8 bits, rank via length(bin(rest)) — identical semantics in both
+# engines), harmonic sum as the exact scaled BIGINT. The estimate
+# numerator AND the linear-counting correction table are computed
+# in Python here (same arithmetic / libm as hll_estimate) and
+# embedded as literals — both engines parse identical
+# shortest-repr doubles, so even the corrected branch bit-matches.
+def _dlit(x: float) -> str:
+    # DuckDB lexes a plain decimal literal as DECIMAL (here up to
+    # DECIMAL(17,15)) and its DECIMAL->DOUBLE cast can land 1 ulp
+    # off the correct double parse of the same digits; an exponent
+    # forces the DOUBLE lexer path, which round-trips repr exactly.
+    r = repr(float(x))
+    return r if ("e" in r or "E" in r) else r + "e0"
 
-    def _hll_numer_lit(p: int) -> str:
-        # shared with hll_estimate — incl. the m<128 alpha special
-        # cases a local copy would miss
-        return _dlit(hll_numerator(p))
 
-    def _hll_est_case(p: int) -> str:
-        m = 1 << p
-        raw = (_hll_numer_lit(p) + " / CAST(harmonic AS DOUBLE)")
-        return (
-            "CASE WHEN (" + raw + ") <= " + _dlit(2.5 * m)
-            + " AND zeros > 0 THEN (" + _hll_tbl_sql(p)
-            + ")[CAST(zeros AS INTEGER)] ELSE " + raw + " END AS est"
-        )
+def _hll_tbl_sql(p: int) -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        hll_correction_table,
+    )
+    return "[" + ", ".join(
+        _dlit(x) for x in hll_correction_table(p)
+    ) + "]"
 
-    hll_sql = (
+
+def _hll_numer_lit(p: int) -> str:
+    # shared with hll_estimate — incl. the m<128 alpha special
+    # cases a local copy would miss
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        hll_numerator,
+    )
+    return _dlit(hll_numerator(p))
+
+
+def _hll_est_case(p: int) -> str:
+    m = 1 << p
+    raw = (_hll_numer_lit(p) + " / CAST(harmonic AS DOUBLE)")
+    return (
+        "CASE WHEN (" + raw + ") <= " + _dlit(2.5 * m)
+        + " AND zeros > 0 THEN (" + _hll_tbl_sql(p)
+        + ")[CAST(zeros AS INTEGER)] ELSE " + raw + " END AS est"
+    )
+
+
+def _hll_cells_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
         PTS_CTE
         + (
             ", hv AS (SELECT %s AS cell_id, %s AS h FROM pts), "
@@ -4910,10 +1643,46 @@ def _all_oracle_sql() -> dict[str, str]:
         + " FROM fin"
     )
 
-    # kmv_overlap: per-source bottom-32 vocab sketches from raw rows,
-    # then the identical union-sample estimator. 31 * 2^32 =
-    # 133143986176 is the saturated-estimate numerator at k=32.
-    kmv_overlap_sql = (
+
+@query("hll_cells", oracle=_hll_cells_sql, folded=True)
+def _q_hll_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # HyperLogLog distinct-url state per coarse cell via MERGED
+    # fine-cell register relations — equality with the oracle (which
+    # computes each coarse cell's registers directly from raw rows)
+    # proves the register-wise-max merge is lossless. Output pins the
+    # full integer sketch state (zeros + scaled harmonic sum — exact
+    # BIGINTs, order-free) plus the CORRECTED estimate: the raw branch
+    # is one double division of exact operands, and the linear-counting
+    # branch reads a Python-precomputed m*ln(m/zeros) lookup table
+    # embedded as literals on BOTH engine sides — in-engine ln is
+    # measurably 1-ulp divergent (JVM vs DuckDB libm), table literals
+    # are data.
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        hll_estimate,
+        hll_merge,
+        hll_sketch,
+    )
+    pts = _docs_points(spark, sf_dir).withColumn(
+        "url", F.concat(F.lit("doc://"), F.col("doc_id").cast("string"))
+    )
+    fine = pts.withColumn(
+        "cell_id", cell_id_col(F.col("lon"), F.col("lat"), 1)
+    ).withColumn(
+        "cell_fine", cell_id_col(F.col("lon"), F.col("lat"), 3)
+    )
+    sk = hll_sketch(fine, ["cell_id", "cell_fine"], "url", p=8)
+    merged = hll_merge(sk, ["cell_id"])
+    return hll_estimate(merged, ["cell_id"], p=8)
+
+
+# kmv_overlap: per-source bottom-32 vocab sketches from raw rows,
+# then the identical union-sample estimator. 31 * 2^32 =
+# 133143986176 is the saturated-estimate numerator at k=32.
+def _kmv_overlap_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
         "WITH tok AS (SELECT source, "
         "unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok "
         "FROM documents), "
@@ -4938,15 +1707,59 @@ def _all_oracle_sql() -> dict[str, str]:
         % kmv_hash_sql("tok")
     )
 
-    # distinct_rollup: flat HLL register recompute from raw events at
-    # p=10 (m=1024, 33-p=23) — the Spark side must reproduce it
-    # through the day-chunked precompute + tail seam. Corrected
-    # estimate via the same literal lookup table as hll_cells.
-    # NULL user_ids must be dropped on BOTH sides: hll_sketch filters
-    # value_col IS NOT NULL (countDistinct semantics), so the oracle
-    # mirrors it — a NULL would otherwise hash to a NULL-bucket
-    # register row here only.
-    distinct_rollup_sql = (
+
+@query("kmv_overlap", oracle=_kmv_overlap_sql, folded=True)
+def _q_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # KMV set-operation estimates (the capability HLL lacks): per-source
+    # vocabulary sketches, then union / Jaccard / intersection estimates
+    # for every source pair from the SKETCHES alone — the oracle
+    # recomputes the same estimator from raw rows, pinning the whole
+    # pipeline (tokenize -> hash -> per-source bottom-k -> pairwise
+    # union-sample arithmetic) bit-for-bit. 20 sources -> 190 pairs;
+    # the pair join is broadcast-sized by construction (one row per
+    # source).
+    from pure_python_geospatial_export_spark.functions.text import (
+        tokens_col,
+    )
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_overlap_cols,
+        kmv_sketch,
+    )
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    )
+    toks = docs.select(
+        "source", F.explode(tokens_col(F.col("text"))).alias("tok")
+    )
+    sk = kmv_sketch(toks, ["source"], "tok", k=32)
+    a = sk.select(F.col("source").alias("source_a"),
+                  F.col("sketch").alias("_sa"))
+    b = sk.select(F.col("source").alias("source_b"),
+                  F.col("sketch").alias("_sb"))
+    pairs = a.join(F.broadcast(b),
+                   F.col("source_a") < F.col("source_b"))
+    est_u, jac, est_i = kmv_overlap_cols("_sa", "_sb", k=32)
+    return pairs.select(
+        "source_a", "source_b",
+        est_u.alias("est_union"),
+        jac.alias("jaccard"),
+        est_i.alias("est_intersection"),
+    )
+
+
+# distinct_rollup: flat HLL register recompute from raw events at
+# p=10 (m=1024, 33-p=23) — the Spark side must reproduce it
+# through the day-chunked precompute + tail seam. Corrected
+# estimate via the same literal lookup table as hll_cells.
+# NULL user_ids must be dropped on BOTH sides: hll_sketch filters
+# value_col IS NOT NULL (countDistinct semantics), so the oracle
+# mirrors it — a NULL would otherwise hash to a NULL-bucket
+# register row here only.
+def _distinct_rollup_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
         "WITH hv AS (SELECT event_type, %s AS h FROM events "
         "WHERE user_id IS NOT NULL), "
         "regs AS (SELECT event_type, "
@@ -4966,384 +1779,123 @@ def _all_oracle_sql() -> dict[str, str]:
         + " FROM fin"
     )
 
-    events_range_sql = (
-        "WITH errors AS (SELECT event_id, user_id, ts FROM events "
-        "WHERE event_type = 'error'), "
-        "clicks AS (SELECT event_id AS click_id, user_id, "
-        "ts AS start_ts, ts + INTERVAL 15 MINUTE AS end_ts "
-        "FROM events WHERE event_type = 'click') "
-        "SELECT c.click_id, COUNT(*) AS n_errors "
-        "FROM errors e JOIN clicks c ON e.user_id = c.user_id "
-        "AND e.ts >= c.start_ts AND e.ts <= c.end_ts "
-        "GROUP BY 1"
+
+@query("distinct_rollup", oracle=_distinct_rollup_sql, folded=True)
+def _q_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # hypertable continuous aggregate for the NON-additive aggregate:
+    # per-(day, event_type) HLL register relations precomputed into
+    # day chunks, served as precomputed-before-cutoff UNION
+    # tail-recompute, merged across days by register max. The oracle
+    # computes registers FLAT from raw events — equality proves the
+    # chunk/tail seam loses nothing (register max is lossless), the
+    # distinct-rollup twin of time_rollup's additive-seam proof. The
+    # corrected estimate is bit-oracled via the precomputed
+    # linear-counting table (see hll_cells / hll_estimate).
+    from pure_python_geospatial_export_spark.sources.timeseries import (
+        serve_distinct_rollup,
+        write_distinct_rollup,
+        write_events_table,
     )
 
-    events_json_sql = (
-        "SELECT event_type, "
-        "CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) "
-        "AS BIGINT) AS sum_k, "
-        "COUNT(*) AS n_events FROM events GROUP BY 1"
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    base = _scratch_dir("hllroll", sf_dir)
+    write_events_table(ev, os.path.join(base, "events"))
+    write_distinct_rollup(
+        spark, os.path.join(base, "events"),
+        os.path.join(base, "droll"), p=10,
+    )
+    return serve_distinct_rollup(
+        spark,
+        os.path.join(base, "events"),
+        os.path.join(base, "droll"),
+        "2024-01-21",
+        p=10,
     )
 
-    bpe_tokens_sql = (
-        "SELECT doc_id, CAST(%s AS INTEGER) AS n_bpe_tokens FROM documents"
-        % T.bpe_token_count_sql("text")
+
+# gpkg_roundtrip: the container round-trip is the identity on
+# (doc_id, lon, lat) — doubles ride through IEEE bytes — so
+# the oracle is the bare point derivation.
+_GPKG_ROUNDTRIP_SQL = PTS_CTE + " SELECT doc_id, lon, lat FROM pts"
+
+
+@query("gpkg_roundtrip", oracle=_GPKG_ROUNDTRIP_SQL, folded=True)
+def _q_gpkg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # full GeoPackage CONTAINER lifecycle: derive document points ->
+    # vectorized POINT WKB -> write a REAL .gpkg (SQLite file with
+    # spec metadata tables, GP blob wrapping JVM-side) -> distributed
+    # rowid-range read back -> strip GP headers -> decode coordinate
+    # doubles. The lon/lat bits ride through IEEE-754 bytes unchanged
+    # end to end, so the output equals the pts derivation EXACTLY —
+    # the oracle recomputes it straight from the documents table.
+    from pure_python_geospatial_export_spark.functions.geom_udfs import (
+        lonlat_to_wkb_point,
+        wkb_point_lat,
+        wkb_point_lon,
+    )
+    from pure_python_geospatial_export_spark.sources.gpkg import (
+        read_gpkg,
+        write_gpkg,
     )
 
-    wkt_values = ", ".join(
-        "('%s', '%s')" % (cid, w.replace("'", "''"))
-        for cid, w in _golden_wkts()
+    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
+    wkb = pts.select(
+        "doc_id",
+        lonlat_to_wkb_point("lon", "lat").alias("geom"),
     )
-    wkt_roundtrip_sql = (
-        "SELECT case_id, wkt AS wkt_out FROM (VALUES %s) AS t(case_id, wkt)"
-        % wkt_values
+    base = _scratch_dir("gpkg", sf_dir)
+    os.makedirs(base, exist_ok=True)  # sqlite won't mkdir, Spark would
+    path = os.path.join(base, "docs.gpkg")
+    write_gpkg(wkb, path, "docs", geometry_type="POINT")
+    back = read_gpkg(spark, path, num_partitions=4)
+    return back.select(
+        F.col("doc_id"),
+        wkb_point_lon("geom").alias("lon"),
+        wkb_point_lat("geom").alias("lat"),
     )
 
-    # LSH internals (blake2b minhash bands / random-plane sign buckets)
-    # are not SQL-expressible, but on these fixtures the candidate stage
-    # has recall 1 (deterministic — fixed seeds, fixed data, planted
-    # near-dups far above the threshold), so the OUTPUT equals the exact
-    # all-pairs threshold set, which DuckDB can compute directly. The
-    # shingling (strip/split/3-gram/distinct) mirrors the Arrow kernel.
-    # exact all-pairs n-gram Jaccard on a bounded subset (the no-LSH
-    # small-data path gets its own driver-level evidence)
-    jaccard_pairs_sql = """
-        WITH alldocs AS (
-          SELECT doc_id, text FROM documents WHERE doc_id < 120
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, text || ' zzzz' AS text
-          FROM documents WHERE doc_id < 120
-        ), toks AS (
-          SELECT doc_id, text,
-                 regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM alldocs
-        ), sh AS (
-          SELECT doc_id,
-            CASE WHEN len(t) >= 3 THEN
-              list_distinct(list_transform(range(1, len(t) - 1),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-            ELSE [text] END AS shingles
-          FROM toks
+
+def _geohash_cells_sql() -> str:
+    return (
+        PTS_CTE
+        + ", gh AS (SELECT %s AS gh2, %s AS gh9 FROM pts)"
+          " SELECT gh2, COUNT(*) AS n_docs,"
+          " min(gh9) AS gh9_min, max(gh9) AS gh9_max"
+          " FROM gh GROUP BY 1"
+        % (_geohash.geohash_sql("lon", "lat", 2),
+           _geohash.geohash_sql("lon", "lat", 9))
+    )
+
+
+@query("geohash_cells", oracle=_geohash_cells_sql, folded=True)
+def _q_geohash_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # geohash cell rollup: derived document points bucketed by a coarse
+    # precision-2 geohash (pure column arithmetic, JVM-side), with the
+    # lexicographic min/max of each cell's full-precision (9-char)
+    # geohash — exercising both ends of the codec. Geohash strings are
+    # exact integer interleave + base32 after one IEEE quantization per
+    # axis, so both engines produce identical strings.
+    from pure_python_geospatial_export_spark.geo.geohash import (
+        geohash_col,
+    )
+
+    pts = _docs_points(spark, sf_dir)
+    return (
+        pts.select(
+            geohash_col(F.col("lon"), F.col("lat"), 2).alias("gh2"),
+            geohash_col(F.col("lon"), F.col("lat"), 9).alias("gh9"),
         )
-        SELECT id_a, id_b, jaccard FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / CAST(len(list_distinct(
-                    list_concat(a.shingles, b.shingles))) AS DOUBLE)
-              AS jaccard
-          FROM sh a, sh b WHERE a.doc_id < b.doc_id
-        ) WHERE jaccard >= 0.5"""
-
-    minhash_pairs_sql = """
-        WITH alldocs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, text || ' zzzz' AS text
-          FROM documents
-        ), toks AS (
-          SELECT doc_id, text,
-                 regexp_split_to_array(trim(text), '\\s+') AS t
-          FROM alldocs
-        ), sh AS (
-          -- mirrors the Spark kernel's short-doc fallback: fewer than 3
-          -- tokens -> the whole text is the single shingle (previously
-          -- range(1, len-1) silently dropped such docs, making the gate
-          -- depend on the fixture containing none)
-          SELECT doc_id,
-            CASE WHEN len(t) >= 3 THEN
-              list_distinct(list_transform(range(1, len(t) - 1),
-                i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-            ELSE [text] END AS shingles
-          FROM toks
-        )
-        SELECT id_a, id_b, jaccard FROM (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-            CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-              / CAST(len(list_distinct(
-                    list_concat(a.shingles, b.shingles))) AS DOUBLE)
-              AS jaccard
-          FROM sh a, sh b WHERE a.doc_id < b.doc_id
-        ) WHERE jaccard >= 0.5"""
-
-    # SimHash mirrors across engines because the token hash is md5:
-    # DuckDB's md5_number_upper reads the same 8 bytes little-endian — a
-    # fixed bit permutation of Spark's conv() big-endian read, and
-    # xor/bit_count are permutation-invariant, so hamming distances and
-    # the <=3 pair set agree exactly. The 4x16-bit chunk candidate join
-    # is COMPLETE for hamming<=3 (pigeonhole), so Spark's output equals
-    # this all-pairs filter.
-    simhash_pairs_sql = """
-        WITH alldocs AS (
-          SELECT doc_id, text FROM documents
-          UNION ALL
-          SELECT doc_id + 100000 AS doc_id, text || ' zzzz' AS text
-          FROM documents
-        ), tok AS (
-          SELECT doc_id,
-            unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
-          FROM alldocs
-        ), votes AS (
-          SELECT doc_id, r.b,
-            SUM(CASE WHEN (md5_number_upper(t) >> r.b) & 1 = 1
-                THEN 1 ELSE -1 END) AS v
-          FROM tok CROSS JOIN range(0, 64) r(b)
-          GROUP BY doc_id, r.b
-        ), sim AS (
-          SELECT doc_id,
-            CAST(SUM(CASE WHEN v >= 0
-                 THEN (CAST(1 AS UBIGINT) << b)
-                 ELSE CAST(0 AS UBIGINT) END) AS UBIGINT) AS s
-          FROM votes GROUP BY doc_id
-        )
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-          CAST(bit_count(xor(a.s, b.s)) AS INTEGER) AS hamming
-        FROM sim a, sim b
-        WHERE a.doc_id < b.doc_id
-          AND bit_count(xor(a.s, b.s)) <= 3"""
-
-    embedding_near_dup_sql = """
-        WITH base AS (
-          SELECT vec_id,
-            list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
-          FROM embeddings
-        ), planted AS (
-          SELECT vec_id + 100000 AS vec_id,
-            list_transform(embedding,
-                           x -> CAST(x AS DOUBLE) + 0.01) AS vec
-          FROM embeddings WHERE vec_id < 150
-        ), u AS (
-          SELECT * FROM base UNION ALL SELECT * FROM planted
-        )
-        SELECT id_a, id_b, score FROM (
-          SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-            list_dot_product(a.vec, b.vec)
-              / (sqrt(list_dot_product(a.vec, a.vec))
-                 * sqrt(list_dot_product(b.vec, b.vec))) AS score
-          FROM u a, u b WHERE a.vec_id < b.vec_id
-        ) WHERE score >= 0.99"""
-
-    from pure_python_geospatial_export_spark.functions import urls as U
-    from pure_python_geospatial_export_spark.operators.sketch import (
-        kmv_hash_sql,
-    )
-
-    url_features_sql = (
-        "WITH u AS (SELECT doc_id, %s AS url FROM documents), "
-        "h AS (SELECT doc_id, url, %s AS host FROM u) "
-        "SELECT doc_id, host, %s AS domain, "
-        "CAST(%s AS INTEGER) AS depth, "
-        "%s AS ext, %s AS is_media FROM h"
-        % (
-            _URL_SYNTH_SQL,
-            U.url_host_sql("url"),
-            U.registered_domain_sql("host"),
-            U.url_path_depth_sql("url"),
-            U.url_extension_sql("url"),
-            U.url_is_media_sql("url"),
+        .groupBy("gh2")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("gh9").alias("gh9_min"),
+            F.max("gh9").alias("gh9_max"),
         )
     )
 
-    # haversine mirrored term-for-term incl. the [0,1] clamp; 2R and
-    # the /2.0 half-angles match the Spark column expression exactly
-    _hav = (
-        "2.0 * 6371.0088 * asin(sqrt(greatest(least("
-        "sin(radians(b.lat - a.lat) / 2.0) "
-        "* sin(radians(b.lat - a.lat) / 2.0) "
-        "+ cos(radians(a.lat)) * cos(radians(b.lat)) "
-        "* sin(radians(b.lon - a.lon) / 2.0) "
-        "* sin(radians(b.lon - a.lon) / 2.0), 1.0), 0.0)))"
-    )
-    radius_pairs_sql = PTS_CTE + (
-        " SELECT id_a, id_b, round(dist_km, 6) AS dist_km FROM ("
-        "SELECT a.doc_id AS id_a, b.doc_id AS id_b, %s AS dist_km "
-        "FROM pts a, pts b WHERE a.doc_id < b.doc_id) "
-        "WHERE dist_km <= 300.0" % _hav
-    )
 
-    domain_quota_sql = (
-        "WITH r AS (SELECT doc_id, source, row_number() OVER ("
-        "PARTITION BY source ORDER BY %s ASC, doc_id ASC) AS rn "
-        "FROM documents) "
-        "SELECT doc_id, source FROM r WHERE rn <= 20"
-        % kmv_hash_sql("CAST(doc_id AS VARCHAR)")
-    )
-
-    _sh8 = " || ' ' || ".join("t[i+%d]" % j for j in range(8)).replace(
-        "t[i+0]", "t[i]"
-    )
-    from pure_python_geospatial_export_spark.functions import pii as P
-
-    pii_scan_sql = (
-        "WITH aug AS (SELECT doc_id, %s AS text2 FROM documents) "
-        "SELECT doc_id, %s AS n_emails, %s AS n_phones, %s AS n_ips, "
-        "%s AS has_pii, %s AS redacted FROM aug"
-        % (
-            _PII_SYNTH_SQL,
-            P.email_count_sql("text2"),
-            P.phone_count_sql("text2"),
-            P.ipv4_count_sql("text2"),
-            P.pii_hit_sql("text2"),
-            P.redact_pii_sql("text2"),
-        )
-    )
-
-    repetition_sql = (
-        "WITH tk AS (SELECT doc_id, "
-        "regexp_split_to_array(trim(text), '\\s+') AS t FROM documents), "
-        "st AS (SELECT doc_id, CAST(len(t) AS INTEGER) AS n_tokens, "
-        "CAST(len(list_distinct(t)) AS INTEGER) AS n_distinct_tokens, t "
-        "FROM tk), "
-        "g AS (SELECT doc_id, n_tokens, n_distinct_tokens, "
-        "unnest(list_transform(range(1, len(t)), "
-        "i -> concat_ws(' ', t[i], t[i+1]))) AS gr "
-        "FROM st WHERE n_tokens >= 2), "
-        "c AS (SELECT doc_id, n_tokens, n_distinct_tokens, gr, "
-        "count(*) AS cnt FROM g "
-        "GROUP BY doc_id, n_tokens, n_distinct_tokens, gr), "
-        "m AS (SELECT doc_id, n_tokens, n_distinct_tokens, "
-        "max(cnt) AS top_gram_count FROM c "
-        "GROUP BY doc_id, n_tokens, n_distinct_tokens) "
-        "SELECT doc_id, n_tokens, n_distinct_tokens, top_gram_count, "
-        "CAST(top_gram_count AS DOUBLE) / CAST(n_tokens - 1 AS DOUBLE) "
-        "AS top_gram_frac, "
-        "CAST(n_distinct_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) "
-        "AS distinct_ratio FROM m "
-        "UNION ALL "
-        "SELECT doc_id, n_tokens, n_distinct_tokens, "
-        "CAST(0 AS BIGINT) AS top_gram_count, 0.0 AS top_gram_frac, "
-        "CAST(n_distinct_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) "
-        "AS distinct_ratio FROM st WHERE n_tokens < 2"
-    )
-
-    curate_pipeline_sql = (
-        "WITH alldocs AS ("
-        "SELECT doc_id, text FROM documents WHERE doc_id < 150 "
-        "UNION ALL SELECT doc_id + 100000 AS doc_id, "
-        "text || ' zzzz' AS text FROM documents WHERE doc_id < 150 "
-        "UNION ALL SELECT doc_id + 200000 AS doc_id, text "
-        "FROM documents WHERE doc_id < 150 "
-        "UNION ALL SELECT doc_id + 300000 AS doc_id, 'x' AS text "
-        "FROM documents WHERE doc_id < 150), "
-        "filt AS (SELECT doc_id, text FROM alldocs "
-        "WHERE %s >= 5 AND (%s) >= 0.3 AND (%s) = 'en'), "
-        "exd AS (SELECT doc_id, text FROM filt "
-        "WHERE doc_id IN (SELECT min(doc_id) FROM filt "
-        "GROUP BY text)), "
-        "toks AS (SELECT doc_id, text, "
-        "regexp_split_to_array(trim(text), '\\s+') AS t FROM exd), "
-        "sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN "
-        "list_distinct(list_transform(range(1, len(t) - 1), "
-        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) "
-        "ELSE [text] END AS shingles FROM toks), "
-        "drops AS (SELECT DISTINCT b.doc_id AS doc_id "
-        "FROM sh a, sh b WHERE a.doc_id < b.doc_id AND "
-        "CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) "
-        "/ CAST(len(list_distinct(list_concat(a.shingles, "
-        "b.shingles))) AS DOUBLE) >= 0.5) "
-        "SELECT doc_id FROM exd "
-        "WHERE doc_id NOT IN (SELECT doc_id FROM drops)"
-        % (
-            T.token_count_sql("text"),
-            T.quality_score_sql("text"),
-            T.lang_id_sql("text"),
-        )
-    )
-
-    # greedy packing's bin state depends on the running result (a reset
-    # whenever the fill WOULD overflow) — not prefix-sum expressible, so
-    # the oracle walks each shard with a recursive CTE in the same
-    # doc_id order the applyInPandas kernel uses.
-    pack_docs_sql = (
-        "WITH RECURSIVE s AS (SELECT source, doc_id, "
-        "CAST(COALESCE(%s, 0) AS INTEGER) AS n_tokens, "
-        "CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) "
-        "AS BIGINT) AS rn FROM documents), "
-        "r AS ("
-        "SELECT source, doc_id, n_tokens, rn, CAST(0 AS BIGINT) AS "
-        "pack_id, CAST(0 AS BIGINT) AS pack_offset, n_tokens AS fill "
-        "FROM s WHERE rn = 1 "
-        "UNION ALL "
-        "SELECT s.source, s.doc_id, s.n_tokens, s.rn, "
-        "CASE WHEN r.fill + s.n_tokens > 96 THEN r.pack_id + 1 "
-        "ELSE r.pack_id END, "
-        "CASE WHEN r.fill + s.n_tokens > 96 THEN CAST(0 AS BIGINT) "
-        "ELSE CAST(r.fill AS BIGINT) END, "
-        "CASE WHEN r.fill + s.n_tokens > 96 THEN s.n_tokens "
-        "ELSE r.fill + s.n_tokens END "
-        "FROM r JOIN s ON s.source = r.source AND s.rn = r.rn + 1) "
-        "SELECT source, doc_id, n_tokens, pack_id, pack_offset, "
-        "n_tokens > 96 AS overflow FROM r"
-        % T.token_count_sql("text")
-    )
-
-    weighted_sample_sql = (
-        "WITH s AS (SELECT doc_id, source, n_chars, "
-        "round(pow((CAST(%s AS DOUBLE) + 1.0) / 4294967297.0, "
-        "1.0 / CAST(n_chars AS DOUBLE)), 12) AS sc FROM documents "
-        "WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0) "
-        "SELECT doc_id, source, n_chars FROM "
-        "(SELECT doc_id, source, n_chars, row_number() OVER "
-        "(PARTITION BY source ORDER BY sc DESC, doc_id ASC) AS rn "
-        "FROM s) WHERE rn <= 5"
-        % kmv_hash_sql("CAST(doc_id AS VARCHAR) || ''")
-    )
-
-    tfidf_sql = (
-        "WITH tk AS (SELECT doc_id, "
-        "unnest(regexp_split_to_array(trim(text), '\\s+')) AS term "
-        "FROM documents), "
-        "tf AS (SELECT doc_id, term, count(*) AS tf FROM tk "
-        "GROUP BY doc_id, term), "
-        "dfq AS (SELECT term, count(*) AS _df FROM tf GROUP BY term), "
-        "n AS (SELECT count(*) AS _n FROM documents), "
-        "sc AS (SELECT doc_id, tf.term AS term, tf, "
-        "round(CAST(tf AS DOUBLE) * (ln((CAST(_n AS DOUBLE) + 1.0) / "
-        "(CAST(_df AS DOUBLE) + 1.0)) + 1.0), 9) AS score "
-        "FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN n) "
-        "SELECT doc_id, term, tf, score, rank FROM "
-        "(SELECT *, CAST(row_number() OVER (PARTITION BY doc_id "
-        "ORDER BY score DESC, term ASC) AS INTEGER) AS rank FROM sc) "
-        "WHERE rank <= 5"
-    )
-
-    decontaminate_sql = (
-        "WITH tk AS (SELECT doc_id, text, "
-        "regexp_split_to_array(trim(text), '\\s+') AS t FROM documents), "
-        "sh AS (SELECT doc_id, CASE WHEN len(t) >= 8 THEN "
-        "list_distinct(list_transform(range(1, len(t) - 6), i -> %s)) "
-        "ELSE [text] END AS shingles FROM tk), "
-        "ds AS (SELECT doc_id, unnest(shingles) AS s FROM sh), "
-        "bs AS (SELECT DISTINCT unnest(shingles) AS s FROM sh "
-        "WHERE doc_id %% 10 = 0), "
-        "tot AS (SELECT doc_id, count(*) AS n_shingles FROM ds "
-        "GROUP BY 1), "
-        "mt AS (SELECT doc_id, count(*) AS n_matched FROM ds "
-        "WHERE s IN (SELECT s FROM bs) GROUP BY 1) "
-        "SELECT tot.doc_id AS doc_id, n_shingles, n_matched, "
-        "CAST(n_matched AS DOUBLE) / CAST(n_shingles AS DOUBLE) "
-        "AS contamination FROM tot JOIN mt USING (doc_id)"
-        % _sh8
-    )
-
-    events_funnel_sql = (
-        "WITH e1 AS (SELECT user_id, ts, event_type, "
-        "min(CASE WHEN event_type = 'view' THEN ts END) "
-        "OVER (PARTITION BY user_id) AS t_1 FROM events), "
-        "e2 AS (SELECT *, min(CASE WHEN event_type = 'click' "
-        "AND ts > t_1 THEN ts END) "
-        "OVER (PARTITION BY user_id) AS t_2 FROM e1), "
-        "e3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' "
-        "AND ts > t_2 THEN ts END) "
-        "OVER (PARTITION BY user_id) AS t_3 FROM e2) "
-        "SELECT user_id, max(t_1) AS t_1, max(t_2) AS t_2, "
-        "max(t_3) AS t_3, CAST(CASE "
-        "WHEN max(t_3) IS NOT NULL THEN 3 "
-        "WHEN max(t_2) IS NOT NULL THEN 2 "
-        "WHEN max(t_1) IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) "
-        "AS reached FROM e3 GROUP BY user_id"
-    )
-
-    _dissolve_sql = (
+def _dissolve_sql() -> str:
+    return (
         PTS_CTE.replace("WITH pts", "WITH RECURSIVE pts", 1)
         + ", rects AS (SELECT doc_id AS id, "
           "round(lon - (0.5 + CAST(doc_id % 4 AS DOUBLE) * 0.3), 6)"
@@ -5370,13 +1922,82 @@ def _all_oracle_sql() -> dict[str, str]:
           " FROM labels JOIN rects USING (id) GROUP BY 1"
     )
 
-    # dissolve_union_rects: same recursive-closure grouping over
-    # INTEGER-lattice rects, then the union AREA recomputed by
-    # coordinate-grid decomposition — a minimal cell of the group's
-    # x/y coordinate grid is covered iff it sits fully inside some
-    # member rect; integer products summed as DOUBLE are exact, so
-    # the overlay kernel's shoelace area must match bit-for-bit.
-    _union_rects_sql = (
+
+# rect intersect == interval overlap, so the oracle rebuilds
+# the pair graph in SQL and takes min-id components with a
+# recursive closure (reach(node, r): r reaches node; UNION
+# dedups so it terminates)
+@query("dissolve_rects", oracle=_dissolve_sql, folded=True)
+def _q_dissolve_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # polygon dissolve: doc-derived rectangles merged into
+    # overlap-connected groups (exact self-overlap pairs -> label
+    # propagation CC -> group rollup). Rect-vs-rect intersect is pure
+    # interval arithmetic so the oracle mirrors the pair graph in SQL
+    # and computes the same components with a recursive closure CTE;
+    # coords round to 6 decimals before the WKT text so the parsed
+    # doubles equal the oracle's round(x, 6) (the polygon_overlap
+    # recipe).
+    from pure_python_geospatial_export_spark.operators.dissolve import (
+        dissolve_groups,
+    )
+
+    # 21 is coprime to 4 so the surviving doc_ids exercise all four
+    # rect sizes (a % 20 filter would pin doc_id % 4 == 0)
+    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
+    half = F.lit(0.5) + (F.col("doc_id") % 4).cast("double") * F.lit(0.3)
+    x0 = F.round(F.col("lon") - half, 6)
+    x1 = F.round(F.col("lon") + half, 6)
+    y0 = F.round(F.col("lat") - half, 6)
+    y1 = F.round(F.col("lat") + half, 6)
+    probe_wkt = F.format_string(
+        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
+        "%.6f %.6f))",
+        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
+    )
+    probes = pts.select(F.col("doc_id").alias("id"),
+                        probe_wkt.alias("wkt"))
+    return dissolve_groups(probes, res=6).select(
+        "group_id", "n_members", "xmin", "ymin", "xmax", "ymax"
+    )
+
+
+# the grouped pair strategy must compute the SAME components
+@query("dissolve_rects_grouped", oracle=_dissolve_sql, folded=True)
+def _q_dissolve_rects_grouped(spark: SparkSession,
+                              sf_dir: str) -> DataFrame:
+    # the single-exchange grouped pair strategy against the SAME
+    # recursive-closure oracle — bit-level proof the group-walk
+    # variant computes identical components
+    from pure_python_geospatial_export_spark.operators.dissolve import (
+        dissolve_groups,
+    )
+
+    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
+    half = F.lit(0.5) + (F.col("doc_id") % 4).cast("double") * F.lit(0.3)
+    x0 = F.round(F.col("lon") - half, 6)
+    x1 = F.round(F.col("lon") + half, 6)
+    y0 = F.round(F.col("lat") - half, 6)
+    y1 = F.round(F.col("lat") + half, 6)
+    probe_wkt = F.format_string(
+        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
+        "%.6f %.6f))",
+        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
+    )
+    probes = pts.select(F.col("doc_id").alias("id"),
+                        probe_wkt.alias("wkt"))
+    return dissolve_groups(probes, res=6, strategy="grouped").select(
+        "group_id", "n_members", "xmin", "ymin", "xmax", "ymax"
+    )
+
+
+# dissolve_union_rects: same recursive-closure grouping over
+# INTEGER-lattice rects, then the union AREA recomputed by
+# coordinate-grid decomposition — a minimal cell of the group's
+# x/y coordinate grid is covered iff it sits fully inside some
+# member rect; integer products summed as DOUBLE are exact, so
+# the overlay kernel's shoelace area must match bit-for-bit.
+def _dissolve_union_rects_sql() -> str:
+    return (
         PTS_CTE.replace("WITH pts", "WITH RECURSIVE pts", 1)
         + ", rects AS (SELECT doc_id AS id, "
           "CAST(floor(lon) AS BIGINT) - (1 + doc_id % 3) AS x0, "
@@ -5418,433 +2039,3907 @@ def _all_oracle_sql() -> dict[str, str]:
           " USING (group_id)"
     )
 
-    return {
-        "pip_join": pip_sql,
-        "pip_join_geodesic": _geodesic_oracle_sql(),
-        "pip_join_salted": pip_sql,
-        "pip_join_antimeridian": pip_antimeridian_sql,
-        "pip_join_polar": pip_polar_sql,
-        "polygon_overlap": polygon_overlap_sql,
-        "bbox_filter": bbox_sql,
-        "tile_assign": tile_assign_sql,
-        "zonal_stats": zonal_sql,
-        "zonal_geotiff": zonal_geotiff_sql,
-        "tile_stats": tile_stats_sql,
-        "tile_pyramid": tile_pyramid_sql,
-        "mercator_tiles": mercator_sql,
-        "knn_grid": knn_grid_sql,
-        "knn_exact": knn_exact_sql,
-        "knn_complete": knn_complete_sql,
-        "dedup_exact": dedup_exact_sql,
-        "fingerprint": fingerprint_sql,
-        "text_quality": text_quality_sql,
-        "lang_pred": lang_pred_sql,
-        "similarity_topk": similarity_sql,
-        # generous-parameter IVF-PQ == brute force, same output shape
-        "ann_ivfpq": similarity_sql,
-        "events_window": events_sql,
-        "events_running": events_running_sql,
-        "events_asof": events_asof_sql,
-        "events_range": events_range_sql,
-        "kmv_cells": kmv_sql,
-        "hll_cells": hll_sql,
-        # gpkg_roundtrip: the container round-trip is the identity on
-        # (doc_id, lon, lat) — doubles ride through IEEE bytes — so
-        # the oracle is the bare point derivation.
-        "gpkg_roundtrip": PTS_CTE + " SELECT doc_id, lon, lat FROM pts",
-        # rect intersect == interval overlap, so the oracle rebuilds
-        # the pair graph in SQL and takes min-id components with a
-        # recursive closure (reach(node, r): r reaches node; UNION
-        # dedups so it terminates)
-        "dissolve_rects": _dissolve_sql,
-        # the grouped pair strategy must compute the SAME components
-        "dissolve_rects_grouped": _dissolve_sql,
-        # merged-boundary dissolve: union area via grid decomposition
-        "dissolve_union_rects": _union_rects_sql,
-        # each row's validity is known BY CONSTRUCTION from its
-        # doc_id residue, so the oracle is a pure CASE rollup
-        "geom_validate": (
-            "SELECT CASE doc_id % 5"
-            " WHEN 1 THEN 'self_intersection'"
-            " WHEN 2 THEN 'open_ring'"
-            " WHEN 3 THEN 'repeated_point'"
-            " WHEN 4 THEN 'too_few_points' END AS reason,"
-            " COUNT(*) AS n_docs,"
-            " min(doc_id) AS min_doc, max(doc_id) AS max_doc,"
-            " CAST(max(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END)"
-            " AS INTEGER) AS any_valid"
-            " FROM documents GROUP BY 1"
-        ),
-        "geohash_cells": (
-            PTS_CTE
-            + ", gh AS (SELECT %s AS gh2, %s AS gh9 FROM pts)"
-              " SELECT gh2, COUNT(*) AS n_docs,"
-              " min(gh9) AS gh9_min, max(gh9) AS gh9_max"
-              " FROM gh GROUP BY 1"
-            % (_geohash.geohash_sql("lon", "lat", 2),
-               _geohash.geohash_sql("lon", "lat", 9))
-        ),
-        "kmv_overlap": kmv_overlap_sql,
-        "distinct_rollup": distinct_rollup_sql,
-        "hh_sketch": (
-            "WITH c AS (SELECT lang, source AS key, COUNT(*) AS est "
-            "FROM documents GROUP BY 1, 2) "
-            "SELECT * FROM (SELECT lang, key, est, est AS lo, est AS hi, "
-            "CAST(row_number() OVER (PARTITION BY lang "
-            "ORDER BY est DESC, key ASC) AS INTEGER) AS rank FROM c) "
-            "WHERE rank <= 5"
-        ),
-        "radius_pairs": radius_pairs_sql,
-        "url_features": url_features_sql,
-        "pii_scan": pii_scan_sql,
-        "repetition": repetition_sql,
-        "pack_docs": pack_docs_sql,
-        "curate_pipeline": curate_pipeline_sql,
-        "tfidf_terms": tfidf_sql,
-        "weighted_sample": weighted_sample_sql,
-        "domain_quota": domain_quota_sql,
-        "decontaminate": decontaminate_sql,
-        "doc_sample": doc_sample_sql,
-        "top_sources": top_sources_sql,
-        "events_quantiles": events_quantiles_sql,
-        "events_funnel": events_funnel_sql,
-        "funnel_counts": (
-            "WITH f AS (%s), "
-            "s AS (SELECT unnest(range(1, reached + 1)) AS stage "
-            "FROM f WHERE reached >= 1) "
-            "SELECT CAST(stage AS INTEGER) AS stage, "
-            "COUNT(*) AS n_users FROM s GROUP BY stage"
-            % events_funnel_sql
-        ),
-        "pack_efficiency": (
-            "WITH RECURSIVE s AS (SELECT source, doc_id, "
-            "CAST(COALESCE(%s, 0) AS INTEGER) AS n_tokens, "
-            "CAST(row_number() OVER (PARTITION BY source "
-            "ORDER BY doc_id) AS BIGINT) AS rn FROM documents), "
-            "r AS ("
-            "SELECT source, doc_id, n_tokens, rn, CAST(0 AS BIGINT) "
-            "AS pack_id, n_tokens AS fill FROM s WHERE rn = 1 "
+
+# merged-boundary dissolve: union area via grid decomposition
+@query("dissolve_union_rects", oracle=_dissolve_union_rects_sql, folded=True)
+def _q_dissolve_union_rects(spark: SparkSession,
+                            sf_dir: str) -> DataFrame:
+    # dissolved-BOUNDARY output: integer-lattice rectangles (floors of
+    # the doc point, half-width 1 + doc_id % 3) merged into
+    # overlap-connected groups whose union polygon the overlay kernel
+    # emits; the reported area is the net shoelace of the emitted
+    # rings. On the integer lattice every overlay coordinate is exact,
+    # so the area matches a SQL coordinate-grid decomposition (a
+    # minimal grid cell is covered iff fully inside some member rect)
+    # BIT-FOR-BIT — union geometry verified through pure arithmetic.
+    from pure_python_geospatial_export_spark.operators.dissolve import (
+        dissolve_geometry,
+    )
+
+    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
+    w = (F.lit(1) + F.col("doc_id") % 3).cast("long")
+    fx = F.floor("lon").cast("long")
+    fy = F.floor("lat").cast("long")
+    x0, x1 = fx - w, fx + w
+    y0, y1 = fy - w, fy + w
+    probe_wkt = F.format_string(
+        "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
+        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
+    )
+    probes = pts.select(F.col("doc_id").alias("id"),
+                        probe_wkt.alias("wkt"))
+    return dissolve_geometry(probes, res=6).select(
+        "group_id", "n_members", "area"
+    )
+
+
+# each row's validity is known BY CONSTRUCTION from its
+# doc_id residue, so the oracle is a pure CASE rollup
+_GEOM_VALIDATE_SQL = (
+    "SELECT CASE doc_id % 5"
+    " WHEN 1 THEN 'self_intersection'"
+    " WHEN 2 THEN 'open_ring'"
+    " WHEN 3 THEN 'repeated_point'"
+    " WHEN 4 THEN 'too_few_points' END AS reason,"
+    " COUNT(*) AS n_docs,"
+    " min(doc_id) AS min_doc, max(doc_id) AS max_doc,"
+    " CAST(max(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 0 END)"
+    " AS INTEGER) AS any_valid"
+    " FROM documents GROUP BY 1"
+)
+
+
+@query("geom_validate", oracle=_GEOM_VALIDATE_SQL, folded=True)
+def _q_geom_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # validity QA gate: five geometry classes built per doc_id residue
+    # (valid rect / bowtie / open ring / repeated vertex / degenerate
+    # triangle), classified geometrically by validate_geometries. The
+    # oracle knows each row's truth BY CONSTRUCTION (the residue), so
+    # the rollup proves the classifier end to end.
+    from pure_python_geospatial_export_spark.operators.validate import (
+        validate_geometries,
+    )
+
+    pts = _docs_points(spark, sf_dir)
+    x0, y0 = F.col("lon"), F.col("lat")
+    x1, y1 = F.col("lon") + F.lit(0.5), F.col("lat") + F.lit(0.5)
+    cls = F.col("doc_id") % 5
+    wkt = (
+        F.when(cls == 1, F.format_string(
+            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
+            "%.6f %.6f))",
+            x0, y0, x1, y0, x0, y1, x1, y1, x0, y0))  # bowtie
+        .when(cls == 2, F.format_string(
+            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f))",
+            x0, y0, x1, y0, x1, y1, x0, y1))          # open ring
+        .when(cls == 3, F.format_string(
+            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
+            "%.6f %.6f, %.6f %.6f))",
+            x0, y0, x1, y0, x1, y0, x1, y1, x0, y1, x0, y0))  # repeat
+        .when(cls == 4, F.format_string(
+            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f))",
+            x0, y0, x1, y1, x0, y0))                  # 3 points
+        .otherwise(F.format_string(
+            "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
+            "%.6f %.6f))",
+            x0, y0, x1, y0, x1, y1, x0, y1, x0, y0))  # valid rect
+    )
+    probes = pts.select("doc_id", wkt.alias("wkt"))
+    return (
+        validate_geometries(probes)
+        .groupBy("reason")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("doc_id").alias("min_doc"),
+            F.max("doc_id").alias("max_doc"),
+            F.max(F.col("is_valid").cast("int")).alias("any_valid"),
+        )
+    )
+
+
+_HH_SKETCH_SQL = (
+    "WITH c AS (SELECT lang, source AS key, COUNT(*) AS est "
+    "FROM documents GROUP BY 1, 2) "
+    "SELECT * FROM (SELECT lang, key, est, est AS lo, est AS hi, "
+    "CAST(row_number() OVER (PARTITION BY lang "
+    "ORDER BY est DESC, key ASC) AS INTEGER) AS rank FROM c) "
+    "WHERE rank <= 5"
+)
+
+
+@query("hh_sketch", oracle=_HH_SKETCH_SQL)
+def _q_hh_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable SpaceSaving heavy hitters (operators/sketch.py): top-5
+    sources per language. Fixture has ~20 distinct sources per lang,
+    far below m=64, so EVERY per-partition summary is exact (no
+    eviction: err = 0, pmin = 0) and the merged output equals the exact
+    top-k bit-for-bit with lo = est = hi — deterministically oracled
+    regardless of partitioning, the same fixture-pins-the-sketch trick
+    as the LSH queries."""
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        heavy_hitters_sketch,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return heavy_hitters_sketch(docs, ["lang"], "source", k=5, m=64)
+
+
+# haversine mirrored term-for-term incl. the [0,1] clamp; 2R and
+# the /2.0 half-angles match the Spark column expression exactly
+def _radius_pairs_sql() -> str:
+    _hav = (
+        "2.0 * 6371.0088 * asin(sqrt(greatest(least("
+        "sin(radians(b.lat - a.lat) / 2.0) "
+        "* sin(radians(b.lat - a.lat) / 2.0) "
+        "+ cos(radians(a.lat)) * cos(radians(b.lat)) "
+        "* sin(radians(b.lon - a.lon) / 2.0) "
+        "* sin(radians(b.lon - a.lon) / 2.0), 1.0), 0.0)))"
+    )
+    return PTS_CTE + (
+        " SELECT id_a, id_b, round(dist_km, 6) AS dist_km FROM ("
+        "SELECT a.doc_id AS id_a, b.doc_id AS id_b, %s AS dist_km "
+        "FROM pts a, pts b WHERE a.doc_id < b.doc_id) "
+        "WHERE dist_km <= 300.0" % _hav
+    )
+
+
+@query("radius_pairs", oracle=_radius_pairs_sql, headline=True)
+def _q_radius_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact within-300km haversine pairs among the derived doc points
+    (operators/knn.radius_join, latitude-adaptive candidate fan-out).
+    The oracle recomputes every pair with the identical clamped
+    haversine arithmetic — sin/cos/asin agree bitwise between the JVM
+    and DuckDB's libm on this fixture (hash-checked)."""
+    from pure_python_geospatial_export_spark.operators.knn import (
+        radius_join,
+    )
+
+    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
+    pairs = radius_join(
+        pts.select(F.col("doc_id").alias("id_a"), "lon", "lat"),
+        pts.select(F.col("doc_id").alias("id_b"), "lon", "lat"),
+        "id_a", "id_b", radius_km=300.0, res=6,
+    )
+    # distances rounded to 6 decimals (~1mm): JVM and DuckDB libm trig
+    # drift by 1 ulp on a couple of fixture pairs — the PAIR SET is
+    # bit-stable, the 15th decimal of the distance is not
+    return pairs.where(F.col("id_a") < F.col("id_b")).select(
+        "id_a", "id_b", F.round("dist_km", 6).alias("dist_km")
+    )
+
+
+_URL_SYNTH_SQL = (
+    "concat('https://', "
+    "CASE WHEN doc_id % 3 = 0 THEN 'user@www.' ELSE '' END, "
+    "source, "
+    "CASE WHEN doc_id % 4 = 0 THEN '.co.uk' "
+    "WHEN doc_id % 4 = 1 THEN '.com:8080' "
+    "WHEN doc_id % 4 = 2 THEN '.org' ELSE '.io' END, "
+    "CASE WHEN doc_id % 5 = 0 THEN '' "
+    "WHEN doc_id % 5 = 1 THEN '/a' "
+    "WHEN doc_id % 5 = 2 THEN '/a/b/c' "
+    "WHEN doc_id % 5 = 3 THEN '/img/photo.JPG?w=1' "
+    "ELSE '/docs/paper.pdf' END)"
+)
+
+
+def _url_features_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import urls as U
+    return (
+        "WITH u AS (SELECT doc_id, %s AS url FROM documents), "
+        "h AS (SELECT doc_id, url, %s AS host FROM u) "
+        "SELECT doc_id, host, %s AS domain, "
+        "CAST(%s AS INTEGER) AS depth, "
+        "%s AS ext, %s AS is_media FROM h"
+        % (
+            _URL_SYNTH_SQL,
+            U.url_host_sql("url"),
+            U.registered_domain_sql("host"),
+            U.url_path_depth_sql("url"),
+            U.url_extension_sql("url"),
+            U.url_is_media_sql("url"),
+        )
+    )
+
+
+@query("url_features", oracle=_url_features_sql)
+def _q_url_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.functions import urls as U
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    with_url = docs.select(
+        "doc_id", F.expr(_URL_SYNTH_SQL).alias("url")
+    )
+    host = U.url_host(F.col("url"))
+    return with_url.select(
+        "doc_id",
+        host.alias("host"),
+        U.registered_domain(host).alias("domain"),
+        U.url_path_depth(F.col("url")).alias("depth"),
+        U.url_extension(F.col("url")).alias("ext"),
+        U.url_is_media(F.col("url")).alias("is_media"),
+    )
+
+
+# synthetic URL per document — ONE expression string valid in BOTH Spark
+# SQL and DuckDB (concat/CASE/%), so the Spark query (via F.expr) and the
+# oracle share it verbatim; exercises www-stripping, ccTLD second-level
+# domains, ports, userinfo, path depth, extensions, and query strings
+# Deterministic PII planting (the corpus itself is PII-free word salad):
+# valid in BOTH Spark SQL and DuckDB — one string, two engines, so the
+# synthesized column is identical on each side of the oracle compare.
+_PII_SYNTH_SQL = (
+    "concat(text, "
+    "CASE WHEN doc_id % 3 = 0 THEN concat(' contact user', "
+    "CAST(doc_id AS STRING), '@example.org now') ELSE '' END, "
+    "CASE WHEN doc_id % 4 = 0 THEN concat(' from 10.', "
+    "CAST(doc_id % 200 AS STRING), '.0.', "
+    "CAST(doc_id % 250 AS STRING), ' logged') ELSE '' END, "
+    "CASE WHEN doc_id % 5 = 0 THEN concat(' call 555-010', "
+    "CAST(doc_id % 1000 AS STRING), ' today') ELSE '' END)"
+)
+
+
+def _pii_scan_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import pii as P
+    return (
+        "WITH aug AS (SELECT doc_id, %s AS text2 FROM documents) "
+        "SELECT doc_id, %s AS n_emails, %s AS n_phones, %s AS n_ips, "
+        "%s AS has_pii, %s AS redacted FROM aug"
+        % (
+            _PII_SYNTH_SQL,
+            P.email_count_sql("text2"),
+            P.phone_count_sql("text2"),
+            P.ipv4_count_sql("text2"),
+            P.pii_hit_sql("text2"),
+            P.redact_pii_sql("text2"),
+        )
+    )
+
+
+@query("pii_scan", oracle=_pii_scan_sql)
+def _q_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.functions import pii as P
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    aug = docs.select("doc_id", F.expr(_PII_SYNTH_SQL).alias("text2"))
+    t = F.col("text2")
+    return aug.select(
+        "doc_id",
+        P.email_count(t).alias("n_emails"),
+        P.phone_count(t).alias("n_phones"),
+        P.ipv4_count(t).alias("n_ips"),
+        P.pii_hit(t).alias("has_pii"),
+        P.redact_pii(t).alias("redacted"),
+    )
+
+
+_REPETITION_SQL = (
+    "WITH tk AS (SELECT doc_id, "
+    "regexp_split_to_array(trim(text), '\\s+') AS t FROM documents), "
+    "st AS (SELECT doc_id, CAST(len(t) AS INTEGER) AS n_tokens, "
+    "CAST(len(list_distinct(t)) AS INTEGER) AS n_distinct_tokens, t "
+    "FROM tk), "
+    "g AS (SELECT doc_id, n_tokens, n_distinct_tokens, "
+    "unnest(list_transform(range(1, len(t)), "
+    "i -> concat_ws(' ', t[i], t[i+1]))) AS gr "
+    "FROM st WHERE n_tokens >= 2), "
+    "c AS (SELECT doc_id, n_tokens, n_distinct_tokens, gr, "
+    "count(*) AS cnt FROM g "
+    "GROUP BY doc_id, n_tokens, n_distinct_tokens, gr), "
+    "m AS (SELECT doc_id, n_tokens, n_distinct_tokens, "
+    "max(cnt) AS top_gram_count FROM c "
+    "GROUP BY doc_id, n_tokens, n_distinct_tokens) "
+    "SELECT doc_id, n_tokens, n_distinct_tokens, top_gram_count, "
+    "CAST(top_gram_count AS DOUBLE) / CAST(n_tokens - 1 AS DOUBLE) "
+    "AS top_gram_frac, "
+    "CAST(n_distinct_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) "
+    "AS distinct_ratio FROM m "
+    "UNION ALL "
+    "SELECT doc_id, n_tokens, n_distinct_tokens, "
+    "CAST(0 AS BIGINT) AS top_gram_count, 0.0 AS top_gram_frac, "
+    "CAST(n_distinct_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE) "
+    "AS distinct_ratio FROM st WHERE n_tokens < 2"
+)
+
+
+# Plan: tokenization scalars must sit in the Project UNDER the Generate
+# (parent prints first): if ExtractGenerator hoists them above, they
+# re-evaluate per exploded gram row, O(tokens^2)/doc. Exchanges: gram
+# count + per-doc max.
+@query("repetition", oracle=_REPETITION_SQL, exchanges=2)
+def _q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.curate import (
+        repetition_stats,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return repetition_stats(docs)
+
+
+# greedy packing's bin state depends on the running result (a reset
+# whenever the fill WOULD overflow) — not prefix-sum expressible, so
+# the oracle walks each shard with a recursive CTE in the same
+# doc_id order the applyInPandas kernel uses.
+def _pack_docs_sql() -> str:
+    return (
+        "WITH RECURSIVE s AS (SELECT source, doc_id, "
+        "CAST(COALESCE(%s, 0) AS INTEGER) AS n_tokens, "
+        "CAST(row_number() OVER (PARTITION BY source ORDER BY doc_id) "
+        "AS BIGINT) AS rn FROM documents), "
+        "r AS ("
+        "SELECT source, doc_id, n_tokens, rn, CAST(0 AS BIGINT) AS "
+        "pack_id, CAST(0 AS BIGINT) AS pack_offset, n_tokens AS fill "
+        "FROM s WHERE rn = 1 "
+        "UNION ALL "
+        "SELECT s.source, s.doc_id, s.n_tokens, s.rn, "
+        "CASE WHEN r.fill + s.n_tokens > 96 THEN r.pack_id + 1 "
+        "ELSE r.pack_id END, "
+        "CASE WHEN r.fill + s.n_tokens > 96 THEN CAST(0 AS BIGINT) "
+        "ELSE CAST(r.fill AS BIGINT) END, "
+        "CASE WHEN r.fill + s.n_tokens > 96 THEN s.n_tokens "
+        "ELSE r.fill + s.n_tokens END "
+        "FROM r JOIN s ON s.source = r.source AND s.rn = r.rn + 1) "
+        "SELECT source, doc_id, n_tokens, pack_id, pack_offset, "
+        "n_tokens > 96 AS overflow FROM r"
+        % T.token_count_sql("text")
+    )
+
+
+@query("pack_docs", oracle=_pack_docs_sql)
+def _q_pack_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.pack import (
+        pack_sequences,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return pack_sequences(docs, 96).select(
+        "source", "doc_id", "n_tokens", "pack_id", "pack_offset",
+        "overflow",
+    )
+
+
+def _curate_pipeline_sql() -> str:
+    return (
+        "WITH alldocs AS ("
+        "SELECT doc_id, text FROM documents WHERE doc_id < 150 "
+        "UNION ALL SELECT doc_id + 100000 AS doc_id, "
+        "text || ' zzzz' AS text FROM documents WHERE doc_id < 150 "
+        "UNION ALL SELECT doc_id + 200000 AS doc_id, text "
+        "FROM documents WHERE doc_id < 150 "
+        "UNION ALL SELECT doc_id + 300000 AS doc_id, 'x' AS text "
+        "FROM documents WHERE doc_id < 150), "
+        "filt AS (SELECT doc_id, text FROM alldocs "
+        "WHERE %s >= 5 AND (%s) >= 0.3 AND (%s) = 'en'), "
+        "exd AS (SELECT doc_id, text FROM filt "
+        "WHERE doc_id IN (SELECT min(doc_id) FROM filt "
+        "GROUP BY text)), "
+        "toks AS (SELECT doc_id, text, "
+        "regexp_split_to_array(trim(text), '\\s+') AS t FROM exd), "
+        "sh AS (SELECT doc_id, CASE WHEN len(t) >= 3 THEN "
+        "list_distinct(list_transform(range(1, len(t) - 1), "
+        "i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) "
+        "ELSE [text] END AS shingles FROM toks), "
+        "drops AS (SELECT DISTINCT b.doc_id AS doc_id "
+        "FROM sh a, sh b WHERE a.doc_id < b.doc_id AND "
+        "CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE) "
+        "/ CAST(len(list_distinct(list_concat(a.shingles, "
+        "b.shingles))) AS DOUBLE) >= 0.5) "
+        "SELECT doc_id FROM exd "
+        "WHERE doc_id NOT IN (SELECT doc_id FROM drops)"
+        % (
+            T.token_count_sql("text"),
+            T.quality_score_sql("text"),
+            T.lang_id_sql("text"),
+        )
+    )
+
+
+@query("curate_pipeline", oracle=_curate_pipeline_sql, headline=True)
+def _q_curate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # END-TO-END curation preset, fully oracled: plant a near-dup twin
+    # (suffix — the proven recall-1 LSH fixture), an exact duplicate,
+    # and sub-token-floor junk per base doc, then run the whole
+    # cost-ordered pipeline (quality/lang filters -> exact dedup ->
+    # MinHash near-dup). The oracle recomputes every stage in SQL; the
+    # near-dup stage's LSH recall is deterministically 1 here (only the
+    # planted twins sit above the threshold, jaccard ~0.96 vs a ~0.03
+    # natural ceiling), so the exact all-pairs SQL is the twin.
+    from pure_python_geospatial_export_spark.operators.curate import (
+        curate_corpus,
+    )
+
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).where(F.col("doc_id") < 150).select("doc_id", "text")
+    near = docs.select(
+        (F.col("doc_id") + F.lit(100000)).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zzzz")).alias("text"),
+    )
+    exact = docs.select(
+        (F.col("doc_id") + F.lit(200000)).alias("doc_id"), "text"
+    )
+    junk = docs.select(
+        (F.col("doc_id") + F.lit(300000)).alias("doc_id"),
+        F.lit("x").alias("text"),
+    )
+    corpus = docs.unionAll(near).unionAll(exact).unionAll(junk)
+    out = curate_corpus(
+        corpus,
+        min_quality=0.3,
+        keep_langs=["en"],
+        near_dup_threshold=0.5,
+        min_tokens=5,
+    )
+    return out.select("doc_id")
+
+
+def _pack_efficiency_sql() -> str:
+    return (
+        "WITH RECURSIVE s AS (SELECT source, doc_id, "
+        "CAST(COALESCE(%s, 0) AS INTEGER) AS n_tokens, "
+        "CAST(row_number() OVER (PARTITION BY source "
+        "ORDER BY doc_id) AS BIGINT) AS rn FROM documents), "
+        "r AS ("
+        "SELECT source, doc_id, n_tokens, rn, CAST(0 AS BIGINT) "
+        "AS pack_id, n_tokens AS fill FROM s WHERE rn = 1 "
+        "UNION ALL "
+        "SELECT s.source, s.doc_id, s.n_tokens, s.rn, "
+        "CASE WHEN r.fill + s.n_tokens > 96 THEN r.pack_id + 1 "
+        "ELSE r.pack_id END, "
+        "CASE WHEN r.fill + s.n_tokens > 96 THEN s.n_tokens "
+        "ELSE r.fill + s.n_tokens END "
+        "FROM r JOIN s ON s.source = r.source AND "
+        "s.rn = r.rn + 1), "
+        "pb AS (SELECT source, pack_id, "
+        "CAST(SUM(n_tokens) AS BIGINT) AS fill FROM r "
+        "GROUP BY source, pack_id) "
+        "SELECT source, COUNT(*) AS n_bins, "
+        "CAST(SUM(fill) AS BIGINT) AS n_tokens, "
+        "CAST(SUM(fill) AS DOUBLE) / "
+        "CAST(COUNT(*) * 96 AS DOUBLE) AS fill_fraction "
+        "FROM pb GROUP BY source"
+        % T.token_count_sql("text")
+    )
+
+
+# folded: ⊂ pack_docs
+@query("pack_efficiency", oracle=_pack_efficiency_sql, folded=True)
+def _q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.pack import (
+        pack_sequences,
+        packing_efficiency,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return packing_efficiency(pack_sequences(docs, 96), 96)
+
+
+def _funnel_counts_sql() -> str:
+    return (
+        "WITH f AS (%s), "
+        "s AS (SELECT unnest(range(1, reached + 1)) AS stage "
+        "FROM f WHERE reached >= 1) "
+        "SELECT CAST(stage AS INTEGER) AS stage, "
+        "COUNT(*) AS n_users FROM s GROUP BY stage"
+        % _EVENTS_FUNNEL_SQL
+    )
+
+
+# folded: ⊂ events_funnel
+@query("funnel_counts", oracle=_funnel_counts_sql, folded=True)
+def _q_funnel_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.events import (
+        funnel_counts,
+        funnel_stages,
+    )
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return funnel_counts(
+        funnel_stages(ev, ["view", "click", "purchase"])
+    )
+
+
+_TFIDF_TERMS_SQL = (
+    "WITH tk AS (SELECT doc_id, "
+    "unnest(regexp_split_to_array(trim(text), '\\s+')) AS term "
+    "FROM documents), "
+    "tf AS (SELECT doc_id, term, count(*) AS tf FROM tk "
+    "GROUP BY doc_id, term), "
+    "dfq AS (SELECT term, count(*) AS _df FROM tf GROUP BY term), "
+    "n AS (SELECT count(*) AS _n FROM documents), "
+    "sc AS (SELECT doc_id, tf.term AS term, tf, "
+    "round(CAST(tf AS DOUBLE) * (ln((CAST(_n AS DOUBLE) + 1.0) / "
+    "(CAST(_df AS DOUBLE) + 1.0)) + 1.0), 9) AS score "
+    "FROM tf JOIN dfq ON tf.term = dfq.term CROSS JOIN n) "
+    "SELECT doc_id, term, tf, score, rank FROM "
+    "(SELECT *, CAST(row_number() OVER (PARTITION BY doc_id "
+    "ORDER BY score DESC, term ASC) AS INTEGER) AS rank FROM sc) "
+    "WHERE rank <= 5"
+)
+
+
+@query("tfidf_terms", oracle=_TFIDF_TERMS_SQL, headline=True)
+def _q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.curate import (
+        tfidf_top_terms,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return tfidf_top_terms(docs, k=5)
+
+
+def _weighted_sample_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
+        "WITH s AS (SELECT doc_id, source, n_chars, "
+        "round(pow((CAST(%s AS DOUBLE) + 1.0) / 4294967297.0, "
+        "1.0 / CAST(n_chars AS DOUBLE)), 12) AS sc FROM documents "
+        "WHERE n_chars IS NOT NULL AND CAST(n_chars AS DOUBLE) > 0) "
+        "SELECT doc_id, source, n_chars FROM "
+        "(SELECT doc_id, source, n_chars, row_number() OVER "
+        "(PARTITION BY source ORDER BY sc DESC, doc_id ASC) AS rn "
+        "FROM s) WHERE rn <= 5"
+        % kmv_hash_sql("CAST(doc_id AS VARCHAR) || ''")
+    )
+
+
+@query("weighted_sample", oracle=_weighted_sample_sql)
+def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.curate import (
+        weighted_sample,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return weighted_sample(
+        docs, "doc_id", "n_chars", k=5, group_cols=["source"]
+    ).select("doc_id", "source", "n_chars")
+
+
+def _domain_quota_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
+        "WITH r AS (SELECT doc_id, source, row_number() OVER ("
+        "PARTITION BY source ORDER BY %s ASC, doc_id ASC) AS rn "
+        "FROM documents) "
+        "SELECT doc_id, source FROM r WHERE rn <= 20"
+        % kmv_hash_sql("CAST(doc_id AS VARCHAR)")
+    )
+
+
+@query("domain_quota", oracle=_domain_quota_sql)
+def _q_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic per-domain quota sampling (curate.quota_sample):
+    at most 20 docs per source, picked by the md5-hash order — a pure
+    function of (source, doc_id), so the DuckDB twin selects the
+    identical rows."""
+    from pure_python_geospatial_export_spark.operators.curate import (
+        quota_sample,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return quota_sample(docs, "source", "doc_id", quota=20).select(
+        "doc_id", "source"
+    )
+
+
+def _decontaminate_sql() -> str:
+    _sh8 = " || ' ' || ".join("t[i+%d]" % j for j in range(8)).replace(
+        "t[i+0]", "t[i]"
+    )
+    return (
+        "WITH tk AS (SELECT doc_id, text, "
+        "regexp_split_to_array(trim(text), '\\s+') AS t FROM documents), "
+        "sh AS (SELECT doc_id, CASE WHEN len(t) >= 8 THEN "
+        "list_distinct(list_transform(range(1, len(t) - 6), i -> %s)) "
+        "ELSE [text] END AS shingles FROM tk), "
+        "ds AS (SELECT doc_id, unnest(shingles) AS s FROM sh), "
+        "bs AS (SELECT DISTINCT unnest(shingles) AS s FROM sh "
+        "WHERE doc_id %% 10 = 0), "
+        "tot AS (SELECT doc_id, count(*) AS n_shingles FROM ds "
+        "GROUP BY 1), "
+        "mt AS (SELECT doc_id, count(*) AS n_matched FROM ds "
+        "WHERE s IN (SELECT s FROM bs) GROUP BY 1) "
+        "SELECT tot.doc_id AS doc_id, n_shingles, n_matched, "
+        "CAST(n_matched AS DOUBLE) / CAST(n_shingles AS DOUBLE) "
+        "AS contamination FROM tot JOIN mt USING (doc_id)"
+        % _sh8
+    )
+
+
+@query("decontaminate", oracle=_decontaminate_sql)
+def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Benchmark-overlap scan (curate.ngram_contamination, n=8 token
+    shingles): benchmark = every 10th doc, scanned corpus = all docs.
+    The 'benchmark' docs flag themselves at contamination 1.0; any
+    organic 8-gram overlap flags other docs too — the oracle recomputes
+    the full overlap exactly."""
+    from pure_python_geospatial_export_spark.operators.curate import (
+        ngram_contamination,
+    )
+
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    bench = docs.where(F.col("doc_id") % 10 == 0)
+    return ngram_contamination(docs, bench, "doc_id", "text", "text",
+                               n=8)
+
+
+def _doc_sample_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
+        "SELECT doc_id, lang FROM documents "
+        "WHERE %s < (CASE lang WHEN 'de' THEN 1073741824.0 "
+        "WHEN 'en' THEN 2147483648.0 ELSE 429496729.6 END)"
+        % kmv_hash_sql("CAST(doc_id AS VARCHAR) || ''")
+    )
+
+
+# folded: ⊂ weighted_sample/domain_quota (hash-threshold family)
+@query("doc_sample", oracle=_doc_sample_sql, folded=True)
+def _q_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.curate import (
+        stratified_hash_sample,
+    )
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "lang")
+    return stratified_hash_sample(
+        docs, "doc_id", "lang",
+        {"en": 0.5, "de": 0.25}, default_fraction=0.1,
+    )
+
+
+def _top_sources_sql() -> str:
+    return (
+        PTS_CTE
+        + ", src AS (SELECT %s AS cell_id, d.source AS source "
+        "FROM pts p JOIN documents d USING (doc_id)), "
+        "counts AS (SELECT cell_id, source, "
+        "CAST(COUNT(*) AS BIGINT) AS n FROM src GROUP BY 1, 2) "
+        "SELECT cell_id, source, n, rank FROM ("
+        "SELECT cell_id, source, n, CAST(row_number() OVER ("
+        "PARTITION BY cell_id ORDER BY n DESC, source ASC) AS INTEGER) "
+        "AS rank FROM counts) WHERE rank <= 3"
+        % _tile_sql(1, "p.lon", "p.lat")
+    )
+
+
+# folded: == exact twin of hh_sketch's top-k question
+@query("top_sources", oracle=_top_sources_sql, folded=True)
+def _q_top_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        top_keys_per_group,
+    )
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
+    df = pts.join(docs.select("doc_id", "source"), "doc_id").withColumn(
+        "cell_id", cell_id_col(F.col("lon"), F.col("lat"), 1)
+    )
+    return top_keys_per_group(df, ["cell_id"], "source", k=3).select(
+        "cell_id", "source", "n", "rank"
+    )
+
+
+# Spark's exact `percentile` and DuckDB's `quantile_cont` share the
+# (1-f)*lo + f*hi interpolation — verified bit-equal on this fixture
+_EVENTS_QUANTILES_SQL = (
+    "SELECT event_type, COUNT(*) AS n_events, "
+    "quantile_cont(CAST(floor(value * 100.0 + 0.5) AS BIGINT), 0.5) "
+    "AS p50_cents, "
+    "quantile_cont(CAST(floor(value * 100.0 + 0.5) AS BIGINT), 0.9) "
+    "AS p90_cents "
+    "FROM events GROUP BY 1"
+)
+
+
+@query("events_quantiles", oracle=_EVENTS_QUANTILES_SQL)
+def _q_events_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    cents = "CAST(floor(value * 100.0 + 0.5) AS BIGINT)"
+    return ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.expr("percentile(%s, 0.5)" % cents).alias("p50_cents"),
+        F.expr("percentile(%s, 0.9)" % cents).alias("p90_cents"),
+    )
+
+
+_QUANTILE_SKETCH_SQL = (
+    "WITH g AS (SELECT event_type, list_sort(list(value)) AS vs "
+    "FROM events GROUP BY event_type), "
+    "q AS (SELECT CAST(unnest([0.1, 0.5, 0.9, 0.99]) AS DOUBLE) "
+    "AS q) "
+    "SELECT event_type, q, "
+    "vs[CAST(greatest(ceil(q * len(vs)), 1) AS BIGINT)] AS est "
+    "FROM g CROSS JOIN q"
+)
+
+
+@query("quantile_sketch", oracle=_QUANTILE_SKETCH_SQL)
+def _q_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fixture chosen so the sketch is EXACT (k = 4096 >= every group's
+    # row count at the gate SF — same trick as the LSH recall-1
+    # oracles), so the bounded-state path equals the full type-1
+    # quantile the DuckDB twin computes; the ~1/sqrt(k) sampling regime
+    # is property-tested in tests/test_sketch.py instead.
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        quantile_estimate,
+        quantile_sample,
+    )
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    sample = quantile_sample(
+        ev, ["event_type"], "value", "event_id", k=4096
+    )
+    return quantile_estimate(
+        sample, ["event_type"], [0.1, 0.5, 0.9, 0.99]
+    )
+
+
+_EVENTS_FUNNEL_SQL = (
+    "WITH e1 AS (SELECT user_id, ts, event_type, "
+    "min(CASE WHEN event_type = 'view' THEN ts END) "
+    "OVER (PARTITION BY user_id) AS t_1 FROM events), "
+    "e2 AS (SELECT *, min(CASE WHEN event_type = 'click' "
+    "AND ts > t_1 THEN ts END) "
+    "OVER (PARTITION BY user_id) AS t_2 FROM e1), "
+    "e3 AS (SELECT *, min(CASE WHEN event_type = 'purchase' "
+    "AND ts > t_2 THEN ts END) "
+    "OVER (PARTITION BY user_id) AS t_3 FROM e2) "
+    "SELECT user_id, max(t_1) AS t_1, max(t_2) AS t_2, "
+    "max(t_3) AS t_3, CAST(CASE "
+    "WHEN max(t_3) IS NOT NULL THEN 3 "
+    "WHEN max(t_2) IS NOT NULL THEN 2 "
+    "WHEN max(t_1) IS NOT NULL THEN 1 ELSE 0 END AS INTEGER) "
+    "AS reached FROM e3 GROUP BY user_id"
+)
+
+
+# Plan: three chained per-user windows share the partition key; stages
+# 2..n ride stage 1's hash partitioning, one exchange total.
+@query("events_funnel", oracle=_EVENTS_FUNNEL_SQL, exchanges=1)
+def _q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.events import (
+        funnel_stages,
+    )
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return funnel_stages(ev, ["view", "click", "purchase"])
+
+
+_EVENTS_COHORT_SQL = (
+    "WITH f AS (SELECT user_id, ts, "
+    "min(ts) OVER (PARTITION BY user_id) AS first_ts "
+    "FROM events), "
+    "c AS (SELECT user_id, date_trunc('week', first_ts) AS "
+    "cohort, CAST(floor(datediff('day', "
+    "date_trunc('week', first_ts), date_trunc('week', ts)) "
+    "/ 7.0) AS INTEGER) AS \"offset\" FROM f) "
+    "SELECT cohort, \"offset\", count(DISTINCT user_id) "
+    "AS n_users FROM c GROUP BY cohort, \"offset\""
+)
+
+
+@query("events_cohort", oracle=_EVENTS_COHORT_SQL)
+def _q_events_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.operators.events import (
+        cohort_retention,
+    )
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return cohort_retention(ev, period="week")
+
+
+_TIME_ROLLUP_SQL = (
+    "SELECT CAST(date_trunc('day', ts) AS DATE) AS day, "
+    "event_type, COUNT(*) AS n_events, "
+    "CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) "
+    "AS BIGINT) AS sum_cents "
+    "FROM events GROUP BY 1, 2"
+)
+
+
+@query("time_rollup", oracle=_TIME_ROLLUP_SQL)
+def _q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # hypertable continuous aggregate: build the day-chunked layout +
+    # precomputed rollup in a scratch dir, then serve precomputed-days
+    # UNION fresh-tail — the result must equal a flat recompute over the
+    # raw events (the DuckDB oracle), proving the chunk/tail seam.
+    from pure_python_geospatial_export_spark.sources.timeseries import (
+        serve_rollup,
+        write_events_table,
+        write_rollup,
+    )
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    base = _scratch_dir("tsroll", sf_dir)
+    write_events_table(ev, os.path.join(base, "events"))
+    write_rollup(
+        spark, os.path.join(base, "events"), os.path.join(base, "rollup")
+    )
+    return serve_rollup(
+        spark,
+        os.path.join(base, "events"),
+        os.path.join(base, "rollup"),
+        "2024-01-21",
+    )
+
+
+_VALUE_HISTOGRAM_SQL = (
+    "SELECT event_type, "
+    "CAST(floor(value / 25.0) AS INTEGER) AS bin, "
+    "COUNT(*) AS n, min(value) AS vmin, max(value) AS vmax "
+    "FROM events GROUP BY event_type, bin"
+)
+
+
+# folded: ⊂ events-family fixed-bin aggregations
+@query("value_histogram", oracle=_VALUE_HISTOGRAM_SQL, folded=True)
+def _q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fixed-width integer bins: pure arithmetic (no ln/boundary-ulp
+    # risk), min/max are order-independent — fully deterministic
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return (
+        ev.withColumn(
+            "bin", F.floor(F.col("value") / F.lit(25.0)).cast("int")
+        )
+        .groupBy("event_type", "bin")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min("value").alias("vmin"),
+            F.max("value").alias("vmax"),
+        )
+    )
+
+
+_EVENTS_SESSIONS_SQL = (
+    "WITH e AS (SELECT user_id, event_id, ts, "
+    "CASE WHEN lag(ts) OVER w IS NULL "
+    "OR CAST(epoch(ts) AS BIGINT) "
+    "- lag(CAST(epoch(ts) AS BIGINT)) OVER w > 1800 "
+    "THEN 1 ELSE 0 END AS new_s FROM events "
+    "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
+    "s AS (SELECT user_id, ts, CAST(SUM(new_s) OVER ("
+    "PARTITION BY user_id ORDER BY ts, event_id "
+    "ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq FROM e) "
+    "SELECT user_id, session_seq, COUNT(*) AS n_events, "
+    "MIN(ts) AS session_start, MAX(ts) AS session_end "
+    "FROM s GROUP BY 1, 2"
+)
+
+
+@query("events_sessions", oracle=_EVENTS_SESSIONS_SQL)
+def _q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.streaming.sessions import (
+        sessionize_batch,
+    )
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    s = sessionize_batch(ev, gap_seconds=1800)
+    return s.groupBy("user_id", "session_seq").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("ts").alias("session_start"),
+        F.max("ts").alias("session_end"),
+    )
+
+
+_EVENTS_ROLLUP_SQL = (
+    "SELECT event_type, CAST(hour(ts) AS INTEGER) AS hr, "
+    "COUNT(*) AS n_events FROM events "
+    "GROUP BY ROLLUP(event_type, CAST(hour(ts) AS INTEGER))"
+)
+
+
+@query("events_rollup", oracle=_EVENTS_ROLLUP_SQL)
+def _q_events_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return (
+        ev.withColumn("hr", F.hour("ts"))
+        .rollup("event_type", "hr")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+    )
+
+
+_EVENTS_JSON_SQL = (
+    "SELECT event_type, "
+    "CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) "
+    "AS BIGINT) AS sum_k, "
+    "COUNT(*) AS n_events FROM events GROUP BY 1"
+)
+
+
+@query("events_json", oracle=_EVENTS_JSON_SQL)
+def _q_events_json(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """JSON column extraction: sum of props.k per event_type."""
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return (
+        ev.withColumn(
+            "k", F.get_json_object(F.col("props"), "$.k").cast("long")
+        )
+        .groupBy("event_type")
+        .agg(
+            F.sum("k").alias("sum_k"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+    )
+
+
+def _bpe_tokens_sql() -> str:
+    return (
+        "SELECT doc_id, CAST(%s AS INTEGER) AS n_bpe_tokens FROM documents"
+        % T.bpe_token_count_sql("text")
+    )
+
+
+@query("bpe_tokens", oracle=_bpe_tokens_sql)
+def _q_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+    return docs.select(
+        "doc_id",
+        T.bpe_token_count(F.col("text")).alias("n_bpe_tokens"),
+    )
+
+
+def _wkt_roundtrip_sql() -> str:
+    wkt_values = ", ".join(
+        "('%s', '%s')" % (cid, w.replace("'", "''"))
+        for cid, w in _golden_wkts()
+    )
+    return (
+        "SELECT case_id, wkt AS wkt_out FROM (VALUES %s) AS t(case_id, wkt)"
+        % wkt_values
+    )
+
+
+@query("wkt_roundtrip", oracle=_wkt_roundtrip_sql)
+def _q_wkt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pure_python_geospatial_export_spark.session import local_df
+    df = local_df(spark, _golden_wkts(), ["case_id", "wkt"])
+    return df.select(
+        "case_id", wkt_roundtrip(F.col("wkt")).alias("wkt_out")
+    )
+
+
+# line_dedup: explode lines with ordinality, distinct-doc line
+# census, NOT IN the hot set, ordered string_agg reassembly
+_LINE_DEDUP_SQL = (
+    "WITH d AS (SELECT doc_id, text || chr(10) || "
+    "CASE WHEN doc_id % 2 = 0 "
+    "THEN 'standard footer boilerplate' "
+    "ELSE 'tail-' || CAST(doc_id AS VARCHAR) END AS text "
+    "FROM documents WHERE doc_id < 300), "
+    "l AS (SELECT doc_id, unnest(arr) AS line, "
+    "generate_subscripts(arr, 1) AS i "
+    "FROM (SELECT doc_id, string_split(text, chr(10)) AS arr "
+    "FROM d)), "
+    "hot AS (SELECT line FROM "
+    "(SELECT DISTINCT doc_id, line FROM l) "
+    "GROUP BY line HAVING COUNT(*) >= 3 "
+    "AND trim(line) <> ''), "  # blank lines are structure
+    "kept AS (SELECT doc_id, line, i FROM l "
+    "WHERE line NOT IN (SELECT line FROM hot)), "
+    "reb AS (SELECT doc_id, "
+    "string_agg(line, chr(10) ORDER BY i) AS clean_text, "
+    "COUNT(*) AS nk FROM kept GROUP BY doc_id) "
+    "SELECT d2.doc_id, "
+    "COALESCE(reb.clean_text, '') AS clean_text, "
+    "CAST(len(string_split(d2.text, chr(10))) AS INTEGER) "
+    "AS n_lines, "
+    "CAST(len(string_split(d2.text, chr(10))) "
+    "- COALESCE(reb.nk, 0) AS INTEGER) AS n_removed "
+    "FROM d d2 LEFT JOIN reb ON d2.doc_id = reb.doc_id"
+)
+
+
+# folded: over the ceiling (round-4 boilerplate-line removal)
+@query("line_dedup", oracle=_LINE_DEDUP_SQL, folded=True)
+def _q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # CCNet-style boilerplate-line removal. Multi-line docs are built
+    # deterministically from the documents table (footer on even ids,
+    # a unique tail per id) with the SAME concat mirrored in the
+    # oracle; output is the reassembled clean text + line stats, so
+    # explode/census/anti-join/reassembly are all bit-checked.
+    from pure_python_geospatial_export_spark.operators.curate import (
+        remove_boilerplate_lines,
+    )
+
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 300)
+        .select(
+            "doc_id",
+            F.concat(
+                F.col("text"),
+                F.lit("\n"),
+                F.when(F.col("doc_id") % 2 == 0,
+                       F.lit("standard footer boilerplate"))
+                .otherwise(
+                    F.concat(F.lit("tail-"),
+                             F.col("doc_id").cast("string"))
+                ),
+            ).alias("text"),
+        )
+    )
+    return remove_boilerplate_lines(docs, min_docs=3)
+
+
+# lm_perplexity: trigram counts over the reference split,
+# Laplace costs in integer milli-nats, BIGINT sums
+_LM_PERPLEXITY_SQL = (
+    "WITH normed AS (SELECT doc_id, '##' || regexp_replace("
+    "regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), "
+    "' +', ' ', 'g') AS p FROM documents), "
+    "refg AS (SELECT unnest([substring(p, CAST(i AS INT), 3) "
+    "for i in range(1, len(p) - 1)]) AS gram "
+    "FROM normed WHERE doc_id >= 300), "
+    "c3 AS (SELECT gram, COUNT(*) AS c_gram FROM refg "
+    "GROUP BY gram), "
+    "c2 AS (SELECT substring(gram, 1, 2) AS ctx, "
+    "SUM(c_gram) AS c_ctx FROM c3 GROUP BY 1), "
+    "model AS (SELECT gram, c_gram, c_ctx FROM c3 "
+    "JOIN c2 ON substring(c3.gram, 1, 2) = c2.ctx), "
+    "dg AS (SELECT doc_id, gram, COUNT(*) AS occ FROM "
+    "(SELECT doc_id, unnest([substring(p, CAST(i AS INT), 3) "
+    "for i in range(1, len(p) - 1)]) AS gram "
+    "FROM normed WHERE doc_id < 200) GROUP BY doc_id, gram), "
+    "scored AS (SELECT doc_id, "
+    "CAST(SUM(occ) AS INTEGER) AS n_grams, "
+    "CAST(SUM(CAST(round(-ln("
+    "(CAST(COALESCE(c_gram, 0) AS DOUBLE) + 1.0) / "
+    "(CAST(COALESCE(c_ctx, 0) AS DOUBLE) + 38.0)"
+    ") * 1000000.0) AS BIGINT) * occ) AS BIGINT) "
+    "AS cost_milli, "
+    "CAST(SUM(CASE WHEN c_gram IS NULL THEN occ ELSE 0 END) "
+    "AS INTEGER) AS n_oov "
+    "FROM dg LEFT JOIN model USING (gram) GROUP BY doc_id) "
+    "SELECT d.doc_id, "
+    "CAST(COALESCE(s.n_grams, 0) AS INTEGER) AS n_grams, "
+    "CAST(COALESCE(s.cost_milli, 0) AS BIGINT) AS cost_milli, "
+    "CAST(COALESCE(s.n_oov, 0) AS INTEGER) AS n_oov "
+    "FROM (SELECT doc_id FROM documents WHERE doc_id < 200) d "
+    "LEFT JOIN scored s ON d.doc_id = s.doc_id"
+)
+
+
+# folded: over the ceiling (round-4 char-trigram LM quality scoring)
+@query("lm_perplexity", oracle=_LM_PERPLEXITY_SQL, folded=True)
+def _q_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # CCNet-style char-trigram LM quality scoring: train on docs with
+    # id >= 300, score docs with id < 200. Costs are integer
+    # milli-nats (round(-ln(p)*1e6) per DISTINCT gram x integer
+    # occurrence count) so the BIGINT sums compare bit-level — a float
+    # log-prob sum would be addition-order sensitive.
+    from pure_python_geospatial_export_spark.operators.curate import (
+        char_lm_counts,
+        perplexity_score,
+    )
+
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "text")
+    model = char_lm_counts(docs.where(F.col("doc_id") >= 300))
+    return perplexity_score(
+        docs.where(F.col("doc_id") < 200), model
+    )
+
+
+# doc_chunks: tokenize, chunk-count arithmetic (stride 32 =
+# 40 - 8 overlap), list_slice per chunk index
+_DOC_CHUNKS_SQL = (
+    "WITH t AS (SELECT doc_id, "
+    "regexp_split_to_array(trim(text), '\\s+') AS toks "
+    "FROM documents WHERE doc_id < 300), "
+    "c AS (SELECT doc_id, toks, CASE WHEN len(toks) <= 40 "
+    "THEN 1 ELSE CAST(ceil((len(toks) - 40) / 32.0) AS INT) "
+    "+ 1 END AS nc FROM t), "
+    "e AS (SELECT doc_id, toks, unnest(range(0, nc)) "
+    "AS chunk_idx FROM c) "
+    "SELECT doc_id, CAST(chunk_idx AS INTEGER) AS chunk_idx, "
+    "array_to_string(list_slice(toks, chunk_idx * 32 + 1, "
+    "chunk_idx * 32 + 40), ' ') AS chunk_text, "
+    "CAST(len(list_slice(toks, chunk_idx * 32 + 1, "
+    "chunk_idx * 32 + 40)) AS INTEGER) AS n_tokens FROM e"
+)
+
+
+# folded: over the ceiling (round-4 fixed-budget chunking with overlap)
+@query("doc_chunks", oracle=_DOC_CHUNKS_SQL, folded=True)
+def _q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fixed-budget document chunking with overlap: pure column math
+    # (tokenize + slice), mirrored token-for-token in the oracle
+    from pure_python_geospatial_export_spark.operators.pack import (
+        chunk_documents,
+    )
+
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 300)
+        .select("doc_id", "text")
+    )
+    return chunk_documents(docs, chunk_tokens=40, overlap=8)
+
+
+# mixture_sample: per-language quotas (0.5/0.2/default 0.1 of
+# 200) by the shared hash rank
+def _mixture_sample_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.sketch import (
+        kmv_hash_sql,
+    )
+    return (
+        "WITH r AS (SELECT doc_id, lang, row_number() OVER ("
+        "PARTITION BY lang ORDER BY %s ASC, doc_id ASC) AS rn "
+        "FROM documents) "
+        "SELECT doc_id, lang FROM r WHERE rn <= "
+        "CASE lang WHEN 'de' THEN 40 WHEN 'en' THEN 100 "
+        "ELSE 20 END"
+        % kmv_hash_sql("CAST(doc_id AS VARCHAR)")
+    )
+
+
+# folded: over the ceiling (round-4 data-mixing sampler)
+@query("mixture_sample", oracle=_mixture_sample_sql, folded=True)
+def _q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # data-mixing sampler: per-language quotas from target fractions,
+    # hash-rank selection (the quota_sample family invariance)
+    from pure_python_geospatial_export_spark.operators.curate import (
+        mixture_sample,
+    )
+
+    docs = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "lang")
+    return mixture_sample(
+        docs, "lang", "doc_id",
+        {"en": 0.5, "de": 0.2}, total=200, default_frac=0.1,
+    )
+
+
+# zonal_geotiff: the Spark side decodes pixel values and centers
+# from REAL GeoTIFF bytes; the oracle recomputes the closed form.
+# lon/lat mirror the reader's arithmetic order exactly —
+# origin + (p + 0.5) * scale with scale 1.25 (exact binary), so
+# the doubles agree bit-for-bit.
+def _zonal_geotiff_sql() -> str:
+    zonal_geotiff_parts = [
+        "SELECT CAST(%d AS BIGINT) AS polygon_id, '%s' AS name, "
+        "CAST(COUNT(*) AS BIGINT) AS n, "
+        "CAST(SUM(v) AS BIGINT) AS sum_val, AVG(v) AS mean_val, "
+        "MIN(v) AS min_val, MAX(v) AS max_val "
+        "FROM rast WHERE %s HAVING COUNT(*) > 0"
+        % (pid, name, _rect_pred_sql(outer, hole))
+        for pid, name, outer, hole in _rects()
+    ]
+    return (
+        "WITH rast AS (SELECT "
+        "-180.0 + (CAST(px AS DOUBLE) + 0.5) * 1.25 AS lon, "
+        "90.0 - (CAST(py AS DOUBLE) + 0.5) * 1.25 AS lat, "
+        "CAST((px * 7 + py * 13) % 1000 AS BIGINT) AS v "
+        "FROM generate_series(0, 287) t(px), "
+        "generate_series(0, 143) s(py)) "
+        + " UNION ALL ".join(zonal_geotiff_parts)
+    )
+
+
+# folded: over the ceiling (round-5 real-raster GeoTIFF ingest)
+@query("zonal_geotiff", oracle=_zonal_geotiff_sql, folded=True)
+def _q_zonal_geotiff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Real-raster zonal statistics (round-5): a deterministic world
+    # raster (288x144, 1.25-degree pixels, v = (px*7 + py*13) % 1000)
+    # is encoded as an actual GeoTIFF — tiled + deflate + horizontal
+    # predictor, the full codec surface — written to scratch, read
+    # back through the binaryFile Spark source, and joined to the
+    # polygon layer. The oracle recomputes the closed form with
+    # generate_series, so the whole encode -> decode -> pixel-center
+    # georeference -> PIP join -> aggregate pipeline is bit-checked.
+    # Pixel centers land on *.625/*.375 degree offsets; every rect
+    # boundary sits on a different residue mod 1.25, so no center is
+    # ON a boundary and ray-cast vs closed-rect semantics agree.
+    import atexit
+    import shutil
+    import tempfile
+
+    import numpy as np
+
+    from pure_python_geospatial_export_spark.operators.tiles import (
+        zonal_stats,
+    )
+    from pure_python_geospatial_export_spark.sources.geotiff import (
+        encode_geotiff,
+        read_geotiff,
+    )
+
+    w, h = 288, 144
+    px = np.arange(w, dtype=np.int64)[None, :]
+    py = np.arange(h, dtype=np.int64)[:, None]
+    band = ((px * 7 + py * 13) % 1000).astype(np.int32)
+    buf = encode_geotiff(
+        band, (-180.0, -90.0, 180.0, 90.0),
+        compression="deflate", tiled=True, tile_size=48, predictor=2,
+    )
+    base = os.path.join(
+        tempfile.gettempdir(),
+        "ppge_geotiff-uid%d-pid%d" % (os.getuid(), os.getpid()),
+    )
+    os.makedirs(base, exist_ok=True)
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
+    path = os.path.join(base, "world.tif")
+    tmp = path + ".tmp"
+    with open(tmp, "wb") as f:
+        f.write(buf)
+    os.replace(tmp, path)
+
+    pixels = read_geotiff(spark, path).withColumn(
+        "v", F.col("value").cast("long")
+    )
+    return zonal_stats(pixels, _layer_df(spark), "v", res=7)
+
+
+# span_dedup: token-8-gram census over distinct docs (same md5
+# keys as Spark), coverage explode, anti join, ordered rebuild
+_SPAN_DEDUP_SQL = (
+    "WITH d AS (SELECT doc_id, text || ' ' || "
+    "CASE WHEN doc_id % 3 = 0 THEN "
+    "'all rights reserved this document is provided as is "
+    "without warranty of any kind either express or implied' "
+    "ELSE 'tail marker ' || CAST(doc_id AS VARCHAR) END "
+    "AS text FROM documents WHERE doc_id < 300), "
+    "t AS (SELECT doc_id, "
+    "regexp_split_to_array(trim(text), '\\s+') AS toks "
+    "FROM d), "
+    "g AS (SELECT doc_id, u.j AS j, u.h AS h FROM "
+    "(SELECT doc_id, unnest([{'j': j, 'h': "
+    "md5(array_to_string(toks[j:j+7], ' '))} "
+    "for j in range(1, len(toks) - 6)]) AS u "
+    "FROM t WHERE len(toks) >= 8)), "
+    "hot AS (SELECT h FROM "
+    "(SELECT DISTINCT doc_id, h FROM g) "
+    "GROUP BY h HAVING COUNT(*) >= 3), "
+    "cov AS (SELECT DISTINCT doc_id, pos FROM "
+    "(SELECT g.doc_id, unnest([g.j + k for k in "
+    "range(0, 8)]) AS pos FROM g JOIN hot USING (h))), "
+    "tok AS (SELECT doc_id, "
+    "generate_subscripts(toks, 1) AS pos, "
+    "unnest(toks) AS tk FROM t), "
+    "kept AS (SELECT tok.doc_id, pos, tk FROM tok "
+    "ANTI JOIN cov USING (doc_id, pos)), "
+    "reb AS (SELECT doc_id, "
+    "string_agg(tk, ' ' ORDER BY pos) AS clean_text, "
+    "COUNT(*) AS nk FROM kept GROUP BY doc_id) "
+    "SELECT t.doc_id, "
+    "CASE WHEN len(t.toks) = COALESCE(reb.nk, 0) "
+    "THEN d.text "  # nothing removed: original text untouched
+    "ELSE COALESCE(reb.clean_text, '') END AS clean_text, "
+    "CAST(len(t.toks) AS INTEGER) AS n_tokens, "
+    "CAST(len(t.toks) - COALESCE(reb.nk, 0) AS INTEGER) "
+    "AS n_removed "
+    "FROM t LEFT JOIN reb ON t.doc_id = reb.doc_id "
+    "JOIN d ON t.doc_id = d.doc_id"
+)
+
+
+@query("span_dedup", oracle=_SPAN_DEDUP_SQL, folded=True)
+def _q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Lee-et-al-style exact duplicate-SPAN removal (round 5): docs get
+    # a deterministically planted shared passage (every third doc) and
+    # a unique tail; any 8-token window shared by >= 3 docs is cut from
+    # every doc. The oracle recomputes the gram census (same md5 keys),
+    # coverage, and reassembly in SQL, so explode/census/semi/anti/
+    # rebuild are all bit-checked.
+    from pure_python_geospatial_export_spark.operators.curate import (
+        remove_duplicate_spans,
+    )
+
+    passage = ("all rights reserved this document is provided as is "
+               "without warranty of any kind either express or implied")
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 300)
+        .select(
+            "doc_id",
+            F.concat(
+                F.col("text"),
+                F.lit(" "),
+                F.when(F.col("doc_id") % 3 == 0, F.lit(passage))
+                .otherwise(
+                    F.concat(F.lit("tail marker "),
+                             F.col("doc_id").cast("string"))
+                ),
+            ).alias("text"),
+        )
+    )
+    return remove_duplicate_spans(docs, ngram=8, min_docs=3)
+
+
+# Trained-BPE demo vocabulary: a FIXED corpus over the synthetic
+# documents' word stock, so the learned merges engage heavily on the
+# real table while staying a compile-time constant both engines share
+# (the oracle SQL embeds the same merges as nested replace calls).
+_BPE_TRAIN_CORPUS = (
+    "key agg row scan slow fast table value part hash merge batch",
+    "spark window order data column join small line customer query",
+    "table scan table scan fast hash join merge batch window value",
+    "customer order data line query column row key part small slow",
+    "value value table fast spark agg hash scan batch merge row a",
+)
+
+
+def _bpe_demo_merges() -> list:
+    import re as _re
+    from collections import Counter as _Counter
+
+    from pure_python_geospatial_export_spark.functions.text import (
+        BPE_TOKEN_RE,
+    )
+    from pure_python_geospatial_export_spark.operators.bpe import (
+        learn_merges,
+    )
+
+    wf = _Counter()
+    for line in _BPE_TRAIN_CORPUS:
+        wf.update(_re.findall(BPE_TOKEN_RE, line))
+    return learn_merges(sorted(wf.items()), 48)
+
+
+def _bpe_trained_sql() -> str:
+    from pure_python_geospatial_export_spark.operators.bpe import (
+        bpe_tokens_sql as _trained_sql,
+    )
+
+    toks = _trained_sql(_bpe_demo_merges(), col="text")
+    return (
+        "WITH t AS (SELECT doc_id, %s AS ts FROM documents "
+        "WHERE doc_id < 300) "
+        "SELECT doc_id, CAST(len(ts) AS INT) AS n_tokens, "
+        "array_to_string(ts, ' ') AS toks FROM t" % toks
+    )
+
+
+# bpe_trained: the learned-vocab merge walk as nested
+# left-to-right replace calls on the wrapped-symbol string —
+# the literally-same algorithm the Arrow UDF runs, so the
+# joined token string is bit-identical per document.
+@query("bpe_trained", oracle=_bpe_trained_sql, folded=True)
+def _q_bpe_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # learned-vocab BPE tokenization (round 7): merges trained by the
+    # deterministic driver loop (distributed training itself is
+    # partition-invariance-tested in tests/test_bpe.py); the Arrow
+    # merge walk is the SAME left-to-right replace algorithm the
+    # oracle's nested SQL replace chain runs, so the full token
+    # string of every document compares bit-for-bit.
+    from pure_python_geospatial_export_spark.operators.bpe import (
+        bpe_tokens,
+    )
+
+    merges = _bpe_demo_merges()
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 300)
+        .select(
+            "doc_id", bpe_tokens(F.col("text"), merges).alias("ts")
+        )
+    )
+    return docs.select(
+        "doc_id",
+        F.size("ts").alias("n_tokens"),
+        F.array_join("ts", " ").alias("toks"),
+    )
+
+
+# clip_rects layer: integer-lattice rects (one with a hole) so every
+# intersection area is an exact integer-valued double on both engines
+_CLIP_LAYER = (
+    (1, "big", "POLYGON ((-20 -20, 20 -20, 20 20, -20 20, -20 -20))"),
+    (2, "donut",
+     "POLYGON ((0 -30, 36 -30, 36 6, 0 6, 0 -30), "
+     "(8 -22, 8 -2, 28 -2, 28 -22, 8 -22))"),
+    (3, "east", "POLYGON ((24 -6, 48 -6, 48 18, 24 18, 24 -6))"),
+)
+
+
+def _clip_rects_sql() -> str:
+    import re as _re
+
+    def nums(w):
+        return [float(v) for v in _re.findall(r"-?\d+", w)]
+
+    def inter(rx0, ry0, rx1, ry1):
+        return (
+            "greatest(0.0, least(px1, %s) - greatest(px0, %s)) * "
+            "greatest(0.0, least(py1, %s) - greatest(py0, %s))"
+            % (rx1, rx0, ry1, ry0)
+        )
+
+    parts = []
+    for _pid, name, w in _CLIP_LAYER:
+        c = nums(w)
+        outer = inter(c[0], c[1], c[4], c[5])
+        if len(c) > 10:
+            h = c[10:]
+            hole = inter(h[0], h[1], h[4], h[5])
+            area = "(%s) - (%s)" % (outer, hole)
+        else:
+            area = outer
+        parts.append(
+            "SELECT doc_id, '%s' AS name, %s AS area FROM p"
+            % (name, area)
+        )
+    return (
+        "WITH p AS (SELECT doc_id, "
+        "CAST((doc_id %% 18) * 4 - 36 AS DOUBLE) AS px0, "
+        "CAST((doc_id %% 13) * 4 - 26 AS DOUBLE) AS py0, "
+        "CAST((doc_id %% 18) * 4 - 36 + 2 + doc_id %% 5 AS DOUBLE) "
+        "AS px1, "
+        "CAST((doc_id %% 13) * 4 - 26 + 2 + doc_id %% 7 AS DOUBLE) "
+        "AS py1 "
+        "FROM documents WHERE doc_id < 400), "
+        "i AS (%s) SELECT doc_id, name, area FROM i WHERE area > 0"
+        % " UNION ALL ".join(parts)
+    )
+
+
+# clip_rects: closed-form interval products on the integer
+# lattice — exact vs the overlay's shoelace areas
+# Plan: clip_join rides the polygon_overlap pipeline. ONE shuffle (the
+# pair-dedupe groupBy), broadcast cover join, geometry only in the
+# mapInPandas tail.
+@query("clip_rects", oracle=_clip_rects_sql, folded=True, exchanges=1)
+def _q_clip_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # boolean-overlay clip (round 7): per (probe, layer polygon) pair
+    # the INTERSECTION GEOMETRY's shoelace area. Probes are integer-
+    # lattice rects derived from doc_id; the layer is integer too, so
+    # overlay areas are exact integers in doubles and the oracle's
+    # closed-form interval products match bit-for-bit — including the
+    # donut (outer minus hole) and the full-cell containment shortcut
+    # (probes deep inside 'big' skip the overlay entirely).
+    from pure_python_geospatial_export_spark.operators.clip import (
+        clip_join,
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    layer = local_df(
+        spark, list(_CLIP_LAYER), ["polygon_id", "name", "wkt"]
+    )
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 400)
+    )
+    px0 = (F.col("doc_id") % 18) * 4 - 36
+    py0 = (F.col("doc_id") % 13) * 4 - 26
+    px1 = px0 + 2 + F.col("doc_id") % 5
+    py1 = py0 + 2 + F.col("doc_id") % 7
+    probes = docs.select(
+        F.col("doc_id").alias("probe_id"),
+        F.format_string(
+            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
+            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
+        ).alias("wkt"),
+    )
+    out = clip_join(probes, layer, res=5, id_col="probe_id")
+    return out.select(
+        F.col("probe_id").alias("doc_id"), "name", "area"
+    )
+
+
+def _areal_interp_sql() -> str:
+    import re as _re
+
+    def nums(w):
+        return [float(v) for v in _re.findall(r"-?\d+", w)]
+
+    def inter(rx0, ry0, rx1, ry1):
+        return (
+            "greatest(0.0, least(px1, %s) - greatest(px0, %s)) * "
+            "greatest(0.0, least(py1, %s) - greatest(py0, %s))"
+            % (rx1, rx0, ry1, ry0)
+        )
+
+    parts = []
+    for pid, name, w in _CLIP_LAYER:
+        c = nums(w)
+        outer = inter(c[0], c[1], c[4], c[5])
+        if len(c) > 10:
+            h = c[10:]
+            area = "(%s) - (%s)" % (outer, inter(h[0], h[1], h[4], h[5]))
+        else:
+            area = outer
+        parts.append(
+            "SELECT doc_id, CAST(%d AS BIGINT) AS polygon_id, "
+            "'%s' AS name, %s AS area, v, sa FROM p"
+            % (pid, name, area)
+        )
+    return (
+        "WITH p AS (SELECT doc_id, "
+        "CAST((doc_id %% 9) + 1 AS DOUBLE) AS v, "
+        "CAST((doc_id %% 18) * 4 - 36 AS DOUBLE) AS px0, "
+        "CAST((doc_id %% 13) * 4 - 26 AS DOUBLE) AS py0, "
+        "CAST((doc_id %% 18) * 4 - 36 + (1 << (doc_id %% 3)) "
+        "AS DOUBLE) AS px1, "
+        "CAST((doc_id %% 13) * 4 - 26 + (1 << (doc_id %% 2)) "
+        "AS DOUBLE) AS py1, "
+        "CAST((1 << (doc_id %% 3)) * (1 << (doc_id %% 2)) AS DOUBLE) "
+        "AS sa "
+        "FROM documents WHERE doc_id < 400), "
+        "i AS (%s) "
+        "SELECT polygon_id, name, SUM(v * area / sa) AS est "
+        "FROM i WHERE area > 0 GROUP BY polygon_id, name"
+        % " UNION ALL ".join(parts)
+    )
+
+
+# areal_interp: dyadic weights => order-free double sums
+# Plan: clip pipeline (1) + the value join + final partial-agg groupBy = 2
+# exchanges. Source areas ride OUT of the clip kernel (_with_src_area), so
+# the round-7 third parse pass and its join are gone.
+@query("areal_interp", oracle=_areal_interp_sql, folded=True, exchanges=2)
+def _q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # area-weighted areal interpolation (round 7): probe rect AREAS
+    # are powers of two (w in {1,2,4}, h in {1,2}), so every term
+    # value * inter / src_area is an exact dyadic double and the SUM
+    # is addition-order-free — bit-stable against the oracle's
+    # closed-form recompute without integerizing the weights.
+    from pure_python_geospatial_export_spark.operators.clip import (
+        areal_interpolate,
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    layer = local_df(
+        spark, list(_CLIP_LAYER), ["polygon_id", "name", "wkt"]
+    )
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 400)
+    )
+    px0 = (F.col("doc_id") % 18) * 4 - 36
+    py0 = (F.col("doc_id") % 13) * 4 - 26
+    px1 = px0 + F.expr("shiftleft(1, CAST(doc_id % 3 AS INT))")
+    py1 = py0 + F.expr("shiftleft(1, CAST(doc_id % 2 AS INT))")
+    probes = docs.select(
+        F.col("doc_id").alias("probe_id"),
+        ((F.col("doc_id") % 9) + 1).cast("double").alias("v"),
+        F.format_string(
+            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
+            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
+        ).alias("wkt"),
+    )
+    return areal_interpolate(probes, layer, "v", res=5)
+
+
+_GROUP_HULL_SQL = (
+    "WITH p AS (SELECT doc_id % 16 AS g FROM documents "
+    "WHERE doc_id < 400) "
+    "SELECT g AS group_id, COUNT(*) AS n_points, "
+    "CAST(4 AS INT) AS n_vertices, "
+    "CAST((8 + g % 5) * (6 + g % 4) AS DOUBLE) AS area, "
+    "CAST((g % 4) * 20 - 40 AS DOUBLE) AS xmin, "
+    "CAST((g // 4) * 15 - 30 AS DOUBLE) AS ymin, "
+    "CAST((g % 4) * 20 - 40 + 8 + g % 5 AS DOUBLE) AS xmax, "
+    "CAST((g // 4) * 15 - 30 + 6 + g % 4 AS DOUBLE) AS ymax, "
+    "CAST((8 + g % 5) * (8 + g % 5) + (6 + g % 4) * (6 + g % 4) "
+    "AS DOUBLE) AS diameter_sq, "
+    "CAST((8 + g % 5) * (6 + g % 4) AS DOUBLE) AS obb_area, "
+    "CAST(GREATEST(8 + g % 5, 6 + g % 4) AS DOUBLE) AS obb_width, "
+    "CAST(LEAST(8 + g % 5, 6 + g % 4) AS DOUBLE) AS obb_height "
+    "FROM p GROUP BY g"
+)
+
+
+# group_hull: corners pinned per group => hull closed-form
+# Plan: two-stage mergeable hull. The shuffle carries only partial-hull
+# VERTICES: one hash exchange total (partial mapInPandas runs in the scan
+# stage).
+@query("group_hull", oracle=_GROUP_HULL_SQL, folded=True, headline=True,
+       exchanges=1)
+def _q_group_hull(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # distributed convex hull (round 7): 16 doc groups, first four
+    # members pinned to the corners of a per-group integer rectangle,
+    # the rest scattered STRICTLY inside — strict-turn hulls are
+    # exactly the 4 corners, so every output column is closed-form:
+    # the bit-level oracle for the two-stage (partial-hull shuffle ->
+    # per-group final) mergeable-aggregate plan.
+    from pure_python_geospatial_export_spark.operators.hull import (
+        convex_hulls,
+    )
+
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 400)
+    )
+    g = F.col("doc_id") % 16
+    x0 = (g % 4) * 20 - 40
+    y0 = (g - g % 4) / 4 * 15 - 30  # exact: g - g%4 is a multiple of 4
+    w = 8 + g % 5
+    h = 6 + g % 4
+    mi = ((F.col("doc_id") - g) / 16).cast("long")
+    lon = (
+        F.when(mi == 0, x0)
+        .when(mi == 1, x0 + w)
+        .when(mi == 2, x0 + w)
+        .when(mi == 3, x0)
+        .otherwise(x0 + 1 + (F.col("doc_id") * 7) % (w - 1))
+    ).cast("double")
+    lat = (
+        F.when(mi == 0, y0)
+        .when(mi == 1, y0)
+        .when(mi == 2, y0 + h)
+        .when(mi == 3, y0 + h)
+        .otherwise(y0 + 1 + (F.col("doc_id") * 11) % (h - 1))
+    ).cast("double")
+    pts = docs.select(
+        g.cast("long").alias("group_id"), lon.alias("lon"),
+        lat.alias("lat"),
+    )
+    return convex_hulls(pts).select(
+        "group_id", "n_points", "n_vertices", "area",
+        "xmin", "ymin", "xmax", "ymax",
+        # rotating-calipers metrics: the min-area OBB of a rectangle
+        # is itself and the diameter is its diagonal, so both are
+        # closed-form too (division-late arithmetic keeps them exact)
+        "diameter_sq", "obb_area", "obb_width", "obb_height",
+    )
+
+
+_FUZZY_DECONTAM_SQL = """
+    WITH train AS (
+      SELECT doc_id, text FROM documents
+    ), bench AS (
+      SELECT doc_id + 700000 AS doc_id, text || ' zzzz' AS text
+      FROM documents WHERE doc_id % 10 = 0
+    ), sh_t AS (
+      SELECT doc_id, CASE
+        WHEN len(regexp_split_to_array(trim(text), '\\s+')) >= 3 THEN
+          list_distinct(list_transform(
+            range(1, len(regexp_split_to_array(trim(text), '\\s+')) - 1),
+            i -> regexp_split_to_array(trim(text), '\\s+')[i] || ' ' ||
+                 regexp_split_to_array(trim(text), '\\s+')[i+1] || ' ' ||
+                 regexp_split_to_array(trim(text), '\\s+')[i+2]))
+        ELSE [text] END AS shingles
+      FROM train
+    ), sh_b AS (
+      SELECT doc_id, CASE
+        WHEN len(regexp_split_to_array(trim(text), '\\s+')) >= 3 THEN
+          list_distinct(list_transform(
+            range(1, len(regexp_split_to_array(trim(text), '\\s+')) - 1),
+            i -> regexp_split_to_array(trim(text), '\\s+')[i] || ' ' ||
+                 regexp_split_to_array(trim(text), '\\s+')[i+1] || ' ' ||
+                 regexp_split_to_array(trim(text), '\\s+')[i+2]))
+        ELSE [text] END AS shingles
+      FROM bench
+    )
+    SELECT id_left, id_right, jaccard FROM (
+      SELECT a.doc_id AS id_left, b.doc_id AS id_right,
+        CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
+          / CAST(len(list_distinct(
+                list_concat(a.shingles, b.shingles))) AS DOUBLE)
+          AS jaccard
+      FROM sh_t a, sh_b b
+    ) WHERE jaccard >= 0.5"""
+
+
+# fuzzy_decontam: planted pairs ~0.9 => candidate recall 1
+@query("fuzzy_decontam", oracle=_FUZZY_DECONTAM_SQL, folded=True)
+def _q_fuzzy_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cross-corpus MinHash near-dup join (dedup.
+    cross_near_duplicates_minhash): benchmark = every 10th doc with a
+    one-token suffix mutation (id +700000), train = all docs. Planted
+    pairs sit at jaccard ~0.9 (and exact-twin docs match the mutation
+    of their twin at the same level) — far above the 0.5 threshold,
+    so the banded candidate stage has recall 1 deterministically and
+    the output equals the exact all-cross-pairs threshold set the
+    oracle computes."""
+    from pure_python_geospatial_export_spark.operators.dedup import (
+        cross_near_duplicates_minhash,
+    )
+
+    train = spark.read.parquet(
+        os.path.join(sf_dir, "documents.parquet")
+    ).select("doc_id", "text")
+    bench = train.where(F.col("doc_id") % 10 == 0).select(
+        (F.col("doc_id") + 700000).alias("doc_id"),
+        F.concat(F.col("text"), F.lit(" zzzz")).alias("text"),
+    )
+    return cross_near_duplicates_minhash(
+        train, bench, "doc_id", "text", threshold=0.5
+    )
+
+
+def _hex_bins_sql() -> str:
+    from pure_python_geospatial_export_spark.geo.hex import (
+        hex_center_sql,
+        hex_qr_sql,
+    )
+
+    cx, cy = hex_center_sql("hq", "hr", 2.5)
+    return (
+        "WITH pt AS (SELECT doc_id, %s AS x, %s AS y FROM documents), "
+        "%s "
+        "SELECT hq AS hex_q, hr AS hex_r, COUNT(*) AS n_docs, "
+        "MIN(doc_id) AS min_doc, %s AS hex_cx, %s AS hex_cy "
+        "FROM hexed GROUP BY hq, hr"
+        % (_LON_SQL, _LAT_SQL, hex_qr_sql("x", "y", 2.5), cx, cy)
+    )
+
+
+# hex_bins: identical formula both engines => bit-level
+# Plan: hex binning is pure JVM column arithmetic. One hash exchange (the
+# groupBy), zero Python evals.
+@query("hex_bins", oracle=_hex_bins_sql, folded=True, headline=True,
+       exchanges=1)
+def _q_hex_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hexagonal density binning (geo/hex.py) over the derived doc
+    points: axial (q, r) via cube rounding, one groupBy — pure JVM
+    column arithmetic end to end. The oracle runs the IDENTICAL
+    formula (decimal-literal constants, floor(v+0.5) rounding, strict
+    tie-fix branches), so ids, counts, and center doubles all match
+    bit-for-bit."""
+    from pure_python_geospatial_export_spark.geo.hex import (
+        hex_center_cols,
+        with_hex,
+    )
+
+    pts = _docs_points(spark, sf_dir)
+    binned = (
+        with_hex(pts, 2.5)
+        .groupBy("hex_q", "hex_r")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.min("doc_id").alias("min_doc"),
+        )
+    )
+    cx, cy = hex_center_cols(F.col("hex_q"), F.col("hex_r"), 2.5)
+    return binned.withColumn("hex_cx", cx).withColumn("hex_cy", cy)
+
+
+def _traj_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events with deterministic trajectory-like positions: each user
+    orbits a home cell ((event_id % 4, % 5) * 0.02 jitter) and hops
+    +4 degrees east whenever event_id % 13 >= 9 — so segmentation at
+    eps=1 alternates home-cluster and away-cluster segments. Pure
+    integer-derived double arithmetic, mirrored verbatim in SQL."""
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    u, e = F.col("user_id"), F.col("event_id")
+    lon = (
+        F.lit(-40.0) + (u % 8).cast("double") * F.lit(10.0)
+        + (e % 4).cast("double") * F.lit(0.02)
+        + F.when(e % 13 >= 9, F.lit(4.0)).otherwise(F.lit(0.0))
+    )
+    lat = (
+        F.lit(-20.0) + (u - u % 8) / F.lit(8) * F.lit(10.0)
+        + (e % 5).cast("double") * F.lit(0.02)
+    )
+    return ev.select(
+        "user_id", "event_id", "ts",
+        lon.alias("lon"), lat.alias("lat"),
+    )
+
+
+_TRAJ_PTS_CTE = (
+    "p AS (SELECT user_id, event_id, ts, "
+    "-40.0 + CAST(user_id % 8 AS DOUBLE) * 10.0 "
+    "+ CAST(event_id % 4 AS DOUBLE) * 0.02 "
+    "+ CASE WHEN event_id % 13 >= 9 THEN 4.0 ELSE 0.0 END AS lon, "
+    "-20.0 + (user_id - user_id % 8) / 8 * 10.0 "
+    "+ CAST(event_id % 5 AS DOUBLE) * 0.02 AS lat "
+    "FROM events)"
+)
+
+
+_TRAJ_SEG_CTES = _TRAJ_PTS_CTE + (
+    ", l AS (SELECT *, epoch_us(ts) AS us, "
+    "lon - lag(lon) OVER w AS dlon, lat - lag(lat) OVER w AS dlat, "
+    "epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us FROM p "
+    "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)), "
+    "f AS (SELECT *, CASE WHEN dlon IS NULL "
+    "OR dlon * dlon + dlat * dlat > 1.0 "
+    "OR gap_us > 7200000000 THEN 1 ELSE 0 END AS new_seg FROM l), "
+    "s AS (SELECT *, CASE WHEN new_seg = 1 THEN CAST(0 AS BIGINT) "
+    "ELSE CAST(floor(sqrt(dlon * dlon + dlat * dlat) * 1000.0 + 0.5) "
+    "AS BIGINT) END AS step_mm, "
+    "CAST(SUM(new_seg) OVER (PARTITION BY user_id ORDER BY ts, "
+    "event_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS seg_id FROM f), "
+    "segs AS (SELECT user_id, seg_id, COUNT(*) AS n_points, "
+    "MIN(ts) AS t_start, MAX(ts) AS t_end, "
+    "MAX(us) - MIN(us) AS dur_us, "
+    "CAST(SUM(step_mm) AS BIGINT) AS path_mm, "
+    "MIN(lon) AS xmin, MIN(lat) AS ymin, "
+    "MAX(lon) AS xmax, MAX(lat) AS ymax, "
+    "(MAX(us) - MIN(us)) >= 1800000000 AS is_stay "
+    "FROM s GROUP BY 1, 2)"
+)
+
+
+_STAY_POINTS_SQL = (
+    "WITH " + _TRAJ_SEG_CTES + " SELECT * FROM segs"
+)
+
+
+# trajectory: integer milli path sums + micros spans, order-free
+@query("stay_points", oracle=_STAY_POINTS_SQL, folded=True, headline=True)
+def _q_stay_points(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stop/move segmentation (operators/trajectory.py) over the
+    deterministic trajectory fixture: eps=1 step cut, 2h gap cut,
+    30min stay floor. Integer-milli path sums + epoch-micros spans
+    keep every column order-free, so the window+groupBy recompute in
+    DuckDB matches bit-for-bit."""
+    from pure_python_geospatial_export_spark.operators.trajectory import (
+        trajectory_segments,
+    )
+
+    return trajectory_segments(
+        _traj_points(spark, sf_dir),
+        eps=1.0, max_gap_s=7200, min_stay_s=1800,
+        order_cols=("event_id",),
+    )
+
+
+_TRAVEL_ROLLUP_SQL = (
+    "WITH " + _TRAJ_SEG_CTES +
+    " SELECT user_id, COUNT(*) AS n_segments, "
+    "CAST(SUM(CASE WHEN is_stay THEN 1 ELSE 0 END) AS BIGINT) "
+    "AS n_stays, "
+    "CAST(SUM(CASE WHEN is_stay THEN dur_us ELSE 0 END) AS BIGINT) "
+    "AS stay_us, "
+    "CAST(SUM(path_mm) AS BIGINT) AS total_path_mm, "
+    "MIN(t_start) AS first_seen, MAX(t_end) AS last_seen "
+    "FROM segs GROUP BY 1"
+)
+
+
+@query("travel_rollup", oracle=_TRAVEL_ROLLUP_SQL, folded=True)
+def _q_travel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user travel rollup (trajectory.travel_stats) composed on
+    the segments — rides the same user partitioning."""
+    from pure_python_geospatial_export_spark.operators.trajectory import (
+        trajectory_segments,
+        travel_stats,
+    )
+
+    segs = trajectory_segments(
+        _traj_points(spark, sf_dir),
+        eps=1.0, max_gap_s=7200, min_stay_s=1800,
+        order_cols=("event_id",),
+    )
+    return travel_stats(segs)
+
+
+_SEMANTIC_DEDUP_SQL = """
+    WITH base AS (
+      SELECT vec_id,
+        list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vec
+      FROM embeddings
+    ), planted AS (
+      SELECT vec_id + 100000 AS vec_id,
+        list_transform(embedding,
+                       x -> CAST(x AS DOUBLE) + 0.01) AS vec
+      FROM embeddings WHERE vec_id < 150
+    ), u AS (
+      SELECT * FROM base UNION ALL SELECT * FROM planted
+    ), sc AS (
+      -- cosine vs one-hot centroid i == vec[i+1]/||vec|| exactly
+      -- (the sequential fold's zero terms vanish; ||one-hot|| == 1)
+      SELECT vec_id, vec,
+        vec[1] / sqrt(list_dot_product(vec, vec)) AS s0,
+        vec[2] / sqrt(list_dot_product(vec, vec)) AS s1,
+        vec[3] / sqrt(list_dot_product(vec, vec)) AS s2,
+        vec[4] / sqrt(list_dot_product(vec, vec)) AS s3
+      FROM u
+    ), asg AS (
+      SELECT vec_id, vec, CAST(
+        CASE WHEN s0 >= s1 AND s0 >= s2 AND s0 >= s3 THEN 0
+             WHEN s1 >= s2 AND s1 >= s3 THEN 1
+             WHEN s2 >= s3 THEN 2 ELSE 3 END AS INTEGER) AS cluster
+      FROM sc
+    )
+    SELECT id_a, id_b, cluster, score FROM (
+      SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        a.cluster AS cluster,
+        list_dot_product(a.vec, b.vec)
+          / (sqrt(list_dot_product(a.vec, a.vec))
+             * sqrt(list_dot_product(b.vec, b.vec))) AS score
+      FROM asg a JOIN asg b
+        ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+    ) WHERE score >= 0.99"""
+
+
+# semantic_dedup: one-hot centroids collapse assignment exactly
+@query("semantic_dedup", oracle=_SEMANTIC_DEDUP_SQL, folded=True)
+def _q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup (similarity.semantic_duplicates) with FIXED one-hot
+    centroids (dims 0-3) and assign='expr': the cluster assignment is
+    pure column arithmetic (cosine vs a one-hot = component/norm, the
+    sequential fold collapses exactly), so DuckDB recomputes
+    assignment AND within-cluster pair scores bit-for-bit. Same
+    planted +0.01 near-dup fixture as embedding_near_dup."""
+    from pure_python_geospatial_export_spark.operators.similarity import (
+        semantic_duplicates,
+    )
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    base = emb.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("vec"),
+    )
+    planted = emb.where(F.col("vec_id") < 150).select(
+        (F.col("vec_id") + 100000).alias("vec_id"),
+        F.transform(
+            "embedding", lambda x: x.cast("double") + F.lit(0.01)
+        ).alias("vec"),
+    )
+    cents = [
+        [1.0 if j == i else 0.0 for j in range(64)] for i in range(4)
+    ]
+    return semantic_duplicates(
+        base.unionByName(planted), "vec_id", "vec",
+        centroids=cents, threshold=0.99, assign="expr",
+    )
+
+
+_FOCAL_STATS_SQL = (
+    "WITH r AS (SELECT px, py, "
+    "CAST((px * 7 + py * 13) % 1000 AS DOUBLE) AS v "
+    "FROM generate_series(0, 47) t(px), "
+    "generate_series(0, 31) s(py)), "
+    "c AS (SELECT px + dx AS tx, py + dy AS ty, v FROM r "
+    "CROSS JOIN generate_series(-1, 1) a(dx) "
+    "CROSS JOIN generate_series(-1, 1) b(dy)), "
+    "g AS (SELECT tx, ty, COUNT(*) AS n, SUM(v) AS sum, "
+    "MIN(v) AS min, MAX(v) AS max FROM c GROUP BY 1, 2) "
+    "SELECT g.tx AS px, g.ty AS py, n, sum, min, max, "
+    "sum / n AS mean FROM g "
+    "JOIN (SELECT px, py FROM r) p ON p.px = g.tx AND p.py = g.ty"
+)
+
+
+# focal_stats: integer-valued doubles => exact aggregates
+@query("focal_stats", oracle=_FOCAL_STATS_SQL, folded=True)
+def _q_focal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Focal (moving-window) raster statistics (operators/raster.py)
+    over the synthetic 48x32 integer raster — scatter + one groupBy.
+    Integer-valued doubles keep every aggregate (and sum/n) exact, so
+    the DuckDB cross-join recompute matches bit-for-bit, edge partial
+    windows included."""
+    from pure_python_geospatial_export_spark.operators.raster import (
+        focal_aggregate,
+    )
+
+    r = spark.range(48 * 32).select(
+        (F.col("id") % 48).alias("px"),
+        (F.col("id") / 48).cast("long").alias("py"),
+    )
+    rast = r.withColumn(
+        "value",
+        ((F.col("px") * 7 + F.col("py") * 13) % 1000).cast("double"),
+    )
+    return focal_aggregate(rast, radius=1)
+
+
+_DIST_LAYER = (
+    # every side length a power of two at integer coords: projection
+    # parameters t = gap/2^k are exact doubles, so the boundary kernel
+    # reproduces the closed-form rect-gap distance bit-for-bit
+    (1, "west", "POLYGON ((-64 -16, -32 -16, -32 16, -64 16, -64 -16))"),
+    (2, "mid", "POLYGON ((-16 -8, 16 -8, 16 8, -16 8, -16 -8))"),
+    (3, "east", "POLYGON ((32 -32, 64 -32, 64 0, 32 0, 32 -32))"),
+)
+
+
+def _rect_distance_sql() -> str:
+    import re as _re
+
+    parts = []
+    for _pid, name, w in _DIST_LAYER:
+        v = [int(x) for x in _re.findall(r"-?\d+", w)]
+        lx0, ly0, lx1, ly1 = v[0], v[1], v[2], v[5]
+        parts.append(
+            "SELECT doc_id, '%s' AS name, "
+            "greatest(0.0, CAST(%d - px1 AS DOUBLE), "
+            "CAST(px0 - %d AS DOUBLE)) AS dx, "
+            "greatest(0.0, CAST(%d - py1 AS DOUBLE), "
+            "CAST(py0 - %d AS DOUBLE)) AS dy FROM p"
+            % (name, lx0, lx1, ly0, ly1)
+        )
+    return (
+        "WITH p AS (SELECT doc_id, "
+        "(doc_id %% 24) * 8 - 96 AS px0, "
+        "(doc_id %% 15) * 8 - 56 AS py0, "
+        "(doc_id %% 24) * 8 - 96 + (2 << (doc_id %% 3)) AS px1, "
+        "(doc_id %% 15) * 8 - 56 + (2 << (doc_id %% 2)) AS py1 "
+        "FROM documents WHERE doc_id < 400), "
+        "g AS (%s) "
+        "SELECT doc_id, name, dx * dx + dy * dy AS dist2, "
+        "sqrt(dx * dx + dy * dy) AS dist FROM g "
+        "WHERE dx * dx + dy * dy <= 36.0"
+        % " UNION ALL ".join(parts)
+    )
+
+
+# rect_distance: dyadic rects => kernel == closed-form gap
+# Plan: polygon_distance_join rides the overlap-join pipeline. One shuffle
+# (pair-dedupe groupBy), broadcast cover join, geometry only in the
+# mapInPandas tail.
+@query("rect_distance", oracle=_rect_distance_sql, folded=True, exchanges=1)
+def _q_rect_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Within-distance polygon join (operators/distance.py) on dyadic
+    rect fixtures: probes are power-of-two rects derived from doc_id,
+    the layer is power-of-two rects, so every surviving pair's region
+    distance is EXACTLY the closed-form axis gap dx^2 + dy^2 the
+    oracle computes (overlap/containment -> 0 on both sides)."""
+    from pure_python_geospatial_export_spark.operators.distance import (
+        polygon_distance_join,
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    layer = local_df(
+        spark, list(_DIST_LAYER), ["polygon_id", "name", "wkt"]
+    )
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 400)
+    )
+    px0 = (F.col("doc_id") % 24) * 8 - 96
+    py0 = (F.col("doc_id") % 15) * 8 - 56
+    px1 = px0 + F.expr("CAST(shiftleft(2, CAST(doc_id % 3 AS INT)) AS BIGINT)")
+    py1 = py0 + F.expr("CAST(shiftleft(2, CAST(doc_id % 2 AS INT)) AS BIGINT)")
+    probes = docs.select(
+        F.col("doc_id").alias("probe_id"),
+        F.format_string(
+            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
+            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
+        ).alias("wkt"),
+    )
+    out = polygon_distance_join(probes, layer, max_dist=6.0, res=5)
+    return out.select(
+        F.col("probe_id").alias("doc_id"), "name", "dist2", "dist"
+    )
+
+
+_TPCH_PRICING_SQL = (
+    "SELECT l_returnflag, l_linestatus, "
+    "CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty, "
+    "CAST(SUM(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)) "
+    "AS BIGINT) AS sum_base_cents, "
+    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
+    "* 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS sum_disc_cents, "
+    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
+    "* (1.0 + l_tax) * 100.0 + 0.5) AS BIGINT)) AS BIGINT) "
+    "AS sum_charge_cents, "
+    "COUNT(*) AS n_rows, "
+    "CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) "
+    "/ CAST(COUNT(*) AS DOUBLE) AS avg_qty "
+    "FROM lineitem "
+    "WHERE l_shipdate <= TIMESTAMP '1999-12-31 00:00:00' "
+    "GROUP BY 1, 2"
+)
+
+
+# tpch_*: integer-cents money sums, order-free
+@query("tpch_pricing", oracle=_TPCH_PRICING_SQL, folded=True, exchanges=1)
+def _q_tpch_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1-style pricing summary over the provided lineitem
+    table: the relational-engine face of the driver contract. Money
+    sums in integer cents (floor(x*100+0.5) BIGINT — order-free), so
+    DuckDB matches bit-for-bit; averages divide the exact sums."""
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    f = li.where(
+        F.expr("l_shipdate <= TIMESTAMP_NTZ'1999-12-31 00:00:00'")
+    )
+    disc = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+    out = f.groupBy("l_returnflag", "l_linestatus").agg(
+        F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"),
+        F.sum(
+            F.floor(F.col("l_extendedprice") * 100.0 + 0.5)
+            .cast("long")
+        ).alias("sum_base_cents"),
+        F.sum(
+            F.floor(disc * 100.0 + 0.5).cast("long")
+        ).alias("sum_disc_cents"),
+        F.sum(
+            F.floor(
+                disc * (F.lit(1.0) + F.col("l_tax")) * 100.0 + 0.5
+            ).cast("long")
+        ).alias("sum_charge_cents"),
+        F.count(F.lit(1)).alias("n_rows"),
+    )
+    return out.withColumn(
+        "avg_qty",
+        F.col("sum_qty").cast("double") / F.col("n_rows").cast("double"),
+    )
+
+
+_TPCH_TOP_ORDERS_SQL = (
+    "SELECT o_orderkey, o_orderdate, o_orderpriority, "
+    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
+    "* 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents "
+    "FROM customer, orders, lineitem "
+    "WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey "
+    "AND o_orderkey = l_orderkey "
+    "AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00' "
+    "AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00' "
+    "GROUP BY 1, 2, 3 "
+    "ORDER BY revenue_cents DESC, o_orderkey LIMIT 10"
+)
+
+
+@query("tpch_top_orders", oracle=_TPCH_TOP_ORDERS_SQL, folded=True)
+def _q_tpch_top_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q3-style shipping priority: segment-filtered customer ⋈
+    orders ⋈ lineitem, top 10 orders by revenue (cents; ties broken by
+    orderkey so the LIMIT is deterministic)."""
+    cust = spark.read.parquet(
+        os.path.join(sf_dir, "customer.parquet")
+    ).where(F.col("c_mktsegment") == "BUILDING")
+    orders = spark.read.parquet(
+        os.path.join(sf_dir, "orders.parquet")
+    ).where(F.expr("o_orderdate < TIMESTAMP_NTZ'1998-01-01 00:00:00'"))
+    li = spark.read.parquet(
+        os.path.join(sf_dir, "lineitem.parquet")
+    ).where(F.expr("l_shipdate > TIMESTAMP_NTZ'1998-01-01 00:00:00'"))
+    rev = F.floor(
+        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+        * 100.0 + 0.5
+    ).cast("long")
+    out = (
+        cust.join(orders, cust["c_custkey"] == orders["o_custkey"])
+        .join(li, F.col("o_orderkey") == F.col("l_orderkey"))
+        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(F.sum(rev).alias("revenue_cents"))
+        .orderBy(F.col("revenue_cents").desc(), F.col("o_orderkey"))
+        .limit(10)
+    )
+    return out
+
+
+_TPCH_REGION_VOLUME_SQL = (
+    "SELECT r_name, n_name, "
+    "CAST(SUM(CAST(floor(l_extendedprice * (1.0 - l_discount) "
+    "* 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS revenue_cents "
+    "FROM lineitem, orders, customer, supplier, nation, region "
+    "WHERE l_orderkey = o_orderkey AND o_custkey = c_custkey "
+    "AND l_suppkey = s_suppkey AND c_nationkey = s_nationkey "
+    "AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey "
+    "AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' "
+    "AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00' "
+    "GROUP BY 1, 2"
+)
+
+
+# Plan: the 6-table Q5-style star join. All five dims broadcast, the
+# lineitem fact flows scan -> joins -> partial agg with exactly ONE hash
+# exchange (the final groupBy).
+@query("tpch_region_volume", oracle=_TPCH_REGION_VOLUME_SQL, folded=True,
+       exchanges=1)
+def _q_tpch_region_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5-style local-supplier volume: the 6-table star join
+    (region ⋈ nation ⋈ {customer, supplier} ⋈ orders ⋈ lineitem with
+    the local-supplier constraint), revenue in integer cents per
+    (region, nation). Dims broadcast; lineitem never re-shuffles."""
+    sf = lambda t: spark.read.parquet(os.path.join(sf_dir, t))
+    orders = sf("orders.parquet").where(F.expr(
+        "o_orderdate >= TIMESTAMP_NTZ'1996-01-01 00:00:00' AND "
+        "o_orderdate < TIMESTAMP_NTZ'1997-01-01 00:00:00'"
+    ))
+    rev = F.floor(
+        F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
+        * 100.0 + 0.5
+    ).cast("long")
+    return (
+        sf("lineitem.parquet")
+        .join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(sf("customer.parquet"),
+              F.col("o_custkey") == F.col("c_custkey"))
+        .join(sf("supplier.parquet"),
+              (F.col("l_suppkey") == F.col("s_suppkey"))
+              & (F.col("c_nationkey") == F.col("s_nationkey")))
+        .join(sf("nation.parquet"),
+              F.col("s_nationkey") == F.col("n_nationkey"))
+        .join(sf("region.parquet"),
+              F.col("n_regionkey") == F.col("r_regionkey"))
+        .groupBy("r_name", "n_name")
+        .agg(F.sum(rev).alias("revenue_cents"))
+    )
+
+
+def _table_profile_sql() -> str:
+    parts = []
+    for c, v in (
+        ("event_id", "event_id"),
+        ("ts", "epoch_us(ts)"),
+        ("user_id", "user_id"),
+        ("event_type", "event_type"),
+        ("value", "value"),
+        ("props", "props"),
+    ):
+        parts.append(
+            "SELECT '%s' AS column, COUNT(*) AS n_rows, "
+            "COUNT(*) - COUNT(%s) AS n_nulls, "
+            "COUNT(DISTINCT %s) AS n_distinct, "
+            "CAST(MIN(%s) AS VARCHAR) AS min_value, "
+            "CAST(MAX(%s) AS VARCHAR) AS max_value FROM events"
+            % (c, v, v, v, v)
+        )
+    return " UNION ALL ".join(parts)
+
+
+# table_profile: order-free stats, ts via epoch micros
+@query("table_profile", oracle=_table_profile_sql, folded=True)
+def _q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-pass per-column profile (operators/profile.py) of the
+    events table: counts, nulls, exact distincts, min/max normalized
+    to strings (timestamps through epoch micros — integer strings
+    never disagree across engines). All statistics order-free."""
+    from pure_python_geospatial_export_spark.operators.profile import (
+        profile_table,
+    )
+
+    ev = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    return profile_table(ev)
+
+
+def _nearest_rect_sql() -> str:
+    import re as _re
+
+    parts = []
+    for pid, name, w in _DIST_LAYER:
+        v = [int(x) for x in _re.findall(r"-?\d+", w)]
+        lx0, ly0, lx1, ly1 = v[0], v[1], v[2], v[5]
+        parts.append(
+            "SELECT doc_id, CAST(%d AS BIGINT) AS polygon_id, "
+            "'%s' AS name, "
+            "greatest(0.0, CAST(%d - px1 AS DOUBLE), "
+            "CAST(px0 - %d AS DOUBLE)) AS dx, "
+            "greatest(0.0, CAST(%d - py1 AS DOUBLE), "
+            "CAST(py0 - %d AS DOUBLE)) AS dy FROM p"
+            % (pid, name, lx0, lx1, ly0, ly1)
+        )
+    return (
+        "WITH p AS (SELECT doc_id, "
+        "(doc_id %% 24) * 8 - 96 AS px0, "
+        "(doc_id %% 15) * 8 - 56 AS py0, "
+        "(doc_id %% 24) * 8 - 96 + (2 << (doc_id %% 3)) AS px1, "
+        "(doc_id %% 15) * 8 - 56 + (2 << (doc_id %% 2)) AS py1 "
+        "FROM documents WHERE doc_id < 400), "
+        "g AS (%s), "
+        "r AS (SELECT doc_id, polygon_id, name, "
+        "dx * dx + dy * dy AS dist2, "
+        "row_number() OVER (PARTITION BY doc_id "
+        "ORDER BY dx * dx + dy * dy, polygon_id) AS rn FROM g) "
+        "SELECT doc_id, polygon_id, name, dist2, sqrt(dist2) AS dist "
+        "FROM r WHERE rn = 1"
+        % " UNION ALL ".join(parts)
+    )
+
+
+# nearest_rect: argmin of closed-form gaps, ties by polygon_id
+@query("nearest_rect", oracle=_nearest_rect_sql, folded=True)
+def _q_nearest_rect(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Nearest-polygon join (ring doubling over the distance join) on
+    the dyadic fixture: start radius 2 forces several doubling rounds,
+    every certified distance is the closed-form rect gap, and the
+    min/tie-break (dist2, polygon_id) is exact arithmetic on both
+    engines."""
+    from pure_python_geospatial_export_spark.operators.distance import (
+        nearest_polygon_join,
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    layer = local_df(
+        spark, list(_DIST_LAYER), ["polygon_id", "name", "wkt"]
+    )
+    docs = (
+        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .where(F.col("doc_id") < 400)
+    )
+    px0 = (F.col("doc_id") % 24) * 8 - 96
+    py0 = (F.col("doc_id") % 15) * 8 - 56
+    px1 = px0 + F.expr(
+        "CAST(shiftleft(2, CAST(doc_id % 3 AS INT)) AS BIGINT)")
+    py1 = py0 + F.expr(
+        "CAST(shiftleft(2, CAST(doc_id % 2 AS INT)) AS BIGINT)")
+    probes = docs.select(
+        F.col("doc_id").alias("probe_id"),
+        F.format_string(
+            "POLYGON ((%d %d, %d %d, %d %d, %d %d, %d %d))",
+            px0, py0, px1, py0, px1, py1, px0, py1, px0, py0,
+        ).alias("wkt"),
+    )
+    out = nearest_polygon_join(probes, layer, start_dist=2.0, res=5)
+    return out.select(
+        F.col("probe_id").alias("doc_id"), "polygon_id", "name",
+        "dist2", "dist",
+    )
+
+
+# snap-to-line layer: single source of truth for the Spark layer and
+# the SQL segment table (parsed into segments by _snap_segments)
+_SNAP_LINES = (
+    (3, "transam",
+     "LINESTRING (-150 -60, -90 -20, -30 10, 30 40, 90 60)"),
+    (7, "equator", "LINESTRING (-170 0, 170 0)"),
+    (11, "twin",
+     "MULTILINESTRING ((-60 60, 60 60), (-60 -60, 60 -60))"),
+)
+
+
+def _snap_segments():
+    from pure_python_geospatial_export_spark.geo import wkt as wktmod
+
+    rows = []
+    for lid, _name, w in _SNAP_LINES:
+        geom = wktmod.loads(w)
+        parts = (
+            [geom["coordinates"]] if geom["type"] == "LineString"
+            else list(geom["coordinates"])
+        )
+        seg = 0
+        for chain in parts:
+            for (ax, ay), (bx, by) in zip(chain[:-1], chain[1:]):
+                rows.append((lid, seg, float(ax), float(ay),
+                             float(bx), float(by)))
+                seg += 1
+    return rows
+
+
+def _snap_lines_sql() -> str:
+    vals = ", ".join(
+        "(CAST(%d AS BIGINT), %d, %r, %r, %r, %r)"
+        % (lid, seg, ax, ay, bx, by)
+        for lid, seg, ax, ay, bx, by in _snap_segments()
+    )
+    return PTS_CTE[:-1] + (
+        " WHERE doc_id < 2000), "
+        "segs(line_id, seg_idx, ax, ay, bx, by) AS (VALUES %s), "
+        "sg AS (SELECT *, bx - ax AS abx, by - ay AS aby FROM segs), "
+        "sg2 AS (SELECT *, abx * abx + aby * aby AS ab2 FROM sg), "
+        "sg3 AS (SELECT *, CAST(COALESCE(SUM(CAST(floor(sqrt(ab2) "
+        "* 1000.0 + 0.5) AS BIGINT)) OVER (PARTITION BY line_id "
+        "ORDER BY seg_idx ROWS BETWEEN UNBOUNDED PRECEDING AND "
+        "1 PRECEDING), 0) AS BIGINT) AS prefix_mm FROM sg2), "
+        "c2 AS (SELECT doc_id, lon, lat, line_id, seg_idx, ax, ay, "
+        "abx, aby, ab2, prefix_mm, "
+        "lon - ax AS apx, lat - ay AS apy FROM pts, sg3), "
+        "c3 AS (SELECT *, least(greatest("
+        "(apx * abx + apy * aby) / ab2, 0.0), 1.0) AS t FROM c2), "
+        "c4 AS (SELECT doc_id, line_id, seg_idx, t, "
+        "(apx - t * abx) * (apx - t * abx) "
+        "+ (apy - t * aby) * (apy - t * aby) AS dist2, "
+        "ax + t * abx AS snap_x, ay + t * aby AS snap_y, "
+        "prefix_mm + CAST(floor(t * sqrt(ab2) * 1000.0 + 0.5) "
+        "AS BIGINT) AS measure_mm FROM c3), "
+        "r AS (SELECT *, row_number() OVER (PARTITION BY doc_id "
+        "ORDER BY dist2, line_id, seg_idx) AS rn FROM c4) "
+        "SELECT doc_id, line_id, CAST(seg_idx AS INTEGER) AS seg_idx, "
+        "dist2, sqrt(dist2) AS dist, t, snap_x, snap_y, measure_mm "
+        "FROM r WHERE rn = 1 AND dist2 <= 225.0"
+        % vals
+    )
+
+
+# snap_lines: kernel mirrors the SQL term-for-term; no float
+# aggregation, integer tie-break => bit parity on raw doubles
+# Plan: broadcast cover join (the fact side never shuffles into the
+# kernel), ONE exchange for the argmin window, map-side WindowGroupLimit
+# prune engaged (limit 1).
+@query("snap_lines", oracle=_snap_lines_sql, folded=True, headline=True,
+       exchanges=1)
+def _q_snap_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snap-to-nearest-line / map matching (operators/snap.py): each
+    derived doc point's nearest polyline within 15 units, with the
+    exact snapped position. Bit-oracled WITHOUT a dyadic fixture:
+    the kernel mirrors the SQL expressions term for term (dot,
+    t = clip(dot/ab2), residual, snap = A + t*AB) and nothing
+    float-aggregates — the argmin tie-break (dist2, line_id, seg_idx)
+    is exact, so every double matches the DuckDB cross-join
+    recompute."""
+    from pure_python_geospatial_export_spark.operators.snap import (
+        snap_points_to_lines,
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    lines = local_df(
+        spark, list(_SNAP_LINES), ["line_id", "name", "wkt"]
+    )
+    pts = _docs_points(spark, sf_dir).where(
+        F.col("doc_id") < 2000
+    ).select(F.col("doc_id").alias("point_id"), "lon", "lat")
+    out = snap_points_to_lines(pts, lines, max_dist=15.0, res=5)
+    return out.select(
+        F.col("point_id").alias("doc_id"), "line_id", "seg_idx",
+        "dist2", "dist", "t", "snap_x", "snap_y", "measure_mm",
+    )
+
+
+def _od_matrix_sql() -> str:
+    cell = _tile_sql(6, "(xmin + xmax) / 2.0", "(ymin + ymax) / 2.0")
+    return (
+        "WITH " + _TRAJ_SEG_CTES +
+        ", stays AS (SELECT user_id, seg_id, t_start, "
+        "epoch_us(t_start) AS start_us, epoch_us(t_end) AS end_us, "
+        "CAST(%s AS BIGINT) AS o_cell FROM segs WHERE is_stay), "
+        "t AS (SELECT user_id, o_cell, lead(o_cell) OVER w AS d_cell, "
+        "lead(start_us) OVER w - end_us AS transit FROM stays "
+        "WINDOW w AS (PARTITION BY user_id ORDER BY t_start, seg_id)) "
+        "SELECT o_cell, d_cell, COUNT(*) AS n_trips, "
+        "COUNT(DISTINCT user_id) AS n_users, "
+        "CAST(SUM(transit) AS BIGINT) AS transit_us_sum "
+        "FROM t WHERE d_cell IS NOT NULL GROUP BY 1, 2"
+        % cell
+    )
+
+
+# od_matrix: integer cells/counts/epoch sums => order-free
+# Plan: the lead window and the stay rollup ride the segments' user
+# exchange (one), plus one (o_cell, d_cell) rollup exchange; the
+# countDistinct must not add a third.
+@query("od_matrix", oracle=_od_matrix_sql, folded=True, exchanges=2)
+def _q_od_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Origin-destination matrix (trajectory.od_flows) over the stay
+    segments: consecutive stays per user form directed trips keyed by
+    the stay-center grid cells. Integer epoch-microsecond transit
+    sums keep the rollup order-free; cell ids and counts are integer
+    arithmetic — bit-oracled against the same window+lead recompute
+    in DuckDB."""
+    from pure_python_geospatial_export_spark.operators.trajectory import (
+        od_flows,
+        trajectory_segments,
+    )
+
+    segs = trajectory_segments(
+        _traj_points(spark, sf_dir),
+        eps=1.0, max_gap_s=7200, min_stay_s=1800,
+        order_cols=("event_id",),
+    )
+    return od_flows(segs, res=6)
+
+
+def _hotspots_sql() -> str:
+    res, n_grid = 5, 32
+    n = n_grid * n_grid
+    gx = ("least(greatest(CAST(floor((lon + 180.0) / 360.0 * %d) "
+          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
+    gy = ("least(greatest(CAST(floor((lat + 90.0) / 180.0 * %d) "
+          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
+    return PTS_CTE + (
+        ", c AS (SELECT %(gx)s AS gx, %(gy)s AS gy, "
+        "COUNT(*) AS cnt FROM pts GROUP BY 1, 2), "
+        "st AS (SELECT CAST(SUM(cnt) AS BIGINT) AS sx, "
+        "CAST(SUM(cnt * cnt) AS BIGINT) AS sx2 FROM c), "
+        "offs(d) AS (VALUES (-1), (0), (1)), "
+        "sc AS (SELECT c.gx + ox.d AS tgx, c.gy + oy.d AS tgy, "
+        "CAST(SUM(cnt) AS BIGINT) AS w_sum, "
+        "CAST(SUM(CASE WHEN ox.d = 0 AND oy.d = 0 THEN cnt ELSE 0 "
+        "END) AS BIGINT) AS cnt "
+        "FROM c, offs ox, offs oy "
+        "WHERE c.gx + ox.d BETWEEN 0 AND %(mx)d "
+        "AND c.gy + oy.d BETWEEN 0 AND %(mx)d GROUP BY 1, 2), "
+        "j AS (SELECT sc.tgx, sc.tgy, sc.w_sum, sc.cnt, "
+        "(least(sc.tgx + 1, %(mx)d) - greatest(sc.tgx - 1, 0) + 1) "
+        "* (least(sc.tgy + 1, %(mx)d) - greatest(sc.tgy - 1, 0) + 1) "
+        "AS k, sx, sx2 FROM sc, st) "
+        "SELECT (%(base)d + tgx * %(shift)d + tgy) AS cell_id, "
+        "tgx AS gx, tgy AS gy, cnt, w_sum, CAST(k AS BIGINT) AS k, "
+        "(CAST(w_sum AS DOUBLE) - (CAST(sx AS DOUBLE) / %(n)s) "
+        "* CAST(k AS DOUBLE)) / "
+        "(sqrt(CAST(sx2 AS DOUBLE) / %(n)s "
+        "- (CAST(sx AS DOUBLE) / %(n)s) * (CAST(sx AS DOUBLE) / %(n)s)"
+        ") * sqrt((%(n)s * CAST(k AS DOUBLE) "
+        "- CAST(k AS DOUBLE) * CAST(k AS DOUBLE)) / %(nm1)s)) "
+        "AS gi_star FROM j"
+        % {
+            "gx": gx, "gy": gy, "mx": n_grid - 1,
+            "base": res * (2 ** 58), "shift": 2 ** 29,
+            "n": repr(float(n)), "nm1": repr(float(n - 1)),
+        }
+    )
+
+
+# hotspots: integer counts/W/k/n; fixed expression tree over
+# them mirrored term-for-term => deterministic IEEE doubles
+# Plan: the cell-count groupBy runs once inside the eager
+# localCheckpoint (counts feeds both the scatter and the stats, the
+# materialize-first rule). The visible plan has the scatter groupBy
+# exchange plus the stats aggregate's exchange on the CONSTANT bin key
+# (the single-lattice delegation to gi_star_binned: all ~lattice-size
+# rows to one partition, the same work the old global agg's uncounted
+# SinglePartition exchange did). Own count rides the dx=dy=0 row: no
+# join, no second counts computation; stats is a broadcast; the empty
+# lattice never materializes.
+@query("hotspots", oracle=_hotspots_sql, folded=True, headline=True,
+       exchanges=2)
+def _q_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Getis-Ord Gi* hot spots (operators/hotspot.py) over the
+    derived doc points at res 5, full-world domain. Counts, W, k, n
+    are integers and the statistic is a fixed expression tree over
+    them mirrored term for term in SQL — deterministic IEEE doubles,
+    no float aggregation, so the compare is bit-level."""
+    from pure_python_geospatial_export_spark.operators.hotspot import (
+        hotspots,
+    )
+
+    pts = _docs_points(spark, sf_dir).select("doc_id", "lon", "lat")
+    return hotspots(pts, res=5)
+
+
+def _emerging_hotspots_sql() -> str:
+    res, n_grid = 5, 32
+    n = n_grid * n_grid
+    gx = ("least(greatest(CAST(floor((lon + 180.0) / 360.0 * %d) "
+          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
+    gy = ("least(greatest(CAST(floor((lat + 90.0) / 180.0 * %d) "
+          "AS BIGINT), 0), %d)" % (n_grid, n_grid - 1))
+    return (
+        "WITH " + _TRAJ_PTS_CTE +
+        ", c AS (SELECT CAST(floor(epoch_us(ts) / 86400000000) "
+        "AS BIGINT) AS bin, %(gx)s AS gx, %(gy)s AS gy, "
+        "COUNT(*) AS cnt FROM p "
+        # the operator DROPS out-of-bbox points (the traj fixture
+        # derives lat > 90 for high user ids); without this the
+        # quantizer would CLAMP them into edge cells instead
+        "WHERE lon >= -180.0 AND lon <= 180.0 "
+        "AND lat >= -90.0 AND lat <= 90.0 GROUP BY 1, 2, 3), "
+        "st AS (SELECT bin, CAST(SUM(cnt) AS BIGINT) AS sx, "
+        "CAST(SUM(cnt * cnt) AS BIGINT) AS sx2 FROM c GROUP BY 1), "
+        "offs(d) AS (VALUES (-1), (0), (1)), "
+        "sc AS (SELECT c.bin, c.gx + ox.d AS tgx, c.gy + oy.d AS tgy, "
+        "CAST(SUM(cnt) AS BIGINT) AS w_sum "
+        "FROM c, offs ox, offs oy "
+        "WHERE c.gx + ox.d BETWEEN 0 AND %(mx)d "
+        "AND c.gy + oy.d BETWEEN 0 AND %(mx)d GROUP BY 1, 2, 3), "
+        "g AS (SELECT sc.bin, sc.tgx AS gx, sc.tgy AS gy, "
+        "(CAST(w_sum AS DOUBLE) - (CAST(sx AS DOUBLE) / %(n)s) * "
+        "CAST((least(sc.tgx + 1, %(mx)d) - greatest(sc.tgx - 1, 0) "
+        "+ 1) * (least(sc.tgy + 1, %(mx)d) - greatest(sc.tgy - 1, 0) "
+        "+ 1) AS DOUBLE)) / (sqrt(CAST(sx2 AS DOUBLE) / %(n)s "
+        "- (CAST(sx AS DOUBLE) / %(n)s) * (CAST(sx AS DOUBLE) / "
+        "%(n)s)) * sqrt((%(n)s * CAST((least(sc.tgx + 1, %(mx)d) - "
+        "greatest(sc.tgx - 1, 0) + 1) * (least(sc.tgy + 1, %(mx)d) - "
+        "greatest(sc.tgy - 1, 0) + 1) AS DOUBLE) - CAST((least("
+        "sc.tgx + 1, %(mx)d) - greatest(sc.tgx - 1, 0) + 1) * "
+        "(least(sc.tgy + 1, %(mx)d) - greatest(sc.tgy - 1, 0) + 1) "
+        "AS DOUBLE) * CAST((least(sc.tgx + 1, %(mx)d) - greatest("
+        "sc.tgx - 1, 0) + 1) * (least(sc.tgy + 1, %(mx)d) - "
+        "greatest(sc.tgy - 1, 0) + 1) AS DOUBLE)) / %(nm1)s)) "
+        "AS gi_star FROM sc JOIN st ON sc.bin = st.bin), "
+        "mk AS (SELECT a.gx, a.gy, CAST(SUM(CAST(sign(b.gi_star - "
+        "a.gi_star) AS BIGINT)) AS BIGINT) AS mk_s "
+        "FROM g a JOIN g b ON a.gx = b.gx AND a.gy = b.gy "
+        "AND a.bin < b.bin GROUP BY 1, 2), "
+        "nb AS (SELECT gx, gy, COUNT(*) AS n_bins FROM g "
+        "GROUP BY 1, 2) "
+        "SELECT (%(base)d + nb.gx * %(shift)d + nb.gy) AS cell_id, "
+        "nb.gx, nb.gy, nb.n_bins, "
+        "COALESCE(mk.mk_s, CAST(0 AS BIGINT)) AS mk_s, "
+        "CASE WHEN nb.n_bins >= 2 THEN (CASE "
+        "WHEN COALESCE(mk.mk_s, 0) > 1 THEN "
+        "(CAST(COALESCE(mk.mk_s, 0) AS DOUBLE) - 1.0) / "
+        "sqrt(CAST(nb.n_bins AS DOUBLE) * (CAST(nb.n_bins AS DOUBLE) "
+        "- 1.0) * (2.0 * CAST(nb.n_bins AS DOUBLE) + 5.0) / 18.0) "
+        "WHEN COALESCE(mk.mk_s, 0) < -1 THEN "
+        "(CAST(COALESCE(mk.mk_s, 0) AS DOUBLE) + 1.0) / "
+        "sqrt(CAST(nb.n_bins AS DOUBLE) * (CAST(nb.n_bins AS DOUBLE) "
+        "- 1.0) * (2.0 * CAST(nb.n_bins AS DOUBLE) + 5.0) / 18.0) "
+        "ELSE 0.0 END) ELSE 0.0 END AS mk_z "
+        "FROM nb LEFT JOIN mk ON nb.gx = mk.gx AND nb.gy = mk.gy"
+        % {
+            "gx": gx, "gy": gy, "mx": n_grid - 1,
+            "base": res * (2 ** 58), "shift": 2 ** 29,
+            "n": repr(float(n)), "nm1": repr(float(n - 1)),
+        }
+    )
+
+
+# emerging_hotspots: per-bin Gi* (fixed expression tree) +
+# integer Mann-Kendall sign sums => bit parity end to end
+@query("emerging_hotspots", oracle=_emerging_hotspots_sql, folded=True)
+def _q_emerging_hotspots(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Emerging hot spot analysis (operators/hotspot.py): per-day Gi*
+    over the trajectory fixture's derived points, then the
+    Mann-Kendall trend per cell. mk_s is an INTEGER sign sum over
+    deterministic doubles and the per-bin statistic is the fixed
+    expression tree — bit-oracled end to end."""
+    from pure_python_geospatial_export_spark.operators.hotspot import (
+        emerging_hotspots,
+    )
+
+    return emerging_hotspots(
+        _traj_points(spark, sf_dir), res=5, ts_col="ts",
+        bin_seconds=86_400,
+    )
+
+
+def _grid_paths_sql() -> str:
+    rounds = []
+    prev = "d0"
+    for r in range(1, 25):
+        # MATERIALIZED: each round references the previous one
+        # TWICE (carry + relax); inlined CTEs would double the
+        # expression tree per round — 2^24 blowup (the hilbert
+        # single-reference lesson, solved here by materialization)
+        rounds.append(
+            "d{r} AS MATERIALIZED (SELECT node, MIN(dist) AS dist "
+            "FROM (SELECT node, dist FROM {p} "
             "UNION ALL "
-            "SELECT s.source, s.doc_id, s.n_tokens, s.rn, "
-            "CASE WHEN r.fill + s.n_tokens > 96 THEN r.pack_id + 1 "
-            "ELSE r.pack_id END, "
-            "CASE WHEN r.fill + s.n_tokens > 96 THEN s.n_tokens "
-            "ELSE r.fill + s.n_tokens END "
-            "FROM r JOIN s ON s.source = r.source AND "
-            "s.rn = r.rn + 1), "
-            "pb AS (SELECT source, pack_id, "
-            "CAST(SUM(n_tokens) AS BIGINT) AS fill FROM r "
-            "GROUP BY source, pack_id) "
-            "SELECT source, COUNT(*) AS n_bins, "
-            "CAST(SUM(fill) AS BIGINT) AS n_tokens, "
-            "CAST(SUM(fill) AS DOUBLE) / "
-            "CAST(COUNT(*) * 96 AS DOUBLE) AS fill_fraction "
-            "FROM pb GROUP BY source"
-            % T.token_count_sql("text")
-        ),
-        "events_cohort": (
-            "WITH f AS (SELECT user_id, ts, "
-            "min(ts) OVER (PARTITION BY user_id) AS first_ts "
-            "FROM events), "
-            "c AS (SELECT user_id, date_trunc('week', first_ts) AS "
-            "cohort, CAST(floor(datediff('day', "
-            "date_trunc('week', first_ts), date_trunc('week', ts)) "
-            "/ 7.0) AS INTEGER) AS \"offset\" FROM f) "
-            "SELECT cohort, \"offset\", count(DISTINCT user_id) "
-            "AS n_users FROM c GROUP BY cohort, \"offset\""
-        ),
-        "value_histogram": (
-            "SELECT event_type, "
-            "CAST(floor(value / 25.0) AS INTEGER) AS bin, "
-            "COUNT(*) AS n, min(value) AS vmin, max(value) AS vmax "
-            "FROM events GROUP BY event_type, bin"
-        ),
-        "time_rollup": (
-            "SELECT CAST(date_trunc('day', ts) AS DATE) AS day, "
-            "event_type, COUNT(*) AS n_events, "
-            "CAST(SUM(CAST(floor(value * 100.0 + 0.5) AS BIGINT)) "
-            "AS BIGINT) AS sum_cents "
-            "FROM events GROUP BY 1, 2"
-        ),
-        "quantile_sketch": (
-            "WITH g AS (SELECT event_type, list_sort(list(value)) AS vs "
-            "FROM events GROUP BY event_type), "
-            "q AS (SELECT CAST(unnest([0.1, 0.5, 0.9, 0.99]) AS DOUBLE) "
-            "AS q) "
-            "SELECT event_type, q, "
-            "vs[CAST(greatest(ceil(q * len(vs)), 1) AS BIGINT)] AS est "
-            "FROM g CROSS JOIN q"
-        ),
-        "events_sessions": events_sessions_sql,
-        "events_rollup": events_rollup_sql,
-        "events_json": events_json_sql,
-        "bpe_tokens": bpe_tokens_sql,
-        # bpe_trained: the learned-vocab merge walk as nested
-        # left-to-right replace calls on the wrapped-symbol string —
-        # the literally-same algorithm the Arrow UDF runs, so the
-        # joined token string is bit-identical per document.
-        "bpe_trained": _bpe_trained_sql(),
-        # clip_rects: closed-form interval products on the integer
-        # lattice — exact vs the overlay's shoelace areas
-        "clip_rects": _clip_rects_sql(),
-        # areal_interp: dyadic weights => order-free double sums
-        "areal_interp": _areal_interp_sql(),
-        # group_hull: corners pinned per group => hull closed-form
-        "group_hull": _GROUP_HULL_SQL,
-        # fuzzy_decontam: planted pairs ~0.9 => candidate recall 1
-        "fuzzy_decontam": _FUZZY_DECONTAM_SQL,
-        # hex_bins: identical formula both engines => bit-level
-        "hex_bins": _hex_bins_sql(),
-        # trajectory: integer milli path sums + micros spans, order-free
-        "stay_points": _STAY_POINTS_SQL,
-        "travel_rollup": _TRAVEL_ROLLUP_SQL,
-        # semantic_dedup: one-hot centroids collapse assignment exactly
-        "semantic_dedup": _SEMANTIC_DEDUP_SQL,
-        # focal_stats: integer-valued doubles => exact aggregates
-        "focal_stats": _FOCAL_STATS_SQL,
-        # rect_distance: dyadic rects => kernel == closed-form gap
-        "rect_distance": _rect_distance_sql(),
-        # tpch_*: integer-cents money sums, order-free
-        "tpch_pricing": _TPCH_PRICING_SQL,
-        "tpch_top_orders": _TPCH_TOP_ORDERS_SQL,
-        "tpch_region_volume": _TPCH_REGION_VOLUME_SQL,
-        # table_profile: order-free stats, ts via epoch micros
-        "table_profile": _table_profile_sql(),
-        # nearest_rect: argmin of closed-form gaps, ties by polygon_id
-        "nearest_rect": _nearest_rect_sql(),
-        # snap_lines: kernel mirrors the SQL term-for-term; no float
-        # aggregation, integer tie-break => bit parity on raw doubles
-        "snap_lines": _snap_lines_sql(),
-        # od_matrix: integer cells/counts/epoch sums => order-free
-        "od_matrix": _od_matrix_sql(),
-        # hotspots: integer counts/W/k/n; fixed expression tree over
-        # them mirrored term-for-term => deterministic IEEE doubles
-        "hotspots": _hotspots_sql(),
-        # emerging_hotspots: per-bin Gi* (fixed expression tree) +
-        # integer Mann-Kendall sign sums => bit parity end to end
-        "emerging_hotspots": _emerging_hotspots_sql(),
-        # grid_paths: integer distances + idempotent min relax =>
-        # fixed-round CTE chain reaches the same fixpoint bit-level
-        "grid_paths": _grid_paths_sql(),
-        # page_rank: scaled-BIGINT ranks, truncating DIV everywhere
-        # => order-free integers; chained CTEs mirror the update
-        "page_rank": _page_rank_sql(),
-        # ppr: same integers with a seed CASE on teleport + dangling
-        "ppr": _ppr_sql(),
-        "hits_scores": _hits_sql(),
-        "scc_labels": _scc_sql(),
-        # triangles: integer joins + ONE division of exact integers
-        "triangles": _triangles_sql(),
-        # html/link extraction: Java∩RE2 regex subset + identical
-        # string synthesis => character-identical on both engines
-        "html_extract": _html_extract_sql(),
-        "link_graph": _link_graph_sql(),
-        "anchor_index": _anchor_index_sql(),
-        "redirect_resolve": _redirect_resolve_sql(),
-        "robots_gate": _robots_gate_sql(),
-        "crawl_diff": _crawl_diff_sql(),
-        "frontier_batches": _frontier_batches_sql(),
-        "sitemap_urls": _sitemap_urls_sql(),
-        "page_links": _page_links_sql(),
-        # communities/kcore: all-integer iterative fixpoints =>
-        # chained MATERIALIZED CTE rounds land on the same integers
-        "communities": _communities_sql(),
-        "kcore": _kcore_sql(),
-        "wkt_roundtrip": wkt_roundtrip_sql,
-        "jaccard_pairs": jaccard_pairs_sql,
-        "minhash_pairs": minhash_pairs_sql,
-        "simhash_pairs": simhash_pairs_sql,
-        "embedding_near_dup": embedding_near_dup_sql,
-        "geojson_lines": _geojson_lines_sql(),
-        # tile_mvt: closed-form MVT quantization. Scale constants are
-        # written as the same float expressions the kernel evaluates
-        # (res-5 cell extents 11.25 / 5.625 are exact binary fractions,
-        # so x1-x0 == 11.25 exactly and the division+multiply order
-        # matches encode_mvt_points bit for bit).
-        "tile_mvt": (
-            PTS_CTE + ", "
-            "q AS (SELECT doc_id, lon, lat, "
-            "least(greatest(CAST(floor((lon + 180.0) / 360.0 * 32) "
-            "AS BIGINT), 0), 31) AS tx, "
-            "least(greatest(CAST(floor((lat + 90.0) / 180.0 * 32) "
-            "AS BIGINT), 0), 31) AS ty FROM pts), "
-            "px AS (SELECT doc_id, "
-            "(5 * 288230376151711744 + tx * 536870912 + ty) AS tile_id, "
-            "least(greatest(CAST(floor("
-            "(lon - (-180.0 + tx * 11.25)) / 11.25 * 4096.0"
-            ") AS BIGINT), 0), 4096) AS u, "
-            "least(greatest(CAST(floor("
-            "((-90.0 + (ty + 1) * 5.625) - lat) / 5.625 * 4096.0"
-            ") AS BIGINT), 0), 4096) AS v FROM q) "
-            "SELECT tile_id, CAST(COUNT(*) AS INTEGER) AS n_features, "
-            "CAST(SUM(u) AS BIGINT) AS sum_px, "
-            "CAST(SUM(v) AS BIGINT) AS sum_py, "
-            "CAST(SUM(doc_id) AS BIGINT) AS sum_ids "
-            "FROM px GROUP BY tile_id"
-        ),
-        # image_phash: closed-form recompute of the planted 63-bit
-        # hash (exact small product, no wrap on either engine) and the
-        # exact all-pairs Hamming filter
-        "image_phash": (
-            "WITH d AS (SELECT doc_id, "
-            "(doc_id // 4) * 81205437596873861 AS base, "
-            "CAST(CASE WHEN doc_id % 4 = 3 THEN 4 ELSE doc_id % 4 END "
-            "AS BIGINT) AS noise "
-            "FROM documents WHERE doc_id < 400), "
-            "h AS (SELECT doc_id, xor(base, noise) AS h FROM d) "
-            "SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
-            "CAST(bit_count(xor(a.h, b.h)) AS INTEGER) AS hamming, "
-            "a.h AS ph_a "
-            "FROM h a, h b WHERE a.doc_id < b.doc_id "
-            "AND bit_count(xor(a.h, b.h)) <= 3"
-        ),
-        # line_dedup: explode lines with ordinality, distinct-doc line
-        # census, NOT IN the hot set, ordered string_agg reassembly
-        "line_dedup": (
-            "WITH d AS (SELECT doc_id, text || chr(10) || "
-            "CASE WHEN doc_id % 2 = 0 "
-            "THEN 'standard footer boilerplate' "
-            "ELSE 'tail-' || CAST(doc_id AS VARCHAR) END AS text "
-            "FROM documents WHERE doc_id < 300), "
-            "l AS (SELECT doc_id, unnest(arr) AS line, "
-            "generate_subscripts(arr, 1) AS i "
-            "FROM (SELECT doc_id, string_split(text, chr(10)) AS arr "
-            "FROM d)), "
-            "hot AS (SELECT line FROM "
-            "(SELECT DISTINCT doc_id, line FROM l) "
-            "GROUP BY line HAVING COUNT(*) >= 3 "
-            "AND trim(line) <> ''), "  # blank lines are structure
-            "kept AS (SELECT doc_id, line, i FROM l "
-            "WHERE line NOT IN (SELECT line FROM hot)), "
-            "reb AS (SELECT doc_id, "
-            "string_agg(line, chr(10) ORDER BY i) AS clean_text, "
-            "COUNT(*) AS nk FROM kept GROUP BY doc_id) "
-            "SELECT d2.doc_id, "
-            "COALESCE(reb.clean_text, '') AS clean_text, "
-            "CAST(len(string_split(d2.text, chr(10))) AS INTEGER) "
-            "AS n_lines, "
-            "CAST(len(string_split(d2.text, chr(10))) "
-            "- COALESCE(reb.nk, 0) AS INTEGER) AS n_removed "
-            "FROM d d2 LEFT JOIN reb ON d2.doc_id = reb.doc_id"
-        ),
-        # span_dedup: token-8-gram census over distinct docs (same md5
-        # keys as Spark), coverage explode, anti join, ordered rebuild
-        "span_dedup": (
-            "WITH d AS (SELECT doc_id, text || ' ' || "
-            "CASE WHEN doc_id % 3 = 0 THEN "
-            "'all rights reserved this document is provided as is "
-            "without warranty of any kind either express or implied' "
-            "ELSE 'tail marker ' || CAST(doc_id AS VARCHAR) END "
-            "AS text FROM documents WHERE doc_id < 300), "
-            "t AS (SELECT doc_id, "
-            "regexp_split_to_array(trim(text), '\\s+') AS toks "
-            "FROM d), "
-            "g AS (SELECT doc_id, u.j AS j, u.h AS h FROM "
-            "(SELECT doc_id, unnest([{'j': j, 'h': "
-            "md5(array_to_string(toks[j:j+7], ' '))} "
-            "for j in range(1, len(toks) - 6)]) AS u "
-            "FROM t WHERE len(toks) >= 8)), "
-            "hot AS (SELECT h FROM "
-            "(SELECT DISTINCT doc_id, h FROM g) "
-            "GROUP BY h HAVING COUNT(*) >= 3), "
-            "cov AS (SELECT DISTINCT doc_id, pos FROM "
-            "(SELECT g.doc_id, unnest([g.j + k for k in "
-            "range(0, 8)]) AS pos FROM g JOIN hot USING (h))), "
-            "tok AS (SELECT doc_id, "
-            "generate_subscripts(toks, 1) AS pos, "
-            "unnest(toks) AS tk FROM t), "
-            "kept AS (SELECT tok.doc_id, pos, tk FROM tok "
-            "ANTI JOIN cov USING (doc_id, pos)), "
-            "reb AS (SELECT doc_id, "
-            "string_agg(tk, ' ' ORDER BY pos) AS clean_text, "
-            "COUNT(*) AS nk FROM kept GROUP BY doc_id) "
-            "SELECT t.doc_id, "
-            "CASE WHEN len(t.toks) = COALESCE(reb.nk, 0) "
-            "THEN d.text "  # nothing removed: original text untouched
-            "ELSE COALESCE(reb.clean_text, '') END AS clean_text, "
-            "CAST(len(t.toks) AS INTEGER) AS n_tokens, "
-            "CAST(len(t.toks) - COALESCE(reb.nk, 0) AS INTEGER) "
-            "AS n_removed "
-            "FROM t LEFT JOIN reb ON t.doc_id = reb.doc_id "
-            "JOIN d ON t.doc_id = d.doc_id"
-        ),
-        # lm_perplexity: trigram counts over the reference split,
-        # Laplace costs in integer milli-nats, BIGINT sums
-        "lm_perplexity": (
-            "WITH normed AS (SELECT doc_id, '##' || regexp_replace("
-            "regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), "
-            "' +', ' ', 'g') AS p FROM documents), "
-            "refg AS (SELECT unnest([substring(p, CAST(i AS INT), 3) "
-            "for i in range(1, len(p) - 1)]) AS gram "
-            "FROM normed WHERE doc_id >= 300), "
-            "c3 AS (SELECT gram, COUNT(*) AS c_gram FROM refg "
-            "GROUP BY gram), "
-            "c2 AS (SELECT substring(gram, 1, 2) AS ctx, "
-            "SUM(c_gram) AS c_ctx FROM c3 GROUP BY 1), "
-            "model AS (SELECT gram, c_gram, c_ctx FROM c3 "
-            "JOIN c2 ON substring(c3.gram, 1, 2) = c2.ctx), "
-            "dg AS (SELECT doc_id, gram, COUNT(*) AS occ FROM "
-            "(SELECT doc_id, unnest([substring(p, CAST(i AS INT), 3) "
-            "for i in range(1, len(p) - 1)]) AS gram "
-            "FROM normed WHERE doc_id < 200) GROUP BY doc_id, gram), "
-            "scored AS (SELECT doc_id, "
-            "CAST(SUM(occ) AS INTEGER) AS n_grams, "
-            "CAST(SUM(CAST(round(-ln("
-            "(CAST(COALESCE(c_gram, 0) AS DOUBLE) + 1.0) / "
-            "(CAST(COALESCE(c_ctx, 0) AS DOUBLE) + 38.0)"
-            ") * 1000000.0) AS BIGINT) * occ) AS BIGINT) "
-            "AS cost_milli, "
-            "CAST(SUM(CASE WHEN c_gram IS NULL THEN occ ELSE 0 END) "
-            "AS INTEGER) AS n_oov "
-            "FROM dg LEFT JOIN model USING (gram) GROUP BY doc_id) "
-            "SELECT d.doc_id, "
-            "CAST(COALESCE(s.n_grams, 0) AS INTEGER) AS n_grams, "
-            "CAST(COALESCE(s.cost_milli, 0) AS BIGINT) AS cost_milli, "
-            "CAST(COALESCE(s.n_oov, 0) AS INTEGER) AS n_oov "
-            "FROM (SELECT doc_id FROM documents WHERE doc_id < 200) d "
-            "LEFT JOIN scored s ON d.doc_id = s.doc_id"
-        ),
-        # doc_chunks: tokenize, chunk-count arithmetic (stride 32 =
-        # 40 - 8 overlap), list_slice per chunk index
-        "doc_chunks": (
-            "WITH t AS (SELECT doc_id, "
-            "regexp_split_to_array(trim(text), '\\s+') AS toks "
-            "FROM documents WHERE doc_id < 300), "
-            "c AS (SELECT doc_id, toks, CASE WHEN len(toks) <= 40 "
-            "THEN 1 ELSE CAST(ceil((len(toks) - 40) / 32.0) AS INT) "
-            "+ 1 END AS nc FROM t), "
-            "e AS (SELECT doc_id, toks, unnest(range(0, nc)) "
-            "AS chunk_idx FROM c) "
-            "SELECT doc_id, CAST(chunk_idx AS INTEGER) AS chunk_idx, "
-            "array_to_string(list_slice(toks, chunk_idx * 32 + 1, "
-            "chunk_idx * 32 + 40), ' ') AS chunk_text, "
-            "CAST(len(list_slice(toks, chunk_idx * 32 + 1, "
-            "chunk_idx * 32 + 40)) AS INTEGER) AS n_tokens FROM e"
-        ),
-        # mixture_sample: per-language quotas (0.5/0.2/default 0.1 of
-        # 200) by the shared hash rank
-        "mixture_sample": (
-            "WITH r AS (SELECT doc_id, lang, row_number() OVER ("
-            "PARTITION BY lang ORDER BY %s ASC, doc_id ASC) AS rn "
-            "FROM documents) "
-            "SELECT doc_id, lang FROM r WHERE rn <= "
-            "CASE lang WHEN 'de' THEN 40 WHEN 'en' THEN 100 "
-            "ELSE 20 END"
-            % kmv_hash_sql("CAST(doc_id AS VARCHAR)")
-        ),
-    }
+            "SELECT e.dst AS node, {p}.dist + e.w AS dist "
+            "FROM {p} JOIN e ON {p}.node = e.src) GROUP BY 1)".format(
+                r=r, p=prev,
+            )
+        )
+        prev = "d%d" % r
+    return (
+        "WITH n AS (SELECT CAST(range AS BIGINT) AS id "
+        "FROM range(144)), "
+        "e0 AS (SELECT id AS src, id + 1 AS dst, "
+        "1 + ((id // 12) * 7 + (id % 12) * 13) % 5 AS w "
+        "FROM n WHERE id % 12 < 11 "
+        "UNION ALL SELECT id, id + 12, "
+        "1 + ((id // 12) * 11 + (id % 12) * 3) % 7 "
+        "FROM n WHERE id // 12 < 11), "
+        "e AS (SELECT src, dst, w FROM e0 "
+        "UNION ALL SELECT dst, src, w FROM e0), "
+        "d0 AS (SELECT CAST(0 AS BIGINT) AS node, "
+        "CAST(0 AS BIGINT) AS dist "
+        "UNION ALL SELECT CAST(143 AS BIGINT), CAST(0 AS BIGINT)), "
+        + ", ".join(rounds) +
+        " SELECT node, dist FROM %s" % prev
+    )
 
 
-def oracle_sql() -> dict[str, str]:
-    return {
-        k: v
-        for k, v in _all_oracle_sql().items()
-        if k not in _FOLDED_QUERIES
-    }
+# grid_paths: integer distances + idempotent min relax =>
+# fixed-round CTE chain reaches the same fixpoint bit-level
+@query("grid_paths", oracle=_grid_paths_sql, folded=True)
+def _q_grid_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-source shortest paths (operators/graph.py) over a
+    deterministic 12x12 weighted grid, sources at opposite corners.
+    Integer weights make every distance an integer and min-folds
+    order-free, so the DuckDB twin — FIXED 24 chained relax CTEs
+    (>= the 22-hop diameter; extra rounds are no-ops, min is
+    idempotent) — reaches the same fixpoint bit-for-bit (the hilbert
+    chained-CTE discipline)."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        shortest_paths,
+    )
+
+    n = spark.range(144).select(
+        F.col("id"),
+        (F.col("id") / 12).cast("long").alias("i"),
+        (F.col("id") % 12).alias("j"),
+    )
+    right = n.where(F.col("j") < 11).select(
+        F.col("id").alias("src"),
+        (F.col("id") + 1).alias("dst"),
+        (F.lit(1) + (F.col("i") * 7 + F.col("j") * 13) % 5).alias("w"),
+    )
+    down = n.where(F.col("i") < 11).select(
+        F.col("id").alias("src"),
+        (F.col("id") + 12).alias("dst"),
+        (F.lit(1) + (F.col("i") * 11 + F.col("j") * 3) % 7).alias("w"),
+    )
+    edges = right.unionByName(down)
+    return shortest_paths(
+        edges, [0, 143], directed=False, max_rounds=30
+    )
 
 
-def extra_oracle_sql() -> dict[str, str]:
-    """Oracle twins for the folded queries (local parity gate only)."""
-    return {
-        k: v for k, v in _all_oracle_sql().items() if k in _FOLDED_QUERIES
-    }
+def _page_rank_sql() -> str:
+    scale, num, den, iters = 2 ** 40, 85, 100, 10
+    srcs = [i for i in range(50) if i % 7 != 0]
+    nodes = sorted(
+        set(srcs)
+        | {(3 * i + 1) % 50 for i in srcs}
+        | {(i * i + 2) % 50 for i in srcs}
+    )
+    n = len(nodes)
+    teleport = ((den - num) * scale) // (den * n)
+    rounds = []
+    prev = "r0"
+    for r in range(1, iters + 1):
+        # MATERIALIZED: each round reads the previous one TWICE
+        # (votes + dangling mass) — the grid_paths CTE discipline
+        rounds.append(
+            "r{r} AS MATERIALIZED (SELECT nd.node, nd.deg, "
+            "CAST({tp} + ({num} * (COALESCE(sv.sv, 0) + dg.dgl)) "
+            "// {den} AS BIGINT) AS pr FROM nd "
+            "LEFT JOIN (SELECT e.dst AS node, SUM(p.pr // p.deg) "
+            "AS sv FROM {p} p JOIN e ON p.node = e.src "
+            "WHERE p.deg > 0 GROUP BY 1) sv USING (node) "
+            "CROSS JOIN (SELECT COALESCE(SUM(pr), 0) // {n} AS dgl "
+            "FROM {p} WHERE deg = 0) dg)".format(
+                r=r, p=prev, tp=teleport, num=num, den=den, n=n,
+            )
+        )
+        prev = "r%d" % r
+    return (
+        "WITH e AS MATERIALIZED ("
+        "SELECT CAST(range AS BIGINT) AS src, "
+        "(range * 3 + 1) % 50 AS dst FROM range(50) "
+        "WHERE range % 7 <> 0 "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range * range + 2) % 50 FROM range(50) "
+        "WHERE range % 7 <> 0), "
+        "nd AS MATERIALIZED (SELECT n.node, "
+        "COALESCE(d.deg, 0) AS deg FROM "
+        "(SELECT DISTINCT node FROM (SELECT src AS node FROM e "
+        "UNION ALL SELECT dst FROM e)) n "
+        "LEFT JOIN (SELECT src AS node, COUNT(*) AS deg FROM e "
+        "GROUP BY 1) d USING (node)), "
+        "r0 AS MATERIALIZED (SELECT node, deg, "
+        "CAST(" + str(scale // n) + " AS BIGINT) AS pr FROM nd), "
+        + ", ".join(rounds)
+        + " SELECT node, pr FROM " + prev
+    )
+
+
+# page_rank: scaled-BIGINT ranks, truncating DIV everywhere
+# => order-free integers; chained CTEs mirror the update
+@query("page_rank", oracle=_page_rank_sql, folded=True)
+def _q_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact-integer PageRank (operators/graph.py:pagerank) over a
+    deterministic 50-node directed web graph with dangling nodes
+    (every id % 7 == 0 never links out). scale=2**40 BIGINT ranks
+    with truncating DIV at every division make all arithmetic
+    order-free integers, so the DuckDB twin — 10 chained MATERIALIZED
+    rank CTEs mirroring the update formula — lands on the same
+    integers bit-for-bit."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        pagerank,
+    )
+
+    ids = spark.range(50).where(F.col("id") % 7 != 0)
+    e1 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * 3 + 1) % 50).alias("dst"),
+    )
+    e2 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * F.col("id") + 2) % 50).alias("dst"),
+    )
+    pr = pagerank(
+        e1.unionByName(e2), iterations=10, scale=2 ** 40
+    )
+    return pr.select("node", F.col("rank").alias("pr"))
+
+
+def _ppr_sql() -> str:
+    scale, num, den, iters = 2 ** 40, 85, 100, 10
+    seeds = (1, 8, 15)
+    sn = len(seeds)
+    seed_pred = "node IN (1, 8, 15)"
+    tp = ((den - num) * scale) // (den * sn)
+    rounds = []
+    prev = "r0"
+    for r in range(1, iters + 1):
+        rounds.append(
+            "r{r} AS MATERIALIZED (SELECT nd.node, nd.deg, "
+            "CAST(CASE WHEN nd.{sp} THEN {tp} ELSE 0 END "
+            "+ ({num} * (COALESCE(sv.sv, 0) "
+            "+ CASE WHEN nd.{sp} THEN dg.dgl ELSE 0 END)) "
+            "// {den} AS BIGINT) AS pr FROM nd "
+            "LEFT JOIN (SELECT e.dst AS node, SUM(p.pr // p.deg) "
+            "AS sv FROM {p} p JOIN e ON p.node = e.src "
+            "WHERE p.deg > 0 GROUP BY 1) sv USING (node) "
+            "CROSS JOIN (SELECT COALESCE(SUM(pr), 0) // {sn} AS dgl "
+            "FROM {p} WHERE deg = 0) dg)".format(
+                r=r, p=prev, tp=tp, num=num, den=den,
+                sn=sn, sp=seed_pred,
+            )
+        )
+        prev = "r%d" % r
+    return (
+        "WITH e AS MATERIALIZED ("
+        "SELECT CAST(range AS BIGINT) AS src, "
+        "(range * 3 + 1) % 50 AS dst FROM range(50) "
+        "WHERE range % 7 <> 0 "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range * range + 2) % 50 FROM range(50) "
+        "WHERE range % 7 <> 0), "
+        "nd AS MATERIALIZED (SELECT n.node, "
+        "COALESCE(d.deg, 0) AS deg FROM "
+        "(SELECT DISTINCT node FROM (SELECT src AS node FROM e "
+        "UNION ALL SELECT dst FROM e)) n "
+        "LEFT JOIN (SELECT src AS node, COUNT(*) AS deg FROM e "
+        "GROUP BY 1) d USING (node)), "
+        "r0 AS MATERIALIZED (SELECT node, deg, "
+        "CAST(CASE WHEN " + seed_pred + " THEN "
+        + str(scale // sn) + " ELSE 0 END AS BIGINT) AS pr FROM nd), "
+        + ", ".join(rounds)
+        + " SELECT node, pr AS ppr FROM " + prev
+    )
+
+
+# ppr: same integers with a seed CASE on teleport + dangling
+@query("ppr", oracle=_ppr_sql, folded=True)
+def _q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PERSONALIZED PageRank (operators/graph.pagerank with seeds):
+    teleport + dangling mass concentrate on seeds {1, 8, 15} of the
+    same 50-node web graph as page_rank. Same exact-integer
+    discipline — the DuckDB twin adds a seed CASE to the teleport
+    and dangling terms and lands on the same BIGINTs."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        pagerank,
+    )
+
+    ids = spark.range(50).where(F.col("id") % 7 != 0)
+    e1 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * 3 + 1) % 50).alias("dst"),
+    )
+    e2 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * F.col("id") + 2) % 50).alias("dst"),
+    )
+    pr = pagerank(
+        e1.unionByName(e2),
+        iterations=10,
+        scale=2 ** 40,
+        seeds=[1, 8, 15],
+    )
+    return pr.select("node", F.col("rank").alias("ppr"))
+
+
+def _hits_sql() -> str:
+    scale, iters = 2 ** 20, 8
+    srcs = [i for i in range(50) if i % 7 != 0]
+    nodes = sorted(
+        set(srcs)
+        | {(3 * i + 1) % 50 for i in srcs}
+        | {(i * i + 2) % 50 for i in srcs}
+    )
+    n = len(nodes)
+    rounds = []
+    prev_h = "h0"
+    for r in range(1, iters + 1):
+        # push hub mass along edges -> raw auth; L1-renormalize to
+        # total ~ K with truncating //; then the mirror for hubs.
+        # MATERIALIZED: s{r}/u{r} are each read twice (norm + total)
+        rounds.append(
+            "s{r} AS MATERIALIZED (SELECT e.dst AS node, "
+            "SUM(p.hub) AS raw FROM {ph} p JOIN e ON p.node = e.src "
+            "GROUP BY 1), "
+            "a{r} AS MATERIALIZED (SELECT nd.node, "
+            "CAST(({k} * COALESCE(s.raw, 0)) // t.m AS BIGINT) "
+            "AS auth FROM nd LEFT JOIN s{r} s USING (node) "
+            "CROSS JOIN (SELECT SUM(raw) AS m FROM s{r}) t), "
+            "u{r} AS MATERIALIZED (SELECT e.src AS node, "
+            "SUM(a.auth) AS raw FROM a{r} a JOIN e ON a.node = e.dst "
+            "GROUP BY 1), "
+            "h{r} AS MATERIALIZED (SELECT nd.node, "
+            "CAST(({k} * COALESCE(u.raw, 0)) // t.m AS BIGINT) "
+            "AS hub FROM nd LEFT JOIN u{r} u USING (node) "
+            "CROSS JOIN (SELECT SUM(raw) AS m FROM u{r}) t)".format(
+                r=r, ph=prev_h, k=scale,
+            )
+        )
+        prev_h = "h%d" % r
+    return (
+        "WITH e AS MATERIALIZED ("
+        "SELECT CAST(range AS BIGINT) AS src, "
+        "(range * 3 + 1) % 50 AS dst FROM range(50) "
+        "WHERE range % 7 <> 0 "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range * range + 2) % 50 FROM range(50) "
+        "WHERE range % 7 <> 0), "
+        "nd AS MATERIALIZED (SELECT DISTINCT node FROM "
+        "(SELECT src AS node FROM e UNION ALL SELECT dst FROM e)), "
+        "h0 AS MATERIALIZED (SELECT node, "
+        "CAST(" + str(scale // n) + " AS BIGINT) AS hub FROM nd), "
+        + ", ".join(rounds)
+        + " SELECT h.node, h.hub, a.auth FROM h{i} h "
+        "JOIN a{i} a USING (node)".format(i=iters)
+    )
+
+
+@query("hits_scores", oracle=_hits_sql, folded=True)
+def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HITS hubs & authorities (operators/graph.py:hits) over the
+    same 50-node web graph as page_rank, exact-integer mode:
+    scale=2**20 BIGINT scores with the L1 renormalization done as
+    ``(K * raw) DIV SUM(raw)`` — integer multiply/sum/DIV only, so
+    the DuckDB twin (8 chained auth/hub CTE rounds mirroring the
+    push + renormalize) lands on the same integers bit-for-bit.
+    K is 2**20, not page_rank's 2**40: the renormalization product
+    needs scale**2 * total_edge_weight < 2**63 (see hits())."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        hits,
+    )
+
+    ids = spark.range(50).where(F.col("id") % 7 != 0)
+    e1 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * 3 + 1) % 50).alias("dst"),
+    )
+    e2 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * F.col("id") + 2) % 50).alias("dst"),
+    )
+    return hits(
+        e1.unionByName(e2), iterations=8, scale=2 ** 20
+    ).select("node", "hub", "auth")
+
+
+def _scc_sql() -> str:
+    rounds = 6
+    body, prev = [], "r0"
+    for r in range(1, rounds + 1):
+        body.append(
+            "r{r} AS MATERIALIZED (SELECT DISTINCT a.u, b.v "
+            "FROM {p} a JOIN {p} b ON a.v = b.u)".format(r=r, p=prev)
+        )
+        prev = "r%d" % r
+    return (
+        "WITH e AS MATERIALIZED ("
+        "SELECT range AS src, (range // 10) * 10 + (range + 1) % 10 "
+        "AS dst FROM range(60) WHERE (range // 10) % 2 = 0 "
+        "UNION ALL SELECT range, range + 10 FROM range(50) "
+        "WHERE range % 10 = 3 "
+        "UNION ALL SELECT * FROM (VALUES (13, 27), (25, 13)) "
+        "v(src, dst)), "
+        "nd AS (SELECT DISTINCT node FROM (SELECT src AS node FROM e "
+        "UNION ALL SELECT dst FROM e)), "
+        # identity rows make the closure reflexive, so doubling
+        # accumulates all path lengths (not just powers of two)
+        "r0 AS MATERIALIZED (SELECT src AS u, dst AS v FROM e "
+        "UNION SELECT node, node FROM nd), "
+        + ", ".join(body)
+        + " SELECT CAST(f.u AS BIGINT) AS node, "
+        "CAST(MIN(f.v) AS BIGINT) AS scc FROM " + prev + " f "
+        "JOIN " + prev + " b ON f.u = b.v AND f.v = b.u "
+        "GROUP BY f.u"
+    )
+
+
+@query("scc_labels", oracle=_scc_sql, folded=True)
+def _q_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Strongly connected components (operators/graph.py:
+    strongly_connected_components) over a deterministic 60-node
+    directed graph: 10-cycles on even decades, chain links between
+    decades, and a side pair pulling node 13 into the 20s cycle.
+    SCC labels are min-member — a pure function of the graph — so
+    the DuckDB twin derives them INDEPENDENTLY of the algorithm via
+    a doubled transitive closure (6 rounds cover paths <= 64) and
+    mutual-reachability min."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        strongly_connected_components,
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    i = F.col("id")
+    cyc = (
+        spark.range(60)
+        .where((i / 10).cast("long") % 2 == 0)
+        .select(
+            i.alias("src"),
+            ((i / 10).cast("long") * 10 + (i + 1) % 10).alias("dst"),
+        )
+    )
+    chain = (
+        spark.range(50)
+        .where(i % 10 == 3)
+        .select(i.alias("src"), (i + 10).alias("dst"))
+    )
+    extra = local_df(spark, [(13, 27), (25, 13)], ["src", "dst"])
+    return strongly_connected_components(
+        cyc.unionByName(chain).unionByName(extra)
+    )
+
+
+def _triangles_sql() -> str:
+    return (
+        "WITH e0 AS ("
+        "SELECT CAST(range AS BIGINT) AS src, "
+        "(range + 1) % 48 AS dst FROM range(48) "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range + 2) % 48 FROM range(48) "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range * 7 + 3) % 48 FROM range(48)), "
+        "canon AS MATERIALIZED (SELECT DISTINCT "
+        "LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
+        "FROM e0 WHERE src <> dst), "
+        "deg AS MATERIALIZED (SELECT node, COUNT(*) AS degree "
+        "FROM (SELECT a AS node FROM canon "
+        "UNION ALL SELECT b FROM canon) GROUP BY 1), "
+        "orient AS MATERIALIZED (SELECT "
+        "CASE WHEN da.degree < db.degree OR (da.degree = db.degree "
+        "AND a < b) THEN a ELSE b END AS u, "
+        "CASE WHEN da.degree < db.degree OR (da.degree = db.degree "
+        "AND a < b) THEN b ELSE a END AS v "
+        "FROM canon JOIN deg da ON da.node = canon.a "
+        "JOIN deg db ON db.node = canon.b), "
+        "tri AS MATERIALIZED (SELECT o1.u AS u, o1.v AS v, o2.v AS w "
+        "FROM orient o1 JOIN orient o2 ON o1.u = o2.u "
+        "AND o1.v < o2.v "
+        "JOIN canon c ON c.a = o1.v AND c.b = o2.v), "
+        "tc AS (SELECT node, COUNT(*) AS triangles FROM "
+        "(SELECT u AS node FROM tri UNION ALL SELECT v FROM tri "
+        "UNION ALL SELECT w FROM tri) GROUP BY 1) "
+        "SELECT deg.node, deg.degree, "
+        "CAST(COALESCE(tc.triangles, 0) AS BIGINT) AS triangles, "
+        "CASE WHEN deg.degree >= 2 THEN "
+        "2.0 * COALESCE(tc.triangles, 0) / "
+        "(CAST(deg.degree AS DOUBLE) * "
+        "(CAST(deg.degree AS DOUBLE) - 1.0)) "
+        "ELSE 0.0 END AS clustering "
+        "FROM deg LEFT JOIN tc USING (node)"
+    )
+
+
+# triangles: integer joins + ONE division of exact integers
+@query("triangles", oracle=_triangles_sql, folded=True)
+def _q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact triangle counts + clustering coefficients
+    (operators/graph.py:triangle_counts) over a deterministic
+    48-node circulant graph (ring + 2-chords + 7x+3 chords, plus
+    duplicate/reversed inputs the canonicalization must absorb).
+    Counts are integers and the coefficient is ONE division of
+    exact integers, so the DuckDB twin (same orient/wedge/close
+    joins) matches bit-for-bit."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        triangle_counts,
+    )
+
+    ids = spark.range(48)
+    ring = ids.select(
+        F.col("id").alias("src"), ((F.col("id") + 1) % 48).alias("dst")
+    )
+    chord2 = ids.select(
+        F.col("id").alias("src"), ((F.col("id") + 2) % 48).alias("dst")
+    )
+    chord7 = ids.select(
+        F.col("id").alias("src"),
+        ((F.col("id") * 7 + 3) % 48).alias("dst"),
+    )
+    return triangle_counts(
+        ring.unionByName(chord2).unionByName(chord7)
+    )
+
+
+def _synth_html_col() -> "F.Column":
+    """Deterministic html per id — the Spark half of the shared
+    fixture; _synth_html_sql is the character-identical DuckDB half
+    (long->string casts print identically on both engines, the
+    functions/points.py discipline)."""
+    i = F.col("id")
+    return F.concat(
+        F.lit("<html><head><title>Page "),
+        i.cast("string"),
+        F.lit(
+            " &amp; co</title><style>h1{x:y}</style></head>"
+            "<body><!-- c --><script>var a=1;</script><h1>Doc "
+        ),
+        i.cast("string"),
+        F.lit("</h1>\n<p>alpha &lt;b&gt; "),
+        (i * i % 97).cast("string"),
+        F.lit('</p><a href="https://example-'),
+        (i % 7).cast("string"),
+        F.lit(".test/page/"),
+        (i % 50).cast("string"),
+        F.lit('">l</a><a href="/rel">r</a>'),
+        F.when(
+            i % 3 == 0,
+            F.lit('<a href="https://hub.test/h">hub</a>'),
+        ).otherwise(F.lit("")),
+        F.lit("</body></html>"),
+    )
+
+
+def _synth_html_sql() -> str:
+    return (
+        "'<html><head><title>Page ' || id::VARCHAR || "
+        "' &amp; co</title><style>h1{x:y}</style></head>"
+        "<body><!-- c --><script>var a=1;</script><h1>Doc ' || "
+        "id::VARCHAR || '</h1>\n<p>alpha &lt;b&gt; ' || "
+        "(id * id % 97)::VARCHAR || "
+        "'</p><a href=\"https://example-' || (id % 7)::VARCHAR || "
+        "'.test/page/' || (id % 50)::VARCHAR || "
+        "'\">l</a><a href=\"/rel\">r</a>' || "
+        "CASE WHEN id % 3 = 0 THEN "
+        "'<a href=\"https://hub.test/h\">hub</a>' ELSE '' END || "
+        "'</body></html>'"
+    )
+
+
+def _html_extract_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import html as H
+
+    return (
+        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
+        "FROM range(240)), "
+        "pages AS (SELECT id, "
+        + _synth_html_sql()
+        + " AS html FROM ids) "
+        "SELECT id, %s AS title, %s AS text, "
+        "CAST(len(%s) AS BIGINT) AS n_links FROM pages"
+        % (
+            H.html_title_sql("html"),
+            H.html_text_sql("html"),
+            H.html_links_sql("html"),
+        )
+    )
+
+
+# html/link extraction: Java∩RE2 regex subset + identical
+# string synthesis => character-identical on both engines
+# Plan: HTML text/title/link extraction is JVM regexp columns riding the
+# scan. ZERO exchanges, zero Python evals: the shape that makes the
+# extraction stage free at corpus scale.
+@query("html_extract", oracle=_html_extract_sql, folded=True, exchanges=0)
+def _q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HTML text/title/link extraction (functions/html.py): visible
+    text, entity decode (&amp; last), script/style/comment removal,
+    whitespace squeeze, double-quoted href harvest — all JVM regexp
+    columns restricted to the Java∩RE2 regex subset, so the DuckDB
+    twin running the SAME patterns is character-identical."""
+    from pure_python_geospatial_export_spark.functions import (
+        html as H,
+    )
+
+    pages = spark.range(240).select(
+        "id", _synth_html_col().alias("html")
+    )
+    h = F.col("html")
+    return pages.select(
+        "id",
+        H.html_title(h).alias("title"),
+        H.html_text(h).alias("text"),
+        F.size(H.html_links(h)).cast("long").alias("n_links"),
+    )
+
+
+def _link_graph_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import html as H
+    from pure_python_geospatial_export_spark.functions import urls as U
+
+    return (
+        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
+        "FROM range(240)), "
+        "pages AS (SELECT 'https://site-' || "
+        "(id % 9)::VARCHAR || '.test/p/' || "
+        "id::VARCHAR AS url, "
+        + _synth_html_sql()
+        + " AS html FROM ids), "
+        "hrefs AS (SELECT url, unnest(%s) AS href FROM pages), "
+        "edges AS (SELECT %s AS src_host, %s AS dst_host FROM hrefs "
+        "WHERE regexp_matches(href, '^https?://')) "
+        "SELECT src_host, dst_host, COUNT(*) AS n_links FROM edges "
+        "WHERE src_host <> '' AND dst_host <> '' "
+        "GROUP BY 1, 2"
+        % (
+            H.html_links_sql("html"),
+            U.url_host_sql("url"),
+            U.url_host_sql("href"),
+        )
+    )
+
+
+# Plan: pages -> hrefs -> host edges is a narrow projection + explode; the
+# edge-count aggregate is the ONLY exchange and Python never appears.
+@query("link_graph", oracle=_link_graph_sql, folded=True, exchanges=1)
+def _q_link_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Host-level link graph (operators/web.host_link_edges): per-page
+    hrefs -> absolute-only filter -> (src_host, dst_host) edges ->
+    count per pair. The stage PageRank consumes (page_rank oracles the
+    iteration itself); relative hrefs must drop, multi-links count."""
+    from pure_python_geospatial_export_spark.operators.web import (
+        host_link_edges,
+    )
+
+    pages = spark.range(240).select(
+        F.concat(
+            F.lit("https://site-"),
+            (F.col("id") % 9).cast("string"),
+            F.lit(".test/p/"),
+            F.col("id").cast("string"),
+        ).alias("url"),
+        _synth_html_col().alias("html"),
+    )
+    return (
+        host_link_edges(pages)
+        .groupBy(
+            F.col("src").alias("src_host"),
+            F.col("dst").alias("dst_host"),
+        )
+        .agg(F.count(F.lit(1)).alias("n_links"))
+    )
+
+
+def _anchor_index_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import html as H
+    from pure_python_geospatial_export_spark.functions import urls as U
+
+    # plain concatenation: the fixture literals are full of SQL '%'
+    return (
+        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
+        "FROM range(240)), "
+        "pages AS (SELECT 'https://site-' || (id % 9)::VARCHAR || "
+        "'.test/p/' || id::VARCHAR AS url, "
+        "'<a href=\"https://t-' || (id % 5)::VARCHAR || "
+        "'.test/a\">Buy <b>cheap</b> widget ' || (id % 4)::VARCHAR || "
+        "'</a><a href=\"/local\">home page</a>' || "
+        "CASE WHEN id % 2 = 0 THEN '<a href=\"https://t-' || "
+        "((id + 1) % 5)::VARCHAR || "
+        "'.test/b\">widgets &amp; gadgets now</a>' ELSE '' END || "
+        "CASE WHEN id % 6 = 1 THEN "
+        "'<a href=\"https://img.test/i\"><img src=\"x.png\"></a>' "
+        "ELSE '' END AS html FROM ids), "
+        "an AS (SELECT url, unnest(" + H.html_anchors_sql("html")
+        + ") AS a FROM pages), "
+        "hr AS (SELECT url, a, " + H.anchor_href_sql("a")
+        + " AS href FROM an), "
+        "ed AS (SELECT " + U.url_host_sql("url") + " AS src, "
+        + U.url_host_sql("href") + " AS dst, "
+        + H.anchor_text_sql("a") + " AS anchor FROM hr "
+        "WHERE regexp_matches(href, '^https?://')), "
+        "tm AS (SELECT dst, lower(t) AS term FROM "
+        "(SELECT dst, unnest(string_split(anchor, ' ')) AS t "
+        "FROM ed WHERE src <> '' AND dst <> '') WHERE t <> '') "
+        "SELECT dst, term, COUNT(*) AS n FROM tm GROUP BY 1, 2 "
+        "HAVING COUNT(*) >= 20"
+    )
+
+
+# Plan: anchors -> (dst, term) counts. The term aggregate is the ONLY
+# exchange; extraction/split stay JVM regexp columns at scan width.
+@query("anchor_index", oracle=_anchor_index_sql, folded=True, exchanges=1)
+def _q_anchor_index(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-target-host anchor-term index (operators/web.anchor_terms):
+    whole <a> elements -> (src_host, dst_host, anchor text) ->
+    lowercased whitespace terms counted per target, pruned below
+    min_count. The DuckDB twin unnests the same Java∩RE2 anchor
+    regexes and recomputes the split/count — integer counts, so the
+    compare is exact."""
+    from pure_python_geospatial_export_spark.operators.web import (
+        anchor_terms,
+    )
+
+    i = F.col("id")
+    pages = spark.range(240).select(
+        F.concat(
+            F.lit("https://site-"),
+            (i % 9).cast("string"),
+            F.lit(".test/p/"),
+            i.cast("string"),
+        ).alias("url"),
+        F.concat(
+            F.lit('<a href="https://t-'),
+            (i % 5).cast("string"),
+            F.lit('.test/a">Buy <b>cheap</b> widget '),
+            (i % 4).cast("string"),
+            F.lit('</a><a href="/local">home page</a>'),
+            F.when(
+                i % 2 == 0,
+                F.concat(
+                    F.lit('<a href="https://t-'),
+                    ((i + 1) % 5).cast("string"),
+                    F.lit('.test/b">widgets &amp; gadgets now</a>'),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                i % 6 == 1,
+                F.lit('<a href="https://img.test/i">'
+                      '<img src="x.png"></a>'),
+            ).otherwise(F.lit("")),
+        ).alias("html"),
+    )
+    return anchor_terms(pages, min_count=20)
+
+
+def _redirect_resolve_sql() -> str:
+    rounds = 5  # ceil(log2(32)) — mirrors resolve_redirects
+    body = []
+    prev = "p0"
+    for r in range(1, rounds + 1):
+        body.append(
+            "p{r} AS MATERIALIZED (SELECT a.node, b.ptr, "
+            "a.h + b.h AS h FROM {p} a JOIN {p} b "
+            "ON a.ptr = b.node)".format(r=r, p=prev)
+        )
+        prev = "p%d" % r
+    return (
+        "WITH e AS MATERIALIZED ("
+        "SELECT 'u' || range::VARCHAR AS src, "
+        "'u' || (range + 1)::VARCHAR AS dst FROM range(100) "
+        "WHERE range % 10 < 6 "
+        "UNION ALL SELECT * FROM (VALUES "
+        "('c200','c201'), ('c201','c202'), ('c202','c200'), "
+        "('s300','s300'), ('into','c200'), "
+        "('m400','u2'), ('m400','u1')) v(src, dst)), "
+        "m AS MATERIALIZED (SELECT src AS node, MIN(dst) AS ptr "
+        "FROM e GROUP BY 1), "
+        "p0 AS MATERIALIZED (SELECT node, ptr, CAST(1 AS BIGINT) "
+        "AS h FROM m UNION ALL "
+        "SELECT t.node, t.node, 0 FROM (SELECT DISTINCT ptr AS node "
+        "FROM m WHERE ptr NOT IN (SELECT node FROM m)) t), "
+        + ", ".join(body)
+        + " SELECT p.node AS src, "
+        "CASE WHEN ok THEN p.ptr END AS final, "
+        "CASE WHEN ok THEN p.h END AS n_hops, ok AS resolved FROM "
+        "(SELECT p.*, c.node IS NULL AND p.h <= 32 AS ok FROM "
+        + prev + " p LEFT JOIN (SELECT DISTINCT node FROM m) c "
+        "ON p.ptr = c.node WHERE p.node IN (SELECT node FROM m)) p"
+    )
+
+
+@query("redirect_resolve", oracle=_redirect_resolve_sql, folded=True)
+def _q_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Redirect-chain resolution (operators/web.resolve_redirects):
+    pointer DOUBLING with exact hop counts over a deterministic url
+    redirect table — chains up to 6 hops, a 3-cycle, a self-redirect,
+    a chain feeding the cycle, and a conflicting src (min-dst rule).
+    Equality joins + integer adds only, so the DuckDB twin running
+    the same 5 doubling rounds lands on identical rows."""
+    from pure_python_geospatial_export_spark.operators.web import (
+        resolve_redirects,
+    )
+
+    i = F.col("id")
+    u = lambda c: F.concat(F.lit("u"), c.cast("string"))  # noqa: E731
+    chains = (
+        spark.range(100)
+        .where(i % 10 < 6)
+        .select(u(i).alias("src"), u(i + 1).alias("dst"))
+    )
+    from pure_python_geospatial_export_spark.session import local_df
+
+    extras = local_df(
+        spark,
+        [
+            ("c200", "c201"), ("c201", "c202"), ("c202", "c200"),
+            ("s300", "s300"),
+            ("into", "c200"),
+            ("m400", "u2"), ("m400", "u1"),
+        ],
+        ["src", "dst"],
+    )
+    return resolve_redirects(chains.unionByName(extras), max_hops=32)
+
+
+def _robots_gate_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import urls as U
+
+    return (
+        "WITH rb AS (SELECT 'h' || range::VARCHAR || '.test' AS host, "
+        "'# policy ' || range::VARCHAR || chr(10) || "
+        "'User-agent: *' || chr(10) || "
+        "'Disallow: /p' || range::VARCHAR || '/' || chr(10) || "
+        "'Allow: /p' || range::VARCHAR || '/ok' || chr(10) || "
+        "'Disallow: /tmp' || chr(10) || "
+        "CASE WHEN range % 2 = 0 THEN chr(10) || "
+        "'User-agent: corpusbot' || chr(10) || "
+        "CASE WHEN range % 4 = 0 THEN 'Disallow: /' "
+        "ELSE 'Disallow:' END || chr(10) ELSE '' END || "
+        "'Crawl-delay: 7' || chr(10) AS robots FROM range(5)), "
+        "ls AS (SELECT host, generate_subscripts(l, 1) AS ln, "
+        "unnest(l) AS raw FROM (SELECT host, "
+        "string_split(robots, chr(10)) AS l FROM rb)), "
+        "fl AS (SELECT host, ln, "
+        "lower(regexp_extract(line, '^[ \\t]*([A-Za-z-]+)[ \\t]*:(.*)$', 1)) "
+        "AS field, "
+        "trim(regexp_extract(line, '^[ \\t]*([A-Za-z-]+)[ \\t]*:(.*)$', 2)) "
+        "AS value FROM (SELECT host, ln, "
+        "regexp_replace(raw, '#.*$', '') AS line FROM ls)), "
+        # EVERY field line joins record numbering (a directive ends
+        # a User-agent run); rule filtering happens after, in rl
+        "kept AS (SELECT * FROM fl WHERE field <> ''), "
+        "st AS (SELECT host, ln, field, value, "
+        "CASE WHEN field = 'user-agent' AND COALESCE("
+        "lag(field = 'user-agent') OVER "
+        "(PARTITION BY host ORDER BY ln) = false, true) "
+        "THEN 1 ELSE 0 END AS strt FROM kept), "
+        "recs AS (SELECT host, ln, field, value, "
+        "SUM(strt) OVER (PARTITION BY host ORDER BY ln "
+        "ROWS UNBOUNDED PRECEDING) AS rec FROM st), "
+        "agents AS (SELECT DISTINCT host, rec, lower(value) AS agent "
+        "FROM recs WHERE field = 'user-agent'), "
+        "rl AS (SELECT host, rec, "
+        "(field = 'allow' OR value = '') AS allow, value AS path "
+        "FROM recs WHERE field IN ('allow', 'disallow')), "
+        "rules AS (SELECT a.host, a.agent, r.allow, r.path "
+        "FROM agents a JOIN rl r USING (host, rec) "
+        "UNION ALL SELECT host, agent, true, '' FROM agents), "
+        "ex AS (SELECT DISTINCT host FROM rules "
+        "WHERE agent = 'corpusbot'), "
+        "app AS (SELECT r.host, r.allow, r.path FROM rules r "
+        "LEFT JOIN (SELECT host, true AS e FROM ex) x USING (host) "
+        "WHERE CASE WHEN x.e IS NOT NULL "
+        "THEN r.agent = 'corpusbot' ELSE r.agent = '*' END), "
+        "fr AS (SELECT 'https://h' || (range % 6)::VARCHAR || "
+        "'.test' || CASE range % 5 "
+        "WHEN 0 THEN '/p' || (range % 6)::VARCHAR || '/x' "
+        "WHEN 1 THEN '/p' || (range % 6)::VARCHAR || '/ok/y' "
+        "WHEN 2 THEN '/tmpfile' WHEN 3 THEN '' "
+        "ELSE '/q/' || range::VARCHAR END AS url FROM range(240)), "
+        "u AS (SELECT url, " + U.url_host_sql("url") + " AS host, "
+        + U.url_path_sql("url") + " AS p FROM fr), "
+        "hits AS (SELECT url, max(struct_pack(l := length(path), "
+        "a := allow)) AS win FROM u JOIN app USING (host) "
+        "WHERE starts_with(p, path) GROUP BY url) "
+        "SELECT u.url, u.host, "
+        "COALESCE(h.win.a, true) AS allowed FROM u "
+        "LEFT JOIN hits h USING (url)"
+    )
+
+
+@query("robots_gate", oracle=_robots_gate_sql, folded=True)
+def _q_robots_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Robots-exclusion crawl gate (operators/robots.py): per-host
+    robots.txt parse (records, agent groups, empty-Disallow
+    sentinel) + longest-prefix-match frontier gating for agent
+    'corpusbot'. Even-k hosts name the agent exactly (their record
+    shields it from '*'); odd hosts fall back to '*'. The DuckDB
+    twin recomputes the WHOLE parse->select->match pipeline with the
+    same windows and struct-max tie-break."""
+    from pure_python_geospatial_export_spark.operators.robots import (
+        crawl_allowed,
+        parse_robots,
+    )
+
+    nl = F.lit("\n")
+    k = F.col("id").cast("string")
+    robots = spark.range(5).select(
+        F.concat(F.lit("h"), k, F.lit(".test")).alias("host"),
+        F.concat(
+            F.lit("# policy "), k, nl,
+            F.lit("User-agent: *"), nl,
+            F.lit("Disallow: /p"), k, F.lit("/"), nl,
+            F.lit("Allow: /p"), k, F.lit("/ok"), nl,
+            F.lit("Disallow: /tmp"), nl,
+            F.when(
+                F.col("id") % 2 == 0,
+                F.concat(
+                    nl, F.lit("User-agent: corpusbot"), nl,
+                    F.when(F.col("id") % 4 == 0,
+                           F.lit("Disallow: /")).otherwise(
+                        F.lit("Disallow:")
+                    ), nl,
+                ),
+            ).otherwise(F.lit("")),
+            F.lit("Crawl-delay: 7"), nl,
+        ).alias("robots"),
+    )
+    i = F.col("id")
+    h = (i % 6).cast("string")  # h5 has NO robots -> default allow
+    frontier = spark.range(240).select(
+        F.concat(
+            F.lit("https://h"), h, F.lit(".test"),
+            F.when(i % 5 == 0, F.concat(F.lit("/p"), h, F.lit("/x")))
+            .when(i % 5 == 1,
+                  F.concat(F.lit("/p"), h, F.lit("/ok/y")))
+            .when(i % 5 == 2, F.lit("/tmpfile"))
+            .when(i % 5 == 3, F.lit(""))
+            .otherwise(F.concat(F.lit("/q/"), i.cast("string"))),
+        ).alias("url")
+    )
+    return crawl_allowed(frontier, parse_robots(robots), "corpusbot")
+
+
+def _crawl_diff_sql() -> str:
+    return (
+        "WITH o AS (SELECT 'u' || range::VARCHAR AS url, "
+        "'f' || (range * range % 31)::VARCHAR AS fp_old "
+        "FROM range(300) WHERE range % 7 <> 0), "
+        "n AS (SELECT 'u' || range::VARCHAR AS url, "
+        "'f' || ((range * range + CASE WHEN range % 4 = 0 THEN 1 "
+        "ELSE 0 END) % 31)::VARCHAR AS fp_new "
+        "FROM range(300) WHERE range % 5 <> 0) "
+        "SELECT COALESCE(o.url, n.url) AS url, "
+        "CASE WHEN o.url IS NULL THEN 'added' "
+        "WHEN n.url IS NULL THEN 'removed' "
+        "WHEN fp_old IS NOT DISTINCT FROM fp_new THEN 'unchanged' "
+        "ELSE 'changed' END AS status, fp_old, fp_new "
+        "FROM o FULL OUTER JOIN n USING (url)"
+    )
+
+
+@query("crawl_diff", oracle=_crawl_diff_sql, folded=True)
+def _q_crawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Crawl snapshot diff (operators/crawl.snapshot_diff): two
+    deterministic snapshots of one URL space — disjoint membership
+    (added/removed) plus fingerprint drift on id % 4 == 0
+    (changed). The DuckDB twin is the same presence-flag full-outer
+    join with IS NOT DISTINCT FROM."""
+    from pure_python_geospatial_export_spark.operators.crawl import (
+        snapshot_diff,
+    )
+
+    i = F.col("id")
+    u = F.concat(F.lit("u"), i.cast("string"))
+    old = (
+        spark.range(300)
+        .where(i % 7 != 0)
+        .select(
+            u.alias("url"),
+            F.concat(F.lit("f"), (i * i % 31).cast("string")).alias(
+                "fp"
+            ),
+        )
+    )
+    new = (
+        spark.range(300)
+        .where(i % 5 != 0)
+        .select(
+            u.alias("url"),
+            F.concat(
+                F.lit("f"),
+                ((i * i + (i % 4 == 0).cast("long")) % 31).cast(
+                    "string"
+                ),
+            ).alias("fp"),
+        )
+    )
+    return snapshot_diff(old, new)
+
+
+def _frontier_batches_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import urls as U
+
+    return (
+        "WITH fr AS (SELECT 'https://h' || (range % 7)::VARCHAR || "
+        "'.test/p' || (range * 13 % 300)::VARCHAR AS url "
+        "FROM range(300)), "
+        "u AS (SELECT url, " + U.url_host_sql("url")
+        + " AS host FROM fr) "
+        "SELECT url, host, CAST((row_number() OVER "
+        "(PARTITION BY host ORDER BY url) - 1) // 8 AS BIGINT) "
+        "AS batch FROM u"
+    )
+
+
+# Plan: the politeness window rides its own host exchange. One hash
+# exchange, no Python, no extra sort-shuffles.
+@query("frontier_batches", oracle=_frontier_batches_sql, folded=True,
+       exchanges=1)
+def _q_frontier_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Politeness frontier batching (operators/crawl.
+    frontier_batches): per-host fetch waves of 8, deterministic by
+    url order. Window rides the host exchange; the DuckDB twin is
+    the same row_number arithmetic."""
+    from pure_python_geospatial_export_spark.operators.crawl import (
+        frontier_batches,
+    )
+
+    i = F.col("id")
+    fr = spark.range(300).select(
+        F.concat(
+            F.lit("https://h"),
+            (i % 7).cast("string"),
+            F.lit(".test/p"),
+            (i * 13 % 300).cast("string"),
+        ).alias("url")
+    )
+    return frontier_batches(fr, per_host=8)
+
+
+def _sitemap_urls_sql() -> str:
+    from pure_python_geospatial_export_spark.functions.html import (
+        _decode_entities_sql,
+    )
+
+    loc = (
+        "nullif(" + _decode_entities_sql(
+            "trim(regexp_extract(b, '(?is)<loc>(.*?)</loc>', 1))"
+        ) + ", '')"
+    )
+    lastmod = (
+        "nullif(trim(regexp_extract(b, "
+        "'(?is)<lastmod>(.*?)</lastmod>', 1)), '')"
+    )
+    return (
+        "WITH blobs AS (SELECT 'h' || range::VARCHAR || '.test' "
+        "AS host, '<urlset>' || "
+        "'<url><loc>https://h' || range::VARCHAR || "
+        "'.test/a?x=1&amp;y=' || range::VARCHAR || '</loc>' || "
+        "'<lastmod>2026-01-' || "
+        "lpad((range % 28 + 1)::VARCHAR, 2, '0') || "
+        "'</lastmod></url>' || "
+        "'<url><loc> https://h' || range::VARCHAR || "
+        "'.test/b </loc></url>' || "
+        "CASE WHEN range % 3 = 0 THEN "
+        "'<url><lastmod>2025-12-31</lastmod></url>' ELSE '' END || "
+        "'</urlset>' || "
+        "CASE WHEN range % 4 = 0 THEN "
+        "'<sitemapindex><sitemap><loc>https://h' || range::VARCHAR "
+        "|| '.test/maps/child.xml</loc></sitemap></sitemapindex>' "
+        "ELSE '' END AS xml FROM range(12)), "
+        "ub AS (SELECT host, 'url' AS kind, unnest("
+        "regexp_extract_all(xml, '(?is)<url>.*?</url>', 0)) AS b "
+        "FROM blobs), "
+        "mb AS (SELECT host, 'sitemap' AS kind, unnest("
+        "regexp_extract_all(xml, '(?is)<sitemap>.*?</sitemap>', 0)) "
+        "AS b FROM blobs), "
+        "allb AS (SELECT * FROM ub UNION ALL SELECT * FROM mb) "
+        "SELECT host, kind, " + loc + " AS loc, " + lastmod
+        + " AS lastmod FROM allb WHERE " + loc + " IS NOT NULL"
+    )
+
+
+# Plan: sitemap block harvest + loc/lastmod extraction is JVM regexp
+# riding the scan on both union branches. ZERO exchanges, zero Python.
+@query("sitemap_urls", oracle=_sitemap_urls_sql, folded=True, exchanges=0)
+def _q_sitemap_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sitemap/sitemap-index parsing (operators/crawl.
+    sitemap_entries): per-host XML blobs -> (host, kind, loc,
+    lastmod) entries — entity-decoded locs, NULL lastmod when
+    absent, loc-less entries dropped. The DuckDB twin unnests the
+    same Java∩RE2 block patterns."""
+    from pure_python_geospatial_export_spark.operators.crawl import (
+        sitemap_entries,
+    )
+
+    i = F.col("id")
+    k = i.cast("string")
+    blobs = spark.range(12).select(
+        F.concat(F.lit("h"), k, F.lit(".test")).alias("host"),
+        F.concat(
+            F.lit("<urlset>"),
+            F.lit("<url><loc>https://h"), k,
+            F.lit(".test/a?x=1&amp;y="), k, F.lit("</loc>"),
+            F.lit("<lastmod>2026-01-"),
+            F.lpad((i % 28 + 1).cast("string"), 2, "0"),
+            F.lit("</lastmod></url>"),
+            F.lit("<url><loc> https://h"), k,
+            F.lit(".test/b </loc></url>"),
+            F.when(i % 3 == 0,
+                   F.lit("<url><lastmod>2025-12-31</lastmod></url>"))
+            .otherwise(F.lit("")),
+            F.lit("</urlset>"),
+            F.when(
+                i % 4 == 0,
+                F.concat(
+                    F.lit("<sitemapindex><sitemap><loc>https://h"),
+                    k,
+                    F.lit(".test/maps/child.xml</loc></sitemap>"
+                          "</sitemapindex>"),
+                ),
+            ).otherwise(F.lit("")),
+        ).alias("xml"),
+    )
+    return sitemap_entries(blobs)
+
+
+def _page_links_sql() -> str:
+    from pure_python_geospatial_export_spark.functions import html as H
+    from pure_python_geospatial_export_spark.functions import urls as U
+
+    return (
+        "WITH ids AS (SELECT CAST(range AS BIGINT) AS id "
+        "FROM range(240)), "
+        "pages AS (SELECT 'https://site-' || (id % 9)::VARCHAR || "
+        "'.test/d' || (id % 5)::VARCHAR || '/cur.html' AS url, "
+        "'<a href=\"p' || (id % 7)::VARCHAR || '.html\">n</a>' || "
+        "'<a href=\"../up/' || (id % 3)::VARCHAR || '\">u</a>' || "
+        "'<a href=\"#frag\">f</a>' || "
+        "'<a href=\"mailto:a@b.test\">m</a>' || "
+        "'<a href=\"?page=' || id::VARCHAR || '\">q</a>' || "
+        "CASE WHEN id % 4 = 0 THEN '<a href=\"https://ext-' || "
+        "(id % 4)::VARCHAR || '.test/z#sec\">e</a>' ELSE '' END || "
+        "CASE WHEN id % 6 = 1 THEN "
+        "'<a href=\"//cdn.test/lib.js\">c</a>' ELSE '' END "
+        "AS html FROM ids), "
+        "hrefs AS (SELECT url AS src, unnest("
+        + H.html_links_sql("html") + ") AS href FROM pages) "
+        "SELECT src, dst FROM (SELECT src, "
+        + U.resolve_href_sql("src", "href")
+        + " AS dst FROM hrefs) WHERE dst IS NOT NULL"
+    )
+
+
+@query("page_links", oracle=_page_links_sql, folded=True)
+def _q_page_links(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Page-level link graph (operators/web.page_link_edges): every
+    href RESOLVED against its page URL — relative paths, ../
+    segments, //host, ?query, fragment-only and mailto: drops (RFC
+    3986 via functions/urls.resolve_href, incl. the higher-order
+    dot-segment fold). The DuckDB twin runs resolve_href_sql —
+    expression-for-expression the same CASE + reduce."""
+    from pure_python_geospatial_export_spark.operators.web import (
+        page_link_edges,
+    )
+
+    i = F.col("id")
+    pages = spark.range(240).select(
+        F.concat(
+            F.lit("https://site-"),
+            (i % 9).cast("string"),
+            F.lit(".test/d"),
+            (i % 5).cast("string"),
+            F.lit("/cur.html"),
+        ).alias("url"),
+        F.concat(
+            F.lit('<a href="p'), (i % 7).cast("string"),
+            F.lit('.html">n</a>'),
+            F.lit('<a href="../up/'), (i % 3).cast("string"),
+            F.lit('">u</a>'),
+            F.lit('<a href="#frag">f</a>'),
+            F.lit('<a href="mailto:a@b.test">m</a>'),
+            F.lit('<a href="?page='), i.cast("string"),
+            F.lit('">q</a>'),
+            F.when(
+                i % 4 == 0,
+                F.concat(
+                    F.lit('<a href="https://ext-'),
+                    (i % 4).cast("string"),
+                    F.lit('.test/z#sec">e</a>'),
+                ),
+            ).otherwise(F.lit("")),
+            F.when(
+                i % 6 == 1,
+                F.lit('<a href="//cdn.test/lib.js">c</a>'),
+            ).otherwise(F.lit("")),
+        ).alias("html"),
+    )
+    return page_link_edges(pages)
+
+
+def _lpa_round_sql(r: int, prev: str) -> str:
+    return (
+        "l{r} AS MATERIALIZED (SELECT l.node, "
+        "COALESCE(b.label, l.label) AS label "
+        "FROM {p} l LEFT JOIN ("
+        "SELECT node, label FROM ("
+        "SELECT node, label, ROW_NUMBER() OVER ("
+        "PARTITION BY node ORDER BY cnt DESC, label) AS rn "
+        "FROM (SELECT a.node AS node, l2.label AS label, "
+        "COUNT(*) AS cnt FROM adj a JOIN {p} l2 ON a.nbr = l2.node "
+        "GROUP BY 1, 2)) WHERE rn = 1) b USING (node))"
+    ).format(r=r, p=prev)
+
+
+def _communities_sql() -> str:
+    rounds, prev = [], "l0"
+    for r in range(1, 5):
+        rounds.append(_lpa_round_sql(r, prev))
+        prev = "l%d" % r
+    return (
+        "WITH e0 AS ("
+        "SELECT CAST(range AS BIGINT) AS src, "
+        "(range + 1) % 20 AS dst FROM range(20) "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range + 3) % 20 FROM range(20) "
+        "UNION ALL SELECT CAST(range + 20 AS BIGINT), "
+        "(range + 1) % 20 + 20 FROM range(20) "
+        "UNION ALL SELECT CAST(range + 20 AS BIGINT), "
+        "(range + 4) % 20 + 20 FROM range(20) "
+        "UNION ALL SELECT CAST(5 AS BIGINT), CAST(25 AS BIGINT)), "
+        "canon AS MATERIALIZED (SELECT DISTINCT "
+        "LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
+        "FROM e0 WHERE src <> dst), "
+        "adj AS MATERIALIZED (SELECT a AS node, b AS nbr FROM canon "
+        "UNION ALL SELECT b, a FROM canon), "
+        "l0 AS MATERIALIZED (SELECT DISTINCT node, node AS label "
+        "FROM adj), "
+        + ", ".join(rounds)
+        + " SELECT node, label FROM " + prev
+    )
+
+
+# communities/kcore: all-integer iterative fixpoints =>
+# chained MATERIALIZED CTE rounds land on the same integers
+@query("communities", oracle=_communities_sql, folded=True)
+def _q_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Synchronous deterministic label propagation
+    (operators/graph.label_propagation) over two 20-node circulant
+    blobs joined by one bridge edge. All-integer update with a
+    smallest-label tie-break makes the result a pure function of
+    (graph, rounds), so the DuckDB twin — 4 chained MATERIALIZED
+    label CTEs (GROUP BY counts + ROW_NUMBER cnt DESC, label) —
+    matches bit-for-bit."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        label_propagation,
+    )
+
+    ids = spark.range(20)
+    i = F.col("id")
+    blob_a = ids.select(
+        i.alias("src"), ((i + 1) % 20).alias("dst")
+    ).unionByName(
+        ids.select(i.alias("src"), ((i + 3) % 20).alias("dst"))
+    )
+    blob_b = ids.select(
+        (i + 20).alias("src"), ((i + 1) % 20 + 20).alias("dst")
+    ).unionByName(
+        ids.select((i + 20).alias("src"), ((i + 4) % 20 + 20).alias("dst"))
+    )
+    bridge = spark.range(1).select(
+        F.lit(5).cast("long").alias("src"),
+        F.lit(25).cast("long").alias("dst"),
+    )
+    edges = blob_a.unionByName(blob_b).unionByName(bridge)
+    return label_propagation(edges, iterations=4)
+
+
+def _kcore_round_sql(r: int, prev: str) -> str:
+    return (
+        "c{r} AS MATERIALIZED (SELECT c.node, "
+        "LEAST(c.core, h.h) AS core FROM {p} c JOIN ("
+        "SELECT node, MAX(LEAST(val, rn)) AS h FROM ("
+        "SELECT a.node AS node, c2.core AS val, "
+        "ROW_NUMBER() OVER (PARTITION BY a.node "
+        "ORDER BY c2.core DESC, a.nbr) AS rn "
+        "FROM adj a JOIN {p} c2 ON a.nbr = c2.node) "
+        "GROUP BY 1) h USING (node))"
+    ).format(r=r, p=prev)
+
+
+def _kcore_sql() -> str:
+    rounds, prev = [], "c0"
+    for r in range(1, 13):
+        rounds.append(_kcore_round_sql(r, prev))
+        prev = "c%d" % r
+    return (
+        "WITH e0 AS ("
+        "SELECT CAST(range AS BIGINT) AS src, "
+        "(range + 1) % 24 AS dst FROM range(24) "
+        "UNION ALL SELECT CAST(range AS BIGINT), "
+        "(range + 6) % 24 FROM range(24) WHERE range % 2 = 0 "
+        "UNION ALL SELECT s.s, d.d FROM "
+        "(SELECT CAST(range AS BIGINT) AS s FROM range(6)) s, "
+        "(SELECT CAST(range AS BIGINT) AS d FROM range(6)) d "
+        "WHERE s.s < d.d "
+        "UNION ALL SELECT CAST(range + 40 AS BIGINT), "
+        "range + 41 FROM range(2) "
+        "UNION ALL SELECT CAST(40 AS BIGINT), CAST(0 AS BIGINT)), "
+        "canon AS MATERIALIZED (SELECT DISTINCT "
+        "LEAST(src, dst) AS a, GREATEST(src, dst) AS b "
+        "FROM e0 WHERE src <> dst), "
+        "adj AS MATERIALIZED (SELECT a AS node, b AS nbr FROM canon "
+        "UNION ALL SELECT b, a FROM canon), "
+        "c0 AS MATERIALIZED (SELECT node, COUNT(*) AS core FROM adj "
+        "GROUP BY 1), "
+        + ", ".join(rounds)
+        + " SELECT node, core FROM " + prev
+    )
+
+
+@query("kcore", oracle=_kcore_sql, folded=True)
+def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-core decomposition (operators/graph.core_numbers, the
+    h-index iteration) over a 24-node chorded ring with a planted
+    6-clique and a 3-node pendant path — coreness spans 1..5. The
+    h-index is tie-order invariant and integer, and h(coreness) =
+    coreness makes extra rounds no-ops, so the operator's
+    run-to-fixpoint output equals a FIXED 12-round chained-CTE DuckDB
+    twin bit-for-bit (the grid_paths idempotence discipline)."""
+    from pure_python_geospatial_export_spark.operators.graph import (
+        core_numbers,
+    )
+
+    ids = spark.range(24)
+    i = F.col("id")
+    ring = ids.select(i.alias("src"), ((i + 1) % 24).alias("dst"))
+    chords = ids.where(i % 2 == 0).select(
+        i.alias("src"), ((i + 6) % 24).alias("dst")
+    )
+    six = spark.range(6)
+    clique = (
+        six.select(F.col("id").alias("src"))
+        .crossJoin(six.select(F.col("id").alias("dst")))
+        .where(F.col("src") < F.col("dst"))
+    )
+    path = spark.range(2).select(
+        (F.col("id") + 40).alias("src"),
+        (F.col("id") + 41).alias("dst"),
+    )
+    tether = spark.range(1).select(
+        F.lit(40).cast("long").alias("src"),
+        F.lit(0).cast("long").alias("dst"),
+    )
+    edges = (
+        ring.unionByName(chords)
+        .unionByName(clique)
+        .unionByName(path)
+        .unionByName(tether)
+    )
+    return core_numbers(edges)
+
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: spatial join + tile assignment on sf0.001 documents."""
+    sf_dir = "/root/testdata/sf0.001"
+    pts = _docs_points(spark, sf_dir)
+    joined = spatial_join(pts, _layer_df(spark), res=7)
+    return joined.select(
+        "doc_id",
+        "name",
+        cell_id_col(F.col("lon"), F.col("lat"), 6).alias("cell_id"),
+    )

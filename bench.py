@@ -86,36 +86,8 @@ def main() -> None:
         )
         out.write.format("noop").mode("overwrite").save()
 
-    # _all_queries: the headline set includes round-7 extras that are
-    # not part of the driver-facing 50-query registry
-    queries = entry_mod._all_queries()
-    headline = [
-        "pip_join",
-        "tile_stats",
-        "knn_grid",
-        "dedup_exact",
-        "text_quality",
-        "similarity_topk",
-        "events_window",
-        "minhash_pairs",
-        # round-3/4 heavy additions — benched so regressions in these
-        # operators show in BENCH artifacts, not only in tests
-        "polygon_overlap",
-        "curate_pipeline",
-        "tfidf_terms",
-        "radius_pairs",
-        "tile_mvt",
-        "image_phash",
-        # round-7 additions: hex density (pure codegen), trajectory
-        # segmentation (single-exchange windows), distributed hulls
-        "hex_bins",
-        "stay_points",
-        "group_hull",
-        # round-7 late additions: map matching (dilated broadcast
-        # cover, one exchange), Getis-Ord hot spots (scatter groupBy)
-        "snap_lines",
-        "hotspots",
-    ]
+    # the headline set: queries declared with @query(..., headline=True)
+    headline = [q for q in entry_mod.REGISTRY.values() if q.headline]
 
     def make_run(fn):
         def run():
@@ -138,7 +110,7 @@ def main() -> None:
         ("flagship_pages_join", flagship_run),
         ("web_extract", web_extract_run),
     ]
-    runners += [(name, make_run(queries[name])) for name in headline]
+    runners += [(q.name, make_run(q.fn)) for q in headline]
 
     # Warmup sweep (untimed): JVM codegen (C2 compilation of each plan
     # shape), Python worker pool, broadcast builds — the timed sweeps then

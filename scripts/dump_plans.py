@@ -21,7 +21,7 @@ def main() -> None:
                  "similarity_topk", "zonal_stats", "events_range",
                  "kmv_cells", "doc_sample"]:
         print("=" * 25, name, "=" * 25)
-        em.queries()[name](spark, sf).explain("formatted")
+        em.REGISTRY[name].fn(spark, sf).explain("formatted")
 
 
 if __name__ == "__main__":

@@ -1,6 +1,7 @@
 """spark-submit entry point for the flagship pipeline.
 
-Usage (cluster or local):
+Usage (cluster or local), after building the --py-files zip:
+  python scripts/build_pyfiles_zip.py
   spark-submit --py-files dist/ppge_spark.zip scripts/flagship_job.py \
       --pages-n 500000 --res 8 [--master local[8]] [--out /path]
 

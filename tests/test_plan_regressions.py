@@ -6,7 +6,10 @@ join, the kNN window re-shuffling its candidates, the repetition
 scalars hoisting above the explode — should fail CI, not a future
 benchmark."""
 
+import inspect
 import os
+
+import pytest
 
 import __spark_entry__ as em
 
@@ -14,8 +17,7 @@ SF = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
 
 def _plan(spark, name):
-    registry = {**em.queries(), **em.extra_queries()}
-    df = registry[name](spark, SF)
+    df = em.REGISTRY[name].fn(spark, SF)
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -27,99 +29,72 @@ def _shuffles(plan):
     )
 
 
-def test_flagship_pip_join_is_shuffle_free(spark):
-    """The r2 win: broadcast cell-cover join, interior cells resolved in
-    codegen, boundary refined inside the scan stage — ZERO shuffle
-    exchanges anywhere (broadcasts are fine and expected)."""
-    plan = _plan(spark, "pip_join")
-    assert _shuffles(plan) == 0, plan
-    assert "BroadcastExchange" in plan
+def _broadcast(plan):
+    return "BroadcastExchange" in plan
 
 
-def test_knn_grid_single_shuffle(spark):
-    """The top-k window keys on a superset of the join's partitioning
-    keys, so the replicated candidate relation is NOT re-shuffled: one
-    hash exchange total."""
-    plan = _plan(spark, "knn_grid")
-    assert _shuffles(plan) == 1, plan
+def _no_arrow(plan):
+    return "ArrowEvalPython" not in plan
 
 
-def test_repetition_projects_scalars_below_generate(spark):
-    """Tokenization scalars must sit in the Project UNDER the Generate
-    (parent prints first): if ExtractGenerator hoists them above, they
-    re-evaluate per exploded gram row — O(tokens^2)/doc."""
-    plan = _plan(spark, "repetition")
-    assert plan.index("Generate") < plan.index("array_distinct"), plan
-    assert _shuffles(plan) == 2, plan  # gram count + per-doc max
+def _no_map_in_pandas(plan):
+    return "mapInPandas" not in plan.lower()
 
 
-def test_polygon_overlap_single_shuffle(spark):
-    """One candidate pipeline: the pair-dedupe groupBy is the only
-    shuffle; splitting into sure/maybe branches used to re-run the
-    whole candidate subtree (2 shuffles, 2 broadcasts)."""
-    plan = _plan(spark, "polygon_overlap")
-    assert _shuffles(plan) == 1, plan
-    assert plan.count("BroadcastExchange") == 1, plan
+# Plan shapes beyond the exchange count each query declares in its @query
+# (the comment there says why the shape holds).
+SHAPES = {
+    "pip_join": [_broadcast],
+    "repetition": [
+        lambda plan: plan.index("Generate") < plan.index("array_distinct"),
+    ],
+    "polygon_overlap": [lambda plan: plan.count("BroadcastExchange") == 1],
+    "image_phash": [lambda plan: _shuffles(plan) <= 4],
+    "similarity_topk": [
+        lambda plan: plan.count("BroadcastExchange") == 1,
+        lambda plan: "WindowGroupLimit" in plan,
+        lambda plan: "Partial" in plan.split("WindowGroupLimit", 2)[-1],
+    ],
+    "events_window": [
+        lambda plan: plan.count("HashAggregate") == 2,  # partial + final
+        lambda plan: "partial_count" in plan,
+    ],
+    "clip_rects": [_broadcast],
+    "areal_interp": [_broadcast],
+    "hex_bins": [_no_arrow, _no_map_in_pandas],
+    "rect_distance": [_broadcast],
+    "tpch_region_volume": [lambda plan: plan.count("BroadcastExchange") >= 4],
+    "snap_lines": [
+        _broadcast,
+        lambda plan: plan.count("WindowGroupLimit") == 2,
+    ],
+    "hotspots": [_broadcast],
+    "html_extract": [_no_arrow, _no_map_in_pandas],
+    "link_graph": [_no_arrow, _no_map_in_pandas],
+    "anchor_index": [_no_arrow],
+    "frontier_batches": [_no_arrow],
+    "sitemap_urls": [_no_arrow],
+}
 
 
-def test_events_funnel_single_exchange(spark):
-    """Three chained per-user windows share the partition key — stages
-    2..n ride stage 1's hash partitioning, one exchange total."""
-    plan = _plan(spark, "events_funnel")
-    assert _shuffles(plan) == 1, plan
+@pytest.mark.parametrize("name", list(em.REGISTRY))
+def test_query_plan(spark, name):
+    """Every registered query's executed plan under the default conf:
+    no row-at-a-time Python UDF (a BatchEvalPython node means one crept
+    onto a hot path; Arrow-batched ArrowEvalPython / MapInPandas /
+    FlatMapGroupsInPandas are fine), exactly the declared number of
+    shuffle exchanges, and the shape checks in SHAPES."""
+    plan = _plan(spark, name)
+    assert "BatchEvalPython" not in plan, plan
+    exchanges = em.REGISTRY[name].exchanges
+    if exchanges is not None:
+        assert _shuffles(plan) == exchanges, plan
+    for check in SHAPES.get(name, ()):
+        assert check(plan), (inspect.getsource(check).strip(), plan)
 
 
-def test_no_row_at_a_time_python_udfs_anywhere(spark):
-    """Global hygiene: every driver query must stay on JVM columns or
-    Arrow-batched Python (ArrowEvalPython / MapInPandas /
-    FlatMapGroupsInPandas). A BatchEvalPython node means a row-wise
-    Python UDF crept onto a hot path."""
-    offenders = {}
-    for name in {**em.queries(), **em.extra_queries()}:
-        plan = _plan(spark, name)
-        if "BatchEvalPython" in plan:
-            offenders[name] = plan
-    assert not offenders, sorted(offenders)
-
-
-def test_tile_mvt_single_shuffle(spark):
-    """Point MVT packing: tile assignment is column math in the scan
-    stage; the only exchange is the groupBy(tile_id) feeding the
-    per-tile applyInPandas encoder, and the decode pass is a chained
-    mapInPandas (no second exchange)."""
-    plan = _plan(spark, "tile_mvt")
-    assert _shuffles(plan) == 1, plan
-
-
-def test_image_phash_shuffle_budget(spark):
-    """Render -> hash are chained mapInPandas in the scan stage (no
-    exchange); the banded pair join + pair dedupe + ph_a attach spend
-    at most four hash exchanges. A fifth means a stage stopped reusing
-    its child's partitioning."""
-    plan = _plan(spark, "image_phash")
-    assert _shuffles(plan) <= 4, plan
-
-
-def test_similarity_topk_single_shuffle_with_group_limit(spark):
-    """Exact cosine top-k: query set broadcasts, candidates shuffle
-    ONCE on query id, and WindowGroupLimit prunes to k map-side
-    (partial) before the final window — the r3/r4 bench deltas on this
-    query were host noise, not a plan change; lock the shape."""
-    plan = _plan(spark, "similarity_topk")
-    assert _shuffles(plan) == 1, plan
-    assert plan.count("BroadcastExchange") == 1, plan
-    assert "WindowGroupLimit" in plan, plan
-    assert "Partial" in plan.split("WindowGroupLimit", 2)[-1], plan
-
-
-def test_events_window_partial_agg_single_shuffle(spark):
-    """Hourly window agg: map-side partial aggregation in the scan
-    stage, one exchange on (window, type), final agg — no window
-    function, no second exchange."""
-    plan = _plan(spark, "events_window")
-    assert _shuffles(plan) == 1, plan
-    assert plan.count("HashAggregate") == 2, plan  # partial + final
-    assert "partial_count" in plan, plan
+def test_shape_table_names_registered_queries():
+    assert set(SHAPES) <= set(em.REGISTRY)
 
 
 def test_minhash_pipeline_shuffle_budget(spark):
@@ -227,33 +202,6 @@ def test_dissolve_pair_join_shuffle_budget(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_clip_rects_single_shuffle(spark):
-    """clip_join rides the polygon_overlap pipeline: ONE shuffle (the
-    pair-dedupe groupBy), broadcast cover join, geometry only in the
-    mapInPandas tail."""
-    plan = _plan(spark, "clip_rects")
-    assert _shuffles(plan) == 1, plan
-    assert "BroadcastExchange" in plan
-
-
-def test_areal_interp_shuffle_budget(spark):
-    """clip pipeline (1) + the value join + final partial-agg groupBy
-    = 2 exchanges: source areas ride OUT of the clip kernel
-    (_with_src_area), so the round-7 third parse pass and its join
-    are gone — lock the tighter budget."""
-    plan = _plan(spark, "areal_interp")
-    assert _shuffles(plan) == 2, plan
-    assert "BroadcastExchange" in plan
-
-
-def test_group_hull_single_shuffle(spark):
-    """Two-stage mergeable hull: the shuffle carries only partial-hull
-    VERTICES — one hash exchange total (partial mapInPandas runs in
-    the scan stage)."""
-    plan = _plan(spark, "group_hull")
-    assert _shuffles(plan) == 1, plan
-
-
 def test_cross_minhash_shuffle_budget(spark):
     """The A-vs-B banded join keeps the self-join's exchange budget in
     the forced-SMJ regime: 2 banded sides + 1 pair distinct + 2+2
@@ -279,121 +227,3 @@ def test_cross_minhash_shuffle_budget(spark):
         assert _shuffles(plan) == 7, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
-def test_hex_bins_pure_codegen(spark):
-    """Hex binning is pure JVM column arithmetic: one hash exchange
-    (the groupBy), zero Python evals."""
-    plan = _plan(spark, "hex_bins")
-    assert _shuffles(plan) == 1, plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "mapInPandas" not in plan.lower()
-
-
-def test_rect_distance_single_shuffle(spark):
-    """polygon_distance_join rides the overlap-join pipeline: one
-    shuffle (pair-dedupe groupBy), broadcast cover join, geometry only
-    in the mapInPandas tail."""
-    plan = _plan(spark, "rect_distance")
-    assert _shuffles(plan) == 1, plan
-    assert "BroadcastExchange" in plan
-
-
-def test_tpch_star_join_fact_never_reshuffles(spark):
-    """The 6-table Q5-style star join: all five dims broadcast, the
-    lineitem fact flows scan -> joins -> partial agg with exactly ONE
-    hash exchange (the final groupBy)."""
-    plan = _plan(spark, "tpch_region_volume")
-    assert _shuffles(plan) == 1, plan
-    assert plan.count("BroadcastExchange") >= 4, plan
-
-
-def test_tpch_pricing_single_exchange(spark):
-    plan = _plan(spark, "tpch_pricing")
-    assert _shuffles(plan) == 1, plan
-
-
-def test_snap_lines_single_shuffle_with_group_limit(spark):
-    """Snap-to-line: broadcast cover join (fact side never shuffles
-    into the kernel), ONE exchange for the argmin window, map-side
-    WindowGroupLimit prune engaged (limit 1)."""
-    plan = _plan(spark, "snap_lines")
-    assert _shuffles(plan) == 1, plan
-    assert "BroadcastExchange" in plan
-    assert plan.count("WindowGroupLimit") == 2, plan
-
-
-def test_od_matrix_two_exchanges(spark):
-    """OD flows: the lead window and the stay rollup ride the
-    segments' user exchange (one), plus one (o_cell, d_cell) rollup
-    exchange — the countDistinct must not add a third."""
-    plan = _plan(spark, "od_matrix")
-    assert _shuffles(plan) == 2, plan
-
-
-def test_hotspots_shuffle_budget(spark):
-    """Gi*: the cell-count groupBy runs once inside the eager
-    localCheckpoint (counts feeds both the scatter and the stats —
-    the materialize-first rule); the visible plan has the scatter
-    groupBy exchange plus the stats aggregate's exchange on the
-    CONSTANT bin key (the single-lattice delegation to
-    gi_star_binned — all ~lattice-size rows to one partition, the
-    same work the old global agg's uncounted SinglePartition
-    exchange did). Own count rides the dx=dy=0 row — no join, no
-    second counts computation; stats is a broadcast; the empty
-    lattice never materializes."""
-    plan = _plan(spark, "hotspots")
-    assert _shuffles(plan) == 2, plan
-    assert "BroadcastExchange" in plan
-
-
-def test_html_extract_pure_codegen_no_exchange(spark):
-    """HTML text/title/link extraction is JVM regexp columns riding
-    the scan: ZERO exchanges, zero Python evals — the shape that
-    makes the extraction stage free at corpus scale."""
-    plan = _plan(spark, "html_extract")
-    assert _shuffles(plan) == 0, plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "mapInPandas" not in plan.lower()
-
-
-def test_link_graph_single_exchange_no_python(spark):
-    """pages -> hrefs -> host edges is a narrow projection + explode;
-    the edge-count aggregate is the ONLY exchange and Python never
-    appears."""
-    plan = _plan(spark, "link_graph")
-    assert _shuffles(plan) == 1, plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-    assert "mapInPandas" not in plan.lower()
-
-
-def test_anchor_index_single_exchange_no_python(spark):
-    """anchors -> (dst, term) counts: the term aggregate is the ONLY
-    exchange; extraction/split stay JVM regexp columns at scan
-    width."""
-    plan = _plan(spark, "anchor_index")
-    assert _shuffles(plan) == 1, plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-
-
-def test_frontier_batches_single_exchange(spark):
-    """The politeness window rides its own host exchange: one hash
-    exchange, no Python, no extra sort-shuffles."""
-    plan = _plan(spark, "frontier_batches")
-    assert _shuffles(plan) == 1, plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
-
-
-def test_sitemap_urls_pure_codegen_no_exchange(spark):
-    """Sitemap block harvest + loc/lastmod extraction is JVM regexp
-    riding the scan on both union branches: ZERO exchanges, zero
-    Python."""
-    plan = _plan(spark, "sitemap_urls")
-    assert _shuffles(plan) == 0, plan
-    assert "BatchEvalPython" not in plan
-    assert "ArrowEvalPython" not in plan
