@@ -686,8 +686,9 @@ def _pip_join_sql() -> str:
 
 
 # Plan: the r2 win. Broadcast cell-cover join, interior cells resolved in
-# codegen, boundary refined inside the scan stage: ZERO shuffle exchanges
-# anywhere (broadcasts are fine and expected).
+# codegen, boundary rows ray-cast in the JVM by the one filter folded into
+# the join: ZERO shuffle exchanges anywhere (broadcasts are fine and
+# expected), one scan, no Union, no ArrowEvalPython.
 @query("pip_join", oracle=_pip_join_sql, headline=True, exchanges=0)
 def _q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _docs_points(spark, sf_dir)
@@ -836,6 +837,7 @@ _PIP_JOIN_ANTIMERIDIAN_SQL = PTS_CTE + (
 )
 
 
+# Plan: pip_join's one-scan shape (no Union, no ArrowEvalPython).
 @query("pip_join_antimeridian", oracle=_PIP_JOIN_ANTIMERIDIAN_SQL)
 def _q_pip_join_antimeridian(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pure_python_geospatial_export_spark.session import local_df
@@ -874,6 +876,7 @@ _PIP_JOIN_POLAR_SQL = PTS_CTE + (
 )
 
 
+# Plan: pip_join's one-scan shape (no Union, no ArrowEvalPython).
 @query("pip_join_polar", oracle=_PIP_JOIN_POLAR_SQL)
 def _q_pip_join_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pure_python_geospatial_export_spark.session import local_df
@@ -1027,6 +1030,7 @@ def _zonal_stats_sql() -> str:
     )
 
 
+# Plan: pip_join's one-scan shape (no Union, no ArrowEvalPython).
 @query("zonal_stats", oracle=_zonal_stats_sql)
 def _q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pure_python_geospatial_export_spark.operators.tiles import (

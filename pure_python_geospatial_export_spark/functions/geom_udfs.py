@@ -4,15 +4,13 @@ Two tiers, chosen per the UDFs-are-the-slow-path rule:
 
 * PURE COLUMN expressions (JVM, whole-stage codegen): cell ids, grid
   coords, bbox predicates, tile math — everything arithmetic.
-* pandas UDFs (Arrow batch transfer): only where geometry PARSING or the
-  exact ray-cast kernel is genuinely needed (WKT/WKB codecs, PIP refine).
+* pandas UDFs (Arrow batch transfer): only where geometry PARSING is
+  genuinely needed (WKT/WKB codecs, geodesic measures).
   All of them call the vectorized batch kernels from ``geo/``; none loop
   per row at the Spark boundary.
 """
 
 from __future__ import annotations
-
-from typing import Dict
 
 import numpy as np
 import pandas as pd
@@ -20,12 +18,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     DoubleType,
     StringType,
 )
 
-from ..geo import kernels
 from ..geo import wkb as wkbmod
 from ..geo import wkt as wktmod
 
@@ -173,50 +169,6 @@ def wkb_point_lon(wkb_in: pd.Series) -> pd.Series:
 @F.pandas_udf(DoubleType())
 def wkb_point_lat(wkb_in: pd.Series) -> pd.Series:
     return pd.Series(_wkb_point_coords(wkb_in)[:, 1])
-
-
-def make_pip_refine(rings_by_id: Dict[int, dict], edges: str = "planar"):
-    """Factory: exact point-in-polygon refine UDF for a broadcastable
-    polygon layer.
-
-    The returned pandas UDF evaluates (polygon_id, lon, lat) -> inside
-    using the vectorized ray-cast kernel (or the gnomonic-projection
-    geodesic kernel for ``edges='geodesic'``), batching rows PER POLYGON
-    within each Arrow batch (after the cell equi-join, batches are
-    dominated by few polygons, so the kernel runs on large point blocks).
-
-    ``rings_by_id`` rides along in the UDF closure — serialized once per
-    executor by Spark, the broadcast pattern for dimension data.
-    """
-    plain = {
-        int(pid): [np.asarray(r, dtype=np.float64)[:, :2]
-                   for r in info["rings"]]
-        for pid, info in rings_by_id.items()
-    }
-    if edges == "geodesic":
-        from ..geo.geodesic import points_in_polygon_geodesic as _pip
-    elif edges == "planar":
-        _pip = kernels.points_in_polygon
-    else:
-        raise ValueError("edges must be 'planar' or 'geodesic', got %r"
-                         % edges)
-
-    @F.pandas_udf(BooleanType())
-    def pip_refine(polygon_id: pd.Series, lon: pd.Series,
-                   lat: pd.Series) -> pd.Series:
-        out = np.zeros(len(polygon_id), dtype=bool)
-        pids = polygon_id.to_numpy()
-        lons = lon.to_numpy(dtype=np.float64)
-        lats = lat.to_numpy(dtype=np.float64)
-        for pid in np.unique(pids):
-            rings = plain.get(int(pid))
-            if rings is None:
-                continue
-            mask = pids == pid
-            out[mask] = _pip(lons[mask], lats[mask], rings)
-        return pd.Series(out)
-
-    return pip_refine
 
 
 @F.pandas_udf(DoubleType())

@@ -440,3 +440,227 @@ def _polygon_cover_geodesic(rings: Sequence, res: int
         (int(c), bool(f))
         for c, f in zip(cells[keep].tolist(), full[keep].tolist())
     ]
+
+
+# ---------------------------------------------------------------------------
+# per-cell edge lists: the local geometry of a boundary cell
+# ---------------------------------------------------------------------------
+
+#: most edges one point is ray-cast against in the JVM boundary refine.
+#: The refine is an interpreted ``aggregate`` (~200-250 ns per edge
+#: against ~36 ns per edge in the numpy kernel, which however walks EVERY
+#: edge of the polygon), so a boundary cell whose list is longer splits
+#: into ``4**k`` child lists at ``res + k`` — the smallest k that brings
+#: every child under this bound.
+EDGE_LIST_BOUND = 64
+
+#: deepest split of one boundary cell: the list count grows 4x per
+#: level. A polygon too dense for it keeps longer lists (a 200k-vertex
+#: star at res 7: up to 471 edges at k = 4).
+EDGE_SPLIT_MAX = 4
+
+#: margin (degrees) around a cell rectangle in the drop tests: the grid
+#: floor rounds, so a point the formula puts in a cell may sit a few ulps
+#: (~1e-13 degrees) outside the exact rectangle. 1e-9 is far above that
+#: and below 0.2% of the smallest cell (res 28).
+_EDGE_PAD = 1e-9
+
+
+def _ring_edges(rings: Sequence):
+    """(x0, y0, x1, y1, brk) of every edge ``kernels.points_in_polygon``
+    ray-casts: all rings after ``expand_antimeridian_rings``, in ring
+    order. ``brk`` marks an edge whose start is not the previous edge's
+    end (the first edge of each ring).
+
+    The kernel skips a ring for points outside its bbox. For a closed
+    ring that cannot change parity: a point outside the bbox either
+    straddles no edge, lies right of every straddling edge, or lies left
+    of all of them, and a closed ring straddles any row an even number
+    of times. An OPEN ring gets one vertical edge at the next double
+    left of its bbox joining its last y back to its first: it cancels
+    the open chain's parity for points left of the bbox and touches no
+    other point, so parity over these edges equals the kernel's answer
+    for every point."""
+    parts = []
+    for arr in kernels.expand_antimeridian_rings(rings):
+        if len(arr) < 2:
+            continue
+        e = np.column_stack([arr[:-1], arr[1:]])
+        if (arr[0] != arr[-1]).any():
+            xc = np.nextafter(arr[:, 0].min(), -np.inf)
+            e = np.vstack([e, [xc, arr[-1, 1], xc, arr[0, 1]]])
+        brk = np.zeros(len(e), dtype=bool)
+        brk[0] = True
+        parts.append((e, brk))
+    if not parts:
+        return (np.empty(0),) * 4 + (np.empty(0, dtype=bool),)
+    e = np.concatenate([p[0] for p in parts])
+    brk = np.concatenate([p[1] for p in parts])
+    return e[:, 0], e[:, 1], e[:, 2], e[:, 3], brk
+
+
+def _padded_boxes(cx, cy, level: int):
+    """Padded rectangles of cells (cx, cy) at ``level``. Border cells
+    extend to +-inf on their clamped side: the grid formula clamps every
+    out-of-world (and infinite) ordinate into them."""
+    n = 1 << level
+    w, h = 360.0 / n, 180.0 / n
+    x0 = -180.0 + cx * w
+    y0 = -90.0 + cy * h
+    return (
+        np.where(cx == 0, -np.inf, x0 - _EDGE_PAD),
+        np.where(cy == 0, -np.inf, y0 - _EDGE_PAD),
+        np.where(cx == n - 1, np.inf, x0 + w + _EDGE_PAD),
+        np.where(cy == n - 1, np.inf, y0 + h + _EDGE_PAD),
+    )
+
+
+def _refine_lists(ent, parent, cx, cy, level: int):
+    """Child edge lists from parent lists.
+
+    ``ent`` = (box, x0, y0, x1, y1, brk), entries grouped by parent box
+    in chain order; child ``c`` is cell (cx[c], cy[c]) at ``level``,
+    inside parent box ``parent[c]``. Every returned list gives the same
+    crossing parity as its parent's for every point in the child's
+    padded rectangle:
+
+    * an edge left of the rectangle (max x below it) never crosses;
+    * an edge right of it (min x above it) crosses iff it straddles the
+      point's y, and an edge outside the row band never straddles —
+      both contribute ``(y0 >= ty) != (y1 >= ty)``, which telescopes, so
+      a run of such edges joined end to end becomes one vertical edge
+      (X, y_start) -> (X, y_end) with X right of the rectangle, or
+      nothing when it cannot straddle the band.
+    """
+    box, x0, y0, x1, y1, brk = ent
+    counts = np.bincount(box, minlength=int(parent.max(initial=-1)) + 1)
+    lens = counts[parent]
+    child = np.repeat(np.arange(len(parent)), lens)
+    within = np.arange(len(child)) - np.repeat(np.cumsum(lens) - lens, lens)
+    src = (np.cumsum(counts) - counts)[parent][child] + within
+    ex0, ey0, ex1, ey1 = x0[src], y0[src], x1[src], y1[src]
+    # entry i continues entry i-1's chain
+    cont = ~brk[src] & (within > 0)
+    px0, py0, px1, py1 = (a[child] for a in _padded_boxes(cx, cy, level))
+
+    mx = np.maximum(ex0, ex1)
+    tele = ((np.maximum(ey0, ey1) < py0) | (np.minimum(ey0, ey1) > py1)
+            | (np.minimum(ex0, ex1) > px1))
+    keep = ~tele & (mx >= px0)
+
+    nxt = np.r_[cont[1:], False] & np.r_[tele[1:], False]
+    start = np.flatnonzero(tele & ~(np.r_[False, tele[:-1]] & cont))
+    end = np.flatnonzero(tele & ~nxt)
+    rx = (np.maximum.reduceat(mx[tele], (np.cumsum(tele) - 1)[start])
+          if len(start) else np.empty(0))
+    ys, ye = ey0[start], ey1[end]
+    lo, hi = py0[start], py1[start]
+    live = (ys != ye) & ~((ys < lo) & (ye < lo)) & ~((ys > hi) & (ye > hi))
+
+    # a live run becomes one entry at its first position
+    run, last = start[live], np.arange(len(keep))
+    keep[run] = True
+    ex0[run] = ex1[run] = rx[live]
+    ey1[run] = ye[live]
+    last[run] = end[live]
+    s = np.flatnonzero(keep)
+    e = last[s]
+    out_cont = cont[s] & (np.r_[-2, e[:-1]] == s - 1)
+    return child[s], ex0[s], ey0[s], ex1[s], ey1[s], ~out_cont
+
+
+def _ragged_take(counts, order):
+    """Indices that gather the ragged segments (sizes ``counts``) in
+    ``order``."""
+    lens = counts[order]
+    shift = (np.cumsum(counts) - counts)[order] - (np.cumsum(lens) - lens)
+    return np.arange(int(lens.sum())) + np.repeat(shift, lens)
+
+
+def cell_edge_lists(rings_list: Sequence, poly: np.ndarray,
+                    cells: np.ndarray, res: int):
+    """Edge lists of boundary cells for the JVM ray-cast refine.
+
+    Cell ``i`` (id ``cells[i]`` at ``res``) belongs to polygon
+    ``rings_list[poly[i]]``. Returns ``(k, sizes, x0, y0, x1, y1)``:
+    cell ``i`` holds ``4**k[i]`` child lists (children at ``res + k[i]``
+    in order ``(lx << k) + ly`` of their local grid coordinates), whose
+    lengths follow in ``sizes``; the edges of all lists follow in order.
+    For every point the grid formula puts in a child, crossing parity
+    over its list equals ``kernels.points_in_polygon``.
+
+    Built top-down over the cell hierarchy from the whole world: each
+    level refines its parents' lists (``_refine_lists``), so no list is
+    ever tested against edges its parent already dropped.
+    """
+    poly = np.asarray(poly, dtype=np.int64)
+    cells = np.asarray(cells, dtype=np.int64)
+    n_cells = len(cells)
+    if n_cells == 0:
+        e, i = np.empty(0), np.empty(0, dtype=np.int64)
+        return i, i, e, e, e, e
+    # level 0: one box per polygon holding all its edges
+    upoly, pbox = np.unique(poly, return_inverse=True)
+    parts = [_ring_edges(rings_list[p]) for p in upoly]
+    box = np.repeat(np.arange(len(upoly)), [len(p[0]) for p in parts])
+    ent = (box,) + tuple(np.concatenate(col) for col in zip(*parts))
+    # quadtree order: the cells under any box form one contiguous run
+    gx, gy, _ = decode(cells)
+    z = morton(gx, gy)
+    order = np.lexsort((z, pbox))
+    pbox, gx, gy, z = pbox[order], gx[order], gy[order], z[order]
+    for level in range(1, res + 1):
+        up = res - level
+        zl = z >> (2 * up)
+        new = np.r_[True, (pbox[1:] != pbox[:-1]) | (zl[1:] != zl[:-1])]
+        first = np.flatnonzero(new)
+        ent = _refine_lists(ent, pbox[first], gx[first] >> up,
+                            gy[first] >> up, level)
+        pbox = np.cumsum(new) - 1
+    # one box per cell now: box b is cell order[b]
+    sizes = np.bincount(ent[0], minlength=n_cells)
+
+    rows, ks, child_sizes, edges = [], [], [], []
+
+    def emit(j, done_cells, done_boxes, box_sizes, per):
+        sel = np.isin(ent[0] // per, done_boxes)
+        rows.append(done_cells)
+        ks.append(np.full(len(done_cells), j, dtype=np.int64))
+        child_sizes.append(box_sizes)
+        edges.append(np.stack([a[sel] for a in ent[1:5]]))
+
+    heavy = sizes > EDGE_LIST_BOUND
+    if res == MAX_RES:
+        heavy[:] = False
+    emit(0, order[~heavy], np.flatnonzero(~heavy), sizes[~heavy], 1)
+    # heavy cells (as level-res boxes), and the box of each one's first
+    # child list in the current ``ent``
+    hcells = hbox = np.flatnonzero(heavy)
+    j = 0
+    while len(hcells):
+        j += 1
+        m = 1 << j
+        i = np.arange(m * m)
+        lx, ly = i >> j, i & (m - 1)
+        parent_local = ((lx >> 1) << (j - 1)) + (ly >> 1)
+        parent = (hbox[:, None] + parent_local[None, :]).ravel()
+        cx = ((gx[hcells] << j)[:, None] + lx[None, :]).ravel()
+        cy = ((gy[hcells] << j)[:, None] + ly[None, :]).ravel()
+        ent = _refine_lists(ent, parent, cx, cy, res + j)
+        csz = np.bincount(ent[0], minlength=len(parent)).reshape(-1, m * m)
+        done = ((csz.max(axis=1) <= EDGE_LIST_BOUND) | (j == EDGE_SPLIT_MAX)
+                | (res + j == MAX_RES))
+        pos = np.flatnonzero(done)
+        emit(j, order[hcells[done]], pos, csz[done].ravel(), m * m)
+        hcells = hcells[~done]
+        hbox = np.flatnonzero(~done) * (m * m)
+
+    row_cell = np.concatenate(rows)
+    k = np.concatenate(ks)
+    child_sizes = np.concatenate(child_sizes)
+    edges = np.concatenate(edges, axis=1)
+    order = np.argsort(row_cell, kind="stable")
+    child = _ragged_take(np.int64(1) << (2 * k), order)
+    take = _ragged_take(child_sizes, child)
+    return (k[order], child_sizes[child],
+            edges[0, take], edges[1, take], edges[2, take], edges[3, take])

@@ -6,11 +6,15 @@ Two-phase plan, Spark-first:
    via pure column arithmetic; polygons are exploded to their covering
    cells (driver-side, tiny) and broadcast. The join is a broadcast hash
    join on ``cell_id`` — zero shuffle of the 10^12-row points side.
-2. **Exact refine**: rows landing in a provably-interior (``is_full``)
-   cell pass immediately (no Python); only boundary-cell rows run the
-   Arrow-batched ray-cast kernel. For a state-sized polygon at res 7+,
-   interior cells dominate, so the Python refine touches a thin boundary
-   band only.
+2. **Exact refine**: one filter,
+   ``CASE WHEN is_full THEN true ELSE <ray-cast> END``, inside the
+   scan+join stage. Rows in a provably-interior (``is_full``) cell pass
+   by containment; a boundary-cell row ray-casts against the few edges
+   its cover row carries (*Raster Intervals*: full cells answer by
+   containment, partial cells carry only their local geometry), as a
+   JVM expression that is bit-exact with ``kernels.points_in_polygon``.
+   One scan, no union, no Python. Geodesic edges keep the Arrow-batched
+   great-circle kernel on the boundary rows.
 
 Skew: with a broadcast join there is no shuffle to skew; hot cells only
 matter for the OPTIONAL shuffle strategy used when the polygon layer is
@@ -26,10 +30,12 @@ from __future__ import annotations
 import math
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.geom_udfs import cell_id_col, make_pip_refine
+from ..functions.geom_udfs import cell_id_col
 from ..sources.polygons import load_rings, polygon_cells
 
 DEFAULT_RES = 7
@@ -65,14 +71,18 @@ def spatial_join(
     ``edges``: ``planar`` (straight lon/lat edges — reference semantics)
     or ``geodesic`` (great-circle edges) — selects BOTH the cover and
     the refine kernel consistently.
+
+    ``cover``: a prebuilt ``polygon_cells(spark, rings, res, edges)`` of
+    the same layer, to build it once for many joins (a planar cover
+    carries the edge lists the refine reads).
     """
     spark = points.sparkSession
-    if rings_by_id is None:
+    geodesic = edges == "geodesic"
+    if rings_by_id is None and (cover is None or geodesic):
         rings_by_id = load_rings(polygons)
     if cover is None:
         cover = polygon_cells(spark, rings_by_id, res, edges=edges)
     pts = points_with_cell(points, res)
-    refine = make_pip_refine(rings_by_id, edges=edges)
 
     if strategy == "broadcast":
         joined = pts.join(F.broadcast(cover), "cell_id")
@@ -117,28 +127,94 @@ def spatial_join(
     else:
         raise ValueError("unknown strategy %r" % strategy)
 
-    # Split full-cell rows from boundary-cell rows BEFORE the Python
-    # refine: Spark evaluates a pandas UDF for every input row of its
-    # ArrowEvalPython node regardless of a surrounding boolean OR, so
-    # `is_full | refine(...)` would ship the (dominant) interior rows
-    # through Arrow for nothing. Two filters + union keeps the Python
-    # kernel on the thin boundary band only (~5x wall-time win measured
-    # at res 6 on 500k points).
-    full_rows = joined.where(F.col("is_full"))
-    # No exchange around the refine: the ArrowEvalPython filter runs
-    # inside the (full-width) scan+join stage, so the boundary band is
-    # refined where it is produced, with zero shuffle. A round-robin
-    # repartition used to sit here to widen the Python stage, but
-    # Catalyst pushes a deterministic UDF filter back through a
-    # repartition, so the exchange always landed ABOVE the refine in the
-    # optimized plan — a pure extra shuffle of the refined band buying
-    # nothing (docs/PLANS.md shows the captured plan). The worker-spawn
-    # storms the exchange was first added for are solved at the root by
-    # the preloading daemon (see daemon_preload.py).
-    boundary = joined.where(~F.col("is_full")).where(
-        refine(F.col("polygon_id"), F.col("lon"), F.col("lat"))
-    )
-    return full_rows.unionByName(boundary).drop("is_full")
+    if geodesic:
+        # a pandas UDF under OR still sees every row, so the interior
+        # rows are split off before the Arrow kernel and unioned back
+        refine = _geodesic_refine(rings_by_id)
+        joined = joined.where(F.col("is_full")).unionByName(
+            joined.where(~F.col("is_full")).where(
+                refine(F.col("polygon_id"), F.col("lon"), F.col("lat")))
+        )
+    elif edges == "planar":
+        joined = joined.where(
+            F.when(F.col("is_full"), True)
+            .otherwise(_ray_cast(res, F.col("lon"), F.col("lat")))
+        )
+    else:
+        raise ValueError("edges must be 'planar' or 'geodesic', got %r"
+                         % edges)
+    return joined.drop("is_full", "_edges_k", "_edges")
+
+
+def _ray_cast(res: int, lon: Column, lat: Column) -> Column:
+    """Crossing parity of the point over its boundary cell's edge list
+    (``polygon_cells``' ``_edges``), a JVM expression.
+
+    The list is the child at ``res + _edges_k`` given by the same grid
+    floor as ``grid_xy_cols``: the scale is a power of two, so the child
+    always lies in the point's cell. Each edge repeats
+    ``kernels.points_in_ring`` bit for bit: the ``>=`` flags, straddle,
+    the certain hit, then the x-intercept in the kernel's operation
+    order, divided only under straddle (where y0 != y1; ANSI raises on a
+    double division by zero). A NaN ordinate crosses nothing, as in
+    numpy."""
+    s = F.pow(F.lit(2.0), F.col("_edges_k"))
+    n = s * float(1 << res)
+    top = (n - 1).cast("long")
+
+    def child(v, off, span):
+        g = F.least(F.greatest(F.floor((v + F.lit(off)) / F.lit(span) * n),
+                               F.lit(0)), top)
+        return g % s.cast("long")
+
+    idx = child(lon, 180.0, 360.0) * s.cast("long") + child(lat, 90.0, 180.0)
+
+    def step(acc, e):
+        x0, y0, x1, y1 = e["x0"], e["y0"], e["x1"], e["y1"]
+        xf0 = x0 >= lon
+        hit = (
+            F.when((y0 >= lat) == (y1 >= lat), False)
+            .when(xf0 == (x1 >= lon), xf0)
+            .otherwise(x1 - (y1 - lat) * (x0 - x1) / (y0 - y1) >= lon)
+        )
+        return acc != hit
+
+    return F.aggregate(F.col("_edges")[idx.cast("int")],
+                       F.lit(False), step)
+
+
+def _geodesic_refine(rings_by_id: Dict[int, dict]):
+    """Exact great-circle containment refine as a pandas UDF over
+    (polygon_id, lon, lat), batching rows per polygon within each Arrow
+    batch. ``rings_by_id`` rides along in the closure — serialized once
+    per executor by Spark, the broadcast pattern for dimension data."""
+    from pyspark.sql.types import BooleanType
+
+    from ..geo.geodesic import points_in_polygon_geodesic
+
+    plain = {
+        int(pid): [np.asarray(r, dtype=np.float64)[:, :2]
+                   for r in info["rings"]]
+        for pid, info in rings_by_id.items()
+    }
+
+    @F.pandas_udf(BooleanType())
+    def pip_refine(polygon_id: pd.Series, lon: pd.Series,
+                   lat: pd.Series) -> pd.Series:
+        out = np.zeros(len(polygon_id), dtype=bool)
+        pids = polygon_id.to_numpy()
+        lons = lon.to_numpy(dtype=np.float64)
+        lats = lat.to_numpy(dtype=np.float64)
+        for pid in np.unique(pids):
+            rings = plain.get(int(pid))
+            if rings is None:
+                continue
+            mask = pids == pid
+            out[mask] = points_in_polygon_geodesic(lons[mask], lats[mask],
+                                                   rings)
+        return pd.Series(out)
+
+    return pip_refine
 
 
 def spatial_join_big_layer(
@@ -165,8 +241,6 @@ def spatial_join_big_layer(
     two shuffles, which is the correct shape when the layer itself is
     fact-sized.
     """
-    import pandas as pd
-
     from ..geo import kernels, wkt as wktmod
     from ..geo.cells import polygon_cover
 
@@ -264,8 +338,6 @@ def _probe_parts(geom: dict):
 def _geodesic_bounds(s):
     """Per-row (padded bbox, vertex bbox) of one probe WKT under
     geodesic edges, 8 floats; all-NaN for a malformed row."""
-    import numpy as np
-
     from ..geo import wkt as wktmod
     from ..geo.geodesic import unit_vectors
 
@@ -316,7 +388,6 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     ``geodesic`` every row takes the per-row path (the pad needs each
     ring's edge angles). The pass stays a ``mapInPandas`` so the plan
     keeps one named node for it."""
-    import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     cols = ["_xmin", "_ymin", "_xmax", "_ymax"]
@@ -382,7 +453,6 @@ def polygon_overlap_join(
     Pick ``res`` so typical probes span O(1) cells — the explode in (2)
     is (bbox cells per row) and the refine cost is per candidate pair.
     """
-    import pandas as pd
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     from ..functions.geom_udfs import grid_xy_cols

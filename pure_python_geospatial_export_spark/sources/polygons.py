@@ -8,17 +8,23 @@ polygons the reference's own e2e tests join points against
 ``polygon_cells`` turns a (small) polygon layer into its cell-cover
 relation — the broadcast side of the spatial join: one row per
 (polygon, covering cell), tagged ``is_full`` for cells provably interior
-(those skip the exact PIP refine).
+(those skip the exact PIP refine); the other planar cells carry the edges
+the refine ray-casts against.
 """
 
 from __future__ import annotations
 
 from typing import Dict, List, Tuple
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401  (used by callers)
 from pyspark.sql.types import (
+    ArrayType,
     BooleanType,
+    DoubleType,
+    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -110,12 +116,18 @@ def load_rings(polygons: DataFrame) -> Dict[int, dict]:
     return out
 
 
+_EDGE = StructType([
+    StructField(f, DoubleType()) for f in ("x0", "y0", "x1", "y1")
+])
+
 _CELLS_SCHEMA = StructType(
     [
         StructField("polygon_id", LongType(), False),
         StructField("name", StringType(), False),
         StructField("cell_id", LongType(), False),
         StructField("is_full", BooleanType(), False),
+        StructField("_edges_k", IntegerType(), True),
+        StructField("_edges", ArrayType(ArrayType(_EDGE)), True),
     ]
 )
 
@@ -125,11 +137,50 @@ def polygon_cells(
     edges: str = "planar",
 ) -> DataFrame:
     """Explode polygons to their covering cells at ``res`` -> broadcastable
-    (polygon_id, name, cell_id, is_full) relation. ``edges`` selects the
-    planar (reference) or geodesic edge interpretation."""
-    rows = []
-    for pid, info in rings_by_id.items():
+    (polygon_id, name, cell_id, is_full, _edges_k, _edges) relation.
+    ``edges`` selects the planar (reference) or geodesic edge
+    interpretation.
+
+    A planar boundary cell (``is_full`` false) also carries its local
+    geometry for the JVM refine in ``spatial_join``: ``_edges`` holds
+    ``4**_edges_k`` child edge lists (``geo.cells.cell_edge_lists``) —
+    one list unless the cell is dense enough to split. Full cells and
+    geodesic covers carry NULL."""
+    rings, pids, names, cids, fulls, poly = [], [], [], [], [], []
+    for i, (pid, info) in enumerate(rings_by_id.items()):
+        rings.append(info["rings"])
         for cid, full in cellmod.polygon_cover(info["rings"], res,
                                                edges=edges):
-            rows.append((pid, info["name"], cid, full))
-    return local_df(spark, rows, _CELLS_SCHEMA)
+            pids.append(pid)
+            names.append(info["name"])
+            cids.append(cid)
+            fulls.append(full)
+            poly.append(i)
+    full = np.asarray(fulls, dtype=bool)
+    has = ~full if edges == "planar" else np.zeros(len(cids), dtype=bool)
+    k, sizes, x0, y0, x1, y1 = cellmod.cell_edge_lists(
+        rings, np.asarray(poly, dtype=np.int64)[has],
+        np.asarray(cids, dtype=np.int64)[has], res,
+    )
+    k_row = np.zeros(len(cids), dtype=np.int32)
+    k_row[has] = k
+    n_lists = np.where(has, np.int64(1) << (2 * k_row), 0)
+    lists = pa.ListArray.from_arrays(
+        pa.array(np.r_[0, np.cumsum(sizes)], pa.int32()),
+        pa.StructArray.from_arrays(
+            [pa.array(a, pa.float64()) for a in (x0, y0, x1, y1)],
+            names=["x0", "y0", "x1", "y1"],
+        ),
+    )
+    table = pa.table({
+        "polygon_id": pa.array(pids, pa.int64()),
+        "name": pa.array(names, pa.string()),
+        "cell_id": pa.array(cids, pa.int64()),
+        "is_full": pa.array(full, pa.bool_()),
+        "_edges_k": pa.array(k_row, mask=~has),
+        "_edges": pa.ListArray.from_arrays(
+            pa.array(np.r_[0, np.cumsum(n_lists)], pa.int32()), lists,
+            mask=pa.array(~has),
+        ),
+    })
+    return spark.createDataFrame(table, schema=_CELLS_SCHEMA)

@@ -121,10 +121,10 @@ def main() -> None:
         spark.stop()
         return
 
-    # untimed warmup run of the full pipeline: JVM codegen + Python UDF
-    # worker pool spin-up + broadcast materialization. The timed run then
-    # measures steady-state throughput — what hour-long cluster jobs see —
-    # rather than one-off process cold start.
+    # untimed warmup run of the full pipeline: JVM codegen + broadcast
+    # materialization. The timed run then measures steady-state
+    # throughput — what hour-long cluster jobs see — rather than one-off
+    # process cold start.
     run_once()
 
     t0 = time.time()

@@ -41,10 +41,27 @@ def _no_map_in_pandas(plan):
     return "mapInPandas" not in plan.lower()
 
 
+def _one_scan(plan):
+    return plan.count("Scan parquet") == 1
+
+
+def _no_union(plan):
+    return "Union" not in plan
+
+
+# the planar point-in-polygon join: one scan-and-join stage whose single
+# filter answers full cells by containment and ray-casts boundary cells
+# in the JVM — no second scan, no union, no Python
+_PIP_ONE_PASS = [_one_scan, _no_arrow, _no_union]
+
+
 # Plan shapes beyond the exchange count each query declares in its @query
 # (the comment there says why the shape holds).
 SHAPES = {
-    "pip_join": [_broadcast],
+    "pip_join": [_broadcast] + _PIP_ONE_PASS,
+    "pip_join_antimeridian": _PIP_ONE_PASS,
+    "pip_join_polar": _PIP_ONE_PASS,
+    "zonal_stats": _PIP_ONE_PASS,
     "repetition": [
         lambda plan: plan.index("Generate") < plan.index("array_distinct"),
     ],
