@@ -926,11 +926,11 @@ def _polygon_overlap_sql() -> str:
     )
 
 
-# Plan: one candidate pipeline. The pair-dedupe groupBy is the only
-# shuffle; splitting into sure/maybe branches used to re-run the whole
-# candidate subtree (2 shuffles, 2 broadcasts).
+# Plan: scan -> ONE MapInPandas (candidate cells, pair dedupe, full-cell
+# shortcut and exact refine per Arrow batch) -> Project. No explode, no
+# broadcast join, no exchange: every pair comes from one probe row.
 @query("polygon_overlap", oracle=_polygon_overlap_sql, headline=True,
-       exchanges=1)
+       exchanges=0)
 def _q_polygon_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # areal probes: a square of doc-dependent size around each doc
     # point, joined to the rectangle layer by the exact "intersects"
@@ -3487,10 +3487,10 @@ def _clip_rects_sql() -> str:
 
 # clip_rects: closed-form interval products on the integer
 # lattice — exact vs the overlay's shoelace areas
-# Plan: clip_join rides the polygon_overlap pipeline. ONE shuffle (the
-# pair-dedupe groupBy), broadcast cover join, geometry only in the
-# mapInPandas tail.
-@query("clip_rects", oracle=_clip_rects_sql, folded=True, exchanges=1)
+# Plan: clip_join rides the polygon_overlap shape: scan -> ONE
+# MapInPandas (candidates + overlay per Arrow batch) -> Project, no
+# exchange.
+@query("clip_rects", oracle=_clip_rects_sql, folded=True, exchanges=0)
 def _q_clip_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     # boolean-overlay clip (round 7): per (probe, layer polygon) pair
     # the INTERSECTION GEOMETRY's shoelace area. Probes are integer-
@@ -3575,10 +3575,10 @@ def _areal_interp_sql() -> str:
 
 
 # areal_interp: dyadic weights => order-free double sums
-# Plan: clip pipeline (1) + the value join + final partial-agg groupBy = 2
-# exchanges. Source areas ride OUT of the clip kernel (_with_src_area), so
-# the round-7 third parse pass and its join are gone.
-@query("areal_interp", oracle=_areal_interp_sql, folded=True, exchanges=2)
+# Plan: the clip stage (no exchange) + the broadcast value join + the
+# final partial-agg groupBy = 1 exchange. Source areas ride OUT of the clip
+# kernel (_with_src_area), so there is no separate parse pass.
+@query("areal_interp", oracle=_areal_interp_sql, folded=True, exchanges=1)
 def _q_areal_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # area-weighted areal interpolation (round 7): probe rect AREAS
     # are powers of two (w in {1,2,4}, h in {1,2}), so every term
@@ -4061,10 +4061,10 @@ def _rect_distance_sql() -> str:
 
 
 # rect_distance: dyadic rects => kernel == closed-form gap
-# Plan: polygon_distance_join rides the overlap-join pipeline. One shuffle
-# (pair-dedupe groupBy), broadcast cover join, geometry only in the
-# mapInPandas tail.
-@query("rect_distance", oracle=_rect_distance_sql, folded=True, exchanges=1)
+# Plan: polygon_distance_join rides the polygon_overlap shape (candidate
+# window grown by max_dist): scan -> ONE MapInPandas -> Project, no
+# exchange.
+@query("rect_distance", oracle=_rect_distance_sql, folded=True, exchanges=0)
 def _q_rect_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-distance polygon join (operators/distance.py) on dyadic
     rect fixtures: probes are power-of-two rects derived from doc_id,

@@ -10,18 +10,16 @@ every intersecting layer polygon (erase). The boolean-op kernel is
 the dissolve union, so integer-lattice inputs keep EXACT areas (the
 oracle contract) and output WKT is deterministic.
 
-Plan shape (the overlap join's recipe, geometry-bearing tail):
-
-1. one Arrow pass extracts probe bboxes (WKT parsed once, malformed
-   rows drop — P8 semantics);
-2. candidate cells via pure-column ``sequence`` explode, broadcast
-   equi-join against the layer's cover cells (zero shuffle of the
-   probe side);
-3. the FULL-CELL shortcut upgrades to geometry: a probe bbox inside a
-   provably-interior cover cell is CONTAINED, so its intersection is
-   the probe itself (no overlay runs) and an erase drops it entirely;
-4. only boundary-ambiguous pairs run the overlay kernel,
-   Arrow-batched, layer rings from the broadcast driver dict.
+Plan shape (the overlap join's, geometry-bearing refine): scan -> ONE
+``MapInPandas`` (``spatial_join.layer_candidate_map``), no exchange.
+Per Arrow batch the probe bboxes, the candidate pairs against the
+layer's sorted cover and the FULL-CELL shortcut run in numpy; the
+shortcut upgrades to geometry: a probe bbox inside a provably-interior
+cover cell is CONTAINED, so its intersection is the probe itself (no
+overlay runs) and an erase drops it entirely. Only boundary-ambiguous
+pairs run the overlay kernel, each probe parsed once per batch, layer
+rings from the driver dict in the closure. ``id_col`` is carried, not
+grouped on: every probe row is answered on its own geometry.
 
 The reference has no boolean-ops surface (nearest analogue: ring
 assembly, ref ppge/pyshp/__init__.py:351-473); this is an engine
@@ -30,77 +28,31 @@ extension in the dissolve_geometry family.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StringType, StructField
 
-from ..functions.geom_udfs import grid_xy_cols
-from ..sources.polygons import load_rings, polygon_cells
-from .spatial_join import DEFAULT_RES, attach_probe_bboxes
+from ..sources.polygons import load_rings
+from .spatial_join import (
+    DEFAULT_RES,
+    PAIR_FIELDS,
+    ProbeBatch,
+    layer_candidate_map,
+)
 
 __all__ = ["clip_join", "erase_join"]
 
 
-def _areal_polys(geom: dict):
+def _areal_polys(geom):
     """Parsed geometry dict -> list of even-odd ring lists (one per
-    Polygon member), or None for non-areal input."""
-    t = geom.get("type")
+    Polygon member), or None for non-areal or unparsed input."""
+    t = geom.get("type") if geom else None
     if t == "Polygon":
         return [geom["coordinates"]]
     if t == "MultiPolygon":
         return list(geom["coordinates"])
     return None
-
-
-def _candidate_pairs(probes, rings_by_id, res, edges, id_col,
-                     wkt_col):
-    """Shared candidate pipeline -> (id, polygon_id, name, _wkt,
-    _sure) pair relation with the full-cell containment shortcut."""
-    geodesic = edges == "geodesic"
-    cover = polygon_cells(
-        probes.sparkSession, rings_by_id, res, edges=edges
-    )
-    src = probes.select(F.col(id_col),
-                        F.col(wkt_col).alias("_wkt"))
-    with_bbox = attach_probe_bboxes(src, geodesic)
-    n = 1 << res
-    gx0, gy0 = grid_xy_cols(F.col("_xmin"), F.col("_ymin"), res)
-    gx1, gy1 = grid_xy_cols(F.col("_xmax"), F.col("_ymax"), res)
-    cand = (
-        with_bbox
-        .withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn(
-            "cell_id",
-            (F.lit(res * (2 ** 58)) + F.col("_gx") * F.lit(2 ** 29)
-             + F.col("_gy")).cast("long"),
-        )
-    )
-    cx0 = F.col("_gx").cast("double") / F.lit(float(n)) * 360.0 - 180.0
-    cx1 = (F.col("_gx") + 1).cast("double") / F.lit(float(n)) * 360.0 \
-        - 180.0
-    cy0 = F.col("_gy").cast("double") / F.lit(float(n)) * 180.0 - 90.0
-    cy1 = (F.col("_gy") + 1).cast("double") / F.lit(float(n)) * 180.0 \
-        - 90.0
-    shortcut = (
-        F.col("is_full")
-        & (F.col("_xmin") >= cx0) & (F.col("_xmax") <= cx1)
-        & (F.col("_ymin") >= cy0) & (F.col("_ymax") <= cy1)
-    )
-    return (
-        cand.join(F.broadcast(cover), "cell_id")
-        .withColumn("_sure", shortcut)
-        .groupBy(id_col, "polygon_id", "name")
-        .agg(
-            F.first("_wkt").alias("_wkt"),
-            F.max("_sure").alias("_sure"),
-        )
-    )
 
 
 def _densify(polys, max_sagitta_rad):
@@ -110,6 +62,45 @@ def _densify(polys, max_sagitta_rad):
         [densify_ring_geodesic(r, max_sagitta_rad) for r in rings]
         for rings in polys
     ]
+
+
+def _overlay_map(probes, polygons, res, id_col, wkt_col, edges,
+                 max_sagitta_rad, fields, refine):
+    """Shared set-up of clip and erase: ``refine(b, probe_polys,
+    layer_polys)`` runs in ``layer_candidate_map`` with accessors for a
+    row's areal probe (None when not areal; memoized per batch) and a
+    layer polygon's ring lists, both densified under geodesic edges."""
+    geodesic = edges == "geodesic"
+    rings_by_id = load_rings(polygons)
+    layer_rings = {
+        int(pid): info["rings"] for pid, info in rings_by_id.items()
+    }
+    lr_cache: dict = {}
+
+    def layer_polys(pid):
+        got = lr_cache.get(pid)
+        if got is None:
+            got = [layer_rings[pid]]
+            if geodesic:
+                got = _densify(got, max_sagitta_rad)
+            lr_cache[pid] = got
+        return got
+
+    def kernel(b: ProbeBatch):
+        memo: dict = {}
+
+        def probe_polys(i):
+            if i not in memo:
+                got = _areal_polys(b.probe(i))
+                if got is not None and geodesic:
+                    got = _densify(got, max_sagitta_rad)
+                memo[i] = got
+            return memo[i]
+
+        return refine(b, probe_polys, layer_polys)
+
+    return layer_candidate_map(probes, rings_by_id, res, edges, id_col,
+                               wkt_col, fields, kernel)
 
 
 def clip_join(
@@ -122,9 +113,9 @@ def clip_join(
     max_sagitta_rad: float = 2e-5,
     _with_src_area: bool = False,
 ) -> DataFrame:
-    """Identity/clip tabulation -> one row per (probe, layer polygon)
-    with NON-EMPTY intersection: ``(id, polygon_id, name, area,
-    wkt)``.
+    """Identity/clip tabulation -> one row per (probe row, layer
+    polygon) with NON-EMPTY intersection: ``(id, polygon_id, name,
+    area, wkt)``.
 
     ``area`` is the net shoelace area of the intersection rings —
     exact on integer-lattice fixtures (the bit-level oracle contract).
@@ -133,24 +124,12 @@ def clip_join(
     output WKT conventions match the clipped rows). Non-areal probes
     drop; geodesic edges follow the densify-then-planar recipe
     dissolve_geometry uses."""
-    import pandas as pd
-
     from ..geo import wkt as wktmod
     from ..geo.overlay import overlay_polygons, union_area, \
         union_polygons
     from .dissolve import overlay_geometry_dict
 
-    geodesic = edges == "geodesic"
-    rings_by_id = load_rings(polygons)
-    pairs = _candidate_pairs(probes, rings_by_id, res, edges,
-                             id_col, wkt_col)
-    layer_rings = {
-        int(pid): info["rings"] for pid, info in rings_by_id.items()
-    }
-    out_fields = [
-        pairs.schema[id_col],
-        pairs.schema["polygon_id"],
-        pairs.schema["name"],
+    fields = PAIR_FIELDS + [
         StructField("area", DoubleType(), True),
         StructField("wkt", StringType(), True),
     ]
@@ -158,68 +137,43 @@ def clip_join(
         # areal_interpolate rides along: the probe is already parsed
         # here, so its canonical union area costs one more union call
         # instead of a whole third Arrow parse pass over the probes
-        out_fields.append(StructField("_src_area", DoubleType(), True))
-    out_schema = StructType(out_fields)
+        fields.append(StructField("_src_area", DoubleType(), True))
 
-    def kernel(batches):
-        lr_cache: dict = {}
-
-        def layer_polys(pid):
-            got = lr_cache.get(pid)
-            if got is None:
-                got = [layer_rings[pid]]
-                if geodesic:
-                    got = _densify(got, max_sagitta_rad)
-                lr_cache[pid] = got
-            return got
-
-        for pdf in batches:
-            ids, pids, names, areas, wkts = [], [], [], [], []
-            srcs = []
-            src_cache: dict = {}
-            for rid, pid, name, s, sure in zip(
-                pdf[id_col], pdf["polygon_id"], pdf["name"],
-                pdf["_wkt"], pdf["_sure"],
-            ):
-                try:
-                    probe = _areal_polys(wktmod.loads(s))
-                except Exception:
-                    probe = None
-                if probe is None:
-                    continue
-                if geodesic:
-                    probe = _densify(probe, max_sagitta_rad)
-                if sure:
-                    # contained: intersection == probe; run the
-                    # single-region union for canonical output form
-                    out = overlay_polygons(probe, [], "union")
-                else:
-                    out = overlay_polygons(
-                        probe, layer_polys(int(pid)), "intersection"
-                    )
-                if not out:
-                    continue
-                ids.append(rid)
-                pids.append(pid)
-                names.append(name)
-                areas.append(union_area(out))
-                wkts.append(wktmod.dumps(overlay_geometry_dict(out)))
-                if _with_src_area:
-                    a = src_cache.get(rid)
-                    if a is None:
-                        u = union_polygons(probe)
-                        a = union_area(u) if u else 0.0
-                        src_cache[rid] = a
-                    srcs.append(a)
-            cols = {
-                id_col: ids, "polygon_id": pids, "name": names,
-                "area": areas, "wkt": wkts,
-            }
+    def refine(b, probe_polys, layer_polys):
+        sel, areas, wkts, srcs = [], [], [], []
+        src_cache: dict = {}
+        for j, (i, pid, sure) in enumerate(zip(b.row, b.polygon_id,
+                                               b.sure)):
+            probe = probe_polys(i)
+            if probe is None:
+                continue
+            if sure:
+                # contained: intersection == probe; run the
+                # single-region union for canonical output form
+                out = overlay_polygons(probe, [], "union")
+            else:
+                out = overlay_polygons(
+                    probe, layer_polys(int(pid)), "intersection"
+                )
+            if not out:
+                continue
+            sel.append(j)
+            areas.append(union_area(out))
+            wkts.append(wktmod.dumps(overlay_geometry_dict(out)))
             if _with_src_area:
-                cols["_src_area"] = srcs
-            yield pd.DataFrame(cols)
+                a = src_cache.get(i)
+                if a is None:
+                    u = union_polygons(probe)
+                    a = union_area(u) if u else 0.0
+                    src_cache[i] = a
+                srcs.append(a)
+        cols = {"area": areas, "wkt": wkts}
+        if _with_src_area:
+            cols["_src_area"] = srcs
+        return b.pair_frame(np.asarray(sel, dtype=np.int64), **cols)
 
-    return pairs.mapInPandas(kernel, out_schema)
+    return _overlay_map(probes, polygons, res, id_col, wkt_col, edges,
+                        max_sagitta_rad, fields, refine)
 
 
 def erase_join(
@@ -231,106 +185,53 @@ def erase_join(
     edges: str = "planar",
     max_sagitta_rad: float = 2e-5,
 ) -> DataFrame:
-    """Erase -> per-probe remainder after subtracting EVERY
+    """Erase -> per-probe-row remainder after subtracting EVERY
     intersecting layer polygon: ``(id, area, wkt)``.
 
     Probes untouched by the layer pass through whole (same canonical
     ring conventions); probes fully inside a layer polygon (full-cell
-    shortcut, or an overlay that consumes them) vanish. One shuffle:
-    candidate pairs group by probe id so each probe's subtraction
-    runs once against all of its layer candidates."""
+    shortcut, or an overlay that consumes them) vanish, and so do
+    malformed and non-areal rows. A probe's candidates all come from
+    its own row, so each subtraction runs once against all of them in
+    the scan's own task: no grouping, no shuffle."""
     import pandas as pd
 
     from ..geo import wkt as wktmod
     from ..geo.overlay import overlay_polygons, union_area
     from .dissolve import overlay_geometry_dict
 
-    geodesic = edges == "geodesic"
-    rings_by_id = load_rings(polygons)
-    # pairs feeds BOTH branches (the erase kernel and the untouched
-    # anti-join): materialize once or the whole bbox-parse + explode +
-    # cover-join pipeline executes twice per action (the
-    # near_duplicates_minhash / dissolve materialize-first rule)
-    pairs = _candidate_pairs(probes, rings_by_id, res, edges,
-                             id_col, wkt_col).localCheckpoint(
-                                 eager=True)
-    layer_rings = {
-        int(pid): info["rings"] for pid, info in rings_by_id.items()
-    }
-    touched = (
-        pairs.groupBy(id_col)
-        .agg(
-            F.first("_wkt").alias("_wkt"),
-            F.collect_set("polygon_id").alias("_pids"),
-            F.max("_sure").alias("_sure"),
-        )
-    )
-    out_schema = StructType([
-        pairs.schema[id_col],
-        StructField("area", DoubleType(), True),
-        StructField("wkt", StringType(), True),
-    ])
+    def refine(b, probe_polys, layer_polys):
+        rows = np.arange(len(b.ids))
+        lo = np.searchsorted(b.row, rows, "left")
+        hi = np.searchsorted(b.row, rows, "right")
+        sel, areas, wkts = [], [], []
+        for i in np.flatnonzero(b.live):
+            if b.sure[lo[i]:hi[i]].any():
+                continue  # contained in some layer polygon: erased
+            probe = probe_polys(i)
+            if probe is None:
+                continue
+            others = [r for p in b.polygon_id[lo[i]:hi[i]]
+                      for r in layer_polys(int(p))]
+            # untouched probes pass through, canonicalized through the
+            # same overlay for a uniform contract
+            out = (overlay_polygons(probe, others, "difference") if others
+                   else overlay_polygons(probe, [], "union"))
+            if not out:
+                continue
+            sel.append(i)
+            areas.append(union_area(out))
+            wkts.append(wktmod.dumps(overlay_geometry_dict(out)))
+        return pd.DataFrame({
+            id_col: b.ids.iloc[sel].reset_index(drop=True),
+            "area": areas, "wkt": wkts,
+        })
 
-    def kernel(batches):
-        for pdf in batches:
-            ids, areas, wkts = [], [], []
-            for rid, s, pids, sure in zip(
-                pdf[id_col], pdf["_wkt"], pdf["_pids"], pdf["_sure"]
-            ):
-                if sure:
-                    continue  # contained in some layer polygon: erased
-                try:
-                    probe = _areal_polys(wktmod.loads(s))
-                except Exception:
-                    probe = None
-                if probe is None:
-                    continue
-                b = [layer_rings[int(p)] for p in pids]
-                if geodesic:
-                    probe = _densify(probe, max_sagitta_rad)
-                    b = _densify(b, max_sagitta_rad)
-                out = overlay_polygons(probe, b, "difference")
-                if not out:
-                    continue
-                ids.append(rid)
-                areas.append(union_area(out))
-                wkts.append(wktmod.dumps(overlay_geometry_dict(out)))
-            yield pd.DataFrame({
-                id_col: ids, "area": areas, "wkt": wkts,
-            })
-
-    erased = touched.mapInPandas(kernel, out_schema)
-
-    # untouched probes (no layer candidates at all) pass through whole,
-    # canonicalized through the same overlay for a uniform contract
-    untouched = probes.select(
-        F.col(id_col), F.col(wkt_col).alias("_wkt")
-    ).join(pairs.select(id_col).distinct(), id_col, "left_anti")
-
-    def passthrough(batches):
-        for pdf in batches:
-            ids, areas, wkts = [], [], []
-            for rid, s in zip(pdf[id_col], pdf["_wkt"]):
-                try:
-                    probe = _areal_polys(wktmod.loads(s))
-                except Exception:
-                    probe = None
-                if probe is None:
-                    continue
-                if geodesic:
-                    probe = _densify(probe, max_sagitta_rad)
-                out = overlay_polygons(probe, [], "union")
-                if not out:
-                    continue
-                ids.append(rid)
-                areas.append(union_area(out))
-                wkts.append(wktmod.dumps(overlay_geometry_dict(out)))
-            yield pd.DataFrame({
-                id_col: ids, "area": areas, "wkt": wkts,
-            })
-
-    return erased.unionByName(
-        untouched.mapInPandas(passthrough, out_schema)
+    return _overlay_map(
+        probes, polygons, res, id_col, wkt_col, edges, max_sagitta_rad,
+        [StructField("area", DoubleType(), True),
+         StructField("wkt", StringType(), True)],
+        refine,
     )
 
 

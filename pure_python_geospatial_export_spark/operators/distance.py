@@ -4,19 +4,18 @@ PLANAR region distance is <= a threshold, with the exact distance.
 The distance member of the spatial-predicate family (intersects:
 ``spatial_join.polygon_overlap_join``; point containment:
 ``spatial_join.spatial_join``; point radius: ``knn.radius_join``) —
-"find parcels within 100 m of a river polygon". Same plan recipe as
-the overlap join, with the candidate window WIDENED by the threshold:
+"find parcels within 100 m of a river polygon". Same plan as the
+overlap join (scan -> ONE ``MapInPandas``, no exchange), with the
+candidate window WIDENED by the threshold:
 
-1. one Arrow pass extracts probe bboxes (WKT parsed once, malformed
-   rows drop);
-2. candidate cells come from the bbox EXPANDED by ``max_dist`` on
-   every side — if region distance <= D, the closest layer point lies
-   within Chebyshev D of the probe bbox, so the expanded bbox hits
-   one of the layer's cover cells (completeness);
-3. broadcast equi-join against the layer cover, pair dedupe with the
-   full-cell shortcut (a probe inside a provably-interior cell
-   INTERSECTS: distance 0 with no geometry);
-4. unresolved pairs run exact geometry: intersection/containment test
+1. candidate cells come from the probe bbox EXPANDED by ``max_dist``
+   on every side — if region distance <= D, the closest layer point
+   lies within Chebyshev D of the probe bbox, so the expanded bbox
+   hits one of the layer's cover cells (completeness);
+2. the full-cell shortcut still tests the UNexpanded bbox (a probe
+   inside a provably-interior cell INTERSECTS: distance 0 with no
+   geometry);
+3. unresolved pairs run exact geometry: intersection/containment test
    first (region distance 0), else the endpoint-complete boundary
    kernel ``geo.dist.rings_min_dist2`` (exact — for disjoint
    segments the min is attained at an endpoint of one of them).
@@ -35,12 +34,20 @@ from __future__ import annotations
 from functools import reduce
 from typing import Dict, Optional
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.polygons import load_rings, polygon_cells
+from ..sources.polygons import load_rings
 from .fixpoint import checkpoint, fixpoint, frontier_empty
-from .spatial_join import DEFAULT_RES, _probe_parts, attach_probe_bboxes
+from .spatial_join import (
+    DEFAULT_RES,
+    PAIR_FIELDS,
+    ProbeBatch,
+    _probe_parts,
+    attach_probe_bboxes,
+    layer_candidate_map,
+)
 
 __all__ = ["polygon_distance_join", "nearest_polygon_join"]
 
@@ -55,16 +62,14 @@ def polygon_distance_join(
     rings_by_id: Optional[Dict[int, dict]] = None,
     edges: str = "planar",
 ) -> DataFrame:
-    """-> (id_col, polygon_id, name, dist2, dist) for pairs with
-    region distance <= ``max_dist``. Accepts Polygon/MultiPolygon and
-    LineString/MultiLineString probes (lines measure chain-to-boundary
-    distance; a line inside a polygon is distance 0)."""
-    import pandas as pd
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    """-> (id_col, polygon_id, name, dist2, dist), one row per (probe
+    row, layer polygon) with region distance <= ``max_dist``. Accepts
+    Polygon/MultiPolygon and LineString/MultiLineString probes (lines
+    measure chain-to-boundary distance; a line inside a polygon is
+    distance 0). ``id_col`` is carried, not grouped on."""
+    from pyspark.sql.types import DoubleType, StructField
 
-    from ..functions.geom_udfs import grid_xy_cols
     from ..geo import kernels
-    from ..geo import wkt as wktmod
     from ..geo.dist import rings_min_dist2
 
     if edges != "planar":
@@ -77,100 +82,34 @@ def polygon_distance_join(
     d = float(max_dist)
     if rings_by_id is None:
         rings_by_id = load_rings(polygons)
-    cover = polygon_cells(probes.sparkSession, rings_by_id, res)
-
-    src = probes.select(F.col(id_col), F.col(wkt_col).alias("_wkt"))
-    with_bbox = attach_probe_bboxes(src, geodesic=False)
-
-    n = 1 << res
-    # candidate window: bbox expanded by the threshold (clamped to the
-    # grid domain by grid_xy_cols' own clamp)
-    gx0, gy0 = grid_xy_cols(
-        F.col("_xmin") - F.lit(d), F.col("_ymin") - F.lit(d), res
-    )
-    gx1, gy1 = grid_xy_cols(
-        F.col("_xmax") + F.lit(d), F.col("_ymax") + F.lit(d), res
-    )
-    cand = (
-        with_bbox
-        .withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn(
-            "cell_id",
-            (F.lit(res * (2 ** 58)) + F.col("_gx") * F.lit(2 ** 29)
-             + F.col("_gy")).cast("long"),
-        )
-    )
-    cx0 = F.col("_gx").cast("double") / F.lit(float(n)) * 360.0 - 180.0
-    cx1 = (F.col("_gx") + 1).cast("double") / F.lit(float(n)) * 360.0 \
-        - 180.0
-    cy0 = F.col("_gy").cast("double") / F.lit(float(n)) * 180.0 - 90.0
-    cy1 = (F.col("_gy") + 1).cast("double") / F.lit(float(n)) * 180.0 \
-        - 90.0
-    shortcut = (
-        F.col("is_full")
-        & (F.col("_xmin") >= cx0) & (F.col("_xmax") <= cx1)
-        & (F.col("_ymin") >= cy0) & (F.col("_ymax") <= cy1)
-    )
-
-    pairs = (
-        cand.join(F.broadcast(cover), "cell_id")
-        .withColumn("_sure", shortcut)
-        .groupBy(id_col, "polygon_id", "name")
-        .agg(
-            F.first("_wkt").alias("_wkt"),
-            F.max("_sure").alias("_sure"),
-        )
-    )
-
-    out_schema = StructType([
-        pairs.schema[id_col],
-        pairs.schema["polygon_id"],
-        pairs.schema["name"],
-        StructField("dist2", DoubleType(), True),
-    ])
     layer_rings = {
         int(pid): info["rings"] for pid, info in rings_by_id.items()
     }
     d2max = d * d
 
-    def refine_kernel(batches):
-        for pdf in batches:
-            out = []
-            for s, pid, sure in zip(pdf["_wkt"], pdf["polygon_id"],
-                                    pdf["_sure"]):
-                if sure:
-                    out.append(0.0)
-                    continue
-                try:
-                    kind, parts = _probe_parts(wktmod.loads(s))
-                    lr = layer_rings[int(pid)]
-                    hit = (
-                        kernels.polygons_intersect(parts, lr)
-                        if kind == "area"
-                        else kernels.lines_intersect_polygon(parts, lr)
-                    )
-                    if hit:
-                        out.append(0.0)
-                        continue
-                    d2 = rings_min_dist2(
-                        parts, lr, closed_a=(kind == "area")
-                    )
-                    out.append(d2 if d2 <= d2max else None)
-                except Exception:
-                    out.append(None)
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "polygon_id": pdf["polygon_id"],
-                "name": pdf["name"],
-                "dist2": out,
-            })
+    def refine(b: ProbeBatch):
+        d2 = np.where(b.sure, 0.0, np.nan)
+        for j in np.flatnonzero(~b.sure):
+            try:
+                kind, parts = _probe_parts(b.probe(b.row[j]))
+                lr = layer_rings[int(b.polygon_id[j])]
+                hit = (
+                    kernels.polygons_intersect(parts, lr)
+                    if kind == "area"
+                    else kernels.lines_intersect_polygon(parts, lr)
+                )
+                d2[j] = 0.0 if hit else rings_min_dist2(
+                    parts, lr, closed_a=(kind == "area"))
+            except Exception:
+                pass
+        ok = d2 <= d2max  # NaN (no answer) compares False
+        return b.pair_frame(ok, dist2=d2[ok])
 
-    return (
-        pairs.mapInPandas(refine_kernel, out_schema)
-        .where(F.col("dist2").isNotNull())
-        .withColumn("dist", F.sqrt(F.col("dist2")))
-    )
+    return layer_candidate_map(
+        probes, rings_by_id, res, edges, id_col, wkt_col,
+        PAIR_FIELDS + [StructField("dist2", DoubleType(), True)],
+        refine, pad=d,
+    ).withColumn("dist", F.sqrt(F.col("dist2")))
 
 
 def nearest_polygon_join(

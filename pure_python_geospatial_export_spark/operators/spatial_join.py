@@ -28,15 +28,22 @@ join (enabled in session defaults) is the runtime backstop.
 from __future__ import annotations
 
 import math
-from typing import Dict, Optional
+from typing import Callable, Dict, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.geom_udfs import cell_id_col
-from ..sources.polygons import load_rings, polygon_cells
+from ..geo import cells as cellmod
+from ..sources.polygons import (
+    LayerCover,
+    layer_cover,
+    load_rings,
+    polygon_cells,
+)
 
 DEFAULT_RES = 7
 
@@ -48,6 +55,21 @@ def points_with_cell(
     return points.withColumn(
         "cell_id", cell_id_col(F.col(lon), F.col(lat), res)
     )
+
+
+def _points_with_join_cell(points: DataFrame, res: int) -> DataFrame:
+    """``points_with_cell`` for a cell join against a cover.
+
+    A NaN ordinate has no cell, but Spark's FLOOR(NaN) is 0: the point
+    would land in x = 0 or y = 0 and be kept where that cell is full. It
+    is keyed to -1, which no cover holds, so the join drops it in the scan
+    stage. A Filter on lon/lat would do the same, but Catalyst pushes it
+    below the points' projection and evaluates their derivation (sha256
+    of the url) once more per row."""
+    lon, lat = F.col("lon"), F.col("lat")
+    return points.withColumn("cell_id", F.when(
+        F.isnan(lon) | F.isnan(lat), F.lit(-1)
+    ).otherwise(cell_id_col(lon, lat, res)))
 
 
 def spatial_join(
@@ -82,7 +104,7 @@ def spatial_join(
         rings_by_id = load_rings(polygons)
     if cover is None:
         cover = polygon_cells(spark, rings_by_id, res, edges=edges)
-    pts = points_with_cell(points, res)
+    pts = _points_with_join_cell(points, res)
 
     if strategy == "broadcast":
         joined = pts.join(F.broadcast(cover), "cell_id")
@@ -98,9 +120,12 @@ def spatial_join(
             int(r["cell_id"]): int(math.ceil(r["count"] / hot_cell_threshold))
             for r in hist
         }
-        salt_map = F.create_map(
-            *[F.lit(v) for kv in salt_of.items() for v in kv]
-        ) if salt_of else None
+        # long keys: a small Python int would type the map's keys INT,
+        # and the lookup would then cast every cell id down (ANSI raises)
+        salt_map = F.create_map(*[
+            c for k, v in salt_of.items()
+            for c in (F.lit(k).cast("long"), F.lit(v))
+        ]) if salt_of else None
         if salt_map is not None:
             pts = pts.withColumn(
                 "_salt_n", F.coalesce(salt_map[F.col("cell_id")], F.lit(1))
@@ -280,7 +305,7 @@ def spatial_join_big_layer(
         "polygon_id long, name string, cell_id long, is_full boolean",
     )
 
-    pts = points_with_cell(points, res)
+    pts = _points_with_join_cell(points, res)
     joined = pts.join(cover, "cell_id")
     full_rows = joined.where(F.col("is_full")).drop("is_full")
 
@@ -335,14 +360,24 @@ def _probe_parts(geom: dict):
     return kind, vertex_parts(geom)
 
 
-def _geodesic_bounds(s):
-    """Per-row (padded bbox, vertex bbox) of one probe WKT under
-    geodesic edges, 8 floats; all-NaN for a malformed row."""
+def _loads_or_none(s):
+    """Parsed WKT geometry dict, or None for a null or malformed row."""
     from ..geo import wkt as wktmod
+
+    try:
+        return wktmod.loads(s)
+    except Exception:
+        return None
+
+
+def _geodesic_bounds(geom):
+    """Per-row (padded bbox, vertex bbox) of one parsed probe geometry
+    under geodesic edges, 8 floats; all-NaN for None or a non-linear,
+    non-areal geometry."""
     from ..geo.geodesic import unit_vectors
 
     try:
-        _kind, rings = _probe_parts(wktmod.loads(s))
+        _kind, rings = _probe_parts(geom)
         arr = np.concatenate([
             np.asarray(r, dtype=np.float64)[:, :2] for r in rings
         ])
@@ -377,8 +412,10 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     by the worst great-circle sagitta so arc bulges can't escape the
     candidate cells derived from it; ``include_raw`` additionally emits
     the UNpadded vertex bbox as ``_rxmin/_rymin/_rxmax/_rymax`` (the
-    reporting extent — same kernel pass, no extra parse). Shared by the
-    probe-vs-layer overlap join and the self-overlap dissolve.
+    reporting extent — same kernel pass, no extra parse). Used by the
+    self-overlap dissolve, its streaming twin and the nearest-polygon
+    join's parseable-probe filter; the probe-vs-layer joins take the
+    same bounds inside their one pass (``layer_candidate_map``).
 
     Planar bboxes come from ``wkt.bounds_batch``: rows in its strict
     2-D POLYGON / MULTIPOLYGON / LINESTRING / MULTILINESTRING grammar
@@ -406,7 +443,8 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
         for pdf in batches:
             if geodesic:
                 b = np.array(
-                    [_geodesic_bounds(s) for s in pdf["_wkt"]],
+                    [_geodesic_bounds(_loads_or_none(s))
+                     for s in pdf["_wkt"]],
                     dtype=np.float64,
                 ).reshape(-1, 8)
             else:
@@ -419,6 +457,157 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     )
 
 
+# ---------------------------------------------------------------------------
+# polygon-vs-layer joins: one per-partition candidate stage
+# ---------------------------------------------------------------------------
+
+def _grid(v, off: float, span: float, n: int) -> np.ndarray:
+    """``grid_xy_cols`` in numpy, bit for bit: the same floor in the same
+    operation order, NaN to 0 as Spark's FLOOR gives it, then clamped AS
+    A FLOAT before the int cast. Spark's FLOOR saturates +inf to the top
+    cell; ``cells.cell_xy`` casts first and would send it to cell 0."""
+    g = np.floor((v + off) / span * n)
+    g[np.isnan(g)] = 0.0
+    return np.clip(g, 0, n - 1).astype(np.int64)
+
+
+def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + c)`` over (starts, counts)."""
+    if not len(counts):
+        return np.empty(0, dtype=np.int64)
+    ends = np.cumsum(counts)
+    return np.repeat(starts - ends + counts, counts) + np.arange(ends[-1])
+
+
+def candidate_cells(bounds: np.ndarray, cover: LayerCover, res: int,
+                    pad: float = 0.0):
+    """Candidate cells of a batch of probe bboxes -> (row, k, sure): one
+    entry per (probe row, cover entry ``k``) whose cell lies in the row's
+    grid window, the window of the bbox grown by ``pad`` on every side.
+
+    The window is ``grid_xy_cols`` of the padded bbox corners (``_grid``);
+    each window column is one ``searchsorted`` range of the sorted cover
+    (cell ids are ``r*2^58 + x*2^29 + y``, so a column's cells are
+    contiguous). ``sure`` is the full-cell shortcut: the cover cell is
+    provably interior and the UNpadded bbox sits inside its rectangle,
+    whose bounds are ``gx / n * 360.0 - 180.0`` in that operation order.
+    A row with any NaN bound has no candidates (the P8 drop)."""
+    n = 1 << res
+    rows = np.flatnonzero(~np.isnan(bounds).any(axis=1))
+    xmin, ymin, xmax, ymax = bounds[rows].T
+    gx0 = _grid(xmin - pad, 180.0, 360.0, n)
+    gy0 = _grid(ymin - pad, 90.0, 180.0, n)
+    gx1 = _grid(xmax + pad, 180.0, 360.0, n)
+    gy1 = _grid(ymax + pad, 90.0, 180.0, n)
+    cols = gx1 - gx0 + 1
+    r = np.repeat(np.arange(len(rows)), cols)
+    base = np.int64(res) * (np.int64(1) << 58) \
+        + _ranges(gx0, cols) * (np.int64(1) << 29)
+    lo = np.searchsorted(cover.cell_id, base + gy0[r], "left")
+    hi = np.searchsorted(cover.cell_id, base + gy1[r], "right")
+    r = np.repeat(r, hi - lo)
+    k = _ranges(lo, hi - lo)
+    gx, gy, _ = cellmod.decode(cover.cell_id[k])
+    f = float(n)
+    sure = (
+        cover.is_full[k]
+        & (xmin[r] >= gx / f * 360.0 - 180.0)
+        & (xmax[r] <= (gx + 1) / f * 360.0 - 180.0)
+        & (ymin[r] >= gy / f * 180.0 - 90.0)
+        & (ymax[r] <= (gy + 1) / f * 180.0 - 90.0)
+    )
+    return rows[r], k, sure
+
+
+def candidate_pairs(bounds: np.ndarray, cover: LayerCover, res: int,
+                    pad: float = 0.0):
+    """``candidate_cells`` deduped to (row, polygon_id, sure), sorted by
+    row then polygon id; ``sure`` is OR-ed over the pair's cells."""
+    row, k, sure = candidate_cells(bounds, cover, res, pad)
+    pid = cover.polygon_id[k]
+    order = np.lexsort((pid, row))
+    row, pid, sure = row[order], pid[order], sure[order]
+    first = np.ones(len(row), dtype=bool)
+    first[1:] = (row[1:] != row[:-1]) | (pid[1:] != pid[:-1])
+    out = np.zeros(int(first.sum()), dtype=bool)
+    out[(np.cumsum(first) - 1)[sure]] = True
+    return row[first], pid[first], out
+
+
+#: the (polygon_id, name) output columns of a per-pair join
+PAIR_FIELDS = [StructField("polygon_id", LongType(), False),
+               StructField("name", StringType(), True)]
+
+
+class ProbeBatch(NamedTuple):
+    """One Arrow batch of probes after the candidate stage."""
+
+    id_col: str
+    ids: pd.Series          # the probe id column
+    probe: Callable         # row -> parsed geometry (None if malformed)
+    live: np.ndarray        # bool per row: the bbox is defined
+    row: np.ndarray         # candidate pairs, sorted by row
+    polygon_id: np.ndarray
+    sure: np.ndarray        # full-cell shortcut hit
+    names: dict             # layer polygon id -> name
+
+    def pair_frame(self, sel, **cols):
+        """Output rows (id, polygon_id, name, **cols) of pairs ``sel``."""
+        pid = self.polygon_id[sel]
+        return pd.DataFrame({
+            self.id_col: self.ids.iloc[self.row[sel]].reset_index(drop=True),
+            "polygon_id": pid, "name": [self.names[p] for p in pid], **cols,
+        })
+
+
+def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
+                        res: int, edges: str, id_col: str, wkt_col: str,
+                        fields: list, refine: Callable,
+                        pad: float = 0.0) -> DataFrame:
+    """The polygon-vs-layer joins' ONE Python stage over the probe scan:
+    ``mapInPandas`` whose kernel, per Arrow batch, takes probe bboxes
+    (``wkt.bounds_batch``; under geodesic edges the sagitta-padded
+    ``_geodesic_bounds``), runs ``candidate_pairs`` against the layer's
+    ``layer_cover`` (which rides in the closure) and hands the
+    ``ProbeBatch`` to ``refine`` -> pandas frame of ``[id_col] + fields``.
+
+    Every candidate of a probe comes from its own row, so the pair
+    dedupe needs no exchange: the plan is scan -> MapInPandas, with no
+    explode, no join and no shuffle. Each probe's WKT is parsed at most
+    once per batch (``probe`` memoizes), and only when a refine asks."""
+    from ..geo import wkt as wktmod
+
+    cover = layer_cover(rings_by_id, res, edges)
+    names = {int(pid): info["name"] for pid, info in rings_by_id.items()}
+    geodesic = edges == "geodesic"
+    src = probes.select(F.col(id_col), F.col(wkt_col).alias("_wkt"))
+    schema = StructType([src.schema[id_col]] + list(fields))
+
+    def kernel(batches):
+        for pdf in batches:
+            wkts = pdf["_wkt"].tolist()
+            memo: dict = {}
+
+            def probe(i, wkts=wkts, memo=memo):
+                if i not in memo:
+                    memo[i] = _loads_or_none(wkts[i])
+                return memo[i]
+
+            if geodesic:
+                b = np.array(
+                    [_geodesic_bounds(probe(i)) for i in range(len(wkts))],
+                    dtype=np.float64,
+                ).reshape(-1, 8)[:, :4]
+            else:
+                b = wktmod.bounds_batch(wkts)
+            row, pid, sure = candidate_pairs(b, cover, res, pad)
+            yield refine(ProbeBatch(id_col, pdf[id_col], probe,
+                                    ~np.isnan(b).any(axis=1),
+                                    row, pid, sure, names))
+
+    return src.mapInPandas(kernel, schema)
+
+
 def polygon_overlap_join(
     probes: DataFrame,
     polygons: DataFrame,
@@ -429,138 +618,59 @@ def polygon_overlap_join(
     edges: str = "planar",
 ) -> DataFrame:
     """Polygon-vs-polygon "intersects" join: a fact-scale table of SMALL
-    polygon geometries (building footprints, parcels — WKT column)
-    against the dimension layer -> (id, polygon_id, name). Boundary
-    contact counts as intersecting.
+    polygon (or line) geometries (building footprints, parcels — WKT
+    column) against the dimension layer -> (id, polygon_id, name), one
+    row per (probe row, intersecting layer polygon). Boundary contact
+    counts as intersecting. ``id_col`` is carried, not grouped on: two
+    rows sharing an id are each answered on their own geometry, and a
+    NULL id passes through.
 
-    Plan shape (the PIP flagship's recipe generalized to areal probes):
+    Plan shape: scan -> ONE ``MapInPandas`` (``layer_candidate_map``),
+    no exchange. Per Arrow batch:
 
-    1. one Arrow pass extracts each probe's bbox (WKT parsed once;
-       malformed rows drop — the P8 null-guard semantics);
-    2. candidate cells are the bbox's grid-range cross product — pure
-       column ``sequence`` explodes, no geometry;
-    3. broadcast equi-join against the layer's cover cells (zero
-       shuffle of the probe side);
-    4. pair dedupe with the FULL-CELL shortcut: a probe whose bbox sits
-       inside a provably-interior cover cell intersects by containment
-       — no geometry runs for it (the areal analogue of the interior
-       fast path);
-    5. only unresolved pairs run the exact kernel
+    1. probe bboxes in one Arrow pass (malformed rows drop — the P8
+       null-guard semantics);
+    2. candidate pairs: the bbox's grid window looked up in the
+       layer's sorted cover, deduped per (row, polygon) with the
+       FULL-CELL shortcut (a probe whose bbox sits inside a
+       provably-interior cover cell intersects by containment);
+    3. only unresolved pairs run the exact kernel
        (``kernels.polygons_intersect``: vertex-in-polygon both ways +
-       edge crossings/touches), Arrow-batched, layer rings from the
-       driver dict in the closure.
+       edge crossings/touches), each probe parsed once per batch,
+       layer rings from the driver dict in the closure; a probe the
+       kernel cannot read matches nothing.
 
-    Pick ``res`` so typical probes span O(1) cells — the explode in (2)
-    is (bbox cells per row) and the refine cost is per candidate pair.
+    Pick ``res`` so typical probes span O(1) cells — the window is
+    (bbox cells per row) and the refine cost is per candidate pair.
     """
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    from ..functions.geom_udfs import grid_xy_cols
     from ..geo import kernels
-    from ..geo import wkt as wktmod
 
     if rings_by_id is None:
         rings_by_id = load_rings(polygons)
-    cover = polygon_cells(
-        probes.sparkSession, rings_by_id, res, edges=edges
-    )
-
-    src = probes.select(F.col(id_col), F.col(wkt_col).alias("_wkt"))
     geodesic = edges == "geodesic"
-    with_bbox = attach_probe_bboxes(src, geodesic)
-
-    n = 1 << res
-    gx0, gy0 = grid_xy_cols(F.col("_xmin"), F.col("_ymin"), res)
-    gx1, gy1 = grid_xy_cols(F.col("_xmax"), F.col("_ymax"), res)
-    cand = (
-        with_bbox
-        .withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .withColumn(
-            "cell_id",
-            (F.lit(res * (2 ** 58)) + F.col("_gx") * F.lit(2 ** 29)
-             + F.col("_gy")).cast("long"),
+    if geodesic:
+        from ..geo.geodesic import (
+            lines_intersect_polygon_geodesic as lines_hit,
+            polygons_intersect_geodesic as areas_hit,
         )
-    )
-    # cell bounds as column math (decode is linear in gx/gy)
-    cx0 = F.col("_gx").cast("double") / F.lit(float(n)) * 360.0 - 180.0
-    cx1 = (F.col("_gx") + 1).cast("double") / F.lit(float(n)) * 360.0 \
-        - 180.0
-    cy0 = F.col("_gy").cast("double") / F.lit(float(n)) * 180.0 - 90.0
-    cy1 = (F.col("_gy") + 1).cast("double") / F.lit(float(n)) * 180.0 \
-        - 90.0
-    shortcut = (
-        F.col("is_full")
-        & (F.col("_xmin") >= cx0) & (F.col("_xmax") <= cx1)
-        & (F.col("_ymin") >= cy0) & (F.col("_ymax") <= cy1)
-    )
-
-    pairs = (
-        cand.join(F.broadcast(cover), "cell_id")
-        .withColumn("_sure", shortcut)
-        .groupBy(id_col, "polygon_id", "name")
-        .agg(
-            F.first("_wkt").alias("_wkt"),
-            F.max("_sure").alias("_sure"),
-        )
-    )
-
-    # ONE downstream pass: splitting pairs into sure/maybe branches
-    # would re-run the whole candidate pipeline per branch (unioned
-    # children recompute their common subtree) — instead the refine
-    # kernel consumes every pair and short-circuits on the _sure flag,
-    # so shortcut rows pay only the Arrow roundtrip, never geometry.
-    out_schema = StructType([
-        pairs.schema[id_col],
-        pairs.schema["polygon_id"],
-        pairs.schema["name"],
-        StructField("_ok", BooleanType(), False),
-    ])
+    else:
+        areas_hit = kernels.polygons_intersect
+        lines_hit = kernels.lines_intersect_polygon
     layer_rings = {
         int(pid): info["rings"] for pid, info in rings_by_id.items()
     }
 
-    def refine_kernel(batches):
-        for pdf in batches:
-            oks = []
-            for s, pid, sure in zip(pdf["_wkt"], pdf["polygon_id"],
-                                    pdf["_sure"]):
-                if sure:
-                    oks.append(True)
-                    continue
-                try:
-                    kind, parts = _probe_parts(wktmod.loads(s))
-                    lr = layer_rings[int(pid)]
-                    if geodesic:
-                        from ..geo.geodesic import (
-                            lines_intersect_polygon_geodesic,
-                            polygons_intersect_geodesic,
-                        )
-                        hit = (
-                            polygons_intersect_geodesic(parts, lr)
-                            if kind == "area"
-                            else lines_intersect_polygon_geodesic(
-                                parts, lr)
-                        )
-                    else:
-                        hit = (
-                            kernels.polygons_intersect(parts, lr)
-                            if kind == "area"
-                            else kernels.lines_intersect_polygon(
-                                parts, lr)
-                        )
-                    oks.append(bool(hit))
-                except Exception:
-                    oks.append(False)
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "polygon_id": pdf["polygon_id"],
-                "name": pdf["name"],
-                "_ok": oks,
-            })
+    def refine(b: ProbeBatch):
+        ok = b.sure.copy()
+        for j in np.flatnonzero(~b.sure):
+            try:
+                kind, parts = _probe_parts(b.probe(b.row[j]))
+                lr = layer_rings[int(b.polygon_id[j])]
+                ok[j] = bool(areas_hit(parts, lr) if kind == "area"
+                             else lines_hit(parts, lr))
+            except Exception:
+                pass
+        return b.pair_frame(ok)
 
-    return (
-        pairs.mapInPandas(refine_kernel, out_schema)
-        .where(F.col("_ok"))
-        .select(id_col, "polygon_id", "name")
-    )
+    return layer_candidate_map(probes, rings_by_id, res, edges, id_col,
+                               wkt_col, PAIR_FIELDS, refine)

@@ -9,12 +9,14 @@ polygons the reference's own e2e tests join points against
 relation — the broadcast side of the spatial join: one row per
 (polygon, covering cell), tagged ``is_full`` for cells provably interior
 (those skip the exact PIP refine); the other planar cells carry the edges
-the refine ray-casts against.
+the refine ray-casts against. ``layer_cover`` is the same cover as sorted
+numpy arrays, for the polygon-vs-layer joins that look cells up per Arrow
+batch instead of joining.
 """
 
 from __future__ import annotations
 
-from typing import Dict, List, Tuple
+from typing import Dict, List, NamedTuple, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -132,6 +134,42 @@ _CELLS_SCHEMA = StructType(
 )
 
 
+class LayerCover(NamedTuple):
+    """A layer's cell cover as numpy arrays sorted by ``cell_id`` — the
+    shape the per-batch candidate stage looks cells up in with
+    ``searchsorted``. Small enough to ship in a kernel's closure."""
+
+    cell_id: np.ndarray      # int64, ascending
+    polygon_id: np.ndarray   # int64
+    is_full: np.ndarray      # bool: the cell is provably interior
+
+
+def _cover_rows(rings_by_id: Dict[int, dict], res: int, edges: str):
+    """(row polygon index, cell ids, is_full) over every polygon's
+    ``cells.polygon_cover``, in layer order."""
+    poly, cids, fulls = [], [], []
+    for i, info in enumerate(rings_by_id.values()):
+        for cid, full in cellmod.polygon_cover(info["rings"], res,
+                                               edges=edges):
+            poly.append(i)
+            cids.append(cid)
+            fulls.append(full)
+    return (np.asarray(poly, dtype=np.int64),
+            np.asarray(cids, dtype=np.int64),
+            np.asarray(fulls, dtype=bool))
+
+
+def layer_cover(rings_by_id: Dict[int, dict], res: int,
+                edges: str = "planar") -> LayerCover:
+    """The layer's cover at ``res`` as sorted arrays (no edge lists, no
+    DataFrame): the driver side of the polygon-vs-layer joins."""
+    poly, cids, full = _cover_rows(rings_by_id, res, edges)
+    pids = np.fromiter(rings_by_id, dtype=np.int64,
+                       count=len(rings_by_id))
+    order = np.argsort(cids, kind="stable")
+    return LayerCover(cids[order], pids[poly[order]], full[order])
+
+
 def polygon_cells(
     spark: SparkSession, rings_by_id: Dict[int, dict], res: int,
     edges: str = "planar",
@@ -146,21 +184,11 @@ def polygon_cells(
     ``4**_edges_k`` child edge lists (``geo.cells.cell_edge_lists``) —
     one list unless the cell is dense enough to split. Full cells and
     geodesic covers carry NULL."""
-    rings, pids, names, cids, fulls, poly = [], [], [], [], [], []
-    for i, (pid, info) in enumerate(rings_by_id.items()):
-        rings.append(info["rings"])
-        for cid, full in cellmod.polygon_cover(info["rings"], res,
-                                               edges=edges):
-            pids.append(pid)
-            names.append(info["name"])
-            cids.append(cid)
-            fulls.append(full)
-            poly.append(i)
-    full = np.asarray(fulls, dtype=bool)
+    poly, cids, full = _cover_rows(rings_by_id, res, edges)
+    infos = list(rings_by_id.items())
     has = ~full if edges == "planar" else np.zeros(len(cids), dtype=bool)
     k, sizes, x0, y0, x1, y1 = cellmod.cell_edge_lists(
-        rings, np.asarray(poly, dtype=np.int64)[has],
-        np.asarray(cids, dtype=np.int64)[has], res,
+        [info["rings"] for _pid, info in infos], poly[has], cids[has], res,
     )
     k_row = np.zeros(len(cids), dtype=np.int32)
     k_row[has] = k
@@ -173,8 +201,8 @@ def polygon_cells(
         ),
     )
     table = pa.table({
-        "polygon_id": pa.array(pids, pa.int64()),
-        "name": pa.array(names, pa.string()),
+        "polygon_id": pa.array([infos[i][0] for i in poly], pa.int64()),
+        "name": pa.array([infos[i][1]["name"] for i in poly], pa.string()),
         "cell_id": pa.array(cids, pa.int64()),
         "is_full": pa.array(full, pa.bool_()),
         "_edges_k": pa.array(k_row, mask=~has),

@@ -8,7 +8,9 @@ and the scaling efficiency, and writes BENCH/BASELINE.md.
 
 Efficiency definition: speedup(8->32) / 4, with speedup = T8 / T32
 (ideal linear scaling gives 1.0). Best-of-``repeats`` wall times are used
-to suppress JVM warmup noise.
+to suppress JVM warmup noise. The host's usable core count is recorded
+with the result; a ``--high`` above it oversubscribes the cores, and the
+section says so: its efficiency then measures the host, not the engine.
 """
 
 from __future__ import annotations
@@ -62,8 +64,12 @@ def main() -> None:
     factor = args.high / args.low
     speedup = t_low / t_high
     efficiency = speedup / factor
+    cores = len(os.sched_getaffinity(0))
+    oversubscribed = args.high > cores
 
     summary = {
+        "host_cores": cores,
+        "oversubscribed": oversubscribed,
         "pages_n": args.pages_n,
         "low_cpus": args.low,
         "high_cpus": args.high,
@@ -80,10 +86,14 @@ def main() -> None:
     path = os.path.join(REPO, "BENCH", "BASELINE.md")
     section = (
             "## Scaling (north rule: efficiency >= 0.8 from N to 4N)\n\n"
-            "Sandbox proxy for two cluster sizes: the identical flagship "
+            + ("**oversubscribed: efficiency is a host property** "
+               "(local[%d] on %d usable cores).\n\n" % (args.high, cores)
+               if oversubscribed else "")
+            + "Sandbox proxy for two cluster sizes: the identical flagship "
             "job (synthesize %d pages -> derive points -> spatial join vs "
             "18-polygon layer -> per-(polygon,cell) rollup) run in fresh "
-            "JVMs at local[%d] and local[%d].\n\n"
+            "JVMs at local[%d] and local[%d] on a host with %d usable "
+            "cores.\n\n"
             "| parallelism | wall (s) | pages/sec |\n"
             "| --- | --- | --- |\n"
             "| local[%d] | %.3f | %.1f |\n"
@@ -92,7 +102,7 @@ def main() -> None:
             "- scaling efficiency (speedup / %.0f): **%.3f**\n\n"
             "Raw runs (best-of-%d reported above):\n\n```json\n%s\n```\n"
             % (
-                args.pages_n, args.low, args.high,
+                args.pages_n, args.low, args.high, cores,
                 args.low, t_low, summary["pages_per_sec_low"],
                 args.high, t_high, summary["pages_per_sec_high"],
                 args.low, args.high, speedup, factor, efficiency,

@@ -54,6 +54,15 @@ def _no_union(plan):
 # in the JVM — no second scan, no union, no Python
 _PIP_ONE_PASS = [_one_scan, _no_arrow, _no_union]
 
+# the polygon-vs-layer joins: candidate cells, pair dedupe, full-cell
+# shortcut and exact refine in ONE MapInPandas over the probe scan — no
+# broadcast cover join (the declared exchange count is 0)
+_LAYER_ONE_PASS = [
+    _one_scan,
+    lambda plan: plan.count("MapInPandas") == 1,
+    lambda plan: "BroadcastHashJoin" not in plan,
+]
+
 
 # Plan shapes beyond the exchange count each query declares in its @query
 # (the comment there says why the shape holds).
@@ -65,7 +74,7 @@ SHAPES = {
     "repetition": [
         lambda plan: plan.index("Generate") < plan.index("array_distinct"),
     ],
-    "polygon_overlap": [lambda plan: plan.count("BroadcastExchange") == 1],
+    "polygon_overlap": _LAYER_ONE_PASS,
     "image_phash": [lambda plan: _shuffles(plan) <= 4],
     "similarity_topk": [
         lambda plan: plan.count("BroadcastExchange") == 1,
@@ -76,10 +85,10 @@ SHAPES = {
         lambda plan: plan.count("HashAggregate") == 2,  # partial + final
         lambda plan: "partial_count" in plan,
     ],
-    "clip_rects": [_broadcast],
+    "clip_rects": _LAYER_ONE_PASS,
     "areal_interp": [_broadcast],
     "hex_bins": [_no_arrow, _no_map_in_pandas],
-    "rect_distance": [_broadcast],
+    "rect_distance": _LAYER_ONE_PASS,
     "tpch_region_volume": [lambda plan: plan.count("BroadcastExchange") >= 4],
     "snap_lines": [
         _broadcast,

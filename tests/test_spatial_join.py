@@ -20,6 +20,7 @@ from pure_python_geospatial_export_spark.operators.knn import (
 )
 from pure_python_geospatial_export_spark.operators.spatial_join import (
     spatial_join,
+    spatial_join_big_layer,
 )
 from pure_python_geospatial_export_spark.operators.tiles import (
     tile_pyramid,
@@ -147,6 +148,42 @@ def test_spatial_join_skewed_hot_cells(spark):
     }
     assert a == b
     assert a, "skewed join should produce rows"
+
+
+@pytest.mark.parametrize("edges,wkt,res", [
+    # cell (0, 0) is full at res 4: Spark's FLOOR(NaN) is 0, so a NaN
+    # point used to land there and be kept without a refine
+    ("planar",
+     "POLYGON ((-190 -95, -100 -95, -100 -40, -190 -40, -190 -95))", 4),
+    # a seam-crossing geodesic square whose cell (0, 8) is full
+    ("geodesic",
+     "POLYGON ((-185 -5, -140 -5, -140 25, -185 25, -185 -5))", 4),
+])
+@pytest.mark.parametrize("strategy",
+                         ["broadcast", "shuffle_salted", "big_layer"])
+def test_spatial_join_drops_nan_points(spark, edges, wkt, res, strategy):
+    nan = float("nan")
+    pts = spark.createDataFrame(
+        [(0, nan, nan), (1, nan, -80.0), (2, -170.0, nan), (3, nan, 5.0),
+         (4, -170.0, -80.0), (5, -170.0, 5.0), (6, 0.0, 0.0)],
+        "id long, lon double, lat double",
+    )
+    layer = spark.createDataFrame([(1, "zone", wkt)],
+                                  "polygon_id long, name string, wkt string")
+    if strategy == "big_layer":
+        out = spatial_join_big_layer(pts, layer, res=res, edges=edges)
+    else:
+        out = spatial_join(pts, layer, res=res, strategy=strategy,
+                           edges=edges, hot_cell_threshold=1)
+    got = sorted(r["id"] for r in out.collect())
+    rings = wktmod.loads(wkt)["coordinates"]
+    if edges == "planar":
+        inside = kernels.points_in_polygon(
+            np.array([nan, -170.0]), np.array([nan, -80.0]), rings)
+        assert inside.tolist() == [False, True]
+        assert got == [4]
+    else:
+        assert got == [5]
 
 
 def test_spatial_join_big_layer_equals_broadcast(spark, pages):
