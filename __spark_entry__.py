@@ -926,7 +926,7 @@ def _polygon_overlap_sql() -> str:
     )
 
 
-# Plan: scan -> ONE MapInPandas (candidate cells, pair dedupe, full-cell
+# Plan: scan -> ONE MapInArrow (candidate cells, pair dedupe, full-cell
 # shortcut and exact refine per Arrow batch) -> Project. No explode, no
 # broadcast join, no exchange: every pair comes from one probe row.
 @query("polygon_overlap", oracle=_polygon_overlap_sql, headline=True,
@@ -3488,7 +3488,7 @@ def _clip_rects_sql() -> str:
 # clip_rects: closed-form interval products on the integer
 # lattice — exact vs the overlay's shoelace areas
 # Plan: clip_join rides the polygon_overlap shape: scan -> ONE
-# MapInPandas (candidates + overlay per Arrow batch) -> Project, no
+# MapInArrow (candidates + overlay per Arrow batch) -> Project, no
 # exchange.
 @query("clip_rects", oracle=_clip_rects_sql, folded=True, exchanges=0)
 def _q_clip_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4062,7 +4062,7 @@ def _rect_distance_sql() -> str:
 
 # rect_distance: dyadic rects => kernel == closed-form gap
 # Plan: polygon_distance_join rides the polygon_overlap shape (candidate
-# window grown by max_dist): scan -> ONE MapInPandas -> Project, no
+# window grown by max_dist): scan -> ONE MapInArrow -> Project, no
 # exchange.
 @query("rect_distance", oracle=_rect_distance_sql, folded=True, exchanges=0)
 def _q_rect_distance(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,7 @@ the dissolve union, so integer-lattice inputs keep EXACT areas (the
 oracle contract) and output WKT is deterministic.
 
 Plan shape (the overlap join's, geometry-bearing refine): scan -> ONE
-``MapInPandas`` (``spatial_join.layer_candidate_map``), no exchange.
+``MapInArrow`` (``spatial_join.layer_candidate_map``), no exchange.
 Per Arrow batch the probe bboxes, the candidate pairs against the
 layer's sorted cover and the FULL-CELL shortcut run in numpy; the
 shortcut upgrades to geometry: a probe bbox inside a provably-interior
@@ -170,7 +170,7 @@ def clip_join(
         cols = {"area": areas, "wkt": wkts}
         if _with_src_area:
             cols["_src_area"] = srcs
-        return b.pair_frame(np.asarray(sel, dtype=np.int64), **cols)
+        return b.pair_columns(np.asarray(sel, dtype=np.int64), **cols)
 
     return _overlay_map(probes, polygons, res, id_col, wkt_col, edges,
                         max_sagitta_rad, fields, refine)
@@ -194,8 +194,6 @@ def erase_join(
     malformed and non-areal rows. A probe's candidates all come from
     its own row, so each subtraction runs once against all of them in
     the scan's own task: no grouping, no shuffle."""
-    import pandas as pd
-
     from ..geo import wkt as wktmod
     from ..geo.overlay import overlay_polygons, union_area
     from .dissolve import overlay_geometry_dict
@@ -222,10 +220,8 @@ def erase_join(
             sel.append(i)
             areas.append(union_area(out))
             wkts.append(wktmod.dumps(overlay_geometry_dict(out)))
-        return pd.DataFrame({
-            id_col: b.ids.iloc[sel].reset_index(drop=True),
-            "area": areas, "wkt": wkts,
-        })
+        return {id_col: b.ids.take(np.asarray(sel, dtype=np.int64)),
+                "area": areas, "wkt": wkts}
 
     return _overlay_map(
         probes, polygons, res, id_col, wkt_col, edges, max_sagitta_rad,

@@ -5,7 +5,7 @@ The distance member of the spatial-predicate family (intersects:
 ``spatial_join.polygon_overlap_join``; point containment:
 ``spatial_join.spatial_join``; point radius: ``knn.radius_join``) —
 "find parcels within 100 m of a river polygon". Same plan as the
-overlap join (scan -> ONE ``MapInPandas``, no exchange), with the
+overlap join (scan -> ONE ``MapInArrow``, no exchange), with the
 candidate window WIDENED by the threshold:
 
 1. candidate cells come from the probe bbox EXPANDED by ``max_dist``
@@ -103,7 +103,7 @@ def polygon_distance_join(
             except Exception:
                 pass
         ok = d2 <= d2max  # NaN (no answer) compares False
-        return b.pair_frame(ok, dist2=d2[ok])
+        return b.pair_columns(ok, dist2=d2[ok])
 
     return layer_candidate_map(
         probes, rings_by_id, res, edges, id_col, wkt_col,

@@ -32,8 +32,10 @@ from typing import Callable, Dict, NamedTuple, Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.geom_udfs import cell_id_col
@@ -543,7 +545,7 @@ class ProbeBatch(NamedTuple):
     """One Arrow batch of probes after the candidate stage."""
 
     id_col: str
-    ids: pd.Series          # the probe id column
+    ids: pa.Array           # the probe id column, as Arrow carried it
     probe: Callable         # row -> parsed geometry (None if malformed)
     live: np.ndarray        # bool per row: the bbox is defined
     row: np.ndarray         # candidate pairs, sorted by row
@@ -551,13 +553,14 @@ class ProbeBatch(NamedTuple):
     sure: np.ndarray        # full-cell shortcut hit
     names: dict             # layer polygon id -> name
 
-    def pair_frame(self, sel, **cols):
-        """Output rows (id, polygon_id, name, **cols) of pairs ``sel``."""
+    def pair_columns(self, sel, **cols):
+        """Output columns (id, polygon_id, name, **cols) of pairs
+        ``sel``; ids are taken in Arrow, so a bigint id stays exact."""
         pid = self.polygon_id[sel]
-        return pd.DataFrame({
-            self.id_col: self.ids.iloc[self.row[sel]].reset_index(drop=True),
+        return {
+            self.id_col: self.ids.take(self.row[sel]),
             "polygon_id": pid, "name": [self.names[p] for p in pid], **cols,
-        })
+        }
 
 
 def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
@@ -565,14 +568,16 @@ def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
                         fields: list, refine: Callable,
                         pad: float = 0.0) -> DataFrame:
     """The polygon-vs-layer joins' ONE Python stage over the probe scan:
-    ``mapInPandas`` whose kernel, per Arrow batch, takes probe bboxes
+    ``mapInArrow`` whose kernel, per Arrow batch, takes probe bboxes
     (``wkt.bounds_batch``; under geodesic edges the sagitta-padded
     ``_geodesic_bounds``), runs ``candidate_pairs`` against the layer's
     ``layer_cover`` (which rides in the closure) and hands the
-    ``ProbeBatch`` to ``refine`` -> pandas frame of ``[id_col] + fields``.
+    ``ProbeBatch`` to ``refine`` -> columns of ``[id_col] + fields``.
+    Arrow, not pandas: a bigint id column holding a NULL would reach
+    pandas as float64 and lose every id above 2**53.
 
     Every candidate of a probe comes from its own row, so the pair
-    dedupe needs no exchange: the plan is scan -> MapInPandas, with no
+    dedupe needs no exchange: the plan is scan -> MapInArrow, with no
     explode, no join and no shuffle. Each probe's WKT is parsed at most
     once per batch (``probe`` memoizes), and only when a refine asks."""
     from ..geo import wkt as wktmod
@@ -582,10 +587,12 @@ def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
     geodesic = edges == "geodesic"
     src = probes.select(F.col(id_col), F.col(wkt_col).alias("_wkt"))
     schema = StructType([src.schema[id_col]] + list(fields))
+    arrow_schema = to_arrow_schema(schema)
 
     def kernel(batches):
-        for pdf in batches:
-            wkts = pdf["_wkt"].tolist()
+        for batch in batches:
+            wkts = batch.column("_wkt").to_numpy(
+                zero_copy_only=False).tolist()
             memo: dict = {}
 
             def probe(i, wkts=wkts, memo=memo):
@@ -601,11 +608,12 @@ def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
             else:
                 b = wktmod.bounds_batch(wkts)
             row, pid, sure = candidate_pairs(b, cover, res, pad)
-            yield refine(ProbeBatch(id_col, pdf[id_col], probe,
-                                    ~np.isnan(b).any(axis=1),
-                                    row, pid, sure, names))
+            cols = refine(ProbeBatch(id_col, batch.column(id_col), probe,
+                                     ~np.isnan(b).any(axis=1),
+                                     row, pid, sure, names))
+            yield pa.RecordBatch.from_pydict(cols, schema=arrow_schema)
 
-    return src.mapInPandas(kernel, schema)
+    return src.mapInArrow(kernel, schema)
 
 
 def polygon_overlap_join(
@@ -625,7 +633,7 @@ def polygon_overlap_join(
     rows sharing an id are each answered on their own geometry, and a
     NULL id passes through.
 
-    Plan shape: scan -> ONE ``MapInPandas`` (``layer_candidate_map``),
+    Plan shape: scan -> ONE ``MapInArrow`` (``layer_candidate_map``),
     no exchange. Per Arrow batch:
 
     1. probe bboxes in one Arrow pass (malformed rows drop — the P8
@@ -670,7 +678,7 @@ def polygon_overlap_join(
                              else lines_hit(parts, lr))
             except Exception:
                 pass
-        return b.pair_frame(ok)
+        return b.pair_columns(ok)
 
     return layer_candidate_map(probes, rings_by_id, res, edges, id_col,
                                wkt_col, PAIR_FIELDS, refine)

@@ -23,93 +23,33 @@ Why the fold is correct AND cheap:
 * Union-find folding is IDEMPOTENT (re-adding an edge is a no-op), so
   a foreachBatch retry of the same epoch converges to the same table —
   at-least-once pair delivery (``emit_mode='all_bands'``) is safe by
-  construction.
-* Each epoch writes a NEW versioned directory and commits it with one
-  atomic pointer-file rename — readers see the previous complete table
-  or the new complete table, never a mix (the manifest-pointer commit
-  pattern; see also sources/layout.py).
+  construction, and every batch folds (``gate_epochs = False``).
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_POINTER = "_CURRENT"
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 
-class ClusterState:
-    """Persisted union-find table (id, cluster_id) with atomic
-    pointer-file commits. Use :meth:`foreach_batch` as the sink of a
-    pair stream (columns id_a, id_b), :meth:`current` to read the
-    latest committed assignments."""
+class ClusterState(EpochVersionedState):
+    """Persisted union-find table (id, cluster_id) folded by
+    micro-batch. Use :meth:`foreach_batch` as the sink of a pair
+    stream (columns id_a, id_b), :meth:`current` to read the latest
+    committed assignments."""
 
-    def __init__(self, spark: SparkSession, state_dir: str,
-                 keep_versions: int = 2):
-        if keep_versions < 1:
-            raise ValueError("keep_versions must be >= 1")
-        self.spark = spark
-        self.state_dir = state_dir
-        # retained version dirs INCLUDING the current one; >= 2 keeps
-        # one superseded table for readers that resolved the pointer
-        # just before a commit (mirrors layout.expire_snapshots)
-        self.keep_versions = keep_versions
-        os.makedirs(state_dir, exist_ok=True)
+    gate_epochs = False
 
-    # -- pointer management -------------------------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, _POINTER)
-
-    def _read_pointer(self) -> str | None:
-        try:
-            with open(self._pointer_path()) as f:
-                name = f.read().strip()
-            return name or None
-        except FileNotFoundError:
-            return None
-
-    def _commit_pointer(self, version_name: str) -> None:
-        # durable single-pointer publish; the pointed-to directory is
-        # always complete before the pointer moves
-        from ..sources.layout import atomic_write_text
-
-        atomic_write_text(self._pointer_path(), version_name)
-
-    # -- reads --------------------------------------------------------------
-
-    def current(self) -> DataFrame | None:
-        """Latest committed (id, cluster_id) assignments, or None
-        before the first commit."""
-        name = self._read_pointer()
-        if name is None:
-            return None
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, name)
-        )
-
-    # -- the fold -----------------------------------------------------------
-
-    def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch hook: fold one micro-batch of (id_a, id_b)
-        pairs into the table.
-
-        The version directory is a MONOTONIC COUNTER derived from the
-        current pointer, NOT the epoch id: foreachBatch is
-        at-least-once, and a retry of an epoch whose fold already
-        committed must not name the directory it is simultaneously
-        READING (Spark refuses to overwrite a path it reads from —
-        an epoch-keyed name would wedge the stream in a crash loop).
-        With a fresh counter the retry writes a new directory whose
-        content, by fold idempotence, equals the committed one."""
+    def _fold(self, prev, batch_df: DataFrame):
+        """Fold one micro-batch of (id_a, id_b) pairs into the
+        table."""
         from ..operators.dedup import duplicate_clusters
 
+        if batch_df.isEmpty():
+            return None
         pairs = batch_df.select("id_a", "id_b").distinct()
-        if not pairs.take(1):
-            return
-        prev = self.current()
 
         if prev is None:
             assign = duplicate_clusters(pairs)
@@ -180,33 +120,7 @@ class ClusterState:
                 _remapped(fresh, "cluster_id").select("id", "cluster_id")
             )
 
-        cur = self._read_pointer()
-        next_n = (int(cur[1:]) + 1) if cur else 0
-        version = "v%020d" % next_n
-        out = os.path.join(self.state_dir, version)
-        assign.write.mode("overwrite").parquet(out)
-        self._commit_pointer(version)
-        self._prune_versions(version)
-
-    def _prune_versions(self, current: str) -> None:
-        """Delete superseded version directories beyond the newest
-        ``keep_versions`` (current included). Without this a
-        long-running pair stream grows ``state_dir`` without bound —
-        every micro-batch writes a full new table. At least one prior
-        version survives (when keep_versions >= 2) for readers that
-        resolved the pointer just before the commit."""
-        import shutil
-
-        versions = sorted(
-            n for n in os.listdir(self.state_dir)
-            if n.startswith("v") and n[1:].isdigit()
-        )
-        doomed = [n for n in versions[:-self.keep_versions]
-                  if n != current]
-        for name in doomed:
-            shutil.rmtree(
-                os.path.join(self.state_dir, name), ignore_errors=True
-            )
+        return assign
 
 
 def near_duplicate_clusters_stream(
@@ -251,11 +165,7 @@ def clustered_pairs_sink(
     ``query.awaitTermination()`` then ``state.current()`` for the
     assignments."""
     state = ClusterState(pair_stream.sparkSession, state_dir)
-    writer = (
-        pair_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        pair_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

@@ -6,82 +6,41 @@ distinct-URL / distinct-user counts per group (cell, domain, day)
 served continuously without touching raw history, in O(2^p) state per
 group.
 
-The structural contrast with streaming/quantiles.py is the point:
-HLL's fold is register-wise MAX, which is idempotent and commutative,
-so foreachBatch's at-least-once delivery needs NO transactional epoch
-machinery — a redelivered micro-batch re-maxes the same registers into
-the same state, and every batch folds unconditionally (an epoch-id
-gate would silently drop new data when a fresh-checkpoint query
-reuses the state dir and its epoch ids restart at 0). The epoch id is
-recorded in the pointer as monotonic metadata only — exactly the
-property KLL lacks, which is why quantiles.py needs real epoch
-transactionality and this module doesn't. Commits reuse the
-manifest-pointer idiom: new versioned directory, one atomic pointer
-write, superseded versions pruned.
+The fold is register-wise MAX, which is idempotent and commutative: a
+redelivered micro-batch re-maxes the same registers into the same
+state, so every batch folds unconditionally (``gate_epochs = False``
+in ``streaming/epoch_state.EpochVersionedState``) — exactly the
+property KLL lacks, which is why streaming/quantiles.py keeps the
+epoch gate.
 """
 
 from __future__ import annotations
 
-import os
 from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 
-_POINTER = "_CURRENT"
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 
-class DistinctState:
+class DistinctState(EpochVersionedState):
     """Persisted per-group HLL register table folded by micro-batch.
     Use :meth:`foreach_batch` as a stream sink, :meth:`current` for
-    the register rows, :meth:`estimates` for distinct-count
-    estimates."""
+    the register rows (group_cols..., bucket, reg), :meth:`estimates`
+    for distinct-count estimates."""
+
+    gate_epochs = False
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  group_cols: List[str], value_col: str = "value",
                  p: int = 12, keep_versions: int = 2):
-        if keep_versions < 1:
-            raise ValueError("keep_versions must be >= 1")
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir, keep_versions)
         self.group_cols = list(group_cols)
         self.value_col = value_col
         self.p = int(p)
-        self.keep_versions = keep_versions
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- pointer: "<version>:<last_epoch>" -----------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, _POINTER)
-
-    def _read_pointer(self):
-        try:
-            with open(self._pointer_path()) as f:
-                raw = f.read().strip()
-            if not raw:
-                return None, -1
-            version, epoch = raw.rsplit(":", 1)
-            return (version if version != "-" else None), int(epoch)
-        except FileNotFoundError:
-            return None, -1
-
-    def _commit(self, version: str, epoch: int) -> None:
-        from ..sources.layout import atomic_write_text
-
-        atomic_write_text(self._pointer_path(),
-                          "%s:%d" % (version, epoch))
-
-    # -- reads ---------------------------------------------------------------
-
-    def current(self):
-        """Latest committed register rows (group_cols..., bucket, reg),
-        or None before the first commit."""
-        name, _epoch = self._read_pointer()
-        if name is None:
-            return None
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, name)
-        )
+        # registers of two precisions would max into one bucket
+        # silently: hll_merge is a plain groupBy max
+        self._pin_config({"group_cols": self.group_cols, "p": self.p})
 
     def estimates(self, correction: bool = True):
         """(group_cols..., zeros, harmonic, est) from the committed
@@ -94,59 +53,21 @@ class DistinctState:
         return hll_estimate(cur, self.group_cols, p=self.p,
                             correction=correction)
 
-    # -- the fold ------------------------------------------------------------
-
-    def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def _fold(self, prev, batch_df: DataFrame):
         from ..operators.sketch import hll_merge, hll_sketch
 
-        cur_name, last_epoch = self._read_pointer()
-        # No epoch gating: the register max-fold is idempotent and
-        # commutative, so every batch folds unconditionally.
-        # Correctness comes from the algebra, not the epoch id — a
-        # gate on epoch_id is UNSAFE across query lifetimes: a
-        # fresh-checkpoint query reusing this state dir restarts
-        # epoch ids at 0 with DIFFERENT batch boundaries, so a lower
-        # (or equal) id can carry brand-new values that a skip would
-        # silently drop forever. Redelivered retries re-max the same
-        # registers into the same state (wasted IO, never wrong). The
-        # pointer's epoch field is metadata and stays monotonic.
+        # raw-batch probe (scan limit 1, no shuffle) — probing the
+        # aggregated sketch instead would run the full register
+        # groupBy once for the probe and again for the write
         if batch_df.isEmpty():
-            # raw-batch probe (scan limit 1, no shuffle) — probing
-            # the aggregated sketch instead would run the full
-            # register groupBy once for the probe and again for the
-            # write below
-            self._commit(cur_name or "-",
-                         max(int(epoch_id), last_epoch))
-            return
+            return None
         fresh = hll_sketch(
             batch_df.select(*self.group_cols, self.value_col),
             self.group_cols, self.value_col, p=self.p,
         )
-        prev = self.current()
-        merged = (
-            hll_merge(prev.unionByName(fresh), self.group_cols)
-            if prev is not None else fresh
-        )
-        next_n = (int(cur_name[1:]) + 1) if cur_name else 0
-        version = "v%020d" % next_n
-        out = os.path.join(self.state_dir, version)
-        merged.write.mode("overwrite").parquet(out)
-        self._commit(version, max(int(epoch_id), last_epoch))
-        self._prune(version)
-
-    def _prune(self, current: str) -> None:
-        import shutil
-
-        versions = sorted(
-            n for n in os.listdir(self.state_dir)
-            if n.startswith("v") and n[1:].isdigit()
-        )
-        for name in versions[:-self.keep_versions]:
-            if name != current:
-                shutil.rmtree(
-                    os.path.join(self.state_dir, name),
-                    ignore_errors=True,
-                )
+        if prev is None:
+            return fresh
+        return hll_merge(prev.unionByName(fresh), self.group_cols)
 
 
 def distinct_sink(
@@ -162,11 +83,7 @@ def distinct_sink(
     (state, streaming_query)."""
     state = DistinctState(value_stream.sparkSession, state_dir,
                           group_cols, value_col, p)
-    writer = (
-        value_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        value_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

@@ -1,25 +1,31 @@
-"""Shared scaffolding for stream-folded sketch states whose fold is
-NOT idempotent (KLL quantiles, SpaceSaving heavy hitters).
+"""One versioned parquet state for every stream-folded relation, and
+the one ``foreachBatch`` wiring every stream sink uses.
 
-foreachBatch is at-least-once, so these states implement the standard
-transactional pattern: the committed pointer records the last folded
-epoch id; a retry of a committed epoch folds nothing (Spark guarantees
-a retried batch carries the SAME epoch id with the SAME data, which is
-exactly what makes the check sufficient); an epoch id BELOW the
-watermark means a different query lifetime and raises (or
-:meth:`rebind`). Commits reuse the manifest-pointer idiom: new
-versioned directory, one atomic pointer write, superseded versions
-pruned.
+A state dir holds ``v%020d`` version directories and a ``_CURRENT``
+pointer reading ``"<version>:<last_epoch>"``. A commit writes a NEW
+version directory, moves the pointer with one atomic write, and prunes
+superseded versions down to ``keep_versions``. Versions are named by a
+counter, not the epoch id: a retry of an epoch whose fold already
+committed must not name the directory it is READING (Spark refuses to
+overwrite a path it reads from, so an epoch-keyed name would wedge the
+stream in a crash loop).
+
+foreachBatch is at-least-once. Subclasses whose fold is NOT idempotent
+(KLL, SpaceSaving, additive counts) keep ``gate_epochs = True``: a
+retry of a committed epoch folds nothing (Spark replays a retried
+batch with the SAME epoch id and the SAME data, which is what makes
+the check sufficient), and an epoch id BELOW the watermark means a
+different query lifetime and raises (or :meth:`rebind`). Idempotent
+folds (register max, hull vertices, union-find) set
+``gate_epochs = False`` and fold every batch: a gate would silently
+drop new data when a fresh-checkpoint query reuses the state dir and
+its epoch ids restart at 0. Their pointer epoch is monotonic metadata.
 
 Subclasses implement one method — :meth:`_fold`, taking the previous
 committed state (or None) and the micro-batch and returning the merged
 state DataFrame, or None when the batch contributes nothing (the epoch
 still advances so an empty batch is not re-examined forever on
 restart).
-
-The idempotent folds (streaming/distinct.py register max,
-streaming/cluster.py union-find) intentionally do NOT use this base:
-they need no epoch watermark, and their pointer formats differ.
 """
 
 from __future__ import annotations
@@ -33,9 +39,13 @@ _POINTER = "_CURRENT"
 
 
 class EpochVersionedState:
-    """Versioned parquet state with exactly-once micro-batch folding.
-    Use :meth:`foreach_batch` as a stream sink and :meth:`current` for
-    the committed rows."""
+    """Versioned parquet state folded by micro-batch. Use
+    :meth:`foreach_batch` as a stream sink and :meth:`current` for the
+    committed rows."""
+
+    # False for idempotent folds: every batch folds, whatever its
+    # epoch id (see the module docstring)
+    gate_epochs = True
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  keep_versions: int = 2):
@@ -43,6 +53,9 @@ class EpochVersionedState:
             raise ValueError("keep_versions must be >= 1")
         self.spark = spark
         self.state_dir = state_dir
+        # retained version dirs INCLUDING the current one; >= 2 keeps
+        # one superseded table for readers that resolved the pointer
+        # just before a commit (mirrors layout.expire_snapshots)
         self.keep_versions = keep_versions
         os.makedirs(state_dir, exist_ok=True)
 
@@ -57,6 +70,10 @@ class EpochVersionedState:
                 raw = f.read().strip()
             if not raw:
                 return None, -1
+            if ":" not in raw:
+                # a bare version name: the epoch-less pointer older
+                # ClusterState dirs carry
+                return raw, -1
             version, epoch = raw.rsplit(":", 1)
             # "-" = epochs committed but no data version yet (empty
             # batches before the first non-empty one)
@@ -134,11 +151,11 @@ class EpochVersionedState:
 
     def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         cur_name, last_epoch = self._read_pointer()
-        if int(epoch_id) == last_epoch:
+        if self.gate_epochs and int(epoch_id) == last_epoch:
             # at-least-once redelivery of a committed epoch: the fold
             # is NOT idempotent, so the retry must fold nothing
             return
-        if int(epoch_id) < last_epoch:
+        if self.gate_epochs and int(epoch_id) < last_epoch:
             # A retry always replays the SAME epoch id, so a strictly
             # lower id means a different query lifetime — a stream
             # restarted with a fresh checkpoint dir against this state
@@ -152,17 +169,19 @@ class EpochVersionedState:
                 "the new query's epoch numbering while keeping the "
                 "accumulated state." % (int(epoch_id), last_epoch)
             )
+        # equals epoch_id whenever the gate passed
+        epoch = max(int(epoch_id), last_epoch)
         merged = self._fold(self.current(), batch_df)
         if merged is None:
             # still advance the epoch so an empty batch is not
             # re-examined forever on restart
-            self._commit(cur_name or "-", int(epoch_id))
+            self._commit(cur_name or "-", epoch)
             return
         next_n = (int(cur_name[1:]) + 1) if cur_name else 0
         version = "v%020d" % next_n
         out = os.path.join(self.state_dir, version)
         merged.write.mode("overwrite").parquet(out)
-        self._commit(version, int(epoch_id))
+        self._commit(version, epoch)
         self._prune(version)
 
     def _prune(self, current: str) -> None:
@@ -178,3 +197,18 @@ class EpochVersionedState:
                     os.path.join(self.state_dir, name),
                     ignore_errors=True,
                 )
+
+
+def foreach_batch_sink(stream: DataFrame, fn, checkpoint_dir: str,
+                       trigger_available_now: bool = True):
+    """Start ``stream`` into the ``fn(batch_df, epoch_id)`` sink with
+    its checkpoint at ``checkpoint_dir``; ``trigger_available_now``
+    drains what is available and stops. Returns the streaming query."""
+    writer = (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()

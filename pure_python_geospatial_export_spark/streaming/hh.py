@@ -35,7 +35,7 @@ from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .epoch_state import EpochVersionedState
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 
 class HeavyHitterState(EpochVersionedState):
@@ -169,11 +169,7 @@ def heavy_hitters_sink(
     Returns (state, streaming_query)."""
     state = HeavyHitterState(key_stream.sparkSession, state_dir,
                              group_cols, key_col, m)
-    writer = (
-        key_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        key_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

@@ -25,7 +25,7 @@ from typing import Tuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .epoch_state import EpochVersionedState
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 
 class HotspotState(EpochVersionedState):
@@ -156,11 +156,7 @@ def hotspot_sink(
     state = HotspotState(point_stream.sparkSession, state_dir,
                          res, lon, lat, bbox, ts_col=ts_col,
                          bin_seconds=bin_seconds)
-    writer = (
-        point_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        point_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

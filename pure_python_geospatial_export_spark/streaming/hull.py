@@ -6,83 +6,41 @@ per-group spatial extents (coverage footprints, bounding hulls of
 user activity) served continuously without touching raw history, in
 O(hull size) state per group.
 
-Like streaming/distinct.py (register max) and unlike
-streaming/quantiles.py (KLL), the fold is IDEMPOTENT:
-``hull(state ∪ points) == hull(everything ever seen)`` and re-folding
-a redelivered batch unions the same vertices into the same hull. So
-foreachBatch's at-least-once delivery needs no transactional epoch
-machinery — every batch folds unconditionally, and the pointer's
-epoch field is monotonic metadata only. The one summary column that
-is NOT idempotently maintainable is ``n_points`` (a redelivered
-batch would double-count), so the streaming summaries drop it —
-pair with an exact-dedup or HLL fold when a count is needed.
-
-Commits reuse the manifest-pointer idiom: new versioned directory,
-one atomic pointer write, superseded versions pruned.
+The fold is IDEMPOTENT: ``hull(state ∪ points) == hull(everything
+ever seen)`` (vertices are input coordinates — no arithmetic), and
+re-folding a redelivered batch unions the same vertices into the same
+hull, so every batch folds unconditionally (``gate_epochs = False``).
+The one summary column that is NOT idempotently maintainable is
+``n_points`` (a redelivered batch would double-count), so the
+streaming summaries drop it — pair with an exact-dedup or HLL fold
+when a count is needed.
 """
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-_POINTER = "_CURRENT"
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 
-class HullState:
+class HullState(EpochVersionedState):
     """Persisted per-group hull-vertex table folded by micro-batch.
     Use :meth:`foreach_batch` as a stream sink, :meth:`current` for
-    the vertex rows, :meth:`summaries` for the full per-group hull
-    summary (area, bbox, calipers metrics, wkt — no ``n_points``)."""
+    the vertex rows (group_col, lon, lat), :meth:`summaries` for the
+    full per-group hull summary (area, bbox, calipers metrics, wkt —
+    no ``n_points``)."""
+
+    gate_epochs = False
 
     def __init__(self, spark: SparkSession, state_dir: str,
                  group_col: str = "group_id", lon: str = "lon",
                  lat: str = "lat", keep_versions: int = 2):
-        if keep_versions < 1:
-            raise ValueError("keep_versions must be >= 1")
-        self.spark = spark
-        self.state_dir = state_dir
+        super().__init__(spark, state_dir, keep_versions)
         self.group_col = group_col
         self.lon = lon
         self.lat = lat
-        self.keep_versions = keep_versions
-        os.makedirs(state_dir, exist_ok=True)
-
-    # -- pointer: "<version>:<last_epoch>" -----------------------------------
-
-    def _pointer_path(self) -> str:
-        return os.path.join(self.state_dir, _POINTER)
-
-    def _read_pointer(self):
-        try:
-            with open(self._pointer_path()) as f:
-                raw = f.read().strip()
-            if not raw:
-                return None, -1
-            version, epoch = raw.rsplit(":", 1)
-            return (version if version != "-" else None), int(epoch)
-        except FileNotFoundError:
-            return None, -1
-
-    def _commit(self, version: str, epoch: int) -> None:
-        from ..sources.layout import atomic_write_text
-
-        atomic_write_text(self._pointer_path(),
-                          "%s:%d" % (version, epoch))
-
-    # -- reads ---------------------------------------------------------------
-
-    def current(self) -> Optional[DataFrame]:
-        """Latest committed hull-vertex rows (group_col, lon, lat),
-        or None before the first commit."""
-        name, _epoch = self._read_pointer()
-        if name is None:
-            return None
-        return self.spark.read.parquet(
-            os.path.join(self.state_dir, name)
-        )
 
     def summaries(self) -> Optional[DataFrame]:
         """Per-group hull summary recomputed from the committed
@@ -97,44 +55,14 @@ class HullState:
             cur, self.group_col, self.lon, self.lat
         ).drop("n_points")
 
-    # -- the fold ------------------------------------------------------------
-
-    def foreach_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
+    def _fold(self, prev, batch_df: DataFrame):
         from ..operators.hull import hull_vertices
 
-        cur_name, last_epoch = self._read_pointer()
-        # No epoch gating: the hull fold is idempotent and commutative
-        # (vertices are input coordinates — no arithmetic), so every
-        # batch folds unconditionally; see streaming/distinct.py for
-        # why an epoch_id gate is UNSAFE across query lifetimes.
         if batch_df.isEmpty():
-            self._commit(cur_name or "-",
-                         max(int(epoch_id), last_epoch))
-            return
+            return None
         fresh = batch_df.select(self.group_col, self.lon, self.lat)
-        prev = self.current()
         src = prev.unionByName(fresh) if prev is not None else fresh
-        merged = hull_vertices(src, self.group_col, self.lon, self.lat)
-        next_n = (int(cur_name[1:]) + 1) if cur_name else 0
-        version = "v%020d" % next_n
-        out = os.path.join(self.state_dir, version)
-        merged.write.mode("overwrite").parquet(out)
-        self._commit(version, max(int(epoch_id), last_epoch))
-        self._prune(version)
-
-    def _prune(self, current: str) -> None:
-        import shutil
-
-        versions = sorted(
-            n for n in os.listdir(self.state_dir)
-            if n.startswith("v") and n[1:].isdigit()
-        )
-        for name in versions[:-self.keep_versions]:
-            if name != current:
-                shutil.rmtree(
-                    os.path.join(self.state_dir, name),
-                    ignore_errors=True,
-                )
+        return hull_vertices(src, self.group_col, self.lon, self.lat)
 
 
 def hull_sink(
@@ -150,11 +78,7 @@ def hull_sink(
     (state, streaming_query)."""
     state = HullState(point_stream.sparkSession, state_dir,
                       group_col, lon, lat)
-    writer = (
-        point_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        point_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .epoch_state import EpochVersionedState
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 _STATE_SCHEMA = StructType([
     StructField("_kind", StringType(), False),
@@ -198,11 +198,7 @@ def od_sink(
     :class:`OdState` fold. Returns (state, streaming_query)."""
     state = OdState(segment_stream.sparkSession, state_dir,
                     res=res, user_col=user_col)
-    writer = (
-        segment_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        segment_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

@@ -22,7 +22,7 @@ from typing import List
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .epoch_state import EpochVersionedState
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 
 class QuantileState(EpochVersionedState):
@@ -85,11 +85,7 @@ def quantile_sink(
     (state, streaming_query)."""
     state = QuantileState(value_stream.sparkSession, state_dir,
                           group_cols, value_col, k)
-    writer = (
-        value_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        value_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

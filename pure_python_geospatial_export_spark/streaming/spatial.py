@@ -60,6 +60,7 @@ from pyspark.sql.types import (
 
 from ..functions.geom_udfs import grid_xy_cols
 from ..operators.spatial_join import DEFAULT_RES, attach_probe_bboxes
+from .epoch_state import foreach_batch_sink
 from .neardup import _InertState, _parse_interval_seconds
 
 # raw matcher output: epoch long; spatial_overlap_stream projects it
@@ -390,14 +391,10 @@ def dissolve_stream(
             "_id", "_rxmin", "_rymin", "_rxmax", "_rymax"
         ).write.mode("append").parquet(members_dir)
 
-    writer = (
-        polys.writeStream.foreachBatch(member_batch)
-        .option("checkpointLocation", checkpoint_dir + "/members")
-        .outputMode("append")
+    return state, pairs_q, foreach_batch_sink(
+        polys, member_batch, checkpoint_dir + "/members",
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, pairs_q, writer.start()
 
 
 def dissolve_groups_current(

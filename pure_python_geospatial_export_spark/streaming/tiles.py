@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.tiles import encode_mvt_points_xyz, mercator_tile_cols
+from .epoch_state import foreach_batch_sink
 
 
 class MvtTileMaintainer:
@@ -151,11 +152,7 @@ def points_to_mvt_sink(
     m = MvtTileMaintainer(
         point_stream.sparkSession, zoom, store_dir, tiles_dir, **kwargs
     )
-    writer = (
-        point_stream.writeStream.foreachBatch(m.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return m, foreach_batch_sink(
+        point_stream, m.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return m, writer.start()

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .epoch_state import EpochVersionedState
+from .epoch_state import EpochVersionedState, foreach_batch_sink
 
 __all__ = ["LinkGraphState", "link_graph_sink"]
 
@@ -121,11 +121,7 @@ def link_graph_sink(
         url_col=url_col,
         by_domain=by_domain,
     )
-    writer = (
-        page_stream.writeStream.foreachBatch(state.foreach_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    return state, foreach_batch_sink(
+        page_stream, state.foreach_batch, checkpoint_dir,
+        trigger_available_now,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return state, writer.start()

@@ -368,3 +368,29 @@ def test_repeated_and_null_ids_are_answered_per_row(spark, layer):
         for r in polygon_distance_join(probes, layer, 0.0,
                                        res=LAYER_RES).collect()
     ) == [(-1, 1), (-1, 3), (5, 1), (5, 3)]
+
+
+def test_bigint_ids_beside_a_null_stay_exact(spark, layer):
+    """An id above 2**53 in the same Arrow batch as a NULL id comes
+    back exact (a pandas hop would make the column float64)."""
+    from pure_python_geospatial_export_spark.operators.clip import (
+        erase_join,
+    )
+    from pure_python_geospatial_export_spark.operators.spatial_join import (
+        polygon_overlap_join,
+    )
+
+    big = 2**53 + 1
+    probes = _probe_df(spark, [
+        (big, _rect_wkt(0, 0, 2, 2)),        # inside 'big'
+        (None, _rect_wkt(-10, 0, -8, 2)),    # inside 'big'
+        (big, _rect_wkt(140, 0, 142, 2)),    # off the layer
+    ]).coalesce(1)
+    assert probes.rdd.getNumPartitions() == 1
+    got = [r["probe_id"]
+           for r in polygon_overlap_join(probes, layer,
+                                         res=LAYER_RES).collect()]
+    assert sorted(got, key=lambda v: v or -1) == [None, big]
+    assert [r["probe_id"]
+            for r in erase_join(probes, layer,
+                                res=LAYER_RES).collect()] == [big]

@@ -55,11 +55,11 @@ def _no_union(plan):
 _PIP_ONE_PASS = [_one_scan, _no_arrow, _no_union]
 
 # the polygon-vs-layer joins: candidate cells, pair dedupe, full-cell
-# shortcut and exact refine in ONE MapInPandas over the probe scan — no
+# shortcut and exact refine in ONE MapInArrow over the probe scan — no
 # broadcast cover join (the declared exchange count is 0)
 _LAYER_ONE_PASS = [
     _one_scan,
-    lambda plan: plan.count("MapInPandas") == 1,
+    lambda plan: plan.count("MapInArrow") == 1,
     lambda plan: "BroadcastHashJoin" not in plan,
 ]
 

@@ -205,7 +205,7 @@ def test_superseded_versions_are_pruned(spark, tmp_path):
         if n.startswith("v") and n[1:].isdigit()
     )
     assert len(dirs) == 2  # newest + one superseded
-    assert dirs[-1] == state._read_pointer()
+    assert dirs[-1] == state._read_pointer()[0]
     got = _assignments(state)
     assert got == {i * 10: i * 10 for i in range(5)} | {
         i * 10 + 1: i * 10 for i in range(5)

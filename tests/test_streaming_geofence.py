@@ -107,6 +107,8 @@ def test_geofence_stream(spark, tmp_path):
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination()
+    # one inside-set row per user (the keyed state Spark reports)
+    assert q.lastProgress.stateOperators[0].numRowsTotal == 2
     got = {
         (r["user_id"], r["polygon_id"], r["name"], r["event"], r["ts"])
         for r in spark.read.parquet(out_dir).collect()

@@ -96,6 +96,8 @@ def test_stream_matches_batch_closed_segments(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
+    # each user's final segment is still open in the state store
+    assert q.lastProgress.stateOperators[0].numRowsTotal == 3
     got = {
         (r["user_id"], r["t_start"], r["t_end"], r["n_points"],
          r["dur_us"], r["path_mm"], r["xmin"], r["ymin"], r["xmax"],
@@ -166,6 +168,11 @@ def test_trajectory_watermark_ttl_flushes_idle_segments(spark, tmp_path):
         .start()
     )
     q.awaitTermination()
+    progress = q.lastProgress
+    # user 1's segment was flushed and removed; user 99's stays open
+    assert progress.stateOperators[0].numRowsTotal == 1
+    # the latest event, ts(600), minus the 10-minute delay
+    assert progress.eventTime["watermark"] == "2024-01-01T09:50:00.000Z"
     got = {
         (r["user_id"], r["t_start"], r["t_end"], r["n_points"],
          r["path_mm"], r["is_stay"])
