@@ -247,43 +247,47 @@ def clip_ring_bbox(ring, bbox) -> Optional[np.ndarray]:
 
 
 def _seg_pairs_hit(a1, a2, b1, b2, touch: bool = True) -> np.ndarray:
-    """Per-PAIR segment intersection over equal-length 1-D segment
-    arrays (a1[i]->a2[i] vs b1[i]->b2[i]) -> bool[i]. ``touch=False``
-    restricts to proper crossings. The gathered-pair form of
-    :func:`segments_intersect_any`'s math, used by the chunked
-    validity kernels so candidate pairs selected by a bbox prefilter
+    """Per-PAIR segment intersection over equal-length segment arrays
+    (a1[i]->a2[i] vs b1[i]->b2[i]) -> bool[i]; each endpoint argument
+    is an (x, y) pair of 1-D arrays (an (n, 2) array's ``.T`` unpacks
+    to one). ``touch=False`` restricts to proper crossings. The
+    gathered-pair form of :func:`segments_intersect_any`'s math, used by
+    the chunked kernels so candidate pairs selected by a bbox prefilter
     never materialize a dense edge-pair matrix."""
-    da = a2 - a1
-    db = b2 - b1
-
-    def orient(o, d, pts):
-        return (d[:, 0] * (pts[:, 1] - o[:, 1])
-                - d[:, 1] * (pts[:, 0] - o[:, 0]))
-
-    d1 = orient(a1, da, b1)
-    d2 = orient(a1, da, b2)
-    d3 = orient(b1, db, a1)
-    d4 = orient(b1, db, a2)
-    proper = (
+    (a1x, a1y), (a2x, a2y), (b1x, b1y), (b2x, b2y) = a1, a2, b1, b2
+    dax, day = a2x - a1x, a2y - a1y
+    dbx, dby = b2x - b1x, b2y - b1y
+    d1 = dax * (b1y - a1y) - day * (b1x - a1x)
+    d2 = dax * (b2y - a1y) - day * (b2x - a1x)
+    d3 = dbx * (a1y - b1y) - dby * (a1x - b1x)
+    d4 = dbx * (a2y - b1y) - dby * (a2x - b1x)
+    hit = (
         (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0)))
         & (((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0)))
     )
     if not touch:
-        return proper
+        return hit
+    # a touch needs a zero orientation: only those segments test one
+    z = np.flatnonzero((d1 == 0) | (d2 == 0) | (d3 == 0) | (d4 == 0))
+    if not len(z):
+        return hit
 
-    def on_seg(s1, s2, pts, d):
+    def on_seg(s1x, s1y, s2x, s2y, px, py, d):
+        s1x, s1y, s2x, s2y = s1x[z], s1y[z], s2x[z], s2y[z]
+        px, py = px[z], py[z]
         return (
-            (d == 0)
-            & (pts[:, 0] >= np.minimum(s1[:, 0], s2[:, 0]))
-            & (pts[:, 0] <= np.maximum(s1[:, 0], s2[:, 0]))
-            & (pts[:, 1] >= np.minimum(s1[:, 1], s2[:, 1]))
-            & (pts[:, 1] <= np.maximum(s1[:, 1], s2[:, 1]))
+            (d[z] == 0)
+            & (px >= np.minimum(s1x, s2x)) & (px <= np.maximum(s1x, s2x))
+            & (py >= np.minimum(s1y, s2y)) & (py <= np.maximum(s1y, s2y))
         )
 
-    return proper | (
-        on_seg(a1, a2, b1, d1) | on_seg(a1, a2, b2, d2)
-        | on_seg(b1, b2, a1, d3) | on_seg(b1, b2, a2, d4)
+    hit[z] |= (
+        on_seg(a1x, a1y, a2x, a2y, b1x, b1y, d1)
+        | on_seg(a1x, a1y, a2x, a2y, b2x, b2y, d2)
+        | on_seg(b1x, b1y, b2x, b2y, a1x, a1y, d3)
+        | on_seg(b1x, b1y, b2x, b2y, a2x, a2y, d4)
     )
+    return hit
 
 
 def _edge_bboxes(arr: np.ndarray):
@@ -331,7 +335,8 @@ def ring_self_intersects(ring) -> bool:
         if not len(ii):
             continue
         ii = ii + lo
-        if _seg_pairs_hit(p1[ii], p2[ii], p1[jj], p2[jj]).any():
+        if _seg_pairs_hit(p1[ii].T, p2[ii].T, p1[jj].T,
+                          p2[jj].T).any():
             return True
     return False
 
@@ -363,7 +368,7 @@ def rings_properly_cross(a: np.ndarray, b: np.ndarray) -> bool:
         if not len(ii):
             continue
         ii = ii + lo
-        if _seg_pairs_hit(a1[ii], a2[ii], b1[jj], b2[jj],
+        if _seg_pairs_hit(a1[ii].T, a2[ii].T, b1[jj].T, b2[jj].T,
                           touch=False).any():
             return True
     return False
@@ -418,47 +423,337 @@ def segments_intersect_any(a: np.ndarray, b: np.ndarray) -> bool:
 
 def polygons_intersect(rings_a, rings_b) -> bool:
     """Exact "intersects" predicate between two even-odd polygons given
-    as GeoJSON ring lists (boundary contact counts). True iff a vertex
-    of either polygon lies inside the other, or any boundary edges
-    cross/touch — which covers containment, partial overlap, and
-    touch; a probe sitting wholly inside a HOLE fails all three (its
-    vertices test outside by parity, and no edges meet)."""
-    a = [np.asarray(r, dtype=np.float64)[:, :2] for r in rings_a]
-    b = [np.asarray(r, dtype=np.float64)[:, :2] for r in rings_b]
-    va = np.concatenate([r[:-1] for r in a])
-    vb = np.concatenate([r[:-1] for r in b])
-    if points_in_polygon(va[:, 0], va[:, 1], rings_b).any():
-        return True
-    if points_in_polygon(vb[:, 0], vb[:, 1], rings_a).any():
-        return True
-    for ra in a:
-        bb_a = ring_bbox(ra)
-        for rb in b:
-            if not bbox_overlap(bb_a, ring_bbox(rb)):
-                continue
-            if segments_intersect_any(ra, rb):
-                return True
-    return False
+    as GeoJSON ring lists (boundary contact counts): the one-pair call
+    of :func:`polygons_intersect_pairs`. Raises ValueError when either
+    polygon cannot be read."""
+    return _one_pair(GeomSet([rings_a]), GeomSet([rings_b]))
 
 
 def lines_intersect_polygon(lines, rings_b) -> bool:
     """Exact "intersects" between a set of polylines (open; no
-    interior) and an even-odd polygon: any polyline vertex inside the
-    polygon, or any polyline segment crossing/touching any ring edge.
-    A polyline fully inside a HOLE fails both."""
-    ls = [np.asarray(line, dtype=np.float64)[:, :2] for line in lines]
-    v = np.concatenate(ls)
-    if points_in_polygon(v[:, 0], v[:, 1], rings_b).any():
-        return True
-    for line in ls:
-        bb = ring_bbox(line)
-        for rb in rings_b:
-            arr = np.asarray(rb, dtype=np.float64)[:, :2]
-            if not bbox_overlap(bb, ring_bbox(arr)):
+    interior) and an even-odd polygon, the one-pair call of
+    :func:`polygons_intersect_pairs`. Raises ValueError when either
+    side cannot be read."""
+    return _one_pair(GeomSet([lines], areal=False), GeomSet([rings_b]))
+
+
+def _one_pair(a: "GeomSet", b: "GeomSet") -> bool:
+    hit, bad = polygons_intersect_pairs(a, [0], b, [0])
+    if bad[0]:
+        raise ValueError("unreadable geometry")
+    return bool(hit[0])
+
+
+def _reduce_bbox(xy: np.ndarray, starts: np.ndarray,
+                 lens: np.ndarray) -> np.ndarray:
+    """(k, 4) ``ring_bbox`` of each contiguous run ``xy[s:s + n]``; NaN
+    for an empty run. Runs must tile ``xy`` in order (empty ones
+    included), so ``reduceat`` over the non-empty starts sees each whole
+    run; a NaN ordinate propagates into the bbox as in ``ring_bbox``."""
+    out = np.full((len(lens), 4), np.nan)
+    nz = lens > 0
+    if nz.any():
+        at = starts[nz]
+        out[nz, :2] = np.minimum.reduceat(xy, at, axis=0)
+        out[nz, 2:] = np.maximum.reduceat(xy, at, axis=0)
+    return out
+
+
+def _ranges(starts, counts) -> np.ndarray:
+    """Concatenated ``arange(s, s + c)`` over (starts, counts)."""
+    counts = np.asarray(counts, dtype=np.int64)
+    if not len(counts):
+        return np.empty(0, dtype=np.int64)
+    ends = np.cumsum(counts)
+    return (np.repeat(np.asarray(starts, dtype=np.int64) - ends + counts,
+                      counts) + np.arange(ends[-1], dtype=np.int64))
+
+
+def _first_index(counts) -> np.ndarray:
+    """Start offset of each run in a concatenation of runs of ``counts``."""
+    counts = np.asarray(counts, dtype=np.int64)
+    return np.cumsum(counts) - counts
+
+
+#: elements per chunk of the pair kernel's (vertex, edge) and (edge,
+#: edge) work: each element gathers its coordinates (up to 64 B), so a
+#: quarter of ``_PIP_CELL_BUDGET`` keeps a chunk's temporaries near the
+#: dense kernels' ~16 MB per array.
+_PAIR_CHUNK = _PIP_CELL_BUDGET // 4
+
+
+def _element_chunks(counts):
+    """(item, offset) arrays over the elements of items holding
+    ``counts`` elements each, at most ``_PAIR_CHUNK`` elements per chunk
+    (an item larger than that spans several chunks)."""
+    counts = np.asarray(counts, dtype=np.int64)
+    ends = np.cumsum(counts)
+    starts = ends - counts
+    total = int(ends[-1]) if len(ends) else 0
+    for lo in range(0, total, _PAIR_CHUNK):
+        hi = min(lo + _PAIR_CHUNK, total)
+        i0 = int(np.searchsorted(ends, lo, "right"))
+        i1 = int(np.searchsorted(ends, hi - 1, "right")) + 1
+        s = np.maximum(starts[i0:i1], lo)
+        n = np.minimum(ends[i0:i1], hi) - s
+        yield (np.repeat(np.arange(i0, i1), n),
+               _ranges(s - starts[i0:i1], n))
+
+
+class GeomSet:
+    """Linear and areal geometries flattened once into concatenated
+    arrays, the operand of :func:`polygons_intersect_pairs`.
+
+    ``geoms`` holds one part list per geometry (``wkt.vertex_parts``:
+    the rings of a (multi)polygon, the lines of a (multi)linestring),
+    or None for one that could not be read; ``areal`` (one flag, or one
+    per geometry) says whether the parts are rings. A geometry with no
+    parts, or a part that is not an (n, >= 2) vertex array, is
+    unreadable (``ok`` False). Per part: its raw vertices (the segment
+    test's edges), the vertices it offers to a vertex-in-polygon test
+    (a ring minus its closing vertex, all of a line) and its bbox. Per
+    areal geometry: its rings after ``expand_antimeridian_rings``, each
+    with its bbox; ``poly_err`` marks a geometry whose rings cannot be
+    expanded (or that holds an empty ring), which fails any test that
+    uses it as a polygon."""
+
+    def __init__(self, geoms: Sequence, areal=True):
+        n = len(geoms)
+        self.areal = np.zeros(n, dtype=bool)
+        self.areal[:] = areal
+        self.ok = np.zeros(n, dtype=bool)
+        arrs: List[np.ndarray] = []
+        pcount = [0] * n
+        for g, parts in enumerate(geoms):
+            try:
+                got = [np.asarray(p, dtype=np.float64)[:, :2]
+                       for p in parts]
+            except (TypeError, ValueError, IndexError):
                 continue
-            if segments_intersect_any(line, arr):
-                return True
-    return False
+            if got and all(a.ndim == 2 and a.shape[1] == 2 for a in got):
+                arrs.extend(got)
+                pcount[g] = len(got)
+                self.ok[g] = True
+        self.pcount = np.array(pcount, dtype=np.int64)
+        self.pstart = _first_index(self.pcount)
+        self.plen = plen = np.array([len(a) for a in arrs], dtype=np.int64)
+        self.part_start = _first_index(plen)
+        xy = np.concatenate(arrs) if arrs else np.empty((0, 2))
+        self.x, self.y = xy.T.copy()
+        self.part_bbox = _reduce_bbox(xy, self.part_start, plen)
+        part_geom = np.repeat(np.arange(n), self.pcount)
+        ring_part = self.areal[part_geom]
+        empty = plen == 0
+        # the first empty part of a geometry: a line's segment test
+        # stops there, and any empty ring fails a polygon outright
+        self.empty_at = np.full(n, np.iinfo(np.int64).max)
+        self.poly_err = np.zeros(n, dtype=bool)
+        if empty.any():
+            local = np.arange(len(plen)) - self.pstart[part_geom]
+            np.minimum.at(self.empty_at, part_geom[empty], local[empty])
+            self.poly_err[part_geom[ring_part & empty]] = True
+        # probe vertices: all but each ring's closing vertex
+        closing = ring_part & ~empty
+        keep = np.ones(len(xy), dtype=bool)
+        keep[(self.part_start + plen - 1)[closing]] = False
+        self.vidx = np.flatnonzero(keep)
+        self.vcount = np.bincount(part_geom, weights=plen - closing,
+                                  minlength=n).astype(np.int64)
+        self.vstart = _first_index(self.vcount)
+        self._rings(xy, part_geom, ring_part)
+
+    def _rings(self, xy: np.ndarray, part_geom: np.ndarray,
+               ring_part: np.ndarray):
+        """The expanded rings of the areal geometries, contiguous in
+        geometry order: a ring with an edge spanning more than 180
+        degrees of longitude becomes its ``split_ring_antimeridian``
+        lobes, every other ring is its raw part."""
+        crossing = np.zeros(len(self.plen), dtype=bool)
+        jump = np.flatnonzero(np.abs(np.diff(self.x)) > 180.0)
+        if len(jump):
+            owner = np.repeat(np.arange(len(self.plen)), self.plen)
+            jump = jump[owner[jump] == owner[jump + 1]]
+            crossing[owner[jump]] = True
+            crossing &= ring_part
+        if ring_part.all() and not crossing.any():
+            # every part is a ring of its own: the parts are the rings
+            self.rx, self.ry, self.ring_len = self.x, self.y, self.plen
+            self.ring_start, self.ring_bbox = self.part_start, \
+                self.part_bbox
+            self.rcount, self.rstart = self.pcount, self.pstart
+            return
+        plain = np.flatnonzero(ring_part & ~crossing)
+        ring_geom = [part_geom[plain]]
+        ring_xy = [xy[_ranges(self.part_start[plain], self.plen[plain])]]
+        ring_len = [self.plen[plain]]
+        for k in np.flatnonzero(crossing):
+            g = part_geom[k]
+            s = self.part_start[k]
+            try:
+                lobes = split_ring_antimeridian(xy[s:s + self.plen[k]])
+            except Exception:
+                # any failure to split leaves the polygon unanswerable,
+                # as the raise did for one pair at a time
+                self.poly_err[g] = True
+                continue
+            ring_geom.append(np.full(len(lobes), g))
+            ring_xy.extend(lobes)
+            ring_len.append(np.array([len(r) for r in lobes],
+                                     dtype=np.int64))
+        rg = np.concatenate(ring_geom)
+        rl = np.concatenate(ring_len)
+        order = np.argsort(rg, kind="stable")
+        self.ring_len = rl[order]
+        rxy = np.concatenate(ring_xy)[
+            _ranges(_first_index(rl)[order], self.ring_len)]
+        self.rx, self.ry = rxy.T.copy()
+        self.ring_start = _first_index(self.ring_len)
+        self.ring_bbox = _reduce_bbox(rxy, self.ring_start, self.ring_len)
+        self.rcount = np.bincount(rg, minlength=len(self.ok)).astype(
+            np.int64)
+        self.rstart = _first_index(self.rcount)
+
+
+def _ray_hits(px, py, p, rx, ry, e) -> np.ndarray:
+    """:func:`points_in_ring`'s crossing test of point ``p[i]`` against
+    the edge from ring vertex ``e[i]`` to ``e[i] + 1``, in the same
+    float expressions; the x work runs only where the edge straddles
+    the point's y."""
+    ty, y0, y1 = py[p], ry[e], ry[e + 1]
+    s = np.flatnonzero((y0 >= ty) != (y1 >= ty))
+    hit = np.zeros(len(p), dtype=bool)
+    if not len(s):
+        return hit
+    ty, y0, y1 = ty[s], y0[s], y1[s]
+    tx, x0, x1 = px[p[s]], rx[e[s]], rx[e[s] + 1]
+    xflag0 = x0 >= tx
+    same_x_side = xflag0 == (x1 >= tx)
+    denom = y0 - y1
+    denom = np.where(denom == 0.0, 1.0, denom)
+    with np.errstate(over="ignore", invalid="ignore"):
+        crossing_x = x1 - (y1 - ty) * (x0 - x1) / denom
+    hit[s] = (same_x_side & xflag0) | (~same_x_side & (crossing_x >= tx))
+    return hit
+
+
+def _pairs_vertex_in(pts: GeomSet, ip: np.ndarray, poly: GeomSet,
+                     iq: np.ndarray) -> np.ndarray:
+    """Per pair: does any probe vertex of ``pts[ip]`` lie inside the
+    polygon ``poly[iq]`` (:func:`points_in_polygon` parity over its
+    expanded rings, each gated by its bbox)?"""
+    nv = pts.vcount[ip]
+    pv_pair = np.repeat(np.arange(len(ip)), nv)
+    v = pts.vidx[_ranges(pts.vstart[ip], nv)]
+    px, py = pts.x[v], pts.y[v]
+    q = iq[pv_pair]
+    nr = poly.rcount[q]
+    pv = np.repeat(np.arange(len(v)), nr)
+    ring = _ranges(poly.rstart[q], nr)
+    bb = poly.ring_bbox[ring]
+    x, y = px[pv], py[pv]
+    cand = (x >= bb[:, 0]) & (x <= bb[:, 2]) & (y >= bb[:, 1]) \
+        & (y <= bb[:, 3])
+    pv, ring = pv[cand], ring[cand]
+    # parity over all rings at once: XOR of per-ring parities is the
+    # parity of the summed crossing counts
+    crossings = np.zeros(len(v), dtype=np.int64)
+    for item, off in _element_chunks(np.maximum(poly.ring_len[ring] - 1,
+                                                0)):
+        p = pv[item]
+        hit = _ray_hits(px, py, p, poly.rx, poly.ry,
+                        poly.ring_start[ring[item]] + off)
+        crossings += np.bincount(p[hit], minlength=len(v))
+    inside = (crossings % 2).astype(bool)
+    return np.bincount(pv_pair[inside], minlength=len(ip)) > 0
+
+
+def _pairs_edges_meet(a: GeomSet, ia: np.ndarray, b: GeomSet,
+                      ib: np.ndarray):
+    """Per pair: does an edge of a part of ``a[ia]`` cross or touch an
+    edge of a ring of ``b[ib]`` whose bbox overlaps the part's? The
+    segment test runs on the raw parts. A line's parts are taken in
+    order up to its first empty one: returns (hit, stopped), where
+    ``stopped`` marks a pair that met no edge before an empty part."""
+    na = a.pcount[ia]
+    pair = np.repeat(np.arange(len(ia)), na)
+    pa = _ranges(a.pstart[ia], na)
+    nb = b.pcount[ib[pair]]
+    item_pa = np.repeat(np.arange(len(pa)), nb)
+    pb = _ranges(b.pstart[ib[pair]], nb)
+    pa = pa[item_pa]
+    ba, bb = a.part_bbox[pa], b.part_bbox[pb]
+    gate = (
+        (ba[:, 0] <= bb[:, 2]) & (ba[:, 2] >= bb[:, 0])
+        & (ba[:, 1] <= bb[:, 3]) & (ba[:, 3] >= bb[:, 1])
+    )
+    pair = pair[item_pa]
+    gate &= pa - a.pstart[ia[pair]] < a.empty_at[ia[pair]]
+    pa, pb, pair = pa[gate], pb[gate], pair[gate]
+    # one row per (candidate, edge of the a part); a row meets every
+    # edge of the b ring
+    ea = np.maximum(a.plen[pa] - 1, 0)
+    row = np.repeat(np.arange(len(pa)), ea)
+    row_sa = _ranges(a.part_start[pa], ea)
+    row_sb = b.part_start[pb][row]
+    met = np.zeros(len(pa), dtype=bool)
+    for r, j in _element_chunks(np.maximum(b.plen[pb] - 1, 0)[row]):
+        sa, sb = row_sa[r], row_sb[r] + j
+        hit = _seg_pairs_hit((a.x[sa], a.y[sa]),
+                             (a.x[sa + 1], a.y[sa + 1]),
+                             (b.x[sb], b.y[sb]),
+                             (b.x[sb + 1], b.y[sb + 1]))
+        met[row[r[hit]]] = True
+    hit = np.bincount(pair[met], minlength=len(ia)) > 0
+    stopped = ~hit & (a.empty_at[ia] < a.pcount[ia])
+    return hit, stopped
+
+
+def polygons_intersect_pairs(a: GeomSet, ia, b: GeomSet, ib):
+    """Exact "intersects" of many (geometry, polygon) pairs at once:
+    pair ``k`` tests ``a[ia[k]]`` (areal or linear) against the areal
+    ``b[ib[k]]`` -> (hit, bad) bool arrays, ``bad`` marking a pair that
+    cannot be answered (an unreadable side, a non-areal ``b``, a
+    polygon whose rings cannot be expanded); a bad pair never hits.
+
+    True iff a probe vertex of ``a`` lies inside ``b``, or (areal ``a``)
+    a vertex of ``b`` lies inside ``a``, or a boundary edge of ``a``
+    crosses or touches one of ``b`` — which covers containment, partial
+    overlap and touch; a probe sitting wholly inside a HOLE fails all
+    three (its vertices test outside by parity, and no edges meet).
+
+    Each step answers every still-open pair in array-wide numpy: the
+    (pair, vertex, ring) and (pair, part, ring) candidates are gated by
+    ring bboxes, and their (edge) and (edge, edge) work runs in chunks of
+    at most ``_PAIR_CHUNK`` elements. The answers, and which pairs
+    are bad, are those of one pair at a time through
+    ``points_in_polygon`` and the bbox-gated segment test, in that order
+    (so ``a``'s own rings are only expanded for a pair its vertices did
+    not settle)."""
+    ia = np.asarray(ia, dtype=np.int64)
+    ib = np.asarray(ib, dtype=np.int64)
+    hit = np.zeros(len(ia), dtype=bool)
+    bad = ~(a.ok[ia] & b.ok[ib] & b.areal[ib]) | b.poly_err[ib]
+    # pairs in slices, so the (pair, vertex, ring) and (pair, part,
+    # ring) candidate lists stay within a chunk too
+    cost = np.maximum(
+        a.vcount[ia] * b.rcount[ib] + b.vcount[ib] * a.rcount[ia]
+        + a.pcount[ia] * b.pcount[ib], 1)
+    ends = np.cumsum(cost)
+    lo = 0
+    while lo < len(ia):
+        hi = max(lo + 1, int(np.searchsorted(
+            ends, ends[lo] - cost[lo] + _PAIR_CHUNK, "right")))
+        k = lo + np.flatnonzero(~bad[lo:hi])
+        hit[k] = _pairs_vertex_in(a, ia[k], b, ib[k])
+        k = k[~hit[k] & a.areal[ia[k]]]
+        bad[k[a.poly_err[ia[k]]]] = True
+        k = k[~a.poly_err[ia[k]]]
+        hit[k] = _pairs_vertex_in(b, ib[k], a, ia[k])
+        k = lo + np.flatnonzero(~hit[lo:hi] & ~bad[lo:hi])
+        hit[k], stopped = _pairs_edges_meet(a, ia[k], b, ib[k])
+        bad[k[stopped]] = True
+        lo = hi
+    return hit, bad
 
 
 def simplify_line(points, tolerance: float) -> np.ndarray:

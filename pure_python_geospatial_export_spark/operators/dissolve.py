@@ -15,8 +15,9 @@ quadratic sits on a scale path:
    — the cell containing the south-west corner of the two bboxes'
    intersection, which both sides provably cover — so every colliding
    pair surfaces exactly once. Only bbox-overlapping candidates run the
-   exact kernel (``kernels.polygons_intersect``; geodesic edges via the
-   great-circle variants), Arrow-batched over the pair's two WKTs.
+   exact kernel, a whole Arrow batch of pairs per
+   ``kernels.polygons_intersect_pairs`` call with each distinct WKT
+   parsed once (geodesic edges: the great-circle variant per pair).
 2. :func:`dissolve` — connected components over the pair graph
    (``dedup.duplicate_clusters``: label propagation + pointer jumping,
    O(log diameter) rounds), with non-colliding singletons unioned back
@@ -152,10 +153,7 @@ def _pairs_grouped(
     from pyspark.sql.types import StructField, StructType
 
     from ..geo import cells as cellmod
-    from ..geo import kernels
-    from ..geo import wkt as wktmod
     from .grouped import ordered_group_map
-    from .spatial_join import _probe_parts
 
     gx0, gy0 = grid_xy_cols(F.col("_xmin"), F.col("_ymin"), res)
     gx1, gy1 = grid_xy_cols(F.col("_xmax"), F.col("_ymax"), res)
@@ -198,40 +196,20 @@ def _pairs_grouped(
         if not len(i):
             return empty
         ids = pdf["_id"].to_numpy()
-        wkts = pdf["_wkt"].to_numpy()
-        parsed: dict = {}
-
-        def parts(idx):
-            got = parsed.get(idx)
-            if got is None:
-                try:
-                    got = _probe_parts(wktmod.loads(wkts[idx]))
-                except Exception:
-                    got = ("bad", None)
-                parsed[idx] = got
-            return got
-
-        out_a, out_b = [], []
-        for ii, jj in zip(i.tolist(), j.tolist()):
-            if ids[ii] == ids[jj]:
-                # duplicate-id rows: the join strategy's strict
-                # id_a < id_b filter drops self-pairs — mirror it
-                continue
-            ka, ra = parts(ii)
-            kb, rb = parts(jj)
-            if ka != "area" or kb != "area":
-                continue
-            if geodesic:
-                from ..geo.geodesic import polygons_intersect_geodesic
-                hit = polygons_intersect_geodesic(ra, rb)
-            else:
-                hit = kernels.polygons_intersect(ra, rb)
-            if hit:
-                out_a.append(ids[ii])
-                out_b.append(ids[jj])
-        if not out_a:
+        # duplicate-id rows: the join strategy's strict id_a < id_b
+        # filter drops self-pairs — mirror it
+        keep = ids[i] != ids[j]
+        i, j = i[keep], j[keep]
+        if not len(i):
             return empty
-        return pd.DataFrame({"id_a": out_a, "id_b": out_b})
+        # each member in a pair parsed once
+        members, inv = np.unique(np.concatenate([i, j]),
+                                 return_inverse=True)
+        hit = _verify(pdf["_wkt"].to_numpy()[members], inv[:len(i)],
+                      inv[len(i):], geodesic)
+        if not hit.any():
+            return empty
+        return pd.DataFrame({"id_a": ids[i[hit]], "id_b": ids[j[hit]]})
 
     return ordered_group_map(
         cand, ["_gx", "_gy"], pair_group, out_schema,
@@ -246,12 +224,7 @@ def _pairs_from_bboxes(
     max_bucket: int | None,
 ) -> DataFrame:
     """The pair join over a prepared (_id, _wkt, _xmin.._ymax) frame."""
-    import pandas as pd
     from pyspark.sql.types import StructField, StructType
-
-    from ..geo import kernels
-    from ..geo import wkt as wktmod
-    from .spatial_join import _probe_parts
 
     gx0, gy0 = grid_xy_cols(F.col("_xmin"), F.col("_ymin"), res)
     gx1, gy1 = grid_xy_cols(F.col("_xmax"), F.col("_ymax"), res)
@@ -308,33 +281,50 @@ def _pairs_from_bboxes(
 
     def verify_kernel(batches):
         for pdf in batches:
-            keep = []
-            for sa, sb in zip(pdf["_wkt_a"], pdf["_wkt_b"]):
-                try:
-                    ka, ra = _probe_parts(wktmod.loads(sa))
-                    kb, rb = _probe_parts(wktmod.loads(sb))
-                    if ka != "area" or kb != "area":
-                        # dissolve is a polygon operator: non-areal
-                        # rows never merge (they stay singletons)
-                        keep.append(False)
-                        continue
-                    if geodesic:
-                        from ..geo.geodesic import (
-                            polygons_intersect_geodesic,
-                        )
-                        keep.append(
-                            bool(polygons_intersect_geodesic(ra, rb))
-                        )
-                    else:
-                        keep.append(
-                            bool(kernels.polygons_intersect(ra, rb))
-                        )
-                except Exception:
-                    keep.append(False)
-            mask = pd.Series(keep, index=pdf.index)
-            yield pdf.loc[mask, ["id_a", "id_b"]]
+            # each distinct WKT of the batch parsed once
+            code: dict = {}
+            ia = [code.setdefault(w, len(code)) for w in pdf["_wkt_a"]]
+            ib = [code.setdefault(w, len(code)) for w in pdf["_wkt_b"]]
+            hit = _verify(list(code), np.array(ia, dtype=np.int64),
+                          np.array(ib, dtype=np.int64), geodesic)
+            yield pdf.loc[hit, ["id_a", "id_b"]]
 
     return joined.mapInPandas(verify_kernel, out_schema)
+
+
+def _verify(wkts, ia: np.ndarray, ib: np.ndarray,
+            geodesic: bool) -> np.ndarray:
+    """Exact "intersects" of candidate pairs ``(wkts[ia[k]],
+    wkts[ib[k]])`` -> bool per pair. Dissolve is a polygon operator: a
+    non-areal or unparseable row never merges (it stays a singleton).
+    Planar pairs run in one ``kernels.polygons_intersect_pairs`` call,
+    each WKT parsed once; geodesic pairs take the great-circle kernel
+    one pair at a time."""
+    from ..geo import kernels
+    from ..geo import wkt as wktmod
+    from .spatial_join import _probe_parts
+
+    rings = []
+    for w in wkts:
+        try:
+            kind, got = _probe_parts(wktmod.loads(w))
+        except Exception:
+            kind, got = None, None
+        rings.append(got if kind == "area" else None)
+    if not geodesic:
+        geoms = kernels.GeomSet(rings)
+        return kernels.polygons_intersect_pairs(geoms, ia, geoms, ib)[0]
+    from ..geo.geodesic import polygons_intersect_geodesic
+
+    hit = np.zeros(len(ia), dtype=bool)
+    for k, (a, b) in enumerate(zip(ia.tolist(), ib.tolist())):
+        if rings[a] is not None and rings[b] is not None:
+            try:
+                hit[k] = bool(polygons_intersect_geodesic(rings[a],
+                                                          rings[b]))
+            except Exception:
+                pass
+    return hit
 
 
 def _prepared_bboxes(df: DataFrame, id_col: str, wkt_col: str,

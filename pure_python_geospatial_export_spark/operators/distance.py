@@ -15,10 +15,12 @@ candidate window WIDENED by the threshold:
 2. the full-cell shortcut still tests the UNexpanded bbox (a probe
    inside a provably-interior cell INTERSECTS: distance 0 with no
    geometry);
-3. unresolved pairs run exact geometry: intersection/containment test
-   first (region distance 0), else the endpoint-complete boundary
-   kernel ``geo.dist.rings_min_dist2`` (exact — for disjoint
-   segments the min is attained at an endpoint of one of them).
+3. unresolved pairs run exact geometry: the batch's intersection/
+   containment test first, all pairs in one
+   ``kernels.polygons_intersect_pairs`` call (region distance 0), then
+   for the rest the endpoint-complete boundary kernel
+   ``geo.dist.rings_min_dist2`` (exact — for disjoint segments the min
+   is attained at an endpoint of one of them).
 
 Distances are squared in the filter (no sqrt in the predicate);
 ``dist`` = sqrt(dist2) rides along for consumers. ``max_dist`` is in
@@ -43,6 +45,7 @@ from .fixpoint import checkpoint, fixpoint, frontier_empty
 from .spatial_join import (
     DEFAULT_RES,
     PAIR_FIELDS,
+    PlanarLayer,
     ProbeBatch,
     _probe_parts,
     attach_probe_bboxes,
@@ -69,7 +72,6 @@ def polygon_distance_join(
     distance 0). ``id_col`` is carried, not grouped on."""
     from pyspark.sql.types import DoubleType, StructField
 
-    from ..geo import kernels
     from ..geo.dist import rings_min_dist2
 
     if edges != "planar":
@@ -85,21 +87,20 @@ def polygon_distance_join(
     layer_rings = {
         int(pid): info["rings"] for pid, info in rings_by_id.items()
     }
+    layer = PlanarLayer(rings_by_id)
     d2max = d * d
 
     def refine(b: ProbeBatch):
         d2 = np.where(b.sure, 0.0, np.nan)
-        for j in np.flatnonzero(~b.sure):
+        j = np.flatnonzero(~b.sure)
+        hit, bad = b.intersects(j, layer)
+        d2[j[hit]] = 0.0
+        for k in j[~hit & ~bad]:
             try:
-                kind, parts = _probe_parts(b.probe(b.row[j]))
-                lr = layer_rings[int(b.polygon_id[j])]
-                hit = (
-                    kernels.polygons_intersect(parts, lr)
-                    if kind == "area"
-                    else kernels.lines_intersect_polygon(parts, lr)
-                )
-                d2[j] = 0.0 if hit else rings_min_dist2(
-                    parts, lr, closed_a=(kind == "area"))
+                kind, parts = _probe_parts(b.probe(b.row[k]))
+                d2[k] = rings_min_dist2(
+                    parts, layer_rings[int(b.polygon_id[k])],
+                    closed_a=(kind == "area"))
             except Exception:
                 pass
         ok = d2 <= d2max  # NaN (no answer) compares False

@@ -40,6 +40,8 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..functions.geom_udfs import cell_id_col
 from ..geo import cells as cellmod
+from ..geo import kernels
+from ..geo.kernels import _ranges
 from ..sources.polygons import (
     LayerCover,
     layer_cover,
@@ -268,7 +270,7 @@ def spatial_join_big_layer(
     two shuffles, which is the correct shape when the layer itself is
     fact-sized.
     """
-    from ..geo import kernels, wkt as wktmod
+    from ..geo import wkt as wktmod
     from ..geo.cells import polygon_cover
 
     if edges == "geodesic":
@@ -473,14 +475,6 @@ def _grid(v, off: float, span: float, n: int) -> np.ndarray:
     return np.clip(g, 0, n - 1).astype(np.int64)
 
 
-def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Concatenated ``arange(s, s + c)`` over (starts, counts)."""
-    if not len(counts):
-        return np.empty(0, dtype=np.int64)
-    ends = np.cumsum(counts)
-    return np.repeat(starts - ends + counts, counts) + np.arange(ends[-1])
-
-
 def candidate_cells(bounds: np.ndarray, cover: LayerCover, res: int,
                     pad: float = 0.0):
     """Candidate cells of a batch of probe bboxes -> (row, k, sure): one
@@ -541,6 +535,18 @@ PAIR_FIELDS = [StructField("polygon_id", LongType(), False),
                StructField("name", StringType(), True)]
 
 
+class PlanarLayer:
+    """A polygon layer flattened once (``kernels.GeomSet``, sorted by
+    polygon id) for the planar pair kernel; built when the query is
+    planned, it rides to the executors in the refine's closure."""
+
+    def __init__(self, rings_by_id: Dict[int, dict]):
+        self.pids = np.array(sorted(int(p) for p in rings_by_id),
+                             dtype=np.int64)
+        self.geoms = kernels.GeomSet(
+            [rings_by_id[int(p)]["rings"] for p in self.pids])
+
+
 class ProbeBatch(NamedTuple):
     """One Arrow batch of probes after the candidate stage."""
 
@@ -561,6 +567,24 @@ class ProbeBatch(NamedTuple):
             self.id_col: self.ids.take(self.row[sel]),
             "polygon_id": pid, "name": [self.names[p] for p in pid], **cols,
         }
+
+    def intersects(self, sel: np.ndarray, layer: PlanarLayer):
+        """Planar "intersects" of pairs ``sel`` against the layer in one
+        ``kernels.polygons_intersect_pairs`` call -> (hit, bad), each
+        probe flattened once; a probe that does not parse, or is not
+        linear or areal, is bad."""
+        rows, inv = np.unique(self.row[sel], return_inverse=True)
+        parts, areal = [], []
+        for r in rows.tolist():
+            try:
+                kind, got = _probe_parts(self.probe(r))
+            except Exception:
+                kind, got = None, None
+            parts.append(got)
+            areal.append(kind == "area")
+        return kernels.polygons_intersect_pairs(
+            kernels.GeomSet(parts, areal), inv, layer.geoms,
+            np.searchsorted(layer.pids, self.polygon_id[sel]))
 
 
 def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
@@ -591,13 +615,12 @@ def layer_candidate_map(probes: DataFrame, rings_by_id: Dict[int, dict],
 
     def kernel(batches):
         for batch in batches:
-            wkts = batch.column("_wkt").to_numpy(
-                zero_copy_only=False).tolist()
+            wkts = batch.column("_wkt")
             memo: dict = {}
 
             def probe(i, wkts=wkts, memo=memo):
                 if i not in memo:
-                    memo[i] = _loads_or_none(wkts[i])
+                    memo[i] = _loads_or_none(wkts[i].as_py())
                 return memo[i]
 
             if geodesic:
@@ -642,28 +665,43 @@ def polygon_overlap_join(
        layer's sorted cover, deduped per (row, polygon) with the
        FULL-CELL shortcut (a probe whose bbox sits inside a
        provably-interior cover cell intersects by containment);
-    3. only unresolved pairs run the exact kernel
-       (``kernels.polygons_intersect``: vertex-in-polygon both ways +
-       edge crossings/touches), each probe parsed once per batch,
-       layer rings from the driver dict in the closure; a probe the
-       kernel cannot read matches nothing.
+    3. the unresolved pairs run the exact kernel together, one
+       ``kernels.polygons_intersect_pairs`` call per batch
+       (vertex-in-polygon both ways + edge crossings/touches), each
+       probe parsed and flattened once per batch, the layer flattened
+       once per query (``PlanarLayer``, in the closure); a probe
+       the kernel cannot read matches nothing. Geodesic edges keep the
+       per-pair great-circle kernels.
 
     Pick ``res`` so typical probes span O(1) cells — the window is
     (bbox cells per row) and the refine cost is per candidate pair.
     """
-    from ..geo import kernels
-
     if rings_by_id is None:
         rings_by_id = load_rings(polygons)
-    geodesic = edges == "geodesic"
-    if geodesic:
-        from ..geo.geodesic import (
-            lines_intersect_polygon_geodesic as lines_hit,
-            polygons_intersect_geodesic as areas_hit,
-        )
+    if edges == "geodesic":
+        refine = _geodesic_overlap_refine(rings_by_id)
     else:
-        areas_hit = kernels.polygons_intersect
-        lines_hit = kernels.lines_intersect_polygon
+        layer = PlanarLayer(rings_by_id)
+
+        def refine(b: ProbeBatch):
+            ok = b.sure.copy()
+            j = np.flatnonzero(~b.sure)
+            ok[j] = b.intersects(j, layer)[0]
+            return b.pair_columns(ok)
+
+    return layer_candidate_map(probes, rings_by_id, res, edges, id_col,
+                               wkt_col, PAIR_FIELDS, refine)
+
+
+def _geodesic_overlap_refine(rings_by_id: Dict[int, dict]) -> Callable:
+    """The overlap join's refine under great-circle edges: one
+    ``polygons_intersect_geodesic`` / ``lines_intersect_polygon_geodesic``
+    call per unresolved pair."""
+    from ..geo.geodesic import (
+        lines_intersect_polygon_geodesic,
+        polygons_intersect_geodesic,
+    )
+
     layer_rings = {
         int(pid): info["rings"] for pid, info in rings_by_id.items()
     }
@@ -674,11 +712,12 @@ def polygon_overlap_join(
             try:
                 kind, parts = _probe_parts(b.probe(b.row[j]))
                 lr = layer_rings[int(b.polygon_id[j])]
-                ok[j] = bool(areas_hit(parts, lr) if kind == "area"
-                             else lines_hit(parts, lr))
+                ok[j] = bool(
+                    polygons_intersect_geodesic(parts, lr)
+                    if kind == "area"
+                    else lines_intersect_polygon_geodesic(parts, lr))
             except Exception:
                 pass
         return b.pair_columns(ok)
 
-    return layer_candidate_map(probes, rings_by_id, res, edges, id_col,
-                               wkt_col, PAIR_FIELDS, refine)
+    return refine

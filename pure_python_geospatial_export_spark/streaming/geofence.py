@@ -12,7 +12,8 @@ zone").
 
 Scale shape: the layer is a broadcast-sized dimension (same contract
 as ``spatial_join``'s driver ring dict); state is O(zones currently
-occupied) per entity; points shuffle ONCE on the entity key (the
+occupied) per entity, and only entities inside some zone keep a state
+row at all; points shuffle ONCE on the entity key (the
 stateful groupBy). Within-batch rows sort by event time (ties by an
 optional ``order_col``) so transitions are deterministic; batches must
 respect event-time order per entity (feed through one query — the
@@ -95,7 +96,12 @@ def make_geofencer(rings_by_id, order_col: Optional[str] = None):
                 elif pid not in now and pid in inside:
                     out.append((user_id, pid, name, "exit", t))
             inside = now
-        state.update((sorted(inside),))
+        # an absent state reads as the empty set, so a user outside
+        # every zone keeps no row: the store holds only users inside one
+        if inside:
+            state.update((sorted(inside),))
+        elif state.exists:
+            state.remove()
         if out:
             yield pd.DataFrame(
                 out, columns=list(OUTPUT_SCHEMA.fieldNames())

@@ -107,8 +107,9 @@ def test_geofence_stream(spark, tmp_path):
         .outputMode("append").trigger(availableNow=True).start()
     )
     q.awaitTermination()
-    # one inside-set row per user (the keyed state Spark reports)
-    assert q.lastProgress.stateOperators[0].numRowsTotal == 2
+    # one inside-set row per user inside a zone: user 0 ends in "west",
+    # user 1 never enters one and keeps no row
+    assert q.lastProgress.stateOperators[0].numRowsTotal == 1
     got = {
         (r["user_id"], r["polygon_id"], r["name"], r["event"], r["ts"])
         for r in spark.read.parquet(out_dir).collect()
