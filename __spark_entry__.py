@@ -1965,35 +1965,6 @@ def _q_dissolve_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# the grouped pair strategy must compute the SAME components
-@query("dissolve_rects_grouped", oracle=_dissolve_sql, folded=True)
-def _q_dissolve_rects_grouped(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    # the single-exchange grouped pair strategy against the SAME
-    # recursive-closure oracle — bit-level proof the group-walk
-    # variant computes identical components
-    from pure_python_geospatial_export_spark.operators.dissolve import (
-        dissolve_groups,
-    )
-
-    pts = _docs_points(spark, sf_dir).where(F.col("doc_id") % 21 == 0)
-    half = F.lit(0.5) + (F.col("doc_id") % 4).cast("double") * F.lit(0.3)
-    x0 = F.round(F.col("lon") - half, 6)
-    x1 = F.round(F.col("lon") + half, 6)
-    y0 = F.round(F.col("lat") - half, 6)
-    y1 = F.round(F.col("lat") + half, 6)
-    probe_wkt = F.format_string(
-        "POLYGON ((%.6f %.6f, %.6f %.6f, %.6f %.6f, %.6f %.6f, "
-        "%.6f %.6f))",
-        x0, y0, x1, y0, x1, y1, x0, y1, x0, y0,
-    )
-    probes = pts.select(F.col("doc_id").alias("id"),
-                        probe_wkt.alias("wkt"))
-    return dissolve_groups(probes, res=6, strategy="grouped").select(
-        "group_id", "n_members", "xmin", "ymin", "xmax", "ymax"
-    )
-
-
 # dissolve_union_rects: same recursive-closure grouping over
 # INTEGER-lattice rects, then the union AREA recomputed by
 # coordinate-grid decomposition — a minimal cell of the group's

@@ -295,8 +295,8 @@ def jaccard_verify(
     Exactness-gated callers (the driver oracle) leave it
     off; corpus-scale jobs where the candidate pool is dominated by
     far-below-threshold junk get the dominant shuffle cut for a
-    bounded, quantified recall trade (measured in
-    scripts/minhash_verify_ab.py)."""
+    bounded, quantified recall trade (the verify-shuffle A/B is in
+    BENCH/BASELINE.md, "MinHash verify-shuffle size bound")."""
     if sig_margin is not None and sig_df is None:
         raise ValueError("sig_margin requires sig_df (id, sig)")
     if shingles_df is None:

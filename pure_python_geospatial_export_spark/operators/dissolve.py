@@ -15,9 +15,8 @@ quadratic sits on a scale path:
    — the cell containing the south-west corner of the two bboxes'
    intersection, which both sides provably cover — so every colliding
    pair surfaces exactly once. Only bbox-overlapping candidates run the
-   exact kernel, a whole Arrow batch of pairs per
-   ``kernels.polygons_intersect_pairs`` call with each distinct WKT
-   parsed once (geodesic edges: the great-circle variant per pair).
+   exact kernel, a whole Arrow batch of pairs per :func:`verify_pairs`
+   call (the verify the streaming twin shares).
 2. :func:`dissolve` — connected components over the pair graph
    (``dedup.duplicate_clusters``: label propagation + pointer jumping,
    O(log diameter) rounds), with non-colliding singletons unioned back
@@ -44,7 +43,7 @@ from .spatial_join import DEFAULT_RES, attach_probe_bboxes
 
 __all__ = [
     "polygon_self_overlap_pairs",
-    "auto_strategy",
+    "verify_pairs",
     "dissolve",
     "dissolve_groups",
     "dissolve_geometry",
@@ -58,162 +57,20 @@ def polygon_self_overlap_pairs(
     res: int = DEFAULT_RES,
     edges: str = "planar",
     max_bucket: int | None = None,
-    strategy: str = "join",
 ) -> DataFrame:
     """Exact polygon-vs-polygon "intersects" self-join ->
     ``(id_a, id_b)`` with ``id_a < id_b`` (boundary contact counts).
 
     ``max_bucket`` caps the per-cell candidate fan-out (rows kept per
     cell, ordered by id for determinism) — the boilerplate-flood guard;
-    ``None`` disables the cap.
-
-    ``strategy``: ``"join"`` (default) shuffles both explode sides
-    into a hash equi self-join on the cell — two exchanges, the shape
-    AQE can skew-split; ``"grouped"`` shuffles the exploded relation
-    ONCE and forms pairs per cell inside a batched group walk
-    (vectorized bbox prefilter + canonical-cell dedupe + in-kernel
-    verify, each group member's WKT parsed at most once); ``"auto"``
-    measures the candidate-cell histogram first and picks per run
-    (:func:`auto_strategy`). Identical pair sets (asserted in tests);
-    measured A/B in scripts/dissolve_strategy_ab.py.
-    """
-    if strategy not in ("join", "grouped", "auto"):
-        raise ValueError("strategy must be 'join', 'grouped' or 'auto'")
+    ``None`` disables the cap. Both explode sides shuffle into a hash
+    equi self-join on the cell: two exchanges, the shape AQE can
+    skew-split on a hot cell."""
     geodesic = edges == "geodesic"
     src = df.select(F.col(id_col).alias("_id"),
                     F.col(wkt_col).alias("_wkt"))
-    with_bbox = attach_probe_bboxes(src, geodesic)
-    if strategy == "auto":
-        # the histogram pass and the pair pass both parse WKT in
-        # attach_probe_bboxes — materialize once so auto never doubles
-        # the parse (the dissolve_* entry points already checkpoint)
-        with_bbox = with_bbox.localCheckpoint(eager=True)
-        strategy = auto_strategy(with_bbox, res, max_bucket)
-    if strategy == "grouped":
-        return _pairs_grouped(with_bbox, res, geodesic, max_bucket)
-    return _pairs_from_bboxes(with_bbox, res, geodesic, max_bucket)
-
-
-#: hottest-cell share of total pair-formation work above which auto
-#: picks the AQE-skew-splittable join strategy. Pair work per cell is
-#: ~c^2 (the triu bbox mask); grouped runs each cell as ONE task, so a
-#: cell owning >~20% of the work turns into a straggler that a 16-32
-#: way cluster stage waits on, while the join shape lets AQE split it.
-AUTO_HOT_SHARE = 0.2
-
-
-def auto_strategy(
-    with_bbox: DataFrame,
-    res: int,
-    max_bucket: int | None = None,
-    hot_share: float = AUTO_HOT_SHARE,
-) -> str:
-    """Pick 'join' vs 'grouped' from the candidate-cell histogram.
-
-    One cheap aggregation job over the prepared-bbox frame: explode to
-    covered cells, count per cell (partial-agg shrinks the shuffle to
-    the distinct-cell set), then reduce to (sum c_eff^2, max c_eff^2)
-    where ``c_eff = min(c, max_bucket)`` — the per-cell pair-formation
-    work the flood cap actually allows. Returns 'join' when the
-    hottest cell owns more than ``hot_share`` of the total work
-    (grouped would serialize it in one task; the join shape AQE can
-    skew-split), else 'grouped' (half the shuffle bytes, one exchange).
-    Doubles as the measured-pick probe for
-    scripts/dissolve_strategy_ab.py."""
-    gx0, gy0 = grid_xy_cols(F.col("_xmin"), F.col("_ymin"), res)
-    gx1, gy1 = grid_xy_cols(F.col("_xmax"), F.col("_ymax"), res)
-    c = F.count(F.lit(1)).cast("double")
-    if max_bucket is not None:
-        c = F.least(c, F.lit(float(max_bucket)))
-    row = (
-        with_bbox
-        .withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .groupBy("_gx", "_gy")
-        .agg((c * c).alias("_w"))
-        .agg(F.sum("_w").alias("_tot"), F.max("_w").alias("_hot"))
-        .first()
-    )
-    if row is None or not row["_tot"]:
-        return "grouped"
-    return "join" if row["_hot"] / row["_tot"] > hot_share else "grouped"
-
-
-def _pairs_grouped(
-    with_bbox: DataFrame,
-    res: int,
-    geodesic: bool,
-    max_bucket: int | None,
-) -> DataFrame:
-    """Single-exchange pair formation: explode to cells, ONE hash
-    repartition on the cell, then per-cell pair enumeration inside the
-    batched group walk (triu index broadcast over the cell's bboxes —
-    bounded by ``max_bucket``, the same flood guard as the join path)."""
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    from ..geo import cells as cellmod
-    from .grouped import ordered_group_map
-
-    gx0, gy0 = grid_xy_cols(F.col("_xmin"), F.col("_ymin"), res)
-    gx1, gy1 = grid_xy_cols(F.col("_xmax"), F.col("_ymax"), res)
-    cand = (
-        with_bbox
-        .withColumn("_gx", F.explode(F.sequence(gx0, gx1)))
-        .withColumn("_gy", F.explode(F.sequence(gy0, gy1)))
-        .select("_id", "_wkt", "_xmin", "_ymin", "_xmax", "_ymax",
-                "_gx", "_gy")
-    )
-    out_schema = StructType([
-        StructField("id_a", cand.schema["_id"].dataType, True),
-        StructField("id_b", cand.schema["_id"].dataType, True),
-    ])
-
-    def pair_group(key, pdf):
-        if max_bucket is not None:
-            pdf = pdf.iloc[:max_bucket]  # rows arrive sorted by _id
-        n = len(pdf)
-        empty = pd.DataFrame({"id_a": [], "id_b": []})
-        if n < 2:
-            return empty
-        x0 = pdf["_xmin"].to_numpy()
-        y0 = pdf["_ymin"].to_numpy()
-        x1 = pdf["_xmax"].to_numpy()
-        y1 = pdf["_ymax"].to_numpy()
-        i, j = np.triu_indices(n, k=1)
-        mask = (
-            (x0[i] <= x1[j]) & (x0[j] <= x1[i])
-            & (y0[i] <= y1[j]) & (y0[j] <= y1[i])
-        )
-        i, j = i[mask], j[mask]
-        if len(i):
-            # canonical-cell dedupe, vectorized over surviving pairs
-            cgx, cgy = cellmod.cell_xy(
-                np.maximum(x0[i], x0[j]), np.maximum(y0[i], y0[j]), res
-            )
-            keep = (cgx == int(key[0])) & (cgy == int(key[1]))
-            i, j = i[keep], j[keep]
-        if not len(i):
-            return empty
-        ids = pdf["_id"].to_numpy()
-        # duplicate-id rows: the join strategy's strict id_a < id_b
-        # filter drops self-pairs — mirror it
-        keep = ids[i] != ids[j]
-        i, j = i[keep], j[keep]
-        if not len(i):
-            return empty
-        # each member in a pair parsed once
-        members, inv = np.unique(np.concatenate([i, j]),
-                                 return_inverse=True)
-        hit = _verify(pdf["_wkt"].to_numpy()[members], inv[:len(i)],
-                      inv[len(i):], geodesic)
-        if not hit.any():
-            return empty
-        return pd.DataFrame({"id_a": ids[i[hit]], "id_b": ids[j[hit]]})
-
-    return ordered_group_map(
-        cand, ["_gx", "_gy"], pair_group, out_schema,
-        sort_cols=["_id"],
+    return _pairs_from_bboxes(
+        attach_probe_bboxes(src, geodesic), res, geodesic, max_bucket
     )
 
 
@@ -281,31 +138,33 @@ def _pairs_from_bboxes(
 
     def verify_kernel(batches):
         for pdf in batches:
-            # each distinct WKT of the batch parsed once
-            code: dict = {}
-            ia = [code.setdefault(w, len(code)) for w in pdf["_wkt_a"]]
-            ib = [code.setdefault(w, len(code)) for w in pdf["_wkt_b"]]
-            hit = _verify(list(code), np.array(ia, dtype=np.int64),
-                          np.array(ib, dtype=np.int64), geodesic)
+            hit = verify_pairs(pdf["_wkt_a"], pdf["_wkt_b"], geodesic)
             yield pdf.loc[hit, ["id_a", "id_b"]]
 
     return joined.mapInPandas(verify_kernel, out_schema)
 
 
-def _verify(wkts, ia: np.ndarray, ib: np.ndarray,
-            geodesic: bool) -> np.ndarray:
-    """Exact "intersects" of candidate pairs ``(wkts[ia[k]],
-    wkts[ib[k]])`` -> bool per pair. Dissolve is a polygon operator: a
-    non-areal or unparseable row never merges (it stays a singleton).
-    Planar pairs run in one ``kernels.polygons_intersect_pairs`` call,
-    each WKT parsed once; geodesic pairs take the great-circle kernel
-    one pair at a time."""
+def verify_pairs(wkts_a, wkts_b, geodesic: bool) -> np.ndarray:
+    """Exact "intersects" of candidate pairs ``(wkts_a[k], wkts_b[k])``
+    -> bool per pair; callers put the smaller id on the ``a`` side, so
+    a pair's answer does not depend on which row came first. The one
+    polygon self-overlap verify: dissolve's pair join calls it per
+    Arrow batch, the streaming matcher once per cell call. A non-areal
+    or unparseable row never pairs (a dissolve singleton). Each
+    distinct WKT is parsed once; planar pairs run in one
+    ``kernels.polygons_intersect_pairs`` call, geodesic pairs take the
+    great-circle kernel one pair at a time."""
     from ..geo import kernels
     from ..geo import wkt as wktmod
     from .spatial_join import _probe_parts
 
+    code: dict = {}
+    ia = np.array([code.setdefault(w, len(code)) for w in wkts_a],
+                  dtype=np.int64)
+    ib = np.array([code.setdefault(w, len(code)) for w in wkts_b],
+                  dtype=np.int64)
     rings = []
-    for w in wkts:
+    for w in code:
         try:
             kind, got = _probe_parts(wktmod.loads(w))
         except Exception:
@@ -347,22 +206,12 @@ def _members_from_bboxes(
     geodesic: bool,
     max_bucket: int | None,
     max_iters: int,
-    strategy: str = "join",
 ) -> DataFrame:
     from .dedup import duplicate_clusters
 
-    if strategy not in ("join", "grouped", "auto"):
-        raise ValueError("strategy must be 'join', 'grouped' or 'auto'")
-    if strategy == "auto":
-        # with_bbox arrives checkpointed from _prepared_bboxes, so the
-        # histogram probe is one skinny agg over materialized rows
-        strategy = auto_strategy(with_bbox, res, max_bucket)
     # materialize pairs: duplicate_clusters walks its input once per
     # CC round — an unmaterialized self-join would re-run every round
-    pair_fn = (
-        _pairs_grouped if strategy == "grouped" else _pairs_from_bboxes
-    )
-    pairs = pair_fn(
+    pairs = _pairs_from_bboxes(
         with_bbox, res, geodesic, max_bucket
     ).localCheckpoint(eager=True)
     clustered = duplicate_clusters(pairs, max_iters=max_iters).select(
@@ -384,18 +233,15 @@ def dissolve(
     edges: str = "planar",
     max_bucket: int | None = None,
     max_iters: int = 20,
-    strategy: str = "join",
 ) -> DataFrame:
     """Overlap-connected component labels -> ``(id, group_id)`` with
     ``group_id`` = the minimum member id; polygons that touch nothing
     form singleton groups of themselves. Malformed geometries drop
-    (the P8 null-guard semantics — they join no group). ``strategy``
-    as in :func:`polygon_self_overlap_pairs`."""
+    (the P8 null-guard semantics — they join no group)."""
     geodesic = edges == "geodesic"
     with_bbox = _prepared_bboxes(df, id_col, wkt_col, geodesic)
     return _members_from_bboxes(
         with_bbox, id_col, res, geodesic, max_bucket, max_iters,
-        strategy,
     )
 
 
@@ -407,20 +253,17 @@ def dissolve_groups(
     edges: str = "planar",
     max_bucket: int | None = None,
     max_iters: int = 20,
-    strategy: str = "join",
 ) -> DataFrame:
     """Dissolved-group rollup -> ``(group_id, n_members, xmin, ymin,
     xmax, ymax)`` — the merged VERTEX bbox of every member (planar
     extent; geodesic edge bulges pad only the internal cover, never
     the reported extent). The WKT parse runs ONCE: the same
     materialized frame feeds the pair join, the singleton set, and
-    this rollup. ``strategy`` as in
-    :func:`polygon_self_overlap_pairs`."""
+    this rollup."""
     geodesic = edges == "geodesic"
     with_bbox = _prepared_bboxes(df, id_col, wkt_col, geodesic)
     members = _members_from_bboxes(
         with_bbox, id_col, res, geodesic, max_bucket, max_iters,
-        strategy,
     )
     boxes = with_bbox.select(
         F.col("_id").alias(id_col),
@@ -447,7 +290,6 @@ def dissolve_geometry(
     edges: str = "planar",
     max_bucket: int | None = None,
     max_iters: int = 20,
-    strategy: str = "join",
     max_group: int = 50_000,
     max_sagitta_rad: float = 2e-5,
 ) -> DataFrame:
@@ -496,7 +338,6 @@ def dissolve_geometry(
     with_bbox = _prepared_bboxes(df, id_col, wkt_col, geodesic)
     members = _members_from_bboxes(
         with_bbox, id_col, res, geodesic, max_bucket, max_iters,
-        strategy,
     )
     rows = members.join(
         with_bbox.select(F.col("_id").alias(id_col), "_wkt"), id_col

@@ -121,12 +121,6 @@ def ui_completed_stages(spark) -> tuple:
     return ui, app, stages
 
 
-def ui_shuffle_write_bytes(spark) -> int:
-    """Cumulative shuffle-write bytes across completed stages."""
-    _ui, _app, stages = ui_completed_stages(spark)
-    return sum(int(s.get("shuffleWriteBytes", 0)) for s in stages)
-
-
 def ui_stage_snapshot(spark):
     """Snapshot of completed stages keyed by (stageId, attemptId), or
     None if the UI is unreachable — pair with :func:`ui_stage_delta`

@@ -9,10 +9,13 @@ Pipeline: one Arrow pass extracts each polygon's (padded) bbox
 null-guard semantics); the bbox's grid-cell range explodes (pure
 column ``sequence``); per-cell stateful buckets
 (``applyInPandasWithState``) hold the watermark-horizon members and
-each arriving polygon is tested against them — vectorless bbox
-prefilter first, then the exact intersect kernel
-(``kernels.polygons_intersect``; great-circle variants under
-``edges='geodesic'``). State per bucket is bounded: event-time
+each arriving polygon is tested against them. A bbox prefilter
+collects a call's candidate pairs; ONE call of the dissolve operator's
+own verify (``operators.dissolve.verify_pairs``: smaller id first,
+each distinct WKT parsed once, great-circle edges under
+``edges='geodesic'``) answers them all, so a pair's answer is the
+batch operator's whichever side arrived first, and unreadable or
+non-areal geometry never pairs. State per bucket is bounded: event-time
 eviction by the watermark plus a FIFO ``max_members`` space cap, and
 an event-time timeout removes idle buckets entirely.
 
@@ -97,26 +100,7 @@ def make_cell_matcher(
             "recall gap), got %r" % (emit_mode,)
         )
     from ..geo import cells as cellmod
-    from ..geo import kernels
-    from ..geo import wkt as wktmod
-    from ..operators.spatial_join import _probe_parts
-
-    def intersects(parts_cache, wkts, k, other_parts):
-        got = parts_cache.get(k)
-        if got is None:
-            try:
-                got = _probe_parts(wktmod.loads(wkts[k]))
-            except Exception:
-                got = ("bad", None)
-            parts_cache[k] = got
-        kk, rr = got
-        ko, ro = other_parts
-        if kk != "area" or ko != "area":
-            return False
-        if geodesic:
-            from ..geo.geodesic import polygons_intersect_geodesic
-            return bool(polygons_intersect_geodesic(ro, rr))
-        return bool(kernels.polygons_intersect(ro, rr))
+    from ..operators.dissolve import verify_pairs
 
     def match_cell(
         key: Tuple[int, int],
@@ -155,8 +139,9 @@ def make_cell_matcher(
                 by1 = [by1[k] for k in keep]
                 wkts = [wkts[k] for k in keep]
 
-        parts_cache: dict = {}
-        out_a, out_b, out_ts = [], [], []
+        # bbox-passing candidates, answered in ONE verify_pairs call
+        # after the walk (smaller id's WKT on the a side)
+        out_a, out_b, out_ts, wkt_a, wkt_b = [], [], [], [], []
         rows = pd.concat(list(pdfs)).sort_values(["_ts_us", "id"])
         for rid, rts_us, rx0, ry0, rx1, ry1, rwkt in zip(
             rows["id"], rows["_ts_us"], rows["_xmin"], rows["_ymin"],
@@ -164,10 +149,6 @@ def make_cell_matcher(
         ):
             rid = int(rid)
             t_us = int(rts_us)
-            # parse lazily: most arrivals in a sparse stream touch no
-            # candidate, and an unparsed row must not pay per covered
-            # cell (the _pairs_grouped memo pattern)
-            r_parts = None
             for k in range(len(ids)):
                 oid = ids[k]
                 if oid == rid:
@@ -183,15 +164,12 @@ def make_cell_matcher(
                     )
                     if int(cgx[0]) != gx or int(cgy[0]) != gy:
                         continue  # another cell owns this pair
-                if r_parts is None:
-                    try:
-                        r_parts = _probe_parts(wktmod.loads(rwkt))
-                    except Exception:
-                        r_parts = ("bad", None)
-                if intersects(parts_cache, wkts, k, r_parts):
-                    out_a.append(min(rid, oid))
-                    out_b.append(max(rid, oid))
-                    out_ts.append(max(t_us, ts_us[k]))
+                lo, hi = (rwkt, wkts[k]) if rid < oid else (wkts[k], rwkt)
+                out_a.append(min(rid, oid))
+                out_b.append(max(rid, oid))
+                out_ts.append(max(t_us, ts_us[k]))
+                wkt_a.append(lo)
+                wkt_b.append(hi)
             ids.append(rid)
             ts_us.append(t_us)
             bx0.append(float(rx0))
@@ -199,8 +177,6 @@ def make_cell_matcher(
             bx1.append(float(rx1))
             by1.append(float(ry1))
             wkts.append(rwkt)
-            if r_parts is not None:
-                parts_cache[len(ids) - 1] = r_parts
             if max_members is not None \
                     and len(ids) > max_members:  # FIFO space cap
                 drop = len(ids) - max_members
@@ -209,10 +185,6 @@ def make_cell_matcher(
                 bx0, by0 = bx0[drop:], by0[drop:]
                 bx1, by1 = bx1[drop:], by1[drop:]
                 wkts = wkts[drop:]
-                parts_cache = {
-                    k - drop: v for k, v in parts_cache.items()
-                    if k >= drop
-                }
 
         state.update((ids, ts_us, bx0, by0, bx1, by1, wkts))
         if use_timeout:
@@ -220,11 +192,13 @@ def make_cell_matcher(
                 max(ts_us) // 1000 + horizon_seconds * 1000
             )
         if out_a:
-            yield pd.DataFrame({
-                "id_a": pd.Series(out_a, dtype="int64"),
-                "id_b": pd.Series(out_b, dtype="int64"),
-                "pair_ts_us": pd.Series(out_ts, dtype="int64"),
-            })
+            hit = verify_pairs(wkt_a, wkt_b, geodesic)
+            if hit.any():
+                yield pd.DataFrame({
+                    "id_a": pd.Series(out_a, dtype="int64"),
+                    "id_b": pd.Series(out_b, dtype="int64"),
+                    "pair_ts_us": pd.Series(out_ts, dtype="int64"),
+                })[hit]
 
     return match_cell
 

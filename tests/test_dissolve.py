@@ -2,7 +2,6 @@
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from pure_python_geospatial_export_spark.operators.dissolve import (
     dissolve,
@@ -71,12 +70,6 @@ def test_hole_interior_does_not_merge(spark):
         for r in polygon_self_overlap_pairs(df, res=4).collect()
     }
     assert pairs == {(1, 3)}
-    assert {
-        (r["id_a"], r["id_b"])
-        for r in polygon_self_overlap_pairs(
-            df, res=4, strategy="grouped"
-        ).collect()
-    } == {(1, 3)}
     labels = {
         r["id"]: r["group_id"] for r in dissolve(df, res=4).collect()
     }
@@ -113,13 +106,6 @@ def test_random_rects_match_bruteforce(spark, res):
         (r["id_a"], r["id_b"])
         for r in polygon_self_overlap_pairs(df, res=res).collect()
     }
-    grouped = {
-        (r["id_a"], r["id_b"])
-        for r in polygon_self_overlap_pairs(
-            df, res=res, strategy="grouped"
-        ).collect()
-    }
-    assert grouped == got
     want = set()
     for i, (ax0, ay0, ax1, ay1) in rects:
         for j, (bx0, by0, bx1, by1) in rects:
@@ -135,9 +121,9 @@ def test_random_rects_match_bruteforce(spark, res):
     )
 
 
-def test_duplicate_ids_no_self_pairs_both_strategies(spark):
-    # two rows share id 1 and overlap each other and row 2: neither
-    # strategy may emit a (1, 1) self-pair
+def test_duplicate_ids_no_self_pairs(spark):
+    # two rows share id 1 and overlap each other and row 2: no (1, 1)
+    # self-pair may come out
     df = spark.createDataFrame(
         [
             (1, _rect_wkt(0.0, 0.0, 2.0, 2.0)),
@@ -146,15 +132,12 @@ def test_duplicate_ids_no_self_pairs_both_strategies(spark):
         ],
         "id long, wkt string",
     )
-    for strategy in ("join", "grouped"):
-        got = [
-            (r["id_a"], r["id_b"])
-            for r in polygon_self_overlap_pairs(
-                df, res=5, strategy=strategy
-            ).collect()
-        ]
-        assert all(a < b for a, b in got), (strategy, got)
-        assert set(got) == {(1, 2)}, (strategy, got)
+    got = [
+        (r["id_a"], r["id_b"])
+        for r in polygon_self_overlap_pairs(df, res=5).collect()
+    ]
+    assert all(a < b for a, b in got), got
+    assert set(got) == {(1, 2)}, got
 
 
 def test_max_bucket_above_family_size_identical(spark):
@@ -259,7 +242,7 @@ def test_dissolve_geometry_rect_areas_and_validity(spark):
         assert ok, (g, reason)
 
 
-def test_dissolve_geometry_strategy_and_partition_invariance(spark):
+def test_dissolve_geometry_partition_invariance(spark):
     from pure_python_geospatial_export_spark.operators.dissolve import (
         dissolve_geometry,
     )
@@ -275,8 +258,7 @@ def test_dissolve_geometry_strategy_and_partition_invariance(spark):
         map(tuple, dissolve_geometry(df1, res=6).collect())
     )
     b = sorted(
-        map(tuple,
-            dissolve_geometry(df2, res=6, strategy="grouped").collect())
+        map(tuple, dissolve_geometry(df2, res=6).collect())
     )
     assert a == b
     areas = {r[0]: r[4] for r in a}
@@ -314,92 +296,6 @@ def test_dissolve_geometry_non_areal_groups_omitted(spark):
     assert [(r["group_id"], r["area"]) for r in out] == [(2, 1.0)]
 
 
-def test_auto_strategy_pick_and_equivalence(spark):
-    from pure_python_geospatial_export_spark.operators.dissolve import (
-        auto_strategy,
-    )
-    from pure_python_geospatial_export_spark.operators.spatial_join import (
-        attach_probe_bboxes,
-    )
-
-    def prepared(df):
-        return attach_probe_bboxes(
-            df.select(F.col("id").alias("_id"),
-                      F.col("wkt").alias("_wkt")),
-            False,
-        )
-
-    # uniform: 64 tiny rects spread one per res-5 cell -> every cell's
-    # c^2 share is ~1/64 << threshold -> grouped
-    uniform = _rects_df(spark, [
-        (i, (-170.0 + (i % 16) * 11.25 + 2.0,
-             -80.0 + (i // 16) * 11.25 + 2.0,
-             -170.0 + (i % 16) * 11.25 + 2.5,
-             -80.0 + (i // 16) * 11.25 + 2.5))
-        for i in range(64)
-    ])
-    assert auto_strategy(prepared(uniform), res=5) == "grouped"
-
-    # skewed: 60 of 100 rects stacked inside ONE cell, 40 singles in
-    # distinct cells -> the hot cell owns 3600/3640 of the pair work
-    # -> join
-    skewed = _rects_df(spark, [
-        (i, (1.0 + (i % 8) * 0.01, 1.0 + (i // 8) * 0.01,
-             1.02 + (i % 8) * 0.01, 1.02 + (i // 8) * 0.01))
-        if i < 60 else
-        (i, (-175.0 + ((i - 60) % 10) * 11.25,
-             -80.0 + ((i - 60) // 10) * 11.25,
-             -174.9 + ((i - 60) % 10) * 11.25,
-             -79.9 + ((i - 60) // 10) * 11.25))
-        for i in range(100)
-    ])
-    assert auto_strategy(prepared(skewed), res=5) == "join"
-
-    # max_bucket caps the effective per-cell work: with the hot cell
-    # clamped to 2 rows its share is 4/44 < threshold -> grouped
-    assert auto_strategy(prepared(skewed), res=5, max_bucket=2) \
-        == "grouped"
-
-    # strategy='auto' end-to-end: identical pair sets + group labels
-    for df in (uniform, skewed):
-        want = {
-            (r["id_a"], r["id_b"])
-            for r in polygon_self_overlap_pairs(
-                df, res=5, strategy="join").collect()
-        }
-        got = {
-            (r["id_a"], r["id_b"])
-            for r in polygon_self_overlap_pairs(
-                df, res=5, strategy="auto").collect()
-        }
-        assert got == want
-        labels_auto = {
-            r["id"]: r["group_id"]
-            for r in dissolve(df, res=5, strategy="auto").collect()
-        }
-        labels_join = {
-            r["id"]: r["group_id"]
-            for r in dissolve(df, res=5, strategy="join").collect()
-        }
-        assert labels_auto == labels_join
-
-    with pytest.raises(ValueError, match="strategy"):
-        dissolve(uniform, res=5, strategy="bogus")
-
-
-def test_auto_strategy_empty_frame(spark):
-    from pure_python_geospatial_export_spark.operators.dissolve import (
-        auto_strategy,
-    )
-    from pure_python_geospatial_export_spark.operators.spatial_join import (
-        attach_probe_bboxes,
-    )
-
+def test_dissolve_empty_frame(spark):
     empty = spark.createDataFrame([], "id long, wkt string")
-    prepared = attach_probe_bboxes(
-        empty.select(F.col("id").alias("_id"),
-                     F.col("wkt").alias("_wkt")),
-        False,
-    )
-    assert auto_strategy(prepared, res=5) == "grouped"
-    assert dissolve(empty, strategy="auto").count() == 0
+    assert dissolve(empty).count() == 0

@@ -324,3 +324,79 @@ def test_dissolve_stream_matches_batch_with_redelivery(spark, tmp_path):
         dissolve_groups_current(spark, state, members_dir)
     )
     assert again == want
+
+
+def _ring_twice_round(lat):
+    """A ring that winds twice round the globe along ``lat``: the
+    planar verify cannot split it into antimeridian lobes."""
+    lons = [0, 90, 170, -100, -10, 80, 170, -100, -10, 0]
+    return "POLYGON ((%s))" % ", ".join("%g %g" % (x, lat) for x in lons)
+
+
+@pytest.mark.parametrize("order", ["forward", "reverse"])
+def test_stream_batch_parity_unreadable_and_empty_rows(
+        spark, tmp_path, order):
+    """Each pair's verdict is the batch operator's, whichever side
+    arrives first: a square holding a vertex of a ring that winds
+    twice round the globe (the one-pair kernel answers (ring, square)
+    but fails on (square, ring)), once with the square on the smaller
+    id and once with the ring; plus rows that never pair — a
+    LINESTRING across a square, POLYGON EMPTY and a NULL geometry."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    geoms = [
+        (1, _rect_wkt(89.0, 9.0, 91.0, 11.0)),
+        (2, _ring_twice_round(10.0)),
+        (3, _ring_twice_round(-40.0)),
+        (4, _rect_wkt(89.0, -41.0, 91.0, -39.0)),
+        (5, "LINESTRING (88 10.5, 92 10.5)"),
+        (6, "POLYGON EMPTY"),
+        (7, None),
+        (8, _rect_wkt(90.5, 9.5, 92.0, 11.0)),
+    ]
+    if order == "reverse":
+        geoms = geoms[::-1]
+    rows = [(pid, w, BASE + datetime.timedelta(minutes=i))
+            for i, (pid, w) in enumerate(geoms)]
+    # one file per row with increasing mtimes: micro-batch arrival
+    # order is the row order
+    src = str(tmp_path / "p_src")
+    os.makedirs(src)
+    pa_schema = pa.schema([
+        ("poly_id", pa.int64()), ("wkt", pa.string()),
+        ("ts", pa.timestamp("us", tz="UTC")),
+    ])
+    for i, (pid, wkt, ts) in enumerate(rows):
+        p = os.path.join(src, "b%03d.parquet" % i)
+        pq.write_table(pa.table(
+            {"poly_id": [pid], "wkt": [wkt], "ts": [ts]},
+            schema=pa_schema,
+        ), p)
+        os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
+    batch_df = spark.read.parquet(src)
+
+    want = {
+        (r["id_a"], r["id_b"])
+        for r in polygon_self_overlap_pairs(
+            batch_df, id_col="poly_id", res=3
+        ).collect()
+    }
+    assert (3, 4) in want and (1, 8) in want
+    assert not {5, 6, 7} & {i for p in want for i in p}
+    batch = {
+        (r["id_a"], r["id_b"])
+        for r in spatial_overlap_stream(batch_df, res=3).collect()
+    }
+    name = "sp_parity_" + order
+    _drain(spatial_overlap_stream(_stream(spark, src), res=3,
+                                  watermark="365 days"),
+           name, str(tmp_path / "pckpt"))
+    streamed = {
+        (r["id_a"], r["id_b"])
+        for r in spark.sql("SELECT * FROM " + name).collect()
+    }
+    assert batch == want
+    assert streamed == want
