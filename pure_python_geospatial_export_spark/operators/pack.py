@@ -8,7 +8,7 @@ on every prior document), so the scalable shape is SHARD-LOCAL packing:
 rows are grouped by a caller-chosen shard column (source, hash bucket,
 date...), each shard packs greedily in deterministic ``id_col`` order,
 and shards pack in parallel. One shuffle on the shard key; the greedy
-loop runs in an ``applyInPandas`` kernel because no window function can
+loop runs in an ``applyInArrow`` kernel because no window function can
 express "running sum that resets when it would exceed the capacity"
 (the reset value depends on the running result — not prefix-sum
 expressible; the DuckDB oracle needs a recursive CTE for the same
@@ -21,14 +21,14 @@ Semantics (mirrored exactly by the oracle):
 * an overlong row (``n_tokens > max_tokens``) still opens its own bin
   (callers split/truncate downstream — flagged via ``overflow``).
 
-At 100 TB: shard granularity bounds the pandas frame (pick shards of
+At 100 TB: shard granularity bounds the Arrow table (pick shards of
 ~10^5-10^6 rows); the shuffle carries only (shard, id, n_tokens), never
 text; cross-shard parallelism is total.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, LongType, StructField, StructType
@@ -72,11 +72,14 @@ def pack_sequences(
     )
     cap = int(max_tokens)
 
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort")
+    def pack(table: pa.Table) -> pa.Table:
+        # Arrow, not pandas: a bigint id beside a NULL stays exact. The
+        # sort is stable and puts NULL ids last.
+        table = table.sort_by(id_col)
+        n_tokens = table.column("n_tokens").to_pylist()
         bins, offs = [], []
         fill, b = None, -1
-        for t in pdf["n_tokens"]:
+        for t in n_tokens:
             t = int(t)
             if fill is None or fill + t > cap:
                 b += 1
@@ -87,13 +90,14 @@ def pack_sequences(
                 fill += t
             bins.append(b)
             offs.append(off)
-        return pdf.assign(
-            pack_id=pd.Series(bins, index=pdf.index, dtype="int64"),
-            pack_offset=pd.Series(offs, index=pdf.index, dtype="int64"),
-            overflow=pdf["n_tokens"].astype("int64") > cap,
+        return (
+            table.append_column("pack_id", pa.array(bins, pa.int64()))
+            .append_column("pack_offset", pa.array(offs, pa.int64()))
+            .append_column("overflow",
+                           pa.array([t > cap for t in n_tokens], pa.bool_()))
         )
 
-    return src.groupBy(group_col).applyInPandas(pack, out_schema)
+    return src.groupBy(group_col).applyInArrow(pack, out_schema)
 
 
 def packing_efficiency(packed: DataFrame, max_tokens: int,

@@ -1020,7 +1020,7 @@ def semantic_duplicates(
     reproducible/oracled runs; otherwise k-means++ + Lloyd trains
     ``n_clusters`` on the data (:func:`_fit_centroids`).
     ``assign='arrow'`` (default) assigns clusters in one numpy
-    mapInPandas pass (BLAS dot, the scale path); ``'expr'`` uses pure
+    mapInArrow pass (BLAS dot, the scale path); ``'expr'`` uses pure
     column arithmetic whose summation order mirrors DuckDB's
     ``list_dot_product`` — the SQL-oracle-exact path. Both pick the
     FIRST maximal-cosine centroid; they can differ only when two
@@ -1063,32 +1063,28 @@ def semantic_duplicates(
             ).cast("int"),
         )
     elif assign == "arrow":
-        import pandas as pd
+        import pyarrow as pa
 
         cents_np = np.asarray(cent_list, dtype=np.float64)
         cn = cents_np / np.linalg.norm(cents_np, axis=1, keepdims=True)
 
         def kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
+            # Arrow, not pandas: _id passes through exact beside a NULL
+            for batch in batches:
+                if not batch.num_rows:
                     continue
                 V = np.stack([
                     np.asarray(v, dtype=np.float64)
-                    for v in pdf["_vec"]
+                    for v in batch.column("_vec").to_pylist()
                 ])
                 norms = np.linalg.norm(V, axis=1, keepdims=True)
                 with np.errstate(invalid="ignore", divide="ignore"):
                     sims = (V / norms) @ cn.T
                 labels = sims.argmax(axis=1).astype(np.int32)
                 # zero-norm vectors: NULL cluster, like the expr path
-                yield pd.DataFrame({
-                    "_id": pdf["_id"],
-                    "_vec": pdf["_vec"],
-                    "cluster": pd.array(
-                        np.where(norms[:, 0] == 0.0, None, labels),
-                        dtype="Int32",
-                    ),
-                })
+                yield batch.append_column("cluster", pa.array(
+                    labels, pa.int32(), mask=norms[:, 0] == 0.0
+                ))
 
         from pyspark.sql.types import (
             IntegerType,
@@ -1096,7 +1092,7 @@ def semantic_duplicates(
             StructType,
         )
 
-        assigned = base.mapInPandas(
+        assigned = base.mapInArrow(
             kernel,
             StructType(
                 list(base.schema.fields)

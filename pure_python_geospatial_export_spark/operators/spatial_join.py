@@ -326,29 +326,31 @@ def spatial_join_big_layer(
     )
 
     def refine_kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pdf.drop(columns=["wkt"]).iloc[0:0]
-                continue
-            keep = pd.Series(False, index=pdf.index)
-            for wkt_str, grp in pdf.groupby("wkt", sort=False):
+        # Arrow, not pandas: the point columns pass through exact
+        import pyarrow.compute as pc
+
+        for batch in batches:
+            wkts = batch.column("wkt").dictionary_encode()
+            codes = pc.fill_null(wkts.indices, -1).to_numpy()
+            # rows grouped by polygon WKT; a NULL WKT (-1) keeps no row
+            order = np.argsort(codes, kind="stable")
+            starts = np.searchsorted(codes[order],
+                                     np.arange(len(wkts.dictionary) + 1))
+            lon = batch.column("lon").to_numpy(zero_copy_only=False)
+            lat = batch.column("lat").to_numpy(zero_copy_only=False)
+            keep = np.zeros(batch.num_rows, dtype=bool)
+            for k, wkt_str in enumerate(wkts.dictionary.to_pylist()):
+                rows = order[starts[k]:starts[k + 1]]
                 geom = wktmod.loads(wkt_str)
                 rings = (
                     geom["coordinates"] if geom["type"] == "Polygon"
                     else [r for p in geom["coordinates"] for r in p]
                 )
-                inside = _pip(
-                    grp["lon"].to_numpy(), grp["lat"].to_numpy(), rings
-                )
-                keep.loc[grp.index] = inside
-            yield pdf[keep].drop(columns=["wkt"])
-
-    import pyspark.sql.types as T
+                keep[rows] = _pip(lon[rows], lat[rows], rings)
+            yield batch.drop_columns(["wkt"]).filter(pa.array(keep))
 
     out_fields = [f for f in boundary.schema.fields if f.name != "wkt"]
-    refined = boundary.mapInPandas(
-        refine_kernel, T.StructType(out_fields)
-    )
+    refined = boundary.mapInArrow(refine_kernel, StructType(out_fields))
     refined = refined.join(
         polygons.select("polygon_id", "name"), "polygon_id"
     )
@@ -427,9 +429,10 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     every other row (Z/M ordinates, SRID, EMPTY, malformed, null) falls
     back to the per-row ``loads`` path, with bit-identical bounds. Under
     ``geodesic`` every row takes the per-row path (the pad needs each
-    ring's edge angles). The pass stays a ``mapInPandas`` so the plan
-    keeps one named node for it."""
-    from pyspark.sql.types import DoubleType, StructField, StructType
+    ring's edge angles). Arrow, not pandas: the input columns pass
+    through as they came, so a bigint id beside a NULL stays exact; NaN
+    bounds go out as NULL, which the ``_xmin`` filter drops."""
+    from pyspark.sql.types import DoubleType
 
     cols = ["_xmin", "_ymin", "_xmax", "_ymax"]
     if include_raw:
@@ -444,19 +447,24 @@ def attach_probe_bboxes(src: DataFrame, geodesic: bool,
     )
 
     def bbox_kernel(batches):
-        for pdf in batches:
+        for batch in batches:
+            wkts = batch.column("_wkt")
             if geodesic:
                 b = np.array(
                     [_geodesic_bounds(_loads_or_none(s))
-                     for s in pdf["_wkt"]],
+                     for s in wkts.to_pylist()],
                     dtype=np.float64,
                 ).reshape(-1, 8)
             else:
-                raw = wktmod.bounds_batch(pdf["_wkt"])
+                raw = wktmod.bounds_batch(wkts)
                 b = np.hstack([raw, raw])
-            yield pdf.assign(**{k: b[:, i] for i, k in enumerate(cols)})
+            for i, k in enumerate(cols):
+                batch = batch.append_column(k, pa.array(
+                    np.ascontiguousarray(b[:, i]), from_pandas=True
+                ))
+            yield batch
 
-    return src.mapInPandas(bbox_kernel, bbox_schema).where(
+    return src.mapInArrow(bbox_kernel, bbox_schema).where(
         F.col("_xmin").isNotNull()
     )
 

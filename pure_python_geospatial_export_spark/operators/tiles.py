@@ -1075,13 +1075,14 @@ def simplify_wkt(
 ) -> DataFrame:
     """Fact-scale Douglas-Peucker: simplify a WKT geometry COLUMN (the
     10^12-row side — building footprints, parcels — not the dimension
-    layer) with an Arrow ``mapInPandas`` kernel. Polygon/MultiPolygon
+    layer) with a ``mapInArrow`` kernel. Polygon/MultiPolygon
     rings simplify per ring (sub-tolerance rings drop; a polygon whose
     exterior collapses becomes NULL); Line/MultiLine simplify as
     polylines; points pass through. Malformed or non-simplifiable
     input nulls out (P8 convention). Stateless per row — no shuffle,
-    scales with the scan."""
-    import pandas as pd
+    scales with the scan. The input columns pass through in Arrow, so a
+    bigint id beside a NULL stays exact."""
+    import pyarrow as pa
     from pyspark.sql.types import StringType, StructField, StructType
 
     from ..geo import kernels
@@ -1141,16 +1142,15 @@ def simplify_wkt(
         return geom  # points etc. pass through
 
     def kernel(batches):
-        for pdf in batches:
+        for batch in batches:
             outs = []
-            for s in pdf[wkt_col]:
+            for s in batch.column(wkt_col).to_pylist():
                 try:
                     g = _simp_geom(wktmod.loads(s))
                     outs.append(None if g is None
                                 else wktmod.dumps(g, 12))
                 except Exception:
                     outs.append(None)
-            yield pdf.assign(**{out_col: pd.Series(outs, dtype=object,
-                                                   index=pdf.index)})
+            yield batch.append_column(out_col, pa.array(outs, pa.string()))
 
-    return df.mapInPandas(kernel, out_schema)
+    return df.mapInArrow(kernel, out_schema)

@@ -11,8 +11,8 @@ a join:
 * :func:`validate_rings` — pure kernel over a GeoJSON ring list;
 * :func:`validate_geometry` — a parsed geometry dict (non-areal types
   have no ring structure to check and report valid);
-* :func:`validate_geometries` — the DataFrame form (Arrow
-  ``mapInPandas``, WKT parsed once, malformed text reported — not
+* :func:`validate_geometries` — the DataFrame form (one
+  ``mapInArrow`` pass, WKT parsed once, malformed text reported — not
   dropped: unlike the P8 null-guard paths, a QA gate's job is to KEEP
   the bad rows visible).
 
@@ -103,8 +103,9 @@ def validate_geometries(
 ) -> DataFrame:
     """Attach ``(is_valid boolean, reason string|NULL)`` to every row —
     one Arrow pass, WKT parsed once; unparseable text reports
-    ``(false, 'unparseable')`` instead of dropping."""
-    import pandas as pd
+    ``(false, 'unparseable')`` instead of dropping. The input columns
+    pass through in Arrow, so a bigint id beside a NULL stays exact."""
+    import pyarrow as pa
     from pyspark.sql.types import (
         BooleanType,
         StringType,
@@ -123,9 +124,9 @@ def validate_geometries(
     src = df.withColumn("_wkt_v", F.col(wkt_col))
 
     def kernel(batches):
-        for pdf in batches:
+        for batch in batches:
             oks, reasons = [], []
-            for s in pdf["_wkt_v"]:
+            for s in batch.column("_wkt_v").to_pylist():
                 try:
                     geom = wktmod.loads(s)
                 except Exception:
@@ -138,11 +139,10 @@ def validate_geometries(
                     ok, reason = False, "unparseable"
                 oks.append(bool(ok))
                 reasons.append(reason)
-            yield pdf.drop(columns=["_wkt_v"]).assign(**{
-                out_valid: pd.Series(oks, index=pdf.index),
-                out_reason: pd.Series(
-                    reasons, index=pdf.index, dtype="object"
-                ),
-            })
+            yield (
+                batch.drop_columns(["_wkt_v"])
+                .append_column(out_valid, pa.array(oks, pa.bool_()))
+                .append_column(out_reason, pa.array(reasons, pa.string()))
+            )
 
-    return src.mapInPandas(kernel, out_schema)
+    return src.mapInArrow(kernel, out_schema)

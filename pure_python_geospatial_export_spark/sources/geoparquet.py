@@ -7,7 +7,7 @@ travels as a WKB ``binary`` column and the file carries the spec's
 encoding, geometry types, bbox, CRS).
 
 Spark's parquet writer cannot attach custom footer metadata, so the
-writer runs EXECUTOR-SIDE through pyarrow inside ``mapInPandas`` —
+writer runs EXECUTOR-SIDE through pyarrow inside ``mapInArrow`` —
 one file per partition, each with correct per-file metadata (the
 spec's bbox is per file, computed from that file's geometries), bytes
 never collecting on the driver. The reader is plain
@@ -98,11 +98,11 @@ def export_geoparquet(
     via write-temp + atomic replace, so task retries, AQE stage
     re-execution, and repeated actions on the returned frame OVERWRITE
     their own file instead of duplicating rows. Memory: geometry is
-    transcoded per Arrow batch (no pandas concatenation of the whole
-    partition), but the file writes once at partition end, so a
-    partition's Arrow tables are held in memory — size partitions
-    accordingly (``df.repartition(n)`` upstream)."""
-    import pandas as pd
+    transcoded per Arrow batch, but the file writes once at partition
+    end, so a partition's Arrow tables are held in memory — size
+    partitions accordingly (``df.repartition(n)`` upstream). The other
+    columns go to the file as Spark hands them over in Arrow, with
+    their Spark types: a nullable bigint stays an exact int64."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -117,17 +117,6 @@ def export_geoparquet(
         )
     os.makedirs(path, exist_ok=True)
     pass_cols = [c for c in df.columns if c != wkt_col]
-    # Spark types of the pass-through columns, captured on the driver.
-    # Arrow arrays are built with EXPLICIT types derived from these:
-    # per-batch inference would type an all-NULL string batch as
-    # 'null' (pa.concat_tables then raises on mixed batches) and would
-    # export a nullable long column — which pandas widens to float64 —
-    # as parquet DOUBLE (silent schema drift vs the source table).
-    pass_spark_types = {
-        f.name: f.dataType
-        for f in df.schema.fields
-        if f.name != wkt_col
-    }
 
     out_schema = StructType([
         StructField("file", StringType(), False),
@@ -135,15 +124,11 @@ def export_geoparquet(
         StructField("n_geoms", LongType(), False),
     ])
 
-    def _write(batches: Iterator[pd.DataFrame]):
+    def _write(batches: Iterator[pa.RecordBatch]):
         import uuid
 
         from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_type
 
-        pass_arrow_types = {
-            c: to_arrow_type(t) for c, t in pass_spark_types.items()
-        }
         tables = []
         types = set()
         bbox = [float("inf"), float("inf"),
@@ -151,11 +136,11 @@ def export_geoparquet(
         have_bounds = False
         n_rows = 0
         n_geoms = 0
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
             wkbs = []
-            for s in pdf[wkt_col]:
+            for s in batch.column(wkt_col).to_pylist():
                 # parse/encode and bounds as ONE unit: a failure
                 # anywhere means a NULL geometry and exactly one
                 # append (a split try block once double-appended and
@@ -175,13 +160,8 @@ def export_geoparquet(
                 bbox[2] = max(bbox[2], x1)
                 bbox[3] = max(bbox[3], y1)
                 have_bounds = True
-            n_rows += len(pdf)
-            arrays = [
-                pa.Array.from_pandas(
-                    pdf[c], type=pass_arrow_types[c]
-                )
-                for c in pass_cols
-            ]
+            n_rows += batch.num_rows
+            arrays = [batch.column(c) for c in pass_cols]
             # explicit binary type: an all-NULL batch must not infer
             # a null-typed column (unreadable against binary files)
             arrays.append(pa.array(wkbs, type=pa.binary()))
@@ -206,13 +186,11 @@ def export_geoparquet(
         )
         pq.write_table(table, tmp)
         os.replace(tmp, os.path.join(path, fname))
-        yield pd.DataFrame({
-            "file": [fname],
-            "n_rows": pd.Series([n_rows], dtype="int64"),
-            "n_geoms": pd.Series([n_geoms], dtype="int64"),
+        yield pa.RecordBatch.from_pydict({
+            "file": [fname], "n_rows": [n_rows], "n_geoms": [n_geoms],
         })
 
-    return df.mapInPandas(_write, out_schema)
+    return df.mapInArrow(_write, out_schema)
 
 
 def _geom_bounds(geom: dict):
@@ -268,8 +246,9 @@ def read_geoparquet(
 ) -> DataFrame:
     """Read a GeoParquet directory back with the geometry decoded to
     WKT (the engine's working representation): plain parquet scan +
-    an Arrow WKB->WKT kernel. NULL geometries stay NULL."""
-    import pandas as pd
+    an Arrow WKB->WKT kernel. NULL geometries stay NULL; the other
+    columns pass through in Arrow, exact."""
+    import pyarrow as pa
 
     from ..geo import wkb as wkbmod
     from ..geo import wkt as wktmod
@@ -280,10 +259,10 @@ def read_geoparquet(
         fields + [StructField(wkt_col, StringType(), True)]
     )
 
-    def _decode(batches: Iterator[pd.DataFrame]):
-        for pdf in batches:
+    def _decode(batches: Iterator[pa.RecordBatch]):
+        for batch in batches:
             outs = []
-            for b in pdf[geometry_col]:
+            for b in batch.column(geometry_col).to_pylist():
                 if b is None:
                     outs.append(None)
                     continue
@@ -293,9 +272,8 @@ def read_geoparquet(
                     )
                 except Exception:
                     outs.append(None)
-            yield pdf.drop(columns=[geometry_col]).assign(
-                **{wkt_col: pd.Series(outs, dtype=object,
-                                      index=pdf.index)}
+            yield batch.drop_columns([geometry_col]).append_column(
+                wkt_col, pa.array(outs, pa.string())
             )
 
-    return df.mapInPandas(_decode, out_schema)
+    return df.mapInArrow(_decode, out_schema)

@@ -645,8 +645,9 @@ def read_polygon(
     the polygon's cell cover at ``part_res`` prunes partitions (full
     cells skip the exact test entirely, boundary cells run the ray-cast
     kernel) — the read-path composition of the flagship join's
-    full/boundary split with the physical layout's pruning."""
-    import pandas as pd
+    full/boundary split with the physical layout's pruning. The
+    boundary refine is Arrow, so every column passes through exact."""
+    import pyarrow as pa
 
     from ..geo import kernels
     from ..geo.geodesic import points_in_polygon_geodesic
@@ -664,10 +665,12 @@ def read_polygon(
     plain = [list(map(list, r)) for r in rings]
 
     def refine(batches):
-        for pdf in batches:
-            keep = pip(pdf[lon].to_numpy(), pdf[lat].to_numpy(), plain)
-            yield pdf[pd.Series(keep, index=pdf.index)]
+        for batch in batches:
+            keep = pip(batch.column(lon).to_numpy(zero_copy_only=False),
+                       batch.column(lat).to_numpy(zero_copy_only=False),
+                       plain)
+            yield batch.filter(pa.array(keep))
 
     boundary = df.where(F.col("part_cell").isin(boundary_cells))
-    refined = boundary.mapInPandas(refine, df.schema)
+    refined = boundary.mapInArrow(refine, df.schema)
     return full_rows.unionByName(refined)
