@@ -204,7 +204,7 @@ def polygon_cover(rings: Sequence, res: int, edges: str = "planar"
     rings = kernels.expand_antimeridian_rings(rings)
 
     # Candidate cells: union of every ring's bbox cover. MultiPolygon layers
-    # are flattened to one ring list upstream (load_rings, cover_kernel), so
+    # are flattened to one ring list upstream (polygons.polygon_rings), so
     # seeding from rings[0] alone would silently drop parts whose exterior
     # lies outside the first ring's bbox. Hole rings sit inside their
     # exterior's bbox, so the union adds no spurious area for them; the

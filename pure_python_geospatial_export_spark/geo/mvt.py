@@ -663,9 +663,10 @@ def decode_geometry_arrays(cmds):
     vertex. Iterating a returned array yields ``(x, y)`` rows, so
     consumers written against the list API keep working.
 
-    Crossover (scripts/mvt_decode_ab.py): 1.6x faster at >= 2000
-    vertices/feature, ~1.3x at 200, but ~2x SLOWER on point runs
-    (per-feature numpy setup dominates 1-vertex features) — so this
+    Crossover (BENCH/BASELINE.md, "MVT geometry decode: scalar vs
+    array API"): 1.6x faster at >= 2000 vertices/feature, ~1.3x at
+    200, but ~2x SLOWER on point runs (per-feature numpy setup
+    dominates 1-vertex features) — so this
     stays opt-in; polygon/line consumers should pass
     ``decode_tile(..., arrays=True)``, point consumers should not.
     """

@@ -44,9 +44,11 @@ from ..geo import kernels
 from ..geo.kernels import _ranges
 from ..sources.polygons import (
     LayerCover,
+    distributed_cells,
     layer_cover,
     load_rings,
     polygon_cells,
+    polygon_rings,
 )
 
 DEFAULT_RES = 7
@@ -164,15 +166,21 @@ def spatial_join(
             joined.where(~F.col("is_full")).where(
                 refine(F.col("polygon_id"), F.col("lon"), F.col("lat")))
         )
-    elif edges == "planar":
-        joined = joined.where(
-            F.when(F.col("is_full"), True)
-            .otherwise(_ray_cast(res, F.col("lon"), F.col("lat")))
-        )
-    else:
+        return joined.drop("is_full", "_edges_k", "_edges")
+    if edges != "planar":
         raise ValueError("edges must be 'planar' or 'geodesic', got %r"
                          % edges)
-    return joined.drop("is_full", "_edges_k", "_edges")
+    return _planar_refine(joined, res)
+
+
+def _planar_refine(joined: DataFrame, res: int) -> DataFrame:
+    """The planar join's exact step over ``points ⋈ cover`` rows: a full
+    cell passes by containment, a boundary cell ray-casts its edge list
+    (``_ray_cast``); the cover's refine columns then go."""
+    return joined.where(
+        F.when(F.col("is_full"), True)
+        .otherwise(_ray_cast(res, F.col("lon"), F.col("lat")))
+    ).drop("is_full", "_edges_k", "_edges")
 
 
 def _ray_cast(res: int, lon: Column, lat: Column) -> Column:
@@ -212,14 +220,29 @@ def _ray_cast(res: int, lon: Column, lat: Column) -> Column:
                        F.lit(False), step)
 
 
+def _geodesic_keep(keys: np.ndarray, lon: np.ndarray, lat: np.ndarray,
+                   rings_of: Callable) -> np.ndarray:
+    """Great-circle containment of each row's point, the rows grouped by
+    polygon ``keys`` so each group is one ``points_in_polygon_geodesic``
+    call; ``rings_of(key)`` gives the group's rings (None keeps none)."""
+    from ..geo.geodesic import points_in_polygon_geodesic
+
+    out = np.zeros(len(keys), dtype=bool)
+    for key in np.unique(keys):
+        rings = rings_of(key)
+        if rings is not None:
+            mask = keys == key
+            out[mask] = points_in_polygon_geodesic(lon[mask], lat[mask],
+                                                   rings)
+    return out
+
+
 def _geodesic_refine(rings_by_id: Dict[int, dict]):
     """Exact great-circle containment refine as a pandas UDF over
     (polygon_id, lon, lat), batching rows per polygon within each Arrow
     batch. ``rings_by_id`` rides along in the closure — serialized once
     per executor by Spark, the broadcast pattern for dimension data."""
     from pyspark.sql.types import BooleanType
-
-    from ..geo.geodesic import points_in_polygon_geodesic
 
     plain = {
         int(pid): [np.asarray(r, dtype=np.float64)[:, :2]
@@ -230,18 +253,10 @@ def _geodesic_refine(rings_by_id: Dict[int, dict]):
     @F.pandas_udf(BooleanType())
     def pip_refine(polygon_id: pd.Series, lon: pd.Series,
                    lat: pd.Series) -> pd.Series:
-        out = np.zeros(len(polygon_id), dtype=bool)
-        pids = polygon_id.to_numpy()
-        lons = lon.to_numpy(dtype=np.float64)
-        lats = lat.to_numpy(dtype=np.float64)
-        for pid in np.unique(pids):
-            rings = plain.get(int(pid))
-            if rings is None:
-                continue
-            mask = pids == pid
-            out[mask] = points_in_polygon_geodesic(lons[mask], lats[mask],
-                                                   rings)
-        return pd.Series(out)
+        return pd.Series(_geodesic_keep(
+            polygon_id.to_numpy(), lon.to_numpy(dtype=np.float64),
+            lat.to_numpy(dtype=np.float64),
+            lambda pid: plain.get(int(pid))))
 
     return pip_refine
 
@@ -254,107 +269,52 @@ def spatial_join_big_layer(
 ) -> DataFrame:
     """Point-in-polygon join for polygon layers TOO BIG to broadcast or
     collect (millions of polygons): fully distributed, no driver-side
-    layer materialization anywhere.
+    layer materialization anywhere. Same rows as ``spatial_join``.
 
-    Plan:
-      1. cover = polygons.mapInPandas(polygon_cover per row)  — the cell
-         explode runs executor-side over Arrow batches of WKT rows;
-      2. points ⋈ cover on cell_id — a plain shuffle equi join (AQE
-         picks broadcast automatically if the cover is in fact small);
-      3. full-cell rows pass; boundary rows join BACK to the polygon WKT
-         (equi join on polygon_id) and run the ray-cast kernel with the
-         ring coordinates parsed per Arrow batch — grouped by polygon
-         within each batch so the kernel still sees large point blocks.
-
-    Same results as ``spatial_join`` (tested); trades the broadcast for
-    two shuffles, which is the correct shape when the layer itself is
-    fact-sized.
+    Plan: the cover is ``distributed_cells`` (one ``MapInArrow`` over the
+    polygon rows, the same rows and edge lists ``polygon_cells`` builds),
+    joined to the points on ``cell_id``: a plain equi join, which AQE
+    still broadcasts when the cover turns out small. Planar edges then
+    take ``spatial_join``'s own refine: one scan of the points, no union
+    and no Python above the join. Geodesic boundary rows join back to
+    their polygon's WKT and run the great-circle kernel per Arrow batch,
+    grouped by polygon; full-cell rows are unioned back.
     """
-    from ..geo import wkt as wktmod
-    from ..geo.cells import polygon_cover
-
-    if edges == "geodesic":
-        from ..geo.geodesic import points_in_polygon_geodesic as _pip
-    elif edges == "planar":
-        _pip = kernels.points_in_polygon
-    else:
+    if edges not in ("planar", "geodesic"):
         raise ValueError("edges must be 'planar' or 'geodesic', got %r"
                          % edges)
-
-    def cover_kernel(batches):
-        for pdf in batches:
-            pids, names, cids, fulls = [], [], [], []
-            for pid, name, wkt_str in zip(
-                pdf["polygon_id"], pdf["name"], pdf["wkt"]
-            ):
-                geom = wktmod.loads(wkt_str)
-                rings = (
-                    geom["coordinates"] if geom["type"] == "Polygon"
-                    else [r for p in geom["coordinates"] for r in p]
-                )
-                for cid, full in polygon_cover(rings, res, edges=edges):
-                    pids.append(pid)
-                    names.append(name)
-                    cids.append(cid)
-                    fulls.append(full)
-            yield pd.DataFrame({
-                "polygon_id": pd.Series(pids, dtype="int64"),
-                "name": pd.Series(names, dtype="object"),
-                "cell_id": pd.Series(cids, dtype="int64"),
-                "is_full": pd.Series(fulls, dtype="bool"),
-            })
-
-    cover = polygons.select("polygon_id", "name", "wkt").mapInPandas(
-        cover_kernel,
-        "polygon_id long, name string, cell_id long, is_full boolean",
-    )
-
-    pts = _points_with_join_cell(points, res)
-    joined = pts.join(cover, "cell_id")
-    full_rows = joined.where(F.col("is_full")).drop("is_full")
+    joined = _points_with_join_cell(points, res).join(
+        distributed_cells(polygons, res, edges), "cell_id")
+    if edges == "planar":
+        return _planar_refine(joined, res)
 
     # No explicit repartition after this join: its output is already
     # hash-partitioned on polygon_id (which keeps refine batches
-    # polygon-dominated for the per-wkt group kernel), and adding one
-    # would UNDO an AQE skew-join split — a hot continental polygon
-    # would collapse back into a single task. The kernel only needs
-    # per-batch polygon grouping, not global co-location.
-    boundary = (
-        joined.where(~F.col("is_full"))
-        .drop("is_full", "name")
-        .join(polygons.select("polygon_id", "wkt"), "polygon_id")
-    )
+    # polygon-dominated), and adding one would UNDO an AQE skew-join
+    # split — a hot continental polygon would collapse back into a
+    # single task.
+    boundary = joined.where(~F.col("is_full")).drop(
+        "is_full", "_edges_k", "_edges",
+    ).join(polygons.select("polygon_id", "wkt"), "polygon_id")
 
-    def refine_kernel(batches):
-        # Arrow, not pandas: the point columns pass through exact
-        import pyarrow.compute as pc
-
+    def kernel(batches):
+        # Arrow, not pandas: the point columns pass through exact. Rows
+        # group by their polygon's WKT, which the cover already read.
         for batch in batches:
             wkts = batch.column("wkt").dictionary_encode()
-            codes = pc.fill_null(wkts.indices, -1).to_numpy()
-            # rows grouped by polygon WKT; a NULL WKT (-1) keeps no row
-            order = np.argsort(codes, kind="stable")
-            starts = np.searchsorted(codes[order],
-                                     np.arange(len(wkts.dictionary) + 1))
-            lon = batch.column("lon").to_numpy(zero_copy_only=False)
-            lat = batch.column("lat").to_numpy(zero_copy_only=False)
-            keep = np.zeros(batch.num_rows, dtype=bool)
-            for k, wkt_str in enumerate(wkts.dictionary.to_pylist()):
-                rows = order[starts[k]:starts[k + 1]]
-                geom = wktmod.loads(wkt_str)
-                rings = (
-                    geom["coordinates"] if geom["type"] == "Polygon"
-                    else [r for p in geom["coordinates"] for r in p]
-                )
-                keep[rows] = _pip(lon[rows], lat[rows], rings)
+            codes = wkts.indices.to_numpy()
+            pids = batch.column("polygon_id").to_numpy()
+            keep = _geodesic_keep(
+                codes, batch.column("lon").to_numpy(zero_copy_only=False),
+                batch.column("lat").to_numpy(zero_copy_only=False),
+                lambda k: polygon_rings(pids[codes == k][0],
+                                        wkts.dictionary[k].as_py()))
             yield batch.drop_columns(["wkt"]).filter(pa.array(keep))
 
-    out_fields = [f for f in boundary.schema.fields if f.name != "wkt"]
-    refined = boundary.mapInArrow(refine_kernel, StructType(out_fields))
-    refined = refined.join(
-        polygons.select("polygon_id", "name"), "polygon_id"
-    )
-    return full_rows.unionByName(refined, allowMissingColumns=False)
+    refined = boundary.mapInArrow(kernel, StructType(
+        [f for f in boundary.schema.fields if f.name != "wkt"]))
+    return joined.where(F.col("is_full")).drop(
+        "is_full", "_edges_k", "_edges").unionByName(refined)
 
 
 def _probe_parts(geom: dict):

@@ -9,9 +9,10 @@ polygons the reference's own e2e tests join points against
 relation — the broadcast side of the spatial join: one row per
 (polygon, covering cell), tagged ``is_full`` for cells provably interior
 (those skip the exact PIP refine); the other planar cells carry the edges
-the refine ray-casts against. ``layer_cover`` is the same cover as sorted
-numpy arrays, for the polygon-vs-layer joins that look cells up per Arrow
-batch instead of joining.
+the refine ray-casts against. ``distributed_cells`` builds the same rows
+executor-side for a layer too big to collect. ``layer_cover`` is the same
+cover as sorted numpy arrays, for the polygon-vs-layer joins that look
+cells up per Arrow batch instead of joining.
 """
 
 from __future__ import annotations
@@ -21,7 +22,6 @@ from typing import Dict, List, NamedTuple, Tuple
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (used by callers)
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
@@ -96,26 +96,28 @@ def grid_layer(
     return local_df(spark, rows, ["polygon_id", "name", "wkt"])
 
 
+def polygon_rings(polygon_id, wkt: str) -> list:
+    """The rings of one polygon layer row's WKT, a MultiPolygon's parts
+    flattened together (even-odd safe). Any other type raises."""
+    geom = wktmod.loads(wkt)
+    if geom["type"] == "Polygon":
+        return geom["coordinates"]
+    if geom["type"] == "MultiPolygon":
+        return [r for poly in geom["coordinates"] for r in poly]
+    raise ValueError("polygon layer row %s has non-polygon type %s"
+                     % (polygon_id, geom["type"]))
+
+
 def load_rings(polygons: DataFrame) -> Dict[int, dict]:
     """Collect a SMALL polygon layer to the driver as
     {polygon_id: {"name", "rings"}}. Polygon layers are the dimension side
     of the join (thousands of rows, not 10^12) — collecting them is the
     broadcast-hash-join pattern, not a scalability leak."""
-    out = {}
-    for row in polygons.select("polygon_id", "name", "wkt").collect():
-        geom = wktmod.loads(row["wkt"])
-        if geom["type"] == "Polygon":
-            rings = geom["coordinates"]
-        elif geom["type"] == "MultiPolygon":
-            # flatten: treat every part's rings together (even-odd safe)
-            rings = [r for poly in geom["coordinates"] for r in poly]
-        else:
-            raise ValueError(
-                "polygon layer row %s has non-polygon type %s"
-                % (row["polygon_id"], geom["type"])
-            )
-        out[int(row["polygon_id"])] = {"name": row["name"], "rings": rings}
-    return out
+    return {
+        int(pid): {"name": name, "rings": polygon_rings(pid, wkt)}
+        for pid, name, wkt in polygons.select(
+            "polygon_id", "name", "wkt").collect()
+    }
 
 
 _EDGE = StructType([
@@ -125,7 +127,7 @@ _EDGE = StructType([
 _CELLS_SCHEMA = StructType(
     [
         StructField("polygon_id", LongType(), False),
-        StructField("name", StringType(), False),
+        StructField("name", StringType(), True),
         StructField("cell_id", LongType(), False),
         StructField("is_full", BooleanType(), False),
         StructField("_edges_k", IntegerType(), True),
@@ -144,13 +146,12 @@ class LayerCover(NamedTuple):
     is_full: np.ndarray      # bool: the cell is provably interior
 
 
-def _cover_rows(rings_by_id: Dict[int, dict], res: int, edges: str):
+def _cover_rows(rings_list: List[list], res: int, edges: str):
     """(row polygon index, cell ids, is_full) over every polygon's
     ``cells.polygon_cover``, in layer order."""
     poly, cids, fulls = [], [], []
-    for i, info in enumerate(rings_by_id.values()):
-        for cid, full in cellmod.polygon_cover(info["rings"], res,
-                                               edges=edges):
+    for i, rings in enumerate(rings_list):
+        for cid, full in cellmod.polygon_cover(rings, res, edges=edges):
             poly.append(i)
             cids.append(cid)
             fulls.append(full)
@@ -163,32 +164,33 @@ def layer_cover(rings_by_id: Dict[int, dict], res: int,
                 edges: str = "planar") -> LayerCover:
     """The layer's cover at ``res`` as sorted arrays (no edge lists, no
     DataFrame): the driver side of the polygon-vs-layer joins."""
-    poly, cids, full = _cover_rows(rings_by_id, res, edges)
+    poly, cids, full = _cover_rows(
+        [info["rings"] for info in rings_by_id.values()], res, edges)
     pids = np.fromiter(rings_by_id, dtype=np.int64,
                        count=len(rings_by_id))
     order = np.argsort(cids, kind="stable")
     return LayerCover(cids[order], pids[poly[order]], full[order])
 
 
-def polygon_cells(
-    spark: SparkSession, rings_by_id: Dict[int, dict], res: int,
-    edges: str = "planar",
-) -> DataFrame:
-    """Explode polygons to their covering cells at ``res`` -> broadcastable
-    (polygon_id, name, cell_id, is_full, _edges_k, _edges) relation.
-    ``edges`` selects the planar (reference) or geodesic edge
-    interpretation.
+def cells_table(polys: List[Tuple[int, str, list]], res: int,
+                edges: str = "planar") -> pa.Table:
+    """The cell cover of ``(polygon_id, name, rings)`` rows at ``res`` as
+    an Arrow table of ``_CELLS_SCHEMA``: one row per (polygon row,
+    covering cell). ``edges`` selects the planar (reference) or geodesic
+    edge interpretation.
 
     A planar boundary cell (``is_full`` false) also carries its local
     geometry for the JVM refine in ``spatial_join``: ``_edges`` holds
     ``4**_edges_k`` child edge lists (``geo.cells.cell_edge_lists``) —
     one list unless the cell is dense enough to split. Full cells and
-    geodesic covers carry NULL."""
-    poly, cids, full = _cover_rows(rings_by_id, res, edges)
-    infos = list(rings_by_id.items())
+    geodesic covers carry NULL. A polygon's lists do not depend on the
+    other rows, so any split of a layer into batches builds the same
+    rows."""
+    rings_list = [rings for _pid, _name, rings in polys]
+    poly, cids, full = _cover_rows(rings_list, res, edges)
     has = ~full if edges == "planar" else np.zeros(len(cids), dtype=bool)
     k, sizes, x0, y0, x1, y1 = cellmod.cell_edge_lists(
-        [info["rings"] for _pid, info in infos], poly[has], cids[has], res,
+        rings_list, poly[has], cids[has], res,
     )
     k_row = np.zeros(len(cids), dtype=np.int32)
     k_row[has] = k
@@ -200,9 +202,9 @@ def polygon_cells(
             names=["x0", "y0", "x1", "y1"],
         ),
     )
-    table = pa.table({
-        "polygon_id": pa.array([infos[i][0] for i in poly], pa.int64()),
-        "name": pa.array([infos[i][1]["name"] for i in poly], pa.string()),
+    return pa.table({
+        "polygon_id": pa.array([polys[i][0] for i in poly], pa.int64()),
+        "name": pa.array([polys[i][1] for i in poly], pa.string()),
         "cell_id": pa.array(cids, pa.int64()),
         "is_full": pa.array(full, pa.bool_()),
         "_edges_k": pa.array(k_row, mask=~has),
@@ -211,4 +213,35 @@ def polygon_cells(
             mask=pa.array(~has),
         ),
     })
-    return spark.createDataFrame(table, schema=_CELLS_SCHEMA)
+
+
+def polygon_cells(
+    spark: SparkSession, rings_by_id: Dict[int, dict], res: int,
+    edges: str = "planar",
+) -> DataFrame:
+    """Explode a collected layer to its covering cells at ``res`` ->
+    broadcastable (polygon_id, name, cell_id, is_full, _edges_k, _edges)
+    relation (``cells_table``)."""
+    return spark.createDataFrame(cells_table(
+        [(pid, info["name"], info["rings"])
+         for pid, info in rings_by_id.items()], res, edges,
+    ), schema=_CELLS_SCHEMA)
+
+
+def distributed_cells(polygons: DataFrame, res: int,
+                      edges: str = "planar") -> DataFrame:
+    """``polygon_cells`` of a layer too big to collect: one
+    ``mapInArrow`` over its (polygon_id, name, wkt) rows builds
+    ``cells_table`` per Arrow batch, with the same rows."""
+
+    def kernel(batches):
+        for batch in batches:
+            pids, names, wkts = (batch.column(c).to_pylist()
+                                 for c in ("polygon_id", "name", "wkt"))
+            yield from cells_table([
+                (pid, name, polygon_rings(pid, wkt))
+                for pid, name, wkt in zip(pids, names, wkts)
+            ], res, edges).to_batches()
+
+    return polygons.select("polygon_id", "name", "wkt").mapInArrow(
+        kernel, _CELLS_SCHEMA)

@@ -72,6 +72,16 @@ def _pack(spark, tmp_path):
                           tokens_col="nt")
 
 
+def _minhash(spark, tmp_path):
+    from pure_python_geospatial_export_spark.operators.dedup import (
+        minhash_signature,
+    )
+
+    df = _frame(spark, StructField("text", StringType(), True),
+                ["a b c d"] * 3)
+    return minhash_signature(df, "id", "text", 8, 2)
+
+
 def _big_layer(spark, tmp_path):
     from pure_python_geospatial_export_spark.operators.spatial_join import (
         spatial_join_big_layer,
@@ -108,6 +118,7 @@ def _geoparquet(spark, tmp_path):
 
 STAGES = {"attach_probe_bboxes": _bboxes, "validate_geometries": _validate,
           "simplify_wkt": _simplify, "pack_sequences": _pack,
+          "minhash_signature": _minhash,
           "spatial_join_big_layer": _big_layer, "read_polygon": _read_polygon,
           "geoparquet_roundtrip": _geoparquet}
 

@@ -17,8 +17,10 @@ from pure_python_geospatial_export_spark.geo import cells, kernels
 from pure_python_geospatial_export_spark.operators.spatial_join import (
     points_with_cell,
     spatial_join,
+    spatial_join_big_layer,
 )
 from pure_python_geospatial_export_spark.sources.polygons import (
+    distributed_cells,
     load_rings,
     polygon_cells,
 )
@@ -137,10 +139,13 @@ def _check_layer(spark, polys, res, n_random=3000, strategy="broadcast"):
         keep = grp["is_full"].to_numpy() | inside
         expected |= {(int(i), int(pid)) for i in ids[keep]}
 
-    got_rows = spatial_join(pts, layer, res=res, strategy=strategy,
-                            hot_cell_threshold=5,
-                            cover=cover if strategy == "broadcast"
-                            else None).select("pt_id", "polygon_id").collect()
+    if strategy == "big_layer":
+        out = spatial_join_big_layer(pts, layer, res=res)
+    else:
+        out = spatial_join(pts, layer, res=res, strategy=strategy,
+                           hot_cell_threshold=5,
+                           cover=cover if strategy == "broadcast" else None)
+    got_rows = out.select("pt_id", "polygon_id").collect()
     got = {(int(r[0]), int(r[1])) for r in got_rows}
     assert len(got) == len(got_rows)
     missing = sorted(expected - got)[:10]
@@ -183,13 +188,13 @@ def test_dense_star_with_split_cells_matches_kernel(spark):
     _check_layer(spark, [(7, "star", [ring])], 4, n_random=6000)
 
 
-def test_holes_seams_caps_and_open_rings_match_kernel(spark):
+def _holes_polys():
     from pure_python_geospatial_export_spark.geo import wkt as wktmod
 
     seam = wktmod.loads(em.ANTIMERIDIAN_WKT)["coordinates"]
     caps = [(pid, name, wktmod.loads(w)["coordinates"])
             for pid, name, w in em.POLAR_CAP_WKTS]
-    polys = [
+    return [
         (10, "seam_band", seam),
         (11, "holed", [[[-20, -20], [20, -20], [20, 20], [-20, 20],
                         [-20, -20]],
@@ -208,6 +213,10 @@ def test_holes_seams_caps_and_open_rings_match_kernel(spark):
         (13, "corner", [[[-180, -90], [-170, -90], [-180, -80],
                          [-180, -90]]]),
     ] + [(pid + 20, name, rings) for pid, name, rings in caps]
+
+
+def test_holes_seams_caps_and_open_rings_match_kernel(spark):
+    polys = _holes_polys()
     cand, x, y = _check_layer(spark, polys, 6)
 
     # NaN: Spark orders NaN above every double while numpy compares it
@@ -218,6 +227,41 @@ def test_holes_seams_caps_and_open_rings_match_kernel(spark):
     nan = cand[np.isnan(x[ids]) | np.isnan(y[ids])]
     assert (nan["polygon_id"] == 13).any()
     assert not nan[nan["polygon_id"] == 13]["is_full"].any()
+
+
+@pytest.mark.parametrize("layer,res,n_random", [
+    ("bench", 7, 3000), ("star", 4, 6000), ("holes", 6, 3000),
+])
+def test_big_layer_matches_kernel(spark, layer, res, n_random):
+    polys = {"bench": _bench_polys, "holes": _holes_polys,
+             "star": lambda: [(7, "star", [star_ring(2000)])]}[layer]()
+    _check_layer(spark, polys, res, n_random, strategy="big_layer")
+
+
+def _cells_arrow(df):
+    return df.toArrow().sort_by([("polygon_id", "ascending"),
+                                 ("cell_id", "ascending")])
+
+
+@pytest.mark.parametrize("partitions", [1, 5])
+def test_distributed_cells_equal_polygon_cells(spark, partitions):
+    """The executor-built cover, built per Arrow batch of any split of
+    the layer, is ``polygon_cells`` row for row, edges bitwise."""
+    polys = [(7, "star", [star_ring(2000)])] + _holes_polys()
+    layer = _layer(spark, polys)
+    want = _cells_arrow(polygon_cells(spark, load_rings(layer), 6))
+    got = _cells_arrow(distributed_cells(layer.repartition(partitions), 6))
+    assert got.num_rows == want.num_rows > 0
+    for name in ("polygon_id", "name", "cell_id", "is_full", "_edges_k"):
+        assert got[name].equals(want[name]), name
+    g, w = (t["_edges"].combine_chunks() for t in (got, want))
+    assert g.is_null().equals(w.is_null())
+    assert g.offsets.equals(w.offsets)
+    assert g.flatten().offsets.equals(w.flatten().offsets)
+    for f in ("x0", "y0", "x1", "y1"):
+        gv, wv = (a.flatten().flatten().field(f).to_numpy()
+                  for a in (g, w))
+        assert np.array_equal(gv.view(np.int64), wv.view(np.int64)), f
 
 
 def test_dense_tail_lists_stay_bounded(spark):

@@ -248,3 +248,21 @@ def test_cross_minhash_shuffle_budget(spark):
         assert _shuffles(plan) == 7, plan
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+def test_big_layer_join_one_points_scan(spark):
+    """The planar big-layer join: the executor-built cover (its one
+    MapInArrow, below the join) meets one scan of the points, and the
+    broadcast join's own JVM ray cast refines them — no union, no
+    second scan, no pandas or Arrow UDF stage."""
+    from pure_python_geospatial_export_spark.operators.spatial_join import (
+        spatial_join_big_layer,
+    )
+
+    out = spatial_join_big_layer(em._docs_points(spark, SF),
+                                 em._layer_df(spark), res=7)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert _one_scan(plan) and _no_union(plan) and _no_arrow(plan), plan
+    assert _no_map_in_pandas(plan) and "BatchEvalPython" not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.index("MapInArrow") > plan.index("Join "), plan

@@ -186,6 +186,41 @@ def test_spatial_join_drops_nan_points(spark, edges, wkt, res, strategy):
         assert got == [5]
 
 
+def _join(strategy, pts, layer):
+    if strategy == "big_layer":
+        return spatial_join_big_layer(pts, layer, res=7)
+    return spatial_join(pts, layer, res=7, strategy=strategy)
+
+
+@pytest.mark.parametrize("wkt,kind", [("LINESTRING (0 0, 1 1)", "LineString"),
+                                      ("POINT (0.5 0.5)", "Point")])
+@pytest.mark.parametrize("strategy", ["broadcast", "big_layer"])
+def test_spatial_join_rejects_non_polygon_layer_rows(spark, wkt, kind,
+                                                     strategy):
+    """Both joins take a layer row's rings through one helper, and raise
+    its ValueError (on the driver, or through the executor's trace)."""
+    pts = spark.createDataFrame([(1, 0.5, 0.5)],
+                                "id long, lon double, lat double")
+    layer = spark.createDataFrame([(7, "bad", wkt)],
+                                  "polygon_id long, name string, wkt string")
+    msg = "polygon layer row 7 has non-polygon type %s" % kind
+    with pytest.raises(Exception) as err:
+        _join(strategy, pts, layer).collect()
+    assert isinstance(err.value, ValueError) and str(err.value) == msg \
+        or "ValueError: " + msg in str(err.value), str(err.value)
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "big_layer"])
+def test_spatial_join_keeps_null_polygon_name(spark, strategy):
+    pts = spark.createDataFrame([(1, 0.5, 0.5)],
+                                "id long, lon double, lat double")
+    layer = spark.createDataFrame(
+        [(7, None, "POLYGON ((0 0, 2 0, 0 2, 0 0))")],
+        "polygon_id long, name string, wkt string")
+    got = _join(strategy, pts, layer).select("id", "polygon_id", "name")
+    assert [tuple(r) for r in got.collect()] == [(1, 7, None)]
+
+
 def test_spatial_join_big_layer_equals_broadcast(spark, pages):
     from pure_python_geospatial_export_spark.operators.spatial_join import (
         spatial_join_big_layer,
